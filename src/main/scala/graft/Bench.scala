@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.{QueryRegistry, QuerySpec}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The driver parses a ~2000-char stdout TAIL: the unpartitioned-window
-    // WARN flood (dozens of lines from globalPrefixSums' bucket-count-bounded
-    // offset windows — by design, not data-sized) can push the final JSON
-    // line out of it. Silence that one logger; everything else stays at WARN.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-    // Same hygiene for the localCheckpoint-release lifecycle: releaseAll
-    // below unpersists each query's eagerly-materialized localCheckpoint
-    // results AFTER their only consumer finished (the count() above —
-    // harness contract), so Spark's "locally checkpointed ... cannot be
-    // recomputed after unpersisting" warning is pure noise here, and at
-    // suite scale it floods the tail by the hundreds. It cannot hide a
-    // real bug: a released checkpoint that WERE re-evaluated fails loudly
-    // (lineage is truncated), it does not go quietly wrong. The logger is
-    // the concrete RDD class; localCheckpoint binds to MapPartitionsRDD.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession.start()
     // JIT/codegen warmup so the first timed query doesn't absorb one-time
     // class-loading cost; runs a representative scan+agg+join, untimed.
     try {
@@ -42,10 +19,6 @@ object Bench {
     val iters = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt).getOrElse(3))
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
-    // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q10,q33 times just those
-    // queries (prefix match); unset = the full suite, the driver's mode
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     // GC attribution: total collector time across all MXBeans, sampled
     // around each timed region, so the artifact can say how much of a slow
     // row was collector pause rather than plan work (diagnosis only — the
@@ -56,9 +29,11 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
     val gcByQuery = scala.collection.mutable.Map.empty[String, Long]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .map { case (name, fn) =>
+    // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q10,q33 times just those
+    // rows (see QueryRegistry.select); unset = the full suite
+    val rows = QueryRegistry.all
+      .select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
+    val results = rows.map { case QuerySpec(name, fn, _) =>
       val times = (1 to iters).map { _ =>
         val g0 = gcMillis()
         val t0 = System.nanoTime()

@@ -1,7411 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.functions.money
-import graft.ops.{Analytics, Documents, Graph, Merge, Warehouse}
-import graft.quality.Quality
-import graft.sim.Similarity
-import graft.stream.Events
-import graft.tables.Tables
-import graft.text.{Dedup, TextFeatures, TextStats}
+import graft.ops.Warehouse
+import graft.queries.{Common, QueryRegistry}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql` (column names and
-  * result types aligned on both sides; see SURVEY §7 "hard parts").
-  */
+/** Entry points: the flagship `entry`, plus `queries` and `oracleSql`,
+  * name-keyed views of [[graft.queries.QueryRegistry]], where each row is
+  * written once beside its DuckDB oracle. */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def fact(s: SparkSession, d: String): DataFrame =
-    Warehouse.factSales(
-      t(s, d, "lineitem"), t(s, d, "orders"), t(s, d, "customer"),
-      t(s, d, "part"), t(s, d, "supplier"), t(s, d, "nation"), t(s, d, "region"))
-
-  // revenue reports touch only lineitem/orders/customer — skip the other
-  // four star joins entirely (join elimination Catalyst can't do for us)
-  private def factSlim(s: SparkSession, d: String): DataFrame =
-    Warehouse.factSalesSlim(
-      t(s, d, "lineitem"), t(s, d, "orders"), t(s, d, "customer"))
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Warehouse.revenueBySegmentMonth(fact(spark, "/root/testdata/sf0.001"))
+    Warehouse.revenueBySegmentMonth(Common.fact(spark, "/root/testdata/sf0.001"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference surface: aggregates (SURVEY §2.4) ---
-    "q01_orders_per_customer" -> ((s, d) =>
-      t(s, d, "orders").groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))),
-    "q02_parts_per_type" -> ((s, d) =>
-      t(s, d, "part").groupBy("p_type").agg(count(lit(1)).as("n_parts"))),
-    "q03_null_profile_customer" -> ((s, d) =>
-      Quality.nullProfile(t(s, d, "customer"))),
-    "q04_segment_counts" -> ((s, d) =>
-      t(s, d, "customer").groupBy("c_mktsegment").agg(count(lit(1)).as("n_customers"))
-        .orderBy(desc("n_customers"), asc("c_mktsegment"))),
-    // --- quality suite (SURVEY §2.11) ---
-    "q05_fk_orphans" -> { (s, d) =>
-      val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
-      val c = t(s, d, "customer"); val p = t(s, d, "part")
-      val a = Quality.checkForeignKey(li, o, "l_orderkey", "o_orderkey")
-        .agg(count(lit(1)).as("lineitem_order_orphans"))
-      val b = Quality.checkForeignKey(li, p, "l_partkey", "p_partkey")
-        .agg(count(lit(1)).as("lineitem_part_orphans"))
-      val cc = Quality.checkForeignKey(o, c, "o_custkey", "c_custkey")
-        .agg(count(lit(1)).as("order_customer_orphans"))
-      a.crossJoin(b).crossJoin(cc)
-    },
-    "q06_key_uniqueness" -> { (s, d) =>
-      def u(name: String, key: String) =
-        t(s, d, name).agg(count(lit(1)).as(s"${name}_rows"),
-          countDistinct(col(key)).as(s"${name}_distinct"))
-      u("customer", "c_custkey").crossJoin(u("orders", "o_orderkey"))
-        .crossJoin(u("part", "p_partkey"))
-    },
-    // --- filters / predicates (SURVEY §2.2) ---
-    "q07_theta_filter" -> ((s, d) =>
-      Quality.checkPredicate(t(s, d, "lineitem"), col("l_discount") <= col("l_tax"))
-        .select("l_orderkey", "l_linenumber", "l_discount", "l_tax")),
-    "q08_order_consistency" -> { (s, d) =>
-      val gross = round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-        * (lit(1.0) + col("l_tax"))), 2).as("gross")
-      val li = t(s, d, "lineitem").groupBy("l_orderkey").agg(gross)
-      t(s, d, "orders").join(li, col("o_orderkey") === col("l_orderkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(when(abs(col("o_totalprice") - col("gross")) > 0.01, 1L)
-            .otherwise(0L)).as("n_mismatch"))
-    },
-    // --- document ops (SURVEY §2.4 A3 + §2.9 explode) ---
-    // nest to array<struct>, then consume the document with array HOFs —
-    // scalar output so the driver's compare never sorts on a raw array column
-    "q09_doc_nest" -> { (s, d) =>
-      val nested = Documents.nest(t(s, d, "orders"), t(s, d, "lineitem"))
-      nested.select(
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), col("o_orderdate"),
-        size(col("items")).as("n_items"),
-        aggregate(col("items"), lit(0.0),
-          (acc, x) => acc + x.getField("l_quantity")).as("total_qty"),
-        array_max(transform(col("items"),
-          x => x.getField("l_extendedprice"))).as("max_item_price"))
-    },
-    "q10_doc_roundtrip" -> ((s, d) =>
-      Documents.unnest(Documents.nest(t(s, d, "orders"), t(s, d, "lineitem")))),
-    // --- warehouse layer (SURVEY §2.3 J4, §2.4 A9, §2.6 O3) ---
-    "q11_fact_sales" -> ((s, d) => fact(s, d)),
-    "q12_revenue_by_segment_month" -> ((s, d) =>
-      Warehouse.revenueBySegmentMonth(factSlim(s, d))),
-    "q13_top_customers" -> ((s, d) =>
-      Warehouse.topCustomersByRevenue(factSlim(s, d), 10)),
-    "q14_revenue_rollup" -> ((s, d) => Warehouse.revenueRollup(factSlim(s, d))),
-    // --- windows / set ops / scalars (SURVEY §2.5, §2.7, §2.8) ---
-    "q15_order_window_seq" -> ((s, d) =>
-      Analytics.customerOrderSequence(t(s, d, "orders"))),
-    "q16_customers_without_orders" -> ((s, d) =>
-      Analytics.customersWithoutOrders(t(s, d, "customer"), t(s, d, "orders"))),
-    "q17_scalar_functions" -> ((s, d) =>
-      Analytics.orderScalarProjection(t(s, d, "orders"))),
-    // --- events / JSON props (SURVEY §2.8 F10) ---
-    "q18_events_by_type" -> ((s, d) => Events.byType(Tables.events(s, d))),
-    // --- text analysis [ext] ---
-    "q19_exact_dedup_stats" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      val groups = Dedup.exactDupGroups(docs)
-      groups.agg(
-        sum("n_copies").as("n_docs"),
-        count(lit(1)).as("n_distinct"),
-        sum(when(col("n_copies") > 1, col("n_copies") - 1).otherwise(0L)).as("n_redundant"))
-    },
-    "q20_token_stats" -> ((s, d) => TextStats.tokenStats(t(s, d, "documents"))),
-    "q21_quality_score" -> ((s, d) => TextStats.qualityScore(t(s, d, "documents"))),
-    "q22_lang_source_dist" -> ((s, d) =>
-      t(s, d, "documents").groupBy("lang", "source").agg(count(lit(1)).as("n_docs"))),
-    "q23_word_jaccard_pairs" -> ((s, d) =>
-      Dedup.blockedJaccardPairs(t(s, d, "documents"), Seq("lang", "n_chars"), 0.3)),
-    // Spark runs the banded LSH scale plan; the oracle spells the SAME
-    // result as brute-force shingle Jaccard (the verify stage is exact, so
-    // the sets match — see Dedup.minhashNearDupsShingle)
-    "q24_minhash_neardups" -> ((s, d) =>
-      Dedup.minhashNearDupsShingle(t(s, d, "documents"), threshold = 0.8)),
-    // portable 60-bit fingerprints: the oracle recomputes every bit in SQL
-    "q25_simhash" -> ((s, d) => Dedup.simhash(t(s, d, "documents"))),
-    "q26_doc_fingerprint" -> ((s, d) => TextStats.fingerprints(t(s, d, "documents"))),
-    "q27_language_id" -> ((s, d) => TextStats.languageId(t(s, d, "documents"))),
-    // --- similarity search [ext] ---
-    "q28_cosine_topk" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 20), 3)
-    },
-    // self-verifying recall gate (q37/q125 pattern): exact brute-force truth
-    // computed in-query, anchors oracle-checkable, recall bound pinned TRUE
-    // (measured 0.87 at sf0.01 with 16 tables x 4 planes; bound 0.5)
-    "q29_ann_lsh_topk" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 20)
-      Similarity.recallGate(
-        Similarity.bruteForceTopK(emb, probes, 3),
-        Similarity.lshTopK(emb, probes, 3, tables = 16, planesPerTable = 4),
-        minRecall = 0.5)
-    },
-    // --- streaming-surface batch twins (SURVEY §2.10) ---
-    "q30_event_windows" -> ((s, d) => Events.tumblingCounts(Tables.events(s, d))),
-    "q31_sessionization" -> ((s, d) => Events.sessionize(Tables.events(s, d))),
-    // --- multimodal plumbing [ext] (stub codec; see graft.multimodal) ---
-    "q32_media_stats" -> ((s, d) =>
-      graft.multimodal.Multimodal.mediaStats(s, t(s, d, "documents"))),
-    // --- graph layer (reference NB 04 made real) ---
-    "q33_copurchase_pairs" -> ((s, d) =>
-      Graph.coPurchasePairs(t(s, d, "lineitem"), minCount = 3)),
-    "q34_customer_degree" -> ((s, d) =>
-      Graph.customerDegree(Graph.purchaseEdges(t(s, d, "lineitem"), t(s, d, "orders")))),
-    // --- CLV + cube (reference's declared analytics goals) ---
-    "q35_customer_ltv" -> ((s, d) => Warehouse.customerLifetimeValue(factSlim(s, d))),
-    "q36_revenue_cube" -> ((s, d) => Warehouse.revenueCube(factSlim(s, d))),
-    // --- approx sketches [ext]: sketch VALUES differ across engines by
-    // design, so the verified output is exact counts + within-tolerance
-    // booleans — the oracle pins the booleans TRUE, so a broken sketch
-    // fails the driver gate ---
-    "q37_order_sketches" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val exact = o.agg(
-        countDistinct(col("o_custkey")).as("exact_customers"),
-        countDistinct(col("o_orderkey")).as("exact_orders"),
-        expr("percentile(o_totalprice, 0.5)").as("exact_p50"),
-        expr("percentile(o_totalprice, 0.99)").as("exact_p99"))
-      Warehouse.orderSketches(o).crossJoin(exact).select(
-        col("exact_customers"), col("exact_orders"),
-        (abs(col("approx_customers") - col("exact_customers"))
-          <= col("exact_customers") * 0.05).as("customers_ok"),
-        (abs(col("approx_orders") - col("exact_orders"))
-          <= col("exact_orders") * 0.05).as("orders_ok"),
-        (abs(col("p50_price") - col("exact_p50")) <= col("exact_p50") * 0.05).as("p50_ok"),
-        (abs(col("p99_price") - col("exact_p99")) <= col("exact_p99") * 0.05).as("p99_ok"))
-    },
-    // --- map-literal lookup predicate (SURVEY P5/F9) + set algebra (§2.7) ---
-    "q38_map_lookup_check" -> ((s, d) =>
-      Analytics.mapLookupMismatch(t(s, d, "part"), "p_type", "p_type",
-        Map("STANDARD" -> "STANDARD", "ECONOMY" -> "ECONOMY", "PROMO" -> "BUDGET"))
-        .select("p_partkey", "p_type", "expected_value")),
-    "q39_customer_set_algebra" -> ((s, d) =>
-      Analytics.customerSetAlgebra(t(s, d, "customer"), t(s, d, "orders"), "BUILDING")),
-    // --- IVF ANN recall gate [ext]: k-means cell assignment is not
-    // SQL-expressible, so the gate computes exact truth in-query and the
-    // oracle pins the anchors + recall boolean (measured 0.82 at sf0.01
-    // with nProbe=8; bound 0.5) ---
-    "q40_ivf_topk" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 20)
-      Similarity.recallGate(
-        Similarity.bruteForceTopK(emb, probes, 3),
-        Similarity.ivfTopK(Similarity.ivfBuild(emb), probes, 3, nProbe = 8),
-        minRecall = 0.5)
-    },
-    // exact within label blocks (oracle-checkable); the LSH-bucketed variant
-    // (Similarity.cosineNearDups) is the same verify stage with probabilistic
-    // candidate generation and is spec-tested for recall instead
-    "q41_embedding_neardups" -> ((s, d) =>
-      Similarity.cosineNearDupsBlocked(t(s, d, "embeddings"), "label", threshold = 0.4)),
-    "q42_event_sliding_windows" -> ((s, d) =>
-      Events.slidingCounts(Tables.events(s, d))),
-    // --- end-to-end corpus dedup [ext]: the shingle-verified pipeline is
-    // deterministic end to end, so the oracle replays it declaratively
-    // (brute-force shingle pairs + recursive-CTE component closure) ---
-    "q43_dedup_corpus" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      val kept = Dedup.dedupCorpusShingle(docs, threshold = 0.8)
-      docs.agg(count(lit(1)).as("n_input")).crossJoin(
-        kept.agg(count(lit(1)).as("n_kept")))
-    },
-    // banded pigeonhole blocking == brute-force all-pairs hamming (exact
-    // verify, no false negatives); the oracle spells the brute force over
-    // the portable fingerprints
-    "q45_simhash_neardups" -> ((s, d) =>
-      Dedup.simhashNearDups(t(s, d, "documents"), maxHamming = 3, bands = 4)
-        .select(col("doc_a"), col("doc_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- tf-idf doc similarity [ext]: the PORTABLE pipeline (md5-prefix
-    // feature hash, floor-rounded IDF, unnormalized double vectors) makes
-    // the whole embedding + cosine top-k bit-reproducible in SQL, so the
-    // oracle rebuilds it end to end — no gate needed.
-    // corpus and probes share the TF-IDF lineage — the operator returns an
-    // eagerly materialized frame (localCheckpoint), so both branches read
-    // the same blocks without a second persist here ---
-    "q44_tfidf_doc_similarity" -> { (s, d) =>
-      val emb = graft.text.TextFeatures.tfidfEmbeddingsPortable(
-        t(s, d, "documents"), numFeatures = 256)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 200), 3)
-    },
-    // --- typed Aggregator top-k (SURVEY §2.9 tier 2) ---
-    "q46_topk_orders_per_status" -> ((s, d) =>
-      t(s, d, "orders").groupBy("o_orderstatus")
-        .agg(graft.functions.TopKAgg.topK(5)(col("o_totalprice"), col("o_orderkey")).as("top"))
-        .select(col("o_orderstatus"), explode(col("top")).as("t"))
-        .select(col("o_orderstatus"), col("t._1").as("o_totalprice"),
-          col("t._2").as("o_orderkey"))),
-    // --- distribution windows + grouping sets (SURVEY §2.5/§2.4) ---
-    "q47_order_distribution" -> ((s, d) =>
-      Analytics.orderDistributionStats(t(s, d, "orders"))),
-    "q48_revenue_grouping_sets" -> ((s, d) =>
-      Analytics.revenueGroupingSets(factSlim(s, d))),
-    // --- as-of join: each purchase paired with the user's latest prior view ---
-    "q49_asof_purchase_view" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id")
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("view_event_id"))
-      graft.ops.AsOf.asofJoin(purchases, views, "user_id", "ts",
-        Seq("view_event_id"))
-        .select(col("user_id"), col("event_id"), col("asof_view_event_id"))
-    },
-    // --- interval join (stream-stream join batch twin, §2.10) ---
-    "q50_views_before_purchase" -> ((s, d) =>
-      Events.viewsBeforePurchase(Tables.events(s, d), windowMinutes = 60)),
-    // --- PIVOT with explicit value list (§2.4) ---
-    "q51_revenue_pivot" -> ((s, d) => Warehouse.revenuePivotByStatus(factSlim(s, d))),
-    // --- window dedup / changelog snapshot (§2.5) ---
-    "q52_latest_event_per_user" -> ((s, d) =>
-      Events.latestEventPerUser(Tables.events(s, d))),
-    // --- argmax/argmin aggregates (§2.4) ---
-    "q53_segment_order_extremes" -> ((s, d) =>
-      Analytics.segmentOrderExtremes(t(s, d, "orders"), t(s, d, "customer"))),
-    // --- JSON extraction, typed + path-based (§2.8 F10) ---
-    "q54_json_props" -> ((s, d) => Events.propsProjection(Tables.events(s, d))),
-    // --- UNPIVOT/melt + per-metric profile (§2.9) ---
-    "q55_lineitem_unpivot" -> ((s, d) =>
-      Analytics.lineitemMetricsProfile(t(s, d, "lineitem"))),
-    // --- calendar scalar surface (§2.8) ---
-    "q56_date_features" -> ((s, d) => Analytics.orderDateFeatures(t(s, d, "orders"))),
-    // --- string scalar surface (§2.8) ---
-    "q57_string_features" -> ((s, d) => Analytics.partStringFeatures(t(s, d, "part"))),
-    // --- predicate-scoped left-anti join (§2.3) ---
-    "q58_parts_not_shipped" -> ((s, d) =>
-      Analytics.partsNotShippedIn(t(s, d, "part"), t(s, d, "lineitem"), 1998, 1)),
-    // --- multimodal frame sampling (decode -> every-2nd-frame keep) ---
-    "q59_frame_sample" -> { (s, d) =>
-      import graft.multimodal.Multimodal
-      val media = Multimodal.syntheticMediaFromDocs(t(s, d, "documents"))
-      Multimodal.sampleFrames(Multimodal.decode(media), everyN = 2)
-        .groupBy(col("media_id").as("doc_id"))
-        .agg(count(lit(1)).as("n_sampled_frames"),
-          max(col("frame_idx")).as("max_frame_idx"))
-    },
-    // --- bucketed range join (|value diff| <= width via equi-join) ---
-    "q60_value_range_pairs" -> { (s, d) =>
-      val ev = Tables.events(s, d).select(col("event_id"), col("value"))
-      val anchors = ev.filter(col("event_id") < 50)
-        .select(col("event_id").as("a_id"), col("value").as("a_value"))
-      graft.ops.AsOf.rangeJoin(anchors, ev, col("a_value"), col("value"), 0.25)
-        .filter(col("a_id") =!= col("event_id"))
-        .groupBy("a_id").agg(count(lit(1)).as("n_close"))
-    },
-    // --- PII scrub (emails/phones -> typed placeholders); the corpus is
-    // synthetic so deterministic PII is appended first, then redacted ---
-    "q61_pii_redaction" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        TextStats.redactPii(concat(col("text"),
-          lit(" contact user"), col("doc_id"),
-          lit("@example.com or +1 555 867 530"), col("doc_id"),
-          lit(" via https://tracker.example.com/u/"), col("doc_id"))).as("clean_text"))),
-    // --- corpus vocabulary: top terms by frequency (explode + agg + top-k) ---
-    "q62_top_terms" -> ((s, d) =>
-      TextStats.termFrequencies(t(s, d, "documents"))
-        .orderBy(desc("n_occurrences"), asc("token")).limit(20)),
-    // --- BPE-ish token counting (LLM-cost estimation companion to q20) ---
-    "q63_bpe_token_count" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        TextStats.bpeTokenCount(col("text")).as("n_bpe_tokens"),
-        size(split(trim(col("text")), "\\s+")).as("n_ws_tokens"))),
-    // --- DISTINCT-aggregate forms + conditional counts (§2.4) ---
-    "q64_distinct_aggs" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag").agg(
-        sum_distinct(col("l_quantity")).as("sum_distinct_qty"),
-        countDistinct(col("l_partkey")).as("n_parts"),
-        sum(when(col("l_discount") > 0.05, 1L).otherwise(0L)).as("n_high_discount"),
-        max(col("l_tax")).as("max_tax"),
-        min(col("l_tax")).as("min_tax"))),
-    // --- salted skew join: identical semantics to the plain equi-join, so
-    // the oracle IS the plain join — salting verified through the gate.
-    // hotKeys scopes the salt to a declared hot set (how it is used in
-    // production): only those keys split/replicate, the long tail joins
-    // unsalted — vs salting everything, which replicates the whole build
-    // side saltFactor×. ---
-    "q65_salted_join" -> { (s, d) =>
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("k"), col("l_quantity"))
-      val o = t(s, d, "orders")
-        .select(col("o_orderkey").as("k"), col("o_orderstatus"))
-      graft.ops.Skew.saltedJoin(li, o, "k", saltFactor = 8,
-        hotKeys = (1L to 512L).map(_ * 32L - 7L))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_lines"), money.r2(sum(col("l_quantity"))).as("sum_qty"))
-    },
-    // --- multiset set operations: EXCEPT ALL / INTERSECT ALL (§2.7) ---
-    "q66_multiset_ops" -> { (s, d) =>
-      val a = t(s, d, "orders").select(col("o_custkey"))
-      val b = t(s, d, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey"))
-      val ex = a.exceptAll(b).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("except_all"))
-      val in = a.intersectAll(b).groupBy("o_custkey")
-        .agg(count(lit(1)).as("n")).withColumn("op", lit("intersect_all"))
-      ex.unionByName(in).select("op", "o_custkey", "n")
-    },
-    // --- nth_value / offset-with-default windows + null scalars (§2.5/§2.8) ---
-    "q67_window_nth_null" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, d, "orders").select(
-        col("o_orderkey"), col("o_custkey"),
-        nth_value(col("o_totalprice"), 2).over(full).as("second_total"),
-        lag(col("o_totalprice"), 2, 0.0).over(w).as("lag2_total"),
-        coalesce(nullif(col("o_orderstatus"), lit("O")), lit("OPEN")).as("status_or_open"))
-    },
-    // --- ordered string aggregation (collect_set -> sort -> join) ---
-    "q68_string_agg" -> ((s, d) =>
-      t(s, d, "orders").join(broadcast(t(s, d, "customer")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(array_join(array_sort(collect_set(col("o_orderpriority"))), ",")
-          .as("priorities"), countDistinct(col("o_orderpriority")).as("n_priorities"))),
-    // --- posexplode: generator with ordinal (§2.9 UDTF surface) ---
-    "q69_posexplode_tokens" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          posexplode(slice(TextStats.tokensN(TextStats.normalize(col("text"))), 1, 3)))
-        .withColumnRenamed("col", "token")),
-    // --- MERGE INTO / upsert (lakehouse write path; plan-level twin of
-    // LakeTable.merge): updates + inserts + conditional deletes in one pass ---
-    "q70_merge_upsert" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val upd = o.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_orderstatus", lit("U"))
-        .withColumn("o_totalprice", money.r2(col("o_totalprice") * 1.1))
-      val ins = o.filter(col("o_orderkey") % 1000 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
-      Merge.upsertPlan(o, upd.unionByName(ins), Seq("o_orderkey"),
-        deleteWhen = Some(col("o_orderkey") % 49 === 0))
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    },
-    // --- SCD Type-2 dimension build (collapse runs -> validity intervals) ---
-    "q71_scd2_events" -> ((s, d) =>
-      Merge.scd2(Tables.events(s, d).select("user_id", "event_type", "ts", "event_id"),
-        "user_id", "event_type", "ts", "event_id")),
-    // --- moment/regression aggregates (§2.4): corr/covar/stddev/var/regr ---
-    "q72_lineitem_stats" -> ((s, d) => Analytics.lineitemStats(t(s, d, "lineitem"))),
-    // --- gap-filled time-series scaffold (sequence+explode+left join) ---
-    "q73_month_scaffold" -> ((s, d) => Analytics.monthlyOrderScaffold(t(s, d, "orders"))),
-    // --- deterministic cross-engine hash sampling (stable held-out splits) ---
-    "q74_hash_sample" -> ((s, d) =>
-      Analytics.hashSample(t(s, d, "documents"), "doc_id", 2)
-        .select("doc_id", "lang", "source", "n_chars")),
-    // --- exact interpolated percentiles per group (§2.4) ---
-    "q75_price_percentiles" -> ((s, d) =>
-      Analytics.orderPricePercentiles(t(s, d, "orders"))),
-    // --- iterative graph algorithm: connected components of the co-purchase
-    // graph (DataFrame min-label propagation + pointer jumping; oracle =
-    // recursive-CTE min-label propagation) ---
-    "q76_copurchase_components" -> ((s, d) =>
-      Graph.connectedComponents(
-        Graph.coPurchasePairs(t(s, d, "lineitem"), minCount = 3),
-        "part_a", "part_b")),
-    // --- per-label embedding centroids (IVF/cluster-summary primitive) ---
-    "q77_label_centroids" -> ((s, d) =>
-      Similarity.labelCentroids(t(s, d, "embeddings"))),
-    // --- bigram repetition filter (Gopher-style pretraining quality gate) ---
-    "q78_repetition_ratio" -> ((s, d) =>
-      TextStats.repetitionRatio(t(s, d, "documents"))),
-    // --- defensive arithmetic (§2.8): try_divide nulls on zero divisors
-    // instead of erroring (ANSI) or poisoning with Inf (IEEE) ---
-    "q79_safe_division" -> ((s, d) =>
-      t(s, d, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        try_divide(col("l_extendedprice"), col("l_quantity") % 3).as("per_mod3"),
-        try_divide(lit(1.0), col("l_discount")).as("inv_discount"),
-        coalesce(try_divide(col("l_extendedprice"), col("l_quantity") % 3), lit(-1.0))
-          .as("per_mod3_filled"))),
-    // --- FULL OUTER reconciliation (restatement/migration parity check) ---
-    "q80_reconcile" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val restated = o.filter(col("o_orderkey") % 5 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 7 === 0, col("o_totalprice") + 10.0)
-            .otherwise(col("o_totalprice")))
-      Quality.reconcile(o.filter(col("o_orderkey") % 3 =!= 0), restated,
-        "o_orderkey", "o_totalprice")
-    },
-    // --- array set algebra per group (basket drift across years) ---
-    "q81_basket_drift" -> ((s, d) =>
-      Analytics.customerBasketDrift(t(s, d, "lineitem"), t(s, d, "orders"),
-        1997, 1998)),
-    // --- time-bounded conversion funnel (sequence analytics, one window) ---
-    "q82_event_funnel" -> ((s, d) => Events.funnel(Tables.events(s, d))),
-    // --- contingency table (DataFrameStatFunctions surface) ---
-    "q83_status_priority_crosstab" -> ((s, d) =>
-      t(s, d, "orders").stat.crosstab("o_orderstatus", "o_orderpriority")),
-    // --- re-aggregatable HLL sketches (DataSketches): per-group sketches
-    // union to the global distinct — the two-level rollup pattern a 100 TB
-    // pipeline uses so the second level never rescans raw data ---
-    "q84_hll_union" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val approx = o.groupBy("o_orderstatus")
-        .agg(hll_sketch_agg(col("o_custkey")).as("sk"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_all"))
-      val exact = o.agg(countDistinct(col("o_custkey")).as("exact_all"))
-      approx.crossJoin(exact).select(col("exact_all"),
-        (abs(col("approx_all") - col("exact_all")) <= col("exact_all") * 0.05)
-          .as("union_ok"))
-    },
-    // --- VariantType JSON (Spark 4): parse once, typed path extraction ---
-    "q85_variant_props" -> ((s, d) =>
-      Tables.events(s, d).select(col("event_id"),
-        variant_get(parse_json(col("props")), "$.k", "int").as("k_typed"),
-        variant_get(parse_json(col("props")), "$.k", "string").as("k_str"))),
-    // --- deterministic per-group mode (built-in mode() is arbitrary on
-    // ties; this count-then-rank form is reproducible) ---
-    "q86_priority_mode" -> ((s, d) =>
-      Analytics.groupMode(t(s, d, "orders"), "o_orderstatus", "o_orderpriority")),
-    // --- equi-width histogram via engine-portable floor-division buckets ---
-    "q87_price_histogram" -> ((s, d) =>
-      Analytics.equiWidthHistogram(t(s, d, "orders"), "o_totalprice", 25000.0)),
-    // --- embedding scalar quantization (uint8 codes — vector-index storage
-    // compression; spec asserts full code arrays, output stays scalar) ---
-    "q88_embedding_quantize" -> ((s, d) =>
-      Similarity.quantizeStats(t(s, d, "embeddings"))),
-    // --- share-of-total: whole-table window over pre-aggregated rows only ---
-    "q89_revenue_share" -> ((s, d) =>
-      Analytics.revenueShareBySegment(factSlim(s, d))),
-    // --- schema-drift union: unionByName null-fills columns the other side
-    // lacks (the batch form of a schema-evolution-tolerant ingest) ---
-    "q90_union_by_name" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val legacy = o.filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val current = o.filter(col("o_orderstatus") === "O")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      legacy.unionByName(current, allowMissingColumns = true)
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("o_totalprice")).as("n_with_price"),
-          count(col("o_orderpriority")).as("n_with_priority"))
-    },
-    // --- distribution shape: Spark's population skew / excess kurtosis,
-    // oracled as explicit central moments ---
-    "q91_price_shape" -> ((s, d) =>
-      Analytics.lineitemShape(t(s, d, "lineitem"))),
-    // --- freqItems accuracy gate: the sketch guarantees no false negatives
-    // above the support threshold, so it must contain the exact mode ---
-    "q92_freq_items_gate" -> { (s, d) =>
-      val o = t(s, d, "orders")
-      val freq = o.stat.freqItems(Array("o_orderstatus"), 0.3)
-        .select(col("o_orderstatus_freqItems").as("candidates"))
-      val exact = Analytics.groupMode(o.withColumn("g", lit(1)), "g", "o_orderstatus")
-        .select(col("mode_o_orderstatus").as("top_status"))
-      freq.crossJoin(exact).select(col("top_status"),
-        array_contains(col("candidates"), col("top_status")).as("found"))
-    },
-    // --- train/eval decontamination by 8-gram overlap (hash-keyed join) ---
-    "q93_decontamination" -> ((s, d) =>
-      Dedup.crossSplitContamination(t(s, d, "documents"))),
-    // --- fixed-window token chunking with stride (context-window prep) ---
-    "q94_token_chunks" -> ((s, d) =>
-      TextFeatures.chunkPlan(t(s, d, "documents"))),
-    // --- greedy sequence packing per corpus source (running-sum window) ---
-    "q95_sequence_packing" -> ((s, d) =>
-      TextFeatures.packingPlan(t(s, d, "documents"))),
-    // --- windowed approx-distinct (the streaming-ready sketch agg; exact
-    // count pinned by the oracle, estimate accuracy-gated like q37/q84) ---
-    "q96_window_distinct_users" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val approx = Events.distinctUsersPerWindow(ev)
-      val exact = ev.groupBy(window(col("ts"), "15 minutes"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-        .select(col("window.start").as("window_start"), col("exact_users"))
-      approx.join(exact, Seq("window_start"))
-        .select(col("window_start"), col("exact_users"), col("n_events"),
-          (abs(col("approx_users") - col("exact_users")) <=
-            greatest(col("exact_users") * 0.05, lit(2.0))).as("approx_ok"))
-    },
-    // --- correlated scalar subquery (Catalyst decorrelation) ---
-    "q97_above_own_avg" -> ((s, d) =>
-      Analytics.ordersAboveCustomerAvg(t(s, d, "orders"))),
-    // --- regex pattern mining over the corpus (RE2-portable) ---
-    "q98_regex_matches" -> ((s, d) =>
-      TextStats.regexMatches(t(s, d, "documents"), "\\b[aeiou][a-z]{3,}\\b")),
-    // --- map-typed aggregation: per-bucket status->count maps built with
-    // map_from_entries, consumed with null-safe key lookups ---
-    "q99_status_count_map" -> { (s, d) =>
-      val counts = t(s, d, "orders")
-        .groupBy((col("o_custkey") % 10).as("bucket"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"))
-      counts.groupBy("bucket")
-        .agg(map_from_entries(collect_list(struct(col("o_orderstatus"), col("n"))))
-          .as("m"))
-        .select(col("bucket"),
-          try_element_at(col("m"), lit("O")).as("n_open"),
-          try_element_at(col("m"), lit("F")).as("n_final"),
-          try_element_at(col("m"), lit("P")).as("n_pending"))
-    },
-    // --- per-source cap (data-mixing / source balancing, deterministic) ---
-    "q100_per_source_cap" -> ((s, d) =>
-      TextFeatures.perSourceCap(t(s, d, "documents"), 40)),
-    // --- source upsampling (the mixture-weighting half of data mixing) ---
-    "q101_source_upsample" -> ((s, d) =>
-      TextFeatures.sourceUpsample(t(s, d, "documents"),
-        Map("src0" -> 3, "src1" -> 2))),
-    // --- time-weighted average (gap-weighted sensor/telemetry mean) ---
-    "q102_time_weighted_value" -> ((s, d) =>
-      Events.timeWeightedValue(Tables.events(s, d))),
-    // --- retention cohort grid (the warehouse layer NB 03 declared) ---
-    "q103_retention_cohorts" -> ((s, d) =>
-      Warehouse.retentionCohorts(t(s, d, "orders"))),
-    // --- RFM quartile scoring over the customer dimension ---
-    "q104_rfm_scores" -> ((s, d) =>
-      Warehouse.rfmScores(t(s, d, "orders"))),
-    // --- ABC / Pareto part classification by cumulative revenue share ---
-    "q105_abc_parts" -> ((s, d) =>
-      Warehouse.abcClassification(t(s, d, "lineitem"))),
-    // --- forward-fill sparse telemetry (last non-null carried forward) ---
-    "q106_forward_fill" -> ((s, d) =>
-      Events.forwardFillClickK(Tables.events(s, d))),
-    // --- robust spread: median absolute deviation per status ---
-    "q107_price_mad" -> ((s, d) =>
-      Analytics.orderPriceMad(t(s, d, "orders"))),
-    // --- revenue concentration: exact-cents Gini coefficient ---
-    "q108_revenue_gini" -> ((s, d) =>
-      Warehouse.customerRevenueGini(t(s, d, "orders"))),
-    // --- corpus mixture diversity: source-distribution entropy ---
-    "q109_source_entropy" -> ((s, d) =>
-      TextStats.sourceEntropy(t(s, d, "documents"))),
-    // --- reporting: year-over-year monthly growth (gap-robust self-join) ---
-    "q110_monthly_yoy" -> ((s, d) =>
-      Warehouse.monthlyYoY(t(s, d, "orders"))),
-    // --- dedup observability: histogram of exact-duplicate cluster sizes ---
-    "q111_dup_cluster_sizes" -> ((s, d) =>
-      Dedup.exactDupGroups(t(s, d, "documents"))
-        .groupBy("n_copies").agg(count(lit(1)).as("n_groups"))),
-    // --- chi-square independence over the status x priority contingency ---
-    "q112_status_priority_chi2" -> ((s, d) =>
-      Analytics.chi2Independence(t(s, d, "orders"),
-        "o_orderstatus", "o_orderpriority")),
-    // --- char-level entropy (random/base64 garbage detector) ---
-    "q113_char_entropy" -> ((s, d) =>
-      TextStats.charEntropy(t(s, d, "documents"))),
-    // --- per-source quality dashboard (mixture QA rollup) ---
-    "q114_source_quality" -> ((s, d) =>
-      TextStats.sourceQualityProfile(t(s, d, "documents"))),
-    // --- lifecycle Markov summary: status transition counts ---
-    "q115_status_transitions" -> ((s, d) =>
-      Analytics.statusTransitions(t(s, d, "orders"))),
-    // --- association lift over co-purchase baskets ("bought together") ---
-    "q116_copurchase_lift" -> ((s, d) =>
-      Graph.coPurchaseLift(t(s, d, "lineitem"))),
-    // --- equi-depth deciles (skew-adaptive histogram) ---
-    "q117_price_deciles" -> ((s, d) =>
-      Analytics.priceDeciles(t(s, d, "orders"))),
-    // --- ANSI null-semantics probe (three-valued vs null-safe equality) ---
-    "q118_null_semantics" -> ((s, d) =>
-      Analytics.nullSemantics(t(s, d, "orders"))),
-    // --- sweep-line peak concurrent sessions (capacity planning) ---
-    "q119_peak_concurrency" -> ((s, d) =>
-      Events.peakConcurrency(Tables.events(s, d))),
-    // --- weighted mean (quantity-weighted discount per return flag) ---
-    "q120_weighted_discount" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag").agg(
-        round(sum(col("l_discount") * col("l_quantity")) / sum(col("l_quantity")), 6)
-          .as("qty_weighted_discount"),
-        round(avg(col("l_discount")), 6).as("unweighted_discount"),
-        count(lit(1)).as("n"))),
-    // --- SQL FILTER-clause aggregates (per-aggregate predicates, one scan) ---
-    "q121_filtered_aggs" -> { (s, d) =>
-      t(s, d, "orders").createOrReplaceTempView("graft_q121_orders")
-      s.sql(
-        """SELECT o_orderstatus,
-          |  count(*) AS n_all,
-          |  count(*) FILTER (WHERE o_totalprice > 200000) AS n_large,
-          |  count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent,
-          |  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
-          |    FILTER (WHERE o_orderpriority = '1-URGENT') AS DOUBLE) / 100.0
-          |    AS urgent_revenue
-          |FROM graft_q121_orders GROUP BY o_orderstatus""".stripMargin)
-    },
-    // --- correlated LATERAL subquery join (decorrelated to a ranked
-    // window join — never per-row re-execution) ---
-    "q122_lateral_topk" -> ((s, d) =>
-      Analytics.topOrdersPerSegmentLateral(s, t(s, d, "customer"), t(s, d, "orders"))),
-    // --- RANGE-frame moving average over daily revenue (calendar-aware) ---
-    "q123_moving_avg" -> ((s, d) =>
-      Analytics.movingDailyRevenue(t(s, d, "orders"))),
-    // --- map-typed HOF analytics: map_from_entries -> map_filter ->
-    // transform_values -> explode ---
-    "q124_map_share" -> ((s, d) =>
-      Analytics.priorityStatusMapShare(t(s, d, "orders"))),
-    // --- count-min sketch point-frequency gate (accuracy-gated like q84) ---
-    "q125_cms_gate" -> ((s, d) =>
-      Analytics.cmsGate(s, t(s, d, "orders"))),
-    // --- Benford first-digit screen (DQ suite; exact-cents digit extract) ---
-    "q126_benford" -> ((s, d) =>
-      Quality.benfordProfile(t(s, d, "orders"), "o_totalprice")),
-    // --- sentence segmentation stats (text shape signal) ---
-    "q127_sentence_stats" -> ((s, d) =>
-      TextStats.sentenceStats(t(s, d, "documents"))),
-    // --- pseudonymizing projection (hash + last-4 masking) ---
-    "q128_masked_pii" -> ((s, d) =>
-      Quality.maskCustomerPii(t(s, d, "customer"))),
-    // --- grouping()/grouping_id() introspection: distinguish "subtotal
-    // row" from "genuinely-null key" in ROLLUP output ---
-    "q129_grouping_id" -> { (s, d) =>
-      t(s, d, "orders").createOrReplaceTempView("graft_q129_orders")
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority,
-          |  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-          |  CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-          |  CAST(grouping_id() AS INT) AS gid,
-          |  count(*) AS n
-          |FROM graft_q129_orders
-          |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin)
-    },
-    // --- built-in session_window (the declarative twin of q31's custom
-    // sessionize; end = last event + gap by definition) ---
-    "q130_session_window" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"), col("n_events"))),
-    // --- boolean aggregates (universal/existential per group) ---
-    "q131_bool_aggs" -> ((s, d) =>
-      t(s, d, "orders").groupBy("o_orderstatus").agg(
-        bool_and(col("o_totalprice") > 1000.0).as("all_over_1k"),
-        bool_or(col("o_orderpriority") === "1-URGENT").as("any_urgent"),
-        count(lit(1)).as("n"))),
-    // --- discrete percentiles (actual data values, no interpolation —
-    // exact cross-engine equality without rounding) ---
-    "q132_percentile_disc" -> { (s, d) =>
-      t(s, d, "orders").createOrReplaceTempView("graft_q132_orders")
-      s.sql(
-        """SELECT o_orderstatus,
-          |  percentile_disc(0.25) WITHIN GROUP (ORDER BY o_totalprice) AS p25,
-          |  percentile_disc(0.5)  WITHIN GROUP (ORDER BY o_totalprice) AS p50,
-          |  percentile_disc(0.75) WITHIN GROUP (ORDER BY o_totalprice) AS p75,
-          |  count(*) AS n
-          |FROM graft_q132_orders GROUP BY o_orderstatus""".stripMargin)
-    },
-    // --- Zipf-law vocabulary fit (templated-text detector) ---
-    "q133_zipf_slope" -> ((s, d) =>
-      TextStats.zipfSlope(t(s, d, "documents"))),
-    // --- temperature-based source mixture plan (n^alpha rebalancing) ---
-    "q134_temperature_mixture" -> ((s, d) =>
-      TextFeatures.temperatureMixture(t(s, d, "documents"))),
-    // --- deterministic round-robin source interleave (no global sort) ---
-    "q135_interleave_plan" -> ((s, d) =>
-      TextFeatures.interleavePlan(t(s, d, "documents"))),
-    // --- full regr_* family (completes q72: counts + means + fit quality;
-    // raw sums-of-squares excluded — magnitude makes rounding non-portable) ---
-    "q136_regr_family" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag").agg(
-        expr("regr_count(l_extendedprice, l_quantity)").as("n_pairs"),
-        round(expr("regr_avgx(l_extendedprice, l_quantity)"), 6).as("avg_qty"),
-        round(expr("regr_avgy(l_extendedprice, l_quantity)"), 6).as("avg_price"),
-        round(expr("regr_r2(l_extendedprice, l_quantity)"), 6).as("r2"))),
-    // --- exists/forall/filter HOF predicates over token arrays ---
-    "q137_hof_predicates" -> { (s, d) =>
-      val toks = TextStats.tokensN(TextStats.normalize(col("text")))
-      t(s, d, "documents").select(col("doc_id"),
-        exists(toks, tk => tk === "the").as("has_the"),
-        forall(toks, tk => length(tk) <= 15).as("all_short"),
-        size(filter(toks, tk => length(tk) >= 8)).as("n_long"))
-    },
-    // --- integer bit manipulation (hash/bitmap building blocks) ---
-    "q138_bit_ops" -> ((s, d) =>
-      t(s, d, "orders").select(col("o_orderkey"),
-        bit_count(col("o_orderkey")).as("bits_set"),
-        col("o_orderkey").bitwiseAND(lit(255L)).as("low_byte"),
-        col("o_orderkey").bitwiseXOR(col("o_custkey")).as("xor_cust"),
-        shiftleft(col("o_orderkey"), 2).as("shifted"))),
-    // --- exact re-aggregatable distinct via bitmaps (A10 exact sibling) ---
-    "q139_bitmap_distinct" -> ((s, d) =>
-      Analytics.bitmapDistinct(t(s, d, "orders"),
-        "o_orderstatus", "o_custkey", "n_customers")),
-    // --- XML document interchange (serialize + parse back, §2.1 S6/S7) ---
-    "q140_xml_roundtrip" -> ((s, d) =>
-      Documents.xmlRoundtrip(t(s, d, "orders"))),
-    // --- native WITHIN-GROUP listagg (§2.4, Spark 4 built-in) ---
-    "q141_listagg_nations" -> ((s, d) =>
-      Analytics.nationListPerRegion(t(s, d, "nation"))),
-    // --- collocation mining: adjacent-bigram PMI [ext] ---
-    "q142_bigram_pmi" -> ((s, d) =>
-      TextStats.bigramPmi(t(s, d, "documents"), minCount = 5, topN = 30)),
-    // --- product-quantization ANN gate [ext]: recall@3 vs in-query exact
-    // truth (quantization blurs the head of the ranking — measured 0.27 at
-    // sf0.01 with 64 codes/subspace, bound 0.08) PLUS the tighter ADC
-    // rank-quality gate: true top-3 neighbors average inside the best 1/8
-    // of the full ADC ranking (measured n/34). Both booleans come from ONE
-    // un-ranked ADC pass (rank = 1 + count of better codes; recall@3 =
-    // rank <= 3) — no materialized ranking, no window, no persist ---
-    "q143_pq_topk" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 20)
-      val pq = Similarity.pqBuild(emb, codesPerSub = 64)
-      val exact = Similarity.bruteForceTopK(emb, probes, 3)
-      Similarity.pqGate(pq, probes, exact, emb,
-        k = 3, minRecall = 0.08, maxAvgRankFrac = 0.125)
-    },
-    // --- triangle census of the co-purchase graph (§ graph layer) ---
-    "q144_triangle_count" -> ((s, d) =>
-      Graph.triangleCount(Graph.coPurchasePairs(t(s, d, "lineitem")).drop("n_together"))),
-    // --- sequential smoothing: per-user EWMA (§2.5) ---
-    "q145_user_value_ewma" -> ((s, d) =>
-      Events.userValueEwma(Tables.events(s, d))),
-    // --- two-sample Kolmogorov–Smirnov drift test (§2.4/§2.11) ---
-    "q146_ks_price_by_status" -> ((s, d) =>
-      Analytics.ksStatistic(t(s, d, "orders"), "o_totalprice",
-        col("o_orderstatus") === "F")),
-    // --- mixture drift: per-source JS divergence from the corpus [ext] ---
-    "q147_source_js_divergence" -> ((s, d) =>
-      TextStats.sourceJsDivergence(t(s, d, "documents"))),
-    // --- gaps-and-islands: longest daily-activity streak (§2.5) ---
-    "q148_activity_streaks" -> ((s, d) =>
-      Events.activityStreaks(Tables.events(s, d))),
-    // --- lexical diversity: TTR + hapax legomena [ext] ---
-    "q149_lexical_diversity" -> ((s, d) =>
-      TextStats.lexicalDiversity(t(s, d, "documents"))),
-    // --- boilerplate-prefix census [ext] ---
-    "q150_prefix_dups" -> ((s, d) =>
-      Dedup.prefixDupStats(t(s, d, "documents"))),
-    // --- syllable complexity (readability word half) [ext] ---
-    "q151_syllable_complexity" -> ((s, d) =>
-      TextStats.syllableComplexity(t(s, d, "documents"))),
-    // --- RECURSIVE CTE: bounded multi-hop reachability (§2.3) ---
-    "q152_copurchase_reachability" -> ((s, d) =>
-      Analytics.reachableParts(s, Graph.coPurchasePairs(t(s, d, "lineitem")), maxHops = 2)),
-    // --- IVFxPQ composed ANN recall gate (the billion-vector layout) [ext]
-    // (measured 0.27 at sf0.01 with 64 codes/subspace + nProbe=8;
-    // bound 0.08) ---
-    "q153_ivfpq_topk" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 20)
-      Similarity.recallGate(
-        Similarity.bruteForceTopK(emb, probes, 3),
-        Similarity.ivfPqTopK(Similarity.ivfBuild(emb),
-          Similarity.pqBuild(emb, codesPerSub = 64), probes, 3, nProbe = 8),
-        minRecall = 0.08)
-    },
-    // --- seasonality: lag-7 autocorrelation of daily revenue (§2.4) ---
-    "q154_revenue_autocorr" -> ((s, d) =>
-      Analytics.dailyRevenueAutocorr(t(s, d, "orders"))),
-    // --- corpus cleanup: control chars / accents / whitespace [ext] ---
-    "q155_text_cleanup" -> ((s, d) =>
-      TextStats.cleanupProfile(t(s, d, "documents"))),
-    // --- robust MAD outlier census (§2.4/§2.11) ---
-    "q156_price_outliers" -> ((s, d) =>
-      Analytics.robustOutliers(t(s, d, "orders"))),
-    // --- weighted priority sampling (Duffield-Lund-Thorup) [ext] ---
-    "q157_weighted_sample" -> ((s, d) =>
-      TextFeatures.prioritySample(t(s, d, "documents"), 20)),
-    // --- Mann-Whitney U rank-sum test (§2.4/§2.11) ---
-    "q158_mannwhitney_u" -> ((s, d) =>
-      Analytics.mannWhitneyU(t(s, d, "orders"), "o_totalprice",
-        col("o_orderstatus") === "F")),
-    // --- frequent 3-itemsets (co-purchase family) ---
-    "q159_copurchase_triples" -> ((s, d) =>
-      Graph.coPurchaseTriples(t(s, d, "lineitem"))),
-    // --- share-of-parent down the region->nation hierarchy (A9) ---
-    "q160_share_of_parent" -> ((s, d) =>
-      Warehouse.revenueShareOfParent(t(s, d, "orders"), t(s, d, "customer"),
-        t(s, d, "nation"), t(s, d, "region"))),
-    // --- composed reporting layer (reference NB 05): fact -> roll-up ->
-    // top-customer -> share-of-parent, PUBLISHED through the ACID lake
-    // write under CHECK constraints and read back — the returned rows have
-    // survived the governed-artifact path, not just the query ---
-    "q161_reporting_summary" -> { (s, d) =>
-      val summary = Warehouse.reportingSummary(factSlim(s, d))
-      val dir = graft.tables.TempLakes.create("graft_report_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      lake.write(summary, "reporting_summary", "overwrite",
-        constraints = Seq(
-          ("revenue_nonneg", "revenue >= 0"),
-          ("share_bounded", "share_of_total >= 0 AND share_of_total <= 1"),
-          ("rank_positive", "revenue_rank >= 1"))): Unit
-      lake.read("reporting_summary")
-    },
-    // --- seeded data generator gate (reference src/generate_data.py): the
-    // oracle pins the published scale and the integrity contracts the
-    // reference's validator checks (FK closure, total reconciliation) ---
-    "q162_datagen_gate" -> { (s, d) =>
-      val cfg = graft.ingest.DataGen.Config()
-      // shared-subtree persists (Caching contract, harness releaseAll
-      // reclaims): the six 1-row aggregate branches below reference the
-      // generated frames 2-3x each, and ReuseExchange does not merge the
-      // re-planned generator subtrees — unpersisted, the whole generation
-      // pipeline re-runs per branch (measured 5.1 -> ~2 s at sf0.1)
-      val custs = graft.ingest.DataGen.customers(s, cfg).persist()
-      val prods = graft.ingest.DataGen.products(s, cfg).persist()
-      val (orders0, items0) = graft.ingest.DataGen.ordersAndItems(s, cfg)
-      val orders = orders0.persist()
-      val items = items0.persist()
-      val nc = custs.agg(count(lit(1)).as("n_customers"))
-      val np = prods.agg(count(lit(1)).as("n_products"))
-      val no = orders.agg(count(lit(1)).as("n_orders"))
-      val fkC = orders.join(custs.select("customer_id"),
-          Seq("customer_id"), "left_anti")
-        .agg((count(lit(1)) === 0).as("fk_customers_ok"))
-      val fkP = items.join(prods.select("product_id"),
-          Seq("product_id"), "left_anti")
-        .agg((count(lit(1)) === 0).as("fk_products_ok"))
-      val recon = orders.join(
-          items.groupBy("order_id").agg(round(sum("line_total"), 2).as("s")),
-          Seq("order_id"))
-        .agg((sum(when(abs(col("total_amount") - col("s")) > 0.001, 1L)
-          .otherwise(0L)) === 0).as("totals_ok"))
-      nc.crossJoin(np).crossJoin(no).crossJoin(fkC).crossJoin(fkP)
-        .crossJoin(recon)
-    },
-    // --- char-bigram self-perplexity (KenLM-filter stand-in) [ext]:
-    // model + scoring fully in-engine, log costs as exact micronat longs ---
-    "q163_char_perplexity" -> ((s, d) =>
-      TextStats.charBigramLogScore(t(s, d, "documents"))),
-    // --- per-source token-length band census (distribution-aware length
-    // screen of a mixing recipe) [ext] ---
-    "q164_length_bands" -> ((s, d) =>
-      TextStats.sourceLengthBands(t(s, d, "documents"))),
-    // --- train/eval token-distribution drift (JS divergence over the full
-    // vocabulary, exact integer accumulation) [ext] ---
-    "q165_split_drift" -> ((s, d) =>
-      TextStats.splitTokenDrift(t(s, d, "documents"))),
-    // --- ZCA embedding whitening gate [ext]: bounded driver-side fit
-    // (covariance + Jacobi eigen on a d x d matrix), pure-map transform;
-    // the gate pins that the whitened covariance is the identity ---
-    "q166_whitening_gate" -> ((s, d) =>
-      Similarity.whitenGate(t(s, d, "embeddings"))),
-    // --- BPE vocabulary induction gate [ext]: merges train driver-side on
-    // the capped word-frequency table (quantizer contract); the gate pins
-    // the segmentation invariants and that training compresses ---
-    "q167_bpe_gate" -> ((s, d) =>
-      graft.text.Bpe.bpeGate(t(s, d, "documents"))),
-    // --- per-source corpus report card (text-side reporting layer),
-    // published through the CHECK-governed lake write like q161 ---
-    "q168_corpus_report" -> { (s, d) =>
-      val card = graft.text.Refinery.corpusReportCard(t(s, d, "documents"))
-      val dir = graft.tables.TempLakes.create("graft_corpus_report_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      lake.write(card, "corpus_report", "overwrite",
-        constraints = Seq(
-          ("pass_rate_bounded", "pass_rate >= 0 AND pass_rate <= 1"),
-          ("dups_nonneg", "n_exact_dups >= 0"),
-          ("langs_positive", "n_langs >= 1"))): Unit
-      lake.read("corpus_report")
-    },
-    // --- the FULL refinery, end to end and oracle-verified: quality gate ->
-    // exact dedup -> shingle near-dup closure -> per-source cap -> chunk
-    // plan. Spark runs the banded/label-propagation scale pipeline; the oracle replays
-    // every stage declaratively (the q21/q19/q24/q43/q94 spellings
-    // composed) — the strongest single statement that the training-data
-    // pipeline computes exactly what it claims ---
-    "q169_refinery_e2e" -> ((s, d) =>
-      graft.text.Refinery.refine(t(s, d, "documents"),
-        graft.text.Refinery.Config(shingleVerify = true))),
-    // --- per-user daily admission quota (§2.10): the batch twin of
-    // streamingPerUserQuota (Spark 4 transformWithState + MapState) —
-    // EventsSpec pins streaming == batch; this oracle-checks the batch
-    // semantics, closing the loop on the arbitrary-state path ---
-    "q171_quota_admission" -> ((s, d) =>
-      Events.perUserQuotaBatch(Tables.events(s, d), maxPerDay = 5)),
-    // --- whitening composed with the quantizer it preconditions [ext]:
-    // whitenFit -> whitenTransform (corpus AND probes, same fit) ->
-    // ivfBuild/ivfTopK, recall@3 vs raw-space brute-force truth gated
-    // against the unwhitened index's recall (near-isotropic corpus => ties;
-    // the anisotropic win is pinned in SimilaritySpec) ---
-    "q170_whitened_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.whitenedRecallGate(emb, emb.filter(col("vec_id") < 20),
-        k = 3, nLists = 16, nProbe = 4, tol = 0.1)
-    }),
-    // --- benchmark decontamination [ext]: docs hash-split into a small
-    // "benchmark" slice and the training rest; bench 4-gram hashes
-    // broadcast, the train side is checked map-only (GPT-3 appendix-C
-    // contract: one shared n-gram flags the document) ---
-    "q172_decontamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.text.Decontam.contaminationReport(
-        docs.filter(col("doc_id") % 37 =!= 0),
-        docs.filter(col("doc_id") % 37 === 0), n = 4)
-    }),
-    // --- corpus-frequent boilerplate score [ext]: n-gram doc-frequency
-    // map-side-combined on 64-bit hashes, frequent set broadcast back,
-    // per-doc boilerplate ratio (C4/CCNet most-common-paragraphs adapted) ---
-    "q173_boilerplate" -> ((s, d) =>
-      graft.text.Decontam.boilerplateRatio(t(s, d, "documents"),
-        n = 3, minDocs = 5)),
-    // --- exactly-replayable PageRank [ext]: fixed-point long arithmetic
-    // makes the power iteration order-independent (long sums commute
-    // exactly), so the oracle unrolls the same 4 rounds declaratively and
-    // the result hash-matches — a determinism contract float PageRank
-    // cannot offer ---
-    "q174_pagerank" -> ((s, d) =>
-      Graph.pageRankInt(Graph.coPurchasePairs(t(s, d, "lineitem"), minCount = 3),
-        "part_a", "part_b", iters = 4)),
-    // --- SemDeDup [ext]: semantic (embedding-space) dedup — q41's exact
-    // within-block cosine pairs, component closure, keep min vec_id per
-    // cluster; the oracle replays pairs + recursive-CTE closure like q43 ---
-    "q175_semdedup" -> ((s, d) =>
-      Similarity.semDedup(t(s, d, "embeddings"), "label", threshold = 0.4)
-        .select("vec_id", "label")),
-    // --- SemDeDup x IVF [ext]: the paper's full unlabeled pipeline —
-    // cluster first (ivfBuild's cell assignment, portable 0-iteration
-    // init so every distance is an exact expression over corpus values),
-    // then within-cell pairs + closure; the oracle replays seed selection,
-    // argmin assignment, cosine pairs and the recursive closure ---
-    "q176_semdedup_ivf" -> ((s, d) =>
-      Similarity.semDedupIvf(t(s, d, "embeddings"), threshold = 0.4,
-        nLists = 8, iters = 0, portableInit = true)
-        .select("vec_id", "cell")),
-    // --- decontaminate itself [ext]: the anti-join drop users actually run
-    // (q172 verifies the report; this verifies the surviving train set) ---
-    "q177_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.text.Decontam.decontaminate(
-        docs.filter(col("doc_id") % 37 =!= 0),
-        docs.filter(col("doc_id") % 37 === 0), n = 4)
-        .select("doc_id", "source", "lang")
-    }),
-    // --- per-user funnel flags (§2.10): the batch twin of streamingFunnel's
-    // final state (EventsSpec pins stream == twin row-for-row; this
-    // oracle-checks the twin — the q171 pattern for the funnel machine) ---
-    "q178_funnel_per_user" -> ((s, d) =>
-      Events.funnelPerUser(Tables.events(s, d))),
-    // --- Gopher/MassiveText quality-rule bundle [ext]: the published
-    // per-doc heuristic filter suite, exact integer rule booleans ---
-    "q179_gopher_rules" -> ((s, d) =>
-      TextStats.gopherQualityProfile(t(s, d, "documents"))),
-    // --- Gopher repetition signals [ext]: top / duplicated word-bigram
-    // character coverage ---
-    "q180_topgram_fraction" -> ((s, d) =>
-      TextStats.topNgramCharFraction(t(s, d, "documents"))),
-    // --- MMR diversified re-rank over IVF candidates [ext]: the coarse
-    // quantizer bounds the candidate scan (nProbe/nLists of the corpus,
-    // never brute force), exact-cosine top-n within the probed cells, then
-    // the greedy per-probe selection (one shuffle). Portable 0-iteration
-    // init makes the WHOLE chain exact replayable float arithmetic: the
-    // oracle composes q176's assignment replay with the k-round greedy
-    // unroll ---
-    "q181_mmr_rerank" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      Similarity.mmrRerankIvf(emb, emb.filter(col("vec_id") < 20),
-        n = 10, k = 4, lambda = 0.5, nLists = 8, nProbe = 3,
-        iters = 0, portableInit = true)
-    },
-    // --- directional containment near-dup [ext]: the embedded-document
-    // detector (quote/snippet case) symmetric Jaccard misses; pure
-    // counting over DF-pruned shingle hashes. Runs on a deterministic
-    // HALF-SLICE: this exact Σdf² counting form is the VERIFICATION twin —
-    // q185's banded operator is the full-corpus scale form, and
-    // Round8OpsSpec pins banded == exact, so paying the quadratic
-    // self-join twice over the whole corpus bought nothing (the slice
-    // still carries 7 true pairs at sf0.01 — non-vacuous) ---
-    "q182_containment_dups" -> ((s, d) =>
-      graft.text.Dedup.containmentNearDups(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 1),
-        shingleSize = 3, threshold = 0.5, maxDf = 1000)),
-    // --- corpus novelty curve [ext]: per-doc fraction of shingles first
-    // introduced by that doc (ingestion-order redundancy telemetry) ---
-    "q183_gram_novelty" -> ((s, d) =>
-      graft.text.Dedup.gramNovelty(t(s, d, "documents"))),
-    // --- ANN index serving lifecycle [ext]: build (portable init) ->
-    // saveIndex (cell-partitioned lake commit) -> loadIndex -> serve — the
-    // returned rows have survived the full persist/load round trip, and the
-    // oracle replays the served top-k exactly (q176's assignment replay +
-    // probe-cell ranking + exact cosine top-k within probed cells) ---
-    "q184_index_serve" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 20)
-      // fresh dir per invocation: a FIXED path would accumulate versions
-      // across runs and two concurrent materializations (driver + sbt test
-      // planning) would collide on the OCC commit log
-      val dir = graft.tables.TempLakes.create("graft_ann_serve_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      val ivf = Similarity.ivfBuild(emb, nLists = 8, iters = 0,
-        portableInit = true)
-      val pq = Similarity.pqBuild(emb, codesPerSub = 16)
-      Similarity.saveIndex(lake, "serve", ivf, pq)
-      val (servedIvf, _) = Similarity.loadIndex(lake, "serve")
-      Similarity.ivfTopK(servedIvf, probes, k = 3, nProbe = 3)
-        .select(col("probe_id"), col("neighbor_id"),
-          round(col("cos_sim"), 6).as("cos_sim"), col("rn"))
-    },
-    // --- banded containment near-dup [ext]: bottom-k sketch candidates +
-    // exact verify — the scale form of q182 (candidates from ≤ sketchK
-    // sampled grams per doc probing the DF-pruned gram table, never the
-    // Σdf² self-join); the exact verify makes it equal the counting form
-    // up to a 2^-64 sketch-miss margin, so the oracle replays the EXACT
-    // containment arithmetic (q24's equality-oracle pattern) ---
-    "q185_containment_banded" -> ((s, d) =>
-      graft.text.Dedup.containmentNearDupsBanded(t(s, d, "documents"),
-        shingleSize = 3, threshold = 0.5, maxDf = 1000, sketchK = 64)),
-    // --- refinery with the containment stage [ext]: gate -> exact dedup ->
-    // shingle near-dup closure -> drop embedded quotes (directional
-    // containment, banded) -> cap -> chunk; the oracle replays every stage
-    // declaratively (q169's respell + q182's containment arithmetic over
-    // the near-dup survivors). Near-dup at 0.98 so the containment stage
-    // does REAL work on this corpus: its J ≈ 0.96 embedded-copy pairs slip
-    // the tight Jaccard stage and only the directional stage removes them
-    // (at q169's 0.8 the Jaccard closure would swallow every such pair and
-    // the stage would verify vacuously). Runs on a deterministic
-    // HALF-SLICE (the q189 pattern): the stage-equality contract is
-    // corpus-size-independent, q169 already times the full-corpus refinery,
-    // and the even slice keeps real containment pairs (6 at sf0.01) so the
-    // directional stage still removes docs here ---
-    "q186_refinery_containment" -> ((s, d) =>
-      graft.text.Refinery.refine(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        graft.text.Refinery.Config(shingleVerify = true,
-          nearDupThreshold = 0.98, containment = true,
-          containmentThreshold = 0.8, containmentMaxDf = 1000))),
-    // --- Gopher-gated refinery [ext]: the production MassiveText filter
-    // suite (q179's rules) actually gating the E2E pipeline; the oracle
-    // swaps q169's basic gate for the integer-arithmetic rule conjunction.
-    // Stop-word floor 1 (not the paper's 2): the synthetic corpus's
-    // vocabulary barely intersects the 8-word stop list, and a gate that
-    // drops 100% verifies nothing — at 1 the gate passes ~half the corpus,
-    // so every downstream stage is exercised on a non-trivial survivor set.
-    // Runs on the ODD half-slice (complementing q186's even one — the
-    // gate-swap contract is corpus-size-independent; q169 carries the
-    // full-corpus E2E timing) ---
-    "q187_refinery_gopher" -> ((s, d) =>
-      graft.text.Refinery.refine(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 1),
-        graft.text.Refinery.Config(shingleVerify = true, gate = "gopher",
-          gopherMinStopWords = 1))),
-    // --- END-TO-END curation artifact [ext]: the composition endgame — the
-    // FULL refinery (basic gate + CCNet LM tail drop + learned NB
-    // classifier + exact/shingle near-dup + containment + cap) feeds
-    // clusterSplit, the train split feeds budgetedQualitySelection
-    // (waterfilled 2600-token budget, best-first), the selection feeds
-    // budgetedSamplePlan (4000 tokens, <= 2 epochs), and the plan is
-    // PUBLISHED through a CHECK-constrained lake write and read back (the
-    // q168 governed-artifact pattern). EIGHTH slice (doc_id % 8 = 1) with
-    // the q196 twin-perm setting (32/16), sized to a <= 5 s in-suite
-    // budget. Oracle: every stage's existing
-    // respell composed (q208's gate+LM, q212's classifier, q169/q186's
-    // dedup+containment, q215's selection, q210's plan), with the split
-    // stage replayed by THEOREM: refinery survivors are exact-distinct and
-    // pair-free at 0.8 (dedup removed every such pair, and two kept
-    // cluster representatives can't pair >= 0.8 or the closure would have
-    // merged them), so every cluster is the singleton {doc_id} and the
-    // split is the md5-nibble of the doc's own id. The engine still runs
-    // the full clusterSplit machinery — a bug anywhere in it lands outside
-    // the theorem and hash-mismatches ---
-    "q223_curation_artifact" -> { (s, d) =>
-      // the chain STAGES through the lake (the medallion discipline):
-      // each macro-stage publishes a governed table and the next reads it
-      // back — which is also the scale answer to composed-lineage blowup
-      // (refinery LSH + split LSH + three windows in ONE logical plan
-      // measurably OOMs the driver's analyzer; a staged read resets
-      // lineage to a parquet scan, exactly as a 1000-executor pipeline
-      // would checkpoint between curation phases). The chain's dozens of
-      // eager jobs all run on a slice-sized corpus, so their shuffles are
-      // sized to the slice for the eager span (the q196 micro-batch
-      // discipline; session conf restored in finally)
-      val dir = graft.tables.TempLakes.create("graft_curation_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      val spKey = "spark.sql.shuffle.partitions"
-      val aqKey = "spark.sql.adaptive.enabled"
-      val spPrev = s.conf.get(spKey)
-      val aqPrev = s.conf.get(aqKey)
-      s.conf.set(spKey, "8")
-      // AQE re-plans every exchange; on a slice-sized corpus that is pure
-      // scheduling tax (measured: 132 -> 55 jobs, ~12 -> ~10 s for this
-      // chain) — at real scale the span would keep AQE on
-      s.conf.set(aqKey, "false")
-      try {
-        val slice = t(s, d, "documents").filter(col("doc_id") % 8 === 1)
-        val chunks = graft.text.Refinery.refine(slice,
-          graft.text.Refinery.Config(shingleVerify = true,
-            lmFilter = Some(graft.text.Refinery.LmFilter("lang = 'en'",
-              tailPermille = 300)),
-            classifierFilter = Some(graft.text.Refinery.NbFilter(
-              "lang = 'en'", "lang <> 'en'", minAvgMicronats = 0L)),
-            containment = true, checkpointStages = true,
-            dedupNumPerms = 32, dedupBands = 16))
-        lake.write(slice.join(chunks.select("doc_id").distinct(),
-          Seq("doc_id"), "left_semi"), "survivors", "overwrite"): Unit
-        val sv = lake.read("survivors")
-        val split = graft.text.Dedup.clusterSplit(sv, numPerms = 32, bands = 16)
-        lake.write(sv.join(
-          split.filter(col("split") === "train").select("doc_id"),
-          Seq("doc_id"), "left_semi"), "train_docs", "overwrite"): Unit
-        val tr = lake.read("train_docs")
-        val sel = TextFeatures.budgetedQualitySelection(tr, budgetTokens = 2600L)
-        val selDocs = tr.join(sel.select("doc_id"), Seq("doc_id"), "left_semi")
-        val plan = TextFeatures.budgetedSamplePlan(selDocs, budgetTokens = 4000L,
-          maxEpochs = 2.0)
-        lake.write(plan, "training_plan", "overwrite",
-          constraints = Seq(
-            ("copies_positive", "n_copies >= 1"),
-            ("tokens_positive", "n_tokens >= 1"))): Unit
-      } finally { s.conf.set(spKey, spPrev); s.conf.set(aqKey, aqPrev) }
-      lake.read("training_plan")
-    },
-    // --- incremental ANN index append, oracle-checked [ext]: build on the
-    // A-slice (portable init), commit, appendToIndex the B-slice — the
-    // returned cell assignments have survived the frozen-quantizer append
-    // path (load centroids -> assign -> lake append commit), and the oracle
-    // replays them exactly: seeds from A's md5 order, argmin over ALL
-    // vectors (the frozen quantizer never retrains on B) ---
-    "q188_index_append" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      val a = emb.filter(col("vec_id") % 5 =!= 0)
-      val b = emb.filter(col("vec_id") % 5 === 0)
-      val dir = graft.tables.TempLakes.create("graft_ann_append_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      val ivf = Similarity.ivfBuild(a, nLists = 8, iters = 0,
-        portableInit = true)
-      val pq = Similarity.pqBuild(a, codesPerSub = 16)
-      Similarity.saveIndex(lake, "appendq", ivf, pq)
-      Similarity.appendToIndex(lake, "appendq", b)
-      lake.read("appendq_ivf_vectors").select(col("vec_id"), col("cell"))
-    },
-    // --- incremental novelty telemetry, oracle-checked [ext]: the
-    // min-per-gram first-occurrence table maintained as a materialized view
-    // across two lake commits (refreshNovelty reads only the appended
-    // changes), then read back for the whole slice — the oracle is q183's
-    // full-recompute replay over the same slice, so the O(delta) path must
-    // equal it exactly. The lifecycle (2 base writes + 2 view refreshes +
-    // the join-back) runs on a deterministic half-corpus: the EQUALITY
-    // contract is corpus-size-independent, and the full-corpus telemetry
-    // cost is already q183's row ---
-    // --- hard-negative mining [ext]: per-anchor top-k most-similar
-    // DIFFERENT-label vectors via the IVF cell join (Σ|cell|²-bounded, the
-    // kNN-graph construction shape — no all-pairs); portable 0-iteration
-    // init makes the full chain replayable (q181's contract) ---
-    "q192_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(t(s, d, "embeddings"), k = 2, nLists = 8,
-        nProbe = 2, iters = 0, portableInit = true)),
-    // --- semantic decontamination [ext]: train vectors within cosine 0.3
-    // of ANY benchmark vector (hash-split like q172) — the embedding-space
-    // complement of n-gram decontam: paraphrased leakage shares no 4-gram
-    // but keeps a near-identical embedding; bench side broadcasts, train
-    // side is one map-only pass ---
-    "q191_semantic_decontam" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      Similarity.semanticContamination(
-        emb.filter(col("vec_id") % 37 =!= 0),
-        emb.filter(col("vec_id") % 37 === 0), threshold = 0.3)
-    },
-    // --- DSIR importance weights [ext]: hashed-n-gram bag models of the
-    // target slice (lang = en) vs the raw pool, per-doc log importance
-    // weight as an exact micronat long sum — the published
-    // target-distribution data-selection recipe, hash-replayable ---
-    // Runs on the EVEN half-slice: q193 composes the SAME weight pipeline
-    // over the full corpus (the selection contract needs the whole pool),
-    // so keeping q190 full-corpus paid the identical gram pass twice — the
-    // q182/q185 de-duplication rule; the weights contract itself is
-    // corpus-size-independent
-    "q190_dsir_weights" -> ((s, d) =>
-      TextFeatures.dsirWeights(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        col("lang") === "en", n = 2, buckets = 1024)),
-    // --- DSIR resampling [ext]: the paper's data-SELECTION step (not just
-    // scoring) — Gumbel top-k over the q190 importance weights draws a
-    // weight-proportional sample without replacement; both the weights and
-    // the Gumbel keys are integer micronats, so the selected set is an
-    // exact long-arithmetic replay ---
-    "q193_dsir_resample" -> ((s, d) =>
-      TextFeatures.dsirResample(t(s, d, "documents"),
-        col("lang") === "en", keep = 150, n = 2, buckets = 1024)),
-    // --- kNN graph [ext]: every vector's top-k cosine neighbors via the
-    // IVF cell join (q192's chain minus the label filter — hardNegatives
-    // IS this graph with a cross-label filter inside the join); the
-    // substrate for graph clustering and connectivity-based dedup ---
-    "q194_knn_graph" -> ((s, d) =>
-      Similarity.knnGraph(t(s, d, "embeddings"), k = 2, nLists = 8,
-        nProbe = 2, iters = 0, portableInit = true)),
-    // --- semantic decontamination, celled scale form [ext]: when the
-    // benchmark registry exceeds broadcast size, train vectors keep their
-    // single assigned cell (one cell shuffle) and bench vectors consider
-    // only cells the triangle inequality can't rule out (unit-sphere
-    // normalize: cos ≥ τ ⇔ L2 ≤ √(2−2τ); prune on centroid distance +
-    // cell radius) — EXACT by construction, so Round9OpsSpec pins
-    // celled == broadcast as an identity ---
-    "q195_semantic_decontam_ivf" -> { (s, d) =>
-      val emb = t(s, d, "embeddings")
-      Similarity.semanticContaminationIvf(
-        emb.filter(col("vec_id") % 37 =!= 0),
-        emb.filter(col("vec_id") % 37 === 0), threshold = 0.3,
-        nLists = 8, iters = 0, portableInit = true)
-    },
-    // --- streaming containment ingest, oracle-checked [ext]: the q171
-    // batch-twin discipline applied to corpus ingestion — the twin replays
-    // a two-batch ingest's admit/reject decisions (gate -> in-batch
-    // exact/near-dup/containment -> against-the-lake exact/near-dup/
-    // containment, two lake commits) through the SAME per-batch pipeline
-    // the stream runs; shingle verify + exact-counting containment make
-    // every stage declaratively replayable, and CorpusIngestSpec pins
-    // stream == twin row-for-row ---
-    // Runs on the deterministic doc_id % 8 < 2 QUARTER-SLICE (was % 4 < 2;
-    // tightened round 10 per the bench-weight directive): the twin's
-    // decision-replay contract is corpus-size-independent (CorpusIngestSpec
-    // pins stream == twin on fixtures), the slice keeps CROSS-BATCH
-    // near-dup and containment rejections live at sf0.01 (xdup = 1,
-    // xcont = 1 in the oracle's stage CTEs — checked; cross-batch exact
-    // was already empty on the old % 4 slice, and the in-batch stages are
-    // fixture-pinned by CorpusIngestSpec), and the larger slices only
-    // re-time the same decisions. numPerms drops to
-    // 32/16 bands for this ROW only (per-pair candidate-miss probability
-    // (1-s²)^16 ≈ 8e-8 at s = 0.8 — the q24 banded == brute equality
-    // contract is carried by the specs and q24 itself, not this row;
-    // shingleVerify keeps every surviving candidate exact)
-    // shufflePartitions = 8: size the ~70-action per-batch DAG's shuffles
-    // to the micro-batch (see startNearDup's scaladoc) — partition-count-
-    // invariant operators, measured 18.8 -> 12.0 s per run at sf0.1
-    "q196_stream_ingest_twin" -> { (s, d) =>
-      val docs = t(s, d, "documents").filter(col("doc_id") % 8 < 2)
-      graft.stream.CorpusIngest.nearDupIngestTwin(s,
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1),
-        threshold = 0.8, numPerms = 32, bands = 16,
-        containmentThreshold = Some(0.5), shufflePartitions = Some(8))
-    },
-    // --- span-level dedup [ext]: arXiv:2107.06499's substring dedup as a
-    // distributed rolling-window census — windows duplicated across >= 2
-    // docs are removed from every doc but the min-id keeper, survivors
-    // reassembled in order; the census shuffles 64-bit window hashes, the
-    // oracle groups the window STRINGS (same counts, the gram-join
-    // contract) ---
-    "q197_span_dedup" -> ((s, d) =>
-      graft.text.Dedup.spanDedup(t(s, d, "documents"), window = 10, minDocs = 2)),
-    // --- quality-aware canonical dedup [ext]: q43's cluster closure, but
-    // keep the (passes_filter DESC, n_tokens DESC, doc_id ASC) argmax per
-    // near-dup cluster instead of blind min-id — integer ordering keys so
-    // the argmax replays exactly on any engine. Runs on the EVEN half-slice
-    // (the q186 pattern: the keep-policy contract is corpus-size-
-    // independent; q43 carries the full-corpus closure timing) ---
-    "q198_dedup_keep_best" -> ((s, d) =>
-      graft.text.Dedup.dedupCorpusKeepBest(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 0))),
-    // --- leakage-free cluster split [ext]: near-dup clusters (not docs)
-    // hash to train/val/test via the md5-nibble policy, so no exact/near
-    // duplicate pair ever straddles a split boundary. ODD half-slice
-    // (complementing q198's even one) ---
-    "q199_cluster_split" -> ((s, d) =>
-      graft.text.Dedup.clusterSplit(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 1))),
-    // --- CCNet LM quality scoring [ext]: Stupid-Backoff bigram LM trained
-    // on the trusted (en) slice, every other doc scored by exact-micronat
-    // avg negative log-likelihood (arXiv:1911.00359's perplexity filter;
-    // one tokenize pass, count-table equi-joins on 64-bit keys) ---
-    "q200_lm_perplexity" -> ((s, d) =>
-      graft.text.LangModel.lmScore(t(s, d, "documents"), col("lang") === "en")),
-    // --- CCNet head/middle/tail split [ext]: the scored pool ranked via
-    // globalPrefixSums range buckets (no data-sized global window), exact
-    // integer per-mille cutoffs ---
-    "q201_lm_buckets" -> ((s, d) =>
-      graft.text.LangModel.perplexityBuckets(t(s, d, "documents"),
-        col("lang") === "en")),
-    // --- token-budget epoch allocation [ext]: exact waterfilling of a
-    // 49k-token budget across sources with a 2-epoch repetition cap
-    // (arXiv:2305.16264's repeat-up-to-a-cap schedule); at sf0.01 the
-    // level caps 2 sources and waterfills 18 — both branches live ---
-    "q202_token_budget" -> ((s, d) =>
-      graft.text.TextFeatures.tokenBudgetAllocation(t(s, d, "documents"),
-        budgetTokens = 49000L, maxEpochs = 2.0)),
-    // --- per-source quality selection [ext]: keep the top 30% of EVERY
-    // source by (distinct-token ratio, length) — the per-domain form of
-    // DataComp-style filtering; one window partitioned by source ---
-    "q203_top_quality_per_source" -> ((s, d) =>
-      graft.text.TextFeatures.topQualityPerSource(t(s, d, "documents"),
-        keepPermille = 300)),
-    // --- cluster-balanced diversity selection [ext]: IVF cells, most-
-    // representative-first per cell, exact round-robin across cells — the
-    // diversity-sampling complement of prioritySample; portable
-    // 0-iteration init (q176/q194's contract) makes the whole chain
-    // replayable ---
-    "q204_diverse_subset" -> ((s, d) =>
-      graft.sim.Similarity.diverseSubset(t(s, d, "embeddings"), n = 100,
-        nLists = 8, iters = 0, portableInit = true)),
-    // --- cross-source duplication matrix [ext]: shingle-verified near-dup
-    // pairs annotated by source pair — the mirror-site/syndication
-    // telemetry read before setting mixture weights ---
-    "q205_source_overlap" -> ((s, d) =>
-      graft.text.Dedup.sourceOverlapMatrix(t(s, d, "documents"),
-        threshold = 0.8)),
-    // --- dedup-adjusted effective tokens [ext]: per-source raw vs
-    // canonical-survivor token counts + exact per-mille kept ratio (what
-    // mixture weights should be set from — raw size over-samples
-    // duplicated domains). ODD half-slice: q43 carries the full-corpus
-    // closure timing; the ratio contract is corpus-size-independent ---
-    "q206_effective_tokens" -> ((s, d) =>
-      graft.text.Dedup.effectiveTokens(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 1),
-        threshold = 0.8)),
-    // --- embedding outlier detection [ext]: top-k farthest vectors from
-    // their nearest IVF centroid (corrupt embedding / encoder failure /
-    // OOD screen) — the complement of q204's most-representative rank ---
-    "q207_embedding_outliers" -> ((s, d) =>
-      graft.sim.Similarity.embeddingOutliers(t(s, d, "embeddings"), k = 20,
-        nLists = 8, iters = 0, portableInit = true)),
-    // --- version drift [ext]: token-distribution JS divergence between
-    // two committed lake versions (time travel + q165's exact-micronat
-    // arithmetic) — "what did the append change about the corpus"; the
-    // oracle replays drift(even slice, full corpus) directly, since v0 =
-    // even docs and v1 = even + appended odd docs ---
-    // --- learned quality classifier [ext]: the GPT-3/CCNet discriminative
-    // web filter — hashed bag-of-ngrams (unigram + bigram) multinomial
-    // Naive Bayes trained on trusted (en) vs pool (non-en) labels, every
-    // doc scored by its exact-micronat class log-odds sum; one tokenize
-    // pass + count-table equi-joins on longs. In-suite budget: ~q200's
-    // weight (one gram pass + bounded joins), stated <= 3 s ---
-    "q212_nb_classifier" -> ((s, d) =>
-      graft.text.QualityClassifier.classifierScore(t(s, d, "documents"),
-        col("lang") === "en", col("lang") =!= "en")),
-    // --- REAL PNG pixel decode [ext]: spec-complete RGBA PNGs (zlib IDAT
-    // via java.util.zip — PNG's compression IS the JDK's — with valid
-    // CRC32 chunks) are built from a closed-form pixel formula, then the
-    // engine inflates, unfilters, and reduces each image to exact
-    // per-channel sums; the oracle recomputes the sums ARITHMETICALLY, so
-    // a decoder bug anywhere (chunk walk, inflate, filter reversal) hash-
-    // mismatches. Tiny dims (<= 16x13): the contract is the codec, not
-    // byte volume (in-suite budget <= 3 s) ---
-    "q217_png_pixel_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.pngPixelStats(
-        graft.multimodal.Multimodal.syntheticPixelMedia(
-          t(s, d, "documents").filter(col("doc_id") % 2 === 0))).toDF()),
-    // --- REAL WAV sample decode [ext]: PCM16 clips from a closed-form
-    // sample formula, decoded by the RIFF chunk walk (PCM needs no codec)
-    // into the exact amplitude census; same arithmetic-oracle contract as
-    // q217 (in-suite budget <= 3 s) ---
-    "q218_wav_sample_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticPixelMedia(
-          t(s, d, "documents").filter(col("doc_id") % 2 === 1))).toDF()),
-    // --- perceptual image near-dup [ext]: the composition of the real PNG
-    // decoder (q217) with the Hamming bit-band blocking q45 proves for
-    // SimHash — planted base / sparse-watermark / distinct image triples,
-    // decoded through all five scanline filters, box-downsampled to 8x8
-    // grayscale block means, 56-bit dHash, banded candidate pairs + exact
-    // Hamming verify (== brute force). The oracle recomputes every hash
-    // ARITHMETICALLY from the planted pixel formulas and brute-forces the
-    // pairs (in-suite budget <= 3 s) ---
-    "q219_image_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDups(
-        graft.multimodal.MediaDedup.syntheticNearDupImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- audio fingerprint near-dup [ext]: the WAV-side twin — PCM16
-    // energy-contour fingerprints (57 windows, 56 adjacent comparisons)
-    // over planted base / nudged / distinct clip triples, same banding
-    // machinery, same arithmetic-replay oracle (in-suite budget <= 3 s) ---
-    "q220_audio_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.audioNearDups(
-        graft.multimodal.MediaDedup.syntheticNearDupAudio(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- REAL resize [ext]: q217's full-decode PNGs box-downsampled to
-    // maxSide 8 (integer block means, ceil dims, edge blocks keep true
-    // counts), RE-ENCODED as spec-complete PNGs, then pushed through the
-    // real pixel census — so a bug in decode, resample, or re-encode all
-    // hash-mismatch. Images already inside the bound pass through
-    // byte-identical (both branches fire at every sf). The oracle replays
-    // floor(blockSum/blockCount) per channel from the planted formula
-    // (in-suite budget <= 3 s) ---
-    "q221_resize_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.pngPixelStats(
-        graft.multimodal.Multimodal.resize(
-          graft.multimodal.Multimodal.syntheticPixelMedia(
-            t(s, d, "documents").filter(col("doc_id") % 2 === 0)),
-          maxSide = 8)).toDF()),
-    // --- REAL GIF (LZW) pixel decode [ext]: spec-complete GIF89a fixtures
-    // (64-color global palette, GCE extension, sub-block-split LZW data)
-    // decoded by genuine variable-width code-table expansion (CLEAR
-    // resets, the KwKwK case, width bumps), indices mapped through the
-    // palette into an exact census; the oracle recomputes the planted
-    // index and palette formulas arithmetically. JPEG stays header-only BY
-    // DESIGN: entropy decode = Huffman + IDCT, a codec body out of scope
-    // (documented at Containers.jpegDims). Budget <= 3 s ---
-    "q222_gif_pixel_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.gifPixelStats(
-        graft.multimodal.Multimodal.syntheticGifMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- CROSS-FORMAT perceptual dedup [ext]: the same image content
-    // planted once as a PNG and once as a 256-gray-palette GIF (container
-    // bytes share NOTHING — different compression, different structure)
-    // must collide on the format-blind dHash: each format decodes through
-    // its own real codec to identical grayscale, so every planted pair
-    // surfaces at Hamming 0 — the re-encoded-copy case that byte-level
-    // dedup structurally misses. Oracle recomputes the shared hash from
-    // one formula and brute-forces pairs (in-suite budget <= 3 s) ---
-    "q224_crossformat_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDups(
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- perceptual media clusters [ext]: the labeling form of q224 —
-    // every media row labeled with the min-id connected component of its
-    // Hamming-<=3 pair graph (singletons self-label; dedup = keep
-    // media_id == cluster_id), over the MIXED-format corpus so clusters
-    // group a PNG with its GIF re-encode. Oracle: q224's hash replay +
-    // recursive-CTE closure (the q43/q199 pattern) + a cluster-size
-    // window (in-suite budget <= 3 s) ---
-    "q225_media_clusters" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageClusters(
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)),
-    // --- content-based image similarity search [ext]: CLASSICAL 88-dim
-    // descriptors (per-channel histograms + gray block-mean grid) over
-    // DECODED pixels — integer-valued, so cosine replays bit-for-bit —
-    // plugged straight into the Similarity surface via the (vec_id,
-    // embedding) contract (q28's brute top-k); a probe's nearest neighbor
-    // is its cross-format re-encode at cosine exactly 1. The learned
-    // embedding extractor remains stubbed (no weights in this sandbox);
-    // these are honest content features, not a model (budget <= 3 s) ---
-    "q226_image_similarity" -> { (s, d) =>
-      // descriptors feed the corpus side AND the probe filter — persist
-      // (Caching contract) so the decode pass runs once
-      val desc = graft.multimodal.MediaDedup.imageDescriptors(
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents"))).persist()
-      Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
-    },
-    // --- image ANN at scale [ext]: the q40 IVF machinery runs UNCHANGED
-    // over the content descriptors (the (vec_id, embedding) contract
-    // paying off) — brute-force truth vs IVF top-k under the q29/q40
-    // self-verifying recall gate; a probe's cross-format twin is an
-    // identical vector, so it always shares the probe's own cell
-    // (budget <= 3 s) ---
-    "q227_image_ann_ivf" -> { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.imageDescriptors(
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents"))).persist()
-      val probes = desc.filter(col("vec_id") < 10)
-      Similarity.recallGate(
-        Similarity.bruteForceTopK(desc, probes, 3),
-        Similarity.ivfTopK(Similarity.ivfBuild(desc), probes, 3, nProbe = 8),
-        minRecall = 0.5)
-    },
-    // --- audio similarity search [ext]: the audio twin of q226 — the 57
-    // window energies AS the descriptor vector (cosine is scale-invariant,
-    // so a volume-scaled copy scores 1 against its original); brute top-k
-    // over the planted clip triples, bit-replayable cosine
-    // (budget <= 3 s) ---
-    "q228_audio_similarity" -> { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.audioDescriptors(
-        graft.multimodal.MediaDedup.syntheticNearDupAudio(
-          t(s, d, "documents"))).persist()
-      Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
-    },
-    // --- streaming MEDIA ingest with perceptual dedup [ext]: the
-    // multimodal twin of q196 — per-batch format-blind dHash through the
-    // real decoders, in-batch Hamming-component dedup, banded cross-batch
-    // rejection against the COMMITTED lake (the lake IS the fingerprint
-    // index; a later batch's GIF re-encode of a committed PNG is
-    // rejected). PNG batch then GIF batch (every odd id the re-encode of
-    // an even one); the deterministic twin runs the exact per-batch
-    // pipeline (stream == twin spec-pinned in MediaIngestSpec); the
-    // oracle replays within-batch closures per parity + brute cross-batch
-    // Hamming rejection (budget <= 3 s) ---
-    "q229_media_ingest_twin" -> { (s, d) =>
-      val media = graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-        t(s, d, "documents")).toDF()
-      graft.stream.MediaIngest.perceptualIngestTwin(s,
-        media.filter(col("media_id") % 2 === 0),
-        media.filter(col("media_id") % 2 === 1),
-        shufflePartitions = Some(8))
-    },
-    // --- REAL AVI frame decode [ext]: video was the last header-only
-    // media type — complete RIFF fixtures now carry uncompressed BGR24
-    // bottom-up DIB frame chunks in a movi LIST, and the engine walks the
-    // chunk chain (word alignment, LIST recursion, strf validation) and
-    // reassembles every frame into a per-frame channel census the oracle
-    // recomputes ARITHMETICALLY from the planted closed form. Compressed
-    // ('##dc') streams fail fast by name; the codec is the contract, not
-    // the byte volume (budget <= 3 s) ---
-    "q230_avi_frame_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.aviFrameStats(
-        graft.multimodal.Multimodal.syntheticVideoMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- video perceptual near-dup [ext]: the video twin of q219 — REAL
-    // frame sampling (every 2nd frame; the oracle's WHERE f % 2 = 0 pins
-    // the sampling arithmetic), per-frame 56-bit dHash over decoded
-    // pixels, frame-pair candidates from the SAME banded machinery
-    // (frames ride packed media·2^20+frame ids through hammingBandPairs),
-    // then SHARED-FRAME containment per video pair: near-dup iff >= 50%
-    // of BOTH sides' sampled frames match within Hamming 3 (bag
-    // semantics — a re-cut that reorders frames still matches). Oracle
-    // replays every frame hash from the planted formulas and brute-forces
-    // frame pairs (budget <= 3 s) ---
-    "q231_video_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoNearDups(
-        graft.multimodal.MediaDedup.syntheticNearDupVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- video perceptual clusters [ext]: the labeling form of q231 (the
-    // q225 contract on videos): min-id connected component of the
-    // shared-frame pair graph, singletons self-label, dedup = keep
-    // media_id == cluster_id. Oracle: q231's pair replay + recursive-CTE
-    // closure + a cluster-size window (budget <= 3 s) ---
-    "q232_video_clusters" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoClusters(
-        graft.multimodal.MediaDedup.syntheticNearDupVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- video content similarity search [ext]: the video twin of
-    // q226/q228 — a bag-of-frames temporal descriptor (the 64 gray block
-    // means of each sampled frame, floor integers, SUMMED across frames)
-    // in the (vec_id, embedding) contract, so the whole Similarity
-    // surface runs over what videos CONTAIN; integer dims keep cosine
-    // bit-replayable (budget <= 3 s) ---
-    "q233_video_similarity" -> { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.videoDescriptors(
-        graft.multimodal.MediaDedup.syntheticNearDupVideos(
-          t(s, d, "documents")), everyN = 2).persist()
-      Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
-    },
-    // --- shot-boundary detection [ext]: consecutive-frame Hamming over
-    // the full decoded frame stream (shot detection is inherently
-    // sequential — no sampling), boundary where the hash jumps by > 10
-    // bits, shot_id = running boundary count per video (a per-video
-    // window bounded by the video's own frame count). Fixtures plant
-    // 3-frame shots whose x/y multipliers change wholesale at each cut;
-    // the oracle replays every hash and the same window arithmetic
-    // (budget <= 3 s) ---
-    "q234_shot_labels" -> ((s, d) =>
-      graft.multimodal.MediaDedup.shotLabels(
-        graft.multimodal.MediaDedup.syntheticShotVideos(
-          t(s, d, "documents")), maxIntraShotHamming = 10)),
-    // --- cross-modal video<->image matching [ext]: which videos CONTAIN
-    // a known image (blocklist / provenance) — every frame hashes through
-    // the SAME 56-bit grid as the image corpus, candidates from the
-    // cross-side band-chunk equi-join (the MediaIngest lake-check shape,
-    // never frames x images), exact Hamming verify. Probe 3g is a PNG of
-    // frame 1 of video 3g's content, so it must hit at Hamming 0 across
-    // the modality boundary; the oracle reuses the video-side hash replay
-    // for BOTH sides (the probe formula IS the frame-1 formula)
-    // (budget <= 3 s) ---
-    "q235_video_image_match" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoImageMatches(
-        graft.multimodal.MediaDedup.syntheticNearDupVideos(
-          t(s, d, "documents")),
-        graft.multimodal.MediaDedup.syntheticProbeImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)),
-    // --- streaming VIDEO ingest with shared-frame perceptual dedup
-    // [ext]: completes the streaming story for the last media type — the
-    // lake holds a FRAME-grain fingerprint index; each micro-batch is
-    // frame-hashed through the real AVI decoder, deduped in-batch by
-    // shared-frame containment components (min-id keep), then checked
-    // against the committed index via cross-side band chunks (only
-    // (media_id, frame_idx, dhash) leaves the lake) — a re-cut or
-    // re-encoded copy of a committed video is rejected with no container
-    // byte shared, and replays are idempotent with no streaming state.
-    // EVEN-group half-slice (keeps every group's cross-batch structure:
-    // role 0 lands even → batch 1, role 1 odd → batch 2, so every planted
-    // near-dup pair straddles the boundary); stream == twin pinned in
-    // MediaIngestSpec; the oracle replays in-batch closures per parity +
-    // cross-batch containment rejection. Priced honestly at ~3.8 s: the
-    // cost is two full ingest lifecycles with four governed-table commits
-    // and two closure materializations in the timed region — fixed per-job
-    // scheduling, not data (a half→quarter slice moved it 0.12 s) ---
-    "q236_video_ingest_twin" -> { (s, d) =>
-      // fixture persists: both batches and every write action re-read the
-      // payload rows; without it each action re-encodes the AVI bytes
-      // (Caching contract — harness releaseAll reclaims)
-      val media = graft.multimodal.MediaDedup.syntheticNearDupVideos(
-        t(s, d, "documents").filter(expr("(doc_id div 3) % 2 = 0")))
-        .toDF().persist()
-      graft.stream.MediaIngest.videoIngestTwin(s,
-        media.filter(col("media_id") % 2 === 0),
-        media.filter(col("media_id") % 2 === 1),
-        shufflePartitions = Some(8))
-    },
-    // --- JOINT multimodal near-dup pairs [ext]: an item = (caption,
-    // image, audio) under one id; near-dup iff ANY modality matches —
-    // caption shingle-Jaccard >= 0.8 (the exact q24 banded chain), image
-    // dHash Hamming <= 3 (q224's cross-format fixture — image pairs group
-    // by doc_id/2), or audio energy-contour Hamming <= 3 (q220's fixture —
-    // audio pairs group by doc_id/3). The three planted structures pair
-    // across DIFFERENT group boundaries, so the union graph is genuinely
-    // cross-modal (the LAION dedup rule: a re-posted image under a
-    // rewritten caption is the same training example). Output keeps
-    // provenance flags, full-outer-merged. Oracle = the three existing
-    // replays full-joined (budget <= 3 s) ---
-    "q237_multimodal_neardups" -> { (s, d) =>
-      // doc_id < 1998 (= 6k) keeps both the /2 image groups and the /3
-      // audio groups intact, and keeps the sf0.1 union graph inside the
-      // small-graph closure fast path (see multimodalPairCtes)
-      val docs = t(s, d, "documents").filter(col("doc_id") < 1998)
-      graft.multimodal.MediaDedup.multimodalNearDups(docs,
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(docs),
-        graft.multimodal.MediaDedup.syntheticNearDupAudio(docs))
-    },
-    // --- JOINT multimodal clusters [ext]: the labeling form of q237 (the
-    // q225 contract on the union graph) — min-id connected component over
-    // text ∪ image ∪ audio edges, so caption-match(a,b) + image-match(b,c)
-    // puts a and c in one cluster though no single modality links them;
-    // singletons self-label; dedup = item_id == cluster_id. Oracle: the
-    // q237 pair replay + recursive-CTE closure + cluster-size window
-    // (budget <= 3 s) ---
-    "q238_multimodal_clusters" -> { (s, d) =>
-      val docs = t(s, d, "documents").filter(col("doc_id") < 1998)
-      graft.multimodal.MediaDedup.multimodalClusters(docs,
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(docs),
-        graft.multimodal.MediaDedup.syntheticNearDupAudio(docs))
-    },
-    // --- audio clip-in-track containment search [ext]: the audio twin of
-    // span-level text dedup (q197) — whole-clip fingerprints stretch
-    // their windows with clip length and can NEVER find an excerpt, so
-    // tracks get per-offset span prints over ABSOLUTE 10-sample windows
-    // and a clip's leading span print is matched via the cross-side
-    // band-chunk join (the q235/q236 machinery; never clips x spans),
-    // exact Hamming verify. A volume-TRIPLED, window-aligned excerpt hits
-    // its source track at its planted offset at Hamming 0; the oracle
-    // replays track and clip energies from the planted formulas and
-    // brute-forces all clip x span pairs (budget <= 3 s) ---
-    "q239_audio_clip_matches" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.multimodal.MediaDedup.audioClipMatches(
-        graft.multimodal.MediaDedup.syntheticAudioClips(docs),
-        graft.multimodal.MediaDedup.syntheticAudioTracks(docs))
-    },
-    // --- video clip-in-video one-sided containment [ext]: was this short
-    // clip lifted from a longer video? q231's two-sided containment
-    // (least of BOTH coverages) structurally misses it — a 2-frame clip
-    // in a 6-frame video covers the long side <= 1/3. Clip frames hash at
-    // full rate, the corpus keeps its everyN=2 sampled index, candidates
-    // from the cross-side band-chunk join, then ONE-SIDED aggregation:
-    // matched clip frames / clip frames >= 0.5. The planted clip is a
-    // frame-DECIMATED re-post (every 2nd source frame), so each clip
-    // frame lands exactly on the sampled index -> clip_frac 1 against its
-    // source (and its source's planted near-dup). Oracle replays both
-    // sides' hashes from the planted formulas (budget <= 3 s) ---
-    "q240_video_clip_matches" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.multimodal.MediaDedup.videoClipMatches(
-        graft.multimodal.MediaDedup.syntheticVideoClips(docs),
-        graft.multimodal.MediaDedup.syntheticNearDupVideos(docs))
-    },
-    // --- image crop containment [ext]: the cropped-meme case — cropping
-    // changes whole-image dHash's normalized 8x8 grid, so the crop's and
-    // source's hashes share nothing. Patch hashes over a FIXED 2px block
-    // grid make every 8x8-block window a sub-rectangle of one global
-    // comparison grid; a block-aligned, brightness-shifted (+30) crop
-    // reproduces its source's window hash at the crop offset EXACTLY.
-    // Candidates from the cross-side band-chunk join (never crops x
-    // windows); the oracle replays block values, the comparison grid, and
-    // window sums arithmetically (budget <= 3 s) ---
-    "q241_image_crop_matches" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.multimodal.MediaDedup.imageCropMatches(
-        graft.multimodal.MediaDedup.syntheticImageCrops(docs),
-        graft.multimodal.MediaDedup.syntheticCropImages(docs))
-    },
-    // --- image quality stats [ext]: the image twin of the text quality
-    // heuristics — exposure/contrast gates over DECODED pixels (header
-    // metadata cannot answer "is it over-exposed or flat"). Exact-integer
-    // statistics (gray sums, the n*sumsq - sum^2 variance numerator,
-    // clipped-pixel counts) so the oracle replays the q217 planted pixel
-    // formula arithmetically through the real decode path
-    // (budget <= 3 s) ---
-    "q242_image_quality" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageQualityStats(
-        graft.multimodal.Multimodal.syntheticPixelMedia(
-          t(s, d, "documents").filter(col("doc_id") % 2 === 0)))),
-    // --- REAL FLAC sample decode [ext]: lossless audio joins the
-    // full-decode family — real fixed-predictor + Rice decoding with
-    // CRC-8/16 verification (Flac.scala), fixtures from the real encoder,
-    // census through the SAME format-blind sample path WAV uses
-    // (pcm16Samples dispatches on magic, so contour dedup / quality /
-    // containment / descriptors are all FLAC-aware for free — FlacSpec
-    // pins WAV fingerprint == FLAC fingerprint). Lossless ⇒ the planted
-    // formula replays arithmetically (budget <= 3 s) ---
-    "q255_flac_sample_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticFlacMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- audio ANN behind the recall gate [ext]: the q227 contract on
-    // the audio modality — IVF over the 57-dim energy-contour descriptors
-    // (already in the (vec_id, embedding) contract), gated by in-query
-    // exact brute-force recall >= 0.5 over 10 probes; completes the
-    // ANN-served similarity matrix (text/image/audio/video). Pure
-    // registration over existing operators (budget <= 2 s) ---
-    "q254_audio_ann_ivf" -> { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.audioDescriptors(
-        graft.multimodal.MediaDedup.syntheticNearDupAudio(
-          t(s, d, "documents"))).persist()
-      val probes = desc.filter(col("vec_id") < 10)
-      Similarity.recallGate(
-        Similarity.bruteForceTopK(desc, probes, 3),
-        Similarity.ivfTopK(Similarity.ivfBuild(desc), probes, 3, nProbe = 8),
-        minRecall = 0.5)
-    },
-    // --- streaming JOINT multimodal ingest [ext]: the LAION any-modality
-    // rule (q237/q238) composed with the ingest matrix (q196/q229/q236/
-    // q244) — items are (caption, image, audio) records; a batch item is
-    // rejected when ANY modality matches in-batch (union pair graph,
-    // min-id keep) or against the COMMITTED lake (banded checks per
-    // modality; captions verify with exact shingle Jaccard on candidates
-    // only). Closes the cross-modality ingest hole: a committed image
-    // re-posted under a rewritten caption lands today only if it arrives
-    // via the image ingest — here it is rejected on every path. Batches
-    // split by parity over the q237 fixture set; the oracle replays the
-    // three modality pair arithmetics, two per-parity closures, and the
-    // cross-parity rejection. Honest price ~5.2 s, measured decomposed:
-    // two full ingest lifecycles (decode+sign+band+closure+commit each)
-    // plus the 3-modality lake check — the per-modality twins q229+q244
-    // alone sum to ~6 s, so the joint row is sub-additive (single-pass
-    // dual-payload fingerprinting; image+audio lake checks merged into
-    // one kind-offset banded join); the residual is fixed per-job
-    // scheduling that amortizes at scale (the q223 pattern) ---
-    "q253_joint_ingest_twin" -> { (s, d) =>
-      val docs = t(s, d, "documents").filter(col("doc_id") < 1998)
-      // single-pass fixture assembly, persisted: each batch body reads its
-      // batchDf twice (fingerprints + admit join) — unpersisted, every
-      // read re-synthesizes all payloads (releaseAll reclaims per-query)
-      val items = graft.multimodal.MediaDedup.syntheticJointItems(docs).persist()
-      graft.stream.MediaIngest.jointIngestTwin(s,
-        items.filter(col("item_id") % 2 === 0),
-        items.filter(col("item_id") % 2 === 1),
-        shufflePartitions = Some(8))
-    },
-    // --- REAL baseline JPEG pixel decode [ext]: the web's dominant image
-    // format joins the full-decode family (q217 PNG / q218 WAV / q222
-    // GIF). DC-only fixtures (all AC coefficients zero) decode to the
-    // exact closed-form block constants through REAL Huffman decode +
-    // dequant + IDCT — generated canonical tables, restart markers, and
-    // both the grayscale and 3-component YCbCr paths all on the gate; a
-    // bug anywhere in the entropy walk hash-mismatches. General
-    // coefficients are pinned against JDK ImageIO in JpegSpec
-    // (budget <= 3 s) ---
-    "q252_jpeg_pixel_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.jpegPixelStats(
-        graft.multimodal.Multimodal.syntheticJpegMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- shared-intro (audio boilerplate) detection [ext]: the audio
-    // twin of q249 — a leading span print recurring across >= 50 distinct
-    // clips is template audio (podcast intro, ad sting), invisible to
-    // per-clip stats; one groupBy over offset-0 prints. Fixture stamps a
-    // fixed 570-sample jingle on every third clip over per-clip quadratic
-    // bodies; oracle replays both formulas through the window/contour
-    // arithmetic (budget <= 3 s) ---
-    "q251_audio_boilerplate" -> ((s, d) =>
-      graft.multimodal.MediaDedup.audioBoilerplatePrints(
-        graft.multimodal.MediaDedup.syntheticIntroClips(
-          t(s, d, "documents")), minClips = 50L)),
-    // --- near-dup EXPLANATIONS [ext]: audit-trail evidence — per flagged
-    // pair (the exact q24 chain), the 5 RAREST shared shingles by corpus
-    // document frequency (ties break on the gram string: deterministic).
-    // A pair flagged on high-df boilerplate reads very differently from
-    // one sharing a df-2 verbatim passage; reviews and threshold tuning
-    // need the evidence, not just the verdict (budget <= 3 s) ---
-    "q250_neardup_explanations" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.text.Dedup.explainNearDups(docs,
-        graft.text.Dedup.minhashNearDupsShingle(docs, threshold = 0.8))
-    },
-    // --- image boilerplate / watermark region detection [ext]: the image
-    // twin of the text boilerplate detector — a block mean recurring
-    // VERBATIM across >= 50 distinct images at one grid position is
-    // template chrome, not content (watermarks inflate perceptual
-    // near-dup candidates AND leak template pixels into training data,
-    // and per-image stats cannot see them by construction). One groupBy
-    // over exploded block means; fixture stamps a fixed 4x2 logo on every
-    // third image over per-image quadratic content; oracle replays both
-    // formulas (budget <= 3 s) ---
-    "q249_image_boilerplate" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBoilerplateBlocks(
-        graft.multimodal.MediaDedup.syntheticWatermarkImages(
-          t(s, d, "documents")), minImages = 50L)),
-    // --- THREE-format perceptual dedup [ext]: q224 extended to the full
-    // image-format surface — planted (PNG, GIF, JPEG) TRIPLES of the
-    // same content collide at Hamming 0 through three entirely different
-    // codecs (inflate+unfilter, LZW, Huffman+IDCT); the 8x8 dHash grid
-    // aligns with the JPEG DC-only blocks so the whole fixture replays
-    // arithmetically (budget <= 3 s) ---
-    "q257_triformat_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDups(
-        graft.multimodal.MediaDedup.syntheticTriFormatImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- BMP + uncompressed-TIFF decode [ext]: trivial public byte
-    // layouts (no entropy coding) that real crawls still carry —
-    // bottom-up AND top-down 24-bit BMP, 8-bit palette BMP, 32-bit BMP
-    // whose RESERVED fourth byte is planted junk the decode must drop,
-    // II and MM TIFF, multi-strip gray, RGB, 16-bit-ColorMap palette,
-    // and WhiteIsZero storing the INVERTED value. One displayed-gray
-    // closed form across all eight variants; the census is the
-    // position-sensitive block-means table (a bottom-up flip or strip
-    // mis-stitch permutes rows; sums are permutation-blind). Both
-    // formats join the whole format-blind image surface (dHash dedup,
-    // crop search, gates, descriptors) through the one decodeStillRgba
-    // seam — cross-format PNG==BMP==TIFF collisions are spec-pinned
-    // (budget <= 3 s) ---
-    "q271_raster_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticRasterMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- WebP VP8L lossless decode [ext]: the top real-crawl image
-    // format that was still `unknown_magic` — a from-scratch RFC-9649
-    // VP8L bitstream decoder (canonical prefix codes, LZ77 backward
-    // refs, color cache, meta prefix tiling, and all four transforms:
-    // predictor / cross-color / subtract-green / color-indexing with
-    // sub-byte bundling), routed through the one decodeStillRgba seam so
-    // dHash dedup, crop search, gates, descriptors, and boilerplate see
-    // WebP with ZERO operator changes. Fixtures rotate six encoder paths
-    // (plain / subtract-green / palette / each predictor / cache+LZ77
-    // over row pairs / cross-color inside a VP8X extended container);
-    // VP8L is LOSSLESS so one planted closed form replays exactly; the
-    // census is the position-sensitive block-means table (budget
-    // <= 3 s) ---
-    "q272_webp_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticWebpMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- PNG <-> WebP cross-format perceptual dedup [ext]: planted
-    // pairs of the same displayed content collide at Hamming 0 through
-    // entirely different codecs (inflate+unfilter vs VP8L prefix-code
-    // bitstreams, rotating plain / subtract-green / color-indexed), the
-    // q224/q257 contract extended to the fourth image format family;
-    // the 8x8 constant cells align with the dHash mean grid so the
-    // fixture replays arithmetically (budget <= 3 s) ---
-    "q273_webp_crossformat_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDups(
-        graft.multimodal.MediaDedup.syntheticWebpPairImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- MP4/MP3/Ogg container metadata census [ext]: the crawl-MAJORITY
-    // media containers become MEASURED (codec fourcc, dims, duration,
-    // channels, rate, bitrate from the published ISO-BMFF box / MPEG
-    // frame-header / Ogg page layouts) instead of `unknown_magic` — no
-    // codec decode, so the walk runs at scan speed (partition-local
-    // mapPartitions touching only header bytes; at 100 TB this is what
-    // routes payloads to the right pipeline). Fixtures cycle avc1 MP4 /
-    // two-track hev1+mp4a MP4 / MPEG1+2 Layer-III with earned ID3v2
-    // syncsafe skips / Ogg vorbis / Ogg opus; every field is a closed
-    // form of doc_id (budget <= 3 s) ---
-    "q274_container_meta" -> ((s, d) =>
-      graft.multimodal.Multimodal.containerMediaMeta(
-        graft.multimodal.Multimodal.syntheticContainerMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- ID3v2 text-frame extraction [ext]: the audio-metadata twin of
-    // the container census — curation pipelines filter and label audio
-    // on TIT2/TPE1/TALB; the walk parses BOTH frame-size layouts
-    // (v2.3 plain big-endian, v2.4 syncsafe) and all four declared text
-    // encodings, skips non-text frames by size, stops at legal zero
-    // padding, and fails by name on hostile sizes. One row per frame,
-    // header bytes only — scan speed (budget <= 3 s) ---
-    "q278_id3_text_frames" -> ((s, d) =>
-      graft.multimodal.Multimodal.audioTagMeta(
-        graft.multimodal.Multimodal.syntheticTaggedAudioMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- unified container text tags [ext]: q278's twins for the TWO
-    // majority containers that still returned no curation labels — the
-    // MP4 moov→udta→meta→ilst atom walk (meta is a FULLBOX; ©nam/©ART/
-    // ©alb UTF-8 data atoms) and the Ogg comment header (Vorbis-comment
-    // block behind 0x03"vorbis" / "OpusTags", packets reassembled
-    // ACROSS pages by the RFC 3533 lacing rules), plus ID3v2 under the
-    // same normalized field vocabulary. Fixtures earn mixed-case Vorbis
-    // field names, a >255-byte comment packet spanning two pages, ID3v2
-    // extended headers and unsynchronisation. Header bytes only — scan
-    // speed (budget <= 3 s) ---
-    "q279_container_text_tags" -> ((s, d) =>
-      graft.multimodal.Multimodal.containerTextTags(
-        graft.multimodal.Multimodal.syntheticTaggedContainerMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- LOSSY VP8 WebP decode [ext]: the MAJORITY real-crawl WebP
-    // profile, decoded by a from-scratch RFC 6386 keyframe decoder
-    // (bool arithmetic decoder, all intra modes, token trees, inverse
-    // DCT/WHT, loop filter, fancy chroma upsampling + fixed-point
-    // YUV→RGB — pinned byte-exact against the system libwebp's own
-    // decode in Vp8Spec). Fixtures plant 4x4-px uniform cells whose
-    // coefficients quantize EXACTLY (the in-repo Vp8Enc encoder), so a
-    // LOSSY pipeline replays closed-form: the census is the 8x8
-    // block-mean table of the DISPLAYED grays, whose fixed-point
-    // YUV→RGB map the oracle reproduces in integer arithmetic
-    // (budget <= 3 s) ---
-    "q280_lossy_webp_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticLossyWebpMedia(
-          t(s, d, "documents")), blockPx = 4)),
-    // --- PNG <-> LOSSY-WebP cross-codec perceptual dedup [ext]: planted
-    // pairs of the same displayed content collide at Hamming 0 across a
-    // LOSSLESS and a LOSSY codec — possible because the lossy fixture's
-    // coefficients quantize exactly and the display map is strictly
-    // increasing over the planted value family, so every dHash
-    // comparison bit survives the codec; the oracle replays BOTH
-    // members' fingerprints (the PNG's planted grays, the WebP's
-    // displayed grays through the integer YUV→RGB map) and the full
-    // banded pair set (budget <= 3 s) ---
-    "q281_lossy_crossformat_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDups(
-        graft.multimodal.MediaDedup.syntheticLossyPairImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- WAV fmt-LAYOUT matrix decode [ext]: the two real-crawl fmt
-    // layouts beyond canonical PCM — IEEE float32 (fmt tag 3, what DAWs
-    // export) and WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE with the real tag
-    // in the ksmedia SubFormat GUID, what Windows capture stacks emit)
-    // — plus 32-bit int PCM, previously all named failures. Fixtures
-    // cycle plain-float/extensible-float/extensible-PCM16/plain-int32;
-    // every profile plants the SAME int16 value per sample (floats
-    // store k/32768, exact in float32; int32 stores k·2^16), so ONE
-    // formula oracles the whole matrix through q270's census shape
-    // (budget <= 3 s) ---
-    "q282_wav_fmt_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticWavFmtMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- COMPRESSED TIFF decode [ext]: real scanner/archival TIFFs are
-    // LZW (the TIFF variant with the spec's famous EARLY code-size
-    // change), Deflate, or PackBits compressed, usually with the
-    // horizontal-differencing predictor — all previously named
-    // failures. Each strip decompresses to EXACTLY its geometric size
-    // (hostile expansions fail by name), the predictor accumulates per
-    // sample channel, and the whole matrix is cross-pinned against the
-    // JDK's own ImageIO TIFF plugin in BOTH directions (RasterSpec).
-    // Fixtures rotate codec x predictor x photometric x byte order x
-    // strip layout over q271's closed form, so ONE formula oracles
-    // eight decode paths; census = position-sensitive block means
-    // (budget <= 3 s) ---
-    "q283_tiff_compressed_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticTiffCompressedMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- Sun AU + AIFF decode [ext]: the pre-streaming-era audio
-    // containers old crawls still carry — AU's 24-byte big-endian
-    // header (u-law is its DEFAULT encoding; signed PCM8, unlike WAV's
-    // unsigned; PCM16 BE) and AIFF's IFF chunks (COMM with the sample
-    // rate as a REAL 80-bit IEEE extended float, parsed exactly; SSND
-    // offset preamble; big-endian signed PCM at 8/16 bits), both routed
-    // through the ONE pcm16Samples magic dispatch so every audio
-    // operator inherits them (budget <= 3 s) ---
-    "q291_legacy_audio_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticLegacyAudioMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- BI_RLE4 BMP decode [ext]: the 4-bit sibling of q287 — encoded
-    // runs alternate the run byte's two nibbles, absolute mode packs
-    // nibbles word-aligned, the same four escapes; fixtures alternate
-    // whole-row absolute and two-pixel encoded runs per row so both
-    // modes land in the oracle through a 16-entry x17 gray ramp
-    // (budget <= 3 s) ---
-    "q294_bmp_rle4_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticBmpRle4Media(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- learned-encoder serving lifecycle [ext]: the last §8 slot,
-    // EXECUTED — a seeded integer random projection stands in for the
-    // learned embedding extractor (no model weights exist in this
-    // environment), but the serving architecture around it is the real
-    // one, run end-to-end: train -> persist a VERSIONED lake artifact
-    // (weights + meta) -> driver load + validate -> broadcast the blob ->
-    // per-JVM model BUILD inside mapPartitions (the ONNX/torch session
-    // seam, executed rather than documented) -> batch-encode the q226
-    // classical descriptors. Integer weights x integer descriptor dims
-    // mean every projected coordinate replays ARITHMETICALLY in the
-    // oracle (budget <= 3 s) ---
-    "q295_learned_encoder_serve" -> { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.imageDescriptors(
-        graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents")))
-      val dir = graft.tables.TempLakes.create("graft_encoder_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      graft.multimodal.LearnedEncoder.saveEncoder(lake, "m",
-        graft.multimodal.LearnedEncoder.trainProjection(s, 88, 16, 7L),
-        88, 16, 7L)
-      graft.multimodal.LearnedEncoder.encodeWithModel(
-          graft.multimodal.LearnedEncoder.loadEncoder(lake, "m"), desc)
-        .select(col("vec_id").as("media_id"), posexplode(col("embedding")))
-        .select(col("media_id"), col("pos").cast("int").as("dim"),
-          col("col").cast("long").as("value"))
-    },
-    // --- data-bound parallel-scaling probe [opt r17]: the driver's
-    // 8-vs-32-core rerun read ratio ≈ 1 on EVERY row at sf0.1 because the
-    // whole suite is floor-bound there (fixed per-action cost, not data
-    // work) — so nothing demonstrated that any query parallelizes, which
-    // is the 100 TB claim (VERDICT r16 item 2 asks for exactly this row).
-    // An iterated md5 chain over lineitem: pure data-parallel compute,
-    // work ∝ input rows (sf), partitioning derived from the session width
-    // (one scale-adaptive repartition on the seed — the testdata is a
-    // single small parquet file, i.e. ONE scan split at any core count,
-    // so without the repartition the map would run serially at every
-    // width), a 16-group aggregate, no skew, no driver state. The chain
-    // is exact hex-string md5 iteration — DuckDB replays the identical
-    // values. Depth 64 sizes the row so the low-core rerun is visibly
-    // data-bound at sf0.1 (measured 8→32 cores below). The explicit
-    // binary casts keep the analyzer to one resolution pass (implicit
-    // casts resolve one md5 level per iteration and trip the cap).
-    "q296_scaling_probe" -> { (s, d) =>
-      val li = t(s, d, "lineitem")
-        .select(concat_ws("_", col("l_orderkey"), col("l_linenumber")).as("s0"))
-        // 4 chains per row (sized so the row stays ABOVE the bench's
-        // top-20 stdout cutoff at the main core count — the driver's
-        // scaling block only reads rows present in both runs' stdout maps)
-        .select(col("s0"), explode(sequence(lit(0), lit(3))).as("rep"))
-        .select(concat_ws("_", col("s0"), col("rep")).as("seed"))
-        // explicit width: a bare repartition(col) is AQE-coalescible and
-        // collapses to ~1 partition at small SF (the whole map then runs
-        // serially); the explicit count pins the stage to the session's
-        // core count, which is the scale-adaptive intent
-        .repartition(s.sparkContext.defaultParallelism, col("seed"))
-      val h = (1 to 64).foldLeft(col("seed")) { (c, _) => md5(c.cast("binary")) }
-      li.select(h.as("h"))
-        .groupBy(substring(col("h"), 1, 1).as("nibble"))
-        .agg(count(lit(1)).as("n"),
-          sum(conv(substring(col("h"), 2, 7), 16, 10).cast("long")).as("checksum"))
-    },
-    // --- MS ADPCM WAV decode [ext]: the OTHER legacy WAV block codec
-    // (fmt tag 2) — per-channel block headers (coefficient-pair index,
-    // iDelta, the two seed samples played oldest-first), the file's own
-    // declared coefficient table, nibbles HIGH-first with channels
-    // alternating per nibble, the published adaptation table with the
-    // delta floor at 16. Fixtures plant pair 0 (256, 0) with equal seed
-    // samples and zero nibbles so each block decodes to its planted
-    // constant; the full prediction/adaptation math is hand-vector-
-    // pinned in spec (budget <= 3 s) ---
-    "q293_wav_msadpcm_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticWavMsAdpcmMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- AVI SOUNDTRACK extraction + WAV cross-container dedup [ext]:
-    // real crawl AVIs carry an 'auds' stream the video surface ignores
-    // and the audio surface previously couldn't reach — decodeAviAudio
-    // walks the same shallow RIFF tree, reads the auds WAVEFORMATEX
-    // (PCM only, by name), collects that stream's 'NNwb' chunks by its
-    // strl POSITION, and the one pcm16Samples dispatch routes AVIs on
-    // the audio surface through it — so a WAV re-encode of an AVI's
-    // soundtrack collides contour-for-contour with the video payload
-    // invisible. The video walk is now stream-aware (an auds strf no
-    // longer trips the BITMAPINFOHEADER validation) (budget <= 3 s) ---
-    "q292_avi_soundtrack_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.audioNearDups(
-        graft.multimodal.MediaDedup.syntheticAviSoundtrackPairs(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- IMA ADPCM WAV decode [ext]: the 4-bit block-structured codec
-    // of telephony and game audio (fmt tag 0x11) — per-block headers
-    // (predictor sample, step index) then nibble groups round-robin per
-    // channel, the published step/index tables, both clamps. Fixtures
-    // plant the block predictor with zero nibbles at index 0 (step 7 →
-    // diff 0), so each block decodes to its planted constant and the
-    // oracle replays the census without recursing the step table; the
-    // full nibble math is hand-vector-pinned in spec (budget <= 3 s) ---
-    "q290_wav_adpcm_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticWavAdpcmMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- WIDE-sampling JPEG decode [ext]: sampling factors 3 and 4 —
-    // DV-lineage 4:1:1, 3:1:1, their vertical transposes, and the
-    // T.81 10-blocks-per-MCU boundary case 4x2 — were a named census
-    // bucket; the MCU walk and the sample-replication assembler were
-    // already factor-generic, so the close is the spec bound itself
-    // (sum of Hi·Vi <= 10, B.2.2) plus fixtures that earn each layout
-    // through wide MCUs with restart markers. Quadrant census over
-    // DC-only closed-form blocks; dims exact MCU multiples per variant
-    // (budget <= 3 s) ---
-    "q289_jpeg_sampling_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.jpegQuadrantStats(
-        graft.multimodal.Multimodal.syntheticJpegSampledMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- BI_RLE8 BMP decode [ext]: the icon/screenshot era's dominant
-    // compressed BMP — run-length pairs with the four escapes (EOL,
-    // EOB, delta with skipped-pixels-stay-index-0, absolute mode with
-    // word alignment), bottom-up only per spec; fixtures alternate
-    // run-friendly content (encoded-run mode) with the q271 quadratic
-    // (absolute mode) so both paths land in the oracle; every cursor
-    // move bounds-checked by name (budget <= 3 s) ---
-    "q287_bmp_rle_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticBmpRleMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- 16-bit + TILED TIFF decode [ext]: scanner masters carry
-    // 16-bit samples (reduced to the planted HIGH byte over low-byte
-    // noise — II stores it SECOND, MM first, so a byte-order bug reads
-    // noise) and large-image TIFFs are TILED (tags 322-325, full-size
-    // edge tiles whose zero padding the clip must drop) — one unified
-    // segment walk decompresses strips and tiles through the same four
-    // codecs (budget <= 3 s) ---
-    "q288_tiff_deep_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticTiffDeepMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- G.711 u-law/A-law WAV decode [ext]: the telephony/VoIP codecs
-    // (fmt tags 7 and 6) — 8-bit companded bytes expanding through the
-    // published segment/mantissa closed forms (u-law: invert, mantissa
-    // <<3 + 132, shift by segment, re-bias; A-law: XOR 0x55, segment 0
-    // special case, MSB-set-positive — the INVERSE of u-law's sign).
-    // Every code point 0..255 is exercised; the oracle replays both
-    // expansions in integer SQL through q270's census shape
-    // (budget <= 3 s) ---
-    "q286_wav_g711_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticWavG711Media(
-          t(s, d, "documents"))).toDF()),
-    // --- COMPOSITED APNG decode [ext]: the FOURTH animation container
-    // (the PNG animation extension, now part of the W3C PNG spec) —
-    // fcTL/fdAT frames are full PNG streams placed at offsets, blended
-    // OVER (integer alpha compositing; alpha-0 pixels punch through) or
-    // REPLACING, with dispose none/background(-to-transparent)/previous
-    // — each frame decodes through the UNCHANGED still-PNG decoder via
-    // a synthesized per-frame stream, then routes through decodeVideoRgb
-    // so the whole frame-level video surface consumes real-crawl APNG
-    // with zero operator changes. Census = per-frame quadrant sums
-    // (position-sensitive); fixture = full base (dispose alternating by
-    // parity), transparent-pierced OVER rect with dispose-previous,
-    // opaque SOURCE rect; all alphas 0/255 so the algebra replays
-    // pixel-by-pixel (budget <= 3 s) ---
-    "q284_apng_composited_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.videoFrameQuadrants(
-        graft.multimodal.Multimodal.syntheticApngMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- GIF <-> APNG cross-container video dedup [ext]: the q276
-    // contract extended to the fourth animation container — planted
-    // pairs share no container bytes (LZW code streams vs zlib scanline
-    // streams behind fcTL/fdAT) but composite to identical RGB, so
-    // shared-frame dedup flags every pair at match_frac 1; the video
-    // surface is now blind across AVI-DIB / MJPEG / GIF / animated WebP
-    // / APNG (budget <= 3 s) ---
-    "q285_gif_apng_video_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoNearDups(
-        graft.multimodal.MediaDedup.syntheticGifApngPairVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- COMPOSITED animated-WebP decode [ext]: the q267 canvas story in
-    // WebP's vocabulary — ANMF frames are VP8L-coded rects placed at
-    // offsets, BLENDED (alpha-blend; alpha-0 pixels punch through to the
-    // canvas) or REPLACING (no-blend over the ANIM background), with a
-    // dispose bit restoring the rect to background after presentation —
-    // routed through decodeVideoRgb so the whole frame-level video
-    // surface (dedup, containment, shots, quality) consumes real-crawl
-    // animated WebP with zero operator changes. Census = per-frame
-    // quadrant sums (position-sensitive); fixture alternates the base
-    // frame's dispose bit by parity; all alphas 0/255 so the blend
-    // formula is exact and the canvas algebra replays pixel-by-pixel
-    // (budget <= 3 s) ---
-    "q275_webp_anim_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.videoFrameQuadrants(
-        graft.multimodal.Multimodal.syntheticAnimatedWebpMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- GIF <-> animated-WebP cross-container video dedup [ext]: the
-    // q248 contract extended to the THIRD animation container — planted
-    // pairs share no container bytes (LZW palette streams vs VP8L
-    // prefix-code bitstreams inside ANMF chunks) but composite to
-    // identical RGB, so shared-frame dedup flags every pair at
-    // match_frac 1; with q248 and q262 the video surface is now blind
-    // across AVI-DIB / MJPEG / GIF / animated WebP (budget <= 3 s) ---
-    "q276_gif_webp_video_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoNearDups(
-        graft.multimodal.MediaDedup.syntheticGifWebpPairVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- EXIF-oriented WebP crop search [ext]: the q263 story for the
-    // WebP container — camera-pipeline WebPs carry tag 274 in an EXIF
-    // chunk, and a crop is taken from the DISPLAYED form; the still
-    // dispatch now decodes WebP as displayed (identity when untagged —
-    // every existing WebP row byte-identical), so crop search,
-    // boilerplate, and block means meet camera WebPs on the viewer's
-    // grid. Fixtures plant displayed content back through the INVERSE
-    // transform across all 8 orientations (distinct coefficient family
-    // from q263); the oracle replays DISPLAYED coordinates only —
-    // reachable solely by applying the chunk's tag (budget <= 3 s) ---
-    "q277_webp_oriented_crops" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.multimodal.MediaDedup.imageCropMatches(
-        graft.multimodal.MediaDedup.syntheticOrientedWebpCrops(docs),
-        graft.multimodal.MediaDedup.syntheticOrientedWebpImages(docs),
-        blockPx = 2)
-    },
-    // --- WAV PCM-depth matrix [ext]: 8-bit unsigned (old clips) and
-    // 24-bit signed (production audio) PCM previously failed fast; both
-    // now normalize to int16 by DOCUMENTED deterministic conversions
-    // ((u-128)*256; top-16-bits arithmetic shift), so the whole audio
-    // surface — contour dedup, quality, containment, descriptors — is
-    // depth-blind. The 24-bit fixture plants low-byte noise the
-    // conversion must drop; lossless replay through one formula
-    // (budget <= 3 s) ---
-    "q270_wav_depth_census" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticWavDepthMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- PNG bit-DEPTH matrix decode [ext]: 1/2/4-bit palette and gray
-    // PNGs (icons/logos) pack samples MSB-first into scanline bytes
-    // (filter bpp = 1 per spec) with gray scaled by 255/(2^d - 1), and
-    // 16-bit photo masters reduce to their high byte (the
-    // spec-sanctioned 8-bit view; filter bpp = 2·channels) over planted
-    // low-byte noise the reduction must drop — all previously failed
-    // fast. Fixtures rotate depth x type x interlace x filter; one
-    // closed form; position-sensitive block means (a bit-unpacking or
-    // pass-scatter bug permutes pixels) (budget <= 3 s) ---
-    "q269_png_depth_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticPngDepthMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- PNG COLOR-TYPE matrix + ADAM7 decode [ext]: real-crawl PNGs
-    // are mostly RGB (type 2) and palette (type 3), and some are
-    // Adam7-interlaced — all previously failed fast into header-only
-    // (the decoder was 8-bit RGBA-only). Now all five 8-bit color types
-    // decode, per-pass-filtered Adam7 de-interlaces, palette PNGs apply
-    // PLTE (+ optional tRNS alpha). Census = the position-sensitive
-    // block-means table: a mis-scattered Adam7 pass permutes pixels and
-    // hash-mismatches where sums are permutation-blind. PNG is LOSSLESS,
-    // so every type replays one closed form exactly; ImageIO agreement
-    // across the matrix is spec-pinned (budget <= 3 s) ---
-    "q268_png_variant_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticPngVariantMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- COMPOSITED animated GIF decode [ext]: real-crawl animations
-    // are PARTIAL-frame updates presented onto a persistent canvas with
-    // per-frame disposal methods (keep / restore-to-background /
-    // restore-to-previous) and transparency punching through to what is
-    // already there — the last named GIF scope gap. The fixture plants a
-    // full base, a transparent-pierced centered rect, and an overlapping
-    // opaque rect, with the base's disposal alternating by parity; the
-    // census is PER-FRAME QUADRANT sums (position-sensitive — a rect
-    // placed wrong or a skipped disposal moves pixels between
-    // quadrants). Oracle replays the canvas algebra pixel-by-pixel
-    // (budget <= 3 s) ---
-    "q267_gif_composited_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.videoFrameQuadrants(
-        graft.multimodal.Multimodal.syntheticCompositedGifMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- PROGRESSIVE (SOF2) JPEG decode [ext]: the second-most-common
-    // web JPEG layout — coefficients accumulate across SEVERAL scans
-    // (DC first/refinement, AC spectral bands with End-Of-Band runs,
-    // successive-approximation refinements; DQT/DHT/DRI legal between
-    // scans) with ONE dequant + IDCT at the end. Fixtures come from the
-    // real spectral-selection encoder (multi-scan structure earned: a
-    // DC scan plus per-component AC band scans); DC-only keeps the
-    // closed form, and the census is quadrant sums (position-
-    // sensitive). SA refinement paths pin against ImageIO-WRITTEN
-    // progressive files in JpegSpec; general-coefficient progressive
-    // must equal its baseline twin EXACTLY (same coefficients, same
-    // IDCT — no tolerance) (budget <= 3 s) ---
-    "q266_progressive_jpeg_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.jpegQuadrantStats(
-        graft.multimodal.Multimodal.syntheticProgressiveJpegMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- corpus format-coverage HEALTH census [ext]: every decoder here
-    // fails by NAME, and this row turns that contract into telemetry —
-    // attempt the full decode per item, count (format, outcome, cause)
-    // buckets — so each remaining scope restriction (arithmetic-coded
-    // JPEG, sampling factors beyond 4, 12-bit JPEG, >8-channel audio,
-    // non-MJPG AVI codecs, truncation, hostile magic) is MEASURED on a
-    // corpus instead of silently reverting items to header-only. Each
-    // attempt is the decoder the OPERATOR SURFACE consumes: GIF takes
-    // the COMPOSITED animation decode, so the partial-frame case (10)
-    // lands `decoded` — the census measures real blind spots, not the
-    // stricter opt-in index-census contract. Fixture cycles thirty
-    // real encoder outputs, nineteen decodable (incl. 4:2:0 / interlaced
-    // GIF / stereo FLAC / MJPEG / partial-frame animation / VP8L WebP /
-    // composited ANIMATED WebP / LOSSY VP8 WebP through the RFC 6386
-    // keyframe decoder / ALPH-wrapped lossy with the alpha plane cycled
-    // across raw/compressed x filters / float32 + G.711 + IMA-ADPCM +
-    // MS-ADPCM WAV / Sun AU / AIFF / LZW+predictor TIFF / composited
-    // APNG / BI_RLE8 BMP) and eleven
-    // patched into named failures (the metadata-only MP4 / MP3 / Ogg
-    // containers, whose REAL walks report the codec as evidence,
-    // HEIC/AVIF stills surfaced as IMAGE buckets by ftyp brand, and
-    // JPEG-in-TIFF); the aggregate is |formats x causes|-bounded, never
-    // corpus-shaped (budget <= 3 s) ---
-    "q265_decode_health" -> ((s, d) =>
-      graft.multimodal.Multimodal.mediaDecodeHealth(
-        graft.multimodal.Multimodal.syntheticHealthMedia(
-          t(s, d, "documents")))),
-    // --- INTERLACED + LOCAL-COLOR-TABLE GIF decode [ext]: both layouts
-    // appear in real crawls and previously failed fast; the LZW core is
-    // unchanged — interlace is a four-pass row permutation undone after
-    // expansion, and a frame's local table (with or without any global
-    // one) becomes its effective palette. The census is the exploded
-    // BLOCK-MEANS table (position-sensitive: a de-interlace bug permutes
-    // rows and hash-mismatches, where whole-image sums are permutation-
-    // blind — the q260 lesson applied to GIF); fixtures cycle plain /
-    // interlaced / local / both, ImageIO agreement spec-pinned
-    // (budget <= 3 s) ---
-    "q264_gif_variant_blockmeans" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBlockMeans(
-        graft.multimodal.Multimodal.syntheticGifVariantMedia(
-          t(s, d, "documents")), blockPx = 2)),
-    // --- EXIF-ORIENTED crop search [ext]: a camera JPEG stores its
-    // pixels rotated with tag 274 saying how to display them, and a crop
-    // is taken from the DISPLAYED form (a screenshot of the photo) — so
-    // position-sensitive operators that hash stored pixels structurally
-    // miss the pair. The shared pixel walk now applies orientation
-    // (identity for untagged payloads — every existing image row is
-    // byte-identical), and this row plants rotated-source JPEGs across
-    // all 8 orientations whose displayed-form crops must hit at
-    // Hamming 0; the oracle replays the DISPLAYED grid directly, which
-    // the engine can only reach by applying the tag (budget <= 3 s) ---
-    "q263_oriented_crop_matches" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      graft.multimodal.MediaDedup.imageCropMatches(
-        graft.multimodal.MediaDedup.syntheticOrientedCrops(docs),
-        graft.multimodal.MediaDedup.syntheticOrientedCropImages(docs),
-        blockPx = 8)
-    },
-    // --- MJPEG (compressed) video decode [ext]: AVI's dominant codec —
-    // one baseline JPEG per '00dc' chunk — joins the format-blind video
-    // surface by COMPOSING the q252 JPEG decoder into the container
-    // walk, so shared-frame dedup, containment, quality, and shot
-    // detection all see compressed video. Fixture pairs an uncompressed
-    // DIB AVI with an MJPEG re-encode of the SAME DC-only content
-    // (lossless by the closed form): the pair must collide
-    // frame-for-frame at match_frac 1, earned through real per-frame
-    // Huffman + IDCT inside the movi walk (budget <= 3 s) ---
-    "q262_mjpeg_video_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoNearDups(
-        graft.multimodal.MediaDedup.syntheticMjpegPairVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- STEREO + LPC FLAC decode [ext]: the profile real-world FLAC
-    // actually ships — all three stereo channel assignments (mid/side,
-    // left/side, independent; the side subframe carries its spec'd 17th
-    // bit) and GENERAL LPC subframes (quantized integer coefficients,
-    // arithmetic-shift prediction) on every 4th doc, CONSTANT stereo
-    // clips on every 7th. Lossless, so the planted interleaved L/R
-    // formulas replay arithmetically no matter which decorrelation
-    // carried the bits; census through the SAME format-blind sample path
-    // WAV and mono FLAC use (budget <= 3 s) ---
-    "q261_flac_stereo_lpc" -> ((s, d) =>
-      graft.multimodal.Multimodal.wavSampleStats(
-        graft.multimodal.Multimodal.syntheticFlacStereoMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- CHROMA-SUBSAMPLED (4:2:0) baseline JPEG decode [ext]: real
-    // web-crawl JPEGs are overwhelmingly 4:2:0 and previously failed
-    // fast into header-only; the MCU walk now interleaves 2x2 luma
-    // blocks + one block per chroma plane (T.81 A.2.3) and upsamples by
-    // sample replication. DC-only fixtures (chroma planted at 128 —
-    // exact under ANY upsampler) decode to closed-form block constants,
-    // and the census is QUADRANT sums — position-sensitive, so a block
-    // landing at the wrong plane position hash-mismatches, which the
-    // q252 channel sums structurally cannot see. General coefficients +
-    // nonzero chroma are pinned against JDK ImageIO in JpegSpec
-    // (budget <= 3 s) ---
-    "q260_jpeg420_decode" -> ((s, d) =>
-      graft.multimodal.Multimodal.jpegQuadrantStats(
-        graft.multimodal.Multimodal.syntheticJpeg420Media(
-          t(s, d, "documents"))).toDF()),
-    // --- EXIF orientation: parse + APPLY [ext]: camera JPEGs store
-    // pixels rotated with a tag 274 saying how to display them; the
-    // engine walks the real APP1/TIFF structure (both byte orders),
-    // applies the published source-coordinate table to the decoded
-    // pixels, and reports DISPLAYED-quadrant gray sums — quadrants (not
-    // plain channel sums, which are transform-invariant) make a broken
-    // orientation path hash-mismatch. Fixtures carry real Exif segments
-    // over 64x48 DC-only grids covering all 8 orientations incl. the
-    // four dimension-swapping ones (budget <= 3 s) ---
-    "q259_exif_oriented_quadrants" -> ((s, d) =>
-      graft.multimodal.Multimodal.jpegOrientedQuadrants(
-        graft.multimodal.Multimodal.syntheticExifJpegMedia(
-          t(s, d, "documents"))).toDF()),
-    // --- ORIENTATION-invariant perceptual dedup [ext]: an EXIF-rotated,
-    // flipped, or mirrored re-post — constant in real crawls, invisible
-    // to the plain dHash — maps its mean grid to another element of the
-    // same dihedral orbit, so hashing the MINIMUM over all 8 transforms
-    // (still one 64-bit fingerprint, same banding) makes the copy collide
-    // at Hamming 0. Planted pairs cover every non-identity orientation;
-    // exact for multiple-of-8 dims (uniform blocks commute with the
-    // transforms — documented bound) (budget <= 3 s) ---
-    "q258_orientation_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageNearDupsOrientationInvariant(
-        graft.multimodal.MediaDedup.syntheticRotatedImages(
-          t(s, d, "documents")), maxHamming = 3, bands = 4)
-        .select(col("media_a"), col("media_b"),
-          col("hamming").cast("int").as("hamming"))),
-    // --- TOLERANT image boilerplate [ext]: a real alpha-blended
-    // watermark shifts each stamped image's block means by a few units
-    // with the underlying content, so the q249 VERBATIM census
-    // structurally misses it; quantizing means to floor(mean/4) buckets
-    // before the census concentrates every blended stamp in one bucket
-    // per position. Fixture plants the bleed explicitly; the oracle
-    // replays blend + quantization arithmetically; MediaDedupSpec pins
-    // that verbatim misses what this catches (budget <= 3 s) ---
-    "q256_image_boilerplate_tolerant" -> ((s, d) =>
-      graft.multimodal.MediaDedup.imageBoilerplateBlocks(
-        graft.multimodal.MediaDedup.syntheticBlendedWatermarkImages(
-          t(s, d, "documents")), minImages = 50L, quant = 4)),
-    // --- CROSS-CONTAINER video dedup [ext]: real ANIMATED GIF decode
-    // (per-frame LZW streams under the restricted full-frame/global-
-    // palette profile; partial-frame compositing fails fast by design)
-    // makes the whole frame-level video surface FORMAT-BLIND — an AVI and
-    // an animated-GIF re-encode of the same frames share no container
-    // bytes but decode to identical RGB, so shared-frame containment
-    // flags every planted pair at match_frac 1 (the video-level q224).
-    // Oracle replays ONE frame-hash formula for both members and
-    // brute-forces pairs + containment (budget <= 3 s) ---
-    "q248_crosscontainer_video_neardups" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoNearDups(
-        graft.multimodal.MediaDedup.syntheticCrossContainerVideos(
-          t(s, d, "documents")), everyN = 2, maxHamming = 3, bands = 4,
-        minSharedFrac = 0.5)),
-    // --- MULTIMODAL curation artifact [ext]: the capstone composition —
-    // an item survives iff it is the min-id canonical of the JOINT
-    // text ∪ image ∪ audio near-dup graph (q238) AND passes the text
-    // gate (n_chars >= 100) AND the image exposure gate (<= 1/16 dark
-    // pixels, q242 arithmetic on the cross-format images). Survivors land
-    // through a CHECK-constrained governed write (both gates observed in
-    // the write pass) and read back. Every stage individually
-    // oracle-checked (q238, q242, q161); this row proves the joint chain
-    // (budget <= 5 s — it contains the full q238 closure) ---
-    "q247_multimodal_curation_artifact" -> { (s, d) =>
-      val docs = t(s, d, "documents").filter(col("doc_id") < 1998).persist()
-      val images = graft.multimodal.MediaDedup
-        .syntheticCrossFormatImages(docs).persist()
-      val canon = graft.multimodal.MediaDedup.multimodalClusters(docs,
-          images, graft.multimodal.MediaDedup.syntheticNearDupAudio(docs))
-        .filter(col("item_id") === col("cluster_id")).select("item_id")
-      val survivors = docs.select(col("doc_id").as("item_id"), col("n_chars"))
-        .join(canon, Seq("item_id"))
-        .join(graft.multimodal.MediaDedup.imageQualityStats(images)
-          .withColumnRenamed("media_id", "item_id"), Seq("item_id"))
-        .filter(col("n_chars") >= 100 && col("n_dark") * 16 <= col("n_px"))
-        .select("item_id", "n_chars", "n_px", "n_dark")
-      val lake = new graft.tables.LakeTable(s,
-        graft.tables.TempLakes.create("graft_mm_curation_lake"))
-      lake.write(survivors, "curated_items", constraints = Seq(
-        ("text_len", "n_chars >= 100"),
-        ("dark_frac_bound", "n_dark * 16 <= n_px")))
-      lake.read("curated_items")
-        .select(col("item_id"), col("n_chars"), col("n_px"), col("n_dark"))
-    },
-    // --- video quality gates [ext]: black-frame and flat-frame
-    // detection over DECODED frames — exact integers (gray sum < 16*px
-    // = black; zero variance numerator = flat; a textured near-black
-    // frame counts black but NOT flat, planted as such). Oracle replays
-    // the per-frame per-pixel formula arithmetically (budget <= 3 s) ---
-    "q245_video_quality" -> ((s, d) =>
-      graft.multimodal.MediaDedup.videoQualityStats(
-        graft.multimodal.MediaDedup.syntheticQualityVideos(
-          t(s, d, "documents")))),
-    // --- audio quality gates [ext]: clipping (full-scale samples),
-    // planted-silence windows (zero-energy absolute windows, trailing
-    // partial dropped), exact abs-sum and peak. The planted clipped
-    // sample inside a silent window keeps that window non-silent on both
-    // engines — the interaction is contract, not noise (budget <= 3 s) ---
-    "q246_audio_quality" -> ((s, d) =>
-      graft.multimodal.MediaDedup.audioQualityStats(
-        graft.multimodal.MediaDedup.syntheticQualityClips(
-          t(s, d, "documents")))),
-    // --- streaming AUDIO ingest with contour dedup [ext]: completes the
-    // streaming matrix (text q196, image q229, video q236, audio q244) —
-    // the whole-clip energy-contour fingerprint rides the SAME generalized
-    // batch body as the image ingest (in-batch Hamming components, min-id
-    // keep, banded cross-check against the committed lake), so a
-    // volume-scaled copy of a committed clip arriving in a later batch is
-    // rejected and replays are idempotent. Oracle = the q229 recursive
-    // template over the q220 afp replay (budget <= 3 s) ---
-    "q244_audio_ingest_twin" -> { (s, d) =>
-      val media = graft.multimodal.MediaDedup.syntheticNearDupAudio(
-        t(s, d, "documents")).toDF().persist()
-      graft.stream.MediaIngest.audioIngestTwin(s,
-        media.filter(col("media_id") % 2 === 0),
-        media.filter(col("media_id") % 2 === 1),
-        shufflePartitions = Some(8))
-    },
-    // --- media curation artifact [ext]: the media twin of q223's
-    // composition endgame — perceptual dedup (cross-format clusters,
-    // min-id canonical keep) -> exposure quality gate (<= 1/16 dark
-    // pixels, exact integer arithmetic) -> CHECK-constrained governed
-    // lake write (the gate AND a not-flat constraint observed in the
-    // write pass) -> read-back. Every stage is individually
-    // oracle-checked (q225, q242, q161); this row proves the chain.
-    // Fixture persists (every stage re-reads payloads) ---
-    "q243_media_curation_artifact" -> { (s, d) =>
-      val media = graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-        t(s, d, "documents")).persist()
-      val canon = graft.multimodal.MediaDedup.imageClusters(media)
-        .filter(col("media_id") === col("cluster_id")).select("media_id")
-      val survivors = graft.multimodal.MediaDedup.imageQualityStats(media)
-        .join(canon, Seq("media_id"))
-        .filter(col("n_dark") * 16 <= col("n_px"))
-      val lake = new graft.tables.LakeTable(s,
-        graft.tables.TempLakes.create("graft_media_curation_lake"))
-      lake.write(survivors, "curated_media", constraints = Seq(
-        ("dark_frac_bound", "n_dark * 16 <= n_px"),
-        ("not_flat", "var_num > 0")))
-      lake.read("curated_media").select(col("media_id"), col("n_px"),
-        col("sum_gray"), col("var_num"), col("n_dark"), col("n_bright"))
-    },
-    // --- split leakage audit [ext]: independent verification of q199's
-    // leakage-free claim — near-dup pairs RECOMPUTED from scratch (q24
-    // chain) and counted across split boundaries (zero is the theorem),
-    // plus the worst remaining cross-boundary rare-gram Jaccard (the
-    // near-leak spectrum below the dedup threshold). ODD half-slice
-    // (q199's): the audit contract is corpus-size-independent, q199/q24
-    // carry the closure/pair timings (in-suite budget <= 3 s) ---
-    "q216_split_leakage_audit" -> ((s, d) =>
-      graft.text.Dedup.splitLeakageAudit(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 1))),
-    // --- budgeted quality selection [ext]: the curation endgame — q202's
-    // waterfilled per-source token budget filled BEST FIRST under q203's
-    // deterministic quality key (instead of q210's seeded-random order);
-    // a doc is selected iff its preceding cumulative tokens sit below the
-    // source's allocation. Budget 26000 at sf0.01 makes the cut bind for
-    // the larger sources while the smaller ones keep everything (both
-    // branches fire). In-suite budget: one tokenize pass + |sources|-grain
-    // windows, <= 3 s ---
-    "q215_budgeted_quality" -> ((s, d) =>
-      TextFeatures.budgetedQualitySelection(t(s, d, "documents"),
-        budgetTokens = 26000L)),
-    // --- classifier serving lifecycle [ext]: train the NB filter on the
-    // en-vs-pool labels, SAVE it to a lake (weights/meta tables), LOAD it
-    // back, score the whole corpus against the loaded model — must
-    // hash-equal q212's in-line training (one shared oracle SQL; the
-    // q209 serve-roundtrip discipline applied to the classifier).
-    // In-suite budget: q212's weight + two tiny lake tables, <= 3 s ---
-    "q214_nb_serve" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      val m = graft.text.QualityClassifier.trainQualityClassifier(docs,
-        col("lang") === "en", col("lang") =!= "en")
-      val dir = graft.tables.TempLakes.create("graft_nb_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      graft.text.QualityClassifier.saveClassifier(lake, "m", m)
-      graft.text.QualityClassifier.scoreWithClassifier(
-        graft.text.QualityClassifier.loadClassifier(lake, "m"), docs)
-    },
-    // --- kNN-graph clustering [ext]: q194's edge chain at a cosine floor,
-    // closed into connected components (min-id labels) — the connectivity
-    // SemDeDup variant; singletons cluster as themselves so the output
-    // partitions the corpus. EVEN half-slice of the vectors: the
-    // edges -> components contract is corpus-size-independent and q194
-    // carries the full-corpus kNN timing (in-suite budget <= 3 s) ---
-    "q213_knn_cluster" -> ((s, d) =>
-      Similarity.knnCluster(
-        t(s, d, "embeddings").filter(col("vec_id") % 2 === 0),
-        k = 2, minCosine = 0.2, nLists = 8, nProbe = 2, iters = 0,
-        portableInit = true)),
-    "q211_version_drift" -> { (s, d) =>
-      val docs = t(s, d, "documents").select("doc_id", "text").persist()
-      val dir = graft.tables.TempLakes.create("graft_drift_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      lake.write(docs.filter(col("doc_id") % 2 === 0), "docs", "overwrite"): Unit
-      lake.write(docs.filter(col("doc_id") % 2 === 1), "docs", "append"): Unit
-      graft.tables.Materialize.versionDrift(lake, "docs", 0L, 1L)
-    },
-    // --- budgeted sample plan [ext]: q202's waterfilled allocation
-    // materialized into the per-document training plan — whole epochs by
-    // integer division, the fractional epoch filled in seeded md5 order
-    // until its token budget is covered; at sf0.01 both the capped
-    // (whole-epochs-only) and waterfilled (partial-epoch) branches fire ---
-    "q210_budgeted_sample" -> ((s, d) =>
-      TextFeatures.budgetedSamplePlan(t(s, d, "documents"),
-        budgetTokens = 49000L, maxEpochs = 2.0)),
-    // --- LM serving lifecycle, oracle-checked [ext]: train the bigram LM
-    // on the en slice, SAVE it to a lake (bigram/unigram/meta tables),
-    // LOAD it back, score the non-en pool against the loaded model — the
-    // q184 serve-roundtrip discipline applied to the LM; the result must
-    // hash-equal q200's in-line training (one shared oracle SQL) ---
-    "q209_lm_serve" -> { (s, d) =>
-      val docs = t(s, d, "documents")
-      val m = graft.text.LangModel.trainLm(docs, col("lang") === "en")
-      val dir = graft.tables.TempLakes.create("graft_lm_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      graft.text.LangModel.saveLm(lake, "m", m)
-      graft.text.LangModel.scoreWithLm(
-        graft.text.LangModel.loadLm(lake, "m"),
-        docs.filter(col("lang") =!= "en"))
-    },
-    // --- refinery with the CCNet LM stage [ext]: gate -> perplexity-tail
-    // drop (en-trained Stupid-Backoff LM, q200/q201's machinery) -> exact
-    // + shingle-verified near-dup -> cap -> chunk; the full composition a
-    // CCNet-style pipeline actually runs. EVEN half-slice (q186's
-    // pattern — q169 carries full-corpus E2E timing) ---
-    "q208_refinery_lm" -> ((s, d) =>
-      graft.text.Refinery.refine(
-        t(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        graft.text.Refinery.Config(shingleVerify = true,
-          lmFilter = Some(graft.text.Refinery.LmFilter("lang = 'en'",
-            tailPermille = 300))))),
-    "q189_novelty_view" -> { (s, d) =>
-      // shared-subtree persist (Caching contract): the slice feeds two base
-      // writes, the rebuild aggregation, and the final join-back — four
-      // scans of the same projection without it
-      val docs = t(s, d, "documents").filter(col("doc_id") % 2 === 0)
-        .select("doc_id", "text").persist()
-      val dir = graft.tables.TempLakes.create("graft_novelty_view_lake")
-      val lake = new graft.tables.LakeTable(s, dir)
-      lake.write(docs.filter(col("doc_id") % 3 =!= 0), "docs", "overwrite"): Unit
-      graft.tables.Materialize.refreshNovelty(lake, "docs", "docs_novelty"): Unit
-      lake.write(docs.filter(col("doc_id") % 3 === 0), "docs", "append"): Unit
-      graft.tables.Materialize.refreshNovelty(lake, "docs", "docs_novelty"): Unit
-      graft.tables.Materialize.noveltyFromView(lake, "docs_novelty", docs)
-    })
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryRegistry.all.specs.map(q => q.name -> q.run).toMap
 
-  // DuckDB spellings of the text-pipeline primitives (kept in lockstep with
-  // TextStats.normalize/tokens — DuckDB regexp_replace needs the 'g' flag).
-  private val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
-  // string_split('') yields [''] in DuckDB where Spark's tokens() yields []
-  // — guard the empty/whitespace case so both engines agree on zero-token
-  // documents (the current corpus has none; this pins the contract anyway)
-  private val toksSql =
-    s"CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) ELSE string_split($normSql, ' ') END"
-
-  /** DuckDB CTE fragment spelling [[graft.text.Dedup.shingleSets]] over a
-    * (doc_id, text) source, exploded to (doc_id, shingle) rows plus per-doc
-    * set sizes — the building block of the brute-force shingle-Jaccard
-    * oracles (q24/q43/q44). The exploded equi-join form scores only pairs
-    * that SHARE a shingle (pairs sharing none have Jaccard 0 and can never
-    * pass a positive threshold). */
-  private def shingleCtes(src: String): String =
-    s"t AS (SELECT doc_id, $toksSql AS toks FROM $src), " +
-      "sgl AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')] " +
-      "ELSE list_transform(range(len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' ')) END AS sh FROM t), " +
-      "e AS (SELECT DISTINCT doc_id, unnest(sh) AS g FROM sgl), " +
-      "sz AS (SELECT doc_id, count(*) AS n FROM e GROUP BY 1)"
-
-  /** Undirected brute-force shingle-Jaccard pair CTEs (doc_a < doc_b) on top
-    * of [[shingleCtes]]: `pair` (shared-shingle counts) and `sc` (i, u). */
-  private val shinglePairCtes: String =
-    "pair AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS DOUBLE) AS i " +
-      "FROM e x JOIN e y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-      "sc AS (SELECT doc_a, doc_b, i, CAST(a.n + b.n AS DOUBLE) - i AS u " +
-      "FROM pair JOIN sz a ON doc_a = a.doc_id JOIN sz b ON doc_b = b.doc_id)"
-
-  /** The three per-modality pair replays of the JOINT multimodal dedup
-    * (q237/q238), as one CTE block: `tp` = brute-force shingle Jaccard
-    * >= 0.8 (the q24 respell), `ip` = the cross-format image dHash replay
-    * at Hamming <= 3 (the q224 respell), `ap` = the audio energy-contour
-    * replay at Hamming <= 3 (the q220 respell). The doc_id < 1998 prefix
-    * slice (1998 = 6k, so BOTH the image doc_id/2 groups and the audio
-    * doc_id/3 groups stay intact; a no-op at the sf0.01 gate's 500 docs)
-    * keeps the sf0.1 union graph under the small-graph closure cap — at
-    * 5000 docs the fixtures' multiplier recurrences make ~72k accidental
-    * pairs, whose 144k directed edges just tip the 2^17 fast path into
-    * the distributed loop (53 jobs for a corpus the driver can label in
-    * one). */
-  private val multimodalSrc: String =
-    "(SELECT * FROM documents WHERE doc_id < 1998)"
-  private val multimodalPairCtes: String =
-    s"${shingleCtes(multimodalSrc)}, $shinglePairCtes, " +
-      "tp AS (SELECT doc_a, doc_b, TRUE AS via_text FROM sc " +
-      "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-      // image replay (q224's planted cross-format formula, groups doc_id/2)
-      s"dd AS (SELECT doc_id, doc_id // 2 AS g FROM $multimodalSrc), " +
-      "dm AS (SELECT doc_id, g, " +
-      "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-      "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-      "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-      "v AS (SELECT doc_id, " +
-      "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-      "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-      "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-      "FROM v GROUP BY 1, 2, 3), " +
-      "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-      "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-      "WHERE l.mean < r.mean), " +
-      "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-      "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-      "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
-      "ip AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, TRUE AS via_image " +
-      "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-      "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-      // audio replay (q220's planted PCM16 formula, groups doc_id/3)
-      "ad AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-      s"FROM $multimodalSrc), " +
-      "am AS (SELECT doc_id, g, role, " +
-      "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM ad), " +
-      "asm AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM am), " +
-      "avl AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-      "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-      "WHEN role = 1 AND p % 101 = 0 " +
-      "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-      "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM asm), " +
-      "aen AS (SELECT doc_id, wdx, sum(av) AS energy FROM avl GROUP BY 1, 2), " +
-      "abt AS (SELECT l.doc_id, l.wdx AS j FROM aen l " +
-      "JOIN aen r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-      "WHERE r.energy > l.energy), " +
-      "afp AS (SELECT am.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-      "CAST(j AS INTEGER)), 0) AS afp FROM am " +
-      "LEFT JOIN abt ON am.doc_id = abt.doc_id GROUP BY 1), " +
-      "ap AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, TRUE AS via_audio " +
-      "FROM afp x JOIN afp y ON x.doc_id < y.doc_id " +
-      "WHERE bit_count(xor(x.afp, y.afp)) <= 3)"
-
-  /** DuckDB recomputation of [[graft.text.Dedup.simhash]]'s portable 60-bit
-    * fingerprints: the same md5-prefix token hash, 60 conditional bit sums,
-    * same >=0 tie convention — bit-for-bit equal by construction. */
-  private val simhashSql: String = {
-    val bits = graft.text.Dedup.SimhashBits
-    val bsums = (0 until bits).map(j =>
-      s"sum(CASE WHEN (hh >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j").mkString(", ")
-    val fp = (0 until bits).map(j =>
-      s"(CASE WHEN b$j >= 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-    s"WITH tt AS (SELECT doc_id, list_distinct($toksSql) AS tk FROM documents), " +
-      "tok AS (SELECT doc_id, unnest(tk) AS tok FROM tt), " +
-      "h AS (SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS hh FROM tok), " +
-      s"b AS (SELECT doc_id, $bsums FROM h GROUP BY doc_id) " +
-      s"SELECT doc_id, $fp AS simhash FROM b"
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_orders_per_customer" ->
-      "SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey",
-    "q02_parts_per_type" ->
-      "SELECT p_type, count(*) AS n_parts FROM part GROUP BY p_type",
-    "q03_null_profile_customer" -> ("SELECT " +
-      Tables.schemas("customer").fieldNames.map(c =>
-        s"CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS ${c}_nulls")
-        .mkString(", ") + " FROM customer"),
-    "q04_segment_counts" ->
-      ("SELECT c_mktsegment, count(*) AS n_customers FROM customer " +
-        "GROUP BY c_mktsegment ORDER BY n_customers DESC, c_mktsegment"),
-    "q05_fk_orphans" -> ("SELECT " +
-      "(SELECT count(*) FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS lineitem_order_orphans, " +
-      "(SELECT count(*) FROM lineitem WHERE l_partkey NOT IN (SELECT p_partkey FROM part)) AS lineitem_part_orphans, " +
-      "(SELECT count(*) FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)) AS order_customer_orphans"),
-    "q06_key_uniqueness" -> ("SELECT " +
-      "(SELECT count(*) FROM customer) AS customer_rows, " +
-      "(SELECT count(DISTINCT c_custkey) FROM customer) AS customer_distinct, " +
-      "(SELECT count(*) FROM orders) AS orders_rows, " +
-      "(SELECT count(DISTINCT o_orderkey) FROM orders) AS orders_distinct, " +
-      "(SELECT count(*) FROM part) AS part_rows, " +
-      "(SELECT count(DISTINCT p_partkey) FROM part) AS part_distinct"),
-    "q07_theta_filter" ->
-      ("SELECT l_orderkey, l_linenumber, l_discount, l_tax FROM lineitem " +
-        "WHERE NOT coalesce(l_discount <= l_tax, FALSE)"),
-    "q08_order_consistency" ->
-      ("SELECT CAST(count(*) AS BIGINT) AS n_orders, " +
-        "CAST(sum(CASE WHEN abs(o_totalprice - gross) > 0.01 THEN 1 ELSE 0 END) AS BIGINT) AS n_mismatch " +
-        "FROM orders JOIN (SELECT l_orderkey, round(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 2) AS gross " +
-        "FROM lineitem GROUP BY l_orderkey) li ON o_orderkey = l_orderkey"),
-    "q09_doc_nest" ->
-      ("SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, " +
-        "CAST(count(*) AS INTEGER) AS n_items, sum(l_quantity) AS total_qty, " +
-        "max(l_extendedprice) AS max_item_price " +
-        "FROM orders JOIN lineitem ON o_orderkey = l_orderkey " +
-        "GROUP BY o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate"),
-    "q10_doc_roundtrip" ->
-      ("SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority, " +
-        "l_linenumber, l_partkey, l_quantity, l_extendedprice, l_discount " +
-        "FROM orders JOIN lineitem ON o_orderkey = l_orderkey"),
-    "q11_fact_sales" ->
-      ("SELECT o_orderkey, l_linenumber, o_orderdate, o_orderstatus, c_custkey, c_mktsegment, " +
-        "n_name AS nation, r_name AS region, p_type, l_quantity, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey JOIN part ON l_partkey = p_partkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON c_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey"),
-    "q12_revenue_by_segment_month" ->
-      ("SELECT c_mktsegment, date_trunc('month', o_orderdate) AS order_month, " +
-        s"${money.sumMoneySql("revenue")} AS total_revenue, count(DISTINCT o_orderkey) AS n_orders, " +
-        s"${money.r2Sql("sum(l_quantity)")} AS sum_qty FROM (" +
-        "SELECT c_mktsegment, o_orderdate, o_orderkey, l_quantity, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY c_mktsegment, order_month"),
-    "q13_top_customers" ->
-      (s"SELECT c_custkey, ${money.sumMoneySql(money.r2Sql("l_extendedprice * (1.0 - l_discount)"))} AS total_revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey " +
-        "GROUP BY c_custkey ORDER BY total_revenue DESC, c_custkey LIMIT 10"),
-    "q14_revenue_rollup" ->
-      (s"SELECT c_mktsegment, o_orderstatus, ${money.sumMoneySql("revenue")} AS total_revenue, count(*) AS n_rows FROM (" +
-        "SELECT c_mktsegment, o_orderstatus, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY ROLLUP (c_mktsegment, o_orderstatus)"),
-    "q15_order_window_seq" ->
-      ("SELECT o_custkey, o_orderkey, o_orderdate, " +
-        "CAST(row_number() OVER w AS INTEGER) AS rn, " +
-        "CAST(dense_rank() OVER w AS INTEGER) AS drank, " +
-        "lag(o_totalprice) OVER w AS prev_total, " +
-        "lead(o_totalprice) OVER w AS next_total, " +
-        s"${money.r2Sql("sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")} AS running_total, " +
-        s"${money.r2Sql("sum(o_totalprice) OVER (PARTITION BY o_custkey " +
-          "ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) " +
-          "RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)")} AS trailing_30d_total " +
-        "FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)"),
-    "q16_customers_without_orders" ->
-      "SELECT c_custkey FROM customer EXCEPT SELECT o_custkey AS c_custkey FROM orders",
-    "q17_scalar_functions" ->
-      ("SELECT o_orderkey, CAST(year(o_orderdate) AS INTEGER) AS o_year, " +
-        "CAST(month(o_orderdate) AS INTEGER) AS o_month, " +
-        "CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2026-01-01') AS INTEGER) AS days_before_2026, " +
-        "CAST(o_orderdate AS DATE) + 30 AS due_date, " +
-        "o_orderstatus || '-' || o_orderpriority AS status_priority, " +
-        "CAST(floor(o_totalprice / 1000.0) AS BIGINT) AS price_bucket, " +
-        "round(abs(o_totalprice - 1000.0), 2) AS abs_diff_1000 FROM orders"),
-    "q18_events_by_type" ->
-      ("SELECT event_type, count(*) AS n_events, " +
-        s"${money.r2Sql("sum(value)")} AS sum_value, " +
-        """CAST(sum(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k """ +
-        "FROM events GROUP BY event_type"),
-    "q19_exact_dedup_stats" ->
-      (s"WITH g AS (SELECT min(doc_id) AS keeper_id, count(*) AS n_copies FROM documents GROUP BY $normSql) " +
-        "SELECT CAST(sum(n_copies) AS BIGINT) AS n_docs, count(*) AS n_distinct, " +
-        "CAST(sum(CASE WHEN n_copies > 1 THEN n_copies - 1 ELSE 0 END) AS BIGINT) AS n_redundant FROM g"),
-    "q20_token_stats" ->
-      ("""SELECT doc_id, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens, """ +
-        """CAST(length(regexp_replace(text, '\s', '', 'g')) AS BIGINT) AS n_chars_nospace, """ +
-        """CAST(length(regexp_replace(text, '\s', '', 'g')) AS DOUBLE) / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS avg_token_len """ +
-        "FROM documents"),
-    "q21_quality_score" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents) " +
-        "SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CAST(len(list_filter(toks, x -> x IN ('the','a','of','and'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE) AS stopword_ratio, " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) AS distinct_ratio, " +
-        "least(1.0, CAST(len(toks) AS DOUBLE) / 100.0) AS length_score, " +
-        "CAST(CASE WHEN len(toks) >= 20 AND CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2 " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS passes_filter FROM t"),
-    "q22_lang_source_dist" ->
-      "SELECT lang, source, count(*) AS n_docs FROM documents GROUP BY lang, source",
-    "q23_word_jaccard_pairs" ->
-      (s"WITH w AS (SELECT doc_id, lang, n_chars, list_distinct($toksSql) AS w FROM documents), " +
-        "p AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, " +
-        "CAST(len(list_intersect(x.w, y.w)) AS DOUBLE) AS i, " +
-        "CAST(len(x.w) + len(y.w) AS DOUBLE) - CAST(len(list_intersect(x.w, y.w)) AS DOUBLE) AS u " +
-        "FROM w x JOIN w y ON x.lang = y.lang AND x.n_chars = y.n_chars AND x.doc_id < y.doc_id) " +
-        "SELECT doc_a, doc_b, CASE WHEN u = 0 THEN 1.0 ELSE i / u END AS jaccard FROM p " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.3"),
-    // Spark runs banded MinHash LSH + exact shingle verify; the verify is
-    // exact and banding misses a true pair with probability ~5e-8 at the
-    // 0.8 threshold (128 perms / 32 bands — see minhashNearDupsShingle), so
-    // the result SET equals brute force on this corpus (corpus-verified,
-    // not guaranteed: equality is probabilistic by construction) — which is
-    // what this oracle spells (no LSH anywhere in it)
-    "q24_minhash_neardups" ->
-      (s"WITH ${shingleCtes("documents")}, $shinglePairCtes " +
-        "SELECT doc_a, doc_b, CASE WHEN u = 0 THEN 1.0 ELSE i / u END AS jaccard FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8"),
-    // full bit-for-bit fingerprint recomputation (portable md5-prefix hash)
-    "q25_simhash" -> simhashSql,
-    // recall gate: anchors any engine can count; the bound is pinned TRUE
-    "q29_ann_lsh_topk" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok FROM embeddings WHERE vec_id < 20"),
-    "q40_ivf_topk" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok FROM embeddings WHERE vec_id < 20"),
-    // the shingle-verified dedup pipeline is deterministic end to end, so
-    // the oracle replays it declaratively: exact-dedup keepers by normalized
-    // text, brute-force shingle pairs at the threshold, recursive-CTE
-    // transitive closure, keep min-id per component
-    "q43_dedup_corpus" ->
-      ("WITH RECURSIVE nrm AS (SELECT doc_id, " + normSql + " AS norm FROM documents), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
-        s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n) " +
-        "SELECT (SELECT count(*) FROM documents) AS n_input, " +
-        "CAST((SELECT count(*) FROM k) - (SELECT count(*) FROM removed) AS BIGINT) AS n_kept"),
-    // full bit-for-bit replay of the portable tf-idf pipeline: same feature
-    // hash, same floor-rounded IDF, same dense assembly, q28's cosine top-k
-    "q44_tfidf_doc_similarity" ->
-      (s"WITH tt AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "tok AS (SELECT doc_id, CAST(CAST(('0x' || substr(md5(tk), 1, 15)) AS BIGINT) % 256 AS INTEGER) AS feat " +
-        "FROM (SELECT doc_id, unnest(toks) AS tk FROM tt)), " +
-        "tf AS (SELECT doc_id, feat, count(*) AS tf FROM tok GROUP BY 1, 2), " +
-        "dft AS (SELECT feat, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1), " +
-        "m AS (SELECT count(*) AS m FROM documents), " +
-        "w AS (SELECT doc_id, feat, CAST(tf AS DOUBLE) * " +
-        "(floor(ln(CAST(m + 1 AS DOUBLE) / CAST(df + 1 AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0) AS w " +
-        "FROM tf JOIN dft USING (feat) CROSS JOIN m), " +
-        "vec AS (SELECT doc_id, map(list(feat), list(w)) AS mp FROM w GROUP BY doc_id), " +
-        "dense AS (SELECT doc_id AS vec_id, " +
-        "list_transform(range(256), i -> coalesce(map_extract(mp, i)[1], 0.0)) AS v FROM vec), " +
-        "s AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-        "list_inner_product(p.v, c.v) / (sqrt(list_inner_product(p.v, p.v)) * sqrt(list_inner_product(c.v, c.v))) AS cos_sim " +
-        "FROM dense p JOIN dense c ON p.vec_id < 200 AND p.vec_id != c.vec_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"),
-    // banded pigeonhole blocking + exact hamming filter == brute force over
-    // the portable fingerprints, which is what the oracle spells
-    "q45_simhash_neardups" ->
-      (s"WITH f AS ($simhashSql) " +
-        "SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, " +
-        "CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS hamming " +
-        "FROM f x JOIN f y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.simhash, y.simhash)) <= 3"),
-    "q26_doc_fingerprint" ->
-      (s"SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(string_split($normSql, ''), c -> CAST(ord(c) AS BIGINT))), " +
-        "(acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint FROM documents"),
-    "q27_language_id" -> {
-      val langs = graft.text.TextStats.defaultProfiles.toSeq.sortBy(_._1)
-      def score(l: String) = s"s_$l"
-      val scores = langs.map { case (l, ws) =>
-        s"len(list_intersect(toks, [${ws.map(w => s"'$w'").mkString(",")}])) AS ${score(l)}"
-      }.mkString(", ")
-      val names = langs.map(_._1)
-      val cases = names.zipWithIndex.map { case (l, i) =>
-        val rest = names.drop(i + 1)
-        if (rest.isEmpty) s"ELSE '$l'"
-        else s"WHEN ${rest.map(r => s"${score(l)} >= ${score(r)}").mkString(" AND ")} THEN '$l'"
-      }.mkString(" ")
-      s"WITH t AS (SELECT doc_id, lang, list_distinct($toksSql) AS toks FROM documents), " +
-        s"s AS (SELECT doc_id, lang AS labeled_lang, $scores FROM t) " +
-        s"SELECT doc_id, labeled_lang, CASE WHEN greatest(${names.map(score).mkString(",")}) = 0 " +
-        s"THEN 'und' $cases END AS predicted_lang FROM s"
-    },
-    "q28_cosine_topk" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "s AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-        "list_inner_product(p.v, c.v) / (sqrt(list_inner_product(p.v, p.v)) * sqrt(list_inner_product(c.v, c.v))) AS cos_sim " +
-        "FROM e p JOIN e c ON p.vec_id < 20 AND p.vec_id != c.vec_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"),
-    "q30_event_windows" ->
-      ("SELECT time_bucket(INTERVAL 10 MINUTE, CAST(ts AS TIMESTAMP)) AS window_start, " +
-        "time_bucket(INTERVAL 10 MINUTE, CAST(ts AS TIMESTAMP)) + INTERVAL 10 MINUTE AS window_end, " +
-        s"count(*) AS n_events, ${money.r2Sql("sum(value)")} AS sum_value " +
-        "FROM events GROUP BY 1"),
-    "q31_sessionization" ->
-      ("WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "g AS (SELECT *, CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800 THEN 1 ELSE 0 END AS new_session FROM e), " +
-        "i AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq FROM g) " +
-        "SELECT user_id, min(ts) AS session_start, count(*) AS n_events, " +
-        "max(sec) - min(sec) AS duration_sec, " +
-        s"${money.r2Sql("sum(value)")} AS sum_value FROM i GROUP BY user_id, session_seq"),
-    "q42_event_sliding_windows" ->
-      ("WITH w AS (SELECT to_timestamp(CAST(floor((epoch(CAST(ts AS TIMESTAMP)) - off) / 600) * 600 + off AS BIGINT)) AS ws, value " +
-        "FROM events CROSS JOIN (VALUES (0), (300)) AS o(off)) " +
-        "SELECT CAST(ws AS TIMESTAMP) AS window_start, " +
-        "CAST(ws AS TIMESTAMP) + INTERVAL 10 MINUTE AS window_end, " +
-        s"count(*) AS n_events, ${money.r2Sql("sum(value)")} AS sum_value " +
-        "FROM w GROUP BY ws"),
-    // the Spark side PARSES these values back out of real PNG/WAV/AVI
-    // container bytes (fixed-offset header fields, pure binary
-    // expressions); the oracle recomputes what the fixture planted
-    "q32_media_stats" ->
-      ("SELECT doc_id, " +
-        "CASE WHEN doc_id % 3 = 0 AND doc_id % 2 = 1 THEN 'jpeg' " +
-        "WHEN doc_id % 3 = 0 THEN 'png' WHEN doc_id % 3 = 1 THEN 'wav' ELSE 'avi' END AS format, " +
-        "CASE WHEN doc_id % 3 = 1 THEN NULL ELSE CAST(16 + (n_chars % 64) * 4 AS INTEGER) END AS img_width, " +
-        "CASE WHEN doc_id % 3 = 1 THEN NULL ELSE CAST(16 + ((n_chars * 7) % 48) * 4 AS INTEGER) END AS img_height, " +
-        "CASE WHEN doc_id % 3 = 2 THEN CAST(1 + doc_id % 5 AS BIGINT) ELSE CAST(1 AS BIGINT) END AS n_frames, " +
-        "CASE WHEN doc_id % 3 = 1 THEN CAST(8000 + (doc_id % 5) * 8000 AS INTEGER) END AS sample_rate, " +
-        "CASE WHEN doc_id % 3 = 1 THEN CAST(1 + doc_id % 2 AS INTEGER) END AS channels, " +
-        "CAST(strlen(text) AS BIGINT) AS payload_bytes FROM documents"),
-    "q33_copurchase_pairs" ->
-      ("SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, count(*) AS n_together " +
-        "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-        "GROUP BY part_a, part_b HAVING count(*) >= 3"),
-    "q34_customer_degree" ->
-      ("SELECT src_custkey, count(*) AS degree, CAST(sum(n_purchases) AS BIGINT) AS n_purchases FROM (" +
-        "SELECT o_custkey AS src_custkey, l_partkey, count(*) AS n_purchases " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY o_custkey, l_partkey" +
-        ") GROUP BY src_custkey"),
-    "q35_customer_ltv" ->
-      (s"SELECT c_custkey, count(DISTINCT o_orderkey) AS n_orders, " +
-        s"${money.sumMoneySql("revenue")} AS total_revenue, " +
-        "min(CAST(o_orderdate AS DATE)) AS first_order, max(CAST(o_orderdate AS DATE)) AS last_order, " +
-        s"${money.r2Sql(s"(${money.sumMoneySql("revenue")}) / count(DISTINCT o_orderkey)")} AS avg_order_value FROM (" +
-        "SELECT c_custkey, o_orderkey, o_orderdate, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY c_custkey"),
-    "q36_revenue_cube" ->
-      (s"SELECT c_mktsegment, o_orderstatus, ${money.sumMoneySql("revenue")} AS total_revenue, count(*) AS n_rows FROM (" +
-        "SELECT c_mktsegment, o_orderstatus, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY CUBE (c_mktsegment, o_orderstatus)"),
-    "q37_order_sketches" ->
-      ("SELECT count(DISTINCT o_custkey) AS exact_customers, " +
-        "count(DISTINCT o_orderkey) AS exact_orders, " +
-        "TRUE AS customers_ok, TRUE AS orders_ok, TRUE AS p50_ok, TRUE AS p99_ok " +
-        "FROM orders"),
-    "q38_map_lookup_check" ->
-      ("SELECT p_partkey, p_type, CASE p_type WHEN 'STANDARD' THEN 'STANDARD' " +
-        "WHEN 'ECONOMY' THEN 'ECONOMY' WHEN 'PROMO' THEN 'BUDGET' ELSE NULL END AS expected_value " +
-        "FROM part WHERE NOT (p_type IS NOT DISTINCT FROM " +
-        "CASE p_type WHEN 'STANDARD' THEN 'STANDARD' WHEN 'ECONOMY' THEN 'ECONOMY' " +
-        "WHEN 'PROMO' THEN 'BUDGET' ELSE NULL END)"),
-    "q39_customer_set_algebra" ->
-      ("SELECT DISTINCT c_custkey FROM (" +
-        "SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING' " +
-        "INTERSECT SELECT o_custkey AS c_custkey FROM orders " +
-        "UNION SELECT c_custkey FROM customer WHERE c_acctbal < 0)"),
-    "q46_topk_orders_per_status" ->
-      ("SELECT o_orderstatus, o_totalprice, o_orderkey FROM (" +
-        "SELECT o_orderstatus, o_totalprice, o_orderkey, " +
-        "row_number() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey) AS rn " +
-        "FROM orders) WHERE rn <= 5"),
-    "q47_order_distribution" ->
-      ("SELECT o_orderkey, o_orderstatus, o_totalprice, " +
-        "CAST(ntile(4) OVER w AS INTEGER) AS quartile, " +
-        "percent_rank() OVER w AS pct_rank, " +
-        "cume_dist() OVER w AS cume, " +
-        "first_value(o_totalprice) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS min_in_status, " +
-        "last_value(o_totalprice) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS max_in_status " +
-        "FROM orders WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)"),
-    "q48_revenue_grouping_sets" ->
-      (s"SELECT c_mktsegment, o_orderstatus, ${money.sumMoneySql("revenue")} AS total_revenue, " +
-        "count(*) AS n_rows, CAST(GROUPING(c_mktsegment, o_orderstatus) AS BIGINT) AS gid FROM (" +
-        "SELECT c_mktsegment, o_orderstatus, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY GROUPING SETS ((c_mktsegment), (o_orderstatus), ())"),
-    "q49_asof_purchase_view" ->
-      ("SELECT p.user_id, p.event_id, v.event_id AS asof_view_event_id " +
-        "FROM (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events WHERE event_type = 'purchase') p " +
-        "ASOF LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events WHERE event_type = 'view') v " +
-        "ON p.user_id = v.user_id AND v.ts <= p.ts"),
-    "q41_embedding_neardups" ->
-      ("WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings) " +
-        "SELECT vec_a, vec_b, cos_sim FROM (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b, " +
-        "list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) AS cos_sim " +
-        "FROM e x JOIN e y ON x.label = y.label AND x.vec_id < y.vec_id) " +
-        "WHERE cos_sim >= 0.4"),
-    "q50_views_before_purchase" ->
-      ("SELECT p.user_id, p.event_id, count(v.vts) AS n_views, max(v.vts) AS last_view_ts " +
-        "FROM (SELECT user_id, CAST(ts AS TIMESTAMP) AS pts, event_id FROM events WHERE event_type = 'purchase') p " +
-        "LEFT JOIN (SELECT user_id AS v_user_id, CAST(ts AS TIMESTAMP) AS vts FROM events WHERE event_type = 'view') v " +
-        "ON p.user_id = v.v_user_id AND v.vts <= p.pts AND v.vts >= p.pts - INTERVAL 60 MINUTE " +
-        "GROUP BY p.user_id, p.event_id"),
-    "q51_revenue_pivot" -> {
-      def cell(status: String, as: String) =
-        s"CAST(sum(CASE WHEN o_orderstatus = '$status' THEN cents END) AS DOUBLE) / 100.0 AS $as"
-      s"SELECT c_mktsegment, ${cell("F", "rev_f")}, ${cell("O", "rev_o")}, ${cell("P", "rev_p")} FROM (" +
-        "SELECT c_mktsegment, o_orderstatus, " +
-        s"CAST(floor((${money.r2Sql("l_extendedprice * (1.0 - l_discount)")}) * 100.0 + 0.5) AS BIGINT) AS cents " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey" +
-        ") GROUP BY c_mktsegment"
-    },
-    "q52_latest_event_per_user" ->
-      ("SELECT user_id, event_id, event_type, ts, value FROM (" +
-        "SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts, value, " +
-        "row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn " +
-        "FROM events) WHERE rn = 1"),
-    "q53_segment_order_extremes" ->
-      ("WITH j AS (SELECT c_mktsegment, o_orderkey, o_totalprice FROM orders JOIN customer ON o_custkey = c_custkey), " +
-        "r AS (SELECT *, row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey DESC) AS rmax, " +
-        "row_number() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice ASC, o_orderkey ASC) AS rmin FROM j) " +
-        "SELECT c_mktsegment, max(CASE WHEN rmax = 1 THEN o_orderkey END) AS max_order_key, " +
-        "max(CASE WHEN rmin = 1 THEN o_orderkey END) AS min_order_key, " +
-        "max(o_totalprice) AS max_total, min(o_totalprice) AS min_total " +
-        "FROM r GROUP BY c_mktsegment"),
-    "q54_json_props" ->
-      ("SELECT event_id, CAST(json_extract(props, '$.k') AS INTEGER) AS k_typed, " +
-        "json_extract_string(props, '$.k') AS k_str FROM events"),
-    "q55_lineitem_unpivot" -> Seq(
-      "l_quantity", "l_extendedprice", "l_discount", "l_tax").map(m =>
-        s"SELECT '$m' AS metric, count(*) AS n_values, min($m) AS min_value, max($m) AS max_value FROM lineitem")
-      .mkString(" UNION ALL "),
-    "q56_date_features" ->
-      ("SELECT o_orderkey, CAST(quarter(o_orderdate) AS INTEGER) AS o_quarter, " +
-        "CAST(dayofweek(CAST(o_orderdate AS DATE)) + 1 AS INTEGER) AS dow, " +
-        "last_day(CAST(o_orderdate AS DATE)) AS month_end, " +
-        "CAST(date_trunc('week', o_orderdate) AS DATE) AS week_start, " +
-        "CAST(CAST(o_orderdate AS DATE) + INTERVAL 1 MONTH AS DATE) AS next_month FROM orders"),
-    "q57_string_features" ->
-      ("SELECT p_partkey, upper(p_name) AS name_upper, translate(p_brand, 'Brand', '') AS brand_num, " +
-        "CAST(levenshtein(p_type, 'STANDARD') AS INTEGER) AS lev_standard, " +
-        "lpad(p_type, 10, '_') AS type_pad, CAST(strpos(p_name, 'a') AS INTEGER) AS a_pos, " +
-        "substring(p_name, 1, 3) AS name_prefix, reverse(p_name) AS name_rev FROM part"),
-    "q58_parts_not_shipped" ->
-      ("SELECT p_partkey, p_type FROM part WHERE p_partkey NOT IN " +
-        "(SELECT l_partkey FROM lineitem WHERE year(l_shipdate) = 1998 AND month(l_shipdate) = 1)"),
-    // keeping frame_idx % 2 == 0 over 0..frames-1 leaves ceil(frames/2);
-    // only AVI containers carry dwTotalFrames (= 1 + doc_id % 5) > 1;
-    // png/wav decode to one frame (frame_idx 0)
-    "q59_frame_sample" ->
-      ("SELECT doc_id, " +
-        "CASE WHEN doc_id % 3 = 2 THEN CAST(floor((doc_id % 5) / 2) + 1 AS BIGINT) ELSE CAST(1 AS BIGINT) END AS n_sampled_frames, " +
-        "CASE WHEN doc_id % 3 = 2 THEN CAST(floor((doc_id % 5) / 2) * 2 AS INTEGER) ELSE CAST(0 AS INTEGER) END AS max_frame_idx " +
-        "FROM documents"),
-    "q60_value_range_pairs" ->
-      ("SELECT a.event_id AS a_id, count(*) AS n_close FROM events a JOIN events b " +
-        "ON a.event_id < 50 AND a.event_id != b.event_id AND abs(a.value - b.value) <= 0.25 " +
-        "GROUP BY a.event_id"),
-    "q61_pii_redaction" ->
-      ("SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(" +
-        "text || ' contact user' || doc_id || '@example.com or +1 555 867 530' || doc_id " +
-        "|| ' via https://tracker.example.com/u/' || doc_id, " +
-        s"'${graft.text.TextStats.UrlRe}', '<URL>', 'g'), " +
-        s"'${graft.text.TextStats.EmailRe}', '<EMAIL>', 'g'), " +
-        s"'${graft.text.TextStats.PhoneRe}', '<PHONE>', 'g') AS clean_text " +
-        "FROM documents"),
-    "q62_top_terms" ->
-      (s"SELECT token, count(*) AS n_occurrences FROM (SELECT unnest($toksSql) AS token FROM documents) " +
-        "GROUP BY token ORDER BY n_occurrences DESC, token LIMIT 20"),
-    "q63_bpe_token_count" ->
-      (s"SELECT doc_id, CAST(len(regexp_extract_all(text, '${graft.text.TextStats.BpeTokenRe.replace("'", "''")}')) AS INTEGER) AS n_bpe_tokens, " +
-        """CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_ws_tokens FROM documents"""),
-    "q64_distinct_aggs" ->
-      ("SELECT l_returnflag, sum(DISTINCT l_quantity) AS sum_distinct_qty, " +
-        "count(DISTINCT l_partkey) AS n_parts, " +
-        "CAST(sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS n_high_discount, " +
-        "max(l_tax) AS max_tax, min(l_tax) AS min_tax FROM lineitem GROUP BY l_returnflag"),
-    "q65_salted_join" ->
-      (s"SELECT o_orderstatus, count(*) AS n_lines, ${money.r2Sql("sum(l_quantity)")} AS sum_qty " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY o_orderstatus"),
-    "q66_multiset_ops" ->
-      ("SELECT 'except_all' AS op, o_custkey, count(*) AS n FROM (" +
-        "SELECT o_custkey FROM orders EXCEPT ALL " +
-        "SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') GROUP BY o_custkey " +
-        "UNION ALL SELECT 'intersect_all' AS op, o_custkey, count(*) AS n FROM (" +
-        "SELECT o_custkey FROM orders INTERSECT ALL " +
-        "SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') GROUP BY o_custkey"),
-    "q67_window_nth_null" ->
-      ("SELECT o_orderkey, o_custkey, " +
-        "nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_total, " +
-        "lag(o_totalprice, 2, 0.0) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS lag2_total, " +
-        "coalesce(nullif(o_orderstatus, 'O'), 'OPEN') AS status_or_open FROM orders"),
-    "q68_string_agg" ->
-      ("SELECT c_mktsegment, string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities, " +
-        "CAST(count(*) AS BIGINT) AS n_priorities FROM (" +
-        "SELECT DISTINCT c_mktsegment, o_orderpriority " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey) GROUP BY c_mktsegment"),
-    "q69_posexplode_tokens" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "e AS (SELECT doc_id, unnest(list_transform(generate_series(1, least(3, len(toks))), " +
-        "i -> {'pos': i - 1, 'tok': toks[i]})) AS u FROM t) " +
-        "SELECT doc_id, CAST(u.pos AS INTEGER) AS pos, u.tok AS token FROM e"),
-    "q70_merge_upsert" ->
-      ("WITH upd AS (" +
-        s"SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus, ${money.r2Sql("o_totalprice * 1.1")} AS o_totalprice " +
-        "FROM orders WHERE o_orderkey % 7 = 0 " +
-        "UNION ALL SELECT o_orderkey + 100000000, o_custkey, o_orderstatus, o_totalprice " +
-        "FROM orders WHERE o_orderkey % 1000 = 0) " +
-        "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders " +
-        "WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd) " +
-        // Delta parity: the delete marker fires only WHEN MATCHED — a marked
-        // row whose key is absent from the target is inserted, not dropped
-        "UNION ALL SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM upd " +
-        "WHERE NOT (o_orderkey % 49 = 0 " +
-        "AND o_orderkey IN (SELECT o_orderkey FROM orders))"),
-    "q71_scd2_events" ->
-      ("WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events), " +
-        "c AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM e), " +
-        "f AS (SELECT user_id, event_type, ts AS valid_from, event_id FROM c " +
-        "WHERE prev IS NULL OR prev <> event_type), " +
-        "s AS (SELECT user_id, event_type, valid_from, " +
-        "lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to FROM f) " +
-        "SELECT user_id, event_type, valid_from, valid_to, valid_to IS NULL AS is_current FROM s"),
-    "q72_lineitem_stats" ->
-      ("SELECT l_returnflag, count(*) AS n, " +
-        "round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price, " +
-        "round(covar_pop(l_quantity, l_extendedprice), 6) AS covar_pop_qty_price, " +
-        "round(stddev_samp(l_discount), 6) AS stddev_discount, " +
-        "round(var_pop(l_tax), 6) AS var_pop_tax, " +
-        "round(regr_slope(l_extendedprice, l_quantity), 6) AS slope_price_on_qty, " +
-        "round(regr_intercept(l_extendedprice, l_quantity), 6) AS intercept_price_on_qty " +
-        "FROM lineitem GROUP BY l_returnflag"),
-    "q73_month_scaffold" ->
-      ("WITH b AS (SELECT date_trunc('month', min(CAST(o_orderdate AS DATE))) AS lo, " +
-        "date_trunc('month', max(CAST(o_orderdate AS DATE))) AS hi FROM orders), " +
-        "m AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS DATE) AS month_start FROM b), " +
-        "a AS (SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start, count(*) AS n_orders, " +
-        s"${money.sumMoneySql("o_totalprice")} AS total_amount FROM orders GROUP BY 1) " +
-        "SELECT m.month_start, coalesce(a.n_orders, 0) AS n_orders, " +
-        "coalesce(a.total_amount, 0.0) AS total_amount FROM m LEFT JOIN a USING (month_start)"),
-    "q74_hash_sample" ->
-      ("SELECT doc_id, lang, source, n_chars FROM documents " +
-        "WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')"),
-    "q75_price_percentiles" ->
-      ("SELECT o_orderstatus, count(*) AS n, " +
-        "round(quantile_cont(o_totalprice, 0.25), 4) AS p25, " +
-        "round(quantile_cont(o_totalprice, 0.5), 4) AS p50, " +
-        "round(quantile_cont(o_totalprice, 0.75), 4) AS p75, " +
-        "round(quantile_cont(o_totalprice, 0.9), 4) AS p90 " +
-        "FROM orders GROUP BY o_orderstatus"),
-    // min-label propagation to a fixpoint: r holds (node, candidate-comp)
-    // pairs, UNION dedups, so the recursion is finite; min() = the CC operator's
-    // canonical component id (lowest vertex id in the component)
-    "q76_copurchase_components" ->
-      ("WITH RECURSIVE p AS (" +
-        "SELECT a.l_partkey AS part_a, b.l_partkey AS part_b " +
-        "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-        "GROUP BY 1, 2 HAVING count(*) >= 3), " +
-        "e AS (SELECT part_a AS src, part_b AS dst FROM p " +
-        "UNION ALL SELECT part_b, part_a FROM p), " +
-        "r AS (SELECT src AS node, src AS comp FROM e " +
-        "UNION SELECT e.dst, r.comp FROM r JOIN e ON e.src = r.node) " +
-        "SELECT node AS part, min(comp) AS component FROM r GROUP BY node"),
-    "q77_label_centroids" ->
-      ("SELECT label, pos, round(avg(val), 6) AS mean_val, count(*) AS n_vecs FROM (" +
-        "SELECT label, CAST(unnest(generate_series(1, len(embedding))) - 1 AS INTEGER) AS pos, " +
-        "unnest(CAST(embedding AS DOUBLE[])) AS val FROM embeddings) " +
-        "GROUP BY label, pos"),
-    "q78_repetition_ratio" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "g AS (SELECT doc_id, CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[]) " +
-        "ELSE list_transform(generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i + 1]) END AS grams FROM t) " +
-        "SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_bigrams, " +
-        "CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct_bigrams, " +
-        "CASE WHEN len(grams) = 0 THEN 0.0 ELSE 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / CAST(len(grams) AS DOUBLE) END AS repetition_ratio " +
-        "FROM g"),
-    // DuckDB double division already yields NULL on a zero divisor — the
-    // same contract Spark's try_divide provides
-    "q79_safe_division" ->
-      ("SELECT l_orderkey, l_linenumber, " +
-        "l_extendedprice / (l_quantity % 3) AS per_mod3, " +
-        "1.0 / l_discount AS inv_discount, " +
-        "coalesce(l_extendedprice / (l_quantity % 3), -1.0) AS per_mod3_filled " +
-        "FROM lineitem"),
-    "q80_reconcile" ->
-      ("WITH a AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0), " +
-        "b AS (SELECT o_orderkey, CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0 " +
-        "ELSE o_totalprice END AS o_totalprice FROM orders WHERE o_orderkey % 5 <> 0) " +
-        "SELECT coalesce(a.o_orderkey, b.o_orderkey) AS o_orderkey, " +
-        "CASE WHEN a.o_orderkey IS NULL THEN 'only_b' WHEN b.o_orderkey IS NULL THEN 'only_a' " +
-        "ELSE 'both' END AS status, " +
-        "CASE WHEN a.o_orderkey IS NOT NULL AND b.o_orderkey IS NOT NULL " +
-        "THEN round(b.o_totalprice - a.o_totalprice, 2) END AS value_diff " +
-        "FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey"),
-    "q81_basket_drift" ->
-      ("WITH y AS (SELECT o_custkey, l_partkey, year(CAST(o_orderdate AS DATE)) AS yr " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "WHERE year(CAST(o_orderdate AS DATE)) IN (1997, 1998)), " +
-        "s AS (SELECT o_custkey, " +
-        "list_distinct(coalesce(list(l_partkey) FILTER (WHERE yr = 1997), CAST([] AS BIGINT[]))) AS p1, " +
-        "list_distinct(coalesce(list(l_partkey) FILTER (WHERE yr = 1998), CAST([] AS BIGINT[]))) AS p2 " +
-        "FROM y GROUP BY o_custkey) " +
-        "SELECT o_custkey, CAST(len(list_intersect(p1, p2)) AS INTEGER) AS n_common, " +
-        "CAST(len(p1) - len(list_intersect(p1, p2)) AS INTEGER) AS n_only_1997, " +
-        "CAST(len(p2) - len(list_intersect(p1, p2)) AS INTEGER) AS n_only_1998 " +
-        "FROM s"),
-    "q82_event_funnel" ->
-      ("WITH e AS (SELECT user_id, event_type, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "f AS (SELECT user_id, event_type, " +
-        "max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS viewed_w, " +
-        "max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS clicked_w " +
-        "FROM e) " +
-        "SELECT count(DISTINCT user_id) AS n_users, " +
-        "count(DISTINCT CASE WHEN event_type = 'click' AND viewed_w = 1 THEN user_id END) AS n_view_then_click, " +
-        "count(DISTINCT CASE WHEN event_type = 'purchase' AND clicked_w = 1 THEN user_id END) AS n_click_then_purchase " +
-        "FROM f"),
-    "q83_status_priority_crosstab" -> {
-      val prios = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-      val cells = prios.map(p =>
-        s"""CAST(sum(CASE WHEN o_orderpriority = '$p' THEN 1 ELSE 0 END) AS BIGINT) AS "$p"""")
-      s"""SELECT o_orderstatus AS "o_orderstatus_o_orderpriority", ${cells.mkString(", ")} """ +
-        "FROM orders GROUP BY o_orderstatus"
-    },
-    // sketch estimates differ per engine by design: the gate pins the exact
-    // count plus a within-5% boolean, like q37
-    "q84_hll_union" ->
-      "SELECT count(DISTINCT o_custkey) AS exact_all, TRUE AS union_ok FROM orders",
-    "q85_variant_props" ->
-      ("SELECT event_id, CAST(json_extract(props, '$.k') AS INTEGER) AS k_typed, " +
-        "json_extract_string(props, '$.k') AS k_str FROM events"),
-    "q86_priority_mode" ->
-      ("SELECT o_orderstatus, o_orderpriority AS mode_o_orderpriority, n FROM (" +
-        "SELECT o_orderstatus, o_orderpriority, count(*) AS n, " +
-        "row_number() OVER (PARTITION BY o_orderstatus ORDER BY count(*) DESC, o_orderpriority) AS rn " +
-        "FROM orders GROUP BY o_orderstatus, o_orderpriority) t WHERE rn = 1"),
-    "q87_price_histogram" ->
-      ("SELECT CAST(floor(o_totalprice / 25000.0) AS INTEGER) AS bucket, " +
-        "count(*) AS n_rows, min(o_totalprice) AS min_val, max(o_totalprice) AS max_val " +
-        "FROM orders GROUP BY 1"),
-    "q88_embedding_quantize" ->
-      ("WITH b AS (SELECT vec_id, embedding, " +
-        "CAST(list_min(embedding) AS DOUBLE) AS mn, CAST(list_max(embedding) AS DOUBLE) AS mx " +
-        "FROM embeddings), " +
-        "q AS (SELECT vec_id, list_transform(embedding, x -> " +
-        "CAST(CASE WHEN mx = mn THEN 0 ELSE least(255, floor((CAST(x AS DOUBLE) - mn) / (mx - mn) * 256.0)) END AS INTEGER)) AS codes " +
-        "FROM b) " +
-        "SELECT vec_id, CAST(len(codes) AS INTEGER) AS n_dims, " +
-        "CAST(list_sum(codes) AS BIGINT) AS code_sum, " +
-        "list_min(codes) AS code_min, list_max(codes) AS code_max FROM q"),
-    "q89_revenue_share" ->
-      ("WITH f AS (SELECT c_mktsegment, " +
-        s"${money.r2Sql("l_extendedprice * (1.0 - l_discount)")} AS revenue " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey), " +
-        "seg AS (SELECT c_mktsegment, " +
-        "CAST(sum(CAST(floor(revenue * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents " +
-        "FROM f GROUP BY c_mktsegment) " +
-        "SELECT c_mktsegment, CAST(cents AS DOUBLE) / 100.0 AS segment_revenue, " +
-        "round(CAST(cents AS DOUBLE) / CAST(sum(cents) OVER () AS DOUBLE), 6) AS revenue_share " +
-        "FROM seg"),
-    "q90_union_by_name" ->
-      ("SELECT count(*) AS n_rows, count(o_totalprice) AS n_with_price, " +
-        "count(o_orderpriority) AS n_with_priority FROM (" +
-        "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'F' " +
-        "UNION ALL BY NAME " +
-        "SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderstatus = 'O') u"),
-    // DuckDB's skewness/kurtosis apply sample-size corrections; spell
-    // Spark's population definitions as explicit central moments instead
-    "q91_price_shape" ->
-      ("WITH m AS (SELECT l_returnflag, l_extendedprice AS x, " +
-        "avg(l_extendedprice) OVER (PARTITION BY l_returnflag) AS mu FROM lineitem), " +
-        "c AS (SELECT l_returnflag, count(*) AS n, " +
-        "avg((x-mu)*(x-mu)) AS m2, avg((x-mu)*(x-mu)*(x-mu)) AS m3, " +
-        "avg((x-mu)*(x-mu)*(x-mu)*(x-mu)) AS m4 FROM m GROUP BY l_returnflag) " +
-        "SELECT l_returnflag, n, round(m3 / pow(m2, 1.5), 6) AS skew, " +
-        "round(m4 / (m2 * m2) - 3.0, 6) AS kurt FROM c"),
-    // the sketch has no false negatives above the support threshold, so
-    // containment of the exact mode is a hard guarantee, not luck
-    "q92_freq_items_gate" ->
-      ("SELECT (SELECT o_orderstatus FROM orders GROUP BY o_orderstatus " +
-        "ORDER BY count(*) DESC, o_orderstatus LIMIT 1) AS top_status, TRUE AS found"),
-    "q93_decontamination" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks, " +
-        "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS nib FROM documents), " +
-        "s AS (SELECT doc_id, nib IN ('0','1') AS is_eval, " +
-        "array_to_string(toks[i:i+7], ' ') AS sh " +
-        "FROM t, unnest(generate_series(1, len(toks) - 7)) AS u(i)), " +
-        "e AS (SELECT DISTINCT doc_id, sh FROM s WHERE is_eval), " +
-        "tr AS (SELECT DISTINCT sh FROM s WHERE NOT is_eval) " +
-        "SELECT e.doc_id, count(*) AS n_shingles, count(tr.sh) AS n_shared, " +
-        "(count(tr.sh) > 0) AS contaminated " +
-        "FROM e LEFT JOIN tr ON e.sh = tr.sh GROUP BY e.doc_id"),
-    "q94_token_chunks" ->
-      (s"WITH t AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens " +
-        "FROM documents), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM t, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"),
-    "q95_sequence_packing" ->
-      (s"WITH t AS (SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS n_tokens " +
-        "FROM documents), " +
-        "c AS (SELECT doc_id, source, n_tokens, sum(n_tokens) OVER (" +
-        "PARTITION BY source ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM t) " +
-        "SELECT doc_id, source, n_tokens, CAST(cum AS BIGINT) AS cum_tokens, " +
-        "CAST((cum - n_tokens) // 4096 AS BIGINT) AS start_bin, " +
-        "CAST((cum - 1) // 4096 AS BIGINT) AS end_bin FROM c"),
-    // explicit 1970 origin keeps time_bucket on Spark's epoch-aligned grid
-    "q96_window_distinct_users" ->
-      ("SELECT time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP), " +
-        "TIMESTAMP '1970-01-01') AS window_start, " +
-        "count(DISTINCT user_id) AS exact_users, count(*) AS n_events, " +
-        "TRUE AS approx_ok FROM events GROUP BY 1"),
-    "q97_above_own_avg" ->
-      ("SELECT o_custkey, count(*) AS n_above FROM orders o " +
-        "WHERE o_totalprice > (SELECT avg(o2.o_totalprice) FROM orders o2 " +
-        "WHERE o2.o_custkey = o.o_custkey) GROUP BY o_custkey"),
-    "q98_regex_matches" ->
-      (s"SELECT doc_id, CAST(len(regexp_extract_all($normSql, " +
-        """'\b[aeiou][a-z]{3,}\b')) AS INTEGER) AS n_matches, """ +
-        s"regexp_extract_all($normSql, " +
-        """'\b[aeiou][a-z]{3,}\b')[1] AS first_match FROM documents"""),
-    // missing map keys read as NULL on the Spark side; spell the same
-    // absent-vs-zero distinction with NULLIF over conditional counts
-    "q99_status_count_map" ->
-      ("SELECT bucket, " +
-        "CASE WHEN cnt_o = 0 THEN NULL ELSE cnt_o END AS n_open, " +
-        "CASE WHEN cnt_f = 0 THEN NULL ELSE cnt_f END AS n_final, " +
-        "CASE WHEN cnt_p = 0 THEN NULL ELSE cnt_p END AS n_pending FROM (" +
-        "SELECT o_custkey % 10 AS bucket, " +
-        "CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS cnt_o, " +
-        "CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS cnt_f, " +
-        "CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS cnt_p " +
-        "FROM orders GROUP BY 1) t"),
-    "q100_per_source_cap" ->
-      ("SELECT doc_id, source, CAST(rn AS INTEGER) AS sample_rank FROM (" +
-        "SELECT doc_id, source, row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM documents) t " +
-        "WHERE rn <= 40"),
-    "q101_source_upsample" ->
-      ("SELECT doc_id, source, CAST(i AS INTEGER) AS copy_idx FROM documents, " +
-        "unnest(generate_series(1, CASE WHEN source = 'src0' THEN 3 " +
-        "WHEN source = 'src1' THEN 2 ELSE 1 END)) AS u(i)"),
-    "q102_time_weighted_value" ->
-      ("WITH e AS (SELECT user_id, value, epoch(CAST(ts AS TIMESTAMP)) AS sec, " +
-        "lead(epoch(CAST(ts AS TIMESTAMP))) OVER (PARTITION BY user_id " +
-        "ORDER BY epoch(CAST(ts AS TIMESTAMP)), event_id) AS next_sec FROM events) " +
-        "SELECT user_id, " +
-        "round(sum(value * (next_sec - sec)) / sum(next_sec - sec), 6) AS tw_avg, " +
-        "count(*) AS n_intervals FROM e WHERE next_sec IS NOT NULL GROUP BY user_id"),
-    "q103_retention_cohorts" ->
-      ("WITH o AS (SELECT o_custkey, CAST(year(CAST(o_orderdate AS DATE)) * 12 + " +
-        "month(CAST(o_orderdate AS DATE)) AS INTEGER) AS m FROM orders), " +
-        "f AS (SELECT o_custkey, min(m) AS cohort_m FROM o GROUP BY o_custkey) " +
-        "SELECT cohort_m, o.m - cohort_m AS months_since, " +
-        "count(DISTINCT o.o_custkey) AS n_active " +
-        "FROM o JOIN f USING (o_custkey) GROUP BY 1, 2"),
-    "q104_rfm_scores" ->
-      ("WITH per AS (SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_order, " +
-        "count(*) AS frequency, " +
-        "CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS monetary_cents " +
-        "FROM orders GROUP BY o_custkey) " +
-        "SELECT o_custkey, frequency, monetary_cents, " +
-        "CAST(ntile(4) OVER (ORDER BY last_order DESC, o_custkey) AS INTEGER) AS r_score, " +
-        "CAST(ntile(4) OVER (ORDER BY frequency DESC, o_custkey) AS INTEGER) AS f_score, " +
-        "CAST(ntile(4) OVER (ORDER BY monetary_cents DESC, o_custkey) AS INTEGER) AS m_score, " +
-        "CAST(ntile(4) OVER (ORDER BY last_order DESC, o_custkey) * 100 + " +
-        "ntile(4) OVER (ORDER BY frequency DESC, o_custkey) * 10 + " +
-        "ntile(4) OVER (ORDER BY monetary_cents DESC, o_custkey) AS INTEGER) AS rfm " +
-        "FROM per"),
-    "q105_abc_parts" ->
-      ("WITH per AS (SELECT l_partkey, " +
-        s"CAST(sum(CAST(floor((${money.r2Sql("l_extendedprice * (1.0 - l_discount)")}) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents " +
-        "FROM lineitem GROUP BY l_partkey), " +
-        "c AS (SELECT l_partkey, CAST(cents AS DOUBLE) / 100.0 AS part_revenue, " +
-        "CAST(sum(cents) OVER (ORDER BY cents DESC, l_partkey " +
-        "ROWS UNBOUNDED PRECEDING) AS DOUBLE) / " +
-        "CAST(sum(cents) OVER () AS DOUBLE) AS cum_share FROM per) " +
-        "SELECT l_partkey, part_revenue, " +
-        "CASE WHEN cum_share <= 0.80 THEN 'A' WHEN cum_share <= 0.95 THEN 'B' " +
-        "ELSE 'C' END AS abc_class, round(cum_share, 6) AS cum_share FROM c"),
-    "q106_forward_fill" ->
-      ("WITH e AS (SELECT event_id, user_id, ts, " +
-        "CASE WHEN event_type = 'click' " +
-        "THEN CAST(json_extract(props, '$.k') AS INTEGER) END AS k_raw FROM events) " +
-        "SELECT event_id, user_id, k_raw, " +
-        "last_value(k_raw IGNORE NULLS) OVER (PARTITION BY user_id " +
-        "ORDER BY epoch(CAST(ts AS TIMESTAMP)), event_id " +
-        "ROWS UNBOUNDED PRECEDING) AS k_filled FROM e"),
-    "q107_price_mad" ->
-      ("WITH med AS (SELECT o_orderstatus, quantile_cont(o_totalprice, 0.5) AS med " +
-        "FROM orders GROUP BY 1) " +
-        "SELECT o.o_orderstatus, count(*) AS n, " +
-        "round(quantile_cont(abs(o_totalprice - med), 0.5), 4) AS mad " +
-        "FROM orders o JOIN med USING (o_orderstatus) GROUP BY o.o_orderstatus"),
-    "q108_revenue_gini" ->
-      ("WITH per AS (SELECT o_custkey, " +
-        "CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents " +
-        "FROM orders GROUP BY o_custkey), " +
-        "r AS (SELECT cents, row_number() OVER (ORDER BY cents, o_custkey) AS i FROM per), " +
-        "s AS (SELECT count(*) AS n, CAST(sum(cents) AS BIGINT) AS s0, " +
-        "CAST(sum(i * cents) AS BIGINT) AS s1 FROM r) " +
-        "SELECT n, round(CAST(2 * s1 - (n + 1) * s0 AS DOUBLE) / " +
-        "CAST(n * s0 AS DOUBLE), 6) AS gini FROM s"),
-    "q109_source_entropy" ->
-      ("WITH c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source), " +
-        "p AS (SELECT cnt, CAST(cnt AS DOUBLE) / CAST(sum(cnt) OVER () AS DOUBLE) AS p FROM c) " +
-        "SELECT count(*) AS n_sources, round(-sum(p * ln(p)), 6) AS entropy_nats FROM p"),
-    "q110_monthly_yoy" ->
-      ("WITH m AS (SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month_start, " +
-        "CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cents " +
-        "FROM orders GROUP BY 1) " +
-        "SELECT a.month_start, CAST(a.cents AS DOUBLE) / 100.0 AS revenue, " +
-        "round((CAST(a.cents AS DOUBLE) - CAST(b.cents AS DOUBLE)) / " +
-        "CAST(b.cents AS DOUBLE), 6) AS yoy_growth " +
-        "FROM m a LEFT JOIN m b ON a.month_start = b.month_start + INTERVAL 12 MONTH"),
-    // exact-dup groups keyed on the normalized TEXT here; the engine keys on
-    // its 128-bit hash — identical grouping barring a ~2^-128 collision
-    "q111_dup_cluster_sizes" ->
-      (s"WITH g AS (SELECT $normSql AS norm, count(*) AS n_copies " +
-        "FROM documents GROUP BY 1) " +
-        "SELECT n_copies, count(*) AS n_groups FROM g GROUP BY n_copies"),
-    "q112_status_priority_chi2" ->
-      ("WITH o AS (SELECT o_orderstatus, o_orderpriority, " +
-        "CAST(count(*) AS DOUBLE) AS obs FROM orders GROUP BY 1, 2), " +
-        "grid AS (SELECT a.o_orderstatus, b.o_orderpriority FROM " +
-        "(SELECT DISTINCT o_orderstatus FROM orders) a CROSS JOIN " +
-        "(SELECT DISTINCT o_orderpriority FROM orders) b), " +
-        "f AS (SELECT coalesce(obs, 0.0) AS obs, g.o_orderstatus, g.o_orderpriority " +
-        "FROM grid g LEFT JOIN o USING (o_orderstatus, o_orderpriority)), " +
-        "t AS (SELECT obs, sum(obs) OVER (PARTITION BY o_orderstatus) AS rt, " +
-        "sum(obs) OVER (PARTITION BY o_orderpriority) AS ct, " +
-        "sum(obs) OVER () AS g FROM f) " +
-        "SELECT count(*) AS n_cells, " +
-        "round(sum((obs - rt*ct/g) * (obs - rt*ct/g) / (rt*ct/g)), 6) AS chi2 FROM t"),
-    "q113_char_entropy" ->
-      (s"WITH ch AS (SELECT doc_id, c AS ch FROM (SELECT doc_id, " +
-        s"string_split($normSql, '') AS cs FROM documents) t, unnest(cs) AS u(c) " +
-        "WHERE c <> ''), " +
-        "cnt AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) AS cnt FROM ch GROUP BY 1, 2), " +
-        "wt AS (SELECT doc_id, cnt, sum(cnt) OVER (PARTITION BY doc_id) AS tot FROM cnt) " +
-        "SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_chars, " +
-        "round(-sum((CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE)) * " +
-        "ln(CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE))), 6) AS char_entropy " +
-        "FROM wt GROUP BY doc_id"),
-    "q114_source_quality" ->
-      (s"WITH q AS (SELECT source, CAST(len(toks) AS DOUBLE) AS n_tokens, " +
-        "CASE WHEN len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2 " +
-        "THEN 1 ELSE 0 END AS passes " +
-        s"FROM (SELECT source, $toksSql AS toks FROM documents) t) " +
-        "SELECT source, count(*) AS n_docs, " +
-        "round(CAST(sum(passes) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS pass_rate, " +
-        "round(avg(n_tokens), 6) AS avg_tokens FROM q GROUP BY source"),
-    "q115_status_transitions" ->
-      ("SELECT prev_status, o_orderstatus, count(*) AS n_transitions FROM (" +
-        "SELECT o_orderstatus, lag(o_orderstatus) OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_orderdate, o_orderkey) AS prev_status FROM orders) t " +
-        "WHERE prev_status IS NOT NULL GROUP BY 1, 2"),
-    "q116_copurchase_lift" ->
-      ("WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem), " +
-        "n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders_total FROM op), " +
-        "ic AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_orders FROM op GROUP BY 1), " +
-        "pc AS (SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, " +
-        "CAST(count(*) AS BIGINT) AS n_together " +
-        "FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-        "GROUP BY 1, 2 HAVING count(*) >= 3) " +
-        "SELECT part_a, part_b, n_together, " +
-        "round(CAST(n_together AS DOUBLE) * CAST(n_orders_total AS DOUBLE) / " +
-        "(CAST(ia.n_orders AS DOUBLE) * CAST(ib.n_orders AS DOUBLE)), 6) AS lift " +
-        "FROM pc CROSS JOIN n " +
-        "JOIN ic ia ON ia.l_partkey = part_a JOIN ic ib ON ib.l_partkey = part_b"),
-    "q117_price_deciles" ->
-      ("SELECT decile, count(*) AS n_orders, min(o_totalprice) AS min_price, " +
-        "max(o_totalprice) AS max_price FROM (" +
-        "SELECT o_totalprice, CAST(ntile(10) OVER (ORDER BY o_totalprice, o_orderkey) " +
-        "AS INTEGER) AS decile FROM orders) t GROUP BY decile"),
-    "q118_null_semantics" ->
-      ("WITH t AS (SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL ELSE o_orderkey % 5 END AS x, " +
-        "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderkey % 5 END AS y FROM orders) " +
-        "SELECT count(*) AS n_rows, " +
-        "CAST(sum(CASE WHEN x = y THEN 1 ELSE 0 END) AS BIGINT) AS n_eq, " +
-        "CAST(sum(CASE WHEN x IS NOT DISTINCT FROM y THEN 1 ELSE 0 END) AS BIGINT) AS n_null_safe_eq, " +
-        "CAST(sum(CASE WHEN x IS NULL AND y IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_both_null, " +
-        "count(x) AS n_x_present, count(y) AS n_y_present FROM t"),
-    "q119_peak_concurrency" ->
-      ("WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, " +
-        "epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "g AS (SELECT *, CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) > 1800 THEN 1 ELSE 0 END AS new_session FROM e), " +
-        "i AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq FROM g), " +
-        "s AS (SELECT min(sec) AS start_sec, max(sec) - min(sec) AS duration_sec " +
-        "FROM i GROUP BY user_id, session_seq), " +
-        "m AS (SELECT start_sec AS sec, 1 AS delta FROM s " +
-        "UNION ALL SELECT start_sec + duration_sec, -1 FROM s), " +
-        "r AS (SELECT sum(delta) OVER (ORDER BY sec, delta DESC " +
-        "ROWS UNBOUNDED PRECEDING) AS concurrent FROM m) " +
-        "SELECT CAST(max(concurrent) AS BIGINT) AS peak_concurrency, " +
-        "CAST(count(*) / 2 AS BIGINT) AS n_sessions FROM r"),
-    "q120_weighted_discount" ->
-      ("SELECT l_returnflag, " +
-        "round(sum(l_discount * l_quantity) / sum(l_quantity), 6) AS qty_weighted_discount, " +
-        "round(avg(l_discount), 6) AS unweighted_discount, count(*) AS n " +
-        "FROM lineitem GROUP BY l_returnflag"),
-    "q121_filtered_aggs" ->
-      ("SELECT o_orderstatus, count(*) AS n_all, " +
-        "count(*) FILTER (WHERE o_totalprice > 200000) AS n_large, " +
-        "count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent, " +
-        "CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) " +
-        "FILTER (WHERE o_orderpriority = '1-URGENT') AS DOUBLE) / 100.0 AS urgent_revenue " +
-        "FROM orders GROUP BY o_orderstatus"),
-    "q122_lateral_topk" ->
-      ("SELECT s.c_mktsegment, t.o_orderkey, t.o_totalprice " +
-        "FROM (SELECT DISTINCT c_mktsegment FROM customer) s, " +
-        "LATERAL (SELECT o_orderkey, o_totalprice " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey " +
-        "WHERE c_mktsegment = s.c_mktsegment " +
-        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) t"),
-    "q123_moving_avg" ->
-      ("WITH d AS (SELECT o_orderdate AS day, " +
-        "sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS cents " +
-        "FROM orders GROUP BY 1), " +
-        // o_orderdate is TIMESTAMP in the parquet: cast to DATE so the
-        // subtraction yields integer days (TIMESTAMP - DATE is an INTERVAL)
-        "n AS (SELECT day, cents, CAST(day AS DATE) - DATE '1970-01-01' AS daynum FROM d) " +
-        "SELECT day, CAST(cents AS DOUBLE) / 100.0 AS day_revenue, " +
-        "count(*) OVER w AS n_days_in_window, " +
-        "CAST(sum(cents) OVER w AS DOUBLE) / " +
-        "CAST(count(*) OVER w * 100 AS DOUBLE) AS ma7 " +
-        "FROM n WINDOW w AS (ORDER BY daynum RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)"),
-    "q124_map_share" ->
-      ("WITH c AS (SELECT o_orderpriority, o_orderstatus, count(*) AS n " +
-        "FROM orders GROUP BY 1, 2), " +
-        "t AS (SELECT o_orderpriority, CAST(sum(n) AS BIGINT) AS total FROM c GROUP BY 1) " +
-        "SELECT c.o_orderpriority, c.o_orderstatus, n, total, " +
-        "round(CAST(n AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share " +
-        "FROM c JOIN t USING (o_orderpriority) WHERE n * 20 >= total"),
-    // sketch estimates are engine-specific by design: the verified output is
-    // the probe size plus the CMS hard guarantees (never underestimates,
-    // within eps*N at the configured confidence), like q37/q84/q92
-    "q125_cms_gate" ->
-      ("SELECT CAST(10 AS BIGINT) AS n_probes, CAST(0 AS BIGINT) AS n_underest, " +
-        "TRUE AS within_bound"),
-    "q126_benford" ->
-      ("WITH d AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice * 100.0 + 0.5) " +
-        "AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit " +
-        "FROM orders WHERE o_totalprice > 0), " +
-        "g AS (SELECT digit, count(*) AS n FROM d GROUP BY 1) " +
-        "SELECT digit, n, " +
-        "round(CAST(n AS DOUBLE) / CAST(sum(n) OVER () AS DOUBLE), 6) AS share, " +
-        "round(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 6) AS benford_expected FROM g"),
-    "q127_sentence_stats" ->
-      ("WITH s AS (SELECT doc_id, list_filter(list_transform(" +
-        "regexp_split_to_array(text, '[.!?]+'), x -> trim(x)), x -> len(x) > 0) AS sents " +
-        "FROM documents) " +
-        "SELECT doc_id, CAST(len(sents) AS INTEGER) AS n_sentences, " +
-        "CASE WHEN len(sents) > 0 THEN " +
-        "round(CAST(list_sum(list_transform(sents, x -> len(x))) AS DOUBLE) / " +
-        "CAST(len(sents) AS DOUBLE), 4) END AS avg_sentence_chars FROM s"),
-    "q128_masked_pii" ->
-      ("SELECT c_custkey, sha256(c_name) AS name_hash, " +
-        "left(c_name, 1) || '***' AS name_masked, " +
-        "CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS acctbal_bucket FROM customer"),
-    "q129_grouping_id" ->
-      ("SELECT o_orderstatus, o_orderpriority, " +
-        "CAST(grouping(o_orderstatus) AS INTEGER) AS g_status, " +
-        "CAST(grouping(o_orderpriority) AS INTEGER) AS g_prio, " +
-        "CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS INTEGER) AS gid, " +
-        "count(*) AS n FROM orders " +
-        "GROUP BY ROLLUP(o_orderstatus, o_orderpriority)"),
-    // gap semantics: a new session starts at >= gap (session_window merges
-    // only when the next event lands strictly inside [last, last+gap))
-    "q130_session_window" ->
-      ("WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, " +
-        "epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "g AS (SELECT *, CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id) >= 1800 THEN 1 ELSE 0 END AS new_session FROM e), " +
-        "i AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id " +
-        "ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM g) " +
-        "SELECT user_id, min(ts) AS session_start, " +
-        "max(ts) + INTERVAL 30 MINUTE AS session_end, " +
-        "count(*) AS n_events FROM i GROUP BY user_id, session_seq"),
-    "q131_bool_aggs" ->
-      ("SELECT o_orderstatus, bool_and(o_totalprice > 1000.0) AS all_over_1k, " +
-        "bool_or(o_orderpriority = '1-URGENT') AS any_urgent, count(*) AS n " +
-        "FROM orders GROUP BY o_orderstatus"),
-    "q132_percentile_disc" ->
-      ("SELECT o_orderstatus, " +
-        "quantile_disc(o_totalprice, 0.25) AS p25, " +
-        "quantile_disc(o_totalprice, 0.5) AS p50, " +
-        "quantile_disc(o_totalprice, 0.75) AS p75, " +
-        "count(*) AS n FROM orders GROUP BY o_orderstatus"),
-    "q133_zipf_slope" ->
-      (s"WITH tf AS (SELECT token, count(*) AS n_occurrences FROM " +
-        s"(SELECT unnest($toksSql) AS token FROM documents) GROUP BY token), " +
-        "r AS (SELECT token, n_occurrences, row_number() OVER " +
-        "(ORDER BY n_occurrences DESC, token) AS rank FROM tf) " +
-        "SELECT count(*) AS n_terms, " +
-        "round(regr_slope(ln(n_occurrences), ln(rank)), 6) AS zipf_slope, " +
-        "round(regr_r2(ln(n_occurrences), ln(rank)), 6) AS fit_r2 " +
-        "FROM r WHERE rank <= 200"),
-    "q134_temperature_mixture" ->
-      ("WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source), " +
-        "w AS (SELECT source, n_docs, " +
-        "round(pow(CAST(n_docs AS DOUBLE), 0.7) / " +
-        "sum(pow(CAST(n_docs AS DOUBLE), 0.7)) OVER (), 6) AS weight, " +
-        "CAST(sum(n_docs) OVER () AS BIGINT) AS total FROM c) " +
-        "SELECT source, n_docs, weight, " +
-        "CAST(floor(weight * CAST(total AS DOUBLE) + 0.5) AS BIGINT) AS target_docs FROM w"),
-    "q135_interleave_plan" ->
-      ("WITH s AS (SELECT source, CAST(row_number() OVER (ORDER BY source) AS BIGINT) " +
-        "AS source_idx FROM (SELECT DISTINCT source FROM documents)), " +
-        "n AS (SELECT count(*) AS ns FROM s), " +
-        "r AS (SELECT doc_id, source, CAST(row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INTEGER) AS rn FROM documents) " +
-        "SELECT doc_id, r.source, rn, (rn - 1) * ns + source_idx - 1 AS epoch_pos " +
-        "FROM r JOIN s ON r.source = s.source CROSS JOIN n"),
-    "q136_regr_family" ->
-      ("SELECT l_returnflag, " +
-        "CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n_pairs, " +
-        "round(regr_avgx(l_extendedprice, l_quantity), 6) AS avg_qty, " +
-        "round(regr_avgy(l_extendedprice, l_quantity), 6) AS avg_price, " +
-        "round(regr_r2(l_extendedprice, l_quantity), 6) AS r2 " +
-        "FROM lineitem GROUP BY l_returnflag"),
-    "q137_hof_predicates" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents) " +
-        "SELECT doc_id, " +
-        "len(list_filter(toks, x -> x = 'the')) > 0 AS has_the, " +
-        "len(list_filter(toks, x -> len(x) > 15)) = 0 AS all_short, " +
-        "CAST(len(list_filter(toks, x -> len(x) >= 8)) AS INTEGER) AS n_long FROM t"),
-    "q138_bit_ops" ->
-      ("SELECT o_orderkey, CAST(bit_count(o_orderkey) AS INTEGER) AS bits_set, " +
-        "o_orderkey & 255 AS low_byte, " +
-        "xor(o_orderkey, o_custkey) AS xor_cust, " +
-        "o_orderkey << 2 AS shifted FROM orders"),
-    "q139_bitmap_distinct" ->
-      ("SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_customers " +
-        "FROM orders GROUP BY o_orderstatus"),
-    "q140_xml_roundtrip" ->
-      "SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders",
-    "q141_listagg_nations" ->
-      ("SELECT n_regionkey, string_agg(n_name, '|' ORDER BY n_name) AS nations, " +
-        "count(*) AS n_nations FROM nation GROUP BY n_regionkey"),
-    "q142_bigram_pmi" ->
-      (s"WITH t AS (SELECT $toksSql AS ts FROM documents), " +
-        "bg AS (SELECT unnest(list_zip(ts[1:len(ts)-1], ts[2:len(ts)])) AS p FROM t), " +
-        "bc AS (SELECT p[1] AS tok_a, p[2] AS tok_b, count(*) AS n_ab " +
-        "FROM bg GROUP BY 1, 2), " +
-        "uc AS (SELECT unnest(ts) AS tok FROM t), " +
-        "ug AS (SELECT tok, count(*) AS n_tok FROM uc GROUP BY tok), " +
-        "tot AS (SELECT (SELECT sum(n_ab) FROM bc) AS nb, (SELECT sum(n_tok) FROM ug) AS nt) " +
-        "SELECT tok_a, tok_b, n_ab, " +
-        "round(ln((CAST(n_ab AS DOUBLE) / CAST(nb AS DOUBLE)) / " +
-        "((CAST(a.n_tok AS DOUBLE) / CAST(nt AS DOUBLE)) * " +
-        "(CAST(b.n_tok AS DOUBLE) / CAST(nt AS DOUBLE)))), 6) AS pmi " +
-        "FROM bc JOIN ug a ON bc.tok_a = a.tok JOIN ug b ON bc.tok_b = b.tok " +
-        "CROSS JOIN tot WHERE n_ab >= 5 " +
-        "ORDER BY pmi DESC, tok_a, tok_b LIMIT 30"),
-    // PQ gate: anchors any engine can count; recall + ADC-rank bounds
-    // pinned TRUE (quantization internals are engine-specific by design)
-    "q143_pq_topk" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok, TRUE AS rank_ok FROM embeddings WHERE vec_id < 20"),
-    "q153_ivfpq_topk" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok FROM embeddings WHERE vec_id < 20"),
-    "q144_triangle_count" ->
-      ("WITH e AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb FROM lineitem a " +
-        "JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-        "GROUP BY 1, 2 HAVING count(*) >= 2), " +
-        "tri AS (SELECT 1 AS one FROM e e1 JOIN e e2 ON e1.pb = e2.pa " +
-        "JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb), " +
-        "v AS (SELECT count(DISTINCT x) AS nv FROM " +
-        "(SELECT pa AS x FROM e UNION ALL SELECT pb FROM e)) " +
-        "SELECT CAST(nv AS BIGINT) AS n_vertices, " +
-        "CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges, " +
-        "CAST((SELECT count(*) FROM tri) AS BIGINT) AS n_triangles FROM v"),
-    "q145_user_value_ewma" ->
-      ("WITH s AS (SELECT user_id, list(CAST(value AS DOUBLE) ORDER BY ts, event_id) AS xs " +
-        "FROM events GROUP BY user_id) " +
-        "SELECT user_id, CAST(len(xs) AS BIGINT) AS n_events, " +
-        "list_reduce(xs, (acc, x) -> CAST(0.25 AS DOUBLE) * x + CAST(0.75 AS DOUBLE) * acc) " +
-        "AS ewma_value FROM s"),
-    "q146_ks_price_by_status" ->
-      ("WITH c AS (SELECT o_totalprice AS v, " +
-        "CAST(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS BIGINT) AS ia FROM orders), " +
-        "g AS (SELECT v, sum(ia) AS ca, sum(1 - ia) AS cb FROM c GROUP BY v), " +
-        "cd AS (SELECT v, sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING " +
-        "AND CURRENT ROW) AS cum_a, sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED " +
-        "PRECEDING AND CURRENT ROW) AS cum_b FROM g), " +
-        "t AS (SELECT sum(ca) AS ta, sum(cb) AS tb FROM g) " +
-        "SELECT CAST(max(ta) AS BIGINT) AS n_a, CAST(max(tb) AS BIGINT) AS n_b, " +
-        "max(abs(CAST(cum_a AS DOUBLE) / CAST(ta AS DOUBLE) - " +
-        "CAST(cum_b AS DOUBLE) / CAST(tb AS DOUBLE))) AS ks_d FROM cd CROSS JOIN t"),
-    "q147_source_js_divergence" ->
-      ("WITH cell AS (SELECT source, lang, count(*) AS cnt FROM documents GROUP BY 1, 2), " +
-        "s AS (SELECT source, sum(cnt) AS n_source FROM cell GROUP BY source), " +
-        "l AS (SELECT lang, sum(cnt) AS n_lang FROM cell GROUP BY lang), " +
-        "tt AS (SELECT sum(cnt) AS n_total FROM cell), " +
-        "grid AS (SELECT s.source, l.lang, s.n_source, l.n_lang, " +
-        "coalesce(cell.cnt, 0) AS cnt FROM s CROSS JOIN l " +
-        "LEFT JOIN cell ON cell.source = s.source AND cell.lang = l.lang), " +
-        "terms AS (SELECT source, n_source, " +
-        "CAST(cnt AS DOUBLE) / CAST(n_source AS DOUBLE) AS p, " +
-        "CAST(n_lang AS DOUBLE) / CAST(n_total AS DOUBLE) AS q FROM grid CROSS JOIN tt) " +
-        "SELECT source, CAST(max(n_source) AS BIGINT) AS n_docs, " +
-        "round(sum((CASE WHEN p > 0 THEN p * ln(p / ((p + q) / 2.0)) ELSE 0.0 END) * 0.5 + " +
-        "(CASE WHEN q > 0 THEN q * ln(q / ((p + q) / 2.0)) ELSE 0.0 END) * 0.5), 6) " +
-        "AS js_divergence FROM terms GROUP BY source"),
-    "q148_activity_streaks" ->
-      ("WITH days AS (SELECT DISTINCT user_id, " +
-        "CAST(floor(epoch(ts) / 86400) AS BIGINT) AS d FROM events), " +
-        "isl AS (SELECT user_id, d - row_number() OVER " +
-        "(PARTITION BY user_id ORDER BY d) AS island FROM days), " +
-        "runs AS (SELECT user_id, island, count(*) AS len FROM isl GROUP BY 1, 2) " +
-        "SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days, " +
-        "CAST(max(len) AS BIGINT) AS longest_streak FROM runs GROUP BY user_id"),
-    "q149_lexical_diversity" ->
-      (s"WITH tok AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents), " +
-        "c AS (SELECT doc_id, tok, count(*) AS cnt FROM tok GROUP BY 1, 2) " +
-        "SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens, " +
-        "CAST(count(*) AS BIGINT) AS n_types, " +
-        "CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, " +
-        "round(CAST(count(*) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE), 6) " +
-        "AS type_token_ratio FROM c GROUP BY doc_id"),
-    "q150_prefix_dups" ->
-      (s"WITH k AS (SELECT array_to_string(($toksSql)[1:16], ' ') AS pk FROM documents), " +
-        "g AS (SELECT pk, count(*) AS n FROM k GROUP BY pk) " +
-        "SELECT CAST(count(*) AS BIGINT) AS n_dup_groups, " +
-        "CAST(coalesce(sum(n), 0) AS BIGINT) AS n_docs_in_groups, " +
-        "CAST(coalesce(max(n), 0) AS BIGINT) AS max_group FROM g WHERE n > 1"),
-    "q151_syllable_complexity" ->
-      (s"WITH tok AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents), " +
-        "s AS (SELECT doc_id, len(regexp_extract_all(tok, '[aeiouy]+')) AS syl FROM tok) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, " +
-        "CAST(sum(syl) AS BIGINT) AS n_syllables, " +
-        "round(CAST(sum(syl) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS avg_syllables, " +
-        "round(CAST(sum(CASE WHEN syl >= 3 THEN 1 ELSE 0 END) AS DOUBLE) / " +
-        "CAST(count(*) AS DOUBLE), 6) AS polysyllabic_ratio FROM s GROUP BY doc_id"),
-    "q152_copurchase_reachability" ->
-      ("WITH RECURSIVE pairs AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb " +
-        "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
-        "AND a.l_partkey < b.l_partkey GROUP BY 1, 2 HAVING count(*) >= 2), " +
-        "e AS (SELECT pa AS src, pb AS dst FROM pairs " +
-        "UNION ALL SELECT pb AS src, pa AS dst FROM pairs), " +
-        "r(part, dist) AS (SELECT (SELECT min(pa) FROM pairs), 0 " +
-        "UNION ALL SELECT e.dst, r.dist + 1 FROM r JOIN e ON e.src = r.part " +
-        "WHERE r.dist < 2) " +
-        "SELECT part, min(dist) AS hops FROM r GROUP BY part"),
-    "q154_revenue_autocorr" ->
-      (s"WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d, " +
-        s"${money.sumMoneySql("o_totalprice")} AS rev FROM orders GROUP BY 1) " +
-        "SELECT CAST(count(*) AS BIGINT) AS n_pairs, " +
-        "round(corr(a.rev, b.rev), 6) AS autocorr " +
-        "FROM daily a JOIN daily b ON b.d = a.d + INTERVAL 7 DAY"),
-    "q155_text_cleanup" -> {
-      val accents      = "áàâäãåéèêëíìîïóòôöõúùûüýÿñçÁÀÂÄÃÅÉÈÊËÍÌÎÏÓÒÔÖÕÚÙÛÜÝÑÇ"
-      val replacements = "aaaaaaeeeeiiiiooooouuuuyyncAAAAAAEEEEIIIIOOOOOUUUUYNC"
-      "SELECT doc_id, CAST(len(clean) AS INTEGER) AS clean_len, " +
-        "CAST(len(text) - len(clean) AS INTEGER) AS n_removed FROM " +
-        "(SELECT doc_id, text, trim(regexp_replace(translate(" +
-        "regexp_replace(text, '[\\x00-\\x1f\\x7f]+', ' ', 'g'), " +
-        s"'$accents', '$replacements'), '\\s+', ' ', 'g')) AS clean FROM documents)"
-    },
-    "q156_price_outliers" ->
-      ("WITH med AS (SELECT o_orderstatus, quantile_cont(o_totalprice, 0.5) AS med " +
-        "FROM orders GROUP BY 1), " +
-        "mad AS (SELECT o.o_orderstatus, max(med) AS med, " +
-        "quantile_cont(abs(o_totalprice - med), 0.5) AS mad " +
-        "FROM orders o JOIN med USING (o_orderstatus) GROUP BY o.o_orderstatus) " +
-        "SELECT o.o_orderstatus, count(*) AS n, " +
-        "CAST(sum(CASE WHEN abs(o_totalprice - med) > 3.0 * mad THEN 1 ELSE 0 END) " +
-        "AS BIGINT) AS n_outliers, " +
-        "round(CAST(sum(CASE WHEN abs(o_totalprice - med) > 3.0 * mad THEN 1 ELSE 0 END) " +
-        "AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS outlier_rate " +
-        "FROM orders o JOIN mad USING (o_orderstatus) GROUP BY o.o_orderstatus"),
-    "q157_weighted_sample" ->
-      ("SELECT doc_id, CAST(n_chars AS BIGINT) AS weight, " +
-        "CAST(n_chars AS DOUBLE) / " +
-        "((('0x' || substring(md5('pr1' || CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT + 1) " +
-        "/ 4294967297.0) AS priority " +
-        "FROM documents WHERE n_chars > 0 ORDER BY priority DESC, doc_id LIMIT 20"),
-    "q158_mannwhitney_u" ->
-      ("WITH c AS (SELECT o_totalprice AS v, " +
-        "CAST(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS BIGINT) AS ia FROM orders), " +
-        "g AS (SELECT v, sum(ia) AS ca, sum(1 - ia) AS cb FROM c GROUP BY v), " +
-        "r AS (SELECT ca, cb, sum(ca + cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED " +
-        "PRECEDING AND CURRENT ROW) - (ca + cb) AS bef FROM g), " +
-        "t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g), " +
-        "agg AS (SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b, " +
-        "sum(CAST(ca AS DOUBLE) * (CAST(bef AS DOUBLE) + CAST(ca + cb + 1 AS DOUBLE) / 2.0)) " +
-        "- CAST(max(na * (na + 1)) AS DOUBLE) / 2.0 AS u_a FROM r CROSS JOIN t) " +
-        "SELECT n_a, n_b, u_a, " +
-        "CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) - u_a AS u_b FROM agg"),
-    "q159_copurchase_triples" ->
-      ("WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) " +
-        "SELECT x.l_partkey AS part_a, y.l_partkey AS part_b, z.l_partkey AS part_c, " +
-        "count(*) AS n_together " +
-        "FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey " +
-        "JOIN b z ON y.l_orderkey = z.l_orderkey AND y.l_partkey < z.l_partkey " +
-        "GROUP BY 1, 2, 3 HAVING count(*) >= 2"),
-    "q160_share_of_parent" ->
-      ("WITH leaf AS (SELECT r_name, n_name, " +
-        "sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS cents " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey " +
-        "JOIN nation ON c_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey GROUP BY 1, 2) " +
-        "SELECT r_name, n_name, CAST(cents AS DOUBLE) / 100.0 AS revenue, " +
-        "round(CAST(cents AS DOUBLE) / CAST(sum(cents) OVER " +
-        "(PARTITION BY r_name) AS DOUBLE), 6) AS share_of_region, " +
-        "round(CAST(sum(cents) OVER (PARTITION BY r_name) AS DOUBLE) / " +
-        "CAST(sum(cents) OVER () AS DOUBLE), 6) AS region_share_of_total FROM leaf"),
-    "q161_reporting_summary" ->
-      (s"WITH pc AS (SELECT c_mktsegment, c_custkey, " +
-        s"CAST(sum(CAST(floor((${money.r2Sql("l_extendedprice * (1.0 - l_discount)")}) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS cust_cents, " +
-        "count(DISTINCT o_orderkey) AS cust_orders " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2), " +
-        "leaf AS (SELECT c_mktsegment, CAST(sum(cust_cents) AS BIGINT) AS seg_cents, " +
-        "CAST(sum(cust_orders) AS BIGINT) AS n_orders, count(*) AS n_customers FROM pc GROUP BY 1), " +
-        "tc AS (SELECT c_mktsegment, c_custkey, cust_cents, " +
-        "row_number() OVER (PARTITION BY c_mktsegment ORDER BY cust_cents DESC, c_custkey) AS rn FROM pc) " +
-        "SELECT leaf.c_mktsegment, CAST(seg_cents AS DOUBLE) / 100.0 AS revenue, " +
-        "n_orders, n_customers, " +
-        "round(CAST(seg_cents AS DOUBLE) / CAST(sum(seg_cents) OVER () AS DOUBLE), 6) AS share_of_total, " +
-        "CAST(rank() OVER (ORDER BY seg_cents DESC, leaf.c_mktsegment) AS INTEGER) AS revenue_rank, " +
-        "t.c_custkey AS top_custkey, CAST(t.cust_cents AS DOUBLE) / 100.0 AS top_cust_revenue " +
-        "FROM leaf JOIN tc t ON leaf.c_mktsegment = t.c_mktsegment AND t.rn = 1"),
-    // generator scale + integrity pinned to the reference's published
-    // contract (seeded, so the counts are constants)
-    "q162_datagen_gate" ->
-      ("SELECT CAST(10000 AS BIGINT) AS n_customers, CAST(2000 AS BIGINT) AS n_products, " +
-        "CAST(100000 AS BIGINT) AS n_orders, TRUE AS fk_customers_ok, " +
-        "TRUE AS fk_products_ok, TRUE AS totals_ok"),
-    "q163_char_perplexity" ->
-      (s"WITH tt AS (SELECT doc_id, $normSql AS t FROM documents WHERE length($normSql) >= 2), " +
-        "bg AS (SELECT doc_id, substr(t, CAST(i AS INTEGER), 2) AS bg " +
-        "FROM tt, unnest(range(1, length(t))) AS u(i)), " +
-        "model AS (SELECT bg, count(*) AS nbg FROM bg GROUP BY bg), " +
-        "tot AS (SELECT CAST(sum(nbg) AS BIGINT) AS nt FROM model), " +
-        "cost AS (SELECT bg, CAST(floor(-ln(CAST(nbg AS DOUBLE) / CAST(nt AS DOUBLE)) " +
-        "* 1000000.0 + 0.5) AS BIGINT) AS mn FROM model CROSS JOIN tot) " +
-        "SELECT doc_id, count(*) AS n_bigrams, " +
-        "round(CAST(sum(mn) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 1000000.0), 6) AS avg_neg_logp " +
-        "FROM bg JOIN cost USING (bg) GROUP BY doc_id"),
-    "q164_length_bands" ->
-      (s"WITH l AS (SELECT source, CAST(len($toksSql) AS BIGINT) AS n FROM documents), " +
-        "b AS (SELECT source, quantile_cont(n, 0.05) AS lo, quantile_cont(n, 0.95) AS hi " +
-        "FROM l GROUP BY source) " +
-        "SELECT l.source, count(*) AS n_docs, " +
-        "CAST(sum(CASE WHEN n < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_too_short, " +
-        "CAST(sum(CASE WHEN n > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_too_long, " +
-        "CAST(sum(CASE WHEN n >= lo AND n <= hi THEN 1 ELSE 0 END) AS BIGINT) AS n_kept " +
-        "FROM l JOIN b USING (source) GROUP BY l.source"),
-    "q165_split_drift" ->
-      (s"WITH tk AS (SELECT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1') AS is_eval, " +
-        s"unnest($toksSql) AS tok FROM documents), " +
-        "g AS (SELECT tok, CAST(sum(CASE WHEN is_eval THEN 1 ELSE 0 END) AS BIGINT) AS ne, " +
-        "CAST(sum(CASE WHEN is_eval THEN 0 ELSE 1 END) AS BIGINT) AS nt FROM tk GROUP BY tok), " +
-        "t AS (SELECT CAST(sum(ne) AS BIGINT) AS tne, CAST(sum(nt) AS BIGINT) AS tnt FROM g), " +
-        "terms AS (SELECT ne, nt, tne, tnt, " +
-        "CASE WHEN ne > 0 THEN ne * CAST(floor(ln(2.0 * (CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE)) / " +
-        "(CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE) + CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS se, " +
-        "CASE WHEN nt > 0 THEN nt * CAST(floor(ln(2.0 * (CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE)) / " +
-        "(CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE) + CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS st " +
-        "FROM g CROSS JOIN t) " +
-        "SELECT CAST(max(tne) AS BIGINT) AS n_eval_tokens, CAST(max(tnt) AS BIGINT) AS n_train_tokens, " +
-        "count(*) AS n_vocab, " +
-        "round((CAST(sum(se) AS DOUBLE) / CAST(max(tne) AS DOUBLE) + " +
-        "CAST(sum(st) AS DOUBLE) / CAST(max(tnt) AS DOUBLE)) / 2000000.0, 6) AS js_nats " +
-        "FROM terms"),
-    // whitening internals (eigenvectors) are engine-specific by design; the
-    // gate's identity-covariance property is the verified contract
-    "q166_whitening_gate" ->
-      ("SELECT count(*) AS n_vectors, CAST(max(len(embedding)) AS INTEGER) AS dim, " +
-        "TRUE AS diag_ok, TRUE AS offdiag_ok FROM embeddings"),
-    // quota admission is a plain (user, day) rank — any engine replays it;
-    // ties are only between fully-identical rows, so the kept multiset is
-    // deterministic even where row_number's tiebreak is not
-    "q171_quota_admission" ->
-      ("WITH r AS (SELECT user_id, " +
-        "CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 86400) AS BIGINT) AS epoch_day, ts, event_type, " +
-        "row_number() OVER (PARTITION BY user_id, CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 86400) AS BIGINT) " +
-        "ORDER BY ts, event_type) AS admitted_rank FROM events) " +
-        "SELECT user_id, epoch_day, ts, event_type, CAST(admitted_rank AS BIGINT) AS admitted_rank " +
-        "FROM r WHERE admitted_rank <= 5"),
-    // whitened-vs-raw IVF recall: anchors any engine can count; the
-    // comparison bound is pinned TRUE (quantizer internals engine-specific)
-    "q170_whitened_ivf" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS whiten_ok FROM embeddings WHERE vec_id < 20"),
-    // full declarative replay of the broadcast n-gram decontamination:
-    // distinct 4-grams per doc, bench slice's gram set, left-join count
-    "q172_decontamination" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "g4 AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 3), i -> array_to_string(toks[i+1:i+4], ' ')) END AS gs FROM t), " +
-        "e AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM g4), " +
-        "b AS (SELECT DISTINCT g FROM e WHERE doc_id % 37 = 0) " +
-        "SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_ngrams, " +
-        "CAST(count(b.g) AS BIGINT) AS n_contaminated, " +
-        "CAST(count(b.g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS contamination_ratio, " +
-        "count(b.g) > 0 AS is_contaminated " +
-        "FROM e LEFT JOIN b ON e.g = b.g WHERE e.doc_id % 37 <> 0 GROUP BY e.doc_id"),
-    // decontaminate replay: q172's contaminated-id set, anti-joined away
-    // from the training slice (the surviving corpus is the contract)
-    "q177_decontaminate" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "g4 AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 3), i -> array_to_string(toks[i+1:i+4], ' ')) END AS gs FROM t), " +
-        "e AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM g4), " +
-        "b AS (SELECT DISTINCT g FROM e WHERE doc_id % 37 = 0), " +
-        "bad AS (SELECT DISTINCT e.doc_id FROM e JOIN b ON e.g = b.g WHERE e.doc_id % 37 <> 0) " +
-        "SELECT d.doc_id, d.source, d.lang FROM documents d " +
-        "WHERE d.doc_id % 37 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM bad)"),
-    // per-user funnel replay: q82's RANGE-frame pass, folded to the two
-    // sticky per-user booleans instead of the global distinct counts
-    "q178_funnel_per_user" ->
-      ("WITH e AS (SELECT user_id, event_type, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "f AS (SELECT user_id, event_type, " +
-        "max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS viewed_w, " +
-        "max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS clicked_w " +
-        "FROM e) " +
-        "SELECT user_id, " +
-        "bool_or(event_type = 'click' AND viewed_w = 1) AS view_click, " +
-        "bool_or(event_type = 'purchase' AND clicked_w = 1) AS click_purchase " +
-        "FROM f GROUP BY user_id"),
-    // Gopher rule replay: exact integer metrics, integer-arithmetic rule
-    // booleans (ratios only for the two reported rounded columns)
-    "q179_gopher_rules" ->
-      (s"WITH m AS (SELECT doc_id, " +
-        s"CAST(len($toksSql) AS BIGINT) AS n_words, " +
-        s"CAST(list_sum(list_transform($toksSql, t -> strlen(t))) AS BIGINT) AS sum_word_chars, " +
-        s"CAST(strlen($normSql) - strlen(replace($normSql, '#', '')) " +
-        s"+ (strlen($normSql) - strlen(replace($normSql, '...', ''))) // 3 AS BIGINT) AS n_symbols, " +
-        s"CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha_words, " +
-        s"CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
-        s"s -> list_contains($toksSql, s))) AS BIGINT) AS n_stop_words, " +
-        "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> starts_with(trim(l), '-') OR starts_with(trim(l), '*'))) AS BIGINT) AS n_bullet_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines " +
-        "FROM documents), " +
-        "r AS (SELECT doc_id, n_words, " +
-        "round(CAST(sum_word_chars AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS mean_word_len, " +
-        "round(CAST(n_symbols AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS symbol_ratio, " +
-        "round(CAST(n_alpha_words AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS alpha_word_frac, " +
-        "n_stop_words, " +
-        "n_words >= 50 AND n_words <= 100000 AS words_ok, " +
-        "sum_word_chars >= 3 * n_words AND sum_word_chars <= 10 * n_words AS mean_len_ok, " +
-        "n_symbols * 10 <= n_words AS symbol_ok, " +
-        "n_alpha_words * 5 >= n_words * 4 AS alpha_ok, " +
-        "n_stop_words >= 2 AS stop_ok, " +
-        "n_bullet_lines * 10 <= n_lines * 9 AND n_ellipsis_lines * 10 <= n_lines * 3 AS lines_ok " +
-        "FROM m) " +
-        "SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac, " +
-        "n_stop_words, words_ok, mean_len_ok, symbol_ok, alpha_ok, stop_ok, lines_ok, " +
-        "words_ok AND mean_len_ok AND symbol_ok AND alpha_ok AND stop_ok AND lines_ok " +
-        "AS pass_gopher FROM r"),
-    // repetition-signal replay: per-doc bigram counts, rank-1 top gram
-    // (ties lexicographic), repeated-gram character coverage
-    "q180_topgram_fraction" ->
-      (s"WITH f AS (SELECT doc_id, $toksSql AS toks, " +
-        s"CAST(strlen($normSql) AS BIGINT) AS n_chars FROM documents " +
-        s"WHERE len($toksSql) >= 2), " +
-        "e AS (SELECT doc_id, n_chars, unnest(list_transform(range(len(toks) - 1), " +
-        "i -> array_to_string(toks[i+1:i+2], ' '))) AS g FROM f), " +
-        "c AS (SELECT doc_id, n_chars, g, count(*) AS c FROM e GROUP BY 1, 2, 3), " +
-        "d AS (SELECT doc_id, CAST(sum(CASE WHEN c > 1 THEN c * strlen(g) ELSE 0 END) AS BIGINT) " +
-        "AS dup_chars FROM c GROUP BY 1), " +
-        "r AS (SELECT doc_id, n_chars, g, c, " +
-        "row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g) AS rn FROM c) " +
-        "SELECT r.doc_id, r.g AS top_gram, CAST(r.c AS BIGINT) AS n_occurrences, " +
-        "round(CAST(r.c * strlen(r.g) AS DOUBLE) / CAST(r.n_chars AS DOUBLE), 6) AS top_char_fraction, " +
-        "round(CAST(d.dup_chars AS DOUBLE) / CAST(r.n_chars AS DOUBLE), 6) AS dup_char_fraction " +
-        "FROM r JOIN d USING (doc_id) WHERE rn = 1"),
-    // MMR replay: q28's candidate stage, then the k greedy rounds unrolled
-    // (q174's pattern): each round excludes the selected set, scores
-    // 0.5*rel - 0.5*max-sim-to-selected with the exact portable cosine,
-    // and picks per probe by (score DESC, id) — every float op in the same
-    // order as the Spark group loop
-    "q181_mmr_rerank" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      val rounds = (2 to 4).map { i =>
-        s"ms$i AS (SELECT c.probe_id, c.neighbor_id, c.cos_sim, c.v, " +
-          s"max(${cosSql("c.v", "s.v")}) AS ms FROM cands c " +
-          s"JOIN sel${i - 1} s ON c.probe_id = s.probe_id " +
-          s"WHERE NOT EXISTS (SELECT 1 FROM sel${i - 1} x " +
-          "WHERE x.probe_id = c.probe_id AND x.id = c.neighbor_id) " +
-          "GROUP BY c.probe_id, c.neighbor_id, c.cos_sim, c.v), " +
-          s"pk$i AS (SELECT probe_id, neighbor_id, v, score FROM " +
-          "(SELECT probe_id, neighbor_id, v, 0.5 * cos_sim - 0.5 * ms AS score, " +
-          s"row_number() OVER (PARTITION BY probe_id ORDER BY 0.5 * cos_sim - 0.5 * ms DESC, neighbor_id) AS rn " +
-          s"FROM ms$i) WHERE rn = 1), " +
-          s"sel$i AS (SELECT * FROM sel${i - 1} " +
-          s"UNION ALL SELECT probe_id, neighbor_id AS id, v, $i AS rank, score FROM pk$i)"
-      }.mkString(", ")
-      // candidate stage = the IVF replay (q176's portable seeds + argmin
-      // assignment), probe-cell ranking by the same dot-identity distance,
-      // exact-cosine top-10 within the 3 probed cells; then the unchanged
-      // 4-round greedy unroll
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS probe_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst " +
-        "WHERE vec_id < 20) WHERE rn <= 3), " +
-        "s0 AS (SELECT pc.probe_id, a.vec_id AS neighbor_id, c.v, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.probe_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.probe_id), " +
-        "cands AS (SELECT probe_id, neighbor_id, cos_sim, v FROM " +
-        "(SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM s0) " +
-        "WHERE rn <= 10), " +
-        "p1 AS (SELECT probe_id, neighbor_id, v, 0.5 * cos_sim - 0.5 * 0.0 AS score, " +
-        "row_number() OVER (PARTITION BY probe_id ORDER BY 0.5 * cos_sim - 0.5 * 0.0 DESC, neighbor_id) AS rn FROM cands), " +
-        "sel1 AS (SELECT probe_id, neighbor_id AS id, v, 1 AS rank, score FROM p1 WHERE rn = 1), " +
-        rounds +
-        " SELECT probe_id, id AS neighbor_id, CAST(rank AS INTEGER) AS mmr_rank, " +
-        "round(score, 6) AS mmr_score FROM sel4"
-    },
-    // containment replay on the shared 3-gram CTEs: DF prune first (part of
-    // the contract — sizes count pruned sets), shared counts from the
-    // string-gram join (Spark joins the xxhash64 keys; counts agree), one
-    // division per direction — over the same odd half-slice as the query
-    "q182_containment_dups" ->
-      (s"WITH ${shingleCtes("(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1)")}, " +
-        "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
-        "k AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
-        "ksz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY 1), " +
-        "sh AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_shared " +
-        "FROM k x JOIN k y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
-        "SELECT doc_a, doc_b, n_shared, CAST(a.sz AS BIGINT) AS sz_a, CAST(b.sz AS BIGINT) AS sz_b, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), 6) AS containment_a, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE), 6) AS containment_b " +
-        "FROM sh JOIN ksz a ON sh.doc_a = a.doc_id JOIN ksz b ON sh.doc_b = b.doc_id " +
-        "WHERE greatest(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), " +
-        "CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE)) >= 0.5"),
-    // novelty replay on the shared 3-gram CTEs: min-doc per gram, join back
-    "q183_gram_novelty" ->
-      (s"WITH ${shingleCtes("documents")}, " +
-        "fst AS (SELECT g, min(doc_id) AS first_doc FROM e GROUP BY 1) " +
-        "SELECT e.doc_id, count(*) AS n_grams, " +
-        "CAST(sum(CASE WHEN fst.first_doc = e.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel, " +
-        "round(CAST(sum(CASE WHEN fst.first_doc = e.doc_id THEN 1 ELSE 0 END) AS DOUBLE) / " +
-        "CAST(count(*) AS DOUBLE), 6) AS novelty " +
-        "FROM e JOIN fst USING (g) GROUP BY e.doc_id"),
-    // served-index replay: the persist/load round trip is exact (doubles
-    // through parquet), so the oracle replays the q176 portable assignment,
-    // ranks each probe's cells by the same dot-identity distance, and takes
-    // the exact-cosine top-3 within the 3 probed cells
-    "q184_index_serve" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS probe_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst " +
-        "WHERE vec_id < 20) WHERE rn <= 3), " +
-        "sc AS (SELECT pc.probe_id, a.vec_id AS neighbor_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.probe_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.probe_id) " +
-        "SELECT probe_id, neighbor_id, round(cos_sim, 6) AS cos_sim, " +
-        "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
-        "WHERE rn <= 3"
-    },
-    // append replay: the frozen quantizer's seeds come from the A-slice's
-    // md5 order ONLY (B never retrains anything), the argmin assignment
-    // covers every vector — incremental commit == this one declarative pass
-    "q188_index_append" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ea AS (SELECT vec_id, v FROM e WHERE vec_id % 5 <> 0), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM ea), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s) " +
-        "SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1"),
-    // hard-negative replay: the q176 portable assignment + probe-cell
-    // ranking, cross-label filter inside the cell join, per-anchor top-2
-    "q192_hard_negatives" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
-        "sc AS (SELECT pc.anchor_id, a.vec_id AS negative_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.anchor_id AND c.label != p.label) " +
-        "SELECT anchor_id, negative_id, round(cos_sim, 6) AS cos_sim, " +
-        "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, negative_id) AS rn FROM sc) " +
-        "WHERE rn <= 2"
-    },
-    // semantic-decontam replay: brute-force cosine join of the split halves
-    // (q41's proven-portable cosine spelling), per-train argmax with the
-    // same (cos DESC, bench_id) tie order as the Spark struct-max
-    "q191_semantic_decontam" -> {
-      val cosTb =
-        "list_inner_product(t.v, b.v) / (sqrt(list_inner_product(t.v, t.v)) * sqrt(list_inner_product(b.v, b.v)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "b AS (SELECT vec_id, v FROM e WHERE vec_id % 37 = 0), " +
-        "t AS (SELECT vec_id, v FROM e WHERE vec_id % 37 <> 0), " +
-        s"hits AS (SELECT t.vec_id AS train_id, b.vec_id AS bench_id, $cosTb AS cos_sim " +
-        s"FROM t JOIN b ON $cosTb >= 0.3), " +
-        "agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_hits FROM hits GROUP BY 1), " +
-        "best AS (SELECT train_id, bench_id, cos_sim FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY train_id ORDER BY cos_sim DESC, bench_id) AS rn FROM hits) WHERE rn = 1) " +
-        "SELECT best.train_id, CAST(bench_id AS BIGINT) AS closest_bench_id, " +
-        "round(cos_sim, 6) AS max_cos, n_bench_hits FROM best JOIN agg USING (train_id)"
-    },
-    // DSIR replay: same portable bucket hash, same Laplace-smoothed
-    // double-formed ratio, same single micronat quantization per bucket,
-    // same exact long count×micronat sums
-    "q190_dsir_weights" ->
-      (s"WITH t AS (SELECT doc_id, lang = 'en' AS is_t, $toksSql AS toks " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "g2 AS (SELECT doc_id, is_t, unnest(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 1), i -> array_to_string(toks[i+1:i+2], ' ')) END) AS g FROM t), " +
-        "bk AS (SELECT doc_id, is_t, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b FROM g2), " +
-        "st AS (SELECT b, sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct, " +
-        "sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr FROM bk GROUP BY 1), " +
-        "tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st), " +
-        "lr AS (SELECT b, CAST(floor(ln( " +
-        "(CAST(ct + 1 AS DOUBLE) * CAST(tr + 1024 AS DOUBLE)) / " +
-        "(CAST(cr + 1 AS DOUBLE) * CAST(tt + 1024 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS lr " +
-        "FROM st CROSS JOIN tot), " +
-        "dc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt FROM bk WHERE NOT is_t GROUP BY 1, 2) " +
-        "SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_grams, " +
-        "CAST(sum(cnt * lr.lr) AS BIGINT) AS w_micronats " +
-        "FROM dc JOIN lr USING (b) GROUP BY doc_id"),
-    // DSIR resample replay: q190's weight pipeline, then the micronat-
-    // quantized Gumbel key from the same seeded md5-prefix u as q157,
-    // exact long-sum selection key, (key DESC, doc_id) top-150
-    "q193_dsir_resample" ->
-      (s"WITH t AS (SELECT doc_id, lang = 'en' AS is_t, $toksSql AS toks FROM documents), " +
-        "g2 AS (SELECT doc_id, is_t, unnest(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 1), i -> array_to_string(toks[i+1:i+2], ' ')) END) AS g FROM t), " +
-        "bk AS (SELECT doc_id, is_t, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b FROM g2), " +
-        "st AS (SELECT b, sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct, " +
-        "sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr FROM bk GROUP BY 1), " +
-        "tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st), " +
-        "lr AS (SELECT b, CAST(floor(ln( " +
-        "(CAST(ct + 1 AS DOUBLE) * CAST(tr + 1024 AS DOUBLE)) / " +
-        "(CAST(cr + 1 AS DOUBLE) * CAST(tt + 1024 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS lr " +
-        "FROM st CROSS JOIN tot), " +
-        "dc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt FROM bk WHERE NOT is_t GROUP BY 1, 2), " +
-        "w AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_grams, " +
-        "CAST(sum(cnt * lr.lr) AS BIGINT) AS w_micronats " +
-        "FROM dc JOIN lr USING (b) GROUP BY doc_id), " +
-        "gq AS (SELECT doc_id, n_grams, w_micronats, " +
-        "CAST(floor(-ln(-ln((('0x' || substring(md5('dsir1' || CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT + 1) " +
-        "/ 4294967297.0)) * 1000000 + 0.5) AS BIGINT) AS g_micronats FROM w) " +
-        "SELECT doc_id, n_grams, w_micronats, g_micronats, " +
-        "w_micronats + g_micronats AS score_micronats FROM gq " +
-        "ORDER BY score_micronats DESC, doc_id LIMIT 150"),
-    // kNN-graph replay: q192's portable assignment + probe-cell ranking
-    // WITHOUT the label filter — hardNegatives is this graph label-filtered
-    "q194_knn_graph" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
-        "sc AS (SELECT pc.anchor_id, a.vec_id AS neighbor_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.anchor_id) " +
-        "SELECT anchor_id AS vec_id, neighbor_id, round(cos_sim, 6) AS cos_sim, " +
-        "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
-        "WHERE rn <= 2"
-    },
-    // celled semantic-decontam replay: unit-sphere normalize both sides,
-    // portable seeds from the TRAIN slice md5 order (q188's pattern, over
-    // normalized vectors), train side takes its argmin cell + distance,
-    // per-cell radius = max member distance, bench keeps cells within
-    // sqrt(2-2t) + radius (the triangle-inequality prune — exact, so this
-    // replay IS the brute-force answer filtered through the same prune),
-    // exact cosine verify on the ORIGINAL vectors, q191's aggregate
-    "q195_semantic_decontam_ivf" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "t0 AS (SELECT vec_id, v, list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS vn " +
-        "FROM e WHERE vec_id % 37 <> 0), " +
-        "b0 AS (SELECT vec_id, v, list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS vn " +
-        "FROM e WHERE vec_id % 37 = 0), " +
-        "ho AS (SELECT vec_id, vn, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM t0), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, vn AS sv FROM ho WHERE rk <= 8), " +
-        "tdst AS (SELECT t0.vec_id, t0.v, s.cell, list_inner_product(t0.vn, t0.vn) " +
-        "- 2.0 * list_inner_product(t0.vn, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM t0 CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id AS train_id, v, cell, sqrt(greatest(d, 0.0)) AS dtr " +
-        "FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM tdst) WHERE rn = 1), " +
-        "rad AS (SELECT cell, max(dtr) AS r FROM asn GROUP BY 1), " +
-        "bdst AS (SELECT b0.vec_id AS bench_id, b0.v, s.cell, " +
-        "sqrt(greatest(list_inner_product(b0.vn, b0.vn) " +
-        "- 2.0 * list_inner_product(b0.vn, s.sv) + list_inner_product(s.sv, s.sv), 0.0)) AS dq " +
-        "FROM b0 CROSS JOIN seeds s), " +
-        "bc AS (SELECT bdst.bench_id, bdst.v, bdst.cell FROM bdst JOIN rad USING (cell) " +
-        "WHERE dq <= sqrt(2.0 - 2.0 * 0.3) + rad.r), " +
-        s"hits AS (SELECT asn.train_id, bc.bench_id, ${cosSql("asn.v", "bc.v")} AS cos_sim " +
-        "FROM asn JOIN bc USING (cell) " +
-        s"WHERE ${cosSql("asn.v", "bc.v")} >= 0.3), " +
-        "agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_hits FROM hits GROUP BY 1), " +
-        "best AS (SELECT train_id, bench_id, cos_sim FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY train_id ORDER BY cos_sim DESC, bench_id) AS rn FROM hits) WHERE rn = 1) " +
-        "SELECT best.train_id, CAST(bench_id AS BIGINT) AS closest_bench_id, " +
-        "round(cos_sim, 6) AS max_cos, n_bench_hits FROM best JOIN agg USING (train_id)"
-    },
-    // novelty-view replay: the O(delta) materialized path must equal the
-    // full recompute — q183's SQL over the same half-corpus slice
-    "q189_novelty_view" ->
-      (s"WITH ${shingleCtes("(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0)")}, " +
-        "fst AS (SELECT g, min(doc_id) AS first_doc FROM e GROUP BY 1) " +
-        "SELECT e.doc_id, count(*) AS n_grams, " +
-        "CAST(sum(CASE WHEN fst.first_doc = e.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel, " +
-        "round(CAST(sum(CASE WHEN fst.first_doc = e.doc_id THEN 1 ELSE 0 END) AS DOUBLE) / " +
-        "CAST(count(*) AS DOUBLE), 6) AS novelty " +
-        "FROM e JOIN fst USING (g) GROUP BY e.doc_id"),
-    // boilerplate replay on the shared 3-gram CTEs: doc frequency over the
-    // distinct (doc, gram) rows, frequent set left-joined back per doc
-    "q173_boilerplate" ->
-      (s"WITH ${shingleCtes("documents")}, " +
-        "dfq AS (SELECT g, count(*) AS nd FROM e GROUP BY 1), " +
-        "bl AS (SELECT g FROM dfq WHERE nd >= 5) " +
-        "SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_ngrams, " +
-        "CAST(count(bl.g) AS BIGINT) AS n_boiler, " +
-        "CAST(count(bl.g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS boiler_ratio " +
-        "FROM e LEFT JOIN bl ON e.g = bl.g GROUP BY e.doc_id"),
-    // integer-PageRank replay: the q76 co-purchase edge spelling, then the
-    // four damped power-iteration rounds unrolled with the SAME fixed-point
-    // long ops (// is DuckDB integer division; sums widen to HUGEINT and
-    // cast back losslessly)
-    "q174_pagerank" -> {
-      val rounds = (1 to 4).map { i =>
-        s"r$i AS (SELECT b.v, b.outdeg, " +
-          "CAST(150000 + (85 * coalesce(s.in_sum, 0)) // 100 AS BIGINT) AS rank " +
-          "FROM base b LEFT JOIN (SELECT e.dst AS v, sum(r.rank // r.outdeg) AS in_sum " +
-          s"FROM e JOIN r${i - 1} r ON e.src = r.v GROUP BY 1) s ON b.v = s.v)"
-      }.mkString(", ")
-      "WITH p AS (SELECT a.l_partkey AS part_a, b.l_partkey AS part_b " +
-        "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-        "GROUP BY 1, 2 HAVING count(*) >= 3), " +
-        "e AS (SELECT part_a AS src, part_b AS dst FROM p UNION ALL SELECT part_b, part_a FROM p), " +
-        "base AS (SELECT src AS v, count(*) AS outdeg FROM e GROUP BY 1), " +
-        "r0 AS (SELECT v, outdeg, CAST(1000000 AS BIGINT) AS rank FROM base), " +
-        rounds +
-        " SELECT v AS part, rank AS rank_micro FROM r4"
-    },
-    // SemDeDup replay: q41's exact cosine pair set (already proven
-    // hash-identical cross-engine), undirected closure, keep min-id per
-    // component plus every unpaired vector
-    "q175_semdedup" ->
-      ("WITH RECURSIVE e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "pr AS (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b " +
-        "FROM e x JOIN e y ON x.label = y.label AND x.vec_id < y.vec_id " +
-        "WHERE list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.4), " +
-        "und AS (SELECT vec_a AS src, vec_b AS dst FROM pr UNION ALL SELECT vec_b, vec_a FROM pr), " +
-        "r AS (SELECT src AS node, src AS comp FROM und " +
-        "UNION SELECT u.dst, r.comp FROM r JOIN und u ON u.src = r.node), " +
-        "cmp AS (SELECT node, min(comp) AS c FROM r GROUP BY node) " +
-        "SELECT em.vec_id, em.label FROM embeddings em LEFT JOIN cmp ON em.vec_id = cmp.node " +
-        "WHERE cmp.node IS NULL OR em.vec_id = cmp.c"),
-    // SemDeDup x IVF replay: seeds = first nLists vectors in (md5, id)
-    // order (the 0-iteration portable trainer — no float averaging, so the
-    // argmin distances are exact expressions both engines evaluate
-    // identically: a - 2.0*b + c over sequential list_inner_products), then
-    // q175's pair + closure pattern within each assigned cell
-    "q176_semdedup_ivf" ->
-      ("WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "ec AS (SELECT e.vec_id, e.v, a.cell FROM e JOIN asn a USING (vec_id)), " +
-        "pr AS (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b " +
-        "FROM ec x JOIN ec y ON x.cell = y.cell AND x.vec_id < y.vec_id " +
-        "WHERE list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.4), " +
-        "und AS (SELECT vec_a AS src, vec_b AS dst2 FROM pr UNION ALL SELECT vec_b, vec_a FROM pr), " +
-        "r AS (SELECT src AS node, src AS comp FROM und " +
-        "UNION SELECT u.dst2, r.comp FROM r JOIN und u ON u.src = r.node), " +
-        "cmp AS (SELECT node, min(comp) AS c FROM r GROUP BY node) " +
-        "SELECT ec.vec_id, ec.cell FROM ec LEFT JOIN cmp ON ec.vec_id = cmp.node " +
-        "WHERE cmp.node IS NULL OR ec.vec_id = cmp.c"),
-    // BPE merges are algorithm-internal; the oracle counts the anchors and
-    // pins the segmentation invariants
-    "q167_bpe_gate" ->
-      (s"WITH tok AS (SELECT unnest($toksSql) AS tok FROM documents) " +
-        "SELECT (SELECT count(*) FROM documents) AS n_docs, " +
-        "CAST(count(*) AS BIGINT) AS total_tokens, " +
-        "CAST(sum(length(tok)) AS BIGINT) AS total_token_chars, " +
-        "TRUE AS bpe_ge_tokens, TRUE AS bpe_compresses FROM tok"),
-    "q168_corpus_report" ->
-      (s"WITH b AS (SELECT source, lang, $normSql AS norm, " +
-        s"CAST(len($toksSql) AS BIGINT) AS n_tokens, " +
-        s"CAST(len(list_distinct($toksSql)) AS DOUBLE) / CAST(len($toksSql) AS DOUBLE) AS dr " +
-        "FROM documents), " +
-        "main AS (SELECT source, count(*) AS n_docs, " +
-        "CAST(count(*) - count(DISTINCT norm) AS BIGINT) AS n_exact_dups, " +
-        "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-        "quantile_cont(n_tokens, 0.5) AS p50_tokens, " +
-        "round(CAST(sum(CASE WHEN n_tokens >= 20 AND dr >= 0.2 THEN 1 ELSE 0 END) AS DOUBLE) / " +
-        "CAST(count(*) AS DOUBLE), 6) AS pass_rate FROM b GROUP BY source), " +
-        "lc AS (SELECT source, lang, count(*) AS nl FROM documents GROUP BY 1, 2), " +
-        "lgr AS (SELECT source, lang, " +
-        "row_number() OVER (PARTITION BY source ORDER BY nl DESC, lang) AS rn, " +
-        "count(*) OVER (PARTITION BY source) AS n_langs FROM lc) " +
-        "SELECT main.source, n_docs, n_exact_dups, total_tokens, p50_tokens, pass_rate, " +
-        "n_langs, lgr.lang AS top_lang FROM main JOIN lgr ON main.source = lgr.source " +
-        "WHERE lgr.rn = 1"),
-    // the whole refinery replayed declaratively: gate (q21's predicate),
-    // exact-dedup keepers (q19), brute-force shingle pairs + recursive
-    // closure (q24/q43), md5-rank source cap, chunk expansion (q94)
-    "q169_refinery_e2e" ->
-      (s"WITH RECURSIVE gt AS (SELECT doc_id, source, text FROM " +
-        s"(SELECT doc_id, source, text, $toksSql AS toks FROM documents) " +
-        "WHERE len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"),
-    // banded containment == the exact counting replay (bottom-k sketch
-    // candidates + exact verify; miss margin 2^-64 — q24's equality-oracle
-    // pattern): q182's SQL verbatim at the same parameters
-    "q185_containment_banded" ->
-      (s"WITH ${shingleCtes("documents")}, " +
-        "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
-        "k AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
-        "ksz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY 1), " +
-        "sh AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_shared " +
-        "FROM k x JOIN k y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
-        "SELECT doc_a, doc_b, n_shared, CAST(a.sz AS BIGINT) AS sz_a, CAST(b.sz AS BIGINT) AS sz_b, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), 6) AS containment_a, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE), 6) AS containment_b " +
-        "FROM sh JOIN ksz a ON sh.doc_a = a.doc_id JOIN ksz b ON sh.doc_b = b.doc_id " +
-        "WHERE greatest(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), " +
-        "CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE)) >= 0.5"),
-    // two-batch ingest replay: basic gate, per-batch exact dedup (min id
-    // per norm within parity), in-batch near-dup closure (same-parity
-    // brute-force shingle-J edges — the q24 banded==brute contract) and
-    // in-batch containment (no DF prune: the stream runs maxDf=MaxValue),
-    // then batch2 vs landed1: exact norms, cross-parity shingle-J >= 0.8,
-    // directional containment of the NEW side at 0.5
-    // batch membership stays doc_id % 2 on the % 8 < 2 slice: residue-0
-    // docs are even (batch 1), residue-1 docs odd (batch 2)
-    "q196_stream_ingest_twin" ->
-      (s"WITH RECURSIVE gt AS (SELECT doc_id, text FROM " +
-        s"(SELECT doc_id, text, $toksSql AS toks FROM documents WHERE doc_id % 8 < 2) " +
-        "WHERE len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        s"nrm AS (SELECT doc_id, doc_id % 2 AS p, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY p, norm), " +
-        "kd AS (SELECT gt.doc_id, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc WHERE doc_a % 2 = doc_b % 2 " +
-        "AND (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
-        "csz AS (SELECT doc_id, count(*) AS csn FROM ke GROUP BY 1), " +
-        "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
-        "FROM ke x JOIN ke y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-        "cpr AS (SELECT ca, cb, ns, " +
-        "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
-        "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
-        "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
-        "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.5 AND contb >= 0.5 THEN cb " +
-        "WHEN conta >= 0.5 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "WHERE ca % 2 = cb % 2 AND (conta >= 0.5 OR contb >= 0.5)), " +
-        "kept2 AS (SELECT kept.doc_id FROM kept " +
-        "LEFT JOIN crm ON kept.doc_id = crm.doc_id WHERE crm.doc_id IS NULL), " +
-        "l1 AS (SELECT doc_id FROM kept2 WHERE doc_id % 2 = 0), " +
-        "b2 AS (SELECT doc_id FROM kept2 WHERE doc_id % 2 = 1), " +
-        "xex AS (SELECT o.doc_id FROM nrm o JOIN b2 USING (doc_id) " +
-        "WHERE o.norm IN (SELECT nrm.norm FROM nrm JOIN l1 USING (doc_id))), " +
-        "xdup AS (SELECT CASE WHEN doc_a % 2 = 1 THEN doc_a ELSE doc_b END AS doc_id FROM sc " +
-        "JOIN kept2 ka ON sc.doc_a = ka.doc_id JOIN kept2 kb ON sc.doc_b = kb.doc_id " +
-        "WHERE doc_a % 2 <> doc_b % 2 AND (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "xcont AS (SELECT CASE WHEN ca % 2 = 1 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "JOIN b2 bo ON (CASE WHEN ca % 2 = 1 THEN ca ELSE cb END) = bo.doc_id " +
-        "JOIN l1 lo ON (CASE WHEN ca % 2 = 1 THEN cb ELSE ca END) = lo.doc_id " +
-        "WHERE ca % 2 <> cb % 2 AND (CASE WHEN ca % 2 = 1 THEN conta ELSE contb END) >= 0.5), " +
-        "landed AS (SELECT doc_id FROM l1 UNION ALL SELECT doc_id FROM b2 " +
-        "WHERE doc_id NOT IN (SELECT doc_id FROM xex) " +
-        "AND doc_id NOT IN (SELECT doc_id FROM xdup) " +
-        "AND doc_id NOT IN (SELECT doc_id FROM xcont)) " +
-        "SELECT landed.doc_id, CAST(d.n_chars AS BIGINT) AS n_chars " +
-        "FROM landed JOIN documents d USING (doc_id)"),
-    // refinery + containment replay: q169's stage respell (near-dup edges
-    // at 0.98 — see the query comment), then q182's containment arithmetic
-    // over the near-dup survivors (DF prune at 1000, threshold 0.8, drop
-    // the contained side / keep min id on mutual), then the unchanged
-    // cap + chunk tail over the containment survivors
-    "q186_refinery_containment" ->
-      (s"WITH RECURSIVE gt AS (SELECT doc_id, source, text FROM " +
-        s"(SELECT doc_id, source, text, $toksSql AS toks FROM documents WHERE doc_id % 2 = 0) " +
-        "WHERE len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.98), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
-        "cdf AS (SELECT g, count(*) AS df FROM ke GROUP BY 1), " +
-        "ck AS (SELECT ke.doc_id, ke.g FROM ke JOIN cdf USING (g) WHERE df <= 1000), " +
-        "csz AS (SELECT doc_id, count(*) AS csn FROM ck GROUP BY 1), " +
-        "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
-        "FROM ck x JOIN ck y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-        "cpr AS (SELECT ca, cb, " +
-        "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
-        "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
-        "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
-        "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.8 AND contb >= 0.8 THEN cb " +
-        "WHEN conta >= 0.8 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "WHERE conta >= 0.8 OR contb >= 0.8), " +
-        "kept2 AS (SELECT kept.doc_id, kept.source, kept.text FROM kept " +
-        "LEFT JOIN crm ON kept.doc_id = crm.doc_id WHERE crm.doc_id IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept2) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"),
-    // Gopher-gated refinery replay: q179's integer-arithmetic rule
-    // conjunction as the gate, then q169's unchanged dedup/cap/chunk respell
-    "q187_refinery_gopher" ->
-      (s"WITH RECURSIVE gm AS (SELECT doc_id, source, text, " +
-        s"CAST(len($toksSql) AS BIGINT) AS n_words, " +
-        s"CAST(list_sum(list_transform($toksSql, t -> strlen(t))) AS BIGINT) AS sum_word_chars, " +
-        s"CAST(strlen($normSql) - strlen(replace($normSql, '#', '')) " +
-        s"+ (strlen($normSql) - strlen(replace($normSql, '...', ''))) // 3 AS BIGINT) AS n_symbols, " +
-        s"CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha_words, " +
-        s"CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
-        s"s -> list_contains($toksSql, s))) AS BIGINT) AS n_stop_words, " +
-        "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> starts_with(trim(l), '-') OR starts_with(trim(l), '*'))) AS BIGINT) AS n_bullet_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines " +
-        "FROM documents WHERE doc_id % 2 = 1), " +
-        "gt AS (SELECT doc_id, source, text FROM gm " +
-        "WHERE n_words >= 50 AND n_words <= 100000 " +
-        "AND sum_word_chars >= 3 * n_words AND sum_word_chars <= 10 * n_words " +
-        "AND n_symbols * 10 <= n_words AND n_alpha_words * 5 >= n_words * 4 " +
-        "AND n_stop_words >= 1 " +
-        "AND n_bullet_lines * 10 <= n_lines * 9 AND n_ellipsis_lines * 10 <= n_lines * 3), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"),
-    // span-dedup replay: rolling 10-token windows with start positions,
-    // df census over the window STRINGS (Spark groups their xxhash64 — the
-    // gram-join contract: counts agree), non-keeper covered positions,
-    // order-preserving reassembly of the survivors
-    "q197_span_dedup" ->
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "w AS (SELECT doc_id, unnest(range(len(toks) - 9)) AS pos, toks FROM t WHERE len(toks) >= 10), " +
-        "wg AS (SELECT doc_id, pos, array_to_string(toks[pos+1:pos+10], ' ') AS g FROM w), " +
-        "dfc AS (SELECT g, count(DISTINCT doc_id) AS df, min(doc_id) AS keeper FROM wg GROUP BY 1), " +
-        "dupw AS (SELECT wg.doc_id, wg.pos FROM wg JOIN dfc USING (g) " +
-        "WHERE dfc.df >= 2 AND wg.doc_id <> dfc.keeper), " +
-        "cov AS (SELECT DISTINCT doc_id, i FROM " +
-        "(SELECT doc_id, unnest(range(pos, pos + 10)) AS i FROM dupw)), " +
-        "tp AS (SELECT doc_id, unnest(range(len(toks))) AS i, toks FROM t), " +
-        "tpi AS (SELECT doc_id, i, toks[i+1] AS tok FROM tp), " +
-        "keep AS (SELECT tpi.doc_id, tpi.i, tpi.tok FROM tpi " +
-        "LEFT JOIN cov ON tpi.doc_id = cov.doc_id AND tpi.i = cov.i WHERE cov.i IS NULL), " +
-        "clean AS (SELECT doc_id, array_to_string(array_agg(tok ORDER BY i), ' ') AS clean_text " +
-        "FROM keep GROUP BY 1), " +
-        "ndw AS (SELECT doc_id, count(*) AS ndw FROM dupw GROUP BY 1), " +
-        "ncv AS (SELECT doc_id, count(*) AS ncv FROM cov GROUP BY 1) " +
-        "SELECT t.doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CAST(coalesce(ndw, 0) AS BIGINT) AS n_dup_windows, " +
-        "CAST(coalesce(ncv, 0) AS BIGINT) AS n_removed_tokens, " +
-        "coalesce(clean_text, '') AS clean_text " +
-        "FROM t LEFT JOIN ndw USING (doc_id) LEFT JOIN ncv USING (doc_id) " +
-        "LEFT JOIN clean USING (doc_id)"),
-    // keep-best dedup replay: q43's exact-dedup + closure over the even
-    // half-slice, component id = min over reachability, then the integer
-    // (passes DESC, n_tokens DESC, doc_id) argmax per component
-    "q198_dedup_keep_best" ->
-      ("WITH RECURSIVE nrm AS (SELECT doc_id, " + normSql +
-        " AS norm FROM documents WHERE doc_id % 2 = 0), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
-        s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n AS doc_id, min(m) AS mn FROM r GROUP BY n), " +
-        "comp AS (SELECT k.doc_id, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
-        "FROM k LEFT JOIN compmap USING (doc_id)), " +
-        "feats AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CASE WHEN len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2 " +
-        "THEN 1 ELSE 0 END AS passes FROM t), " +
-        "ranked AS (SELECT comp.doc_id, cluster_id, " +
-        "row_number() OVER (PARTITION BY cluster_id " +
-        "ORDER BY passes DESC, n_tokens DESC, comp.doc_id) AS rn, " +
-        "count(*) OVER (PARTITION BY cluster_id) AS cluster_size " +
-        "FROM comp JOIN feats USING (doc_id)) " +
-        "SELECT doc_id, cluster_id, CAST(cluster_size AS BIGINT) AS cluster_size " +
-        "FROM ranked WHERE rn = 1"),
-    // cluster-split replay: every doc -> its exact-dedup keeper -> the
-    // keeper's closure component -> the md5-first-nibble split of the
-    // CLUSTER id ('0' val, '1' test, else train)
-    "q199_cluster_split" ->
-      ("WITH RECURSIVE nrm AS (SELECT doc_id, " + normSql +
-        " AS norm FROM documents WHERE doc_id % 2 = 1), " +
-        "k2 AS (SELECT norm, min(doc_id) AS keeper FROM nrm GROUP BY norm), " +
-        "k AS (SELECT keeper AS doc_id FROM k2), " +
-        shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
-        s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n AS kdoc, min(m) AS mn FROM r GROUP BY n), " +
-        "comp AS (SELECT k.doc_id AS keeper, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
-        "FROM k LEFT JOIN compmap ON k.doc_id = compmap.kdoc), " +
-        "dm AS (SELECT nrm.doc_id, k2.keeper FROM nrm JOIN k2 USING (norm)) " +
-        "SELECT dm.doc_id, comp.cluster_id, " +
-        "CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 1) = '0' THEN 'val' " +
-        "WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 1) = '1' THEN 'test' " +
-        "ELSE 'train' END AS split " +
-        "FROM dm JOIN comp USING (keeper)"),
-    // CCNet LM replay: train-slice bigram/unigram count tables, per-event
-    // micronat log-probs (Stupid Backoff: bigram, else smoothed unigram,
-    // else the unknown default off the 1-row totals), exact long sums
-    "q200_lm_perplexity" -> lmPerplexitySql,
-    // the serve roundtrip must land exactly where in-line training does —
-    // q200's SQL verbatim is the whole contract
-    "q209_lm_serve" -> lmPerplexitySql,
-    // head/middle/tail replay: q200's scores, global (avg_nll, doc_id) rank,
-    // exact per-mille cutoffs ceil(n*p/1000) = floor((n*p+999)/1000)
-    "q201_lm_buckets" ->
-      (s"WITH $lmScoreCtes, " +
-        "agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, " +
-        "CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) AS BIGINT) " +
-        "AS avg_nll_micronats FROM sc GROUP BY doc_id), " +
-        "r AS (SELECT *, row_number() OVER (ORDER BY avg_nll_micronats, doc_id) AS rnk, " +
-        "count(*) OVER () AS n FROM agg) " +
-        "SELECT doc_id, n_bigrams, avg_nll_micronats, CAST(rnk AS BIGINT) AS rank, " +
-        "CASE WHEN rnk <= floor((n * 300 + 999) / 1000) THEN 'head' " +
-        "WHEN rnk > n - floor((n * 300 + 999) / 1000) THEN 'tail' " +
-        "ELSE 'middle' END AS bucket FROM r"),
-    // waterfilling replay: per-source caps sorted ascending, theta = MAX
-    // over feasible rows of (budget - caps below) / rows remaining, alloc =
-    // min(cap, floor(theta)); null theta = budget unreachable, allocate caps
-    "q202_token_budget" ->
-      (s"WITH t AS (SELECT source, len($toksSql) AS n FROM documents), " +
-        "ps AS (SELECT source, CAST(sum(n) AS BIGINT) AS t_tokens, " +
-        "CAST(floor(CAST(sum(n) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
-        "FROM t GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 49000 " +
-        "THEN CAST(49000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
-        "al AS (SELECT source, t_tokens, cap_tokens, " +
-        "least(cap_tokens, CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) " +
-        "AS BIGINT)) AS alloc_tokens, theta IS NOT NULL AS budget_met " +
-        "FROM rk CROSS JOIN th) " +
-        "SELECT source, t_tokens, cap_tokens, alloc_tokens, budget_met, " +
-        "CAST(floor(CAST(alloc_tokens AS DOUBLE) * 1000000 / " +
-        "CAST(t_tokens AS DOUBLE) + 0.5) AS BIGINT) AS epochs_micro FROM al"),
-    // per-source top-30% replay: micronat distinct ratio, (ratio, length,
-    // id) rank inside each source, ceil cutoff in integers
-    "q203_top_quality_per_source" ->
-      (s"WITH f AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) * 1000000 / " +
-        "CAST(len(toks) AS DOUBLE) + 0.5) AS BIGINT) AS distinct_micro " +
-        s"FROM (SELECT doc_id, source, $toksSql AS toks FROM documents)), " +
-        "r AS (SELECT *, row_number() OVER (PARTITION BY source " +
-        "ORDER BY distinct_micro DESC, n_tokens DESC, doc_id) AS rnk, " +
-        "count(*) OVER (PARTITION BY source) AS n_src FROM f) " +
-        "SELECT doc_id, source, n_tokens, distinct_micro, CAST(rnk AS BIGINT) AS rnk " +
-        "FROM r WHERE rnk * 1000 <= n_src * 300 + 999"),
-    // diversity-selection replay: portable 0-iter seeds (first 8 vectors in
-    // md5 order — q194's pattern), dot-identity assignment with (d, cell)
-    // tie order, micro-quantized own-cell distance, per-cell
-    // representativeness rank, round-robin (rep_rank, cell, vec_id) top-100
-    "q204_diverse_subset" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell, CAST(floor(d * 1000000 + 0.5) AS BIGINT) AS dist_micro " +
-        "FROM (SELECT vec_id, cell, d, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "r AS (SELECT *, row_number() OVER (PARTITION BY cell " +
-        "ORDER BY dist_micro, vec_id) AS rep_rank FROM asn) " +
-        "SELECT vec_id, cell, dist_micro, CAST(rep_rank AS BIGINT) AS rep_rank " +
-        "FROM r ORDER BY rep_rank, cell, vec_id LIMIT 100"),
-    // source-overlap replay: the q24 brute-force pair set at 0.8, two
-    // source lookups, unordered-pair group
-    "q205_source_overlap" ->
-      (s"WITH ${shingleCtes("documents")}, $shinglePairCtes, " +
-        "p AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8) " +
-        "SELECT least(sa.source, sb.source) AS source_a, " +
-        "greatest(sa.source, sb.source) AS source_b, " +
-        "CAST(count(*) AS BIGINT) AS n_pairs " +
-        "FROM p JOIN documents sa ON sa.doc_id = p.doc_a " +
-        "JOIN documents sb ON sb.doc_id = p.doc_b GROUP BY 1, 2"),
-    // effective-tokens replay: q43's closure over the odd half-slice ->
-    // canonical survivors -> per-source raw vs surviving token sums, exact
-    // integer per-mille (floor division on positive longs == idiv)
-    "q206_effective_tokens" ->
-      ("WITH RECURSIVE docs0 AS (SELECT * FROM documents WHERE doc_id % 2 = 1), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM docs0), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        shingleCtes("(SELECT d.doc_id, d.text FROM docs0 d JOIN k USING (doc_id))") +
-        s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "surv AS (SELECT k.doc_id FROM k " +
-        "LEFT JOIN removed ON k.doc_id = removed.n WHERE removed.n IS NULL), " +
-        s"tok AS (SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS nt FROM docs0), " +
-        "raw AS (SELECT source, CAST(sum(nt) AS BIGINT) AS raw_tokens, " +
-        "CAST(count(*) AS BIGINT) AS raw_docs FROM tok GROUP BY 1), " +
-        "eff AS (SELECT source, CAST(sum(nt) AS BIGINT) AS effective_tokens, " +
-        "CAST(count(*) AS BIGINT) AS effective_docs " +
-        "FROM tok JOIN surv USING (doc_id) GROUP BY 1) " +
-        "SELECT raw.source, raw_tokens, raw_docs, " +
-        "CAST(coalesce(effective_tokens, 0) AS BIGINT) AS effective_tokens, " +
-        "CAST(coalesce(effective_docs, 0) AS BIGINT) AS effective_docs, " +
-        "CAST((CAST(coalesce(effective_tokens, 0) AS BIGINT) * 1000) // raw_tokens " +
-        "AS BIGINT) AS kept_permille " +
-        "FROM raw LEFT JOIN eff ON raw.source = eff.source"),
-    // refinery+LM replay: gate, the q200 LM chain over the gated slice
-    // (suffixed CTEs — the refinery chain also names an `sc`), the q201
-    // rank cutoff for the tail tier, then q169's dedup/cap/chunk respell
-    // over the survivors
-    "q208_refinery_lm" ->
-      ("WITH RECURSIVE gt AS (SELECT doc_id, source, lang, text FROM " +
-        s"(SELECT doc_id, source, lang, text, $toksSql AS toks FROM documents " +
-        "WHERE doc_id % 2 = 0) " +
-        "WHERE len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        lmScoreCtesOver("gt", "9") + ", " +
-        "agg9 AS (SELECT doc_id, CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) " +
-        "AS BIGINT) AS nll FROM sc9 GROUP BY doc_id), " +
-        "rk9 AS (SELECT doc_id, row_number() OVER (ORDER BY nll, doc_id) AS rk, " +
-        "count(*) OVER () AS n FROM agg9), " +
-        "tl9 AS (SELECT doc_id FROM rk9 WHERE rk > n - floor((n * 300 + 999) / 1000)), " +
-        "lmk AS (SELECT gt.doc_id, gt.source, gt.text FROM gt " +
-        "LEFT JOIN tl9 ON gt.doc_id = tl9.doc_id WHERE tl9.doc_id IS NULL), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM lmk), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT lmk.doc_id, lmk.source, lmk.text FROM lmk JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"),
-    // pixel-decode replay: the fixture's closed-form pixel bytes
-    // (media_id*31 + i) mod 256 summed per channel — the engine must land
-    // here through the REAL inflate + unfilter path
-    "q217_png_pixel_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(4 + (n_chars % 13) AS INTEGER) AS width, " +
-        "CAST(3 + ((n_chars * 7) % 11) AS INTEGER) AS height " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "px AS (SELECT media_id, width, height, " +
-        "unnest(range(width * height * 4)) AS i FROM d), " +
-        "v AS (SELECT media_id, width, height, i % 4 AS c, " +
-        "(media_id * 31 + i) % 256 AS val FROM px) " +
-        "SELECT media_id, width, height, " +
-        "CAST(width AS BIGINT) * height AS n_pixels, " +
-        "CAST(sum(CASE WHEN c = 0 THEN val ELSE 0 END) AS BIGINT) AS sum_r, " +
-        "CAST(sum(CASE WHEN c = 1 THEN val ELSE 0 END) AS BIGINT) AS sum_g, " +
-        "CAST(sum(CASE WHEN c = 2 THEN val ELSE 0 END) AS BIGINT) AS sum_b, " +
-        "CAST(sum(CASE WHEN c = 3 THEN val ELSE 0 END) AS BIGINT) AS sum_a " +
-        "FROM v GROUP BY media_id, width, height"),
-    // sample-decode replay: the fixture's closed-form PCM16 samples
-    // ((media_id*17 + p*3) mod 4096) - 2048, amplitude census
-    "q218_wav_sample_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(64 + (n_chars % 128) AS BIGINT) AS n " +
-        "FROM documents WHERE doc_id % 2 = 1), " +
-        "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT media_id, n, ((media_id * 17 + p * 3) % 4096) - 2048 AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // image dHash replay: grayscale v(k) per planted role formula, 8x8
-    // floor-block integer means, bit y*7+x set iff mean[y][x]<mean[y][x+1],
-    // then BRUTE-FORCE pairs — the engine must land here through the real
-    // decode (all five filters) + banded blocking
-    "q219_image_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, role, w, h, unnest(range(w * h)) AS k " +
-        "FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "CASE WHEN role = 2 THEN (g*53 + (k % w)*29 + (k // w)*3 + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*31 + (k % w)*7 + (k // w)*13) % 256 + 4) % 256 " +
-        "ELSE (g*31 + (k % w)*7 + (k // w)*13) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.dhash, y.dhash)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3"),
-    // audio fingerprint replay: planted PCM16 sample formulas, 57
-    // floor-assigned energy windows, bit j set iff E[j+1]>E[j], brute pairs
-    "q220_audio_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "s AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM s), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.afp, y.afp)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.afp, y.afp)) <= 3"),
-    // resize replay: scale s = ceil(maxDim/8), output pixel = per-channel
-    // floor(blockSum/blockCount) over the planted formula, summed per
-    // channel — the engine must land here through decode + box resample +
-    // re-encode + re-decode
-    "q221_resize_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(4 + (n_chars % 13) AS BIGINT) AS w, " +
-        "CAST(3 + ((n_chars * 7) % 11) AS BIGINT) AS h " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "dm AS (SELECT media_id, w, h, " +
-        "greatest(1, (greatest(w, h) + 7) // 8) AS s FROM d), " +
-        "dm2 AS (SELECT media_id, w, h, s, (w + s - 1) // s AS w2, " +
-        "(h + s - 1) // s AS h2 FROM dm), " +
-        "px AS (SELECT media_id, w, s, w2, h2, " +
-        "unnest(range(w * h * 4)) AS i FROM dm2), " +
-        "v AS (SELECT media_id, w2, h2, i % 4 AS c, " +
-        "((i // 4) % w) // s AS bx, ((i // 4) // w) // s AS by, " +
-        "(media_id * 31 + i) % 256 AS val FROM px), " +
-        "m AS (SELECT media_id, w2, h2, c, bx, by, " +
-        "sum(val) // count(*) AS mean FROM v GROUP BY 1, 2, 3, 4, 5, 6) " +
-        "SELECT media_id, CAST(w2 AS INTEGER) AS width, " +
-        "CAST(h2 AS INTEGER) AS height, " +
-        "CAST(w2 * h2 AS BIGINT) AS n_pixels, " +
-        "CAST(sum(CASE WHEN c = 0 THEN mean ELSE 0 END) AS BIGINT) AS sum_r, " +
-        "CAST(sum(CASE WHEN c = 1 THEN mean ELSE 0 END) AS BIGINT) AS sum_g, " +
-        "CAST(sum(CASE WHEN c = 2 THEN mean ELSE 0 END) AS BIGINT) AS sum_b, " +
-        "CAST(sum(CASE WHEN c = 3 THEN mean ELSE 0 END) AS BIGINT) AS sum_a " +
-        "FROM m GROUP BY media_id, w2, h2"),
-    // GIF replay: pixel index (id*13 + k/7) mod 64 mapped through the
-    // planted palette formulas — the engine must land here through real
-    // LZW expansion
-    "q222_gif_pixel_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(10 + (doc_id % 11) AS BIGINT) AS w, " +
-        "CAST(8 + ((doc_id * 3) % 7) AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "v AS (SELECT media_id, w, h, (media_id * 13 + k // 7) % 64 AS idx " +
-        "FROM px) " +
-        "SELECT media_id, CAST(w AS INTEGER) AS width, " +
-        "CAST(h AS INTEGER) AS height, CAST(w * h AS BIGINT) AS n_pixels, " +
-        "CAST(sum((idx * 5 + 7) % 256) AS BIGINT) AS sum_r, " +
-        "CAST(sum((idx * 11 + 3) % 256) AS BIGINT) AS sum_g, " +
-        "CAST(sum((idx * 23 + 1) % 256) AS BIGINT) AS sum_b, " +
-        "CAST(sum(idx) AS BIGINT) AS sum_idx " +
-        "FROM v GROUP BY media_id, w, h"),
-    // cross-format replay: ONE grayscale formula covers both members of a
-    // pair (PNG plants it as r=g=b, GIF as the identity gray palette), so
-    // the hash arithmetic is the q219 dHash replay over group g = id/2
-    "q224_crossformat_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.dhash, y.dhash)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3"),
-    // cluster labeling over the same hash replay: recursive closure +
-    // min-id labels + a cluster-size window
-    "q225_media_clusters" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
-        "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
-        "JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT fp.doc_id AS media_id, " +
-        "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cluster_id " +
-        "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n) " +
-        "SELECT media_id, cluster_id, " +
-        "CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size " +
-        "FROM lab"),
-    // descriptor replay: dense 88-dim vectors from the planted formula
-    // (channels identical — the fixture plants r=g=b on both codecs),
-    // cosine in the exact q28 list_inner_product spelling (integer dims →
-    // bit-identical doubles)
-    "q226_image_similarity" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "vv AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "hh AS (SELECT doc_id, val // 32 AS b8, count(*) AS cnt FROM vv GROUP BY 1, 2), " +
-        "hd AS (SELECT doc_id, c * 8 + b8 AS dim, CAST(cnt AS DOUBLE) AS v " +
-        "FROM hh CROSS JOIN (VALUES (0), (1), (2)) AS ch(c)), " +
-        "mm AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM vv GROUP BY 1, 2, 3), " +
-        "gd AS (SELECT doc_id, 24 + by * 8 + bx AS dim, CAST(mean AS DOUBLE) AS v FROM mm), " +
-        "sc88 AS (SELECT doc_id, unnest(range(88)) AS dim FROM dm), " +
-        "fl AS (SELECT sc88.doc_id, sc88.dim, coalesce(u.v, 0.0) AS v " +
-        "FROM sc88 LEFT JOIN (SELECT * FROM hd UNION ALL SELECT * FROM gd) u " +
-        "ON sc88.doc_id = u.doc_id AND sc88.dim = u.dim), " +
-        "dsc AS MATERIALIZED (SELECT doc_id, list(v ORDER BY dim) AS vec " +
-        "FROM fl GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"),
-    // self-verifying recall gate over the image descriptors (the q29/q40
-    // oracle shape: the boolean is pinned TRUE, the counts are exact)
-    "q227_image_ann_ivf" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok FROM documents WHERE doc_id < 10"),
-    // audio descriptor replay: q220's planted window energies as a dense
-    // 57-dim vector, q28's exact cosine spelling
-    "q228_audio_similarity" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "sm AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM sm), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "dsc AS MATERIALIZED (SELECT doc_id, " +
-        "list(CAST(energy AS DOUBLE) ORDER BY wdx) AS vec FROM e GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"),
-    // shot replay: the q230-style per-(video, frame) hash arithmetic with
-    // per-(doc, shot) multipliers, then the same running-boundary window
-    "q234_shot_labels" ->
-      ("WITH d AS (SELECT doc_id, " +
-        "CAST(12 + (doc_id % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((doc_id * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(6 + doc_id % 4 AS BIGINT) AS nf FROM documents), " +
-        "fr AS (SELECT doc_id, w, h, unnest(range(nf)) AS f FROM d), " +
-        "px AS (SELECT doc_id, w, h, f, f // 3 AS s, " +
-        "unnest(range(w * h)) AS k FROM fr), " +
-        "v AS (SELECT doc_id, f, " +
-        "(doc_id*29 + s*71 + f*3 + (k % w)*(3 + (doc_id*13 + s*37) % 251) + " +
-        "(k // w)*(2 + (doc_id*7 + s*29) % 241)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT fr.doc_id, fr.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM fr LEFT JOIN bits ON fr.doc_id = bits.doc_id " +
-        "AND fr.f = bits.f GROUP BY 1, 2), " +
-        "bd AS (SELECT c.doc_id, c.f, " +
-        "CASE WHEN p.dh IS NULL THEN 0 " +
-        "WHEN bit_count(xor(c.dh, p.dh)) > 10 THEN 1 ELSE 0 END AS b " +
-        "FROM fp c LEFT JOIN fp p ON c.doc_id = p.doc_id AND p.f = c.f - 1) " +
-        "SELECT doc_id AS media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(b) OVER (PARTITION BY doc_id ORDER BY f) AS BIGINT) " +
-        "AS shot_id FROM bd"),
-    // cross-modal replay: the q231 hash arithmetic over ALL frames (no
-    // sampling — a blocklist scan cannot sample); the probe side reuses
-    // the SAME fp table (probe 3g's formula IS video 3g's frame-1
-    // formula), brute-force Hamming join across the modality boundary
-    "q235_video_image_match" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "fr AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM fr), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT fr.doc_id, fr.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM fr LEFT JOIN bits ON fr.doc_id = bits.doc_id " +
-        "AND fr.f = bits.f GROUP BY 1, 2), " +
-        "imgfp AS (SELECT doc_id AS image_id, dh FROM fp " +
-        "WHERE doc_id % 3 = 0 AND f = 1) " +
-        "SELECT f.doc_id AS video_id, CAST(f.f AS INTEGER) AS frame_idx, " +
-        "i.image_id, CAST(bit_count(xor(f.dh, i.dh)) AS INTEGER) AS hamming " +
-        "FROM fp f JOIN imgfp i ON bit_count(xor(f.dh, i.dh)) <= 3"),
-    // video ingest replay: the q231 hash + containment arithmetic, ONE
-    // recursive closure over same-parity containment edges (in-batch
-    // components for both batches), batch-1 canonicals admit
-    // unconditionally, batch-2 canonicals drop on any >= 0.5 shared-frame
-    // containment hit against an admitted batch-1 video
-    "q236_video_ingest_twin" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
-        "doc_id % 3 AS role FROM documents " +
-        "WHERE (doc_id // 3) % 2 = 0), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "AND x.doc_id % 2 = y.doc_id % 2 " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2), " +
-        "edges AS (SELECT aggb.ma AS a, aggb.mb AS b " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT dd.doc_id, " +
-        "least(dd.doc_id, coalesce(mn, dd.doc_id)) AS cid " +
-        "FROM dd LEFT JOIN compmap ON dd.doc_id = compmap.n), " +
-        "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
-        "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
-        "pmx AS (SELECT c.doc_id AS cv, a.doc_id AS av, c.f AS cf, a.f AS af " +
-        "FROM fp c JOIN c2 ON c.doc_id = c2.doc_id " +
-        "JOIN fp a ON a.doc_id % 2 = 0 " +
-        "JOIN a1 ON a.doc_id = a1.doc_id " +
-        "WHERE bit_count(xor(c.dh, a.dh)) <= 3), " +
-        "aggx AS (SELECT cv, av, count(DISTINCT cf) AS mc, " +
-        "count(DISTINCT af) AS ma2 FROM pmx GROUP BY 1, 2), " +
-        "rej AS (SELECT DISTINCT cv AS doc_id FROM aggx " +
-        "JOIN cnt nc ON aggx.cv = nc.doc_id " +
-        "JOIN cnt na ON aggx.av = na.doc_id " +
-        "WHERE least(mc / nc.n, ma2 / na.n) >= 0.5), " +
-        "adm AS (SELECT doc_id FROM a1 UNION ALL " +
-        "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
-        "WHERE rej.doc_id IS NULL) " +
-        // sum(1 << j) is a HUGEINT — cast the OUTPUT column to BIGINT or
-        // the comparer reads it as a lossy float
-        "SELECT adm.doc_id AS media_id, CAST(fp.f AS INTEGER) AS frame_idx, " +
-        "CAST(fp.dh AS BIGINT) AS dhash " +
-        "FROM adm JOIN fp ON adm.doc_id = fp.doc_id"),
-    // joint multimodal pairs: the q24 + q224 + q220 replays full-outer
-    // merged on the pair key, flags coalesced to FALSE
-    "q237_multimodal_neardups" ->
-      (s"WITH $multimodalPairCtes " +
-        "SELECT doc_a, doc_b, " +
-        "coalesce(via_text, FALSE) AS via_text, " +
-        "coalesce(via_image, FALSE) AS via_image, " +
-        "coalesce(via_audio, FALSE) AS via_audio " +
-        "FROM tp FULL JOIN ip USING (doc_a, doc_b) " +
-        "FULL JOIN ap USING (doc_a, doc_b)"),
-    // joint multimodal clusters: union the three edge sets, recursive-CTE
-    // closure, min-id labels over ALL items, cluster-size window
-    "q238_multimodal_clusters" ->
-      (s"WITH RECURSIVE $multimodalPairCtes, " +
-        "edges AS (SELECT doc_a AS a, doc_b AS b FROM tp " +
-        "UNION SELECT doc_a, doc_b FROM ip " +
-        "UNION SELECT doc_a, doc_b FROM ap), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT d.doc_id AS item_id, " +
-        "least(d.doc_id, coalesce(mn, d.doc_id)) AS cluster_id " +
-        s"FROM $multimodalSrc d LEFT JOIN compmap ON d.doc_id = compmap.n) " +
-        "SELECT item_id, cluster_id, " +
-        "CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size " +
-        "FROM lab"),
-    // audio clip-in-track replay: absolute-window energies from the two
-    // planted sweeps (partial trailing window dropped via the range
-    // bound), per-offset 56-bit span prints for tracks, the clips' lone
-    // offset-0 print, brute-force all clip x span pairs at Hamming <= 3
-    "q239_audio_clip_matches" ->
-      ("WITH td AS (SELECT doc_id, " +
-        "CAST(800 + (doc_id % 40) * 10 AS BIGINT) AS n FROM documents), " +
-        "ts AS (SELECT doc_id, n, unnest(range((n // 10) * 10)) AS p FROM td), " +
-        "te AS (SELECT doc_id, p // 10 AS w, " +
-        "sum(abs(((p*p*(31 + doc_id % 61) + p*(17 + doc_id % 53) " +
-        "+ doc_id*53) % 4096) - 2048)) AS e " +
-        "FROM ts GROUP BY 1, 2), " +
-        "tn AS (SELECT doc_id, count(*) AS nw FROM te GROUP BY 1), " +
-        "toff AS (SELECT doc_id, unnest(range(nw - 56)) AS o FROM tn), " +
-        "tb AS (SELECT f.doc_id, f.o, l.w - f.o AS j FROM toff f " +
-        "JOIN te l ON l.doc_id = f.doc_id AND l.w >= f.o AND l.w <= f.o + 55 " +
-        "JOIN te r ON r.doc_id = l.doc_id AND r.w = l.w + 1 " +
-        "WHERE r.e > l.e), " +
-        "tf AS (SELECT toff.doc_id, toff.o, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS sfp " +
-        "FROM toff LEFT JOIN tb ON toff.doc_id = tb.doc_id AND toff.o = tb.o " +
-        "GROUP BY 1, 2), " +
-        "cd AS (SELECT doc_id, doc_id % 4 AS role FROM documents " +
-        "WHERE doc_id % 2 = 0), " +
-        "cs AS (SELECT doc_id, role, unnest(range(570)) AS q FROM cd), " +
-        "cp2 AS (SELECT doc_id, role, q, (doc_id % 13) * 10 + q AS p FROM cs), " +
-        "ce AS (SELECT doc_id, q // 10 AS w, sum(abs(" +
-        "CASE WHEN role = 0 " +
-        "THEN 3 * (((p*p*(31 + doc_id % 61) + p*(17 + doc_id % 53) " +
-        "+ doc_id*53) % 4096) - 2048) " +
-        "ELSE ((q*q*(37 + doc_id % 59) + q*(19 + doc_id % 47) " +
-        "+ doc_id*29 + 777) % 4096) - 2048 END)) AS e " +
-        "FROM cp2 GROUP BY 1, 2), " +
-        "cb AS (SELECT l.doc_id, l.w AS j FROM ce l " +
-        "JOIN ce r ON r.doc_id = l.doc_id AND r.w = l.w + 1 WHERE r.e > l.e), " +
-        "cf AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS sfp " +
-        "FROM cd LEFT JOIN cb ON cd.doc_id = cb.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS clip_id, t.doc_id AS track_id, " +
-        "CAST(t.o AS INTEGER) AS track_offset, " +
-        "CAST(bit_count(xor(c.sfp, t.sfp)) AS INTEGER) AS hamming " +
-        "FROM cf c JOIN tf t ON bit_count(xor(c.sfp, t.sfp)) <= 3"),
-    // image quality replay: per-pixel gray from the q217 planted RGBA
-    // formula (floor of the channel mean), exact integer sums
-    "q242_image_quality" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(4 + (n_chars % 13) AS BIGINT) AS w, " +
-        "CAST(3 + ((n_chars * 7) % 11) AS BIGINT) AS h " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, ((media_id * 31 + 4*k) % 256 + " +
-        "(media_id * 31 + 4*k + 1) % 256 + " +
-        "(media_id * 31 + 4*k + 2) % 256) // 3 AS gray FROM px) " +
-        "SELECT media_id, CAST(count(*) AS BIGINT) AS n_px, " +
-        "CAST(sum(gray) AS BIGINT) AS sum_gray, " +
-        "CAST(count(*) * sum(gray * gray) - sum(gray) * sum(gray) AS BIGINT) " +
-        "AS var_num, " +
-        "CAST(sum(CASE WHEN gray < 16 THEN 1 ELSE 0 END) AS BIGINT) AS n_dark, " +
-        "CAST(sum(CASE WHEN gray > 239 THEN 1 ELSE 0 END) AS BIGINT) AS n_bright " +
-        "FROM g GROUP BY 1"),
-    // FLAC sample-decode replay: lossless ⇒ the planted formula IS the
-    // decoded stream — constant clips every 7th doc, linear-mod sweeps
-    // elsewhere, amplitude census
-    "q255_flac_sample_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(CASE WHEN doc_id % 7 = 0 THEN 300 " +
-        "ELSE 200 + (n_chars * 3) % 300 END AS BIGINT) AS n " +
-        "FROM documents), " +
-        "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT media_id, n, " +
-        "CASE WHEN media_id % 7 = 0 THEN ((media_id * 31) % 4096) - 2048 " +
-        "ELSE ((media_id * 23 + p * 7) % 4096) - 2048 END AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // self-verifying recall gate over the audio descriptors (the exact
-    // q227 oracle shape)
-    "q254_audio_ann_ivf" ->
-      ("SELECT count(*) AS n_probes, CAST(3 * count(*) AS BIGINT) AS n_exact_pairs, " +
-        "TRUE AS recall_ok FROM documents WHERE doc_id < 10"),
-    // joint-ingest replay: the q238 union pair arithmetic split by batch
-    // parity — per-parity min-id closures, then cross-parity rejection of
-    // kept odds matching kept (committed) evens in ANY modality; landed
-    // rows carry the replayed image dHash and audio contour prints
-    "q253_joint_ingest_twin" ->
-      (s"WITH RECURSIVE $multimodalPairCtes, " +
-        "pr AS (SELECT doc_a, doc_b FROM tp " +
-        "UNION SELECT doc_a, doc_b FROM ip " +
-        "UNION SELECT doc_a, doc_b FROM ap), " +
-        // batch 1 (even ids): in-batch any-modality closure, keep min-id
-        "e1 AS (SELECT doc_a AS a, doc_b AS b FROM pr " +
-        "WHERE doc_a % 2 = 0 AND doc_b % 2 = 0), " +
-        "bi1 AS (SELECT a, b FROM e1 UNION ALL SELECT b, a FROM e1), " +
-        "r1(n, m) AS (SELECT a, b FROM bi1 " +
-        "UNION SELECT r1.n, bi1.b FROM r1 JOIN bi1 ON bi1.a = r1.m), " +
-        "rm1 AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r1 GROUP BY n) " +
-        "WHERE mn < n), " +
-        s"k1 AS (SELECT d.doc_id FROM $multimodalSrc d " +
-        "LEFT JOIN rm1 ON d.doc_id = rm1.n " +
-        "WHERE d.doc_id % 2 = 0 AND rm1.n IS NULL), " +
-        // batch 2 (odd ids): same in-batch closure
-        "e2 AS (SELECT doc_a AS a, doc_b AS b FROM pr " +
-        "WHERE doc_a % 2 = 1 AND doc_b % 2 = 1), " +
-        "bi2 AS (SELECT a, b FROM e2 UNION ALL SELECT b, a FROM e2), " +
-        "r2(n, m) AS (SELECT a, b FROM bi2 " +
-        "UNION SELECT r2.n, bi2.b FROM r2 JOIN bi2 ON bi2.a = r2.m), " +
-        "rm2 AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r2 GROUP BY n) " +
-        "WHERE mn < n), " +
-        s"k2 AS (SELECT d.doc_id FROM $multimodalSrc d " +
-        "LEFT JOIN rm2 ON d.doc_id = rm2.n " +
-        "WHERE d.doc_id % 2 = 1 AND rm2.n IS NULL), " +
-        // cross-batch: a kept odd matching a kept (= committed) even in
-        // ANY modality is rejected
-        "x AS (SELECT CASE WHEN doc_a % 2 = 1 THEN doc_a ELSE doc_b END AS odd_id, " +
-        "CASE WHEN doc_a % 2 = 1 THEN doc_b ELSE doc_a END AS even_id " +
-        "FROM pr WHERE (doc_a + doc_b) % 2 = 1), " +
-        "rej AS (SELECT DISTINCT x.odd_id FROM x " +
-        "JOIN k1 ON x.even_id = k1.doc_id " +
-        "JOIN k2 ON x.odd_id = k2.doc_id), " +
-        "landed AS (SELECT doc_id FROM k1 " +
-        "UNION ALL SELECT k2.doc_id FROM k2 " +
-        "LEFT JOIN rej ON k2.doc_id = rej.odd_id WHERE rej.odd_id IS NULL) " +
-        "SELECT l.doc_id AS item_id, CAST(fp.dhash AS BIGINT) AS dhash, " +
-        "CAST(afp.afp AS BIGINT) AS afp FROM landed l " +
-        "JOIN fp ON fp.doc_id = l.doc_id " +
-        "JOIN afp ON afp.doc_id = l.doc_id"),
-    // JPEG pixel-decode replay: the DC-only closed form — block k of doc
-    // id decodes to the CONSTANT gray (id*31 + k*(7 + id%13)) mod 256,
-    // 64 pixels per block — which the engine must earn through the real
-    // Huffman + IDCT walk
-    "q252_jpeg_pixel_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(8 * (1 + n_chars % 3) AS INTEGER) AS width, " +
-        "CAST(8 * (1 + (n_chars * 7) % 2) AS INTEGER) AS height " +
-        "FROM documents), " +
-        "b AS (SELECT media_id, width, height, " +
-        "unnest(range((width // 8) * (height // 8))) AS k FROM d), " +
-        "g AS (SELECT media_id, width, height, " +
-        "(media_id * 31 + k * (7 + media_id % 13)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(width AS BIGINT) * height AS n_pixels, " +
-        "CAST(64 * sum(gray) AS BIGINT) AS sum_r, " +
-        "CAST(64 * sum(gray) AS BIGINT) AS sum_g, " +
-        "CAST(64 * sum(gray) AS BIGINT) AS sum_b " +
-        "FROM g GROUP BY media_id, width, height"),
-    // shared-intro replay: offset-0 window energies from the stamped/body
-    // CASE, contour bits, prints grouped by distinct-clip recurrence
-    "q251_audio_boilerplate" ->
-      ("WITH d AS (SELECT doc_id FROM documents), " +
-        "sp AS (SELECT doc_id, unnest(range(570)) AS p FROM d), " +
-        "v AS (SELECT doc_id, p // 10 AS w, abs(CASE WHEN doc_id % 3 = 0 " +
-        "THEN ((p*p*43 + p*29 + 111) % 4096) - 2048 " +
-        "ELSE ((p*p*(31 + doc_id % 61) + p*(17 + doc_id % 53) " +
-        "+ doc_id*53) % 4096) - 2048 END) AS av FROM sp), " +
-        "e AS (SELECT doc_id, w, sum(av) AS en FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.w AS j FROM e l " +
-        "JOIN e r ON r.doc_id = l.doc_id AND r.w = l.w + 1 " +
-        "WHERE r.en > l.en), " +
-        "fp AS (SELECT d.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS sfp " +
-        "FROM d LEFT JOIN bits ON d.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT CAST(sfp AS BIGINT) AS intro_print, " +
-        "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_clips " +
-        "FROM fp GROUP BY 1 HAVING count(DISTINCT doc_id) >= 50"),
-    // near-dup explanation replay: the q24 brute-force pair CTEs + shared
-    // shingles joined to the vocabulary df, ranked rarest-first per pair
-    "q250_neardup_explanations" ->
-      (s"WITH ${shingleCtes("documents")}, $shinglePairCtes, " +
-        "tp AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "dfreq AS (SELECT g, count(DISTINCT doc_id) AS gram_df " +
-        "FROM e GROUP BY 1), " +
-        "shared AS (SELECT tp.doc_a, tp.doc_b, ea.g FROM tp " +
-        "JOIN e ea ON ea.doc_id = tp.doc_a " +
-        "JOIN e eb ON eb.doc_id = tp.doc_b AND eb.g = ea.g), " +
-        "r AS (SELECT doc_a, doc_b, shared.g AS gram, gram_df, " +
-        "CAST(row_number() OVER (PARTITION BY doc_a, doc_b " +
-        "ORDER BY gram_df, shared.g) AS INTEGER) AS rn " +
-        "FROM shared JOIN dfreq ON shared.g = dfreq.g) " +
-        "SELECT doc_a, doc_b, gram, CAST(gram_df AS BIGINT) AS gram_df, rn " +
-        "FROM r WHERE rn <= 5"),
-    // image boilerplate replay: block values from the stamped-logo CASE
-    // over the per-image quadratic, grouped by (position, value)
-    "q249_image_boilerplate" ->
-      ("WITH d AS (SELECT doc_id FROM documents), " +
-        "bb AS (SELECT doc_id, unnest(range(120)) AS b FROM d), " +
-        "bm AS (SELECT doc_id, b % 12 AS bx, b // 12 AS by, " +
-        "CASE WHEN doc_id % 3 = 0 AND b % 12 < 4 AND b // 12 < 2 " +
-        "THEN (b % 12) * 50 + (b // 12) * 30 + 7 " +
-        "ELSE ((b % 12)*(b % 12)*(13 + doc_id % 31) + " +
-        "(b // 12)*(b // 12)*(7 + doc_id % 29) + " +
-        "(b % 12)*(b // 12)*(3 + doc_id % 17) + doc_id*11) % 226 END AS mean " +
-        "FROM bb) " +
-        "SELECT CAST(bx AS INTEGER) AS bx, CAST(by AS INTEGER) AS by, " +
-        "CAST(mean AS BIGINT) AS mean, " +
-        "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_images " +
-        "FROM bm GROUP BY 1, 2, 3 HAVING count(DISTINCT doc_id) >= 50"),
-    // tri-format dHash replay: the 8x8 block-constant grid IS the dHash
-    // mean grid (8-px blocks align), one formula for all three formats;
-    // brute-force pairs at Hamming <= 3
-    "q257_triformat_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g FROM documents), " +
-        "cell AS (SELECT doc_id, g, unnest(range(64)) AS c FROM dd), " +
-        "m AS (SELECT doc_id, c % 8 AS bx, c // 8 AS by, " +
-        "(g*29 + (c % 8)*(c % 8)*(3 + (g % 7) * 9) + " +
-        "(c // 8)*(c // 8)*(2 + (g % 5) * 7) + " +
-        "(c % 8)*(c // 8)*(5 + (g % 11) * 3)) % 256 AS mean FROM cell), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3"),
-    // WAV-depth replay: the depth CASE — 8-bit through (u-128)*256,
-    // 16- and 24-bit through the shared planted formula (the 24-bit
-    // low-byte noise vanishes in the conversion)
-    // raster replay: ONE quadratic displayed-gray formula (prime-modulus
-    // per-item coefficients) across all eight BMP/TIFF layout variants —
-    // the engine earns it through eight different byte walks (row flips,
-    // palettes, strips, byte orders, the WhiteIsZero inversion)
-    // ID3 replay: the planted (frame, value) closed forms — the engine
-    // earns each row through a different size layout and text encoding
-    "q278_id3_text_frames" ->
-      ("WITH d AS (SELECT doc_id AS media_id FROM documents), " +
-        "f AS (SELECT media_id, 'TIT2' AS frame_id, " +
-        "'title-' || CAST((media_id * 7) % 1000 AS VARCHAR) AS value FROM d " +
-        "UNION ALL SELECT media_id, 'TPE1', " +
-        "'artist-' || CAST((media_id * 13) % 100 AS VARCHAR) FROM d " +
-        "UNION ALL SELECT media_id, 'TALB', " +
-        "'album-' || CAST((media_id * 11) % 50 AS VARCHAR) FROM d " +
-        "WHERE media_id % 3 = 0) " +
-        "SELECT media_id, frame_id, value FROM f"),
-    // container-tag replay: the planted (format, field, value) closed
-    // forms — the engine earns each row through a different walk (ilst
-    // atoms, cross-page Ogg comment reassembly incl. the >255-byte
-    // spanning packet, ID3v2 ext-header/unsync layouts); rows arrive
-    // unordered (the driver sorts before hashing)
-    "q279_container_text_tags" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 4 AS v " +
-        "FROM documents), " +
-        "t AS (" +
-        "SELECT media_id, 'mp4' AS format, 'title' AS field, " +
-        "'mv-title-' || CAST((media_id * 7) % 1000 AS VARCHAR) AS value " +
-        "FROM d WHERE v = 0 " +
-        "UNION ALL SELECT media_id, 'mp4', 'artist', " +
-        "'mv-artist-' || CAST((media_id * 13) % 100 AS VARCHAR) " +
-        "FROM d WHERE v = 0 " +
-        "UNION ALL SELECT media_id, 'mp4', 'album', " +
-        "'mv-album-' || CAST((media_id * 11) % 50 AS VARCHAR) " +
-        "FROM d WHERE v = 0 AND media_id % 3 = 0 " +
-        "UNION ALL SELECT media_id, 'ogg', 'title', " +
-        "'og-title-' || CAST((media_id * 7) % 1000 AS VARCHAR) " +
-        "FROM d WHERE v = 1 " +
-        "UNION ALL SELECT media_id, 'ogg', 'artist', " +
-        "'og-artist-' || CAST((media_id * 13) % 100 AS VARCHAR) " +
-        "FROM d WHERE v = 1 " +
-        "UNION ALL SELECT media_id, 'ogg', 'genre', " +
-        "'og-genre-' || CAST((media_id * 3) % 20 AS VARCHAR) " +
-        "FROM d WHERE v = 1 AND media_id % 5 = 0 " +
-        "UNION ALL SELECT media_id, 'ogg', 'description', " +
-        "repeat('x', CAST(256 + media_id % 40 AS INTEGER)) " +
-        "FROM d WHERE v = 1 AND media_id % 7 = 0 " +
-        "UNION ALL SELECT media_id, 'ogg', 'title', " +
-        "'op-title-' || CAST((media_id * 7) % 1000 AS VARCHAR) " +
-        "FROM d WHERE v = 2 " +
-        "UNION ALL SELECT media_id, 'ogg', 'album', " +
-        "'op-album-' || CAST((media_id * 11) % 50 AS VARCHAR) " +
-        "FROM d WHERE v = 2 " +
-        "UNION ALL SELECT media_id, 'mp3', 'title', " +
-        "'id3-title-' || CAST((media_id * 7) % 1000 AS VARCHAR) " +
-        "FROM d WHERE v = 3 " +
-        "UNION ALL SELECT media_id, 'mp3', 'artist', " +
-        "'id3-artist-' || CAST((media_id * 13) % 100 AS VARCHAR) " +
-        "FROM d WHERE v = 3) " +
-        "SELECT media_id, format, field, value FROM t"),
-    // lossy-WebP replay: the planted 4x4-cell quadratic, pushed through
-    // the DISPLAY map in integer arithmetic (fixed-point luma scale,
-    // studio-range offsets, >>6 clip — spelled GREATEST-before-division
-    // so no negative floor ambiguity); the engine EARNS each mean
-    // through the full RFC 6386 decode
-    "q280_lossy_webp_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id FROM documents), " +
-        "cells AS (SELECT media_id, unnest(range(64)) AS k FROM d), " +
-        "v AS (SELECT media_id, k % 8 AS bx, k // 8 AS by, " +
-        "((k % 8)*(k % 8)*(11 + media_id % 23) + " +
-        "(k // 8)*(k // 8)*(5 + media_id % 19) + " +
-        "(k % 8)*(k // 8)*(3 + media_id % 13) + media_id*17) % 54 * 4 + 16 " +
-        "AS y FROM cells), " +
-        "g AS (SELECT media_id, bx, by, (19077 * y) // 256 AS yy FROM v) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, " +
-        "CAST((2 * LEAST(GREATEST(yy - 1160, 0) // 64, 255) + " +
-        "LEAST(GREATEST(yy - 1161, 0) // 64, 255)) // 3 AS BIGINT) AS mean " +
-        "FROM g"),
-    // cross-codec replay: BOTH members' dHash fingerprints — the PNG's
-    // planted grays, the WebP's displayed grays through the same
-    // integer display map — then the full pair set (the q273 spelling)
-    "q281_lossy_crossformat_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "cell AS (SELECT doc_id, g, unnest(range(64)) AS c FROM dd), " +
-        "pv AS (SELECT doc_id, c % 8 AS bx, c // 8 AS by, " +
-        "((c % 8)*(c % 8)*(7 + (g % 5) * 9) + " +
-        "(c // 8)*(c // 8)*(3 + (g % 7) * 5) + " +
-        "(c % 8)*(c // 8)*(11 + (g % 3) * 13) + g * 31) % 54 * 4 + 16 " +
-        "AS v FROM cell), " +
-        "m AS (SELECT doc_id, bx, by, CASE WHEN doc_id % 2 = 0 THEN v " +
-        "ELSE (2 * LEAST(GREATEST((19077 * v) // 256 - 1160, 0) // 64, 255) + " +
-        "LEAST(GREATEST((19077 * v) // 256 - 1161, 0) // 64, 255)) // 3 " +
-        "END AS mean FROM pv), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3"),
-    // fmt-matrix replay: every profile (plain/extensible float32,
-    // extensible PCM16, int32 PCM) plants the SAME int16 value per
-    // sample, so q270's census formula covers the whole matrix with no
-    // per-profile CASE — the engine EARNS the equality through four
-    // different fmt-chunk walks and three sample conversions
-    "q282_wav_fmt_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(200 + (doc_id * 7) % 200 AS BIGINT) AS n FROM documents), " +
-        "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT media_id, n, " +
-        "((media_id*23 + p*7) % 4096) - 2048 AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // compressed-TIFF replay: q271's closed form verbatim — the engine
-    // earns it through eight different codec x predictor strip paths
-    "q283_tiff_compressed_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // legacy-audio replay: u-law codes through the published expansion,
-    // PCM16 through the planted family, signed PCM8 through the <<8
-    // scale; rates/containers CASE by profile
-    "q291_legacy_audio_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 4 AS v, " +
-        "CAST(200 + (doc_id * 7) % 200 AS BIGINT) AS n FROM documents), " +
-        "s AS (SELECT media_id, v, n, unnest(range(n)) AS p FROM d), " +
-        "ul AS (SELECT media_id, n, " +
-        "255 - CAST((media_id*29 + p*13) % 256 AS INTEGER) AS u " +
-        "FROM s WHERE v = 0), " +
-        "uv AS (SELECT media_id, n, " +
-        "CASE WHEN (u & 128) != 0 " +
-        "THEN 132 - ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) " +
-        "ELSE ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) - 132 " +
-        "END AS sv FROM ul), " +
-        "pv AS (SELECT media_id, n, " +
-        "((media_id*23 + p*7) % 4096) - 2048 AS sv FROM s " +
-        "WHERE v IN (1, 2)), " +
-        "p8 AS (SELECT media_id, n, " +
-        "(((media_id*29 + p*13) % 256) - 128) * 256 AS sv FROM s " +
-        "WHERE v = 3), " +
-        "allv AS (SELECT * FROM uv UNION ALL SELECT * FROM pv " +
-        "UNION ALL SELECT * FROM p8) " +
-        "SELECT allv.media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(CASE WHEN allv.media_id % 4 IN (0, 1) THEN 8000 " +
-        "ELSE 44100 END AS INTEGER) AS sample_rate, " +
-        "allv.n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM allv GROUP BY allv.media_id, allv.n"),
-    // RLE4 replay: the q271 quadratic reduced mod 16 through the x17
-    // identity ramp — one closed form across both RLE4 modes
-    "q294_bmp_rle4_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "(((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 16) * 17 " +
-        "AS gray FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // learned-encoder replay: the q226 descriptor CTEs feed the seeded
-    // projection's closed-form integer weights — the oracle recomputes
-    // descriptor AND matrix multiply arithmetically (weights and dims
-    // are exact integers, sums far below 2^53)
-    "q295_learned_encoder_serve" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "vv AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "hh AS (SELECT doc_id, val // 32 AS b8, count(*) AS cnt FROM vv GROUP BY 1, 2), " +
-        "hd AS (SELECT doc_id, c * 8 + b8 AS dim, CAST(cnt AS DOUBLE) AS v " +
-        "FROM hh CROSS JOIN (VALUES (0), (1), (2)) AS ch(c)), " +
-        "mm AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM vv GROUP BY 1, 2, 3), " +
-        "gd AS (SELECT doc_id, 24 + by * 8 + bx AS dim, CAST(mean AS DOUBLE) AS v FROM mm), " +
-        "sc88 AS (SELECT doc_id, unnest(range(88)) AS dim FROM dm), " +
-        "fl AS (SELECT sc88.doc_id, sc88.dim, coalesce(u.v, 0.0) AS v " +
-        "FROM sc88 LEFT JOIN (SELECT * FROM hd UNION ALL SELECT * FROM gd) u " +
-        "ON sc88.doc_id = u.doc_id AND sc88.dim = u.dim), " +
-        "od AS (SELECT unnest(range(16)) AS o), " +
-        "pr AS (SELECT fl.doc_id AS media_id, od.o AS dim, " +
-        "sum(((7*31 + od.o*293 + fl.dim*181 + od.o*fl.dim*97) % 127 - 63) * fl.v) AS value " +
-        "FROM fl CROSS JOIN od GROUP BY 1, 2) " +
-        "SELECT media_id, CAST(dim AS INTEGER) AS dim, " +
-        "CAST(value AS BIGINT) AS value FROM pr"),
-    // scaling probe replay: the identical 64-deep md5 hex chain (DuckDB's
-    // md5(varchar) hashes the same UTF-8 bytes Spark's binary cast feeds),
-    // same nibble grouping and 28-bit hex-prefix checksum
-    "q296_scaling_probe" -> {
-      val chain = (1 to 64).foldLeft("seed")((e, _) => s"md5($e)")
-      "WITH s AS (SELECT CAST(l_orderkey AS VARCHAR) || '_' || " +
-        "CAST(l_linenumber AS VARCHAR) || '_' || CAST(r AS VARCHAR) AS seed " +
-        "FROM lineitem CROSS JOIN (SELECT unnest(range(4)) AS r)), " +
-        s"c AS (SELECT $chain AS h FROM s) " +
-        "SELECT substr(h, 1, 1) AS nibble, CAST(count(*) AS BIGINT) AS n, " +
-        "CAST(sum(CAST(('0x' || substr(h, 2, 7)) AS BIGINT)) AS BIGINT) AS checksum " +
-        "FROM c GROUP BY 1"
-    },
-    // MS ADPCM replay: every block decodes to its planted seed value
-    // (12 samples each at the fixture geometry)
-    "q293_wav_msadpcm_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(3 + doc_id % 3 AS BIGINT) AS nb FROM documents), " +
-        "blk AS (SELECT media_id, nb, unnest(range(nb)) AS b FROM d), " +
-        "v AS (SELECT media_id, nb, " +
-        "((media_id*31 + b*137) % 4096) - 2048 AS pred FROM blk) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(8000 AS INTEGER) AS sample_rate, " +
-        "CAST(nb * 12 AS BIGINT) AS n_samples, " +
-        "CAST(12 * sum(abs(pred)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(pred)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, nb"),
-    // soundtrack replay: q220's contour-fingerprint arithmetic with this
-    // fixture's sample family — both pair members decode the SAME
-    // samples (the oracle never sees the containers), so the full pair
-    // set falls out of one fingerprint per doc
-    "q292_avi_soundtrack_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "s AS (SELECT doc_id, g, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(((g*29 + p*p*(7 + g % 13) + p*11) % 4096) - 2048) AS av " +
-        "FROM s), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.afp, y.afp)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.afp, y.afp)) <= 3"),
-    // ADPCM replay: every block decodes to its planted predictor (17
-    // samples each at the fixture geometry)
-    "q290_wav_adpcm_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(3 + doc_id % 3 AS BIGINT) AS nb FROM documents), " +
-        "blk AS (SELECT media_id, nb, unnest(range(nb)) AS b FROM d), " +
-        "v AS (SELECT media_id, nb, " +
-        "((media_id*23 + b*131) % 4096) - 2048 AS pred FROM blk) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(8000 AS INTEGER) AS sample_rate, " +
-        "CAST(nb * 17 AS BIGINT) AS n_samples, " +
-        "CAST(17 * sum(abs(pred)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(pred)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, nb"),
-    // wide-sampling replay: the q266 DC-only closed form with
-    // variant-dependent dims — the engine earns it through four
-    // different wide-MCU walks
-    "q289_jpeg_sampling_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 5 AS v " +
-        "FROM documents), " +
-        "dm AS (SELECT media_id, " +
-        "CAST(CASE v WHEN 0 THEN 32 WHEN 1 THEN 16 WHEN 2 THEN 48 " +
-        "WHEN 3 THEN 16 ELSE 32 END AS INTEGER) AS width, " +
-        "CAST(CASE v WHEN 0 THEN 16 WHEN 1 THEN 32 WHEN 2 THEN 16 " +
-        "WHEN 3 THEN 48 ELSE 16 END AS INTEGER) AS height FROM d), " +
-        "b AS (SELECT media_id, width, height, " +
-        "unnest(range((width // 8) * (height // 8))) AS k FROM dm), " +
-        "g AS (SELECT media_id, width, height, " +
-        "k % (width // 8) AS bx, k // (width // 8) AS by, " +
-        "(media_id * 41 + k * (13 + media_id % 19)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2, 3"),
-    // RLE8 replay: the parity CASE mirrors the fixture — run-friendly
-    // (x//3) form on even ids, the q271 quadratic on odd
-    "q287_bmp_rle_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "xx AS (SELECT media_id, w, h, k, CASE WHEN media_id % 2 = 0 " +
-        "THEN (k % w) // 3 ELSE k % w END AS gx FROM px), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "(gx*gx*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "gx*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM xx), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // deep/tiled-TIFF replay: q271's closed form verbatim — the engine
-    // earns it through the 16-bit reductions and the tiled segment walk
-    "q288_tiff_deep_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // G.711 replay: the published u-law/A-law segment expansions in
-    // integer SQL over the planted code bytes (sample_rate 8000 — the
-    // codecs' native rate)
-    "q286_wav_g711_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(200 + (doc_id * 7) % 200 AS BIGINT) AS n FROM documents), " +
-        "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
-        "cb AS (SELECT media_id, n, " +
-        "CAST((media_id*29 + p*13) % 256 AS INTEGER) AS c FROM s), " +
-        "ul AS (SELECT media_id, n, 255 - c AS u FROM cb " +
-        "WHERE media_id % 2 = 0), " +
-        "uv AS (SELECT media_id, n, " +
-        "CASE WHEN (u & 128) != 0 " +
-        "THEN 132 - ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) " +
-        "ELSE ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) - 132 " +
-        "END AS sv FROM ul), " +
-        "al AS (SELECT media_id, n, xor(c, 85) AS a FROM cb " +
-        "WHERE media_id % 2 = 1), " +
-        "av AS (SELECT media_id, n, " +
-        "CASE WHEN (a & 128) != 0 THEN 1 ELSE -1 END * " +
-        "CASE WHEN ((a >> 4) & 7) = 0 THEN ((a & 15) << 4) + 8 " +
-        "ELSE (((a & 15) << 4) + 264) << (((a >> 4) & 7) - 1) " +
-        "END AS sv FROM al), " +
-        "v AS (SELECT * FROM uv UNION ALL SELECT * FROM av) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(8000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // APNG replay: the q267 canvas algebra with APNG semantics — dispose
-    // BACKGROUND clears to transparent (gray 0, not a palette color),
-    // the pierced rect's dispose PREVIOUS removes it from frame 2, holes
-    // show the base on even ids and transparent black on odd
-    "q284_apng_composited_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
-        "v AS (SELECT media_id, f, x, y, " +
-        "((media_id*23 + x*3 + y*5) % 64) * 4 + 1 AS v0, " +
-        "CASE WHEN par = 0 THEN ((media_id*23 + x*3 + y*5) % 64) * 4 + 1 " +
-        "ELSE 0 END AS base FROM c), " +
-        "g AS (SELECT media_id, f, x, y, " +
-        "CASE WHEN f = 0 THEN v0 " +
-        "WHEN f = 1 AND x BETWEEN 4 AND 11 AND y BETWEEN 4 AND 11 " +
-        "AND ((x-4) + (y-4)) % 3 <> 0 " +
-        "THEN ((media_id*7 + (x-4)*5 + (y-4)*3) % 63) * 4 + 1 " +
-        "WHEN f = 2 AND x >= 8 AND y < 8 " +
-        "THEN ((media_id*11 + (x-8)*7 + y*9) % 64) * 4 + 1 " +
-        "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2"),
-    // GIF<->APNG replay: q276's SQL verbatim — same dims, frame counts,
-    // and quadratic value family; only the odd member's CONTAINER
-    // changed, which the oracle never sees
-    "q285_gif_apng_video_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(8 + (g % 5) * 2 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 2 AS BIGINT) AS h, " +
-        "CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "(g*37 + f*(11 + (g * 17) % 97) + (k % w)*(k % w)*(4 + (g % 11) * 5) + " +
-        "(k // w)*(k // w)*(3 + (g % 13) * 3) + " +
-        "(k % w)*(k // w)*(2 + (g % 7) * 9)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"),
-    // oriented-WebP-crop replay: the q263 arithmetic with this fixture's
-    // coefficient family — the oracle works ENTIRELY in displayed
-    // coordinates (the planted grid), never seeing the orientation or
-    // the codec
-    "q277_webp_oriented_crops" ->
-      ("WITH dd AS (SELECT doc_id, 8 + doc_id % 3 AS gw, " +
-        "8 + doc_id % 2 AS gh FROM documents), " +
-        "bb AS (SELECT doc_id, gw, gh, unnest(range(gw * gh)) AS b FROM dd), " +
-        "bm AS (SELECT doc_id, b % gw AS bx, b // gw AS by, " +
-        "((b % gw)*(b % gw)*(7 + doc_id % 29) + " +
-        "(b // gw)*(b // gw)*(9 + doc_id % 17) + " +
-        "(b % gw)*(b // gw)*(5 + doc_id % 11) + doc_id*23) % 196 AS v " +
-        "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
-        "cd AS (SELECT doc_id, doc_id % 4 AS crole, " +
-        "doc_id % (8 + doc_id % 3 - 7) AS cox, " +
-        "doc_id % (8 + doc_id % 2 - 7) AS coy " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "cbb AS (SELECT doc_id, crole, cox, coy, unnest(range(64)) AS b " +
-        "FROM cd), " +
-        "cbm AS (SELECT doc_id, b % 8 AS bx, b // 8 AS by, " +
-        "CASE WHEN crole = 0 THEN " +
-        "((cox + b % 8)*(cox + b % 8)*(7 + doc_id % 29) + " +
-        "(coy + b // 8)*(coy + b // 8)*(9 + doc_id % 17) + " +
-        "(cox + b % 8)*(coy + b // 8)*(5 + doc_id % 11) + doc_id*23) % 196 + 30 " +
-        "ELSE ((b % 8)*(b % 8)*19 + (b // 8)*(b // 8)*23 + " +
-        "(b % 8)*(b // 8)*29 + doc_id*7 + 55) % 196 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3"),
-    // animated-WebP replay: the canvas algebra — base frame, dispose by
-    // parity, the alpha-0 diagonal showing the base (or the restored
-    // background) through the blended rect, the no-blend overlay winning
-    // where rects overlap — per pixel, then quadrant sums per frame
-    "q275_webp_anim_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
-        "v AS (SELECT media_id, f, x, y, " +
-        "((media_id*29 + x*5 + y*7) % 64) * 4 + 2 AS v0, " +
-        "CASE WHEN par = 0 THEN 8 " +
-        "ELSE ((media_id*29 + x*5 + y*7) % 64) * 4 + 2 END AS base FROM c), " +
-        "g AS (SELECT media_id, f, x, y, " +
-        "CASE WHEN f = 0 THEN v0 " +
-        "WHEN f = 2 AND x >= 8 AND y < 8 " +
-        "THEN ((media_id*17 + (x-8)*9 + y*3) % 64) * 4 + 2 " +
-        "WHEN x BETWEEN 4 AND 11 AND y BETWEEN 4 AND 11 " +
-        "AND ((x-4) + (y-4)) % 3 <> 1 " +
-        "THEN ((media_id*13 + (x-4)*3 + (y-4)*5) % 63) * 4 + 2 " +
-        "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2"),
-    // GIF<->WebP video replay: ONE frame formula for both members,
-    // the q248 dHash/containment arithmetic over this fixture's pair
-    // grouping, dims, and coefficients
-    "q276_gif_webp_video_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(8 + (g % 5) * 2 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 2 AS BIGINT) AS h, " +
-        "CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "(g*37 + f*(11 + (g * 17) % 97) + (k % w)*(k % w)*(4 + (g % 11) * 5) + " +
-        "(k // w)*(k // w)*(3 + (g % 13) * 3) + " +
-        "(k % w)*(k // w)*(2 + (g % 7) * 9)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"),
-    // container replay: every parsed field (codec fourcc, tkhd dims,
-    // mvhd duration at its timescale, MPEG frame-header tables, Ogg id
-    // headers) is a closed form of doc_id; NULL where the format has no
-    // such concept — the engine must EARN each value through the real
-    // box/frame/page walk
-    "q274_container_meta" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 5 AS v " +
-        "FROM documents), " +
-        "r AS (SELECT media_id, v, " +
-        "CASE WHEN v IN (0, 1) THEN 'mp4' WHEN v = 2 THEN 'mp3' " +
-        "ELSE 'ogg' END AS format, " +
-        "CASE v WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1' " +
-        "WHEN 2 THEN (CASE WHEN media_id % 2 = 0 THEN 'mpeg1-L3' " +
-        "ELSE 'mpeg2-L3' END) " +
-        "WHEN 3 THEN 'vorbis' ELSE 'opus' END AS codec, " +
-        "CASE v WHEN 0 THEN 320 + (media_id % 5) * 16 " +
-        "WHEN 1 THEN 640 + (media_id % 3) * 64 END AS width, " +
-        "CASE v WHEN 0 THEN 240 + (media_id % 7) * 16 " +
-        "WHEN 1 THEN 360 + (media_id % 4) * 36 END AS height, " +
-        "CASE v WHEN 0 THEN 1000 + (media_id * 7) % 9000 " +
-        "WHEN 1 THEN ((600 + (media_id * 11) % 6000) * 1000) // 600 " +
-        "END AS duration_ms, " +
-        "CASE v WHEN 1 THEN (CASE media_id % 3 WHEN 0 THEN 32000 " +
-        "WHEN 1 THEN 44100 ELSE 48000 END) " +
-        "WHEN 2 THEN (CASE WHEN media_id % 2 = 0 " +
-        "THEN (CASE media_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 " +
-        "ELSE 32000 END) " +
-        "ELSE (CASE media_id % 3 WHEN 0 THEN 22050 WHEN 1 THEN 24000 " +
-        "ELSE 16000 END) END) " +
-        "WHEN 3 THEN 8000 + (media_id % 5) * 8000 " +
-        "WHEN 4 THEN 48000 END AS sample_rate, " +
-        "CASE v WHEN 1 THEN 1 + media_id % 2 " +
-        "WHEN 2 THEN (CASE WHEN media_id % 4 < 2 THEN 1 ELSE 2 END) " +
-        "WHEN 3 THEN 1 + media_id % 2 " +
-        "WHEN 4 THEN 1 + media_id % 2 END AS channels, " +
-        "CASE WHEN v = 2 THEN (CASE WHEN media_id % 2 = 0 " +
-        "THEN (CASE 1 + media_id % 7 WHEN 1 THEN 32 WHEN 2 THEN 40 " +
-        "WHEN 3 THEN 48 WHEN 4 THEN 56 WHEN 5 THEN 64 WHEN 6 THEN 80 " +
-        "ELSE 96 END) " +
-        "ELSE (CASE 1 + media_id % 7 WHEN 1 THEN 8 WHEN 2 THEN 16 " +
-        "WHEN 3 THEN 24 WHEN 4 THEN 32 WHEN 5 THEN 40 WHEN 6 THEN 48 " +
-        "ELSE 56 END) END) END AS bitrate_kbps, " +
-        "CASE v WHEN 0 THEN 1 WHEN 1 THEN 2 END AS n_tracks FROM d) " +
-        "SELECT media_id, format, codec, " +
-        "CAST(width AS INTEGER) AS width, " +
-        "CAST(height AS INTEGER) AS height, " +
-        "CAST(duration_ms AS BIGINT) AS duration_ms, " +
-        "CAST(sample_rate AS INTEGER) AS sample_rate, " +
-        "CAST(channels AS INTEGER) AS channels, " +
-        "CAST(bitrate_kbps AS INTEGER) AS bitrate_kbps, " +
-        "CAST(n_tracks AS INTEGER) AS n_tracks FROM r"),
-    // WebP replay: ONE quadratic displayed-gray formula (prime-modulus
-    // per-item coefficients) across the six VP8L encoder paths — the
-    // palette variant quantizes to 16 levels, the cache+LZ77 variant
-    // plants row pairs (y - y%2); the engine earns each value through a
-    // different lossless bitstream (transforms invert exactly)
-    "q272_webp_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "c AS (SELECT media_id, w, h, k % w AS x, k // w AS y, " +
-        "CASE WHEN media_id % 6 = 4 THEN (k // w) - (k // w) % 2 " +
-        "ELSE k // w END AS fy FROM px), " +
-        "v AS (SELECT media_id, w, h, x, y, " +
-        "(x*x*(5 + media_id % 31) + fy*fy*(7 + media_id % 23) + " +
-        "x*fy*(3 + media_id % 13) + media_id*29) % 241 AS f0 FROM c), " +
-        "g AS (SELECT media_id, w, h, x // 2 AS bx, y // 2 AS by, " +
-        "CASE WHEN media_id % 6 = 2 THEN (f0 % 16) * 16 + 3 " +
-        "ELSE f0 END AS gray FROM v), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // PNG<->WebP replay: the q257 dHash arithmetic over this fixture's
-    // pair grouping (g = doc_id // 2) and cell coefficients — the oracle
-    // never sees a codec, only the planted 8x8 cell grid
-    "q273_webp_crossformat_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "cell AS (SELECT doc_id, g, unnest(range(64)) AS c FROM dd), " +
-        "m AS (SELECT doc_id, c % 8 AS bx, c // 8 AS by, " +
-        "(g*31 + (c % 8)*(c % 8)*(7 + (g % 5) * 9) + " +
-        "(c // 8)*(c // 8)*(3 + (g % 7) * 5) + " +
-        "(c % 8)*(c // 8)*(11 + (g % 3) * 13)) % 256 AS mean FROM cell), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3"),
-    "q271_raster_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    "q270_wav_depth_census" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(200 + (doc_id * 7) % 200 AS BIGINT) AS n, " +
-        "doc_id % 3 AS b FROM documents), " +
-        "s AS (SELECT media_id, n, b, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT media_id, n, " +
-        "CASE WHEN b = 0 THEN ((media_id*29 + p*13) % 256 - 128) * 256 " +
-        "ELSE ((media_id*23 + p*7) % 4096) - 2048 END AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // PNG-depth replay: the planted sample modulo 2^d, scaled by the
-    // spec gray factor — identical for the palette ramp and gray types
-    "q269_png_depth_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h, " +
-        "CAST(CASE (doc_id // 2) % 5 WHEN 0 THEN 1 WHEN 1 THEN 2 " +
-        "WHEN 2 THEN 4 WHEN 3 THEN 8 ELSE 16 END AS BIGINT) AS dep " +
-        "FROM documents), " +
-        "px AS (SELECT media_id, w, h, dep, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "CASE WHEN dep = 16 " +
-        "THEN (media_id*13 + (k % w)*3 + (k // w)*7) % 256 " +
-        "ELSE ((media_id*13 + (k % w)*3 + (k // w)*7) % (1 << dep)) * " +
-        "(255 // ((1 << dep) - 1)) END AS gray FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // PNG-variant replay: one planted gray formula across the color-type
-    // matrix (palette types go through the identity-ramp lookup),
-    // reduced to 2x2 block means
-    "q268_png_variant_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h, " +
-        "doc_id % 5 AS ct FROM documents), " +
-        "px AS (SELECT media_id, w, h, ct, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "CASE WHEN ct = 2 " +
-        "THEN ((media_id*13 + (k % w)*3 + (k // w)*7) % 256 % 64) * 4 + 1 " +
-        "ELSE (media_id*13 + (k % w)*3 + (k // w)*7) % 256 END AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // composited-GIF replay: the canvas algebra — base frame, disposal
-    // by parity, the transparent diagonal showing the base (or the
-    // restored background) through, the opaque overlay winning where
-    // rects overlap — per pixel, then quadrant sums per frame
-    "q267_gif_composited_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
-        "v AS (SELECT media_id, f, x, y, " +
-        "((media_id*23 + x*3 + y*5) % 64) * 4 + 1 AS v0, " +
-        "CASE WHEN par = 0 THEN 1 " +
-        "ELSE ((media_id*23 + x*3 + y*5) % 64) * 4 + 1 END AS base FROM c), " +
-        "g AS (SELECT media_id, f, x, y, " +
-        "CASE WHEN f = 0 THEN v0 " +
-        "WHEN f = 2 AND x >= 8 AND y < 8 " +
-        "THEN ((media_id*11 + (x-8)*7 + y*9) % 64) * 4 + 1 " +
-        "WHEN x BETWEEN 4 AND 11 AND y BETWEEN 4 AND 11 " +
-        "AND ((x-4) + (y-4)) % 3 <> 0 " +
-        "THEN ((media_id*7 + (x-4)*5 + (y-4)*3) % 63) * 4 + 1 " +
-        "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2"),
-    // progressive replay: the DC-only closed form again — the engine
-    // earns it through the multi-scan walk instead of one baseline scan
-    "q266_progressive_jpeg_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 * (1 + n_chars % 2) AS INTEGER) AS width, " +
-        "CAST(16 AS INTEGER) AS height FROM documents), " +
-        "b AS (SELECT media_id, width, height, " +
-        "unnest(range((width // 8) * 2)) AS k FROM d), " +
-        "g AS (SELECT media_id, width, height, " +
-        "k % (width // 8) AS bx, k // (width // 8) AS by, " +
-        "(media_id * 41 + k * (13 + media_id % 19)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < 1 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < 1 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= 1 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= 1 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2, 3"),
-    // health replay: the thirty planted cases map to fixed
-    // (format, outcome, cause) buckets; the engine must EARN each row by
-    // running the real parser into its named failure
-    "q265_decode_health" ->
-      ("WITH c AS (SELECT CASE doc_id % 30 " +
-        "WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' WHEN 2 THEN 'jpeg' " +
-        "WHEN 3 THEN 'gif' WHEN 4 THEN 'flac' WHEN 5 THEN 'png' " +
-        "WHEN 6 THEN 'jpeg' WHEN 7 THEN 'avi' WHEN 8 THEN 'unknown' " +
-        "WHEN 10 THEN 'gif' WHEN 11 THEN 'webp' WHEN 12 THEN 'webp' " +
-        "WHEN 13 THEN 'webp' WHEN 14 THEN 'mp4' WHEN 15 THEN 'mp3' " +
-        "WHEN 16 THEN 'ogg' WHEN 17 THEN 'heic' WHEN 18 THEN 'avif' " +
-        "WHEN 19 THEN 'webp' WHEN 20 THEN 'wav' WHEN 21 THEN 'wav' " +
-        "WHEN 22 THEN 'tiff' WHEN 23 THEN 'png' WHEN 24 THEN 'bmp' " +
-        "WHEN 25 THEN 'tiff' WHEN 26 THEN 'au' WHEN 27 THEN 'aiff' " +
-        "WHEN 28 THEN 'wav' WHEN 29 THEN 'wav' " +
-        "ELSE 'avi' END AS format, " +
-        "CASE WHEN doc_id % 30 IN (0, 1, 3, 4, 7, 10, 11, 12, 13, 19, " +
-        "20, 21, 22, 23, 24, 26, 27, 28, 29) " +
-        "THEN 'decoded' ELSE 'skipped' END AS outcome, " +
-        "CASE doc_id % 30 WHEN 2 THEN 'unsupported_coding' " +
-        "WHEN 5 THEN 'truncated' WHEN 6 THEN 'unsupported_sampling' " +
-        "WHEN 8 THEN 'unknown_magic' WHEN 9 THEN 'unsupported_codec' " +
-        "WHEN 14 THEN 'unsupported_codec' WHEN 15 THEN 'unsupported_codec' " +
-        "WHEN 16 THEN 'unsupported_codec' WHEN 17 THEN 'unsupported_codec' " +
-        "WHEN 18 THEN 'unsupported_codec' WHEN 25 THEN 'unsupported_coding' " +
-        "ELSE 'none' END AS cause FROM documents) " +
-        "SELECT format, outcome, cause, " +
-        "CAST(count(*) AS BIGINT) AS n_items FROM c GROUP BY 1, 2, 3"),
-    // GIF-variant replay: the planted position-dependent index formula
-    // through the grayscale identity ramp, reduced to 2x2 block means —
-    // identical arithmetic no matter which descriptor layout carried it
-    "q264_gif_variant_blockmeans" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((media_id*7 + (k % w)*3 + (k // w)*5) % 64 * 4 + 1) % 256 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"),
-    // oriented-crop replay: the oracle works ENTIRELY in displayed
-    // coordinates (the planted grid), never seeing the orientation —
-    // the q241 patch-hash arithmetic with this row's constants
-    "q263_oriented_crop_matches" ->
-      ("WITH dd AS (SELECT doc_id, 8 + doc_id % 3 AS gw, " +
-        "8 + doc_id % 2 AS gh FROM documents), " +
-        "bb AS (SELECT doc_id, gw, gh, unnest(range(gw * gh)) AS b FROM dd), " +
-        "bm AS (SELECT doc_id, b % gw AS bx, b // gw AS by, " +
-        "((b % gw)*(b % gw)*(11 + doc_id % 23) + " +
-        "(b // gw)*(b // gw)*(5 + doc_id % 19) + " +
-        "(b % gw)*(b // gw)*(3 + doc_id % 13) + doc_id*17) % 196 AS v " +
-        "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
-        "cd AS (SELECT doc_id, doc_id % 4 AS crole, " +
-        "doc_id % (8 + doc_id % 3 - 7) AS cox, " +
-        "doc_id % (8 + doc_id % 2 - 7) AS coy " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "cbb AS (SELECT doc_id, crole, cox, coy, unnest(range(64)) AS b " +
-        "FROM cd), " +
-        "cbm AS (SELECT doc_id, b % 8 AS bx, b // 8 AS by, " +
-        "CASE WHEN crole = 0 THEN " +
-        "((cox + b % 8)*(cox + b % 8)*(11 + doc_id % 23) + " +
-        "(coy + b // 8)*(coy + b // 8)*(5 + doc_id % 19) + " +
-        "(cox + b % 8)*(coy + b // 8)*(3 + doc_id % 13) + doc_id*17) % 196 + 30 " +
-        "ELSE ((b % 8)*(b % 8)*17 + (b // 8)*(b // 8)*21 + " +
-        "(b % 8)*(b // 8)*27 + doc_id*5 + 77) % 196 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3"),
-    // MJPEG replay: block-constant frames mean grid cell (bx, by) of the
-    // 64x64 dHash IS the planted block value; both codecs of a pair
-    // decode to identical pixels (DC-only JPEG is exact), so the pair
-    // arithmetic is one fingerprint table regardless of codec
-    "q262_mjpeg_video_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "b AS (SELECT doc_id, g, f, unnest(range(64)) AS k FROM sf2), " +
-        "m AS (SELECT doc_id, f, k % 8 AS bx, k // 8 AS by, " +
-        "(g*37 + f*(11 + (g*17) % 97) + (k % 8)*(k % 8)*(4 + (g % 11)*5) + " +
-        "(k // 8)*(k // 8)*(3 + (g % 13)*3) + " +
-        "(k % 8)*(k // 8)*(2 + (g % 7)*9)) % 256 AS mean FROM b), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"),
-    // stereo-FLAC replay: the interleaved L/R closed forms — lossless
-    // decode means the oracle recomputes the census from the planted
-    // per-channel formulas without knowing the channel assignment
-    "q261_flac_stereo_lpc" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(CASE WHEN doc_id % 7 = 0 THEN 240 " +
-        "ELSE 200 + (n_chars * 5) % 250 END AS BIGINT) AS n " +
-        "FROM documents), " +
-        "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT media_id, n, " +
-        "CASE WHEN media_id % 7 = 0 THEN ((media_id * 29) % 4096) - 2048 " +
-        "ELSE ((media_id * 29 + p * 11) % 4096) - 2048 END AS lv, " +
-        "CASE WHEN media_id % 7 = 0 THEN ((media_id * 19) % 4096) - 2048 " +
-        "ELSE ((media_id * 19 + p * 13) % 4096) - 2048 END AS rv FROM s) " +
-        "SELECT media_id, CAST(2 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, " +
-        "CAST(2 * n AS BIGINT) AS n_samples, " +
-        "CAST(sum(abs(lv) + abs(rv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(greatest(abs(lv), abs(rv))) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n"),
-    // 4:2:0 decode replay: the DC-only closed form — luma block k of doc
-    // id decodes to the CONSTANT gray (id*37 + k*(11 + id%17)) mod 256,
-    // 64 pixels per block, grouped into quadrants (dims are multiples of
-    // 16, so blocks never straddle a quadrant boundary) — which the
-    // engine must earn through the interleaved 2x2-luma MCU walk
-    "q260_jpeg420_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 * (1 + n_chars % 3) AS INTEGER) AS width, " +
-        "CAST(16 * (1 + (n_chars * 7) % 2) AS INTEGER) AS height " +
-        "FROM documents), " +
-        "b AS (SELECT media_id, width, height, " +
-        "unnest(range((width // 8) * (height // 8))) AS k FROM d), " +
-        "g AS (SELECT media_id, width, height, " +
-        "k % (width // 8) AS bx, k // (width // 8) AS by, " +
-        "(media_id * 37 + k * (11 + media_id % 17)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2, 3"),
-    // EXIF quadrant replay: displayed cell (dx, dy) sources stored cell
-    // per the published tag-274 table (stored grid 8x6; dims swap for
-    // orientations 5-8), 64 pixels per cell, quadrant sums
-    "q259_exif_oriented_quadrants" ->
-      ("WITH d AS (SELECT doc_id, 1 + doc_id % 8 AS o FROM documents), " +
-        "dim AS (SELECT doc_id, o, " +
-        "CASE WHEN o >= 5 THEN 6 ELSE 8 END AS gwp, " +
-        "CASE WHEN o >= 5 THEN 8 ELSE 6 END AS ghp FROM d), " +
-        "cells AS (SELECT doc_id, o, gwp, ghp, " +
-        "unnest(range(gwp * ghp)) AS c FROM dim), " +
-        "pos AS (SELECT doc_id, o, gwp, ghp, c % gwp AS dx, c // gwp AS dy " +
-        "FROM cells), " +
-        "src AS (SELECT doc_id, o, gwp, ghp, dx, dy, " +
-        "CASE o WHEN 1 THEN dx WHEN 2 THEN 7 - dx WHEN 3 THEN 7 - dx " +
-        "WHEN 4 THEN dx WHEN 5 THEN dy WHEN 6 THEN dy " +
-        "WHEN 7 THEN 7 - dy ELSE 7 - dy END AS sbx, " +
-        "CASE o WHEN 1 THEN dy WHEN 2 THEN dy WHEN 3 THEN 5 - dy " +
-        "WHEN 4 THEN 5 - dy WHEN 5 THEN dx WHEN 6 THEN 5 - dx " +
-        "WHEN 7 THEN 5 - dx ELSE dx END AS sby FROM pos), " +
-        "v AS (SELECT doc_id, o, gwp, ghp, dx, dy, " +
-        "(doc_id*41 + sbx*sbx*(5 + doc_id % 13) + sby*sby*(3 + doc_id % 11) + " +
-        "sbx*sby*(7 + doc_id % 5)) % 256 AS g FROM src) " +
-        "SELECT doc_id AS media_id, CAST(gwp * 8 AS INTEGER) AS width, " +
-        "CAST(ghp * 8 AS INTEGER) AS height, CAST(o AS INTEGER) AS orientation, " +
-        "CAST(64 * sum(CASE WHEN dx < gwp // 2 AND dy < ghp // 2 " +
-        "THEN g ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN dx >= gwp // 2 AND dy < ghp // 2 " +
-        "THEN g ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN dx < gwp // 2 AND dy >= ghp // 2 " +
-        "THEN g ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN dx >= gwp // 2 AND dy >= ghp // 2 " +
-        "THEN g ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM v GROUP BY 1, 2, 3, 4"),
-    // orientation-canonical replay: the planted grid (odd docs pass
-    // through their planted dihedral transform via the SAME mapping
-    // table), then min-over-8-transforms dHash per doc, brute pairs.
-    // tmap MUST stay in lockstep with MediaDedup.dihedralSource
-    "q258_orientation_neardups" ->
-      ("WITH tmap AS (SELECT t, c % 8 AS x, c // 8 AS y, " +
-        "CASE t WHEN 0 THEN c % 8 WHEN 1 THEN c // 8 WHEN 2 THEN 7 - c % 8 " +
-        "WHEN 3 THEN 7 - c // 8 WHEN 4 THEN 7 - c % 8 WHEN 5 THEN c % 8 " +
-        "WHEN 6 THEN c // 8 ELSE 7 - c // 8 END AS sx, " +
-        "CASE t WHEN 0 THEN c // 8 WHEN 1 THEN 7 - c % 8 WHEN 2 THEN 7 - c // 8 " +
-        "WHEN 3 THEN c % 8 WHEN 4 THEN c // 8 WHEN 5 THEN 7 - c // 8 " +
-        "WHEN 6 THEN c % 8 ELSE 7 - c % 8 END AS sy " +
-        "FROM (SELECT unnest(range(8)) AS t), (SELECT unnest(range(64)) AS c)), " +
-        "dd AS (SELECT doc_id, doc_id // 2 AS g, " +
-        "CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 + (doc_id // 2) % 7 END AS pt " +
-        "FROM documents), " +
-        "pos AS (SELECT doc_id, g, pt, unnest(range(64)) AS c FROM dd), " +
-        "m AS (SELECT p.doc_id, tm.x, tm.y, " +
-        "(p.g*37 + tm.sx*tm.sx*(4 + (p.g % 11) * 5) + " +
-        "tm.sy*tm.sy*(3 + (p.g % 13) * 3) + " +
-        "tm.sx*tm.sy*(2 + (p.g % 7) * 9)) % 256 AS v " +
-        "FROM pos p JOIN tmap tm ON tm.t = p.pt AND tm.x = p.c % 8 " +
-        "AND tm.y = p.c // 8), " +
-        "tv AS (SELECT m2.doc_id, tm.t, tm.x, tm.y, m2.v " +
-        "FROM tmap tm JOIN m m2 ON m2.x = tm.sx AND m2.y = tm.sy), " +
-        "bits AS (SELECT l.doc_id, l.t, l.y * 7 + l.x AS j FROM tv l " +
-        "JOIN tv r ON r.doc_id = l.doc_id AND r.t = l.t AND r.y = l.y " +
-        "AND r.x = l.x + 1 WHERE l.v < r.v), " +
-        "h AS (SELECT d.doc_id, d.t, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS hv " +
-        "FROM (SELECT DISTINCT doc_id, t FROM tv) d " +
-        "LEFT JOIN bits ON bits.doc_id = d.doc_id AND bits.t = d.t " +
-        "GROUP BY 1, 2), " +
-        "ch AS (SELECT doc_id, min(hv) AS chash FROM h GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.chash, y.chash)) AS INTEGER) AS hamming " +
-        "FROM ch x JOIN ch y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.chash, y.chash)) <= 3"),
-    // tolerant watermark replay: the blended-stamp formula (logo + per-
-    // image bleed) and the content quadratic, quantized to mean // 4
-    // buckets before the distinct-image census
-    "q256_image_boilerplate_tolerant" ->
-      ("WITH d AS (SELECT doc_id FROM documents), " +
-        "bb AS (SELECT doc_id, unnest(range(120)) AS b FROM d), " +
-        "bm AS (SELECT doc_id, b % 12 AS bx, b // 12 AS by, " +
-        "CASE WHEN doc_id % 3 = 0 AND b % 12 < 4 AND b // 12 < 2 " +
-        "THEN (b % 12) * 48 + (b // 12) * 32 + 8 + (doc_id // 3) % 3 " +
-        "ELSE ((b % 12)*(b % 12)*(13 + doc_id % 31) + " +
-        "(b // 12)*(b // 12)*(7 + doc_id % 29) + " +
-        "(b % 12)*(b // 12)*(3 + doc_id % 17) + doc_id*11) % 226 END AS mean " +
-        "FROM bb) " +
-        "SELECT CAST(bx AS INTEGER) AS bx, CAST(by AS INTEGER) AS by, " +
-        "CAST(mean // 4 AS BIGINT) AS mean, " +
-        "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_images " +
-        "FROM bm GROUP BY 1, 2, 3 HAVING count(DISTINCT doc_id) >= 50"),
-    // cross-container video replay: ONE planted frame formula covers both
-    // the AVI and the animated-GIF member (identity gray palette), q231's
-    // hash + containment arithmetic over doc_id/2 pairs
-    "q248_crosscontainer_video_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(3 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "(g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"),
-    // multimodal curation replay: the q238 union closure for canonicals +
-    // the image quality aggregate straight off the shared per-pixel CTE +
-    // the documents text gate
-    "q247_multimodal_curation_artifact" ->
-      (s"WITH RECURSIVE $multimodalPairCtes, " +
-        "edges AS (SELECT doc_a AS a, doc_b AS b FROM tp " +
-        "UNION SELECT doc_a, doc_b FROM ip " +
-        "UNION SELECT doc_a, doc_b FROM ap), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "canon AS (SELECT dd.doc_id AS item_id FROM dd " +
-        "LEFT JOIN compmap ON dd.doc_id = compmap.n " +
-        "WHERE least(dd.doc_id, coalesce(mn, dd.doc_id)) = dd.doc_id), " +
-        "iq AS (SELECT doc_id AS item_id, CAST(count(*) AS BIGINT) AS n_px, " +
-        "CAST(sum(CASE WHEN val < 16 THEN 1 ELSE 0 END) AS BIGINT) AS n_dark " +
-        "FROM v GROUP BY 1), " +
-        s"dl AS (SELECT doc_id AS item_id, n_chars FROM $multimodalSrc) " +
-        "SELECT canon.item_id, n_chars, n_px, n_dark " +
-        "FROM canon JOIN dl ON canon.item_id = dl.item_id " +
-        "JOIN iq ON canon.item_id = iq.item_id " +
-        "WHERE n_chars >= 100 AND n_dark * 16 <= n_px"),
-    // video quality replay: per-frame per-pixel gray from the planted
-    // three-case formula, black = sum < 16*px, flat = zero variance num
-    "q245_video_quality" ->
-      ("WITH d AS (SELECT doc_id, " +
-        "CAST(8 + doc_id % 3 * 2 AS BIGINT) AS w, " +
-        "CAST(8 + doc_id % 2 * 2 AS BIGINT) AS h, " +
-        "CAST(3 + doc_id % 3 AS BIGINT) AS nf FROM documents), " +
-        "fr AS (SELECT doc_id, w, h, unnest(range(nf)) AS f FROM d), " +
-        "px AS (SELECT doc_id, w, h, f, unnest(range(w * h)) AS k FROM fr), " +
-        "g AS (SELECT doc_id, w, h, f, " +
-        "CASE WHEN f % 3 = 0 THEN (doc_id*13 + f*7 + (k % w)*5 + (k // w)*3) % 256 " +
-        "WHEN f % 3 = 1 THEN (doc_id*3 + f) % 200 + 20 " +
-        "ELSE ((k % w) + (k // w)) % 8 END AS gray FROM px), " +
-        "fs AS (SELECT doc_id, f, w * h AS npx, sum(gray) AS s, " +
-        "sum(gray * gray) AS s2 FROM g GROUP BY doc_id, f, w, h) " +
-        "SELECT doc_id AS media_id, " +
-        "CAST(count(*) AS BIGINT) AS n_frames_scanned, " +
-        "CAST(sum(CASE WHEN s < 16 * npx THEN 1 ELSE 0 END) AS BIGINT) " +
-        "AS n_black_frames, " +
-        "CAST(sum(CASE WHEN npx * s2 - s * s = 0 THEN 1 ELSE 0 END) AS BIGINT) " +
-        "AS n_flat_frames, " +
-        "CAST(sum(s) AS BIGINT) AS sum_gray " +
-        "FROM fs GROUP BY 1"),
-    // audio quality replay: per-sample CASE (clip / planted silence /
-    // sweep), window energies over full windows only
-    "q246_audio_quality" ->
-      ("WITH d AS (SELECT doc_id, " +
-        "CAST(300 + doc_id % 20 * 10 AS BIGINT) AS n FROM documents), " +
-        "sp AS (SELECT doc_id, n, unnest(range(n)) AS p FROM d), " +
-        "v AS (SELECT doc_id, n, p, " +
-        "CASE WHEN p % 97 = 0 THEN 32767 " +
-        "WHEN (p // 10) % 5 = 4 THEN 0 " +
-        "ELSE ((doc_id*7 + p*11) % 4096) - 2048 END AS s FROM sp), " +
-        "agg AS (SELECT doc_id, max(n) AS n_samples, sum(abs(s)) AS sum_abs, " +
-        "max(abs(s)) AS peak_abs, " +
-        "sum(CASE WHEN s = 32767 OR s = -32768 THEN 1 ELSE 0 END) AS n_clipped " +
-        "FROM v GROUP BY 1), " +
-        "en AS (SELECT doc_id, p // 10 AS w, sum(abs(s)) AS e FROM v " +
-        "WHERE p < (n // 10) * 10 GROUP BY 1, 2), " +
-        "sil AS (SELECT doc_id, count(*) AS n_windows, " +
-        "sum(CASE WHEN e = 0 THEN 1 ELSE 0 END) AS n_silent FROM en GROUP BY 1) " +
-        "SELECT agg.doc_id AS media_id, " +
-        "CAST(n_samples AS BIGINT) AS n_samples, " +
-        "CAST(sum_abs AS BIGINT) AS sum_abs, " +
-        "CAST(peak_abs AS BIGINT) AS peak_abs, " +
-        "CAST(n_clipped AS BIGINT) AS n_clipped, " +
-        "CAST(n_windows AS BIGINT) AS n_windows, " +
-        "CAST(n_silent AS BIGINT) AS n_silent_windows " +
-        "FROM agg JOIN sil ON agg.doc_id = sil.doc_id"),
-    // audio ingest replay: the q229 recursive template (same-parity
-    // in-batch closures, batch-1 canonicals admit, batch-2 canonicals
-    // drop on any Hamming-<=3 hit against an admitted batch-1 clip) over
-    // the q220 energy-contour fingerprint arithmetic
-    "q244_audio_ingest_twin" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
-        "doc_id % 3 AS role FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "s AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM s), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
-        "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
-        "JOIN fp y ON x.doc_id < y.doc_id AND x.doc_id % 2 = y.doc_id % 2 " +
-        "WHERE bit_count(xor(x.afp, y.afp)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT fp.doc_id, " +
-        "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cid " +
-        "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n), " +
-        "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
-        "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
-        "rej AS (SELECT DISTINCT c2.doc_id FROM c2 " +
-        "JOIN fp f2 ON c2.doc_id = f2.doc_id " +
-        "CROSS JOIN a1 JOIN fp f1 ON a1.doc_id = f1.doc_id " +
-        "WHERE bit_count(xor(f2.afp, f1.afp)) <= 3), " +
-        "adm AS (SELECT doc_id FROM a1 UNION ALL " +
-        "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
-        "WHERE rej.doc_id IS NULL) " +
-        "SELECT adm.doc_id AS media_id, CAST(fp.afp AS BIGINT) AS dhash " +
-        "FROM adm JOIN fp ON adm.doc_id = fp.doc_id"),
-    // media curation artifact replay: the q225 hash/closure arithmetic
-    // for canonical keepers + the per-pixel quality sums from the same
-    // planted formula, gated at <= 1/16 dark
-    "q243_media_curation_artifact" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, w, h, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
-        "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
-        "JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "canon AS (SELECT fp.doc_id AS media_id FROM fp " +
-        "LEFT JOIN compmap ON fp.doc_id = compmap.n " +
-        "WHERE least(fp.doc_id, coalesce(mn, fp.doc_id)) = fp.doc_id), " +
-        "qs AS (SELECT doc_id AS media_id, CAST(count(*) AS BIGINT) AS n_px, " +
-        "CAST(sum(val) AS BIGINT) AS sum_gray, " +
-        "CAST(count(*) * sum(val * val) - sum(val) * sum(val) AS BIGINT) AS var_num, " +
-        "CAST(sum(CASE WHEN val < 16 THEN 1 ELSE 0 END) AS BIGINT) AS n_dark, " +
-        "CAST(sum(CASE WHEN val > 239 THEN 1 ELSE 0 END) AS BIGINT) AS n_bright " +
-        "FROM v GROUP BY 1) " +
-        "SELECT qs.media_id, n_px, sum_gray, var_num, n_dark, n_bright " +
-        "FROM qs JOIN canon ON qs.media_id = canon.media_id " +
-        "WHERE n_dark * 16 <= n_px"),
-    // image crop replay: block values from the planted per-block quadratic,
-    // ONE global adjacent-comparison grid per image, window hashes as
-    // sub-rectangle bit sums, crop prints from the shifted formula (+30 —
-    // order-preserving), brute pairs at Hamming <= 3
-    "q241_image_crop_matches" ->
-      ("WITH dd AS (SELECT doc_id, 12 + doc_id % 4 AS gw, " +
-        "10 + doc_id % 3 AS gh FROM documents), " +
-        "bb AS (SELECT doc_id, gw, gh, unnest(range(gw * gh)) AS b FROM dd), " +
-        "bm AS (SELECT doc_id, b % gw AS bx, b // gw AS by, " +
-        "((b % gw)*(b % gw)*(13 + doc_id % 31) + " +
-        "(b // gw)*(b // gw)*(7 + doc_id % 29) + " +
-        "(b % gw)*(b // gw)*(3 + doc_id % 17) + doc_id*11) % 226 AS v " +
-        "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
-        "cd AS (SELECT doc_id, doc_id % 4 AS crole, doc_id % 5 AS cox, " +
-        "doc_id % 3 AS coy FROM documents WHERE doc_id % 2 = 0), " +
-        "cbb AS (SELECT doc_id, crole, cox, coy, unnest(range(64)) AS b " +
-        "FROM cd), " +
-        "cbm AS (SELECT doc_id, b % 8 AS bx, b // 8 AS by, " +
-        "CASE WHEN crole = 0 THEN " +
-        "((cox + b % 8)*(cox + b % 8)*(13 + doc_id % 31) + " +
-        "(coy + b // 8)*(coy + b // 8)*(7 + doc_id % 29) + " +
-        "(cox + b % 8)*(coy + b // 8)*(3 + doc_id % 17) + doc_id*11) % 226 + 30 " +
-        "ELSE ((b % 8)*(b % 8)*19 + (b // 8)*(b // 8)*23 + " +
-        "(b % 8)*(b // 8)*29 + doc_id*7 + 99) % 226 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3"),
-    // video clip replay: corpus frame hashes via the q231/q236 arithmetic
-    // (sampled f % 2 = 0), clip hashes from the planted decimated/
-    // distractor formulas at full rate, brute pairs at Hamming <= 3,
-    // one-sided clip-coverage aggregation at >= 0.5
-    "q240_video_clip_matches" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 4 AS crole " +
-        "FROM documents WHERE doc_id % 2 = 0), " +
-        "cdm AS (SELECT doc_id, g, crole, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h FROM cd), " +
-        "cfr AS (SELECT doc_id, g, crole, w, h, unnest(range(2)) AS f2 " +
-        "FROM cdm), " +
-        "cpx AS (SELECT doc_id, g, crole, w, h, f2, " +
-        "unnest(range(w * h)) AS k FROM cfr), " +
-        "cv AS (SELECT doc_id, f2, " +
-        "CASE WHEN crole = 0 " +
-        "THEN (g*29 + (2*f2)*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 " +
-        "ELSE (g*61 + f2*23 + (k % w)*(7 + (g * 19) % 227) + " +
-        "(k // w)*(5 + (g * 23) % 229) + 500) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM cpx), " +
-        "cm AS (SELECT doc_id, f2, bx, by, sum(val) // count(*) AS mean " +
-        "FROM cv GROUP BY 1, 2, 3, 4), " +
-        "cbits AS (SELECT l.doc_id, l.f2, l.by * 7 + l.bx AS j FROM cm l " +
-        "JOIN cm r ON l.doc_id = r.doc_id AND l.f2 = r.f2 AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "cfp AS MATERIALIZED (SELECT cfr.doc_id, cfr.f2, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM cfr LEFT JOIN cbits ON cfr.doc_id = cbits.doc_id " +
-        "AND cfr.f2 = cbits.f2 GROUP BY 1, 2), " +
-        "pm AS (SELECT c.doc_id AS clip_id, fp.doc_id AS video_id, c.f2 " +
-        "FROM cfp c JOIN fp ON bit_count(xor(c.dh, fp.dh)) <= 3), " +
-        "agg AS (SELECT clip_id, video_id, " +
-        "count(DISTINCT f2) AS matched_frames FROM pm GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n_clip_frames FROM cfp GROUP BY 1) " +
-        "SELECT agg.clip_id, agg.video_id, " +
-        "CAST(matched_frames AS BIGINT) AS matched_frames, " +
-        "CAST(n_clip_frames AS BIGINT) AS n_clip_frames, " +
-        "CAST(matched_frames AS DOUBLE) / CAST(n_clip_frames AS DOUBLE) AS clip_frac " +
-        "FROM agg JOIN cnt ON agg.clip_id = cnt.doc_id " +
-        "WHERE CAST(matched_frames AS DOUBLE) / CAST(n_clip_frames AS DOUBLE) >= 0.5"),
-    // media ingest replay: the q224 hash arithmetic, ONE recursive closure
-    // over same-parity edges (within-batch components for both batches),
-    // batch-1 canonicals admit unconditionally, batch-2 canonicals drop on
-    // any brute-force Hamming-<=3 hit against an admitted batch-1 row
-    "q229_media_ingest_twin" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
-        "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
-        "JOIN fp y ON x.doc_id < y.doc_id AND x.doc_id % 2 = y.doc_id % 2 " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT fp.doc_id, " +
-        "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cid " +
-        "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n), " +
-        "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
-        "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
-        "rej AS (SELECT DISTINCT c2.doc_id FROM c2 " +
-        "JOIN fp f2 ON c2.doc_id = f2.doc_id " +
-        "CROSS JOIN a1 JOIN fp f1 ON a1.doc_id = f1.doc_id " +
-        "WHERE bit_count(xor(f2.dhash, f1.dhash)) <= 3), " +
-        "adm AS (SELECT doc_id FROM a1 UNION ALL " +
-        "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
-        "WHERE rej.doc_id IS NULL) " +
-        // the sum(1 << j) hash is a HUGEINT in DuckDB — cast the OUTPUT
-        // column to BIGINT or the comparer reads it as a lossy float
-        "SELECT adm.doc_id AS media_id, CAST(fp.dhash AS BIGINT) AS dhash " +
-        "FROM adm JOIN fp ON adm.doc_id = fp.doc_id"),
-    // AVI replay: frame f's channel-c pixel (x, y) is the closed form
-    // (id*31 + f*19 + x*7 + y*13 + c*91) mod 256 — the engine must land
-    // here through the real RIFF walk + bottom-up BGR DIB reassembly
-    "q230_avi_frame_decode" ->
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(5 + doc_id % 9 AS BIGINT) AS w, " +
-        "CAST(4 + (doc_id * 3) % 7 AS BIGINT) AS h, " +
-        "CAST(2 + doc_id % 4 AS BIGINT) AS nf FROM documents), " +
-        "fr AS (SELECT media_id, w, h, unnest(range(nf)) AS f FROM d), " +
-        "px AS (SELECT media_id, w, h, f, unnest(range(w * h)) AS k FROM fr), " +
-        "v AS (SELECT media_id, w, h, f, " +
-        "(media_id*31 + f*19 + (k % w)*7 + (k // w)*13) % 256 AS r0 FROM px) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height, " +
-        "CAST(w * h AS BIGINT) AS n_pixels, " +
-        "CAST(sum(r0) AS BIGINT) AS sum_r, " +
-        "CAST(sum((r0 + 91) % 256) AS BIGINT) AS sum_g, " +
-        "CAST(sum((r0 + 182) % 256) AS BIGINT) AS sum_b " +
-        "FROM v GROUP BY media_id, f, w, h"),
-    // video near-dup replay: sampled frames (f % 2 = 0 — pins the REAL
-    // frame sampling), q219's dHash arithmetic per (video, frame), brute
-    // frame pairs at Hamming <= 3, shared-frame containment per pair
-    "q231_video_neardups" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pm AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "agg AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pm GROUP BY 1, 2) " +
-        "SELECT agg.ma AS media_a, agg.mb AS media_b, matched_a, matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM agg JOIN cnt ca ON agg.ma = ca.doc_id " +
-        "JOIN cnt cb ON agg.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"),
-    // video cluster replay: q231's pair arithmetic as the edge set, then
-    // the q229 recursive closure + min-id labels + a cluster-size window
-    "q232_video_clusters" ->
-      ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
-        "doc_id % 3 AS role FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pm AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "agg AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pm GROUP BY 1, 2), " +
-        "edges AS (SELECT agg.ma AS a, agg.mb AS b " +
-        "FROM agg JOIN cnt ca ON agg.ma = ca.doc_id " +
-        "JOIN cnt cb ON agg.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT dd.doc_id, " +
-        "least(dd.doc_id, coalesce(mn, dd.doc_id)) AS cid " +
-        "FROM dd LEFT JOIN compmap ON dd.doc_id = compmap.n) " +
-        "SELECT doc_id AS media_id, cid AS cluster_id, " +
-        "CAST(count(*) OVER (PARTITION BY cid) AS BIGINT) AS cluster_size " +
-        "FROM lab"),
-    // video descriptor replay: per sampled frame the 64 gray block means
-    // (q231's m CTE), summed across frames into dims by*8+bx — then the
-    // q228 cosine/top-k spelling
-    "q233_video_similarity" ->
-      ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
-        "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "cell AS (SELECT doc_id, by * 8 + bx AS dim, sum(mean) AS sv " +
-        "FROM m GROUP BY 1, 2), " +
-        "dsc AS MATERIALIZED (SELECT doc_id, " +
-        "list(CAST(sv AS DOUBLE) ORDER BY dim) AS vec FROM cell GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"),
-    // end-to-end curation artifact: q208's gate+LM, q212's classifier,
-    // q169/q186's dedup+containment, q215's waterfilled best-first
-    // selection, q210's sample plan — composed over the quarter slice.
-    // The split stage is replayed BY THEOREM (see the query registration):
-    // refinery survivors are exact-distinct and pair-free at 0.8, so every
-    // cluster is the singleton {doc_id} and train = md5-nibble not in 0/1
-    // stage-boundary CTEs are MATERIALIZED: DuckDB inlines plain CTEs, and
-    // with six composed stages each referencing its predecessor several
-    // times the inlined scan tree grows exponentially (measured as fd
-    // exhaustion on the parquet view) — the exact twin of the engine-side
-    // checkpointStages rationale
-    "q223_curation_artifact" ->
-      ("WITH RECURSIVE gt AS MATERIALIZED (SELECT doc_id, source, lang, text FROM " +
-        s"(SELECT doc_id, source, lang, text, $toksSql AS toks FROM documents " +
-        "WHERE doc_id % 8 = 1) " +
-        "WHERE len(toks) >= 20 AND " +
-        "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        lmScoreCtesOver("gt", "9") + ", " +
-        "agg9 AS (SELECT doc_id, CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) " +
-        "AS BIGINT) AS nll FROM sc9 GROUP BY doc_id), " +
-        "rk9 AS (SELECT doc_id, row_number() OVER (ORDER BY nll, doc_id) AS rk, " +
-        "count(*) OVER () AS n FROM agg9), " +
-        "tl9 AS (SELECT doc_id FROM rk9 WHERE rk > n - floor((n * 300 + 999) / 1000)), " +
-        "lmk AS MATERIALIZED (SELECT gt.doc_id, gt.source, gt.lang, gt.text FROM gt " +
-        "LEFT JOIN tl9 ON gt.doc_id = tl9.doc_id WHERE tl9.doc_id IS NULL), " +
-        s"tn AS (SELECT doc_id, lang = 'en' AS is_p, lang <> 'en' AS is_n, " +
-        s"$toksSql AS toks FROM lmk), " +
-        "gn AS (SELECT doc_id, is_p, is_n, " +
-        "CAST(('0x' || substr(md5(gr), 1, 15)) AS BIGINT) % 262144 AS bh " +
-        "FROM (SELECT doc_id, is_p, is_n, unnest(toks || " +
-        "list_transform(range(len(toks) - 1), j -> toks[j + 1] || ' ' || toks[j + 2])) AS gr FROM tn)), " +
-        "bcn AS (SELECT bh, CAST(sum(CASE WHEN is_p THEN 1 ELSE 0 END) AS BIGINT) AS cp, " +
-        "CAST(sum(CASE WHEN is_n THEN 1 ELSE 0 END) AS BIGINT) AS cn " +
-        "FROM gn WHERE is_p OR is_n GROUP BY 1), " +
-        "totn AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM bcn), " +
-        "wtn AS (SELECT bh, CAST(floor(ln(CAST(cp + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-        "(CAST(cn + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS w " +
-        "FROM bcn CROSS JOIN totn), " +
-        "scn AS (SELECT doc_id, coalesce(w, " +
-        "CAST(floor(ln(CAST(0 + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-        "(CAST(0 + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT)) AS w " +
-        "FROM gn LEFT JOIN wtn USING (bh) CROSS JOIN totn), " +
-        "avn AS (SELECT doc_id, CAST(floor(CAST(sum(w) AS DOUBLE) / count(*) + 0.5) " +
-        "AS BIGINT) AS avg_m FROM scn GROUP BY doc_id), " +
-        "badn AS (SELECT lmk.doc_id FROM lmk JOIN avn USING (doc_id) " +
-        "WHERE NOT coalesce(lang = 'en', false) AND avg_m < 0), " +
-        "clfk AS MATERIALIZED (SELECT lmk.doc_id, lmk.source, lmk.text FROM lmk " +
-        "LEFT JOIN badn ON lmk.doc_id = badn.doc_id WHERE badn.doc_id IS NULL), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM clfk), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS MATERIALIZED (SELECT clfk.doc_id, clfk.source, clfk.text FROM clfk JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS MATERIALIZED (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
-        "cdf AS (SELECT g, count(*) AS df FROM ke GROUP BY 1), " +
-        "ck AS (SELECT ke.doc_id, ke.g FROM ke JOIN cdf USING (g) WHERE df <= 1000), " +
-        "csz AS (SELECT doc_id, count(*) AS csn FROM ck GROUP BY 1), " +
-        "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
-        "FROM ck x JOIN ck y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-        "cpr AS (SELECT ca, cb, " +
-        "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
-        "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
-        "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
-        "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.8 AND contb >= 0.8 THEN cb " +
-        "WHEN conta >= 0.8 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "WHERE conta >= 0.8 OR contb >= 0.8), " +
-        "kept2 AS MATERIALIZED (SELECT kept.doc_id, kept.source, kept.text FROM kept " +
-        "LEFT JOIN crm ON kept.doc_id = crm.doc_id WHERE crm.doc_id IS NULL), " +
-        "tr AS MATERIALIZED (SELECT doc_id, source, text FROM kept2 " +
-        "WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) NOT IN ('0', '1')), " +
-        s"tq AS (SELECT doc_id, source, $toksSql AS toks FROM tr), " +
-        "fq AS MATERIALIZED (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CASE WHEN len(toks) > 0 THEN CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) " +
-        "* 1000000 / CAST(len(toks) AS DOUBLE) + 0.5) AS BIGINT) ELSE 0 END AS distinct_micro " +
-        "FROM tq), " +
-        "psq AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens, " +
-        "CAST(floor(CAST(sum(n_tokens) AS DOUBLE) * 1.0) AS BIGINT) AS cap_tokens " +
-        "FROM fq GROUP BY 1), " +
-        "rkq AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM psq), " +
-        "thq AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 2600 " +
-        "THEN CAST(2600 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rkq), " +
-        "alq AS (SELECT source, least(cap_tokens, " +
-        "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
-        "FROM rkq CROSS JOIN thq), " +
-        "rq AS (SELECT fq.doc_id, fq.source, fq.n_tokens, alq.alloc_tokens, " +
-        "coalesce(sum(fq.n_tokens) OVER (PARTITION BY fq.source " +
-        "ORDER BY fq.distinct_micro DESC, fq.n_tokens DESC, fq.doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before " +
-        "FROM fq JOIN alq USING (source)), " +
-        "selq AS (SELECT doc_id FROM rq WHERE cum_before < alloc_tokens), " +
-        "t0 AS MATERIALIZED (SELECT fq.doc_id, fq.source, fq.n_tokens AS nt FROM fq JOIN selq USING (doc_id)), " +
-        "ps2 AS (SELECT source, CAST(sum(nt) AS BIGINT) AS t_tokens, " +
-        "CAST(floor(CAST(sum(nt) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
-        "FROM t0 GROUP BY 1), " +
-        "rk2 AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps2), " +
-        "th2 AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 4000 " +
-        "THEN CAST(4000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk2), " +
-        "al2 AS (SELECT source, t_tokens, least(cap_tokens, " +
-        "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
-        "FROM rk2 CROSS JOIN th2), " +
-        "pd AS (SELECT t0.doc_id, t0.source, t0.nt AS n_tokens, " +
-        "al2.alloc_tokens // al2.t_tokens AS whole_epochs, " +
-        "al2.alloc_tokens - (al2.alloc_tokens // al2.t_tokens) * al2.t_tokens AS rem_tokens " +
-        "FROM t0 JOIN al2 USING (source)), " +
-        "cb AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source " +
-        "ORDER BY md5('budget1' || CAST(doc_id AS VARCHAR)), doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM pd) " +
-        "SELECT doc_id, source, n_tokens, " +
-        "CAST(whole_epochs + CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END " +
-        "AS BIGINT) AS n_copies FROM cb " +
-        "WHERE whole_epochs + (CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END) > 0"),
-    // leakage-audit replay: q199's split respell (one sc pair table over
-    // the WHOLE slice serves both the keeper cluster graph and the
-    // straddle check), straddle = J >= 0.8 pairs with different splits,
-    // max-J = df-pruned gram equi-join across splits, |splits|² scaffold
-    "q216_split_leakage_audit" ->
-      ("WITH RECURSIVE nrm AS (SELECT doc_id, " + normSql +
-        " AS norm FROM documents WHERE doc_id % 2 = 1), " +
-        "k2 AS (SELECT norm, min(doc_id) AS keeper FROM nrm GROUP BY norm), " +
-        "k AS (SELECT keeper AS doc_id FROM k2), " +
-        shingleCtes("(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1)") +
-        s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "JOIN k ka ON sc.doc_a = ka.doc_id JOIN k kb ON sc.doc_b = kb.doc_id " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n AS kdoc, min(m) AS mn FROM r GROUP BY n), " +
-        "comp AS (SELECT k.doc_id AS keeper, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
-        "FROM k LEFT JOIN compmap ON k.doc_id = compmap.kdoc), " +
-        "dm AS (SELECT nrm.doc_id, k2.keeper FROM nrm JOIN k2 USING (norm)), " +
-        "sp AS (SELECT dm.doc_id, " +
-        "CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 1) = '0' THEN 'val' " +
-        "WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 1) = '1' THEN 'test' " +
-        "ELSE 'train' END AS split FROM dm JOIN comp USING (keeper)), " +
-        "str AS (SELECT least(x.split, y.split) AS split_a, " +
-        "greatest(x.split, y.split) AS split_b, count(*) AS n_dups FROM sc " +
-        "JOIN sp x ON sc.doc_a = x.doc_id JOIN sp y ON sc.doc_b = y.doc_id " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8 " +
-        "AND x.split <> y.split GROUP BY 1, 2), " +
-        "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
-        "ksz AS (SELECT doc_id, count(*) AS ksn FROM ke GROUP BY 1), " +
-        "shx AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, " +
-        "xs.split AS sa, ys.split AS sb, count(*) AS ns FROM ke x " +
-        "JOIN ke y ON x.g = y.g AND x.doc_id < y.doc_id " +
-        "JOIN sp xs ON x.doc_id = xs.doc_id JOIN sp ys ON y.doc_id = ys.doc_id " +
-        "WHERE xs.split <> ys.split GROUP BY 1, 2, 3, 4), " +
-        "mj AS (SELECT least(sa, sb) AS split_a, greatest(sa, sb) AS split_b, " +
-        "round(max(CAST(ns AS DOUBLE) / CAST(a.ksn + b.ksn - ns AS DOUBLE)), 6) " +
-        "AS mx FROM shx JOIN ksz a ON doc_a = a.doc_id " +
-        "JOIN ksz b ON doc_b = b.doc_id GROUP BY 1, 2), " +
-        "nm AS (SELECT DISTINCT split FROM sp), " +
-        "scaf AS (SELECT x.split AS split_a, y.split AS split_b " +
-        "FROM nm x CROSS JOIN nm y WHERE x.split < y.split) " +
-        "SELECT scaf.split_a, scaf.split_b, " +
-        "CAST(coalesce(n_dups, 0) AS BIGINT) AS n_straddling_dups, " +
-        "coalesce(mx, 0.0) AS max_cross_jaccard FROM scaf " +
-        "LEFT JOIN str USING (split_a, split_b) " +
-        "LEFT JOIN mj USING (split_a, split_b)"),
-    // budgeted-quality replay: q202's waterfill at maxEpochs = 1.0 (every
-    // source in the ranking, zero-cap sources allocate 0 and their docs
-    // fail the cum < alloc cut), then q203's quality order with a running
-    // token sum cut per source
-    "q215_budgeted_quality" ->
-      (s"WITH t AS (SELECT doc_id, source, $toksSql AS toks FROM documents), " +
-        "f AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS n_tokens, " +
-        "CASE WHEN len(toks) > 0 THEN CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) " +
-        "* 1000000 / CAST(len(toks) AS DOUBLE) + 0.5) AS BIGINT) ELSE 0 END AS distinct_micro " +
-        "FROM t), " +
-        "ps AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens, " +
-        "CAST(floor(CAST(sum(n_tokens) AS DOUBLE) * 1.0) AS BIGINT) AS cap_tokens " +
-        "FROM f GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 26000 " +
-        "THEN CAST(26000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
-        "al AS (SELECT source, least(cap_tokens, " +
-        "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
-        "FROM rk CROSS JOIN th), " +
-        "r AS (SELECT f.doc_id, f.source, f.n_tokens, f.distinct_micro, al.alloc_tokens, " +
-        "coalesce(sum(f.n_tokens) OVER (PARTITION BY f.source " +
-        "ORDER BY f.distinct_micro DESC, f.n_tokens DESC, f.doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before " +
-        "FROM f JOIN al USING (source)) " +
-        "SELECT doc_id, source, n_tokens, distinct_micro, " +
-        "CAST(cum_before AS BIGINT) AS cum_before FROM r WHERE cum_before < alloc_tokens"),
-    // Naive Bayes classifier replay: hashed unigram+bigram gram stream
-    // (60-bit md5 token hash folded mod 2^18), per-bucket Laplace log-odds
-    // quantized once to micronats (double products of longs — the exact
-    // Spark spelling), every doc scored by the exact long sum
-    "q212_nb_classifier" -> nbClassifierSql,
-    // classifier lifecycle: the lake save/load roundtrip must score
-    // exactly like in-line training — one shared replay (q209's pattern)
-    "q214_nb_serve" -> nbClassifierSql,
-    // kNN-cluster replay: q194's portable edge chain on the even
-    // half-slice, thresholded on the 6-dp cosine, recursive min-id
-    // closure over the symmetric edges (q43/q76's pattern), singletons
-    // label themselves, size by window
-    "q213_knn_cluster" -> {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
-        "FROM embeddings WHERE vec_id % 2 = 0), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
-        "sc AS (SELECT pc.anchor_id, a.vec_id AS neighbor_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.anchor_id), " +
-        "ed AS (SELECT anchor_id AS a, neighbor_id AS b FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
-        "WHERE rn <= 2 AND round(cos_sim, 6) >= 0.2), " +
-        "bi AS (SELECT a, b FROM ed UNION SELECT b, a FROM ed), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "lbl AS (SELECT n AS vec_id, least(n, min(m)) AS cluster_id FROM r GROUP BY n), " +
-        "allv AS (SELECT e.vec_id, coalesce(l.cluster_id, e.vec_id) AS cluster_id " +
-        "FROM e LEFT JOIN lbl l ON e.vec_id = l.vec_id) " +
-        "SELECT vec_id, cluster_id, " +
-        "CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size FROM allv"
-    },
-    // version-drift replay: v0 = even docs, v1 = whole corpus; q165's
-    // micronat JS arithmetic over the two token streams
-    "q211_version_drift" ->
-      (s"WITH tk AS (SELECT TRUE AS is_a, unnest($toksSql) AS tok FROM documents WHERE doc_id % 2 = 0 " +
-        s"UNION ALL SELECT FALSE, unnest($toksSql) FROM documents), " +
-        "g AS (SELECT tok, CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ne, " +
-        "CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS nt FROM tk GROUP BY tok), " +
-        "t AS (SELECT CAST(sum(ne) AS BIGINT) AS tne, CAST(sum(nt) AS BIGINT) AS tnt FROM g), " +
-        "terms AS (SELECT ne, nt, tne, tnt, " +
-        "CASE WHEN ne > 0 THEN ne * CAST(floor(ln(2.0 * (CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE)) / " +
-        "(CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE) + CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS se, " +
-        "CASE WHEN nt > 0 THEN nt * CAST(floor(ln(2.0 * (CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE)) / " +
-        "(CAST(ne AS DOUBLE) * CAST(tnt AS DOUBLE) + CAST(nt AS DOUBLE) * CAST(tne AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) ELSE 0 END AS st " +
-        "FROM g CROSS JOIN t) " +
-        "SELECT CAST(max(tne) AS BIGINT) AS n_a_tokens, CAST(max(tnt) AS BIGINT) AS n_b_tokens, " +
-        "count(*) AS n_vocab, " +
-        "round((CAST(sum(se) AS DOUBLE) / CAST(max(tne) AS DOUBLE) + " +
-        "CAST(sum(st) AS DOUBLE) / CAST(max(tnt) AS DOUBLE)) / 2000000.0, 6) AS js_nats " +
-        "FROM terms"),
-    // budgeted-plan replay: q202's allocation chain, whole epochs by // on
-    // longs, the partial-epoch cut from a per-source running token sum
-    // over the seeded md5 order (q157's u construction)
-    "q210_budgeted_sample" ->
-      (s"WITH t0 AS (SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS nt FROM documents), " +
-        "ps AS (SELECT source, CAST(sum(nt) AS BIGINT) AS t_tokens, " +
-        "CAST(floor(CAST(sum(nt) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
-        "FROM t0 GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 49000 " +
-        "THEN CAST(49000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
-        "al AS (SELECT source, t_tokens, " +
-        "least(cap_tokens, CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) " +
-        "AS BIGINT)) AS alloc_tokens FROM rk CROSS JOIN th), " +
-        "pd AS (SELECT t0.doc_id, t0.source, t0.nt AS n_tokens, " +
-        "al.alloc_tokens // al.t_tokens AS whole_epochs, " +
-        "al.alloc_tokens - (al.alloc_tokens // al.t_tokens) * al.t_tokens AS rem_tokens " +
-        "FROM t0 JOIN al USING (source)), " +
-        "cb AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source " +
-        "ORDER BY md5('budget1' || CAST(doc_id AS VARCHAR)), doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM pd) " +
-        "SELECT doc_id, source, n_tokens, " +
-        "CAST(whole_epochs + CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END " +
-        "AS BIGINT) AS n_copies FROM cb " +
-        "WHERE whole_epochs + (CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END) > 0"),
-    // outlier replay: q204's portable assignment, farthest-first top-20
-    "q207_embedding_outliers" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell, CAST(floor(d * 1000000 + 0.5) AS BIGINT) AS dist_micro " +
-        "FROM (SELECT vec_id, cell, d, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1) " +
-        "SELECT vec_id, cell, dist_micro FROM asn " +
-        "ORDER BY dist_micro DESC, vec_id LIMIT 20"))
-
-  /** DuckDB CTE chain replaying [[graft.text.LangModel.lmScore]] over the
-    * en-trained bigram LM: ends at `sc$sfx` = (doc_id, lp) per scored
-    * bigram event, lp in integer micronats. `src` must expose
-    * (doc_id, lang, text); `sfx` suffixes every CTE name so the chain can
-    * compose with the refinery CTEs (which also define an `sc`). */
-  private def lmScoreCtesOver(src: String, sfx: String = ""): String =
-    s"t$sfx AS (SELECT doc_id, lang = 'en' AS is_t, $toksSql AS toks FROM $src), " +
-      s"p$sfx AS (SELECT doc_id, is_t, unnest(range(len(toks) - 1)) AS i, toks " +
-      s"FROM t$sfx WHERE len(toks) >= 2), " +
-      s"b$sfx AS (SELECT doc_id, is_t, " +
-      "CAST(('0x' || substr(md5(toks[i + 1]), 1, 15)) AS BIGINT) AS w1h, " +
-      s"CAST(('0x' || substr(md5(toks[i + 2]), 1, 15)) AS BIGINT) AS w2h FROM p$sfx), " +
-      s"c2$sfx AS (SELECT w1h, w2h, count(*) AS c2 FROM b$sfx WHERE is_t GROUP BY 1, 2), " +
-      s"c1$sfx AS (SELECT w1h, count(*) AS c1 FROM b$sfx WHERE is_t GROUP BY 1), " +
-      s"m2$sfx AS (SELECT w1h, w2h, CAST(floor(ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)) " +
-      s"* 1000000 + 0.5) AS BIGINT) AS lp2 FROM c2$sfx JOIN c1$sfx USING (w1h)), " +
-      s"cu$sfx AS (SELECT w2h AS wh, count(*) AS cu FROM b$sfx WHERE is_t GROUP BY 1), " +
-      s"tot$sfx AS (SELECT sum(cu) AS nn, count(*) AS vv FROM cu$sfx), " +
-      s"uni$sfx AS (SELECT wh, CAST(floor(ln(0.4 * CAST(cu + 1 AS DOUBLE) / " +
-      s"CAST(nn + vv AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp_bo " +
-      s"FROM cu$sfx CROSS JOIN tot$sfx), " +
-      s"sc$sfx AS (SELECT doc_id, coalesce(lp2, lp_bo, " +
-      "CAST(floor(ln(0.4 / CAST(nn + vv AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)) AS lp " +
-      s"FROM b$sfx LEFT JOIN m2$sfx USING (w1h, w2h) LEFT JOIN uni$sfx ON b$sfx.w2h = uni$sfx.wh " +
-      s"CROSS JOIN tot$sfx WHERE NOT is_t)"
-
-  private def lmScoreCtes = lmScoreCtesOver("documents")
-
-  /** Shared q200/q209 replay: per-doc exact-micronat nll over the en-trained
-    * bigram LM (q209's lake save/load roundtrip must land exactly here). */
-  private def lmPerplexitySql =
-    s"WITH $lmScoreCtes " +
-      "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, " +
-      "CAST(-sum(lp) AS BIGINT) AS nll_micronats, " +
-      "CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) AS BIGINT) " +
-      "AS avg_nll_micronats FROM sc GROUP BY doc_id"
-
-  /** Shared q212/q214 replay: hashed unigram+bigram gram stream (60-bit
-    * md5 token hash folded mod 2^18), per-bucket Laplace log-odds
-    * quantized once to micronats (double products of longs — the exact
-    * Spark spelling), every doc scored by the exact long sum. q214's lake
-    * save/load roundtrip must land exactly here. */
-  private def nbClassifierSql =
-    s"WITH t AS (SELECT doc_id, lang = 'en' AS is_p, lang <> 'en' AS is_n, " +
-      s"$toksSql AS toks FROM documents), " +
-      "g AS (SELECT doc_id, is_p, is_n, " +
-      "CAST(('0x' || substr(md5(gr), 1, 15)) AS BIGINT) % 262144 AS bh " +
-      "FROM (SELECT doc_id, is_p, is_n, unnest(toks || " +
-      "list_transform(range(len(toks) - 1), j -> toks[j + 1] || ' ' || toks[j + 2])) AS gr FROM t)), " +
-      "bc AS (SELECT bh, CAST(sum(CASE WHEN is_p THEN 1 ELSE 0 END) AS BIGINT) AS cp, " +
-      "CAST(sum(CASE WHEN is_n THEN 1 ELSE 0 END) AS BIGINT) AS cn " +
-      "FROM g WHERE is_p OR is_n GROUP BY 1), " +
-      "tot AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM bc), " +
-      "wt AS (SELECT bh, CAST(floor(ln(CAST(cp + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-      "(CAST(cn + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS w " +
-      "FROM bc CROSS JOIN tot), " +
-      "sc AS (SELECT doc_id, coalesce(w, " +
-      "CAST(floor(ln(CAST(0 + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-      "(CAST(0 + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT)) AS w " +
-      "FROM g LEFT JOIN wt USING (bh) CROSS JOIN tot) " +
-      "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams, " +
-      "CAST(sum(w) AS BIGINT) AS score_micronats, " +
-      "CAST(floor(CAST(sum(w) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS avg_micronats " +
-      "FROM sc GROUP BY doc_id"
+  lazy val oracleSql: Map[String, String] =
+    QueryRegistry.all.specs.map(q => q.name -> q.oracleSql).toMap
 }

@@ -1,38 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.{QueryRegistry, QuerySpec}
+/** Correctness dump: each registry row's result → parquet, plus
+  * oracle_sql.json, for a DuckDB compare (tools/check.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same stdout-tail hygiene as Bench: the bucket-bounded offset windows
-    // of globalPrefixSums WARN per run; keep the harness tail parseable
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-    // and the localCheckpoint-release lifecycle (see Bench for the full
-    // rationale): releaseAll below unpersists eagerly-materialized local
-    // checkpoints only after their parquet is written, so the "cannot be
-    // recomputed after unpersisting" WARN is noise; a re-evaluation after
-    // release would fail loudly, never silently wrong.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession.start()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (same contract as Bench): SPARK_GRAFT_VERIFY_ONLY=q16,q139
-    // dumps just those queries (prefix match) and restricts oracle_sql.json to
-    // them so tools/check.py compares the same subset. Unset = full sweep.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter { case (n, _) => keep(n) }.foreach { case (name, fn) =>
+    // dumps just those rows (see QueryRegistry.select) and restricts
+    // oracle_sql.json to them so tools/check.py compares the same subset.
+    // Unset = full sweep.
+    val rows = QueryRegistry.all
+      .select(sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", ""))
+    rows.foreach { case QuerySpec(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -55,8 +37,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // rows come in name order, so two dumps diff byte for byte
+    val json = rows.map(r => s"${q(r.name)}: ${q(r.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.queries.{QueryRegistry, QuerySpec}
+
 /** Scratch profiler for dev loops (not part of the driver contract).
   * PROBE_SECTION picks the experiment; results land in the round NOTES. */
 object BenchProbe {
@@ -249,12 +251,10 @@ object BenchProbe {
         // scheduling floor) as the lower bound nothing can beat.
         val rows = sys.env.getOrElse("PROBE_ROWS",
           "q01,q02,q12,q13,q22,q34,q38,q102,q124,q161").split(",").toSeq
-        val qmap = SparkEntry.queries
         for (it <- 1 to 3) {
           time(s"zero-work range.count#$it") { spark.range(32).count(): Unit }
           rows.foreach { p =>
-            val (name, fn) = qmap.toSeq.sortBy(_._1)
-              .find(_._1.startsWith(p)).get
+            val QuerySpec(name, fn, _) = QueryRegistry.all.select(p).head
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
             val t1 = System.nanoTime()

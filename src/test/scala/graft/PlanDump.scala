@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.{QueryRegistry, QuerySpec}
 
 /** Dev-loop plan dumper (not part of the driver contract): writes
   * `.explain("formatted")` for the named queries to a directory, so plan
@@ -9,28 +9,20 @@ import org.apache.spark.sql.SparkSession
   *   PLAN_QUERIES=q186,q208 PLAN_OUT=plans/r16 PLAN_SUFFIX=before \
   *     sbt "Test/runMain graft.PlanDump"
   *
-  * Prefix match on names (q186 matches q186_refinery_containment); the
-  * session mirrors Bench's (local[32], shuffle.partitions=cpus) so the
-  * dumped plan is the one the bench executes.
+  * PLAN_QUERIES takes row numbers or full names (see QueryRegistry.select;
+  * empty = every row); the session is Bench's (LocalSession) so the dumped
+  * plan is the one the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("PLAN_OUT", "plans/r16")
     val suffix = sys.env.getOrElse("PLAN_SUFFIX", "before")
-    val wanted = sys.env.getOrElse("PLAN_QUERIES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.start()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.isEmpty || wanted.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
+    QueryRegistry.all.select(sys.env.getOrElse("PLAN_QUERIES", ""))
+      .foreach { case QuerySpec(name, fn, _) =>
         try {
           val df = fn(spark, sfDir)
           val plan = df.queryExecution.explainString(
