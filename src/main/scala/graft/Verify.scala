@@ -14,17 +14,6 @@ object Verify {
     // Unset = full sweep.
     val rows = QueryRegistry.all
       .select(sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", ""))
-    rows.foreach { case QuerySpec(name, fn, _) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries that persist() intermediates (q44) must not leave cached
-      // blocks accumulating in executor storage across the sweep — SQL
-      // cache and RDD-level blocks both
-      graft.ops.Caching.releaseAll(spark)
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -37,9 +26,21 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // rows come in name order, so two dumps diff byte for byte
+    // rows come in name order, so two dumps diff byte for byte; written
+    // before the sweep, so a stopped or failed sweep still leaves it
     val json = rows.map(r => s"${q(r.name)}: ${q(r.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    rows.foreach { case QuerySpec(name, fn, _) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // queries that persist() intermediates (q44) must not leave cached
+      // blocks accumulating in executor storage across the sweep — SQL
+      // cache and RDD-level blocks both
+      graft.ops.Caching.releaseAll(spark)
+    }
     spark.stop()
   }
 }

@@ -7,7 +7,8 @@ import graft.ops.Warehouse
 import graft.tables.Tables
 
 /** Helpers several query families share: the table loaders on the Spark
-  * side, and the DuckDB spellings of the text primitives on the oracle side.
+  * side, and on the oracle side the DuckDB spellings of the text
+  * primitives, the cosine and the connected-component closure.
   */
 private[graft] object Common {
 
@@ -54,4 +55,27 @@ private[graft] object Common {
       "FROM e x JOIN e y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
       "sc AS (SELECT doc_a, doc_b, i, CAST(a.n + b.n AS DOUBLE) - i AS u " +
       "FROM pair JOIN sz a ON doc_a = a.doc_id JOIN sz b ON doc_b = b.doc_id)"
+
+  /** The portable cosine of two DOUBLE[] columns (q28's spelling), which
+    * the Spark side reproduces bit for bit. */
+  def cosSql(a: String, b: String): String =
+    s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
+
+  /** Connected components as a recursive CTE: `r(n, m)` holds every node m
+    * reachable from n over `bi(a, b)`, which the caller defines with each
+    * edge in both directions; min(m) per n labels n's component. Needs
+    * `WITH RECURSIVE`. */
+  val closureCte: String =
+    "r(n, m) AS (SELECT a, b FROM bi " +
+      "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m)"
+
+  /** [[closureCte]] over an `edges(doc_a, doc_b)` pair set. */
+  val docPairClosureCtes: String =
+    "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
+      "UNION ALL SELECT doc_b, doc_a FROM edges), " + closureCte
+
+  /** `removed(n)`: every node of a [[closureCte]] component but its
+    * min-id keeper. */
+  val removedCte: String =
+    "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n)"
 }

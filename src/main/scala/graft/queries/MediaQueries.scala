@@ -10,6 +10,322 @@ import Common._
   * decoders, perceptual near-dups, media ingest and curation. */
 private[queries] object MediaQueries {
 
+  /** q224's cross-format still-image fixture over `dd(doc_id, g)`: dims
+    * `dm`, pixel rows `px`, and `$v`(`cols`, val, bx, by) = each pixel's
+    * planted gray and its 8x8 dHash block. */
+  private def stillImageCtes(v: String, cols: String = "doc_id"): String =
+    "dm AS (SELECT doc_id, g, " +
+      "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
+      "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
+      "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
+      s"$v AS (SELECT $cols, " +
+      "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
+      "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px)"
+
+  /** The 56-bit dHash over 8x8 block means `m(doc_id, bx, by, mean)`:
+    * `bits` = bit by*7+bx set iff a block is darker than its right
+    * neighbour, and `fp` = their sum as column `h` for every row of `keys`.
+    * `fp` is the CTE head, `fp AS MATERIALIZED` where a closure rescans it. */
+  private def dhashCtes(fp: String, keys: String, h: String): String =
+    "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
+      "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
+      "WHERE l.mean < r.mean), " +
+      s"$fp (SELECT $keys.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
+      s"CAST(j AS INTEGER)), 0) AS $h FROM $keys " +
+      s"LEFT JOIN bits ON $keys.doc_id = bits.doc_id GROUP BY 1)"
+
+  /** [[dhashCtes]] over a pixel table `v(doc_id, val, bx, by)` keyed by `dm`:
+    * `m` = the floor block means, `fp(doc_id, dhash)`. */
+  private def stillDhashCtes(fp: String): String =
+    "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
+      "FROM v GROUP BY 1, 2, 3), " + dhashCtes(fp, "dm", "dhash")
+
+  /** Brute-force pairs of `fp` rows whose `h` prints differ in <= 3 bits.
+    * Ends the query. */
+  private def hammingPairsSql(h: String): String =
+    "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
+      s"CAST(bit_count(xor(x.$h, y.$h)) AS INTEGER) AS hamming " +
+      "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
+      s"WHERE bit_count(xor(x.$h, y.$h)) <= 3"
+
+  /** q220's planted near-dup audio fixture over `dd(doc_id, g, role)`:
+    * lengths `dm`, sample rows `$s`, absolute PCM16 values `v` and the 57
+    * window energies `e(doc_id, wdx, energy)`. */
+  private def audioEnergyCtes(s: String): String =
+    "dm AS (SELECT doc_id, g, role, " +
+      "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
+      s"$s AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
+      "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
+      "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
+      "WHEN role = 1 AND p % 101 = 0 " +
+      "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
+      s"ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM $s), " +
+      "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2)"
+
+  /** The 56-bit energy-contour print over `e(doc_id, wdx, energy)`: bit j
+    * set iff window j+1 is louder, summed into `fp(doc_id, afp)` for every
+    * `dm` row. `fp` is the CTE head as in [[dhashCtes]]. */
+  private def audioPrintCtes(fp: String): String =
+    "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
+      "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
+      "WHERE r.energy > l.energy), " +
+      s"$fp (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
+      "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
+      "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1)"
+
+  /** q226's 88-dim content descriptors of the [[stillImageCtes]] fixture:
+    * 3 x 8 channel-histogram dims, then the 64 gray block means, as
+    * `fl(doc_id, dim, v)`. */
+  private def imageDescriptorCtes: String =
+    s"${stillImageCtes("vv")}, " +
+      "hh AS (SELECT doc_id, val // 32 AS b8, count(*) AS cnt FROM vv GROUP BY 1, 2), " +
+      "hd AS (SELECT doc_id, c * 8 + b8 AS dim, CAST(cnt AS DOUBLE) AS v " +
+      "FROM hh CROSS JOIN (VALUES (0), (1), (2)) AS ch(c)), " +
+      "mm AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
+      "FROM vv GROUP BY 1, 2, 3), " +
+      "gd AS (SELECT doc_id, 24 + by * 8 + bx AS dim, CAST(mean AS DOUBLE) AS v FROM mm), " +
+      "sc88 AS (SELECT doc_id, unnest(range(88)) AS dim FROM dm), " +
+      "fl AS (SELECT sc88.doc_id, sc88.dim, coalesce(u.v, 0.0) AS v " +
+      "FROM sc88 LEFT JOIN (SELECT * FROM hd UNION ALL SELECT * FROM gd) u " +
+      "ON sc88.doc_id = u.doc_id AND sc88.dim = u.dim)"
+
+  /** q28's brute-force cosine top-3 over descriptors `dsc(doc_id, vec)`
+    * for probes doc_id < 10. Ends the query. */
+  private def descriptorTopKSql: String =
+    "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
+      s"${cosSql("p.vec", "c.vec")} AS cos_sim " +
+      "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
+      "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
+      "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
+      "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3"
+
+  /** [[Common.closureCte]] over an `edges(a, b)` pair set, with
+    * `compmap(n, mn)` = each linked node's component minimum. */
+  private def edgeComponentCtes: String =
+    "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
+      s"$closureCte, " +
+      "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n)"
+
+  /** q229's two-batch admission over `fp` and [[edgeComponentCtes]] on
+    * same-parity edges: batch-1 (even) canonicals admit, batch-2 (odd)
+    * canonicals drop on any print `h` within Hamming 3 of an admitted
+    * batch-1 row; `adm(doc_id)` = the landed rows. */
+  private def admitCtes(h: String): String =
+    "lab AS (SELECT fp.doc_id, " +
+      "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cid " +
+      "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n), " +
+      "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
+      "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
+      "rej AS (SELECT DISTINCT c2.doc_id FROM c2 " +
+      "JOIN fp f2 ON c2.doc_id = f2.doc_id " +
+      "CROSS JOIN a1 JOIN fp f1 ON a1.doc_id = f1.doc_id " +
+      s"WHERE bit_count(xor(f2.$h, f1.$h)) <= 3), " +
+      "adm AS (SELECT doc_id FROM a1 UNION ALL " +
+      "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
+      "WHERE rej.doc_id IS NULL)"
+
+  /** q231's planted near-dup video fixture over `dd(doc_id, g, role)`:
+    * dims `dm` and one `$frames`(doc_id, g, role, w, h, f) row per frame. */
+  private def videoFrameCtes(frames: String): String =
+    "dm AS (SELECT doc_id, g, role, " +
+      "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
+      "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
+      "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
+      s"$frames AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm)"
+
+  /** Pixel rows `px` of [[videoFrameCtes]]' `frames` and `v(doc_id, f, val,
+    * bx, by)` = each pixel's planted gray and its 8x8 dHash block. */
+  private def videoPixelCtes(frames: String): String =
+    "px AS (SELECT doc_id, g, role, w, h, f, " +
+      s"unnest(range(w * h)) AS k FROM $frames), " +
+      "v AS (SELECT doc_id, f, " +
+      "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
+      "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
+      "WHEN role = 1 AND k % 97 = 0 " +
+      "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
+      "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
+      "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
+      "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
+      "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px)"
+
+  /** The video fixture sampled at every 2nd frame (`sf2`), with its pixels. */
+  private def sampledVideoCtes: String =
+    videoFrameCtes("sf") + ", " +
+      "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
+      videoPixelCtes("sf2")
+
+  /** `m(doc_id, f, bx, by, mean)`: per-frame floor block means of `v`. */
+  private def frameMeansCte: String =
+    "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
+      "FROM v GROUP BY 1, 2, 3, 4)"
+
+  /** The per-frame form of [[dhashCtes]] over `m`: `fp(doc_id, f, dh)` for
+    * every row of `frames`. */
+  private def frameDhashCtes(frames: String): String =
+    "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
+      "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
+      "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
+      s"fp AS MATERIALIZED (SELECT $frames.doc_id, $frames.f, " +
+      "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
+      s"FROM $frames LEFT JOIN bits ON $frames.doc_id = bits.doc_id " +
+      s"AND $frames.f = bits.f GROUP BY 1, 2)"
+
+  /** Shared-frame matches over the sampled `fp`: `cnt` = sampled frames
+    * per video, `pm$sfx` = frame pairs within Hamming 3, `agg$sfx` =
+    * distinct matched frames per video pair. */
+  private def frameMatchCtes(sfx: String): String =
+    "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
+      s"pm$sfx AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
+      "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
+      "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
+      s"agg$sfx AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
+      s"count(DISTINCT fb) AS matched_b FROM pm$sfx GROUP BY 1, 2)"
+
+  /** Video pairs whose shared frames cover >= half of both sides, over
+    * `frameMatchCtes("b")`. Ends the query. */
+  private def videoPairSql: String =
+    "SELECT ma AS media_a, mb AS media_b, " +
+      "CAST(matched_a AS BIGINT) AS matched_a, " +
+      "CAST(matched_b AS BIGINT) AS matched_b, " +
+      "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
+      "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
+      "JOIN cnt cb ON aggb.mb = cb.doc_id " +
+      "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5"
+
+  /** The q276/q285 replay: one quadratic frame formula for both members of
+    * each doc_id/2 pair, whatever animation container carries it. */
+  private def animatedPairVideoSql: String =
+    "WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
+      "dm AS (SELECT doc_id, g, " +
+      "CAST(8 + (g % 5) * 2 AS BIGINT) AS w, " +
+      "CAST(8 + ((g * 3) % 4) * 2 AS BIGINT) AS h, " +
+      "CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
+      "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
+      "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
+      "px AS (SELECT doc_id, g, w, h, f, " +
+      "unnest(range(w * h)) AS k FROM sf2), " +
+      "v AS (SELECT doc_id, f, " +
+      "(g*37 + f*(11 + (g * 17) % 97) + (k % w)*(k % w)*(4 + (g % 11) * 5) + " +
+      "(k // w)*(k // w)*(3 + (g % 13) * 3) + " +
+      "(k % w)*(k // w)*(2 + (g % 7) * 9)) % 256 AS val, " +
+      "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
+      s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
+      s"${frameMatchCtes("b")} " +
+      videoPairSql
+
+  /** q241's patch prints over block values `bm(doc_id, bx, by, v)` on a
+    * `dd(doc_id, gw, gh)` grid: one global comparison grid `cmp`, and
+    * `ifp(doc_id, ox, oy, ph)` = the 56-bit print of every 8x8-block window. */
+  private def patchPrintCtes: String =
+    "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
+      "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
+      "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
+      "off AS (SELECT doc_id, gw, gh, " +
+      "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
+      "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
+      "FROM off), " +
+      "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
+      "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
+      "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
+      "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
+      "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
+      "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
+      "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
+      "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
+      "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3)"
+
+  /** Crop prints over the crops' 8x8 block values `cbm`, brute-forced
+    * against [[patchPrintCtes]]' windows at Hamming <= 3. Ends the query. */
+  private def cropMatchSql: String =
+    "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
+      "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
+      "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
+      "cfp AS (SELECT cd.doc_id, " +
+      "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
+      "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
+      "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
+      "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
+      "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
+      "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3"
+
+  /** q267's 3-frame 16x16 canvas: `c(media_id, par, f, x, y)`, one row per
+    * pixel of each frame, `par` = the doc's id parity. */
+  private def canvasCtes: String =
+    "d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
+      "FROM documents), " +
+      "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
+      "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
+      "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp)"
+
+  /** Per-frame quadrant gray sums of a 16x16 canvas `g(media_id, f, x, y,
+    * gray)`. Ends the query. */
+  private def quadrantSumsSql: String =
+    "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
+      "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
+      "AS BIGINT) AS q_tl, " +
+      "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
+      "AS BIGINT) AS q_tr, " +
+      "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
+      "AS BIGINT) AS q_bl, " +
+      "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
+      "AS BIGINT) AS q_br " +
+      "FROM g GROUP BY 1, 2"
+
+  /** q271's raster dims `d(media_id, w, h)` and pixel rows `px`. */
+  private def rasterPixelCtes: String =
+    "d AS (SELECT doc_id AS media_id, " +
+      "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
+      "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
+      "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d)"
+
+  /** q271's quadratic displayed gray per pixel, with its 2x2 block. */
+  private def rasterGrayCte: String =
+    "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
+      "((k % w)*(k % w)*(7 + media_id % 29) + " +
+      "(k // w)*(k // w)*(11 + media_id % 17) + " +
+      "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
+      "FROM px)"
+
+  /** The block-means census over `g(media_id, w, h, bx, by, gray)`, whole
+    * 2x2 blocks only. Ends the query. */
+  private def blockMeansSql: String =
+    "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
+      "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
+      "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
+      "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f"
+
+  /** Quadrant sums of DC-only JPEG blocks `g(media_id, width, height, bx,
+    * by, gray)`, 64 pixels per block. Ends the query. */
+  private def jpegQuadrantSql: String =
+    "SELECT media_id, width, height, " +
+      "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < height // 16 " +
+      "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
+      "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < height // 16 " +
+      "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
+      "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= height // 16 " +
+      "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
+      "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= height // 16 " +
+      "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
+      "FROM g GROUP BY 1, 2, 3"
+
+  /** The mono PCM16 amplitude census over samples `v(media_id, n, sv)`.
+    * Ends the query. */
+  private def pcmCensusSql(rate: Int): String =
+    "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
+      s"CAST($rate AS INTEGER) AS sample_rate, n AS n_samples, " +
+      "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
+      "CAST(max(abs(sv)) AS BIGINT) AS peak " +
+      "FROM v GROUP BY media_id, n"
+
+  /** The published G.711 u-law expansion of codes `ul(media_id, n, u)` to
+    * `uv(media_id, n, sv)`. */
+  private def ulawCte: String =
+    "uv AS (SELECT media_id, n, " +
+      "CASE WHEN (u & 128) != 0 " +
+      "THEN 132 - ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) " +
+      "ELSE ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) - 132 " +
+      "END AS sv FROM ul)"
+
   /** The three per-modality pair replays of the JOINT multimodal dedup
     * (q237/q238), as one CTE block: `tp` = brute-force shingle Jaccard
     * >= 0.8 (the q24 respell), `ip` = the cross-format image dHash replay
@@ -30,21 +346,8 @@ private[queries] object MediaQueries {
       "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
       // image replay (q224's planted cross-format formula, groups doc_id/2)
       s"dd AS (SELECT doc_id, doc_id // 2 AS g FROM $multimodalSrc), " +
-      "dm AS (SELECT doc_id, g, " +
-      "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-      "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-      "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-      "v AS (SELECT doc_id, " +
-      "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-      "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-      "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-      "FROM v GROUP BY 1, 2, 3), " +
-      "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-      "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-      "WHERE l.mean < r.mean), " +
-      "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-      "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-      "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
+      s"${stillImageCtes("v")}, " +
+      s"${stillDhashCtes("fp AS")}, " +
       "ip AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, TRUE AS via_image " +
       "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
       "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
@@ -147,11 +450,7 @@ private[queries] object MediaQueries {
         "FROM documents WHERE doc_id % 2 = 1), " +
         "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
         "v AS (SELECT media_id, n, ((media_id * 17 + p * 3) % 4096) - 2048 AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n")),
+        pcmCensusSql(16000))),
     // --- perceptual image near-dup [ext]: the composition of the real PNG
     // decoder (q217) with the Hamming bit-band blocking q45 proves for
     // SimHash — planted base / sparse-watermark / distinct image triples,
@@ -183,18 +482,8 @@ private[queries] object MediaQueries {
         "THEN ((g*31 + (k % w)*7 + (k // w)*13) % 256 + 4) % 256 " +
         "ELSE (g*31 + (k % w)*7 + (k // w)*13) % 256 END AS val, " +
         "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.dhash, y.dhash)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3")),
+        s"${stillDhashCtes("fp AS")} " +
+        hammingPairsSql("dhash"))),
     // --- audio fingerprint near-dup [ext]: the WAV-side twin — PCM16
     // energy-contour fingerprints (57 windows, 56 adjacent comparisons)
     // over planted base / nudged / distinct clip triples, same banding
@@ -209,25 +498,9 @@ private[queries] object MediaQueries {
       // floor-assigned energy windows, bit j set iff E[j+1]>E[j], brute pairs
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "s AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM s), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.afp, y.afp)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.afp, y.afp)) <= 3")),
+        s"${audioEnergyCtes("s")}, " +
+        s"${audioPrintCtes("fp AS")} " +
+        hammingPairsSql("afp"))),
     // --- REAL resize [ext]: q217's full-decode PNGs box-downsampled to
     // maxSide 8 (integer block means, ceil dims, edge blocks keep true
     // counts), RE-ENCODED as spec-complete PNGs, then pushed through the
@@ -315,25 +588,9 @@ private[queries] object MediaQueries {
       // pair (PNG plants it as r=g=b, GIF as the identity gray palette), so
       // the hash arithmetic is the q219 dHash replay over group g = id/2
       ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.dhash, y.dhash)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3")),
+        s"${stillImageCtes("v")}, " +
+        s"${stillDhashCtes("fp AS")} " +
+        hammingPairsSql("dhash"))),
     // --- perceptual media clusters [ext]: the labeling form of q224 —
     // every media row labeled with the min-id connected component of its
     // Hamming-<=3 pair graph (singletons self-label; dedup = keep
@@ -346,28 +603,12 @@ private[queries] object MediaQueries {
         graft.multimodal.MediaDedup.syntheticCrossFormatImages(
           t(s, d, "documents")), maxHamming = 3, bands = 4)),
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
+        s"${stillImageCtes("v")}, " +
+        s"${stillDhashCtes("fp AS MATERIALIZED")}, " +
         "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
         "JOIN fp y ON x.doc_id < y.doc_id " +
         "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "lab AS (SELECT fp.doc_id AS media_id, " +
         "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cluster_id " +
         "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n) " +
@@ -395,33 +636,10 @@ private[queries] object MediaQueries {
       // cosine in the exact q28 list_inner_product spelling (integer dims →
       // bit-identical doubles)
       ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "vv AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "hh AS (SELECT doc_id, val // 32 AS b8, count(*) AS cnt FROM vv GROUP BY 1, 2), " +
-        "hd AS (SELECT doc_id, c * 8 + b8 AS dim, CAST(cnt AS DOUBLE) AS v " +
-        "FROM hh CROSS JOIN (VALUES (0), (1), (2)) AS ch(c)), " +
-        "mm AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM vv GROUP BY 1, 2, 3), " +
-        "gd AS (SELECT doc_id, 24 + by * 8 + bx AS dim, CAST(mean AS DOUBLE) AS v FROM mm), " +
-        "sc88 AS (SELECT doc_id, unnest(range(88)) AS dim FROM dm), " +
-        "fl AS (SELECT sc88.doc_id, sc88.dim, coalesce(u.v, 0.0) AS v " +
-        "FROM sc88 LEFT JOIN (SELECT * FROM hd UNION ALL SELECT * FROM gd) u " +
-        "ON sc88.doc_id = u.doc_id AND sc88.dim = u.dim), " +
+        s"$imageDescriptorCtes, " +
         "dsc AS MATERIALIZED (SELECT doc_id, list(v ORDER BY dim) AS vec " +
         "FROM fl GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3")),
+        descriptorTopKSql)),
     // --- image ANN at scale [ext]: the q40 IVF machinery runs UNCHANGED
     // over the content descriptors (the (vec_id, embedding) contract
     // paying off) — brute-force truth vs IVF top-k under the q29/q40
@@ -457,25 +675,10 @@ private[queries] object MediaQueries {
       // 57-dim vector, q28's exact cosine spelling
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "sm AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM sm), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
+        s"${audioEnergyCtes("sm")}, " +
         "dsc AS MATERIALIZED (SELECT doc_id, " +
         "list(CAST(energy AS DOUBLE) ORDER BY wdx) AS vec FROM e GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3")),
+        descriptorTopKSql)),
     // --- streaming MEDIA ingest with perceptual dedup [ext]: the
     // multimodal twin of q196 — per-batch format-blind dHash through the
     // real decoders, in-batch Hamming-component dedup, banded cross-batch
@@ -499,40 +702,13 @@ private[queries] object MediaQueries {
       // batch-1 canonicals admit unconditionally, batch-2 canonicals drop on
       // any brute-force Hamming-<=3 hit against an admitted batch-1 row
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
+        s"${stillImageCtes("v")}, " +
+        s"${stillDhashCtes("fp AS MATERIALIZED")}, " +
         "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
         "JOIN fp y ON x.doc_id < y.doc_id AND x.doc_id % 2 = y.doc_id % 2 " +
         "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT fp.doc_id, " +
-        "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cid " +
-        "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n), " +
-        "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
-        "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
-        "rej AS (SELECT DISTINCT c2.doc_id FROM c2 " +
-        "JOIN fp f2 ON c2.doc_id = f2.doc_id " +
-        "CROSS JOIN a1 JOIN fp f1 ON a1.doc_id = f1.doc_id " +
-        "WHERE bit_count(xor(f2.dhash, f1.dhash)) <= 3), " +
-        "adm AS (SELECT doc_id FROM a1 UNION ALL " +
-        "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
-        "WHERE rej.doc_id IS NULL) " +
+        s"$edgeComponentCtes, " +
+        s"${admitCtes("dhash")} " +
         // the sum(1 << j) hash is a HUGEINT in DuckDB — cast the OUTPUT
         // column to BIGINT or the comparer reads it as a lossy float
         "SELECT adm.doc_id AS media_id, CAST(fp.dhash AS BIGINT) AS dhash " +
@@ -584,38 +760,9 @@ private[queries] object MediaQueries {
         minSharedFrac = 0.5)),
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pm AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "agg AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pm GROUP BY 1, 2) " +
+        s"$sampledVideoCtes, " +
+        s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
+        s"${frameMatchCtes("")} " +
         "SELECT agg.ma AS media_a, agg.mb AS media_b, matched_a, matched_b, " +
         "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
         "FROM agg JOIN cnt ca ON agg.ma = ca.doc_id " +
@@ -633,46 +780,14 @@ private[queries] object MediaQueries {
         minSharedFrac = 0.5)),
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
         "doc_id % 3 AS role FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pm AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "agg AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pm GROUP BY 1, 2), " +
+        s"$sampledVideoCtes, " +
+        s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
+        s"${frameMatchCtes("")}, " +
         "edges AS (SELECT agg.ma AS a, agg.mb AS b " +
         "FROM agg JOIN cnt ca ON agg.ma = ca.doc_id " +
         "JOIN cnt cb ON agg.mb = cb.doc_id " +
         "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "lab AS (SELECT dd.doc_id, " +
         "least(dd.doc_id, coalesce(mn, dd.doc_id)) AS cid " +
         "FROM dd LEFT JOIN compmap ON dd.doc_id = compmap.n) " +
@@ -696,37 +811,13 @@ private[queries] object MediaQueries {
       // q228 cosine/top-k spelling
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
+        s"$sampledVideoCtes, " +
+        s"$frameMeansCte, " +
         "cell AS (SELECT doc_id, by * 8 + bx AS dim, sum(mean) AS sv " +
         "FROM m GROUP BY 1, 2), " +
         "dsc AS MATERIALIZED (SELECT doc_id, " +
         "list(CAST(sv AS DOUBLE) ORDER BY dim) AS vec FROM cell GROUP BY 1), " +
-        "s AS (SELECT p.doc_id AS probe_id, c.doc_id AS neighbor_id, " +
-        "list_inner_product(p.vec, c.vec) / " +
-        "(sqrt(list_inner_product(p.vec, p.vec)) * " +
-        "sqrt(list_inner_product(c.vec, c.vec))) AS cos_sim " +
-        "FROM dsc p JOIN dsc c ON p.doc_id < 10 AND p.doc_id != c.doc_id), " +
-        "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id " +
-        "ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
-        "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3")),
+        descriptorTopKSql)),
     // --- shot-boundary detection [ext]: consecutive-frame Hamming over
     // the full decoded frame stream (shot detection is inherently
     // sequential — no sampling), boundary where the hash jumps by > 10
@@ -752,15 +843,7 @@ private[queries] object MediaQueries {
         "(doc_id*29 + s*71 + f*3 + (k % w)*(3 + (doc_id*13 + s*37) % 251) + " +
         "(k // w)*(2 + (doc_id*7 + s*29) % 241)) % 256 AS val, " +
         "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT fr.doc_id, fr.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM fr LEFT JOIN bits ON fr.doc_id = bits.doc_id " +
-        "AND fr.f = bits.f GROUP BY 1, 2), " +
+        s"$frameMeansCte, ${frameDhashCtes("fr")}, " +
         "bd AS (SELECT c.doc_id, c.f, " +
         "CASE WHEN p.dh IS NULL THEN 0 " +
         "WHEN bit_count(xor(c.dh, p.dh)) > 10 THEN 1 ELSE 0 END AS b " +
@@ -789,31 +872,8 @@ private[queries] object MediaQueries {
       // formula), brute-force Hamming join across the modality boundary
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "fr AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM fr), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT fr.doc_id, fr.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM fr LEFT JOIN bits ON fr.doc_id = bits.doc_id " +
-        "AND fr.f = bits.f GROUP BY 1, 2), " +
+        s"${videoFrameCtes("fr")}, ${videoPixelCtes("fr")}, " +
+        s"$frameMeansCte, ${frameDhashCtes("fr")}, " +
         "imgfp AS (SELECT doc_id AS image_id, dh FROM fp " +
         "WHERE doc_id % 3 = 0 AND f = 1) " +
         "SELECT f.doc_id AS video_id, CAST(f.f AS INTEGER) AS frame_idx, " +
@@ -856,32 +916,8 @@ private[queries] object MediaQueries {
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
         "doc_id % 3 AS role FROM documents " +
         "WHERE (doc_id // 3) % 2 = 0), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
+        s"$sampledVideoCtes, " +
+        s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
         "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
         "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
         "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
@@ -893,10 +929,7 @@ private[queries] object MediaQueries {
         "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
         "JOIN cnt cb ON aggb.mb = cb.doc_id " +
         "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "lab AS (SELECT dd.doc_id, " +
         "least(dd.doc_id, coalesce(mn, dd.doc_id)) AS cid " +
         "FROM dd LEFT JOIN compmap ON dd.doc_id = compmap.n), " +
@@ -965,10 +998,7 @@ private[queries] object MediaQueries {
         "edges AS (SELECT doc_a AS a, doc_b AS b FROM tp " +
         "UNION SELECT doc_a, doc_b FROM ip " +
         "UNION SELECT doc_a, doc_b FROM ap), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "lab AS (SELECT d.doc_id AS item_id, " +
         "least(d.doc_id, coalesce(mn, d.doc_id)) AS cluster_id " +
         s"FROM $multimodalSrc d LEFT JOIN compmap ON d.doc_id = compmap.n) " +
@@ -1055,32 +1085,8 @@ private[queries] object MediaQueries {
       // one-sided clip-coverage aggregation at >= 0.5
       ("WITH dd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 3 AS role " +
         "FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(12 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 4 AS BIGINT) AS h, " +
-        "CAST(4 + g % 3 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, role, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, role, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "CASE WHEN role = 2 THEN (g*53 + f*11 + (k % w)*(5 + (g * 17) % 239) + " +
-        "(k // w)*(3 + (g * 11) % 233) + 128) % 256 " +
-        "WHEN role = 1 AND k % 97 = 0 " +
-        "THEN ((g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 + 4) % 256 " +
-        "ELSE (g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
-        "(k // w)*(2 + (g * 7) % 241)) % 256 END AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
+        s"$sampledVideoCtes, " +
+        s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
         "cd AS (SELECT doc_id, doc_id // 3 AS g, doc_id % 4 AS crole " +
         "FROM documents WHERE doc_id % 2 = 0), " +
         "cdm AS (SELECT doc_id, g, crole, " +
@@ -1144,22 +1150,7 @@ private[queries] object MediaQueries {
         "(b // gw)*(b // gw)*(7 + doc_id % 29) + " +
         "(b % gw)*(b // gw)*(3 + doc_id % 17) + doc_id*11) % 226 AS v " +
         "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
+        s"$patchPrintCtes, " +
         "cd AS (SELECT doc_id, doc_id % 4 AS crole, doc_id % 5 AS cox, " +
         "doc_id % 3 AS coy FROM documents WHERE doc_id % 2 = 0), " +
         "cbb AS (SELECT doc_id, crole, cox, coy, unnest(range(64)) AS b " +
@@ -1171,16 +1162,7 @@ private[queries] object MediaQueries {
         "(cox + b % 8)*(coy + b // 8)*(3 + doc_id % 17) + doc_id*11) % 226 + 30 " +
         "ELSE ((b % 8)*(b % 8)*19 + (b // 8)*(b // 8)*23 + " +
         "(b % 8)*(b // 8)*29 + doc_id*7 + 99) % 226 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3")),
+        cropMatchSql)),
     // --- image quality stats [ext]: the image twin of the text quality
     // heuristics — exposure/contrast gates over DECODED pixels (header
     // metadata cannot answer "is it over-exposed or flat"). Exact-integer
@@ -1232,11 +1214,7 @@ private[queries] object MediaQueries {
         "v AS (SELECT media_id, n, " +
         "CASE WHEN media_id % 7 = 0 THEN ((media_id * 31) % 4096) - 2048 " +
         "ELSE ((media_id * 23 + p * 7) % 4096) - 2048 END AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n")),
+        pcmCensusSql(16000))),
     // --- audio ANN behind the recall gate [ext]: the q227 contract on
     // the audio modality — IVF over the 57-dim energy-contour descriptors
     // (already in the (vec_id, embedding) contract), gated by in-query
@@ -1438,16 +1416,8 @@ private[queries] object MediaQueries {
         "(g*29 + (c % 8)*(c % 8)*(3 + (g % 7) * 9) + " +
         "(c // 8)*(c // 8)*(2 + (g % 5) * 7) + " +
         "(c % 8)*(c // 8)*(5 + (g % 11) * 3)) % 256 AS mean FROM cell), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3")),
+        s"${dhashCtes("fp AS", "dd", "h")} " +
+        hammingPairsSql("h"))),
     // --- BMP + uncompressed-TIFF decode [ext]: trivial public byte
     // layouts (no entropy coding) that real crawls still carry —
     // bottom-up AND top-down 24-bit BMP, 8-bit palette BMP, 32-bit BMP
@@ -1465,19 +1435,9 @@ private[queries] object MediaQueries {
       graft.multimodal.MediaDedup.imageBlockMeans(
         graft.multimodal.Multimodal.syntheticRasterMedia(
           t(s, d, "documents")), blockPx = 2)),
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+      (s"WITH $rasterPixelCtes, " +
+        s"$rasterGrayCte, " +
+        blockMeansSql)),
     // --- WebP VP8L lossless decode [ext]: the top real-crawl image
     // format that was still `unknown_magic` — a from-scratch RFC-9649
     // VP8L bitstream decoder (canonical prefix codes, LZ77 backward
@@ -1500,10 +1460,7 @@ private[queries] object MediaQueries {
       // palette variant quantizes to 16 levels, the cache+LZ77 variant
       // plants row pairs (y - y%2); the engine earns each value through a
       // different lossless bitstream (transforms invert exactly)
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
+      (s"WITH $rasterPixelCtes, " +
         "c AS (SELECT media_id, w, h, k % w AS x, k // w AS y, " +
         "CASE WHEN media_id % 6 = 4 THEN (k // w) - (k // w) % 2 " +
         "ELSE k // w END AS fy FROM px), " +
@@ -1513,10 +1470,7 @@ private[queries] object MediaQueries {
         "g AS (SELECT media_id, w, h, x // 2 AS bx, y // 2 AS by, " +
         "CASE WHEN media_id % 6 = 2 THEN (f0 % 16) * 16 + 3 " +
         "ELSE f0 END AS gray FROM v), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- PNG <-> WebP cross-format perceptual dedup [ext]: planted
     // pairs of the same displayed content collide at Hamming 0 through
     // entirely different codecs (inflate+unfilter vs VP8L prefix-code
@@ -1539,16 +1493,8 @@ private[queries] object MediaQueries {
         "(g*31 + (c % 8)*(c % 8)*(7 + (g % 5) * 9) + " +
         "(c // 8)*(c // 8)*(3 + (g % 7) * 5) + " +
         "(c % 8)*(c // 8)*(11 + (g % 3) * 13)) % 256 AS mean FROM cell), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3")),
+        s"${dhashCtes("fp AS", "dd", "h")} " +
+        hammingPairsSql("h"))),
     // --- MP4/MP3/Ogg container metadata census [ext]: the crawl-MAJORITY
     // media containers become MEASURED (codec fourcc, dims, duration,
     // channels, rate, bitrate from the published ISO-BMFF box / MPEG
@@ -1757,16 +1703,8 @@ private[queries] object MediaQueries {
         "ELSE (2 * LEAST(GREATEST((19077 * v) // 256 - 1160, 0) // 64, 255) + " +
         "LEAST(GREATEST((19077 * v) // 256 - 1161, 0) // 64, 255)) // 3 " +
         "END AS mean FROM pv), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS (SELECT dd.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS h FROM dd " +
-        "LEFT JOIN bits ON dd.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.h, y.h)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.h, y.h)) <= 3")),
+        s"${dhashCtes("fp AS", "dd", "h")} " +
+        hammingPairsSql("h"))),
     // --- WAV fmt-LAYOUT matrix decode [ext]: the two real-crawl fmt
     // layouts beyond canonical PCM — IEEE float32 (fmt tag 3, what DAWs
     // export) and WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE with the real tag
@@ -1791,11 +1729,7 @@ private[queries] object MediaQueries {
         "s AS (SELECT media_id, n, unnest(range(n)) AS p FROM d), " +
         "v AS (SELECT media_id, n, " +
         "((media_id*23 + p*7) % 4096) - 2048 AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n")),
+        pcmCensusSql(16000))),
     // --- COMPRESSED TIFF decode [ext]: real scanner/archival TIFFs are
     // LZW (the TIFF variant with the spec's famous EARLY code-size
     // change), Deflate, or PackBits compressed, usually with the
@@ -1814,19 +1748,9 @@ private[queries] object MediaQueries {
           t(s, d, "documents")), blockPx = 2)),
       // compressed-TIFF replay: q271's closed form verbatim — the engine
       // earns it through eight different codec x predictor strip paths
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+      (s"WITH $rasterPixelCtes, " +
+        s"$rasterGrayCte, " +
+        blockMeansSql)),
     // --- Sun AU + AIFF decode [ext]: the pre-streaming-era audio
     // containers old crawls still carry — AU's 24-byte big-endian
     // header (u-law is its DEFAULT encoding; signed PCM8, unlike WAV's
@@ -1848,11 +1772,7 @@ private[queries] object MediaQueries {
         "ul AS (SELECT media_id, n, " +
         "255 - CAST((media_id*29 + p*13) % 256 AS INTEGER) AS u " +
         "FROM s WHERE v = 0), " +
-        "uv AS (SELECT media_id, n, " +
-        "CASE WHEN (u & 128) != 0 " +
-        "THEN 132 - ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) " +
-        "ELSE ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) - 132 " +
-        "END AS sv FROM ul), " +
+        s"$ulawCte, " +
         "pv AS (SELECT media_id, n, " +
         "((media_id*23 + p*7) % 4096) - 2048 AS sv FROM s " +
         "WHERE v IN (1, 2)), " +
@@ -1880,19 +1800,13 @@ private[queries] object MediaQueries {
           t(s, d, "documents")), blockPx = 2)),
       // RLE4 replay: the q271 quadratic reduced mod 16 through the x17
       // identity ramp — one closed form across both RLE4 modes
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
+      (s"WITH $rasterPixelCtes, " +
         "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
         "(((k % w)*(k % w)*(7 + media_id % 29) + " +
         "(k // w)*(k // w)*(11 + media_id % 17) + " +
         "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 16) * 17 " +
         "AS gray FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- learned-encoder serving lifecycle [ext]: the last §8 slot,
     // EXECUTED — a seeded integer random projection stands in for the
     // learned embedding extractor (no model weights exist in this
@@ -1924,23 +1838,7 @@ private[queries] object MediaQueries {
       // descriptor AND matrix multiply arithmetically (weights and dims
       // are exact integers, sums far below 2^53)
       ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "vv AS (SELECT doc_id, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "hh AS (SELECT doc_id, val // 32 AS b8, count(*) AS cnt FROM vv GROUP BY 1, 2), " +
-        "hd AS (SELECT doc_id, c * 8 + b8 AS dim, CAST(cnt AS DOUBLE) AS v " +
-        "FROM hh CROSS JOIN (VALUES (0), (1), (2)) AS ch(c)), " +
-        "mm AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM vv GROUP BY 1, 2, 3), " +
-        "gd AS (SELECT doc_id, 24 + by * 8 + bx AS dim, CAST(mean AS DOUBLE) AS v FROM mm), " +
-        "sc88 AS (SELECT doc_id, unnest(range(88)) AS dim FROM dm), " +
-        "fl AS (SELECT sc88.doc_id, sc88.dim, coalesce(u.v, 0.0) AS v " +
-        "FROM sc88 LEFT JOIN (SELECT * FROM hd UNION ALL SELECT * FROM gd) u " +
-        "ON sc88.doc_id = u.doc_id AND sc88.dim = u.dim), " +
+        s"$imageDescriptorCtes, " +
         "od AS (SELECT unnest(range(16)) AS o), " +
         "pr AS (SELECT fl.doc_id AS media_id, od.o AS dim, " +
         "sum(((7*31 + od.o*293 + fl.dim*181 + od.o*fl.dim*97) % 127 - 63) * fl.v) AS value " +
@@ -2001,16 +1899,8 @@ private[queries] object MediaQueries {
         "abs(((g*29 + p*p*(7 + g % 13) + p*11) % 4096) - 2048) AS av " +
         "FROM s), " +
         "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1) " +
-        "SELECT x.doc_id AS media_a, y.doc_id AS media_b, " +
-        "CAST(bit_count(xor(x.afp, y.afp)) AS INTEGER) AS hamming " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.afp, y.afp)) <= 3")),
+        s"${audioPrintCtes("fp AS")} " +
+        hammingPairsSql("afp"))),
     // --- IMA ADPCM WAV decode [ext]: the 4-bit block-structured codec
     // of telephony and game audio (fmt tag 0x11) — per-block headers
     // (predictor sample, step index) then nibble groups round-robin per
@@ -2064,16 +1954,7 @@ private[queries] object MediaQueries {
         "g AS (SELECT media_id, width, height, " +
         "k % (width // 8) AS bx, k // (width // 8) AS by, " +
         "(media_id * 41 + k * (13 + media_id % 19)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2, 3")),
+        jpegQuadrantSql)),
     // --- BI_RLE8 BMP decode [ext]: the icon/screenshot era's dominant
     // compressed BMP — run-length pairs with the four escapes (EOL,
     // EOB, delta with skipped-pixels-stay-index-0, absolute mode with
@@ -2087,10 +1968,7 @@ private[queries] object MediaQueries {
           t(s, d, "documents")), blockPx = 2)),
       // RLE8 replay: the parity CASE mirrors the fixture — run-friendly
       // (x//3) form on even ids, the q271 quadratic on odd
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
+      (s"WITH $rasterPixelCtes, " +
         "xx AS (SELECT media_id, w, h, k, CASE WHEN media_id % 2 = 0 " +
         "THEN (k % w) // 3 ELSE k % w END AS gx FROM px), " +
         "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
@@ -2098,10 +1976,7 @@ private[queries] object MediaQueries {
         "(k // w)*(k // w)*(11 + media_id % 17) + " +
         "gx*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
         "FROM xx), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- 16-bit + TILED TIFF decode [ext]: scanner masters carry
     // 16-bit samples (reduced to the planted HIGH byte over low-byte
     // noise — II stores it SECOND, MM first, so a byte-order bug reads
@@ -2115,19 +1990,9 @@ private[queries] object MediaQueries {
           t(s, d, "documents")), blockPx = 2)),
       // deep/tiled-TIFF replay: q271's closed form verbatim — the engine
       // earns it through the 16-bit reductions and the tiled segment walk
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
-        "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
-        "((k % w)*(k % w)*(7 + media_id % 29) + " +
-        "(k // w)*(k // w)*(11 + media_id % 17) + " +
-        "(k % w)*(k // w)*(5 + media_id % 11) + media_id*23) % 251 AS gray " +
-        "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+      (s"WITH $rasterPixelCtes, " +
+        s"$rasterGrayCte, " +
+        blockMeansSql)),
     // --- G.711 u-law/A-law WAV decode [ext]: the telephony/VoIP codecs
     // (fmt tags 7 and 6) — 8-bit companded bytes expanding through the
     // published segment/mantissa closed forms (u-law: invert, mantissa
@@ -2150,11 +2015,7 @@ private[queries] object MediaQueries {
         "CAST((media_id*29 + p*13) % 256 AS INTEGER) AS c FROM s), " +
         "ul AS (SELECT media_id, n, 255 - c AS u FROM cb " +
         "WHERE media_id % 2 = 0), " +
-        "uv AS (SELECT media_id, n, " +
-        "CASE WHEN (u & 128) != 0 " +
-        "THEN 132 - ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) " +
-        "ELSE ((((u & 15) << 3) + 132) << ((u >> 4) & 7)) - 132 " +
-        "END AS sv FROM ul), " +
+        s"$ulawCte, " +
         "al AS (SELECT media_id, n, xor(c, 85) AS a FROM cb " +
         "WHERE media_id % 2 = 1), " +
         "av AS (SELECT media_id, n, " +
@@ -2163,11 +2024,7 @@ private[queries] object MediaQueries {
         "ELSE (((a & 15) << 4) + 264) << (((a >> 4) & 7) - 1) " +
         "END AS sv FROM al), " +
         "v AS (SELECT * FROM uv UNION ALL SELECT * FROM av) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(8000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n")),
+        pcmCensusSql(8000))),
     // --- COMPOSITED APNG decode [ext]: the FOURTH animation container
     // (the PNG animation extension, now part of the W3C PNG spec) —
     // fcTL/fdAT frames are full PNG streams placed at offsets, blended
@@ -2189,11 +2046,7 @@ private[queries] object MediaQueries {
       // BACKGROUND clears to transparent (gray 0, not a palette color),
       // the pierced rect's dispose PREVIOUS removes it from frame 2, holes
       // show the base on even ids and transparent black on odd
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
+      (s"WITH $canvasCtes, " +
         "v AS (SELECT media_id, f, x, y, " +
         "((media_id*23 + x*3 + y*5) % 64) * 4 + 1 AS v0, " +
         "CASE WHEN par = 0 THEN ((media_id*23 + x*3 + y*5) % 64) * 4 + 1 " +
@@ -2206,16 +2059,7 @@ private[queries] object MediaQueries {
         "WHEN f = 2 AND x >= 8 AND y < 8 " +
         "THEN ((media_id*11 + (x-8)*7 + y*9) % 64) * 4 + 1 " +
         "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2")),
+        quadrantSumsSql)),
     // --- GIF <-> APNG cross-container video dedup [ext]: the q276
     // contract extended to the fourth animation container — planted
     // pairs share no container bytes (LZW code streams vs zlib scanline
@@ -2231,42 +2075,7 @@ private[queries] object MediaQueries {
       // GIF<->APNG replay: q276's SQL verbatim — same dims, frame counts,
       // and quadratic value family; only the odd member's CONTAINER
       // changed, which the oracle never sees
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(8 + (g % 5) * 2 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 2 AS BIGINT) AS h, " +
-        "CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "(g*37 + f*(11 + (g * 17) % 97) + (k % w)*(k % w)*(4 + (g % 11) * 5) + " +
-        "(k // w)*(k // w)*(3 + (g % 13) * 3) + " +
-        "(k % w)*(k // w)*(2 + (g % 7) * 9)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5")),
+      animatedPairVideoSql),
     // --- COMPOSITED animated-WebP decode [ext]: the q267 canvas story in
     // WebP's vocabulary — ANMF frames are VP8L-coded rects placed at
     // offsets, BLENDED (alpha-blend; alpha-0 pixels punch through to the
@@ -2287,11 +2096,7 @@ private[queries] object MediaQueries {
       // parity, the alpha-0 diagonal showing the base (or the restored
       // background) through the blended rect, the no-blend overlay winning
       // where rects overlap — per pixel, then quadrant sums per frame
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
+      (s"WITH $canvasCtes, " +
         "v AS (SELECT media_id, f, x, y, " +
         "((media_id*29 + x*5 + y*7) % 64) * 4 + 2 AS v0, " +
         "CASE WHEN par = 0 THEN 8 " +
@@ -2304,16 +2109,7 @@ private[queries] object MediaQueries {
         "AND ((x-4) + (y-4)) % 3 <> 1 " +
         "THEN ((media_id*13 + (x-4)*3 + (y-4)*5) % 63) * 4 + 2 " +
         "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2")),
+        quadrantSumsSql)),
     // --- GIF <-> animated-WebP cross-container video dedup [ext]: the
     // q248 contract extended to the THIRD animation container — planted
     // pairs share no container bytes (LZW palette streams vs VP8L
@@ -2329,42 +2125,7 @@ private[queries] object MediaQueries {
       // GIF<->WebP video replay: ONE frame formula for both members,
       // the q248 dHash/containment arithmetic over this fixture's pair
       // grouping, dims, and coefficients
-      ("WITH dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(8 + (g % 5) * 2 AS BIGINT) AS w, " +
-        "CAST(8 + ((g * 3) % 4) * 2 AS BIGINT) AS h, " +
-        "CAST(2 + g % 2 AS BIGINT) AS nf FROM dd), " +
-        "sf AS (SELECT doc_id, g, w, h, unnest(range(nf)) AS f FROM dm), " +
-        "sf2 AS (SELECT * FROM sf WHERE f % 2 = 0), " +
-        "px AS (SELECT doc_id, g, w, h, f, " +
-        "unnest(range(w * h)) AS k FROM sf2), " +
-        "v AS (SELECT doc_id, f, " +
-        "(g*37 + f*(11 + (g * 17) % 97) + (k % w)*(k % w)*(4 + (g % 11) * 5) + " +
-        "(k // w)*(k // w)*(3 + (g % 13) * 3) + " +
-        "(k % w)*(k // w)*(2 + (g % 7) * 9)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5")),
+      animatedPairVideoSql),
     // --- EXIF-oriented WebP crop search [ext]: the q263 story for the
     // WebP container — camera-pipeline WebPs carry tag 274 in an EXIF
     // chunk, and a crop is taken from the DISPLAYED form; the still
@@ -2394,22 +2155,7 @@ private[queries] object MediaQueries {
         "(b // gw)*(b // gw)*(9 + doc_id % 17) + " +
         "(b % gw)*(b // gw)*(5 + doc_id % 11) + doc_id*23) % 196 AS v " +
         "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
+        s"$patchPrintCtes, " +
         "cd AS (SELECT doc_id, doc_id % 4 AS crole, " +
         "doc_id % (8 + doc_id % 3 - 7) AS cox, " +
         "doc_id % (8 + doc_id % 2 - 7) AS coy " +
@@ -2423,16 +2169,7 @@ private[queries] object MediaQueries {
         "(cox + b % 8)*(coy + b // 8)*(5 + doc_id % 11) + doc_id*23) % 196 + 30 " +
         "ELSE ((b % 8)*(b % 8)*19 + (b // 8)*(b // 8)*23 + " +
         "(b % 8)*(b // 8)*29 + doc_id*7 + 55) % 196 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3")),
+        cropMatchSql)),
     // --- WAV PCM-depth matrix [ext]: 8-bit unsigned (old clips) and
     // 24-bit signed (production audio) PCM previously failed fast; both
     // now normalize to int16 by DOCUMENTED deterministic conversions
@@ -2452,11 +2189,7 @@ private[queries] object MediaQueries {
         "v AS (SELECT media_id, n, " +
         "CASE WHEN b = 0 THEN ((media_id*29 + p*13) % 256 - 128) * 256 " +
         "ELSE ((media_id*23 + p*7) % 4096) - 2048 END AS sv FROM s) " +
-        "SELECT media_id, CAST(1 AS INTEGER) AS channels, " +
-        "CAST(16000 AS INTEGER) AS sample_rate, n AS n_samples, " +
-        "CAST(sum(abs(sv)) AS BIGINT) AS sum_abs, " +
-        "CAST(max(abs(sv)) AS BIGINT) AS peak " +
-        "FROM v GROUP BY media_id, n")),
+        pcmCensusSql(16000))),
     // --- PNG bit-DEPTH matrix decode [ext]: 1/2/4-bit palette and gray
     // PNGs (icons/logos) pack samples MSB-first into scanline bytes
     // (filter bpp = 1 per spec) with gray scaled by 255/(2^d - 1), and
@@ -2484,10 +2217,7 @@ private[queries] object MediaQueries {
         "THEN (media_id*13 + (k % w)*3 + (k // w)*7) % 256 " +
         "ELSE ((media_id*13 + (k % w)*3 + (k // w)*7) % (1 << dep)) * " +
         "(255 // ((1 << dep) - 1)) END AS gray FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- PNG COLOR-TYPE matrix + ADAM7 decode [ext]: real-crawl PNGs
     // are mostly RGB (type 2) and palette (type 3), and some are
     // Adam7-interlaced — all previously failed fast into header-only
@@ -2515,10 +2245,7 @@ private[queries] object MediaQueries {
         "THEN ((media_id*13 + (k % w)*3 + (k // w)*7) % 256 % 64) * 4 + 1 " +
         "ELSE (media_id*13 + (k % w)*3 + (k // w)*7) % 256 END AS gray " +
         "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- COMPOSITED animated GIF decode [ext]: real-crawl animations
     // are PARTIAL-frame updates presented onto a persistent canvas with
     // per-frame disposal methods (keep / restore-to-background /
@@ -2538,11 +2265,7 @@ private[queries] object MediaQueries {
       // by parity, the transparent diagonal showing the base (or the
       // restored background) through, the opaque overlay winning where
       // rects overlap — per pixel, then quadrant sums per frame
-      ("WITH d AS (SELECT doc_id AS media_id, doc_id % 2 AS par " +
-        "FROM documents), " +
-        "fr AS (SELECT media_id, par, unnest(range(3)) AS f FROM d), " +
-        "pp AS (SELECT media_id, par, f, unnest(range(256)) AS k FROM fr), " +
-        "c AS (SELECT media_id, par, f, k % 16 AS x, k // 16 AS y FROM pp), " +
+      (s"WITH $canvasCtes, " +
         "v AS (SELECT media_id, f, x, y, " +
         "((media_id*23 + x*3 + y*5) % 64) * 4 + 1 AS v0, " +
         "CASE WHEN par = 0 THEN 1 " +
@@ -2555,16 +2278,7 @@ private[queries] object MediaQueries {
         "AND ((x-4) + (y-4)) % 3 <> 0 " +
         "THEN ((media_id*7 + (x-4)*5 + (y-4)*3) % 63) * 4 + 1 " +
         "ELSE base END AS gray FROM v) " +
-        "SELECT media_id, CAST(f AS INTEGER) AS frame_idx, " +
-        "CAST(sum(CASE WHEN x < 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y < 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_tr, " +
-        "CAST(sum(CASE WHEN x < 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_bl, " +
-        "CAST(sum(CASE WHEN x >= 8 AND y >= 8 THEN gray ELSE 0 END) " +
-        "AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2")),
+        quadrantSumsSql)),
     // --- PROGRESSIVE (SOF2) JPEG decode [ext]: the second-most-common
     // web JPEG layout — coefficients accumulate across SEVERAL scans
     // (DC first/refinement, AC spectral bands with End-Of-Band runs,
@@ -2672,17 +2386,11 @@ private[queries] object MediaQueries {
       // GIF-variant replay: the planted position-dependent index formula
       // through the grayscale identity ramp, reduced to 2x2 block means —
       // identical arithmetic no matter which descriptor layout carried it
-      ("WITH d AS (SELECT doc_id AS media_id, " +
-        "CAST(16 + doc_id % 5 AS BIGINT) AS w, " +
-        "CAST(16 + (doc_id * 3) % 5 AS BIGINT) AS h FROM documents), " +
-        "px AS (SELECT media_id, w, h, unnest(range(w * h)) AS k FROM d), " +
+      (s"WITH $rasterPixelCtes, " +
         "g AS (SELECT media_id, w, h, (k % w) // 2 AS bx, (k // w) // 2 AS by, " +
         "((media_id*7 + (k % w)*3 + (k // w)*5) % 64 * 4 + 1) % 256 AS gray " +
         "FROM px), " +
-        "f AS (SELECT media_id, bx, by, sum(gray) // count(*) AS mean " +
-        "FROM g WHERE bx < w // 2 AND by < h // 2 GROUP BY 1, 2, 3) " +
-        "SELECT media_id, CAST(bx AS INTEGER) AS bx, " +
-        "CAST(by AS INTEGER) AS by, CAST(mean AS BIGINT) AS mean FROM f")),
+        blockMeansSql)),
     // --- EXIF-ORIENTED crop search [ext]: a camera JPEG stores its
     // pixels rotated with tag 274 saying how to display them, and a crop
     // is taken from the DISPLAYED form (a screenshot of the photo) — so
@@ -2711,22 +2419,7 @@ private[queries] object MediaQueries {
         "(b // gw)*(b // gw)*(5 + doc_id % 19) + " +
         "(b % gw)*(b // gw)*(3 + doc_id % 13) + doc_id*17) % 196 AS v " +
         "FROM bb), " +
-        "cmp AS (SELECT l.doc_id, l.bx, l.by FROM bm l " +
-        "JOIN bm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "off AS (SELECT doc_id, gw, gh, " +
-        "unnest(range((gw - 7) * (gh - 7))) AS oi FROM dd), " +
-        "off2 AS (SELECT doc_id, oi % (gw - 7) AS ox, oi // (gw - 7) AS oy " +
-        "FROM off), " +
-        "wb AS (SELECT o.doc_id, o.ox, o.oy, " +
-        "(c.by - o.oy) * 7 + (c.bx - o.ox) AS j " +
-        "FROM off2 o JOIN cmp c ON c.doc_id = o.doc_id " +
-        "AND c.bx >= o.ox AND c.bx <= o.ox + 6 " +
-        "AND c.by >= o.oy AND c.by <= o.oy + 7), " +
-        "ifp AS MATERIALIZED (SELECT off2.doc_id, off2.ox, off2.oy, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM off2 LEFT JOIN wb ON off2.doc_id = wb.doc_id " +
-        "AND off2.ox = wb.ox AND off2.oy = wb.oy GROUP BY 1, 2, 3), " +
+        s"$patchPrintCtes, " +
         "cd AS (SELECT doc_id, doc_id % 4 AS crole, " +
         "doc_id % (8 + doc_id % 3 - 7) AS cox, " +
         "doc_id % (8 + doc_id % 2 - 7) AS coy " +
@@ -2740,16 +2433,7 @@ private[queries] object MediaQueries {
         "(cox + b % 8)*(coy + b // 8)*(3 + doc_id % 13) + doc_id*17) % 196 + 30 " +
         "ELSE ((b % 8)*(b % 8)*17 + (b // 8)*(b // 8)*21 + " +
         "(b % 8)*(b // 8)*27 + doc_id*5 + 77) % 196 END AS v FROM cbb), " +
-        "ccmp AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM cbm l " +
-        "JOIN cbm r ON l.doc_id = r.doc_id AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.v < r.v), " +
-        "cfp AS (SELECT cd.doc_id, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS ph " +
-        "FROM cd LEFT JOIN ccmp ON cd.doc_id = ccmp.doc_id GROUP BY 1) " +
-        "SELECT c.doc_id AS crop_id, i.doc_id AS image_id, " +
-        "CAST(i.ox AS INTEGER) AS ox, CAST(i.oy AS INTEGER) AS oy, " +
-        "CAST(bit_count(xor(c.ph, i.ph)) AS INTEGER) AS hamming " +
-        "FROM cfp c JOIN ifp i ON bit_count(xor(c.ph, i.ph)) <= 3")),
+        cropMatchSql)),
     // --- MJPEG (compressed) video decode [ext]: AVI's dominant codec —
     // one baseline JPEG per '00dc' chunk — joins the format-blind video
     // surface by COMPOSING the q252 JPEG decoder into the container
@@ -2777,26 +2461,9 @@ private[queries] object MediaQueries {
         "(g*37 + f*(11 + (g*17) % 97) + (k % 8)*(k % 8)*(4 + (g % 11)*5) + " +
         "(k // 8)*(k // 8)*(3 + (g % 13)*3) + " +
         "(k % 8)*(k // 8)*(2 + (g % 7)*9)) % 256 AS mean FROM b), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5")),
+        s"${frameDhashCtes("sf2")}, " +
+        s"${frameMatchCtes("b")} " +
+        videoPairSql)),
     // --- STEREO + LPC FLAC decode [ext]: the profile real-world FLAC
     // actually ships — all three stereo channel assignments (mid/side,
     // left/side, independent; the side subframe carries its spec'd 17th
@@ -2858,16 +2525,7 @@ private[queries] object MediaQueries {
         "g AS (SELECT media_id, width, height, " +
         "k % (width // 8) AS bx, k // (width // 8) AS by, " +
         "(media_id * 37 + k * (11 + media_id % 17)) % 256 AS gray FROM b) " +
-        "SELECT media_id, width, height, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by < height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_tr, " +
-        "CAST(64 * sum(CASE WHEN bx < width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_bl, " +
-        "CAST(64 * sum(CASE WHEN bx >= width // 16 AND by >= height // 16 " +
-        "THEN gray ELSE 0 END) AS BIGINT) AS q_br " +
-        "FROM g GROUP BY 1, 2, 3")),
+        jpegQuadrantSql)),
     // --- EXIF orientation: parse + APPLY [ext]: camera JPEGs store
     // pixels rotated with a tag 274 saying how to display them; the
     // engine walks the real APP1/TIFF structure (both byte orders),
@@ -3022,28 +2680,9 @@ private[queries] object MediaQueries {
         "(g*29 + f*17 + (k % w)*(3 + (g * 13) % 251) + " +
         "(k // w)*(2 + (g * 7) % 241)) % 256 AS val, " +
         "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, f, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3, 4), " +
-        "bits AS (SELECT l.doc_id, l.f, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND l.f = r.f AND r.by = l.by " +
-        "AND r.bx = l.bx + 1 WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT sf2.doc_id, sf2.f, " +
-        "coalesce(sum(CAST(1 AS BIGINT) << CAST(j AS INTEGER)), 0) AS dh " +
-        "FROM sf2 LEFT JOIN bits ON sf2.doc_id = bits.doc_id " +
-        "AND sf2.f = bits.f GROUP BY 1, 2), " +
-        "cnt AS (SELECT doc_id, count(*) AS n FROM sf2 GROUP BY 1), " +
-        "pmb AS (SELECT x.doc_id AS ma, y.doc_id AS mb, x.f AS fa, y.f AS fb " +
-        "FROM fp x JOIN fp y ON x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.dh, y.dh)) <= 3), " +
-        "aggb AS (SELECT ma, mb, count(DISTINCT fa) AS matched_a, " +
-        "count(DISTINCT fb) AS matched_b FROM pmb GROUP BY 1, 2) " +
-        "SELECT ma AS media_a, mb AS media_b, " +
-        "CAST(matched_a AS BIGINT) AS matched_a, " +
-        "CAST(matched_b AS BIGINT) AS matched_b, " +
-        "least(matched_a / ca.n, matched_b / cb.n) AS match_frac " +
-        "FROM aggb JOIN cnt ca ON aggb.ma = ca.doc_id " +
-        "JOIN cnt cb ON aggb.mb = cb.doc_id " +
-        "WHERE least(matched_a / ca.n, matched_b / cb.n) >= 0.5")),
+        s"$frameMeansCte, ${frameDhashCtes("sf2")}, " +
+        s"${frameMatchCtes("b")} " +
+        videoPairSql)),
     // --- MULTIMODAL curation artifact [ext]: the capstone composition —
     // an item survives iff it is the min-id canonical of the JOINT
     // text ∪ image ∪ audio near-dup graph (q238) AND passes the text
@@ -3081,10 +2720,7 @@ private[queries] object MediaQueries {
         "edges AS (SELECT doc_a AS a, doc_b AS b FROM tp " +
         "UNION SELECT doc_a, doc_b FROM ip " +
         "UNION SELECT doc_a, doc_b FROM ap), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "canon AS (SELECT dd.doc_id AS item_id FROM dd " +
         "LEFT JOIN compmap ON dd.doc_id = compmap.n " +
         "WHERE least(dd.doc_id, coalesce(mn, dd.doc_id)) = dd.doc_id), " +
@@ -3181,40 +2817,13 @@ private[queries] object MediaQueries {
       // the q220 energy-contour fingerprint arithmetic
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 3 AS g, " +
         "doc_id % 3 AS role FROM documents), " +
-        "dm AS (SELECT doc_id, g, role, " +
-        "CAST(128 + (g % 64) * 4 AS BIGINT) AS n FROM dd), " +
-        "s AS (SELECT doc_id, g, role, n, unnest(range(n)) AS p FROM dm), " +
-        "v AS (SELECT doc_id, (p * 57) // n AS wdx, " +
-        "abs(CASE WHEN role = 2 THEN ((g*41 + p*13 + 999) % 4096) - 2048 " +
-        "WHEN role = 1 AND p % 101 = 0 " +
-        "THEN ((g*17 + p*5) % 4096) - 2048 + 7 " +
-        "ELSE ((g*17 + p*5) % 4096) - 2048 END) AS av FROM s), " +
-        "e AS (SELECT doc_id, wdx, sum(av) AS energy FROM v GROUP BY 1, 2), " +
-        "bits AS (SELECT l.doc_id, l.wdx AS j FROM e l " +
-        "JOIN e r ON l.doc_id = r.doc_id AND r.wdx = l.wdx + 1 " +
-        "WHERE r.energy > l.energy), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS afp FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
+        s"${audioEnergyCtes("s")}, " +
+        s"${audioPrintCtes("fp AS MATERIALIZED")}, " +
         "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
         "JOIN fp y ON x.doc_id < y.doc_id AND x.doc_id % 2 = y.doc_id % 2 " +
         "WHERE bit_count(xor(x.afp, y.afp)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
-        "lab AS (SELECT fp.doc_id, " +
-        "least(fp.doc_id, coalesce(mn, fp.doc_id)) AS cid " +
-        "FROM fp LEFT JOIN compmap ON fp.doc_id = compmap.n), " +
-        "a1 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 0 AND cid = doc_id), " +
-        "c2 AS (SELECT doc_id FROM lab WHERE doc_id % 2 = 1 AND cid = doc_id), " +
-        "rej AS (SELECT DISTINCT c2.doc_id FROM c2 " +
-        "JOIN fp f2 ON c2.doc_id = f2.doc_id " +
-        "CROSS JOIN a1 JOIN fp f1 ON a1.doc_id = f1.doc_id " +
-        "WHERE bit_count(xor(f2.afp, f1.afp)) <= 3), " +
-        "adm AS (SELECT doc_id FROM a1 UNION ALL " +
-        "SELECT c2.doc_id FROM c2 LEFT JOIN rej USING (doc_id) " +
-        "WHERE rej.doc_id IS NULL) " +
+        s"$edgeComponentCtes, " +
+        s"${admitCtes("afp")} " +
         "SELECT adm.doc_id AS media_id, CAST(fp.afp AS BIGINT) AS dhash " +
         "FROM adm JOIN fp ON adm.doc_id = fp.doc_id")),
     // --- media curation artifact [ext]: the media twin of q223's
@@ -3245,28 +2854,12 @@ private[queries] object MediaQueries {
       // for canonical keepers + the per-pixel quality sums from the same
       // planted formula, gated at <= 1/16 dark
       ("WITH RECURSIVE dd AS (SELECT doc_id, doc_id // 2 AS g FROM documents), " +
-        "dm AS (SELECT doc_id, g, " +
-        "CAST(16 + (g % 5) * 4 AS BIGINT) AS w, " +
-        "CAST(12 + ((g * 3) % 5) * 4 AS BIGINT) AS h FROM dd), " +
-        "px AS (SELECT doc_id, g, w, h, unnest(range(w * h)) AS k FROM dm), " +
-        "v AS (SELECT doc_id, w, h, " +
-        "(g*29 + (k % w)*(3 + (g % 7) * 9) + (k // w)*(2 + (g % 5) * 7)) % 256 AS val, " +
-        "((k % w) * 8) // w AS bx, ((k // w) * 8) // h AS by FROM px), " +
-        "m AS (SELECT doc_id, bx, by, sum(val) // count(*) AS mean " +
-        "FROM v GROUP BY 1, 2, 3), " +
-        "bits AS (SELECT l.doc_id, l.by * 7 + l.bx AS j FROM m l " +
-        "JOIN m r ON l.doc_id = r.doc_id AND r.by = l.by AND r.bx = l.bx + 1 " +
-        "WHERE l.mean < r.mean), " +
-        "fp AS MATERIALIZED (SELECT dm.doc_id, coalesce(sum(CAST(1 AS BIGINT) << " +
-        "CAST(j AS INTEGER)), 0) AS dhash FROM dm " +
-        "LEFT JOIN bits ON dm.doc_id = bits.doc_id GROUP BY 1), " +
+        s"${stillImageCtes("v", "doc_id, w, h")}, " +
+        s"${stillDhashCtes("fp AS MATERIALIZED")}, " +
         "edges AS (SELECT x.doc_id AS a, y.doc_id AS b FROM fp x " +
         "JOIN fp y ON x.doc_id < y.doc_id " +
         "WHERE bit_count(xor(x.dhash, y.dhash)) <= 3), " +
-        "bi AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "compmap AS (SELECT n, min(m) AS mn FROM r GROUP BY n), " +
+        s"$edgeComponentCtes, " +
         "canon AS (SELECT fp.doc_id AS media_id FROM fp " +
         "LEFT JOIN compmap ON fp.doc_id = compmap.n " +
         "WHERE least(fp.doc_id, coalesce(mn, fp.doc_id)) = fp.doc_id), " +

@@ -10,6 +10,42 @@ import Common._
   * semantic dedup and decontamination. */
 private[queries] object SimQueries {
 
+  /** The portable 0-iteration IVF init (q176's replay) over `src(vec_id, v)`:
+    * `seeds` = its first 8 vectors in (md5, id) order, `dst` = every `e`
+    * vector's dot-identity distance to each seed. */
+  private def ivfSeedCtes(src: String): String =
+    s"ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM $src), " +
+      "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
+      "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
+      "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
+      "FROM e CROSS JOIN seeds s)"
+
+  /** `asn`: each vector's argmin cell over [[ivfSeedCtes]]' `dst`, ties to
+    * the lower cell. */
+  private val ivfAssignCte: String =
+    "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
+      "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1)"
+
+  /** q194's kNN candidates over [[ivfAssignCte]]: `pc` = each anchor's 2
+    * nearest cells, `sc` = the exact cosine to every other vector in them. */
+  private val knnPairCtes: String =
+    "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
+      "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
+      "sc AS (SELECT pc.anchor_id, a.vec_id AS neighbor_id, " +
+      s"${cosSql("p.v", "c.v")} AS cos_sim " +
+      "FROM pc JOIN asn a USING (cell) " +
+      "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
+      "WHERE a.vec_id != pc.anchor_id)"
+
+  /** q191's semantic-decontam result over `hits(train_id, bench_id,
+    * cos_sim)`: hit count and closest bench vector per train vector. */
+  private val decontamHitsSql: String =
+    "agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_hits FROM hits GROUP BY 1), " +
+      "best AS (SELECT train_id, bench_id, cos_sim FROM (SELECT *, " +
+      "row_number() OVER (PARTITION BY train_id ORDER BY cos_sim DESC, bench_id) AS rn FROM hits) WHERE rn = 1) " +
+      "SELECT best.train_id, CAST(bench_id AS BIGINT) AS closest_bench_id, " +
+      "round(cos_sim, 6) AS max_cos, n_bench_hits FROM best JOIN agg USING (train_id)"
+
   def specs: Seq[QuerySpec] = Seq(
     // --- similarity search [ext] ---
     QuerySpec("q28_cosine_topk", { (s, d) =>
@@ -18,7 +54,7 @@ private[queries] object SimQueries {
     },
       ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "s AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-        "list_inner_product(p.v, c.v) / (sqrt(list_inner_product(p.v, p.v)) * sqrt(list_inner_product(c.v, c.v))) AS cos_sim " +
+        s"${cosSql("p.v", "c.v")} AS cos_sim " +
         "FROM e p JOIN e c ON p.vec_id < 20 AND p.vec_id != c.vec_id), " +
         "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
         "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3")),
@@ -57,7 +93,7 @@ private[queries] object SimQueries {
       Similarity.cosineNearDupsBlocked(t(s, d, "embeddings"), "label", threshold = 0.4)),
       ("WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings) " +
         "SELECT vec_a, vec_b, cos_sim FROM (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b, " +
-        "list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) AS cos_sim " +
+        s"${cosSql("x.v", "y.v")} AS cos_sim " +
         "FROM e x JOIN e y ON x.label = y.label AND x.vec_id < y.vec_id) " +
         "WHERE cos_sim >= 0.4")),
     // --- per-label embedding centroids (IVF/cluster-summary primitive) ---
@@ -148,7 +184,7 @@ private[queries] object SimQueries {
       ("WITH RECURSIVE e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "pr AS (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b " +
         "FROM e x JOIN e y ON x.label = y.label AND x.vec_id < y.vec_id " +
-        "WHERE list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.4), " +
+        s"WHERE ${cosSql("x.v", "y.v")} >= 0.4), " +
         "und AS (SELECT vec_a AS src, vec_b AS dst FROM pr UNION ALL SELECT vec_b, vec_a FROM pr), " +
         "r AS (SELECT src AS node, src AS comp FROM und " +
         "UNION SELECT u.dst, r.comp FROM r JOIN und u ON u.src = r.node), " +
@@ -170,17 +206,11 @@ private[queries] object SimQueries {
       // identically: a - 2.0*b + c over sequential list_inner_products), then
       // q175's pair + closure pattern within each assigned cell
       ("WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
         "ec AS (SELECT e.vec_id, e.v, a.cell FROM e JOIN asn a USING (vec_id)), " +
         "pr AS (SELECT x.vec_id AS vec_a, y.vec_id AS vec_b " +
         "FROM ec x JOIN ec y ON x.cell = y.cell AND x.vec_id < y.vec_id " +
-        "WHERE list_inner_product(x.v, y.v) / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v))) >= 0.4), " +
+        s"WHERE ${cosSql("x.v", "y.v")} >= 0.4), " +
         "und AS (SELECT vec_a AS src, vec_b AS dst2 FROM pr UNION ALL SELECT vec_b, vec_a FROM pr), " +
         "r AS (SELECT src AS node, src AS comp FROM und " +
         "UNION SELECT u.dst2, r.comp FROM r JOIN und u ON u.src = r.node), " +
@@ -206,8 +236,6 @@ private[queries] object SimQueries {
       // and picks per probe by (score DESC, id) — every float op in the same
       // order as the Spark group loop
       {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
       val rounds = (2 to 4).map { i =>
         s"ms$i AS (SELECT c.probe_id, c.neighbor_id, c.cos_sim, c.v, " +
           s"max(${cosSql("c.v", "s.v")}) AS ms FROM cands c " +
@@ -227,13 +255,7 @@ private[queries] object SimQueries {
       // exact-cosine top-10 within the 3 probed cells; then the unchanged
       // 4-round greedy unroll
       "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
         "pc AS (SELECT vec_id AS probe_id, cell FROM (SELECT vec_id, cell, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst " +
         "WHERE vec_id < 20) WHERE rn <= 3), " +
@@ -278,17 +300,8 @@ private[queries] object SimQueries {
       // through parquet), so the oracle replays the q176 portable assignment,
       // ranks each probe's cells by the same dot-identity distance, and takes
       // the exact-cosine top-3 within the 3 probed cells
-      {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
+      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
         "pc AS (SELECT vec_id AS probe_id, cell FROM (SELECT vec_id, cell, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst " +
         "WHERE vec_id < 20) WHERE rn <= 3), " +
@@ -300,8 +313,7 @@ private[queries] object SimQueries {
         "SELECT probe_id, neighbor_id, round(cos_sim, 6) AS cos_sim, " +
         "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
-        "WHERE rn <= 3"
-    }),
+        "WHERE rn <= 3")),
     // --- incremental ANN index append, oracle-checked [ext]: build on the
     // A-slice (portable init), commit, appendToIndex the B-slice — the
     // returned cell assignments have survived the frozen-quantizer append
@@ -326,11 +338,7 @@ private[queries] object SimQueries {
       // covers every vector — incremental commit == this one declarative pass
       ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "ea AS (SELECT vec_id, v FROM e WHERE vec_id % 5 <> 0), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM ea), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s) " +
+        s"${ivfSeedCtes("ea")} " +
         "SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1")),
     // --- incremental novelty telemetry, oracle-checked [ext]: the
@@ -351,17 +359,8 @@ private[queries] object SimQueries {
         nProbe = 2, iters = 0, portableInit = true)),
       // hard-negative replay: the q176 portable assignment + probe-cell
       // ranking, cross-label filter inside the cell join, per-anchor top-2
-      {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
+      ("WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
         "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
         "sc AS (SELECT pc.anchor_id, a.vec_id AS negative_id, " +
@@ -372,8 +371,7 @@ private[queries] object SimQueries {
         "SELECT anchor_id, negative_id, round(cos_sim, 6) AS cos_sim, " +
         "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, negative_id) AS rn FROM sc) " +
-        "WHERE rn <= 2"
-    }),
+        "WHERE rn <= 2")),
     // --- semantic decontamination [ext]: train vectors within cosine 0.3
     // of ANY benchmark vector (hash-split like q172) — the embedding-space
     // complement of n-gram decontam: paraphrased leakage shares no 4-gram
@@ -388,20 +386,12 @@ private[queries] object SimQueries {
       // semantic-decontam replay: brute-force cosine join of the split halves
       // (q41's proven-portable cosine spelling), per-train argmax with the
       // same (cos DESC, bench_id) tie order as the Spark struct-max
-      {
-      val cosTb =
-        "list_inner_product(t.v, b.v) / (sqrt(list_inner_product(t.v, t.v)) * sqrt(list_inner_product(b.v, b.v)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "b AS (SELECT vec_id, v FROM e WHERE vec_id % 37 = 0), " +
         "t AS (SELECT vec_id, v FROM e WHERE vec_id % 37 <> 0), " +
-        s"hits AS (SELECT t.vec_id AS train_id, b.vec_id AS bench_id, $cosTb AS cos_sim " +
-        s"FROM t JOIN b ON $cosTb >= 0.3), " +
-        "agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_hits FROM hits GROUP BY 1), " +
-        "best AS (SELECT train_id, bench_id, cos_sim FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY train_id ORDER BY cos_sim DESC, bench_id) AS rn FROM hits) WHERE rn = 1) " +
-        "SELECT best.train_id, CAST(bench_id AS BIGINT) AS closest_bench_id, " +
-        "round(cos_sim, 6) AS max_cos, n_bench_hits FROM best JOIN agg USING (train_id)"
-    }),
+        s"hits AS (SELECT t.vec_id AS train_id, b.vec_id AS bench_id, ${cosSql("t.v", "b.v")} AS cos_sim " +
+        s"FROM t JOIN b ON ${cosSql("t.v", "b.v")} >= 0.3), " +
+        decontamHitsSql)),
     // --- kNN graph [ext]: every vector's top-k cosine neighbors via the
     // IVF cell join (q192's chain minus the label filter — hardNegatives
     // IS this graph with a cross-label filter inside the join); the
@@ -411,29 +401,13 @@ private[queries] object SimQueries {
         nProbe = 2, iters = 0, portableInit = true)),
       // kNN-graph replay: q192's portable assignment + probe-cell ranking
       // WITHOUT the label filter — hardNegatives is this graph label-filtered
-      {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
-        "sc AS (SELECT pc.anchor_id, a.vec_id AS neighbor_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.anchor_id) " +
+      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
+        s"$knnPairCtes " +
         "SELECT anchor_id AS vec_id, neighbor_id, round(cos_sim, 6) AS cos_sim, " +
         "CAST(rn AS INTEGER) AS rn FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
-        "WHERE rn <= 2"
-    }),
+        "WHERE rn <= 2")),
     // --- semantic decontamination, celled scale form [ext]: when the
     // benchmark registry exceeds broadcast size, train vectors keep their
     // single assigned cell (one cell shuffle) and bench vectors consider
@@ -455,10 +429,7 @@ private[queries] object SimQueries {
       // sqrt(2-2t) + radius (the triangle-inequality prune — exact, so this
       // replay IS the brute-force answer filtered through the same prune),
       // exact cosine verify on the ORIGINAL vectors, q191's aggregate
-      {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "t0 AS (SELECT vec_id, v, list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS vn " +
         "FROM e WHERE vec_id % 37 <> 0), " +
         "b0 AS (SELECT vec_id, v, list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS vn " +
@@ -480,12 +451,7 @@ private[queries] object SimQueries {
         s"hits AS (SELECT asn.train_id, bc.bench_id, ${cosSql("asn.v", "bc.v")} AS cos_sim " +
         "FROM asn JOIN bc USING (cell) " +
         s"WHERE ${cosSql("asn.v", "bc.v")} >= 0.3), " +
-        "agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_hits FROM hits GROUP BY 1), " +
-        "best AS (SELECT train_id, bench_id, cos_sim FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY train_id ORDER BY cos_sim DESC, bench_id) AS rn FROM hits) WHERE rn = 1) " +
-        "SELECT best.train_id, CAST(bench_id AS BIGINT) AS closest_bench_id, " +
-        "round(cos_sim, 6) AS max_cos, n_bench_hits FROM best JOIN agg USING (train_id)"
-    }),
+        decontamHitsSql)),
     // --- cluster-balanced diversity selection [ext]: IVF cells, most-
     // representative-first per cell, exact round-robin across cells — the
     // diversity-sampling complement of prioritySample; portable
@@ -499,11 +465,7 @@ private[queries] object SimQueries {
       // tie order, micro-quantized own-cell distance, per-cell
       // representativeness rank, round-robin (rep_rank, cell, vec_id) top-100
       ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
+        s"${ivfSeedCtes("e")}, " +
         "asn AS (SELECT vec_id, cell, CAST(floor(d * 1000000 + 0.5) AS BIGINT) AS dist_micro " +
         "FROM (SELECT vec_id, cell, d, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
@@ -519,11 +481,7 @@ private[queries] object SimQueries {
         nLists = 8, iters = 0, portableInit = true)),
       // outlier replay: q204's portable assignment, farthest-first top-20
       ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
+        s"${ivfSeedCtes("e")}, " +
         "asn AS (SELECT vec_id, cell, CAST(floor(d * 1000000 + 0.5) AS BIGINT) AS dist_micro " +
         "FROM (SELECT vec_id, cell, d, " +
         "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1) " +
@@ -544,35 +502,18 @@ private[queries] object SimQueries {
       // half-slice, thresholded on the 6-dp cosine, recursive min-id
       // closure over the symmetric edges (q43/q76's pattern), singletons
       // label themselves, size by window
-      {
-      def cosSql(a: String, b: String) =
-        s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-      "WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
+      ("WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
         "FROM embeddings WHERE vec_id % 2 = 0), " +
-        "ho AS (SELECT vec_id, v, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM e), " +
-        "seeds AS (SELECT CAST(rk - 1 AS INTEGER) AS cell, v AS sv FROM ho WHERE rk <= 8), " +
-        "dst AS (SELECT e.vec_id, s.cell, list_inner_product(e.v, e.v) " +
-        "- 2.0 * list_inner_product(e.v, s.sv) + list_inner_product(s.sv, s.sv) AS d " +
-        "FROM e CROSS JOIN seeds s), " +
-        "asn AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn = 1), " +
-        "pc AS (SELECT vec_id AS anchor_id, cell FROM (SELECT vec_id, cell, " +
-        "row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dst) WHERE rn <= 2), " +
-        "sc AS (SELECT pc.anchor_id, a.vec_id AS neighbor_id, " +
-        s"${cosSql("p.v", "c.v")} AS cos_sim " +
-        "FROM pc JOIN asn a USING (cell) " +
-        "JOIN e p ON p.vec_id = pc.anchor_id JOIN e c ON c.vec_id = a.vec_id " +
-        "WHERE a.vec_id != pc.anchor_id), " +
+        s"${ivfSeedCtes("e")}, $ivfAssignCte, " +
+        s"$knnPairCtes, " +
         "ed AS (SELECT anchor_id AS a, neighbor_id AS b FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY anchor_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM sc) " +
         "WHERE rn <= 2 AND round(cos_sim, 6) >= 0.2), " +
         "bi AS (SELECT a, b FROM ed UNION SELECT b, a FROM ed), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
+        s"$closureCte, " +
         "lbl AS (SELECT n AS vec_id, least(n, min(m)) AS cluster_id FROM r GROUP BY n), " +
         "allv AS (SELECT e.vec_id, coalesce(l.cluster_id, e.vec_id) AS cluster_id " +
         "FROM e LEFT JOIN lbl l ON e.vec_id = l.vec_id) " +
         "SELECT vec_id, cluster_id, " +
-        "CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size FROM allv"
-    }))
+        "CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size FROM allv")))
 }

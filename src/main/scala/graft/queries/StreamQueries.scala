@@ -12,6 +12,17 @@ import Common._
   * quota twin) plus the streaming corpus-ingest twin. */
 private[queries] object StreamQueries {
 
+  /** q82's funnel pass: `f` flags each event with whether its user viewed
+    * (`viewed_w`) or clicked (`clicked_w`) in the 600 s before it. */
+  private def funnelCtes: String =
+    "e AS (SELECT user_id, event_type, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
+      "f AS (SELECT user_id, event_type, " +
+      "max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) " +
+      "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS viewed_w, " +
+      "max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) " +
+      "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS clicked_w " +
+      "FROM e)"
+
   def specs: Seq[QuerySpec] = Seq(
     // --- events / JSON props (SURVEY §2.8 F10) ---
     QuerySpec("q18_events_by_type", ((s, d) => Events.byType(Tables.events(s, d))),
@@ -88,13 +99,7 @@ private[queries] object StreamQueries {
         "GROUP BY a.event_id")),
     // --- time-bounded conversion funnel (sequence analytics, one window) ---
     QuerySpec("q82_event_funnel", ((s, d) => Events.funnel(Tables.events(s, d))),
-      ("WITH e AS (SELECT user_id, event_type, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "f AS (SELECT user_id, event_type, " +
-        "max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS viewed_w, " +
-        "max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS clicked_w " +
-        "FROM e) " +
+      (s"WITH $funnelCtes " +
         "SELECT count(DISTINCT user_id) AS n_users, " +
         "count(DISTINCT CASE WHEN event_type = 'click' AND viewed_w = 1 THEN user_id END) AS n_view_then_click, " +
         "count(DISTINCT CASE WHEN event_type = 'purchase' AND clicked_w = 1 THEN user_id END) AS n_click_then_purchase " +
@@ -219,13 +224,7 @@ private[queries] object StreamQueries {
       Events.funnelPerUser(Tables.events(s, d))),
       // per-user funnel replay: q82's RANGE-frame pass, folded to the two
       // sticky per-user booleans instead of the global distinct counts
-      ("WITH e AS (SELECT user_id, event_type, epoch(CAST(ts AS TIMESTAMP)) AS sec FROM events), " +
-        "f AS (SELECT user_id, event_type, " +
-        "max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS viewed_w, " +
-        "max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) " +
-        "OVER (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 600 PRECEDING AND 1 PRECEDING) AS clicked_w " +
-        "FROM e) " +
+      (s"WITH $funnelCtes " +
         "SELECT user_id, " +
         "bool_or(event_type = 'click' AND viewed_w = 1) AS view_click, " +
         "bool_or(event_type = 'purchase' AND clicked_w = 1) AS click_purchase " +
@@ -280,11 +279,7 @@ private[queries] object StreamQueries {
         shingleCtes("kd") + s", $shinglePairCtes, " +
         "edges AS (SELECT doc_a, doc_b FROM sc WHERE doc_a % 2 = doc_b % 2 " +
         "AND (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
+        s"$docPairClosureCtes, $removedCte, " +
         "kept AS (SELECT kd.doc_id FROM kd " +
         "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
         "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +

@@ -66,29 +66,192 @@ private[queries] object TextQueries {
       "CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) AS BIGINT) " +
       "AS avg_nll_micronats FROM sc GROUP BY doc_id"
 
+  /** q208's perplexity-tail stage over the gated `gt`: the LM chain with
+    * CTE suffix 9, then `tl9` = the worst 30% of docs by avg nll (q201's
+    * per-mille cutoff). */
+  private def lmTailCtes: String =
+    lmScoreCtesOver("gt", "9") + ", " +
+      "agg9 AS (SELECT doc_id, CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) " +
+      "AS BIGINT) AS nll FROM sc9 GROUP BY doc_id), " +
+      "rk9 AS (SELECT doc_id, row_number() OVER (ORDER BY nll, doc_id) AS rk, " +
+      "count(*) OVER () AS n FROM agg9), " +
+      "tl9 AS (SELECT doc_id FROM rk9 WHERE rk > n - floor((n * 300 + 999) / 1000))"
+
+  /** DuckDB CTE chain replaying the Naive Bayes quality classifier trained
+    * on en vs non-en docs: ends at `sc$sfx` = (doc_id, w) per hashed gram,
+    * w in integer micronats. `src` must expose (doc_id, lang, text); `sfx`
+    * suffixes every CTE name as in [[lmScoreCtesOver]]. */
+  private def nbScoreCtesOver(src: String, sfx: String = ""): String =
+    s"t$sfx AS (SELECT doc_id, lang = 'en' AS is_p, lang <> 'en' AS is_n, " +
+      s"$toksSql AS toks FROM $src), " +
+      s"g$sfx AS (SELECT doc_id, is_p, is_n, " +
+      "CAST(('0x' || substr(md5(gr), 1, 15)) AS BIGINT) % 262144 AS bh " +
+      "FROM (SELECT doc_id, is_p, is_n, unnest(toks || " +
+      s"list_transform(range(len(toks) - 1), j -> toks[j + 1] || ' ' || toks[j + 2])) AS gr FROM t$sfx)), " +
+      s"bc$sfx AS (SELECT bh, CAST(sum(CASE WHEN is_p THEN 1 ELSE 0 END) AS BIGINT) AS cp, " +
+      "CAST(sum(CASE WHEN is_n THEN 1 ELSE 0 END) AS BIGINT) AS cn " +
+      s"FROM g$sfx WHERE is_p OR is_n GROUP BY 1), " +
+      s"tot$sfx AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM bc$sfx), " +
+      s"wt$sfx AS (SELECT bh, CAST(floor(ln(CAST(cp + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
+      "(CAST(cn + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS w " +
+      s"FROM bc$sfx CROSS JOIN tot$sfx), " +
+      s"sc$sfx AS (SELECT doc_id, coalesce(w, " +
+      "CAST(floor(ln(CAST(0 + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
+      "(CAST(0 + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT)) AS w " +
+      s"FROM g$sfx LEFT JOIN wt$sfx USING (bh) CROSS JOIN tot$sfx)"
+
+  /** q190's DSIR chain over `t(doc_id, is_t, toks)`: hashed bigram buckets
+    * `bk`, per-bucket log importance ratio `lr` in micronats, and the
+    * per-doc raw-pool bucket counts `dc`. */
+  private def dsirWeightCtes: String =
+    "g2 AS (SELECT doc_id, is_t, unnest(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')] " +
+      "ELSE list_transform(range(len(toks) - 1), i -> array_to_string(toks[i+1:i+2], ' ')) END) AS g FROM t), " +
+      "bk AS (SELECT doc_id, is_t, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b FROM g2), " +
+      "st AS (SELECT b, sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct, " +
+      "sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr FROM bk GROUP BY 1), " +
+      "tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st), " +
+      "lr AS (SELECT b, CAST(floor(ln( " +
+      "(CAST(ct + 1 AS DOUBLE) * CAST(tr + 1024 AS DOUBLE)) / " +
+      "(CAST(cr + 1 AS DOUBLE) * CAST(tt + 1024 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS lr " +
+      "FROM st CROSS JOIN tot), " +
+      "dc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt FROM bk WHERE NOT is_t GROUP BY 1, 2)"
+
+  /** q179's Gopher metric columns over a documents row, ending in a space
+    * so a FROM clause can follow. */
+  private def gopherMetricCols: String =
+    s"CAST(len($toksSql) AS BIGINT) AS n_words, " +
+      s"CAST(list_sum(list_transform($toksSql, t -> strlen(t))) AS BIGINT) AS sum_word_chars, " +
+      s"CAST(strlen($normSql) - strlen(replace($normSql, '#', '')) " +
+      s"+ (strlen($normSql) - strlen(replace($normSql, '...', ''))) // 3 AS BIGINT) AS n_symbols, " +
+      s"CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha_words, " +
+      s"CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
+      s"s -> list_contains($toksSql, s))) AS BIGINT) AS n_stop_words, " +
+      "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
+      "CAST(len(list_filter(string_split(text, chr(10)), " +
+      "l -> starts_with(trim(l), '-') OR starts_with(trim(l), '*'))) AS BIGINT) AS n_bullet_lines, " +
+      "CAST(len(list_filter(string_split(text, chr(10)), " +
+      "l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines "
+
+  /** q172's decontamination grams: `e(doc_id, g)` = each doc's distinct
+    * 4-grams, `b(g)` = those of the doc_id % 37 = 0 benchmark slice. */
+  private def benchGramCtes: String =
+    s"t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
+      "g4 AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')] " +
+      "ELSE list_transform(range(len(toks) - 3), i -> array_to_string(toks[i+1:i+4], ' ')) END AS gs FROM t), " +
+      "e AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM g4), " +
+      "b AS (SELECT DISTINCT g FROM e WHERE doc_id % 37 = 0)"
+
+  /** q182's directional containment over [[Common.shingleCtes]]' `e`: DF
+    * prune at 1000, shared-gram counts per pair, pairs where either side
+    * is >= 0.5 contained. Ends the query. */
+  private def containmentPairsSql: String =
+    "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
+      "k AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
+      "ksz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY 1), " +
+      "sh AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_shared " +
+      "FROM k x JOIN k y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
+      "SELECT doc_a, doc_b, n_shared, CAST(a.sz AS BIGINT) AS sz_a, CAST(b.sz AS BIGINT) AS sz_b, " +
+      "round(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), 6) AS containment_a, " +
+      "round(CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE), 6) AS containment_b " +
+      "FROM sh JOIN ksz a ON sh.doc_a = a.doc_id JOIN ksz b ON sh.doc_b = b.doc_id " +
+      "WHERE greatest(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), " +
+      "CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE)) >= 0.5"
+
+  /** The refinery's exact-dedup keepers `kd` of the gated `src(doc_id,
+    * source, text)` (min id per normalized text), with their brute-force
+    * shingle pair CTEs. */
+  private def refineryKeepersCtes(src: String): String =
+    s"nrm AS (SELECT doc_id, $normSql AS norm FROM $src), " +
+      "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
+      s"kd AS (SELECT $src.doc_id, $src.source, $src.text FROM $src JOIN k USING (doc_id)), " +
+      shingleCtes("kd") + s", $shinglePairCtes"
+
+  /** The near-dup closure over [[Common.shinglePairCtes]]' `sc`: `edges` =
+    * pairs at shingle Jaccard >= `threshold`, closed by
+    * [[Common.docPairClosureCtes]]. */
+  private def nearDupClosureCtes(threshold: String): String =
+    "edges AS (SELECT doc_a, doc_b FROM sc " +
+      s"WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= $threshold), " +
+      docPairClosureCtes
+
+  /** `kept`: the refinery keepers `kd` the near-dup closure did not remove. */
+  private def keptCte: String =
+    "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
+      "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL)"
+
+  /** The refinery's containment stage over `kept` (q182's arithmetic, DF
+    * prune at 1000): `crm` = the contained side of every pair at >= 0.8,
+    * the larger id when both sides are. */
+  private def containmentDropCtes: String =
+    "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
+      "cdf AS (SELECT g, count(*) AS df FROM ke GROUP BY 1), " +
+      "ck AS (SELECT ke.doc_id, ke.g FROM ke JOIN cdf USING (g) WHERE df <= 1000), " +
+      "csz AS (SELECT doc_id, count(*) AS csn FROM ck GROUP BY 1), " +
+      "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
+      "FROM ck x JOIN ck y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
+      "cpr AS (SELECT ca, cb, " +
+      "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
+      "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
+      "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
+      "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.8 AND contb >= 0.8 THEN cb " +
+      "WHEN conta >= 0.8 THEN ca ELSE cb END AS doc_id FROM cpr " +
+      "WHERE conta >= 0.8 OR contb >= 0.8)"
+
+  /** q94's chunk plan over `src(doc_id, n_tokens)`: 128-token windows at
+    * stride 96. Ends the query. */
+  private def chunkPlanSql(src: String): String =
+    "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
+      s"FROM $src, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
+      "WHERE n_tokens >= 1) " +
+      "SELECT doc_id, n_tokens, chunk_idx, " +
+      "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
+      "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c"
+
+  /** The refinery's tail over its survivors `src(doc_id, source, text)`:
+    * md5-rank source cap, then [[chunkPlanSql]]. Ends the query. */
+  private def capChunkSql(src: String): String =
+    "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
+      "row_number() OVER (PARTITION BY source " +
+      s"ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM $src) WHERE rn <= 1000000), " +
+      s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
+      chunkPlanSql("tt2")
+
+  /** q202's waterfill over per-source caps `ps$sfx(source, cap_tokens)`:
+    * `th$sfx.theta` = the level at which the capped sources fill `budget`
+    * tokens, null when the caps cannot. */
+  private def waterfillCtes(sfx: String, budget: Int): String =
+    s"rk$sfx AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
+      "count(*) OVER (ORDER BY cap_tokens, source " +
+      s"ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps$sfx), " +
+      s"th$sfx AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= $budget " +
+      s"THEN CAST($budget - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
+      s"AS theta FROM rk$sfx)"
+
+  /** q210's per-document plan over `t0(doc_id, source, nt)` and the
+    * allocation `al(source, t_tokens, alloc_tokens)`: whole epochs, plus one
+    * more copy while the seeded md5 order is under the remainder. Ends the
+    * query. */
+  private def samplePlanSql(al: String): String =
+    "pd AS (SELECT t0.doc_id, t0.source, t0.nt AS n_tokens, " +
+      s"$al.alloc_tokens // $al.t_tokens AS whole_epochs, " +
+      s"$al.alloc_tokens - ($al.alloc_tokens // $al.t_tokens) * $al.t_tokens AS rem_tokens " +
+      s"FROM t0 JOIN $al USING (source)), " +
+      "cb AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source " +
+      "ORDER BY md5('budget1' || CAST(doc_id AS VARCHAR)), doc_id " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM pd) " +
+      "SELECT doc_id, source, n_tokens, " +
+      "CAST(whole_epochs + CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END " +
+      "AS BIGINT) AS n_copies FROM cb " +
+      "WHERE whole_epochs + (CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END) > 0"
+
   /** Shared q212/q214 replay: hashed unigram+bigram gram stream (60-bit
     * md5 token hash folded mod 2^18), per-bucket Laplace log-odds
     * quantized once to micronats (double products of longs — the exact
     * Spark spelling), every doc scored by the exact long sum. q214's lake
     * save/load roundtrip must land exactly here. */
   private def nbClassifierSql =
-    s"WITH t AS (SELECT doc_id, lang = 'en' AS is_p, lang <> 'en' AS is_n, " +
-      s"$toksSql AS toks FROM documents), " +
-      "g AS (SELECT doc_id, is_p, is_n, " +
-      "CAST(('0x' || substr(md5(gr), 1, 15)) AS BIGINT) % 262144 AS bh " +
-      "FROM (SELECT doc_id, is_p, is_n, unnest(toks || " +
-      "list_transform(range(len(toks) - 1), j -> toks[j + 1] || ' ' || toks[j + 2])) AS gr FROM t)), " +
-      "bc AS (SELECT bh, CAST(sum(CASE WHEN is_p THEN 1 ELSE 0 END) AS BIGINT) AS cp, " +
-      "CAST(sum(CASE WHEN is_n THEN 1 ELSE 0 END) AS BIGINT) AS cn " +
-      "FROM g WHERE is_p OR is_n GROUP BY 1), " +
-      "tot AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM bc), " +
-      "wt AS (SELECT bh, CAST(floor(ln(CAST(cp + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-      "(CAST(cn + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS w " +
-      "FROM bc CROSS JOIN tot), " +
-      "sc AS (SELECT doc_id, coalesce(w, " +
-      "CAST(floor(ln(CAST(0 + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-      "(CAST(0 + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT)) AS w " +
-      "FROM g LEFT JOIN wt USING (bh) CROSS JOIN tot) " +
+    s"WITH ${nbScoreCtesOver("documents")} " +
       "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams, " +
       "CAST(sum(w) AS BIGINT) AS score_micronats, " +
       "CAST(floor(CAST(sum(w) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS avg_micronats " +
@@ -188,13 +351,7 @@ private[queries] object TextQueries {
         "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
         shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
         s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n) " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte " +
         "SELECT (SELECT count(*) FROM documents) AS n_input, " +
         "CAST((SELECT count(*) FROM k) - (SELECT count(*) FROM removed) AS BIGINT) AS n_kept")),
     // banded pigeonhole blocking == brute-force all-pairs hamming (exact
@@ -236,7 +393,7 @@ private[queries] object TextQueries {
         "dense AS (SELECT doc_id AS vec_id, " +
         "list_transform(range(256), i -> coalesce(map_extract(mp, i)[1], 0.0)) AS v FROM vec), " +
         "s AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id, " +
-        "list_inner_product(p.v, c.v) / (sqrt(list_inner_product(p.v, p.v)) * sqrt(list_inner_product(c.v, c.v))) AS cos_sim " +
+        s"${cosSql("p.v", "c.v")} AS cos_sim " +
         "FROM dense p JOIN dense c ON p.vec_id < 200 AND p.vec_id != c.vec_id), " +
         "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rn FROM s) " +
         "SELECT probe_id, neighbor_id, cos_sim, rn FROM r WHERE rn <= 3")),
@@ -312,12 +469,7 @@ private[queries] object TextQueries {
       TextFeatures.chunkPlan(t(s, d, "documents"))),
       (s"WITH t AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens " +
         "FROM documents), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM t, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c")),
+        chunkPlanSql("t"))),
     // --- greedy sequence packing per corpus source (running-sum window) ---
     QuerySpec("q95_sequence_packing", ((s, d) =>
       TextFeatures.packingPlan(t(s, d, "documents"))),
@@ -627,29 +779,9 @@ private[queries] object TextQueries {
         s"(SELECT doc_id, source, text, $toksSql AS toks FROM documents) " +
         "WHERE len(toks) >= 20 AND " +
         "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c")),
+        refineryKeepersCtes("gt") + ", " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte, $keptCte, " +
+        capChunkSql("kept"))),
     // --- benchmark decontamination [ext]: docs hash-split into a small
     // "benchmark" slice and the training rest; bench 4-gram hashes
     // broadcast, the train side is checked map-only (GPT-3 appendix-C
@@ -662,11 +794,7 @@ private[queries] object TextQueries {
     }),
       // full declarative replay of the broadcast n-gram decontamination:
       // distinct 4-grams per doc, bench slice's gram set, left-join count
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "g4 AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 3), i -> array_to_string(toks[i+1:i+4], ' ')) END AS gs FROM t), " +
-        "e AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM g4), " +
-        "b AS (SELECT DISTINCT g FROM e WHERE doc_id % 37 = 0) " +
+      (s"WITH $benchGramCtes " +
         "SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_ngrams, " +
         "CAST(count(b.g) AS BIGINT) AS n_contaminated, " +
         "CAST(count(b.g) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS contamination_ratio, " +
@@ -698,11 +826,7 @@ private[queries] object TextQueries {
     }),
       // decontaminate replay: q172's contaminated-id set, anti-joined away
       // from the training slice (the surviving corpus is the contract)
-      (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
-        "g4 AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 3), i -> array_to_string(toks[i+1:i+4], ' ')) END AS gs FROM t), " +
-        "e AS (SELECT DISTINCT doc_id, unnest(gs) AS g FROM g4), " +
-        "b AS (SELECT DISTINCT g FROM e WHERE doc_id % 37 = 0), " +
+      (s"WITH $benchGramCtes, " +
         "bad AS (SELECT DISTINCT e.doc_id FROM e JOIN b ON e.g = b.g WHERE e.doc_id % 37 <> 0) " +
         "SELECT d.doc_id, d.source, d.lang FROM documents d " +
         "WHERE d.doc_id % 37 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM bad)")),
@@ -713,18 +837,7 @@ private[queries] object TextQueries {
       // Gopher rule replay: exact integer metrics, integer-arithmetic rule
       // booleans (ratios only for the two reported rounded columns)
       (s"WITH m AS (SELECT doc_id, " +
-        s"CAST(len($toksSql) AS BIGINT) AS n_words, " +
-        s"CAST(list_sum(list_transform($toksSql, t -> strlen(t))) AS BIGINT) AS sum_word_chars, " +
-        s"CAST(strlen($normSql) - strlen(replace($normSql, '#', '')) " +
-        s"+ (strlen($normSql) - strlen(replace($normSql, '...', ''))) // 3 AS BIGINT) AS n_symbols, " +
-        s"CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha_words, " +
-        s"CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
-        s"s -> list_contains($toksSql, s))) AS BIGINT) AS n_stop_words, " +
-        "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> starts_with(trim(l), '-') OR starts_with(trim(l), '*'))) AS BIGINT) AS n_bullet_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines " +
+        gopherMetricCols +
         "FROM documents), " +
         "r AS (SELECT doc_id, n_words, " +
         "round(CAST(sum_word_chars AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS mean_word_len, " +
@@ -779,17 +892,7 @@ private[queries] object TextQueries {
       // string-gram join (Spark joins the xxhash64 keys; counts agree), one
       // division per direction — over the same odd half-slice as the query
       (s"WITH ${shingleCtes("(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1)")}, " +
-        "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
-        "k AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
-        "ksz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY 1), " +
-        "sh AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_shared " +
-        "FROM k x JOIN k y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
-        "SELECT doc_a, doc_b, n_shared, CAST(a.sz AS BIGINT) AS sz_a, CAST(b.sz AS BIGINT) AS sz_b, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), 6) AS containment_a, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE), 6) AS containment_b " +
-        "FROM sh JOIN ksz a ON sh.doc_a = a.doc_id JOIN ksz b ON sh.doc_b = b.doc_id " +
-        "WHERE greatest(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), " +
-        "CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE)) >= 0.5")),
+        containmentPairsSql)),
     // --- corpus novelty curve [ext]: per-doc fraction of shingles first
     // introduced by that doc (ingestion-order redundancy telemetry) ---
     QuerySpec("q183_gram_novelty", ((s, d) =>
@@ -813,17 +916,7 @@ private[queries] object TextQueries {
         shingleSize = 3, threshold = 0.5, maxDf = 1000, sketchK = 64)),
       // q182's SQL verbatim at the same parameters
       (s"WITH ${shingleCtes("documents")}, " +
-        "dfq AS (SELECT g, count(*) AS df FROM e GROUP BY 1), " +
-        "k AS (SELECT e.doc_id, e.g FROM e JOIN dfq USING (g) WHERE df <= 1000), " +
-        "ksz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY 1), " +
-        "sh AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_shared " +
-        "FROM k x JOIN k y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2) " +
-        "SELECT doc_a, doc_b, n_shared, CAST(a.sz AS BIGINT) AS sz_a, CAST(b.sz AS BIGINT) AS sz_b, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), 6) AS containment_a, " +
-        "round(CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE), 6) AS containment_b " +
-        "FROM sh JOIN ksz a ON sh.doc_a = a.doc_id JOIN ksz b ON sh.doc_b = b.doc_id " +
-        "WHERE greatest(CAST(n_shared AS DOUBLE) / CAST(a.sz AS DOUBLE), " +
-        "CAST(n_shared AS DOUBLE) / CAST(b.sz AS DOUBLE)) >= 0.5")),
+        containmentPairsSql)),
     // --- refinery with the containment stage [ext]: gate -> exact dedup ->
     // shingle near-dup closure -> drop embedded quotes (directional
     // containment, banded) -> cap -> chunk; the oracle replays every stage
@@ -852,44 +945,12 @@ private[queries] object TextQueries {
         s"(SELECT doc_id, source, text, $toksSql AS toks FROM documents WHERE doc_id % 2 = 0) " +
         "WHERE len(toks) >= 20 AND " +
         "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.98), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
-        "cdf AS (SELECT g, count(*) AS df FROM ke GROUP BY 1), " +
-        "ck AS (SELECT ke.doc_id, ke.g FROM ke JOIN cdf USING (g) WHERE df <= 1000), " +
-        "csz AS (SELECT doc_id, count(*) AS csn FROM ck GROUP BY 1), " +
-        "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
-        "FROM ck x JOIN ck y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-        "cpr AS (SELECT ca, cb, " +
-        "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
-        "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
-        "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
-        "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.8 AND contb >= 0.8 THEN cb " +
-        "WHEN conta >= 0.8 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "WHERE conta >= 0.8 OR contb >= 0.8), " +
+        refineryKeepersCtes("gt") + ", " +
+        s"${nearDupClosureCtes("0.98")}, $removedCte, $keptCte, " +
+        s"$containmentDropCtes, " +
         "kept2 AS (SELECT kept.doc_id, kept.source, kept.text FROM kept " +
         "LEFT JOIN crm ON kept.doc_id = crm.doc_id WHERE crm.doc_id IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept2) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c")),
+        capChunkSql("kept2"))),
     // --- Gopher-gated refinery [ext]: the production MassiveText filter
     // suite (q179's rules) actually gating the E2E pipeline; the oracle
     // swaps q169's basic gate for the integer-arithmetic rule conjunction.
@@ -908,18 +969,7 @@ private[queries] object TextQueries {
       // Gopher-gated refinery replay: q179's integer-arithmetic rule
       // conjunction as the gate, then q169's unchanged dedup/cap/chunk respell
       (s"WITH RECURSIVE gm AS (SELECT doc_id, source, text, " +
-        s"CAST(len($toksSql) AS BIGINT) AS n_words, " +
-        s"CAST(list_sum(list_transform($toksSql, t -> strlen(t))) AS BIGINT) AS sum_word_chars, " +
-        s"CAST(strlen($normSql) - strlen(replace($normSql, '#', '')) " +
-        s"+ (strlen($normSql) - strlen(replace($normSql, '...', ''))) // 3 AS BIGINT) AS n_symbols, " +
-        s"CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha_words, " +
-        s"CAST(len(list_filter(['the','be','to','of','and','that','have','with'], " +
-        s"s -> list_contains($toksSql, s))) AS BIGINT) AS n_stop_words, " +
-        "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> starts_with(trim(l), '-') OR starts_with(trim(l), '*'))) AS BIGINT) AS n_bullet_lines, " +
-        "CAST(len(list_filter(string_split(text, chr(10)), " +
-        "l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines " +
+        gopherMetricCols +
         "FROM documents WHERE doc_id % 2 = 1), " +
         "gt AS (SELECT doc_id, source, text FROM gm " +
         "WHERE n_words >= 50 AND n_words <= 100000 " +
@@ -927,29 +977,9 @@ private[queries] object TextQueries {
         "AND n_symbols * 10 <= n_words AND n_alpha_words * 5 >= n_words * 4 " +
         "AND n_stop_words >= 1 " +
         "AND n_bullet_lines * 10 <= n_lines * 9 AND n_ellipsis_lines * 10 <= n_lines * 3), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM gt), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT gt.doc_id, gt.source, gt.text FROM gt JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c")),
+        refineryKeepersCtes("gt") + ", " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte, $keptCte, " +
+        capChunkSql("kept"))),
     // --- END-TO-END curation artifact [ext]: the composition endgame — the
     // FULL refinery (basic gate + CCNet LM tail drop + learned NB
     // classifier + exact/shingle near-dup + containment + cap) feeds
@@ -1036,31 +1066,10 @@ private[queries] object TextQueries {
         "WHERE doc_id % 8 = 1) " +
         "WHERE len(toks) >= 20 AND " +
         "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        lmScoreCtesOver("gt", "9") + ", " +
-        "agg9 AS (SELECT doc_id, CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) " +
-        "AS BIGINT) AS nll FROM sc9 GROUP BY doc_id), " +
-        "rk9 AS (SELECT doc_id, row_number() OVER (ORDER BY nll, doc_id) AS rk, " +
-        "count(*) OVER () AS n FROM agg9), " +
-        "tl9 AS (SELECT doc_id FROM rk9 WHERE rk > n - floor((n * 300 + 999) / 1000)), " +
+        s"$lmTailCtes, " +
         "lmk AS MATERIALIZED (SELECT gt.doc_id, gt.source, gt.lang, gt.text FROM gt " +
         "LEFT JOIN tl9 ON gt.doc_id = tl9.doc_id WHERE tl9.doc_id IS NULL), " +
-        s"tn AS (SELECT doc_id, lang = 'en' AS is_p, lang <> 'en' AS is_n, " +
-        s"$toksSql AS toks FROM lmk), " +
-        "gn AS (SELECT doc_id, is_p, is_n, " +
-        "CAST(('0x' || substr(md5(gr), 1, 15)) AS BIGINT) % 262144 AS bh " +
-        "FROM (SELECT doc_id, is_p, is_n, unnest(toks || " +
-        "list_transform(range(len(toks) - 1), j -> toks[j + 1] || ' ' || toks[j + 2])) AS gr FROM tn)), " +
-        "bcn AS (SELECT bh, CAST(sum(CASE WHEN is_p THEN 1 ELSE 0 END) AS BIGINT) AS cp, " +
-        "CAST(sum(CASE WHEN is_n THEN 1 ELSE 0 END) AS BIGINT) AS cn " +
-        "FROM gn WHERE is_p OR is_n GROUP BY 1), " +
-        "totn AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM bcn), " +
-        "wtn AS (SELECT bh, CAST(floor(ln(CAST(cp + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-        "(CAST(cn + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS w " +
-        "FROM bcn CROSS JOIN totn), " +
-        "scn AS (SELECT doc_id, coalesce(w, " +
-        "CAST(floor(ln(CAST(0 + 1 AS DOUBLE) * CAST(nn + 262144 AS DOUBLE) / " +
-        "(CAST(0 + 1 AS DOUBLE) * CAST(np + 262144 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT)) AS w " +
-        "FROM gn LEFT JOIN wtn USING (bh) CROSS JOIN totn), " +
+        nbScoreCtesOver("lmk", "n") + ", " +
         "avn AS (SELECT doc_id, CAST(floor(CAST(sum(w) AS DOUBLE) / count(*) + 0.5) " +
         "AS BIGINT) AS avg_m FROM scn GROUP BY doc_id), " +
         "badn AS (SELECT lmk.doc_id FROM lmk JOIN avn USING (doc_id) " +
@@ -1071,28 +1080,10 @@ private[queries] object TextQueries {
         "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
         "kd AS MATERIALIZED (SELECT clfk.doc_id, clfk.source, clfk.text FROM clfk JOIN k USING (doc_id)), " +
         shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte, " +
         "kept AS MATERIALIZED (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
         "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "ke AS (SELECT e.doc_id, e.g FROM e JOIN kept USING (doc_id)), " +
-        "cdf AS (SELECT g, count(*) AS df FROM ke GROUP BY 1), " +
-        "ck AS (SELECT ke.doc_id, ke.g FROM ke JOIN cdf USING (g) WHERE df <= 1000), " +
-        "csz AS (SELECT doc_id, count(*) AS csn FROM ck GROUP BY 1), " +
-        "csh AS (SELECT x.doc_id AS ca, y.doc_id AS cb, count(*) AS ns " +
-        "FROM ck x JOIN ck y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2), " +
-        "cpr AS (SELECT ca, cb, " +
-        "CAST(ns AS DOUBLE) / CAST(a.csn AS DOUBLE) AS conta, " +
-        "CAST(ns AS DOUBLE) / CAST(b.csn AS DOUBLE) AS contb " +
-        "FROM csh JOIN csz a ON ca = a.doc_id JOIN csz b ON cb = b.doc_id), " +
-        "crm AS (SELECT DISTINCT CASE WHEN conta >= 0.8 AND contb >= 0.8 THEN cb " +
-        "WHEN conta >= 0.8 THEN ca ELSE cb END AS doc_id FROM cpr " +
-        "WHERE conta >= 0.8 OR contb >= 0.8), " +
+        s"$containmentDropCtes, " +
         "kept2 AS MATERIALIZED (SELECT kept.doc_id, kept.source, kept.text FROM kept " +
         "LEFT JOIN crm ON kept.doc_id = crm.doc_id WHERE crm.doc_id IS NULL), " +
         "tr AS MATERIALIZED (SELECT doc_id, source, text FROM kept2 " +
@@ -1105,13 +1096,7 @@ private[queries] object TextQueries {
         "psq AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens, " +
         "CAST(floor(CAST(sum(n_tokens) AS DOUBLE) * 1.0) AS BIGINT) AS cap_tokens " +
         "FROM fq GROUP BY 1), " +
-        "rkq AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM psq), " +
-        "thq AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 2600 " +
-        "THEN CAST(2600 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rkq), " +
+        s"${waterfillCtes("q", 2600)}, " +
         "alq AS (SELECT source, least(cap_tokens, " +
         "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
         "FROM rkq CROSS JOIN thq), " +
@@ -1125,27 +1110,11 @@ private[queries] object TextQueries {
         "ps2 AS (SELECT source, CAST(sum(nt) AS BIGINT) AS t_tokens, " +
         "CAST(floor(CAST(sum(nt) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
         "FROM t0 GROUP BY 1), " +
-        "rk2 AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps2), " +
-        "th2 AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 4000 " +
-        "THEN CAST(4000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk2), " +
+        s"${waterfillCtes("2", 4000)}, " +
         "al2 AS (SELECT source, t_tokens, least(cap_tokens, " +
         "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
         "FROM rk2 CROSS JOIN th2), " +
-        "pd AS (SELECT t0.doc_id, t0.source, t0.nt AS n_tokens, " +
-        "al2.alloc_tokens // al2.t_tokens AS whole_epochs, " +
-        "al2.alloc_tokens - (al2.alloc_tokens // al2.t_tokens) * al2.t_tokens AS rem_tokens " +
-        "FROM t0 JOIN al2 USING (source)), " +
-        "cb AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source " +
-        "ORDER BY md5('budget1' || CAST(doc_id AS VARCHAR)), doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM pd) " +
-        "SELECT doc_id, source, n_tokens, " +
-        "CAST(whole_epochs + CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END " +
-        "AS BIGINT) AS n_copies FROM cb " +
-        "WHERE whole_epochs + (CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END) > 0")),
+        samplePlanSql("al2"))),
     // --- DSIR importance weights [ext]: hashed-n-gram bag models of the
     // target slice (lang = en) vs the raw pool, per-doc log importance
     // weight as an exact micronat long sum — the published
@@ -1164,17 +1133,7 @@ private[queries] object TextQueries {
       // same exact long count×micronat sums
       (s"WITH t AS (SELECT doc_id, lang = 'en' AS is_t, $toksSql AS toks " +
         "FROM documents WHERE doc_id % 2 = 0), " +
-        "g2 AS (SELECT doc_id, is_t, unnest(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 1), i -> array_to_string(toks[i+1:i+2], ' ')) END) AS g FROM t), " +
-        "bk AS (SELECT doc_id, is_t, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b FROM g2), " +
-        "st AS (SELECT b, sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct, " +
-        "sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr FROM bk GROUP BY 1), " +
-        "tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st), " +
-        "lr AS (SELECT b, CAST(floor(ln( " +
-        "(CAST(ct + 1 AS DOUBLE) * CAST(tr + 1024 AS DOUBLE)) / " +
-        "(CAST(cr + 1 AS DOUBLE) * CAST(tt + 1024 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS lr " +
-        "FROM st CROSS JOIN tot), " +
-        "dc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt FROM bk WHERE NOT is_t GROUP BY 1, 2) " +
+        s"$dsirWeightCtes " +
         "SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_grams, " +
         "CAST(sum(cnt * lr.lr) AS BIGINT) AS w_micronats " +
         "FROM dc JOIN lr USING (b) GROUP BY doc_id")),
@@ -1190,17 +1149,7 @@ private[queries] object TextQueries {
       // quantized Gumbel key from the same seeded md5-prefix u as q157,
       // exact long-sum selection key, (key DESC, doc_id) top-150
       (s"WITH t AS (SELECT doc_id, lang = 'en' AS is_t, $toksSql AS toks FROM documents), " +
-        "g2 AS (SELECT doc_id, is_t, unnest(CASE WHEN len(toks) < 2 THEN [array_to_string(toks, ' ')] " +
-        "ELSE list_transform(range(len(toks) - 1), i -> array_to_string(toks[i+1:i+2], ' ')) END) AS g FROM t), " +
-        "bk AS (SELECT doc_id, is_t, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b FROM g2), " +
-        "st AS (SELECT b, sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct, " +
-        "sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr FROM bk GROUP BY 1), " +
-        "tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM st), " +
-        "lr AS (SELECT b, CAST(floor(ln( " +
-        "(CAST(ct + 1 AS DOUBLE) * CAST(tr + 1024 AS DOUBLE)) / " +
-        "(CAST(cr + 1 AS DOUBLE) * CAST(tt + 1024 AS DOUBLE))) * 1000000 + 0.5) AS BIGINT) AS lr " +
-        "FROM st CROSS JOIN tot), " +
-        "dc AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt FROM bk WHERE NOT is_t GROUP BY 1, 2), " +
+        s"$dsirWeightCtes, " +
         "w AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_grams, " +
         "CAST(sum(cnt * lr.lr) AS BIGINT) AS w_micronats " +
         "FROM dc JOIN lr USING (b) GROUP BY doc_id), " +
@@ -1261,12 +1210,7 @@ private[queries] object TextQueries {
         "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
         shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
         s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
+        s"${nearDupClosureCtes("0.8")}, " +
         "compmap AS (SELECT n AS doc_id, min(m) AS mn FROM r GROUP BY n), " +
         "comp AS (SELECT k.doc_id, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
         "FROM k LEFT JOIN compmap USING (doc_id)), " +
@@ -1297,12 +1241,7 @@ private[queries] object TextQueries {
         "k AS (SELECT keeper AS doc_id FROM k2), " +
         shingleCtes("(SELECT d.doc_id, d.text FROM documents d JOIN k USING (doc_id))") +
         s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
+        s"${nearDupClosureCtes("0.8")}, " +
         "compmap AS (SELECT n AS kdoc, min(m) AS mn FROM r GROUP BY n), " +
         "comp AS (SELECT k.doc_id AS keeper, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
         "FROM k LEFT JOIN compmap ON k.doc_id = compmap.kdoc), " +
@@ -1354,13 +1293,7 @@ private[queries] object TextQueries {
         "ps AS (SELECT source, CAST(sum(n) AS BIGINT) AS t_tokens, " +
         "CAST(floor(CAST(sum(n) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
         "FROM t GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 49000 " +
-        "THEN CAST(49000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
+        s"${waterfillCtes("", 49000)}, " +
         "al AS (SELECT source, t_tokens, cap_tokens, " +
         "least(cap_tokens, CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) " +
         "AS BIGINT)) AS alloc_tokens, theta IS NOT NULL AS budget_met " +
@@ -1418,13 +1351,7 @@ private[queries] object TextQueries {
         "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
         shingleCtes("(SELECT d.doc_id, d.text FROM docs0 d JOIN k USING (doc_id))") +
         s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte, " +
         "surv AS (SELECT k.doc_id FROM k " +
         "LEFT JOIN removed ON k.doc_id = removed.n WHERE removed.n IS NULL), " +
         s"tok AS (SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS nt FROM docs0), " +
@@ -1508,10 +1435,7 @@ private[queries] object TextQueries {
         "edges AS (SELECT doc_a, doc_b FROM sc " +
         "JOIN k ka ON sc.doc_a = ka.doc_id JOIN k kb ON sc.doc_b = kb.doc_id " +
         "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
+        s"$docPairClosureCtes, " +
         "compmap AS (SELECT n AS kdoc, min(m) AS mn FROM r GROUP BY n), " +
         "comp AS (SELECT k.doc_id AS keeper, least(k.doc_id, coalesce(mn, k.doc_id)) AS cluster_id " +
         "FROM k LEFT JOIN compmap ON k.doc_id = compmap.kdoc), " +
@@ -1568,13 +1492,7 @@ private[queries] object TextQueries {
         "ps AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens, " +
         "CAST(floor(CAST(sum(n_tokens) AS DOUBLE) * 1.0) AS BIGINT) AS cap_tokens " +
         "FROM f GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 26000 " +
-        "THEN CAST(26000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
+        s"${waterfillCtes("", 26000)}, " +
         "al AS (SELECT source, least(cap_tokens, " +
         "CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) AS BIGINT)) AS alloc_tokens " +
         "FROM rk CROSS JOIN th), " +
@@ -1617,27 +1535,11 @@ private[queries] object TextQueries {
         "ps AS (SELECT source, CAST(sum(nt) AS BIGINT) AS t_tokens, " +
         "CAST(floor(CAST(sum(nt) AS DOUBLE) * 2.0) AS BIGINT) AS cap_tokens " +
         "FROM t0 GROUP BY 1), " +
-        "rk AS (SELECT *, coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix_excl, " +
-        "count(*) OVER (ORDER BY cap_tokens, source " +
-        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS remaining FROM ps), " +
-        "th AS (SELECT max(CASE WHEN prefix_excl + remaining * cap_tokens >= 49000 " +
-        "THEN CAST(49000 - prefix_excl AS DOUBLE) / CAST(remaining AS DOUBLE) END) " +
-        "AS theta FROM rk), " +
+        s"${waterfillCtes("", 49000)}, " +
         "al AS (SELECT source, t_tokens, " +
         "least(cap_tokens, CAST(floor(coalesce(theta, CAST(cap_tokens AS DOUBLE))) " +
         "AS BIGINT)) AS alloc_tokens FROM rk CROSS JOIN th), " +
-        "pd AS (SELECT t0.doc_id, t0.source, t0.nt AS n_tokens, " +
-        "al.alloc_tokens // al.t_tokens AS whole_epochs, " +
-        "al.alloc_tokens - (al.alloc_tokens // al.t_tokens) * al.t_tokens AS rem_tokens " +
-        "FROM t0 JOIN al USING (source)), " +
-        "cb AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY source " +
-        "ORDER BY md5('budget1' || CAST(doc_id AS VARCHAR)), doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before FROM pd) " +
-        "SELECT doc_id, source, n_tokens, " +
-        "CAST(whole_epochs + CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END " +
-        "AS BIGINT) AS n_copies FROM cb " +
-        "WHERE whole_epochs + (CASE WHEN cum_before < rem_tokens THEN 1 ELSE 0 END) > 0")),
+        samplePlanSql("al"))),
     // --- LM serving lifecycle, oracle-checked [ext]: train the bigram LM
     // on the en slice, SAVE it to a lake (bigram/unigram/meta tables),
     // LOAD it back, score the non-en pool against the loaded model — the
@@ -1676,35 +1578,10 @@ private[queries] object TextQueries {
         "WHERE doc_id % 2 = 0) " +
         "WHERE len(toks) >= 20 AND " +
         "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE) >= 0.2), " +
-        lmScoreCtesOver("gt", "9") + ", " +
-        "agg9 AS (SELECT doc_id, CAST(floor(CAST(-sum(lp) AS DOUBLE) / count(*) + 0.5) " +
-        "AS BIGINT) AS nll FROM sc9 GROUP BY doc_id), " +
-        "rk9 AS (SELECT doc_id, row_number() OVER (ORDER BY nll, doc_id) AS rk, " +
-        "count(*) OVER () AS n FROM agg9), " +
-        "tl9 AS (SELECT doc_id FROM rk9 WHERE rk > n - floor((n * 300 + 999) / 1000)), " +
+        s"$lmTailCtes, " +
         "lmk AS (SELECT gt.doc_id, gt.source, gt.text FROM gt " +
         "LEFT JOIN tl9 ON gt.doc_id = tl9.doc_id WHERE tl9.doc_id IS NULL), " +
-        s"nrm AS (SELECT doc_id, $normSql AS norm FROM lmk), " +
-        "k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY norm), " +
-        "kd AS (SELECT lmk.doc_id, lmk.source, lmk.text FROM lmk JOIN k USING (doc_id)), " +
-        shingleCtes("kd") + s", $shinglePairCtes, " +
-        "edges AS (SELECT doc_a, doc_b FROM sc " +
-        "WHERE (CASE WHEN u = 0 THEN 1.0 ELSE i / u END) >= 0.8), " +
-        "bi AS (SELECT doc_a AS a, doc_b AS b FROM edges " +
-        "UNION ALL SELECT doc_b, doc_a FROM edges), " +
-        "r(n, m) AS (SELECT a, b FROM bi " +
-        "UNION SELECT r.n, bi.b FROM r JOIN bi ON bi.a = r.m), " +
-        "removed AS (SELECT n FROM (SELECT n, min(m) AS mn FROM r GROUP BY n) WHERE mn < n), " +
-        "kept AS (SELECT kd.doc_id, kd.source, kd.text FROM kd " +
-        "LEFT JOIN removed ON kd.doc_id = removed.n WHERE removed.n IS NULL), " +
-        "capped AS (SELECT doc_id, text FROM (SELECT doc_id, text, " +
-        "row_number() OVER (PARTITION BY source " +
-        "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM kept) WHERE rn <= 1000000), " +
-        s"tt2 AS (SELECT doc_id, CAST(len($toksSql) AS INTEGER) AS n_tokens FROM capped), " +
-        "c AS (SELECT doc_id, n_tokens, CAST(i AS INTEGER) AS chunk_idx " +
-        "FROM tt2, unnest(generate_series(0, (n_tokens - 1) // 96)) AS u(i) " +
-        "WHERE n_tokens >= 1) " +
-        "SELECT doc_id, n_tokens, chunk_idx, " +
-        "CAST(chunk_idx * 96 AS INTEGER) AS start_tok, " +
-        "CAST(least(128, n_tokens - chunk_idx * 96) AS INTEGER) AS chunk_len FROM c")))
+        refineryKeepersCtes("lmk") + ", " +
+        s"${nearDupClosureCtes("0.8")}, $removedCte, $keptCte, " +
+        capChunkSql("kept"))))
 }

@@ -23,6 +23,13 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(rows.filter(_.oracleSql.trim.isEmpty).map(_.name).isEmpty)
   }
 
+  test("no oracle interpolates an unset fragment") {
+    // an oracle fragment read before its val is set interpolates as "null";
+    // the oracles spell SQL's NULL in upper case only
+    val unset = "\\bnull\\b".r
+    assert(rows.filter(r => unset.findFirstIn(r.oracleSql).isDefined).map(_.name).isEmpty)
+  }
+
   test("queries and oracleSql views share one key set") {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
     assert(SparkEntry.queries.keySet === rows.map(_.name).toSet)
