@@ -1006,38 +1006,53 @@ private[graft] object Jpeg {
     0
   }
 
-  /** Decode + APPLY the EXIF orientation: returns the image AS DISPLAYED
-    * (dims swap for orientations 5–8). Orientation 0 (absent) and 1 are
-    * the identity. The source-coordinate table is the published EXIF
-    * tag-274 semantics. */
-  def decodeRgbOriented(id: Long, p: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    val (w, h, rgb) = decodeRgb(id, p)
-    val o = exifOrientation(p)
-    if (o <= 1) return (w, h, o, rgb)
+  /** The EXIF tag-274 source-coordinate table (the published
+    * semantics): the STORED pixel (sx, sy) that displayed pixel (x, y)
+    * shows under orientation `o` (1–8), for a stored `w`×`h` image —
+    * the displayed dims swap for 5–8. */
+  def orientSource(o: Int, w: Int, h: Int, x: Int, y: Int): (Int, Int) =
+    o match {
+      case 1 => (x, y)
+      case 2 => (w - 1 - x, y)
+      case 3 => (w - 1 - x, h - 1 - y)
+      case 4 => (x, h - 1 - y)
+      case 5 => (y, x)
+      case 6 => (y, h - 1 - x)
+      case 7 => (w - 1 - y, h - 1 - x)
+      case _ => (w - 1 - y, x) // 8
+    }
+
+  /** Apply orientation `o` to a decoded `w`×`h` image of `bpp`-byte
+    * interleaved pixels: the image as displayed, with its dims. */
+  private[multimodal] def orientPixels(w: Int, h: Int, px: Array[Byte],
+                                       bpp: Int,
+                                       o: Int): (Int, Int, Array[Byte]) = {
     val swap = o >= 5
     val dw = if (swap) h else w
     val dh = if (swap) w else h
-    val out = new Array[Byte](3 * dw * dh)
+    val out = new Array[Byte](bpp * dw * dh)
     var y = 0
     while (y < dh) {
       var x = 0
       while (x < dw) {
-        val (sx, sy) = o match {
-          case 2 => (w - 1 - x, y)
-          case 3 => (w - 1 - x, h - 1 - y)
-          case 4 => (x, h - 1 - y)
-          case 5 => (y, x)
-          case 6 => (y, h - 1 - x)
-          case 7 => (w - 1 - y, h - 1 - x)
-          case _ => (w - 1 - y, x) // 8
-        }
-        val so = 3 * (sy * w + sx)
-        val dOff = 3 * (y * dw + x)
-        out(dOff) = rgb(so); out(dOff + 1) = rgb(so + 1); out(dOff + 2) = rgb(so + 2)
+        val (sx, sy) = orientSource(o, w, h, x, y)
+        System.arraycopy(px, bpp * (sy * w + sx), out, bpp * (y * dw + x), bpp)
         x += 1
       }
       y += 1
     }
+    (dw, dh, out)
+  }
+
+  /** Decode + APPLY the EXIF orientation: returns the image AS DISPLAYED
+    * (dims swap for orientations 5–8). Orientation 0 (absent) and 1 are
+    * the identity. The source-coordinate table is the published EXIF
+    * tag-274 semantics ([[orientSource]]). */
+  def decodeRgbOriented(id: Long, p: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
+    val (w, h, rgb) = decodeRgb(id, p)
+    val o = exifOrientation(p)
+    if (o <= 1) return (w, h, o, rgb)
+    val (dw, dh, out) = orientPixels(w, h, rgb, 3, o)
     (dw, dh, o, out)
   }
 
@@ -1150,6 +1165,72 @@ private[graft] object Jpeg {
     q
   }
 
+  /** The header segments both fixture encoders write: SOI, JFIF APP0,
+    * the fixture DQT, the frame header (`sofMarker` C0 baseline / C2
+    * progressive, one HV sampling byte per component in `hv`), the DC +
+    * AC DHT, and DRI when `restartInterval` > 0. */
+  private def writeHeaders(out: java.io.ByteArrayOutputStream, sofMarker: Int,
+                           width: Int, height: Int, hv: Array[Int],
+                           restartInterval: Int): Unit = {
+    def u8(v: Int): Unit = out.write(v & 0xFF)
+    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
+    // SOI + JFIF APP0
+    u8(0xFF); u8(0xD8)
+    u8(0xFF); u8(0xE0); u16(16)
+    out.write("JFIF".getBytes("US-ASCII")); u8(0)
+    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
+    // DQT (table 0, natural order re-zigzagged on write)
+    u8(0xFF); u8(0xDB); u16(2 + 65); u8(0x00)
+    var k = 0
+    while (k < 64) { u8(FixtureQuant(Zigzag(k))); k += 1 }
+    u8(0xFF); u8(sofMarker); u16(8 + 3 * hv.length); u8(8)
+    u16(height); u16(width); u8(hv.length)
+    var c = 0
+    while (c < hv.length) { u8(c + 1); u8(hv(c)); u8(0); c += 1 }
+    // DHT: DC table 0 + AC table 0
+    val dcSpec = dcTableSpec
+    val acSpec = acTableSpec
+    u8(0xFF); u8(0xC4)
+    u16(2 + (1 + 16 + dcSpec._2.length) + (1 + 16 + acSpec._2.length))
+    u8(0x00); dcSpec._1.foreach(u8); out.write(dcSpec._2)
+    u8(0x10); acSpec._1.foreach(u8); out.write(acSpec._2)
+    if (restartInterval > 0) { u8(0xFF); u8(0xDD); u16(4); u16(restartInterval) }
+  }
+
+  /** One DC difference: its category's Huffman code, then the magnitude
+    * bits (one's-complement for negatives). */
+  private def writeDcDiff(bw: BitWriter, dcCodes: Map[Int, (Int, Int)],
+                          diff: Int): Unit = {
+    val s = category(diff)
+    val (dcCode, dcLen) = dcCodes(s)
+    bw.write(dcCode, dcLen)
+    if (s > 0)
+      bw.write(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+  }
+
+  /** One nonzero AC coefficient `v` after `run` zeros: a ZRL code per 16
+    * zeros, then the (run, size) code and the magnitude bits. */
+  private def writeAc(bw: BitWriter, acCodes: Map[Int, (Int, Int)],
+                      run0: Int, v: Int): Unit = {
+    var run = run0
+    while (run > 15) {
+      val (zc, zl) = acCodes(0xF0); bw.write(zc, zl); run -= 16
+    }
+    val sz = category(v)
+    require(sz <= 10, s"AC coefficient $v too large for the fixture table")
+    val (code, len) = acCodes((run << 4) | sz)
+    bw.write(code, len)
+    bw.write(if (v < 0) v + (1 << sz) - 1 else v, sz)
+  }
+
+  /** Byte-align the entropy stream and write the RSTn marker that closes
+    * the n-th restart interval. */
+  private def writeRestart(bw: BitWriter, out: java.io.ByteArrayOutputStream,
+                           n: Int): Unit = {
+    bw.align()
+    out.write(0xFF); out.write(0xD0 + ((n - 1) & 7))
+  }
+
   /** Encode a baseline JPEG whose 8×8 blocks carry the given QUANTIZED
     * coefficient arrays (zigzag-independent: input is natural row-major
     * order, 64 per block per component). `blocks(c)` holds component
@@ -1188,47 +1269,20 @@ private[graft] object Jpeg {
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xFF)
     def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    // SOI + JFIF APP0
-    u8(0xFF); u8(0xD8)
-    u8(0xFF); u8(0xE0); u16(16)
-    out.write("JFIF".getBytes("US-ASCII")); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-    // DQT (table 0, natural order re-zigzagged on write)
-    u8(0xFF); u8(0xDB); u16(2 + 65); u8(0x00)
-    var k = 0
-    while (k < 64) { u8(FixtureQuant(Zigzag(k))); k += 1 }
-    // SOF0
-    u8(0xFF); u8(0xC0); u16(8 + 3 * nComp); u8(8)
-    u16(height); u16(width); u8(nComp)
-    var c = 0
-    while (c < nComp) { u8(c + 1); u8(hv(c)); u8(0); c += 1 }
-    // DHT: DC table 0 + AC table 0
-    val dcSpec = dcTableSpec
-    val acSpec = acTableSpec
-    u8(0xFF); u8(0xC4)
-    u16(2 + (1 + 16 + dcSpec._2.length) + (1 + 16 + acSpec._2.length))
-    u8(0x00); dcSpec._1.foreach(u8); out.write(dcSpec._2)
-    u8(0x10); acSpec._1.foreach(u8); out.write(acSpec._2)
-    if (restartInterval > 0) { u8(0xFF); u8(0xDD); u16(4); u16(restartInterval) }
+    writeHeaders(out, 0xC0, width, height, hv, restartInterval) // SOF0
     // SOS
     u8(0xFF); u8(0xDA); u16(6 + 2 * nComp); u8(nComp)
-    c = 0
+    var c = 0
     while (c < nComp) { u8(c + 1); u8(0x00); c += 1 }
     u8(0); u8(63); u8(0)
     // entropy-coded data
-    val dcCodes = canonical(dcSpec)
-    val acCodes = canonical(acSpec)
+    val dcCodes = canonical(dcTableSpec)
+    val acCodes = canonical(acTableSpec)
     val bwrt = new BitWriter(out)
     val pred = new Array[Int](3)
     def encodeOne(cc: Int, blk: Array[Int]): Unit = {
-      // DC diff
-      val diff = blk(0) - pred(cc)
+      writeDcDiff(bwrt, dcCodes, blk(0) - pred(cc))
       pred(cc) = blk(0)
-      val s = category(diff)
-      val (dcCode, dcLen) = dcCodes(s)
-      bwrt.write(dcCode, dcLen)
-      if (s > 0)
-        bwrt.write(if (diff < 0) diff + (1 << s) - 1 else diff, s)
       // AC run-lengths over zigzag order
       var run = 0
       var kk = 1
@@ -1236,14 +1290,7 @@ private[graft] object Jpeg {
         val v = blk(Zigzag(kk))
         if (v == 0) run += 1
         else {
-          while (run > 15) {
-            val (zc, zl) = acCodes(0xF0); bwrt.write(zc, zl); run -= 16
-          }
-          val sz = category(v)
-          require(sz <= 10, s"AC coefficient $v too large for the fixture table")
-          val (code, len) = acCodes((run << 4) | sz)
-          bwrt.write(code, len)
-          bwrt.write(if (v < 0) v + (1 << sz) - 1 else v, sz)
+          writeAc(bwrt, acCodes, run, v)
           run = 0
         }
         kk += 1
@@ -1254,8 +1301,7 @@ private[graft] object Jpeg {
     val nMcu = mcuW * mcuH
     while (mcu < nMcu) {
       if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bwrt.align()
-        u8(0xFF); u8(0xD0 + ((mcu / restartInterval - 1) & 7))
+        writeRestart(bwrt, out, mcu / restartInterval)
         pred(0) = 0; pred(1) = 0; pred(2) = 0
       }
       val bx = mcu % mcuW
@@ -1281,6 +1327,15 @@ private[graft] object Jpeg {
     out.toByteArray
   }
 
+  /** A DC-only coefficient block that decodes to the constant `value`
+    * (dc = value − 128 under q00 = 8). */
+  private def dcBlock(value: Int, what: String): Array[Int] = {
+    require(value >= 0 && value <= 255, s"$what $value out of range")
+    val blk = new Array[Int](64)
+    blk(0) = value - 128
+    blk
+  }
+
   /** Encode a grayscale DC-ONLY baseline JPEG: block (bx, by) decodes to
     * the CONSTANT gray `grays(by*bw+bx)` exactly (dc = gray − 128 with
     * q00 = 8 ⇒ clamp(round(dc·8/8) + 128) = gray). `color = true` wraps
@@ -1293,12 +1348,7 @@ private[graft] object Jpeg {
     val bw = (width + 7) / 8
     val bh = (height + 7) / 8
     require(grays.length == bw * bh, s"need $bw x $bh block grays")
-    val luma = grays.map { g =>
-      require(g >= 0 && g <= 255, s"gray $g out of range")
-      val blk = new Array[Int](64)
-      blk(0) = g - 128
-      blk
-    }
+    val luma = grays.map(dcBlock(_, "gray"))
     val comps =
       if (color) Array(luma, Array.fill(bw * bh)(new Array[Int](64)),
         Array.fill(bw * bh)(new Array[Int](64)))
@@ -1336,30 +1386,14 @@ private[graft] object Jpeg {
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xFF)
     def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    u8(0xFF); u8(0xD8)
-    u8(0xFF); u8(0xE0); u16(16)
-    out.write("JFIF".getBytes("US-ASCII")); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
-    u8(0xFF); u8(0xDB); u16(2 + 65); u8(0x00)
-    var k = 0
-    while (k < 64) { u8(FixtureQuant(Zigzag(k))); k += 1 }
     // SOF2: identical layout to SOF0, progressive marker
-    u8(0xFF); u8(0xC2); u16(8 + 3 * nComp); u8(8)
-    u16(height); u16(width); u8(nComp)
-    var c = 0
-    while (c < nComp) { u8(c + 1); u8(0x11); u8(0); c += 1 }
-    val dcSpec = dcTableSpec
-    val acSpec = acTableSpec
-    u8(0xFF); u8(0xC4)
-    u16(2 + (1 + 16 + dcSpec._2.length) + (1 + 16 + acSpec._2.length))
-    u8(0x00); dcSpec._1.foreach(u8); out.write(dcSpec._2)
-    u8(0x10); acSpec._1.foreach(u8); out.write(acSpec._2)
-    val dcCodes = canonical(dcSpec)
-    val acCodes = canonical(acSpec)
-    if (restartInterval > 0) { u8(0xFF); u8(0xDD); u16(4); u16(restartInterval) }
+    writeHeaders(out, 0xC2, width, height, Array.fill(nComp)(0x11),
+      restartInterval)
+    val dcCodes = canonical(dcTableSpec)
+    val acCodes = canonical(acTableSpec)
     // first DC scan: interleaved, Ss=0 Se=0 Ah=0 Al=0
     u8(0xFF); u8(0xDA); u16(6 + 2 * nComp); u8(nComp)
-    c = 0
+    var c = 0
     while (c < nComp) { u8(c + 1); u8(0x00); c += 1 }
     u8(0); u8(0); u8(0)
     val bwrt = new BitWriter(out)
@@ -1367,19 +1401,13 @@ private[graft] object Jpeg {
     var mcu = 0
     while (mcu < bw * bh) {
       if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bwrt.align()
-        u8(0xFF); u8(0xD0 + ((mcu / restartInterval - 1) & 7))
+        writeRestart(bwrt, out, mcu / restartInterval)
         pred(0) = 0; pred(1) = 0; pred(2) = 0
       }
       c = 0
       while (c < nComp) {
-        val diff = blocks(c)(mcu)(0) - pred(c)
+        writeDcDiff(bwrt, dcCodes, blocks(c)(mcu)(0) - pred(c))
         pred(c) = blocks(c)(mcu)(0)
-        val s = category(diff)
-        val (dcCode, dcLen) = dcCodes(s)
-        bwrt.write(dcCode, dcLen)
-        if (s > 0)
-          bwrt.write(if (diff < 0) diff + (1 << s) - 1 else diff, s)
         c += 1
       }
       mcu += 1
@@ -1395,10 +1423,8 @@ private[graft] object Jpeg {
         val bws = new BitWriter(out)
         var b = 0
         while (b < bw * bh) {
-          if (restartInterval > 0 && b > 0 && b % restartInterval == 0) {
-            bws.align()
-            u8(0xFF); u8(0xD0 + ((b / restartInterval - 1) & 7))
-          }
+          if (restartInterval > 0 && b > 0 && b % restartInterval == 0)
+            writeRestart(bws, out, b / restartInterval)
           val blk = blocks(c)(b)
           var run = 0
           var kk = ss
@@ -1407,14 +1433,7 @@ private[graft] object Jpeg {
             val v = blk(Zigzag(kk))
             if (v == 0) run += 1
             else {
-              while (run > 15) {
-                val (zc, zl) = acCodes(0xF0); bws.write(zc, zl); run -= 16
-              }
-              val sz = category(v)
-              require(sz <= 10, s"AC coefficient $v too large for the fixture table")
-              val (code, len) = acCodes((run << 4) | sz)
-              bws.write(code, len)
-              bws.write(if (v < 0) v + (1 << sz) - 1 else v, sz)
+              writeAc(bws, acCodes, run, v)
               run = 0
               emitted = true
             }
@@ -1450,12 +1469,6 @@ private[graft] object Jpeg {
     val mcuH = (height + 15) / 16
     require(grays.length == 4 * mcuW * mcuH,
       s"need ${2 * mcuW} x ${2 * mcuH} luma block grays")
-    def dcBlock(value: Int, what: String): Array[Int] = {
-      require(value >= 0 && value <= 255, s"$what $value out of range")
-      val blk = new Array[Int](64)
-      blk(0) = value - 128
-      blk
-    }
     val luma = grays.map(dcBlock(_, "gray"))
     def chroma(vals: Array[Int]): Array[Array[Int]] =
       if (vals == null) Array.fill(mcuW * mcuH)(new Array[Int](64))
@@ -1482,12 +1495,7 @@ private[graft] object Jpeg {
     require(grays.length == mcuW * hL * mcuH * vL,
       s"need ${mcuW * hL} x ${mcuH * vL} luma block grays, " +
         s"got ${grays.length}")
-    val luma = grays.map { g =>
-      require(g >= 0 && g <= 255, s"gray $g out of range")
-      val blk = new Array[Int](64)
-      blk(0) = g - 128
-      blk
-    }
+    val luma = grays.map(dcBlock(_, "gray"))
     def neutral = Array.fill(mcuW * mcuH)(new Array[Int](64))
     encodeBlocks(width, height, Array(luma, neutral, neutral),
       restartInterval, Array(hvLuma, 0x11, 0x11))

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.multimodal.Multimodal.{Containers, MediaRow}
+import graft.multimodal.Multimodal.{Containers, MediaRow, perDocId}
 import graft.text.Dedup
 
 /** Perceptual near-duplicate detection for decoded media — the image/audio
@@ -507,10 +507,8 @@ object MediaDedup {
     * span print), followed by a per-clip quadratic body; other ids are
     * pure per-clip sweeps (the q239 coefficient rule, so leading prints
     * never collide accidentally). */
-  def syntheticIntroClips(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticIntroClips(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (800 + id % 10 * 10).toInt
       val body = new Array[Byte](n * 2)
       var p = 0
@@ -528,7 +526,6 @@ object MediaDedup {
       }
       MediaRow(id, "audio", Containers.wav(1, 16000, body), 0, 0, 1)
     }
-  }
 
   /** Audio clip-in-track containment search — the audio twin of the text
     * span dedup (q197): does a short clip appear INSIDE a longer track?
@@ -569,10 +566,8 @@ object MediaDedup {
     * shared polynomial by a constant the |·| window sums barely see
     * (3.7k accidentals) — so the id must multiply the coefficients,
     * drawn from prime-modulus ranges (the q232 fixture rule). */
-  def syntheticAudioTracks(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticAudioTracks(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (800 + (id % 40) * 10).toInt
       val body = new Array[Byte](n * 2)
       var p = 0
@@ -586,7 +581,6 @@ object MediaDedup {
       }
       MediaRow(id, "audio", Containers.wav(1, 16000, body), 0, 0, 1)
     }
-  }
 
   /** Clip-in-track fixtures, clip side (even doc_ids only): role
     * doc_id mod 4 == 0 is a VOLUME-TRIPLED, window-aligned 570-sample
@@ -631,10 +625,8 @@ object MediaDedup {
     * derive from g alone; the PNG scanline filter cycles through all five
     * spec filters by doc_id, so the dedup path exercises the whole
     * unfilter matrix. An oracle recomputes every hash arithmetically. */
-  def syntheticNearDupImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticNearDupImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 3
       val role = id % 3
       val w = (16 + (g % 5) * 4).toInt
@@ -651,7 +643,6 @@ object MediaDedup {
       MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
         w, h, 1)
     }
-  }
 
   /** Near-dup audio fixtures, same triple layout: role 0 base clip with
     * PCM16 samples s(p) = ((g·17 + p·5) mod 4096) − 2048, role 1 a
@@ -861,10 +852,8 @@ object MediaDedup {
     * three cases the gates must separate — f mod 3 == 0 a gradient
     * (healthy), 1 a FLAT mid-gray frame, 2 a textured near-BLACK frame
     * (gray < 16 everywhere but varying — black yet not flat). */
-  def syntheticQualityVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticQualityVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val w = (8 + id % 3 * 2).toInt
       val h = (8 + id % 2 * 2).toInt
       val nf = (3 + id % 3).toInt
@@ -875,7 +864,6 @@ object MediaDedup {
       }
       MediaRow(id, "video", Containers.aviFull(w, h, nf, px), w, h, nf)
     }
-  }
 
   /** Quality-gate audio fixtures: sample p of clip g is full-scale
     * clipped at every 97th position, zero through every 5th absolute
@@ -883,10 +871,8 @@ object MediaDedup {
     * A clipped sample landing inside a "silent" window makes that window
     * non-silent — both engines replay the same per-sample CASE, so the
     * interaction is part of the contract, not noise. */
-  def syntheticQualityClips(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticQualityClips(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (300 + id % 20 * 10).toInt
       val body = new Array[Byte](n * 2)
       var p = 0
@@ -901,7 +887,6 @@ object MediaDedup {
       }
       MediaRow(id, "audio", Containers.wav(1, 16000, body), 0, 0, 1)
     }
-  }
 
   /** FIXED-grid grayscale block means of one decoded image (format-blind,
     * like [[dhashOneImage]]): block (bx, by) covers the blockPx×blockPx
@@ -985,24 +970,15 @@ object MediaDedup {
     * carry a FIXED 4×2-block "logo" at the top-left — identical values at
     * identical positions across all stamped images, exactly what the
     * boilerplate detector must surface and per-image stats cannot. */
-  def syntheticWatermarkImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWatermarkImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val gw = 12; val gh = 10
       def v(bx: Int, by: Int): Int =
         if (id % 3 == 0 && bx < 4 && by < 2) bx * 50 + by * 30 + 7
         else ((bx.toLong * bx * (13 + id % 31) + by.toLong * by * (7 + id % 29) +
           bx.toLong * by * (3 + id % 17) + id * 11) % 226).toInt
-      val w = 2 * gw; val h = 2 * gh
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 2, (k / w) / 2) }
-      }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      blockGrayPng(id, gw, gh, 2)(v)
     }
-  }
 
   /** Alpha-blended watermark fixtures — the case the VERBATIM census
     * provably misses: stamped ids (divisible by 3) carry a top-left 4×2
@@ -1011,25 +987,16 @@ object MediaDedup {
     * blended means never recur verbatim across images, but all land in
     * the same floor(mean/4) bucket, so the quantized census surfaces
     * them. Content blocks keep the q249 quadratic coefficient rule. */
-  def syntheticBlendedWatermarkImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticBlendedWatermarkImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val gw = 12; val gh = 10
       def v(bx: Int, by: Int): Int =
         if (id % 3 == 0 && bx < 4 && by < 2)
           bx * 48 + by * 32 + 8 + ((id / 3) % 3).toInt
         else ((bx.toLong * bx * (13 + id % 31) + by.toLong * by * (7 + id % 29) +
           bx.toLong * by * (3 + id % 17) + id * 11) % 226).toInt
-      val w = 2 * gw; val h = 2 * gh
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 2, (k / w) / 2) }
-      }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      blockGrayPng(id, gw, gh, 2)(v)
     }
-  }
 
   /** Per-offset 56-bit PATCH hashes over the fixed block grid: window
     * (ox, oy) covers blocks [ox, ox+8) × [oy, oy+8) and hashes by the
@@ -1109,24 +1076,15 @@ object MediaDedup {
     * headroom for the crop side's +30 brightness shift without wrap
     * (order-preserving); per-image coefficients multiply the position
     * terms (the measured q239 degeneracy rule). */
-  def syntheticCropImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticCropImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val gw = (12 + id % 4).toInt
       val gh = (10 + id % 3).toInt
       def v(bx: Int, by: Int): Int =
         ((bx.toLong * bx * (13 + id % 31) + by.toLong * by * (7 + id % 29) +
           bx.toLong * by * (3 + id % 17) + id * 11) % 226).toInt
-      val w = 2 * gw; val h = 2 * gh
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 2, (k / w) / 2) }
-      }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      blockGrayPng(id, gw, gh, 2)(v)
     }
-  }
 
   /** Crop-containment fixtures, crop side (even doc_ids): role
     * doc_id mod 4 == 0 is the 8×8-block crop of its own corpus image at
@@ -1149,13 +1107,78 @@ object MediaDedup {
         else
           ((c.toLong * c * 19 + r.toLong * r * 23 + c.toLong * r * 29 +
             id * 7 + 99) % 226).toInt
-      val w = 2 * GridW; val h = 2 * GridH
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 2, (k / w) / 2) }
+      blockGrayPng(id, GridW, GridH, 2)(v)
+    }
+  }
+
+  /** A block-planted fixture PNG: `gw`×`gh` uniform gray blocks of
+    * `blockPx`×`blockPx` pixels (opaque RGBA), block (bx, by) at
+    * v(bx, by), scanline filter id mod 5. */
+  private def blockGrayPng(id: Long, gw: Int, gh: Int, blockPx: Int)
+                          (v: (Int, Int) => Int): MediaRow = {
+    val w = blockPx * gw; val h = blockPx * gh
+    val px: Int => Int = { i =>
+      if (i % 4 == 3) 255
+      else { val k = i / 4; v((k % w) / blockPx, (k / w) / blockPx) }
+    }
+    MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
+      w, h, 1)
+  }
+
+  /** The EXIF-oriented crop-search grid: (8 + id%3) × (8 + id%2)
+    * displayed blocks. */
+  private def orientedDims(id: Long): (Int, Int) =
+    ((8 + id % 3).toInt, (8 + id % 2).toInt)
+
+  /** Displayed block grid of the JPEG family (per-image quadratic
+    * coefficients, the q241 rule, bound 196 to absorb the crop's +30). */
+  private def jpegOrientedValue(id: Long)(dx: Int, dy: Int): Int =
+    ((dx.toLong * dx * (11 + id % 23) + dy.toLong * dy * (5 + id % 19) +
+      dx.toLong * dy * (3 + id % 13) + id * 17) % 196).toInt
+
+  /** Displayed block grid of the WebP family: a distinct coefficient
+    * family, so the two gates are independent fixtures. */
+  private def webpOrientedValue(id: Long)(dx: Int, dy: Int): Int =
+    ((dx.toLong * dx * (7 + id % 29) + dy.toLong * dy * (9 + id % 17) +
+      dx.toLong * dy * (5 + id % 11) + id * 23) % 196).toInt
+
+  /** The displayed grid `v` written back through the INVERSE tag-274
+    * transform under orientation 1 + (id mod 8): (orientation, stored
+    * width, stored height, stored block grays). */
+  private def orientedStoredGrays(id: Long, v: (Int, Int) => Int)
+      : (Int, Int, Int, Array[Int]) = {
+    val (gw, gh) = orientedDims(id)
+    val o = (1 + id % 8).toInt
+    val swap = o >= 5
+    val sw = if (swap) gh else gw
+    val sh = if (swap) gw else gh
+    val grays = new Array[Int](sw * sh)
+    var dy = 0
+    while (dy < gh) {
+      var dx = 0
+      while (dx < gw) {
+        // displayed (dx, dy) reads stored (sx, sy): the same published
+        // source-coordinate table Jpeg.decodeRgbOriented applies
+        val (sx, sy) = Jpeg.orientSource(o, sw, sh, dx, dy)
+        grays(sy * sw + sx) = v(dx, dy)
+        dx += 1
       }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      dy += 1
+    }
+    (o, sw, sh, grays)
+  }
+
+  /** Oriented crop side (even doc_ids): role id mod 4 == 0 is the
+    * 8×8-block crop of its own image's DISPLAYED content `v` at block
+    * offset (id mod (gw−7), id mod (gh−7)), brightness +30, shipped as a
+    * PNG of `blockPx`-px blocks; role 2 the `distractor` grid. */
+  private def orientedCrop(id: Long, blockPx: Int, v: (Int, Int) => Int,
+                           distractor: (Int, Int) => Int): MediaRow = {
+    val (gw, gh) = orientedDims(id)
+    val ox = (id % (gw - 7)).toInt
+    val oy = (id % (gh - 7)).toInt
+    blockGrayPng(id, GridW, GridH, blockPx) { (c, r) =>
+      if (id % 4 == 0) v(ox + c, oy + r) + 30 else distractor(c, r)
     }
   }
 
@@ -1167,46 +1190,14 @@ object MediaDedup {
     * so only an orientation-applying pixel walk reconstructs it. Blocks
     * are 8×8 px (what DC-only JPEG represents exactly → crop search at
     * blockPx = 8); displayed grid (8 + id%3) × (8 + id%2) blocks. */
-  def syntheticOrientedCropImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val gw = (8 + id % 3).toInt
-      val gh = (8 + id % 2).toInt
-      def v(dx: Int, dy: Int): Int =
-        ((dx.toLong * dx * (11 + id % 23) + dy.toLong * dy * (5 + id % 19) +
-          dx.toLong * dy * (3 + id % 13) + id * 17) % 196).toInt
-      val o = (1 + id % 8).toInt
-      val swap = o >= 5
-      val sw = if (swap) gh else gw
-      val sh = if (swap) gw else gh
-      val grays = new Array[Int](sw * sh)
-      var dy = 0
-      while (dy < gh) {
-        var dx = 0
-        while (dx < gw) {
-          // displayed (dx, dy) reads stored (sx, sy): the same published
-          // source-coordinate table Jpeg.decodeRgbOriented applies
-          val (sx, sy) = o match {
-            case 1 => (dx, dy)
-            case 2 => (sw - 1 - dx, dy)
-            case 3 => (sw - 1 - dx, sh - 1 - dy)
-            case 4 => (dx, sh - 1 - dy)
-            case 5 => (dy, dx)
-            case 6 => (dy, sh - 1 - dx)
-            case 7 => (sw - 1 - dy, sh - 1 - dx)
-            case _ => (sw - 1 - dy, dx) // 8
-          }
-          grays(sy * sw + sx) = v(dx, dy)
-          dx += 1
-        }
-        dy += 1
-      }
+  def syntheticOrientedCropImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (gw, gh) = orientedDims(id)
+      val (o, sw, sh, grays) = orientedStoredGrays(id, jpegOrientedValue(id))
       val payload = Jpeg.withExif(
         Jpeg.encodeGrayBlocks(8 * sw, 8 * sh, grays), o)
       MediaRow(id, "image", payload, 8 * gw, 8 * gh, 1)
     }
-  }
 
   /** EXIF-oriented crop-search fixtures, crop side (even doc_ids): role
     * id mod 4 == 0 is the 8×8-block crop of its own image's DISPLAYED
@@ -1220,26 +1211,9 @@ object MediaDedup {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long]
       .filter((id: Long) => id % 2 == 0).map { id =>
-      val gw = (8 + id % 3).toInt
-      val gh = (8 + id % 2).toInt
-      val ox = (id % (gw - 7)).toInt
-      val oy = (id % (gh - 7)).toInt
-      def v(c: Int, r: Int): Int =
-        if (id % 4 == 0)
-          (((ox + c).toLong * (ox + c) * (11 + id % 23) +
-            (oy + r).toLong * (oy + r) * (5 + id % 19) +
-            (ox + c).toLong * (oy + r) * (3 + id % 13) +
-            id * 17) % 196).toInt + 30
-        else
-          ((c.toLong * c * 17 + r.toLong * r * 21 + c.toLong * r * 27 +
-            id * 5 + 77) % 196).toInt
-      val w = 8 * GridW; val h = 8 * GridH
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 8, (k / w) / 8) }
-      }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      orientedCrop(id, 8, jpegOrientedValue(id), (c, r) =>
+        ((c.toLong * c * 17 + r.toLong * r * 21 + c.toLong * r * 27 +
+          id * 5 + 77) % 196).toInt)
     }
   }
 
@@ -1252,39 +1226,10 @@ object MediaDedup {
     * container ([[Webp.withExif]]); all 8 orientations cycle. Distinct
     * coefficient family from q263 (7+id%29 / 9+id%17 / 5+id%11, id·23)
     * so the two gates are independent fixtures. */
-  def syntheticOrientedWebpImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val gw = (8 + id % 3).toInt
-      val gh = (8 + id % 2).toInt
-      def v(dx: Int, dy: Int): Int =
-        ((dx.toLong * dx * (7 + id % 29) + dy.toLong * dy * (9 + id % 17) +
-          dx.toLong * dy * (5 + id % 11) + id * 23) % 196).toInt
-      val o = (1 + id % 8).toInt
-      val swap = o >= 5
-      val sw = if (swap) gh else gw
-      val sh = if (swap) gw else gh
-      val grays = new Array[Int](sw * sh)
-      var dy = 0
-      while (dy < gh) {
-        var dx = 0
-        while (dx < gw) {
-          val (sx, sy) = o match {
-            case 1 => (dx, dy)
-            case 2 => (sw - 1 - dx, dy)
-            case 3 => (sw - 1 - dx, sh - 1 - dy)
-            case 4 => (dx, sh - 1 - dy)
-            case 5 => (dy, dx)
-            case 6 => (dy, sh - 1 - dx)
-            case 7 => (sw - 1 - dy, sh - 1 - dx)
-            case _ => (sw - 1 - dy, dx) // 8
-          }
-          grays(sy * sw + sx) = v(dx, dy)
-          dx += 1
-        }
-        dy += 1
-      }
+  def syntheticOrientedWebpImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (gw, gh) = orientedDims(id)
+      val (o, sw, sh, grays) = orientedStoredGrays(id, webpOrientedValue(id))
       // 2-px blocks (the q241 granularity): VP8L is lossless at any
       // block size — no DC-block constraint like the JPEG fixture — and
       // the 16x smaller canvas keeps the row in the 3 s isolation budget
@@ -1298,7 +1243,6 @@ object MediaDedup {
         Webp.encodeLossless(2 * sw, 2 * sh, argb), 2 * sw, 2 * sh, o)
       MediaRow(id, "image", payload, 2 * gw, 2 * gh, 1)
     }
-  }
 
   /** Crop side for [[syntheticOrientedWebpImages]] (even doc_ids): role
     * id mod 4 == 0 is the 8×8-block crop of its own image's DISPLAYED
@@ -1311,28 +1255,27 @@ object MediaDedup {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long]
       .filter((id: Long) => id % 2 == 0).map { id =>
-      val gw = (8 + id % 3).toInt
-      val gh = (8 + id % 2).toInt
-      val ox = (id % (gw - 7)).toInt
-      val oy = (id % (gh - 7)).toInt
-      def v(c: Int, r: Int): Int =
-        if (id % 4 == 0)
-          (((ox + c).toLong * (ox + c) * (7 + id % 29) +
-            (oy + r).toLong * (oy + r) * (9 + id % 17) +
-            (ox + c).toLong * (oy + r) * (5 + id % 11) +
-            id * 23) % 196).toInt + 30
-        else
-          ((c.toLong * c * 19 + r.toLong * r * 23 + c.toLong * r * 29 +
-            id * 7 + 55) % 196).toInt
-      val w = 2 * GridW; val h = 2 * GridH
-      val px: Int => Int = { i =>
-        if (i % 4 == 3) 255
-        else { val k = i / 4; v((k % w) / 2, (k / w) / 2) }
-      }
-      MediaRow(id, "image", Containers.pngFull(w, h, px, (id % 5).toInt),
-        w, h, 1)
+      orientedCrop(id, 2, webpOrientedValue(id), (c, r) =>
+        ((c.toLong * c * 19 + r.toLong * r * 23 + c.toLong * r * 29 +
+          id * 7 + 55) % 196).toInt)
     }
   }
+
+  /** The q258 QUADRATIC grid family of the animated video pairs: group
+    * g's frame f value at cell (x, y) — per-group prime-modulus
+    * multipliers on every position term. */
+  private def q258Value(g: Long, f: Int, x: Int, y: Int): Int =
+    ((g * 37 + f * (11 + (g * 17) % 97) + x * x * (4 + (g % 11) * 5) +
+      y * y * (3 + (g % 13) * 3) + x * y * (2 + (g % 7) * 9))
+      % 256).toInt
+
+  /** The animated-GIF member of a cross-container video pair: frame f's
+    * pixel (x, y) is gray v(f, x, y) through the identity-ramp palette. */
+  private def grayGifVideo(id: Long, w: Int, h: Int, nf: Int,
+                           v: (Int, Int, Int) => Int): MediaRow =
+    MediaRow(id, "video",
+      Containers.gifAnimated(w, h, nf, (f, k) => v(f, k % w, k / w),
+        Containers.GrayRamp, minCodeSize = 8), w, h, nf)
 
   /** GIF ↔ animated-WebP cross-container video pairs (g = doc_id/2): the
     * even member an ANIMATED GIF (per-frame LZW streams, identity gray
@@ -1347,11 +1290,8 @@ object MediaDedup {
     * and the smaller fixture keeps the row inside the 3 s isolation
     * budget (measured 5.7 s at q248's dims) without touching the
     * oracle's arithmetic shape. */
-  def syntheticGifWebpPairVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPalette = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticGifWebpPairVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       val w = (8 + (g % 5) * 2).toInt
       val h = (8 + ((g * 3) % 4) * 2).toInt
@@ -1360,14 +1300,8 @@ object MediaDedup {
       // formula drained fingerprint entropy (382 pairs for 250 planted
       // at sf0.001); quadratic position terms keep cross-group hashes
       // apart (exactly the 250 planted after the switch)
-      def v(f: Int, x: Int, y: Int): Int =
-        ((g * 37 + f * (11 + (g * 17) % 97) + x * x * (4 + (g % 11) * 5) +
-          y * y * (3 + (g % 13) * 3) + x * y * (2 + (g % 7) * 9))
-          % 256).toInt
-      if (id % 2 == 0)
-        MediaRow(id, "video",
-          Containers.gifAnimated(w, h, nf, (f, k) => v(f, k % w, k / w),
-            grayPalette, minCodeSize = 8), w, h, nf)
+      def v(f: Int, x: Int, y: Int): Int = q258Value(g, f, x, y)
+      if (id % 2 == 0) grayGifVideo(id, w, h, nf, v)
       else {
         val frames = (0 until nf).map { f =>
           Webp.AnimFrameSpec(0, 0, w, h, Array.tabulate(w * h) { k =>
@@ -1379,7 +1313,6 @@ object MediaDedup {
           w, h, nf)
       }
     }
-  }
 
   /** GIF ↔ APNG cross-container video pairs (g = doc_id/2): the even
     * member an ANIMATED GIF, the odd member an ANIMATED PNG (full-canvas
@@ -1389,24 +1322,15 @@ object MediaDedup {
     * value formula so one oracle covers both rows. No shared container
     * bytes (LZW code streams vs zlib scanline streams), identical
     * composited RGB, frame-for-frame collision at match_frac 1. */
-  def syntheticGifApngPairVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPalette = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticGifApngPairVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       val w = (8 + (g % 5) * 2).toInt
       val h = (8 + ((g * 3) % 4) * 2).toInt
       val nf = (2 + g % 2).toInt
       // the q258 QUADRATIC grid family (see syntheticGifWebpPairVideos)
-      def v(f: Int, x: Int, y: Int): Int =
-        ((g * 37 + f * (11 + (g * 17) % 97) + x * x * (4 + (g % 11) * 5) +
-          y * y * (3 + (g % 13) * 3) + x * y * (2 + (g % 7) * 9))
-          % 256).toInt
-      if (id % 2 == 0)
-        MediaRow(id, "video",
-          Containers.gifAnimated(w, h, nf, (f, k) => v(f, k % w, k / w),
-            grayPalette, minCodeSize = 8), w, h, nf)
+      def v(f: Int, x: Int, y: Int): Int = q258Value(g, f, x, y)
+      if (id % 2 == 0) grayGifVideo(id, w, h, nf, v)
       else {
         val frames = (0 until nf).map { f =>
           Containers.ApngFrameSpec(0, 0, w, h, { i =>
@@ -1418,7 +1342,6 @@ object MediaDedup {
           w, h, nf)
       }
     }
-  }
 
   /** WAV ↔ AVI-soundtrack pairs (g = doc_id/2): the even member a WAV
     * of the planted PCM16 clip, the odd member an AVI whose VIDEO
@@ -1427,10 +1350,8 @@ object MediaDedup {
     * audio operators see the AVI through the decodeAviAudio dispatch
     * and the pair collides contour-for-contour at Hamming 0, with the
     * video payload invisible to the audio fingerprint. */
-  def syntheticAviSoundtrackPairs(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticAviSoundtrackPairs(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       val n = (128 + (g % 64) * 4).toInt
       // quadratic position term with per-group prime-modulus multipliers
@@ -1453,7 +1374,6 @@ object MediaDedup {
           (f, x, y, c) => ((g * 13 + f * 7 + x * 3 + y * 5 + c * 17) % 256).toInt,
           1, 16000, samples), 8, 6, 2)
     }
-  }
 
   /** Cross-CONTAINER video fixtures: doc_ids come in planted pairs
     * (group g = doc_id/2) — the even member an AVI carrying uncompressed
@@ -1462,11 +1382,8 @@ object MediaDedup {
     * share no container bytes, but both decode to identical RGB, so every
     * frame-level operator must treat them as the same video. Frame
     * formula keeps the wide prime-modulus multipliers (the q232 rule). */
-  def syntheticCrossContainerVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPalette = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticCrossContainerVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       val w = (12 + (g % 5) * 4).toInt
       val h = (8 + ((g * 3) % 4) * 4).toInt
@@ -1477,12 +1394,8 @@ object MediaDedup {
       if (id % 2 == 0)
         MediaRow(id, "video",
           Containers.aviFull(w, h, nf, (f, x, y, _) => v(f, x, y)), w, h, nf)
-      else
-        MediaRow(id, "video",
-          Containers.gifAnimated(w, h, nf, (f, k) => v(f, k % w, k / w),
-            grayPalette, minCodeSize = 8), w, h, nf)
+      else grayGifVideo(id, w, h, nf, v)
     }
-  }
 
   /** MJPEG ↔ uncompressed cross-CODEC video pairs: even doc_ids are
     * uncompressed DIB AVIs, odd doc_ids the MJPEG re-encode of the SAME
@@ -1493,10 +1406,8 @@ object MediaDedup {
     * with the JPEG blocks (the tri-format lesson: sub-block grid cells
     * tie and drain fingerprint entropy); block, frame, and item terms
     * all carry per-item multiplicative prime-modulus coefficients. */
-  def syntheticMjpegPairVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticMjpegPairVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       val w = 64; val h = 64
       val nf = (2 + g % 2).toInt
@@ -1504,10 +1415,7 @@ object MediaDedup {
       // block terms make the dHash a low-entropy wrap pattern that
       // cross-collides at corpus scale — measured 786 rows for 250
       // planted pairs at sf0.001 before the quadratics
-      def blockVal(f: Int, bx: Int, by: Int): Int =
-        ((g * 37 + f * (11 + (g * 17) % 97) + bx * bx * (4 + (g % 11) * 5) +
-          by * by * (3 + (g % 13) * 3) + bx * by * (2 + (g % 7) * 9))
-          % 256).toInt
+      def blockVal(f: Int, bx: Int, by: Int): Int = q258Value(g, f, bx, by)
       if (id % 2 == 0)
         MediaRow(id, "video",
           Containers.aviFull(w, h, nf, (f, x, y, _) => blockVal(f, x / 8, y / 8)),
@@ -1520,7 +1428,6 @@ object MediaDedup {
         MediaRow(id, "video", Containers.aviMjpeg(w, h, jpegs), w, h, nf)
       }
     }
-  }
 
   /** Video clip-in-video ONE-SIDED containment: was this SHORT clip
     * lifted from some longer video in the corpus? [[videoNearDups]]'s
@@ -1792,10 +1699,8 @@ object MediaDedup {
     * jumps at every multiple of 3. The oracle replays the boundary count
     * from the same closed forms — wherever the drift lands, BOTH engines
     * see the same bits. */
-  def syntheticShotVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticShotVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val w = (12 + (id % 5) * 4).toInt
       val h = (8 + ((id * 3) % 4) * 4).toInt
       val nf = (6 + id % 4).toInt
@@ -1806,7 +1711,6 @@ object MediaDedup {
       }
       MediaRow(id, "video", Containers.aviFull(w, h, nf, px), w, h, nf)
     }
-  }
 
   /** Probe images for the cross-modal match: group g's probe is a PNG
     * whose grayscale IS frame 1 of group g's base video
@@ -1893,10 +1797,8 @@ object MediaDedup {
     * Hamming bits of its base twin, so the pair's match_frac is 1);
     * role 2 a distinct video (different multipliers and base).
     * Dimensions and frame counts derive from g alone. */
-  def syntheticNearDupVideos(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticNearDupVideos(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 3
       val role = id % 3
       val w = (12 + (g % 5) * 4).toInt
@@ -1915,16 +1817,12 @@ object MediaDedup {
       }
       MediaRow(id, "video", Containers.aviFull(w, h, nf, px), w, h, nf)
     }
-  }
 
-  def syntheticCrossFormatImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticCrossFormatImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val (w, h, payload) = crossFormatImagePayload(id)
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** The per-item payload body of [[syntheticCrossFormatImages]] — shared
     * with [[syntheticJointItems]] (byte-identical images, one oracle). */
@@ -1944,12 +1842,9 @@ object MediaDedup {
         Containers.pngFull(w, h,
           i => if (i % 4 == 3) 255 else v(i / 4), (id % 5).toInt)
       else
-        Containers.gifFull(w, h, v, CrossFormatGrayPalette, minCodeSize = 8)
+        Containers.gifFull(w, h, v, Containers.GrayRamp, minCodeSize = 8)
     (w, h, payload)
   }
-
-  private val CrossFormatGrayPalette: Array[Byte] =
-    Array.tabulate(256 * 3)(b => (b / 3).toByte)
 
   /** Joint (caption, image, audio) fixture items in ONE pass over docs —
     * the q253 streaming-joint-ingest input. Payload bytes are EXACTLY
@@ -1984,10 +1879,8 @@ object MediaDedup {
     * Hamming 0 through three entirely different codecs (inflate+unfilter,
     * LZW, Huffman+IDCT). Even groups wrap the JPEG in the 3-component
     * color path, odd groups stay grayscale. */
-  def syntheticTriFormatImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticTriFormatImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 3
       val xc = 3 + (g % 7) * 9
       val yc = 2 + (g % 5) * 7
@@ -2002,14 +1895,13 @@ object MediaDedup {
           }, (g % 5).toInt)
         case 1 =>
           Containers.gifFull(64, 64, k => cell((k % 64) / 8, (k / 64) / 8),
-            CrossFormatGrayPalette, minCodeSize = 8)
+            Containers.GrayRamp, minCodeSize = 8)
         case _ =>
           Jpeg.encodeGrayBlocks(64, 64,
             Array.tabulate(64)(c => cell(c % 8, c / 8)), color = g % 2 == 0)
       }
       MediaRow(id, "image", payload, 64, 64, 1)
     }
-  }
 
   /** Cross-format PNG ↔ WebP pairs (g = doc_id/2): the even member a
     * 32×32 PNG of 4×4-pixel constant cells with a per-group quadratic
@@ -2023,10 +1915,8 @@ object MediaDedup {
     * VP8L encode ~2× a PNG one, and the smaller canvas keeps the row in
     * the ≤3 s isolation budget without changing the oracle, which only
     * sees cells). */
-  def syntheticWebpPairImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWebpPairImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       def cell(bx: Int, by: Int): Int =
         ((g * 31 + bx * bx * (7 + (g % 5) * 9) + by * by * (3 + (g % 7) * 5) +
@@ -2052,7 +1942,6 @@ object MediaDedup {
         }
       MediaRow(id, "image", payload, 32, 32, 1)
     }
-  }
 
   /** PNG ↔ LOSSY-WebP pair fixtures (g = doc_id/2): the even member a
     * 32x32 PNG of 4x4-px constant cells with a per-group quadratic
@@ -2065,10 +1954,8 @@ object MediaDedup {
     * matches the PNG's). Format-blind perceptual dedup across a
     * LOSSLESS and a LOSSY codec — the q273 contract extended to the
     * crawl-majority WebP profile. */
-  def syntheticLossyPairImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticLossyPairImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       def cell(bx: Int, by: Int): Int =
         (((bx * bx * (7 + (g % 5) * 9) + by * by * (3 + (g % 7) * 5) +
@@ -2084,7 +1971,6 @@ object MediaDedup {
             cell(k % 8, k / 8)))
       MediaRow(id, "image", payload, 32, 32, 1)
     }
-  }
 
   /** Orientation fixtures: doc_ids come in planted PAIRS (g = doc_id/2) —
     * the even member a 64×64 PNG of 8×8-pixel constant cells with the
@@ -2095,10 +1981,8 @@ object MediaDedup {
     * both mirrors, both transposes) appears across groups. The plain
     * dHash sees unrelated fingerprints; the canonical hash collides at
     * Hamming 0 (multiple-of-8 dims keep the invariance exact). */
-  def syntheticRotatedImages(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticRotatedImages(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val g = id / 2
       def b(bx: Int, by: Int): Int =
         ((g * 37 + bx * bx * (4 + (g % 11) * 5) + by * by * (3 + (g % 13) * 3) +
@@ -2114,7 +1998,6 @@ object MediaDedup {
       }, (g % 5).toInt)
       MediaRow(id, "image", payload, 64, 64, 1)
     }
-  }
 
   /** JOINT multimodal near-dup pairs: an item is a (caption, image, audio)
     * record keyed by one id, and two items are near-dups when ANY modality

@@ -90,13 +90,43 @@ object Multimodal {
     val JpegHeaderLen = 44 // SOI + APP0(JFIF) + fill byte + SOF0(1 comp) + SOS
     val JpegOverhead = JpegHeaderLen + 2 // + trailing EOI
 
+    /** The 256-entry grayscale identity ramp: index v is gray v. */
+    val GrayRamp: Array[Byte] = Array.tabulate(256 * 3)(b => (b / 3).toByte)
+
+    /** The 64-entry gray palette in steps of 4 (index i is gray 4i + 1). */
+    val Ramp64: Array[Byte] =
+      Array.tabulate(64 * 3)(b => (((b / 3) * 4 + 1) % 256).toByte)
+
+    /** The 8-byte PNG signature every PNG writer leads with. */
+    private val PngSignature =
+      Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
+
+    /** The 13-byte IHDR body: dims, bit depth, color type, compression 0,
+      * filter 0, interlace method. */
+    private def pngIhdr(width: Int, height: Int, bitDepth: Int,
+                        colorType: Int, interlace: Int): Array[Byte] =
+      ByteBuffer.allocate(13).putInt(width).putInt(height)
+        .put(bitDepth.toByte).put(colorType.toByte).put(0.toByte).put(0.toByte)
+        .put(interlace.toByte).array()
+
+    /** zlib-deflate `raw` with the JDK's default settings — the PNG IDAT
+      * and TIFF Deflate codec (PNG's zlib IS `java.util.zip`). */
+    private[multimodal] def deflate(raw: Array[Byte]): Array[Byte] = {
+      val deflater = new java.util.zip.Deflater()
+      deflater.setInput(raw); deflater.finish()
+      val z = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      while (!deflater.finished()) z.write(buf, 0, deflater.deflate(buf))
+      deflater.end()
+      z.toByteArray
+    }
+
     /** PNG: signature, then IHDR — width BE at offset 16, height BE at 20. */
     def png(width: Int, height: Int, body: Array[Byte]): Array[Byte] = {
       val bb = ByteBuffer.allocate(PngHeaderLen + body.length)
-      bb.put(Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte))
+      bb.put(PngSignature)
       bb.putInt(13).put("IHDR".getBytes("US-ASCII"))
-      bb.putInt(width).putInt(height)
-      bb.put(8.toByte).put(6.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
+      bb.put(pngIhdr(width, height, 8, 6, 0))
       bb.putInt(0) // CRC (unvalidated)
       bb.put(body).array()
     }
@@ -113,59 +143,17 @@ object Multimodal {
         .array()
     }
 
-    /** SPEC-COMPLETE PNG with real pixel data: 8-bit RGBA IHDR, scanlines
-      * (filter byte + pixels) deflated into one IDAT via `java.util.zip`
-      * (PNG's zlib IS the JDK's), valid CRC32 on every chunk, IEND. Pixel
-      * byte i (row-major, RGBA interleaved) comes from `px(i)` (low 8 bits
-      * taken). `filterType` applies one of the five spec filters to every
-      * scanline — the ENCODER side of [[Multimodal.pngPixelStats]]'s
-      * unfilter pass, so round-trip specs can pin all five. */
+    /** SPEC-COMPLETE PNG with real pixel data ([[pngTyped]] at color type
+      * 6): 8-bit RGBA IHDR, scanlines (filter byte + pixels) deflated into
+      * one IDAT via `java.util.zip` (PNG's zlib IS the JDK's), valid CRC32
+      * on every chunk, IEND. Pixel byte i (row-major, RGBA interleaved)
+      * comes from `px(i)` (low 8 bits taken). `filterType` applies one of
+      * the five spec filters to every scanline — the ENCODER side of
+      * [[Multimodal.pngPixelStats]]'s unfilter pass, so round-trip specs
+      * can pin all five. */
     def pngFull(width: Int, height: Int, px: Int => Int,
-                filterType: Int = 0): Array[Byte] = {
-      require(width > 0 && height > 0, "pngFull needs positive dimensions")
-      require(filterType >= 0 && filterType <= 4, "PNG filter type is 0..4")
-      val bpp = 4
-      val stride = width * bpp
-      val raw = new Array[Byte](height * (1 + stride))
-      val prior = new Array[Int](stride) // reconstructed previous scanline
-      val cur = new Array[Int](stride)
-      var y = 0
-      while (y < height) {
-        val base = y * (1 + stride)
-        raw(base) = filterType.toByte
-        var x = 0
-        while (x < stride) { cur(x) = px(y * stride + x) & 0xFF; x += 1 }
-        x = 0
-        while (x < stride) {
-          val a = if (x >= bpp) cur(x - bpp) else 0
-          val b = if (y > 0) prior(x) else 0
-          val c = if (y > 0 && x >= bpp) prior(x - bpp) else 0
-          val pred = filterType match {
-            case 0 => 0
-            case 1 => a
-            case 2 => b
-            case 3 => (a + b) / 2
-            case 4 => paeth(a, b, c)
-          }
-          raw(base + 1 + x) = ((cur(x) - pred) & 0xFF).toByte
-          x += 1
-        }
-        System.arraycopy(cur, 0, prior, 0, stride)
-        y += 1
-      }
-      val deflater = new java.util.zip.Deflater()
-      deflater.setInput(raw); deflater.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
-      deflater.end()
-      val ihdr = ByteBuffer.allocate(13).putInt(width).putInt(height)
-        .put(8.toByte).put(6.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .array()
-      val sig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
-      sig ++ pngChunk("IHDR", ihdr) ++ pngChunk("IDAT", out.toByteArray) ++
-        pngChunk("IEND", Array.emptyByteArray)
-    }
+                filterType: Int = 0): Array[Byte] =
+      pngTyped(width, height, 6, px, filterType = filterType)
 
     /** Filter one image's scanlines into the PNG raw layout (one filter
       * byte + stride per row). `sample(row, i)` returns the i-th raw
@@ -279,21 +267,13 @@ object Multimodal {
           }
           outRaw.toByteArray
         }
-      val deflater = new java.util.zip.Deflater()
-      deflater.setInput(raw); deflater.finish()
-      val z = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!deflater.finished()) z.write(buf, 0, deflater.deflate(buf))
-      deflater.end()
-      val ihdr = ByteBuffer.allocate(13).putInt(width).putInt(height)
-        .put(bitDepth.toByte).put(colorType.toByte).put(0.toByte).put(0.toByte)
-        .put(if (interlaced) 1.toByte else 0.toByte).array()
-      val sig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
-      sig ++ pngChunk("IHDR", ihdr) ++
+      val ihdr = pngIhdr(width, height, bitDepth, colorType,
+        if (interlaced) 1 else 0)
+      PngSignature ++ pngChunk("IHDR", ihdr) ++
         (if (palette != null) pngChunk("PLTE", palette)
         else Array.emptyByteArray) ++
         (if (trns != null) pngChunk("tRNS", trns) else Array.emptyByteArray) ++
-        pngChunk("IDAT", z.toByteArray) ++
+        pngChunk("IDAT", deflate(raw)) ++
         pngChunk("IEND", Array.emptyByteArray)
     }
 
@@ -325,15 +305,6 @@ object Multimodal {
         require(f.dispose >= 0 && f.dispose <= 2 &&
           (f.blend == 0 || f.blend == 1), "bad dispose/blend op")
       }
-      def deflate(raw: Array[Byte]): Array[Byte] = {
-        val deflater = new java.util.zip.Deflater()
-        deflater.setInput(raw); deflater.finish()
-        val z = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        while (!deflater.finished()) z.write(buf, 0, deflater.deflate(buf))
-        deflater.end()
-        z.toByteArray
-      }
       def frameData(f: ApngFrameSpec): Array[Byte] =
         deflate(pngFilterRows(f.w, f.h, 4,
           (y, i) => f.px(y * f.w * 4 + i), f.filterType))
@@ -342,16 +313,11 @@ object Multimodal {
           .putInt(f.x).putInt(f.y)
           .putShort(1.toShort).putShort(10.toShort) // 1/10 s delay
           .put(f.dispose.toByte).put(f.blend.toByte).array()
-      val ihdr = ByteBuffer.allocate(13).putInt(width).putInt(height)
-        .put(8.toByte).put(6.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-        .array()
       val actl = ByteBuffer.allocate(8).putInt(frames.length).putInt(0)
         .array()
-      val sig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-        .map(_.toByte)
       val out = new java.io.ByteArrayOutputStream()
-      out.write(sig)
-      out.write(pngChunk("IHDR", ihdr))
+      out.write(PngSignature)
+      out.write(pngChunk("IHDR", pngIhdr(width, height, 8, 6, 0)))
       out.write(pngChunk("acTL", actl))
       var seq = 0
       out.write(pngChunk("fcTL", fctl(seq, f0))); seq += 1
@@ -432,13 +398,6 @@ object Multimodal {
       out.toByteArray
     }
 
-    /** SPEC-COMPLETE GIF89a with real LZW-compressed pixel data: header,
-      * logical screen descriptor, GLOBAL color table (`palette`: 3·2^(n+1)
-      * RGB bytes), a Graphic Control Extension (exercises the extension
-      * skip every real decoder needs), image descriptor, [[lzwEncode]]'d
-      * indices split into ≤126-byte data sub-blocks (exercises sub-block
-      * reassembly), trailer. `idx(k)` supplies the palette index of pixel
-      * k (row-major). */
     /** Stream-order rows for an INTERLACED GIF (GIF89a appendix E): the
       * encoder's inverse of the decoder's de-interlace — natural rows
       * emitted in four-pass order. */
@@ -458,37 +417,57 @@ object Multimodal {
       out
     }
 
-    def gifFull(width: Int, height: Int, idx: Int => Int,
-                palette: Array[Byte], minCodeSize: Int = 6,
-                interlaced: Boolean = false,
-                localTable: Boolean = false): Array[Byte] = {
-      require(width > 0 && height > 0, "gifFull needs positive dimensions")
+    /** Color-table size bits of a GIF palette (3·2^(n+1) RGB bytes). */
+    private def gifTableBits(palette: Array[Byte]): Int = {
       val nColors = palette.length / 3
       require(nColors >= 2 &&
         nColors == (1 << (Integer.numberOfTrailingZeros(nColors))) &&
         palette.length % 3 == 0,
         "palette must hold a power-of-two color count >= 2")
-      val gctBits = Integer.numberOfTrailingZeros(nColors) - 1
-      val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
+      Integer.numberOfTrailingZeros(nColors) - 1
+    }
+
+    private def gifLe16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
+      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
+    }
+
+    /** GIF89a header + logical screen descriptor; `globalPalette` null
+      * declares no global color table. */
+    private def gifHeader(out: java.io.ByteArrayOutputStream, width: Int,
+                          height: Int, globalPalette: Array[Byte],
+                          bgIndex: Int): Unit = {
       out.write("GIF89a".getBytes("US-ASCII"))
-      le16(width); le16(height)
-      // localTable = true exercises the no-GCT layout: the palette moves
-      // to the image descriptor and the header declares no global table
-      out.write((if (localTable) 0 else 0x80 | gctBits) | (7 << 4))
-      out.write(0); out.write(0) // background index, aspect ratio
-      if (!localTable) out.write(palette)
-      out.write(0x21); out.write(0xF9) // Graphic Control Extension
-      out.write(4); out.write(0); le16(0); out.write(0); out.write(0)
-      out.write(0x2C) // image descriptor
-      le16(0); le16(0); le16(width); le16(height)
-      out.write((if (localTable) 0x80 | gctBits else 0) |
+      gifLe16(out, width); gifLe16(out, height)
+      out.write((if (globalPalette == null) 0
+        else 0x80 | gifTableBits(globalPalette)) | (7 << 4))
+      out.write(bgIndex); out.write(0) // background index, aspect ratio
+      if (globalPalette != null) out.write(globalPalette)
+    }
+
+    /** One GIF frame: a Graphic Control Extension (disposal, delay,
+      * transparent index; −1 = opaque), the image descriptor for the
+      * rect (`localPalette` null = none), and the [[lzwEncode]]'d
+      * `natural` row-major indices split into ≤126-byte data sub-blocks
+      * (exercises sub-block reassembly), stream-ordered per GIF89a
+      * appendix E when `interlaced`. */
+    private def gifFrame(out: java.io.ByteArrayOutputStream, left: Int,
+                         top: Int, w: Int, h: Int, natural: Array[Int],
+                         minCodeSize: Int, delay: Int, disposal: Int,
+                         transparentIdx: Int, interlaced: Boolean,
+                         localPalette: Array[Byte]): Unit = {
+      out.write(0x21); out.write(0xF9); out.write(4)
+      out.write((disposal << 2) | (if (transparentIdx >= 0) 1 else 0))
+      gifLe16(out, delay)
+      out.write(math.max(0, transparentIdx)); out.write(0)
+      out.write(0x2C)
+      gifLe16(out, left); gifLe16(out, top); gifLe16(out, w); gifLe16(out, h)
+      out.write((if (localPalette == null) 0
+        else 0x80 | gifTableBits(localPalette)) |
         (if (interlaced) 0x40 else 0))
-      if (localTable) out.write(palette)
+      if (localPalette != null) out.write(localPalette)
       out.write(minCodeSize)
-      val natural = Array.tabulate(width * height)(idx)
       val data = lzwEncode(
-        if (interlaced) gifInterlaceRows(natural, width, height) else natural,
+        if (interlaced) gifInterlaceRows(natural, w, h) else natural,
         minCodeSize)
       var off = 0
       while (off < data.length) {
@@ -497,6 +476,26 @@ object Multimodal {
         off += n
       }
       out.write(0) // sub-block terminator
+    }
+
+    /** SPEC-COMPLETE GIF89a with real LZW-compressed pixel data: header,
+      * logical screen descriptor, GLOBAL color table (`palette`: 3·2^(n+1)
+      * RGB bytes), a Graphic Control Extension (exercises the extension
+      * skip every real decoder needs), image descriptor, [[lzwEncode]]'d
+      * indices split into ≤126-byte data sub-blocks (exercises sub-block
+      * reassembly), trailer. `idx(k)` supplies the palette index of pixel
+      * k (row-major). */
+    def gifFull(width: Int, height: Int, idx: Int => Int,
+                palette: Array[Byte], minCodeSize: Int = 6,
+                interlaced: Boolean = false,
+                localTable: Boolean = false): Array[Byte] = {
+      require(width > 0 && height > 0, "gifFull needs positive dimensions")
+      val out = new java.io.ByteArrayOutputStream()
+      // localTable = true exercises the no-GCT layout: the palette moves
+      // to the image descriptor and the header declares no global table
+      gifHeader(out, width, height, if (localTable) null else palette, 0)
+      gifFrame(out, 0, 0, width, height, Array.tabulate(width * height)(idx),
+        minCodeSize, 0, 0, -1, interlaced, if (localTable) palette else null)
       out.write(0x3B) // trailer
       out.toByteArray
     }
@@ -512,51 +511,15 @@ object Multimodal {
                     localPalette: Int => Array[Byte] = null): Array[Byte] = {
       require(width > 0 && height > 0 && nFrames > 0,
         "gifAnimated needs positive dimensions and frame count")
-      def tableBits(pal: Array[Byte]): Int = {
-        val n = pal.length / 3
-        require(n >= 2 && n == (1 << (Integer.numberOfTrailingZeros(n))) &&
-          pal.length % 3 == 0,
-          "palette must hold a power-of-two color count >= 2")
-        Integer.numberOfTrailingZeros(n) - 1
-      }
       val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-      out.write("GIF89a".getBytes("US-ASCII"))
-      le16(width); le16(height)
       // localPalette != null exercises the no-GCT layout: every frame
       // carries its OWN color table in the image descriptor
-      if (localPalette == null) {
-        out.write(0x80 | (7 << 4) | tableBits(palette))
-        out.write(0); out.write(0)
-        out.write(palette)
-      } else {
-        out.write(7 << 4)
-        out.write(0); out.write(0)
-      }
-      for (f <- 0 until nFrames) {
-        out.write(0x21); out.write(0xF9) // GCE per frame
-        out.write(4); out.write(0); le16(4); out.write(0); out.write(0)
-        out.write(0x2C)
-        le16(0); le16(0); le16(width); le16(height)
-        if (localPalette == null) out.write(if (interlaced) 0x40 else 0)
-        else {
-          val pal = localPalette(f)
-          out.write(0x80 | (if (interlaced) 0x40 else 0) | tableBits(pal))
-          out.write(pal)
-        }
-        out.write(minCodeSize)
-        val natural = Array.tabulate(width * height)(k => idx(f, k))
-        val data = lzwEncode(
-          if (interlaced) gifInterlaceRows(natural, width, height) else natural,
-          minCodeSize)
-        var off = 0
-        while (off < data.length) {
-          val n = math.min(126, data.length - off)
-          out.write(n); out.write(data, off, n)
-          off += n
-        }
-        out.write(0)
-      }
+      gifHeader(out, width, height, if (localPalette == null) palette else null,
+        0)
+      for (f <- 0 until nFrames)
+        gifFrame(out, 0, 0, width, height,
+          Array.tabulate(width * height)(k => idx(f, k)), minCodeSize, 4, 0,
+          -1, interlaced, if (localPalette == null) null else localPalette(f))
       out.write(0x3B)
       out.toByteArray
     }
@@ -579,40 +542,15 @@ object Multimodal {
                            minCodeSize: Int = 6): Array[Byte] = {
       require(width > 0 && height > 0 && frames.nonEmpty,
         "gifAnimatedPartial needs positive dims and frames")
-      val nColors = palette.length / 3
-      require(nColors >= 2 &&
-        nColors == (1 << (Integer.numberOfTrailingZeros(nColors))) &&
-        palette.length % 3 == 0,
-        "palette must hold a power-of-two color count >= 2")
-      val gctBits = Integer.numberOfTrailingZeros(nColors) - 1
       val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-      out.write("GIF89a".getBytes("US-ASCII"))
-      le16(width); le16(height)
-      out.write(0x80 | (7 << 4) | gctBits)
-      out.write(bgIndex); out.write(0)
-      out.write(palette)
+      gifHeader(out, width, height, palette, bgIndex)
       frames.foreach { f =>
         require(f.left >= 0 && f.top >= 0 && f.w > 0 && f.h > 0 &&
           f.left + f.w <= width && f.top + f.h <= height,
           s"frame rect ${f.w}x${f.h}@(${f.left},${f.top}) must fit the screen")
         require(f.disposal >= 0 && f.disposal <= 3, "disposal 0..3")
-        out.write(0x21); out.write(0xF9); out.write(4)
-        out.write((f.disposal << 2) | (if (f.transparentIdx >= 0) 1 else 0))
-        le16(4)
-        out.write(math.max(0, f.transparentIdx)); out.write(0)
-        out.write(0x2C)
-        le16(f.left); le16(f.top); le16(f.w); le16(f.h)
-        out.write(0)
-        out.write(minCodeSize)
-        val data = lzwEncode(Array.tabulate(f.w * f.h)(f.idx), minCodeSize)
-        var off = 0
-        while (off < data.length) {
-          val n = math.min(126, data.length - off)
-          out.write(n); out.write(data, off, n)
-          off += n
-        }
-        out.write(0)
+        gifFrame(out, f.left, f.top, f.w, f.h, Array.tabulate(f.w * f.h)(f.idx),
+          minCodeSize, 4, f.disposal, f.transparentIdx, false, null)
       }
       out.write(0x3B)
       out.toByteArray
@@ -626,23 +564,57 @@ object Multimodal {
       if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
     }
 
+    /** Little-endian bytes of a fixed-size header record. */
+    private def leBytes(n: Int)(fill: ByteBuffer => Unit): Array[Byte] = {
+      val bb = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+      fill(bb)
+      bb.array()
+    }
+
+    /** A RIFF chunk: fourcc, little-endian u32 size, payload, and a zero
+      * pad byte when the size is odd (RIFF chunks are word-aligned). */
+    private[multimodal] def riffChunk(fourcc: String,
+                                      payload: Array[Byte]): Array[Byte] =
+      ByteBuffer.allocate(8 + payload.length + (payload.length & 1))
+        .order(ByteOrder.LITTLE_ENDIAN)
+        .put(fourcc.getBytes("US-ASCII")).putInt(payload.length).put(payload)
+        .array()
+
+    /** A RIFF list chunk (`RIFF` or `LIST`): the form/list type fourcc,
+      * then the given sub-chunks. */
+    private[multimodal] def riffList(fourcc: String, listType: String,
+                                     chunks: Array[Byte]*): Array[Byte] =
+      riffChunk(fourcc,
+        Array.concat(listType.getBytes("US-ASCII") +: chunks: _*))
+
+    /** RIFF/WAVE framing shared by every WAV writer: a `fmt ` chunk (the
+      * 16-byte WAVEFORMAT core, then `fmtExt`, the codec's extension
+      * bytes) and the `data` chunk over `body` (no pad byte after it). */
+    private def wavFile(fmtTag: Int, channels: Int, sampleRate: Int,
+                        byteRate: Int, blockAlign: Int, bits: Int,
+                        fmtExt: Array[Byte], body: Array[Byte]): Array[Byte] = {
+      val fmtLen = 16 + fmtExt.length
+      val bb = ByteBuffer.allocate(20 + fmtLen + 8 + body.length)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(12 + fmtLen + 8 + body.length)
+      bb.put("WAVE".getBytes("US-ASCII"))
+      bb.put("fmt ".getBytes("US-ASCII")).putInt(fmtLen)
+      bb.putShort(fmtTag.toShort).putShort(channels.toShort).putInt(sampleRate)
+      bb.putInt(byteRate)
+      bb.putShort(blockAlign.toShort)
+      bb.putShort(bits.toShort)
+      bb.put(fmtExt)
+      bb.put("data".getBytes("US-ASCII")).putInt(body.length)
+      bb.put(body).array()
+    }
+
     /** WAV: RIFF/WAVE with PCM fmt chunk — channels LE u16 at offset 22,
       * sample rate LE u32 at 24; `bits` picks the PCM depth (8 unsigned /
       * 16 / 24 signed LE), `body` is raw sample bytes at that depth. */
     def wav(channels: Int, sampleRate: Int, body: Array[Byte],
             bits: Int = 16): Array[Byte] = {
       require(bits == 8 || bits == 16 || bits == 24, s"PCM bits $bits")
-      val bb = ByteBuffer.allocate(WavHeaderLen + body.length)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + body.length)
-      bb.put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      bb.putShort(1.toShort).putShort(channels.toShort).putInt(sampleRate)
-      bb.putInt(sampleRate * channels * (bits / 8))
-      bb.putShort((channels * (bits / 8)).toShort)
-      bb.putShort(bits.toShort)
-      bb.put("data".getBytes("US-ASCII")).putInt(body.length)
-      bb.put(body).array()
+      wavTyped(channels, sampleRate, body, bits)
     }
 
     /** WAV beyond canonical PCM — the other two real-crawl fmt layouts:
@@ -662,27 +634,19 @@ object Multimodal {
         case 6 | 7 => bits == 8
         case _ => bits == 8 || bits == 16 || bits == 24 || bits == 32
       }, s"bits $bits for fmt tag $fmtTag")
-      val fmtLen = if (extensible) 40 else 16
-      val bb = ByteBuffer.allocate(20 + fmtLen + 8 + body.length)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(12 + fmtLen + 8 + body.length)
-      bb.put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(fmtLen)
-      bb.putShort((if (extensible) 0xFFFE else fmtTag).toShort)
-      bb.putShort(channels.toShort).putInt(sampleRate)
-      bb.putInt(sampleRate * channels * (bits / 8))
-      bb.putShort((channels * (bits / 8)).toShort)
-      bb.putShort(bits.toShort)
-      if (extensible) {
-        bb.putShort(22.toShort) // cbSize
-        bb.putShort(bits.toShort) // wValidBitsPerSample
-        bb.putInt(0) // dwChannelMask
-        bb.putShort(fmtTag.toShort) // SubFormat GUID: real tag first
-        bb.put(Array(0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80, 0x00,
-          0x00, 0xAA, 0x00, 0x38, 0x9B, 0x71).map(_.toByte))
-      }
-      bb.put("data".getBytes("US-ASCII")).putInt(body.length)
-      bb.put(body).array()
+      val ext =
+        if (!extensible) Array.emptyByteArray
+        else leBytes(24) { bb =>
+          bb.putShort(22.toShort) // cbSize
+          bb.putShort(bits.toShort) // wValidBitsPerSample
+          bb.putInt(0) // dwChannelMask
+          bb.putShort(fmtTag.toShort) // SubFormat GUID: real tag first
+          bb.put(Array(0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80, 0x00,
+            0x00, 0xAA, 0x00, 0x38, 0x9B, 0x71).map(_.toByte))
+        }
+      wavFile(if (extensible) 0xFFFE else fmtTag, channels, sampleRate,
+        sampleRate * channels * (bits / 8), channels * (bits / 8), bits, ext,
+        body)
     }
 
     /** IMA ADPCM WAV (fmt tag 0x11): the 20-byte fmt chunk (bits 4,
@@ -691,19 +655,12 @@ object Multimodal {
       * index u8, reserved) followed by 4-byte nibble groups round-robin
       * per channel. */
     def wavIma(channels: Int, sampleRate: Int, blockAlign: Int,
-               samplesPerBlock: Int, body: Array[Byte]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(20 + 20 + 8 + body.length)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(12 + 20 + 8 + body.length)
-      bb.put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(20)
-      bb.putShort(0x11.toShort).putShort(channels.toShort).putInt(sampleRate)
-      bb.putInt(sampleRate * blockAlign / samplesPerBlock) // avg byte rate
-      bb.putShort(blockAlign.toShort).putShort(4.toShort)
-      bb.putShort(2.toShort).putShort(samplesPerBlock.toShort)
-      bb.put("data".getBytes("US-ASCII")).putInt(body.length)
-      bb.put(body).array()
-    }
+               samplesPerBlock: Int, body: Array[Byte]): Array[Byte] =
+      wavFile(0x11, channels, sampleRate,
+        sampleRate * blockAlign / samplesPerBlock, // avg byte rate
+        blockAlign, 4,
+        leBytes(4)(_.putShort(2.toShort).putShort(samplesPerBlock.toShort)),
+        body)
 
     /** Sun AU (.snd): the 24-byte big-endian header over raw body bytes
       * (encoding 1 u-law / 2 signed PCM8 / 3 PCM16 BE). */
@@ -740,6 +697,21 @@ object Multimodal {
       bb.put(body).array()
     }
 
+    /** avih, the AVI main header chunk (56-byte data). It leads hdrl in
+      * every AVI writer, so dwTotalFrames sits at file offset 48 and
+      * dwWidth/dwHeight at 64/68. */
+    private def aviMainHeader(width: Int, height: Int, frames: Int,
+                              streams: Int): Array[Byte] =
+      leBytes(64) { bb =>
+        bb.put("avih".getBytes("US-ASCII")).putInt(56)
+        bb.putInt(33367) // dwMicroSecPerFrame (~30fps)
+        bb.putInt(0).putInt(0).putInt(0) // maxBytesPerSec, padding, flags
+        bb.putInt(frames) // dwTotalFrames
+        bb.putInt(0).putInt(streams).putInt(0) // initialFrames, streams, bufferSize
+        bb.putInt(width).putInt(height)
+        bb.putInt(0).putInt(0).putInt(0).putInt(0) // dwReserved[4]
+      }
+
     /** AVI: RIFF/AVI LIST hdrl + avih — dwTotalFrames LE u32 at offset 48,
       * dwWidth at 64, dwHeight at 68. */
     def avi(width: Int, height: Int, frames: Int, body: Array[Byte]): Array[Byte] = {
@@ -749,14 +721,77 @@ object Multimodal {
       bb.put("AVI ".getBytes("US-ASCII"))
       bb.put("LIST".getBytes("US-ASCII")).putInt(68)
       bb.put("hdrl".getBytes("US-ASCII"))
-      bb.put("avih".getBytes("US-ASCII")).putInt(56)
-      bb.putInt(33367) // dwMicroSecPerFrame (~30fps)
-      bb.putInt(0).putInt(0).putInt(0) // maxBytesPerSec, padding, flags
-      bb.putInt(frames) // dwTotalFrames
-      bb.putInt(0).putInt(1).putInt(0) // initialFrames, streams, bufferSize
-      bb.putInt(width).putInt(height)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0) // dwReserved[4]
+      bb.put(aviMainHeader(width, height, frames, 1))
       bb.put(body).array()
+    }
+
+    /** One AVI stream header list: the strh fields that vary by stream
+      * (type, handler fourcc, rate, length, buffer and sample size, the
+      * rcFrame right/bottom corner) and the strf format body. */
+    private final case class AviStream(fccType: String, handler: Array[Byte],
+                                       rate: Int, length: Int,
+                                       bufferSize: Int, sampleSize: Int,
+                                       rcRight: Int, rcBottom: Int,
+                                       format: Array[Byte])
+
+    private def aviStrl(s: AviStream): Array[Byte] = {
+      val strh = leBytes(56) { bb =>
+        bb.put(s.fccType.getBytes("US-ASCII")).put(s.handler)
+        bb.putInt(0) // dwFlags
+        bb.putShort(0.toShort).putShort(0.toShort) // wPriority, wLanguage
+        bb.putInt(0).putInt(1).putInt(s.rate).putInt(0) // initialFrames, scale, rate, start
+        bb.putInt(s.length) // dwLength (frames for video, samples for audio)
+        bb.putInt(s.bufferSize).putInt(0).putInt(s.sampleSize) // bufferSize, quality, sampleSize
+        bb.putShort(0.toShort).putShort(0.toShort) // rcFrame left, top
+        bb.putShort(s.rcRight.toShort).putShort(s.rcBottom.toShort) // rcFrame right, bottom
+      }
+      riffList("LIST", "strl", riffChunk("strh", strh),
+        riffChunk("strf", s.format))
+    }
+
+    /** The video stream of every full AVI writer: a 'vids' strh with the
+      * given handler and a 24-bit BITMAPINFOHEADER strf. */
+    private def aviVideoStream(width: Int, height: Int, frames: Int,
+                               handler: String, compression: Int,
+                               sizeImage: Int, bufferSize: Int): AviStream =
+      AviStream("vids", handler.getBytes("US-ASCII"), 30, frames, bufferSize,
+        0, width, height, leBytes(40) { bb =>
+          bb.putInt(40).putInt(width).putInt(height) // biSize, biWidth, biHeight
+          bb.putShort(1.toShort).putShort(24.toShort) // biPlanes, biBitCount
+          bb.putInt(compression).putInt(sizeImage) // biCompression, biSizeImage
+          bb.putInt(0).putInt(0).putInt(0).putInt(0) // pels/meter, clrUsed, clrImportant
+        })
+
+    /** A complete RIFF/AVI: LIST hdrl (avih first, then one strl per
+      * stream) followed by LIST movi holding the given chunks. */
+    private def aviFile(width: Int, height: Int, frames: Int,
+                        streams: Seq[AviStream],
+                        movi: Seq[Array[Byte]]): Array[Byte] =
+      riffList("RIFF", "AVI ",
+        riffList("LIST", "hdrl",
+          aviMainHeader(width, height, frames, streams.length) +:
+            streams.map(aviStrl): _*),
+        riffList("LIST", "movi", movi: _*))
+
+    /** One uncompressed DIB frame: BOTTOM-UP rows of BGR triples, each row
+      * padded to a 4-byte boundary. */
+    private def dibFrame(width: Int, height: Int, f: Int,
+                         px: (Int, Int, Int, Int) => Int): Array[Byte] = {
+      val rowSize = ((3 * width + 3) / 4) * 4
+      val bb = ByteBuffer.allocate(rowSize * height)
+      var row = height - 1 // DIB rows are stored bottom-up
+      while (row >= 0) {
+        var x = 0
+        while (x < width) {
+          bb.put((px(f, x, row, 2) & 0xFF).toByte) // B
+          bb.put((px(f, x, row, 1) & 0xFF).toByte) // G
+          bb.put((px(f, x, row, 0) & 0xFF).toByte) // R
+          x += 1
+        }
+        bb.position(bb.position() + rowSize - 3 * width) // zero row padding
+        row -= 1
+      }
+      bb.array()
     }
 
     /** FULL AVI: the header-only [[avi]] builder extended to a complete
@@ -774,59 +809,12 @@ object Multimodal {
       * 0=R / 1=G / 2=B. */
     def aviFull(width: Int, height: Int, frames: Int,
                 px: (Int, Int, Int, Int) => Int): Array[Byte] = {
-      val rowSize = ((3 * width + 3) / 4) * 4
-      val frameBytes = rowSize * height
-      val moviSize = 4 + frames * (8 + frameBytes)
-      val bb = ByteBuffer.allocate(212 + 8 + moviSize)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + 200 + 8 + moviSize)
-      bb.put("AVI ".getBytes("US-ASCII"))
-      bb.put("LIST".getBytes("US-ASCII")).putInt(192)
-      bb.put("hdrl".getBytes("US-ASCII"))
-      bb.put("avih".getBytes("US-ASCII")).putInt(56)
-      bb.putInt(33367) // dwMicroSecPerFrame (~30fps)
-      bb.putInt(0).putInt(0).putInt(0) // maxBytesPerSec, padding, flags
-      bb.putInt(frames) // dwTotalFrames
-      bb.putInt(0).putInt(1).putInt(0) // initialFrames, streams, bufferSize
-      bb.putInt(width).putInt(height)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0) // dwReserved[4]
-      bb.put("LIST".getBytes("US-ASCII")).putInt(116)
-      bb.put("strl".getBytes("US-ASCII"))
-      bb.put("strh".getBytes("US-ASCII")).putInt(56)
-      bb.put("vids".getBytes("US-ASCII")).put("DIB ".getBytes("US-ASCII"))
-      bb.putInt(0) // dwFlags
-      bb.putShort(0.toShort).putShort(0.toShort) // wPriority, wLanguage
-      bb.putInt(0).putInt(1).putInt(30).putInt(0) // initialFrames, scale, rate, start
-      bb.putInt(frames) // dwLength (in frames for video streams)
-      bb.putInt(frameBytes).putInt(0).putInt(0) // bufferSize, quality, sampleSize
-      bb.putShort(0.toShort).putShort(0.toShort) // rcFrame left, top
-      bb.putShort(width.toShort).putShort(height.toShort) // rcFrame right, bottom
-      bb.put("strf".getBytes("US-ASCII")).putInt(40)
-      bb.putInt(40).putInt(width).putInt(height) // biSize, biWidth, biHeight
-      bb.putShort(1.toShort).putShort(24.toShort) // biPlanes, biBitCount
-      bb.putInt(0).putInt(frameBytes) // biCompression BI_RGB, biSizeImage
-      bb.putInt(0).putInt(0).putInt(0).putInt(0) // pels/meter, clrUsed, clrImportant
-      bb.put("LIST".getBytes("US-ASCII")).putInt(moviSize)
-      bb.put("movi".getBytes("US-ASCII"))
-      var f = 0
-      while (f < frames) {
-        bb.put("00db".getBytes("US-ASCII")).putInt(frameBytes)
-        var row = height - 1 // DIB rows are stored bottom-up
-        while (row >= 0) {
-          var x = 0
-          while (x < width) {
-            bb.put((px(f, x, row, 2) & 0xFF).toByte) // B
-            bb.put((px(f, x, row, 1) & 0xFF).toByte) // G
-            bb.put((px(f, x, row, 0) & 0xFF).toByte) // R
-            x += 1
-          }
-          var pad = rowSize - 3 * width
-          while (pad > 0) { bb.put(0.toByte); pad -= 1 }
-          row -= 1
-        }
-        f += 1
-      }
-      bb.array()
+      val frameBytes = ((3 * width + 3) / 4) * 4 * height
+      aviFile(width, height, frames,
+        Seq(aviVideoStream(width, height, frames, "DIB ", 0, frameBytes,
+          frameBytes)),
+        (0 until frames).map(f =>
+          riffChunk("00db", dibFrame(width, height, f, px))))
     }
 
     /** The WAVE registry's seven standard MS ADPCM coefficient pairs. */
@@ -842,25 +830,16 @@ object Multimodal {
       * channels alternating per nibble. */
     def wavMsAdpcm(channels: Int, sampleRate: Int, blockAlign: Int,
                    samplesPerBlock: Int, body: Array[Byte],
-                   coefs: Array[(Int, Int)] = MsAdpcmCoefs): Array[Byte] = {
-      val fmtLen = 22 + 4 * coefs.length
-      val bb = ByteBuffer.allocate(20 + fmtLen + 8 + body.length)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII"))
-      bb.putInt(12 + fmtLen + 8 + body.length)
-      bb.put("WAVE".getBytes("US-ASCII"))
-      bb.put("fmt ".getBytes("US-ASCII")).putInt(fmtLen)
-      bb.putShort(2.toShort).putShort(channels.toShort).putInt(sampleRate)
-      bb.putInt(sampleRate * blockAlign / samplesPerBlock)
-      bb.putShort(blockAlign.toShort).putShort(4.toShort)
-      bb.putShort((4 + 4 * coefs.length).toShort) // cbSize
-      bb.putShort(samplesPerBlock.toShort).putShort(coefs.length.toShort)
-      coefs.foreach { case (a, b) =>
-        bb.putShort(a.toShort).putShort(b.toShort)
-      }
-      bb.put("data".getBytes("US-ASCII")).putInt(body.length)
-      bb.put(body).array()
-    }
+                   coefs: Array[(Int, Int)] = MsAdpcmCoefs): Array[Byte] =
+      wavFile(2, channels, sampleRate,
+        sampleRate * blockAlign / samplesPerBlock, blockAlign, 4,
+        leBytes(6 + 4 * coefs.length) { bb =>
+          bb.putShort((4 + 4 * coefs.length).toShort) // cbSize
+          bb.putShort(samplesPerBlock.toShort).putShort(coefs.length.toShort)
+          coefs.foreach { case (a, b) =>
+            bb.putShort(a.toShort).putShort(b.toShort)
+          }
+        }, body)
 
     /** AVI with BOTH streams — DIB video plus a PCM16 soundtrack: the
       * [[aviFull]] structure extended with a second strl (an 'auds'
@@ -873,84 +852,22 @@ object Multimodal {
                      px: (Int, Int, Int, Int) => Int,
                      audioChannels: Int, audioRate: Int,
                      pcm16: Array[Short]): Array[Byte] = {
-      val rowSize = ((3 * width + 3) / 4) * 4
-      val frameBytes = rowSize * height
+      val frameBytes = ((3 * width + 3) / 4) * 4 * height
       val audioBytes = 2 * pcm16.length
-      val audioPad = audioBytes & 1
-      val moviLen = 4 + frames * (8 + frameBytes) + 8 + audioBytes + audioPad
-      val hdrlLen = 4 + 64 + (8 + 116) + (8 + 92)
-      val bb = ByteBuffer.allocate(12 + 8 + hdrlLen + 8 + moviLen)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII"))
-      bb.putInt(4 + 8 + hdrlLen + 8 + moviLen)
-      bb.put("AVI ".getBytes("US-ASCII"))
-      bb.put("LIST".getBytes("US-ASCII")).putInt(hdrlLen)
-      bb.put("hdrl".getBytes("US-ASCII"))
-      bb.put("avih".getBytes("US-ASCII")).putInt(56)
-      bb.putInt(33367)
-      bb.putInt(0).putInt(0).putInt(0)
-      bb.putInt(frames)
-      bb.putInt(0).putInt(2).putInt(0) // TWO streams
-      bb.putInt(width).putInt(height)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0)
-      // stream 0: video
-      bb.put("LIST".getBytes("US-ASCII")).putInt(116)
-      bb.put("strl".getBytes("US-ASCII"))
-      bb.put("strh".getBytes("US-ASCII")).putInt(56)
-      bb.put("vids".getBytes("US-ASCII")).put("DIB ".getBytes("US-ASCII"))
-      bb.putInt(0)
-      bb.putShort(0.toShort).putShort(0.toShort)
-      bb.putInt(0).putInt(1).putInt(30).putInt(0)
-      bb.putInt(frames)
-      bb.putInt(frameBytes).putInt(0).putInt(0)
-      bb.putShort(0.toShort).putShort(0.toShort)
-      bb.putShort(width.toShort).putShort(height.toShort)
-      bb.put("strf".getBytes("US-ASCII")).putInt(40)
-      bb.putInt(40).putInt(width).putInt(height)
-      bb.putShort(1.toShort).putShort(24.toShort)
-      bb.putInt(0).putInt(frameBytes)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0)
-      // stream 1: audio
-      bb.put("LIST".getBytes("US-ASCII")).putInt(92)
-      bb.put("strl".getBytes("US-ASCII"))
-      bb.put("strh".getBytes("US-ASCII")).putInt(56)
-      bb.put("auds".getBytes("US-ASCII")).putInt(0) // no handler fourcc
-      bb.putInt(0)
-      bb.putShort(0.toShort).putShort(0.toShort)
-      bb.putInt(0).putInt(1).putInt(audioRate).putInt(0)
-      bb.putInt(pcm16.length / audioChannels) // dwLength in samples
-      bb.putInt(audioBytes).putInt(0).putInt(2 * audioChannels) // sampleSize
-      bb.putShort(0.toShort).putShort(0.toShort)
-      bb.putShort(0.toShort).putShort(0.toShort)
-      bb.put("strf".getBytes("US-ASCII")).putInt(16)
-      bb.putShort(1.toShort).putShort(audioChannels.toShort)
-      bb.putInt(audioRate).putInt(audioRate * 2 * audioChannels)
-      bb.putShort((2 * audioChannels).toShort).putShort(16.toShort)
+      val audio = AviStream("auds", new Array[Byte](4), // no handler fourcc
+        audioRate, pcm16.length / audioChannels, // dwLength in samples
+        audioBytes, 2 * audioChannels, 0, 0, leBytes(16) { bb =>
+          bb.putShort(1.toShort).putShort(audioChannels.toShort)
+          bb.putInt(audioRate).putInt(audioRate * 2 * audioChannels)
+          bb.putShort((2 * audioChannels).toShort).putShort(16.toShort)
+        })
       // movi: frames then the soundtrack chunk
-      bb.put("LIST".getBytes("US-ASCII")).putInt(moviLen)
-      bb.put("movi".getBytes("US-ASCII"))
-      var f = 0
-      while (f < frames) {
-        bb.put("00db".getBytes("US-ASCII")).putInt(frameBytes)
-        var row = height - 1
-        while (row >= 0) {
-          var x = 0
-          while (x < width) {
-            bb.put((px(f, x, row, 2) & 0xFF).toByte)
-            bb.put((px(f, x, row, 1) & 0xFF).toByte)
-            bb.put((px(f, x, row, 0) & 0xFF).toByte)
-            x += 1
-          }
-          var pad = rowSize - 3 * width
-          while (pad > 0) { bb.put(0.toByte); pad -= 1 }
-          row -= 1
-        }
-        f += 1
-      }
-      bb.put("01wb".getBytes("US-ASCII")).putInt(audioBytes)
-      pcm16.foreach(bb.putShort)
-      if (audioPad == 1) bb.put(0.toByte)
-      bb.array()
+      aviFile(width, height, frames,
+        Seq(aviVideoStream(width, height, frames, "DIB ", 0, frameBytes,
+          frameBytes), audio),
+        (0 until frames).map(f =>
+          riffChunk("00db", dibFrame(width, height, f, px))) :+
+          riffChunk("01wb", leBytes(audioBytes)(bb => pcm16.foreach(bb.putShort))))
     }
 
     /** MJPEG AVI: [[aviFull]]'s RIFF structure with the video stream
@@ -961,48 +878,13 @@ object Multimodal {
       * uncompressed [[aviFull]] with an MJPEG re-encode of the same
       * DC-only content and the two collide frame-for-frame. */
     def aviMjpeg(width: Int, height: Int,
-                 frameJpegs: Array[Array[Byte]]): Array[Byte] = {
-      val frames = frameJpegs.length
-      val moviSize = 4 + frameJpegs.map(j => 8 + j.length + (j.length & 1)).sum
-      val bb = ByteBuffer.allocate(212 + 8 + moviSize)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + 200 + 8 + moviSize)
-      bb.put("AVI ".getBytes("US-ASCII"))
-      bb.put("LIST".getBytes("US-ASCII")).putInt(192)
-      bb.put("hdrl".getBytes("US-ASCII"))
-      bb.put("avih".getBytes("US-ASCII")).putInt(56)
-      bb.putInt(33367) // dwMicroSecPerFrame (~30fps)
-      bb.putInt(0).putInt(0).putInt(0) // maxBytesPerSec, padding, flags
-      bb.putInt(frames) // dwTotalFrames
-      bb.putInt(0).putInt(1).putInt(0) // initialFrames, streams, bufferSize
-      bb.putInt(width).putInt(height)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0) // dwReserved[4]
-      bb.put("LIST".getBytes("US-ASCII")).putInt(116)
-      bb.put("strl".getBytes("US-ASCII"))
-      bb.put("strh".getBytes("US-ASCII")).putInt(56)
-      bb.put("vids".getBytes("US-ASCII")).put("MJPG".getBytes("US-ASCII"))
-      bb.putInt(0) // dwFlags
-      bb.putShort(0.toShort).putShort(0.toShort) // wPriority, wLanguage
-      bb.putInt(0).putInt(1).putInt(30).putInt(0) // initialFrames, scale, rate, start
-      bb.putInt(frames) // dwLength (in frames for video streams)
-      bb.putInt(frameJpegs.map(_.length).max).putInt(0).putInt(0) // buf, qual, sampleSize
-      bb.putShort(0.toShort).putShort(0.toShort) // rcFrame left, top
-      bb.putShort(width.toShort).putShort(height.toShort) // rcFrame right, bottom
-      bb.put("strf".getBytes("US-ASCII")).putInt(40)
-      bb.putInt(40).putInt(width).putInt(height) // biSize, biWidth, biHeight
-      bb.putShort(1.toShort).putShort(24.toShort) // biPlanes, biBitCount
-      bb.putInt(0x47504A4D) // biCompression 'MJPG'
-      bb.putInt(0) // biSizeImage (per-frame, varies)
-      bb.putInt(0).putInt(0).putInt(0).putInt(0) // pels/meter, clrUsed, clrImportant
-      bb.put("LIST".getBytes("US-ASCII")).putInt(moviSize)
-      bb.put("movi".getBytes("US-ASCII"))
-      frameJpegs.foreach { j =>
-        bb.put("00dc".getBytes("US-ASCII")).putInt(j.length)
-        bb.put(j)
-        if ((j.length & 1) == 1) bb.put(0.toByte) // RIFF word alignment
-      }
-      bb.array()
-    }
+                 frameJpegs: Array[Array[Byte]]): Array[Byte] =
+      aviFile(width, height, frameJpegs.length,
+        Seq(aviVideoStream(width, height, frameJpegs.length, "MJPG",
+          0x47504A4D, // biCompression 'MJPG'
+          0, // biSizeImage (per-frame, varies)
+          frameJpegs.map(_.length).max)),
+        frameJpegs.toSeq.map(riffChunk("00dc", _)))
 
     /** JPEG frame dimensions via a real SOF-marker walk (dimensions sit in
       * a variable-position Start-Of-Frame segment, not a fixed offset).
@@ -1151,6 +1033,15 @@ object Multimodal {
       } else ("unknown", 0, 0, 1, 0)
     }
 
+  }
+
+  /** One fixture row per document: `row(doc_id)` over the documents
+    * table — the shape every per-id `synthetic*` builder shares. */
+  private[multimodal] def perDocId(docs: DataFrame)
+                                  (row: Long => MediaRow): Dataset[MediaRow] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id")).as[Long].map(row)
   }
 
   /** Deterministic media fixtures derived from the documents table — REAL
@@ -2941,11 +2832,8 @@ object Multimodal {
     * background) on even ids, 1 (keep) on odd — so both disposal
     * semantics land in the oracle. Identity-ramp grayscale palette;
     * every value replays arithmetically. */
-  def syntheticCompositedGifMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val palette = Array.tabulate(64 * 3)(b => (((b / 3) * 4 + 1) % 256).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticCompositedGifMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       import Containers.GifFrameSpec
       def idx0(k: Int) = ((id * 23 + (k % 16) * 3 + (k / 16) * 5) % 64).toInt
       def idx1(k: Int) = {
@@ -2958,10 +2846,9 @@ object Multimodal {
         GifFrameSpec(0, 0, 16, 16, idx0,
           disposal = if (id % 2 == 0) 2 else 1),
         GifFrameSpec(4, 4, 8, 8, idx1, disposal = 0, transparentIdx = 63),
-        GifFrameSpec(8, 0, 8, 8, idx2)), palette, bgIndex = 0)
+        GifFrameSpec(8, 0, 8, 8, idx2)), Containers.Ramp64, bgIndex = 0)
       MediaRow(id, "video", payload, 16, 16, 3)
     }
-  }
 
   /** COMPOSITED APNG fixtures — the q267 canvas story in PNG's
     * vocabulary: a full opaque base (dispose NONE on even ids,
@@ -2972,10 +2859,8 @@ object Multimodal {
     * restores after presentation), then an opaque top-right SOURCE rect.
     * All alphas 0/255 so the integer OVER is exact and the oracle
     * replays the canvas algebra pixel-by-pixel. */
-  def syntheticApngMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticApngMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       import Containers.ApngFrameSpec
       def g0(x: Int, y: Int): Int = (((id * 23 + x * 3 + y * 5) % 64) * 4 + 1).toInt
       def g1(lx: Int, ly: Int): Int = (((id * 7 + lx * 5 + ly * 3) % 63) * 4 + 1).toInt
@@ -2998,7 +2883,6 @@ object Multimodal {
         Containers.pngAnimated(16, 16, Seq(base, pierced, topRight)),
         16, 16, 3)
     }
-  }
 
   /** Deterministic FULL-decode video fixtures: every doc becomes a
     * complete AVI whose frame f's channel-c pixel at (x, y) is the closed
@@ -3007,10 +2891,8 @@ object Multimodal {
     * while the engine earns it through the real RIFF walk + DIB
     * reassembly. Dimensions/frame counts stay small — the contract is the
     * codec, not the byte volume. */
-  def syntheticVideoMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticVideoMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val w = (5 + id % 9).toInt
       val h = (4 + (id * 3) % 7).toInt
       val nf = (2 + id % 4).toInt
@@ -3018,7 +2900,6 @@ object Multimodal {
         (f, x, y, c) => ((id * 31 + f * 19 + x * 7 + y * 13 + c * 91) % 256).toInt)
       MediaRow(id, "video", payload, w, h, nf)
     }
-  }
 
   /** REAL GIF pixel decode — LZW is pure integer code-table expansion, no
     * codec library needed: walk the GIF89a block structure (logical screen
@@ -3307,10 +3188,8 @@ object Multimodal {
     * appears, including the four dimension-swapping ones. The closed
     * form + the published tag-274 source-coordinate table replay the
     * displayed quadrants arithmetically. */
-  def syntheticExifJpegMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticExifJpegMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       def cell(bx: Int, by: Int): Int =
         ((id * 41 + bx * bx * (5 + id % 13) + by * by * (3 + id % 11) +
           bx * by * (7 + id % 5)) % 256).toInt
@@ -3319,7 +3198,6 @@ object Multimodal {
         Jpeg.encodeGrayBlocks(64, 48, grays), (1 + id % 8).toInt)
       MediaRow(id, "image", payload, 64, 48, 1)
     }
-  }
 
   /** Deterministic baseline-JPEG fixtures: every doc becomes a DC-only
     * JPEG (all AC coefficients zero) whose 8×8 block k decodes to the
@@ -3505,10 +3383,8 @@ object Multimodal {
     * named `unsupported_codec` verdict so the census reports the codec
     * as evidence), each planted by patching a REAL encoder's output so
     * the failure path is the real parser, not a synthetic throw. */
-  def syntheticHealthMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticHealthMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       def sofPatch(jpeg: Array[Byte], at: Int, value: Int): Array[Byte] = {
         val out = jpeg.clone()
         val sof = out.indices.find(i => (out(i) & 0xFF) == 0xFF &&
@@ -3628,7 +3504,7 @@ object Multimodal {
             }, blend = 1)))
         case 24 => // BI_RLE8 BMP: decodes through the run-length walk
           Raster.bmp8Rle(10, 8, k => ((id * 7 + (k / 3)) % 251).toInt,
-            Array.tabulate(256 * 3)(b => (b / 3).toByte))
+            Containers.GrayRamp)
         case 25 => // JPEG-in-TIFF: a named scope restriction
           {
             val t = Raster.tiff(8, 6, 1, 1, k => ((id + k) % 251).toInt)
@@ -3683,7 +3559,6 @@ object Multimodal {
       }
       MediaRow(id, "mixed", payload, 0, 0, 1)
     }
-  }
 
   /** One row per payload from the [[ContainerMeta]] walks — nullable
     * fields where a format has no such concept (image dims for MP3,
@@ -3799,10 +3674,8 @@ object Multimodal {
     * MP3 exercising extended headers (ids divisible by 5) and
     * unsynchronisation (ids divisible by 3). Every field/value is a
     * closed form of doc_id, so the oracle replays all four walks. */
-  def syntheticTaggedContainerMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticTaggedContainerMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val payload: Array[Byte] = (id % 4) match {
         case 0 =>
           ContainerMeta.mp4Stub("mp42", 600, 600 + (id * 11) % 6000,
@@ -3836,7 +3709,6 @@ object Multimodal {
       }
       MediaRow(id, "container", payload, 0, 0, 1)
     }
-  }
 
   /** ID3v2 text-frame extraction over audio payloads — the metadata
     * curation pipelines filter and label audio on (title, artist,
@@ -3860,10 +3732,8 @@ object Multimodal {
     * UTF-16+BOM / UTF-16BE per frame (ASCII content, so every charset
     * round-trips the same string) and zero-padding after the last frame
     * on every 5th doc (the legal layout real taggers emit). */
-  def syntheticTaggedAudioMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticTaggedAudioMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val frames = Seq(
         "TIT2" -> s"title-${(id * 7) % 1000}",
         "TPE1" -> s"artist-${(id * 13) % 100}") ++
@@ -3873,7 +3743,6 @@ object Multimodal {
         padding = if (id % 5 == 0) 32 else 0)
       MediaRow(id, "audio", payload, 0, 0, 1)
     }
-  }
 
   /** Container fixtures cycling the five crawl-majority shapes by
     * doc_id mod 5 — an avc1 video MP4, a two-track hev1+mp4a MP4 (dims
@@ -3881,10 +3750,8 @@ object Multimodal {
     * MPEG1/2 Layer-III stream (ID3v2-tagged on odd ids, so the syncsafe
     * skip is earned), Ogg/vorbis, and Ogg/opus. Every parsed field is a
     * closed form of doc_id, so the oracle replays the whole census. */
-  def syntheticContainerMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticContainerMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val payload: Array[Byte] = (id % 5) match {
         case 0 =>
           ContainerMeta.mp4Stub("isom", 1000, 1000 + (id * 7) % 9000,
@@ -3912,7 +3779,6 @@ object Multimodal {
       }
       MediaRow(id, "container", payload, 0, 0, 1)
     }
-  }
 
   /** Animated-WebP fixtures exercising the ANMF compositing algebra —
     * the q267 canvas story in WebP's vocabulary: a full-canvas base
@@ -3924,10 +3790,8 @@ object Multimodal {
     * blend formula is exact and the whole fixture replays
     * arithmetically; frames are genuine [[Webp.encodeLossless]] VP8L
     * streams inside real ANMF chunks. */
-  def syntheticAnimatedWebpMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticAnimatedWebpMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       def gray(v: Int, a: Int): Int = (a << 24) | (v << 16) | (v << 8) | v
       val f0 = Array.tabulate(256) { k =>
         gray((((id * 29 + (k % 16) * 5 + (k / 16) * 7) % 64) * 4 + 2).toInt, 255)
@@ -3947,7 +3811,16 @@ object Multimodal {
         Webp.AnimFrameSpec(8, 0, 8, 8, f2, noBlend = true)))
       MediaRow(id, "video", payload, 16, 16, 3)
     }
-  }
+
+  /** The still-image fixture canvas: (16 + id mod 5) × (16 + 3·id mod 5). */
+  private def stillDims(id: Long): (Int, Int) =
+    ((16 + id % 5).toInt, (16 + (id * 3) % 5).toInt)
+
+  /** The q271 still-image closed form: quadratic position terms with
+    * per-item prime-modulus coefficients (the degeneracy rule), mod `m`. */
+  private def q271Value(id: Long, x: Int, y: Int, m: Int): Int =
+    ((x.toLong * x * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
+      x.toLong * y * (5 + id % 11) + id * 23) % m).toInt
 
   /** GIF layout-variant fixtures: single-frame GIFs cycling through the
     * full descriptor-layout surface — INTERLACED stream order on even
@@ -3957,19 +3830,14 @@ object Multimodal {
     * formula is POSITION-dependent, so the census must be position-
     * sensitive (block means) — a de-interlace bug permutes rows and
     * changes means, which a whole-image sum census cannot see. */
-  def syntheticGifVariantMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val palette = Array.tabulate(64 * 3)(b => (((b / 3) * 4 + 1) % 256).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
+  def syntheticGifVariantMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
       val payload = Containers.gifFull(w, h,
-        k => ((id * 7 + (k % w) * 3 + (k / w) * 5) % 64).toInt, palette,
+        k => ((id * 7 + (k % w) * 3 + (k / w) * 5) % 64).toInt, Containers.Ramp64,
         interlaced = id % 2 == 0, localTable = id % 3 == 0)
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** Uncompressed-raster fixtures across the BMP/TIFF layout matrix:
     * bottom-up and top-down 24-bit BMP, 8-bit palette BMP (grayscale
@@ -3984,35 +3852,28 @@ object Multimodal {
     * engine earns each layout differently; the census is the
     * position-sensitive block-means table, which a bottom-up/top-down
     * row flip or a strip mis-stitch cannot survive. */
-  def syntheticRasterMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPal = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
-      def g(x: Int, y: Int): Int =
-        ((x.toLong * x * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
-          x.toLong * y * (5 + id % 11) + id * 23) % 251).toInt
+  def syntheticRasterMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
+      def g(x: Int, y: Int): Int = q271Value(id, x, y, 251)
       def rgb(k: Int): Int = g((k / 3) % w, (k / 3) / w)
       def gray(k: Int): Int = g(k % w, k / w)
       val payload: Array[Byte] = (id % 8) match {
         case 0 => Raster.bmp24(w, h, rgb)
         case 1 => Raster.bmp24(w, h, rgb, topDown = true)
-        case 2 => Raster.bmp8(w, h, gray, grayPal)
+        case 2 => Raster.bmp8(w, h, gray, Containers.GrayRamp)
         case 3 => Raster.bmp32(w, h, rgb, reserved = (id % 251).toInt)
         case 4 => Raster.tiff(w, h, photometric = 1, spp = 1, gray,
           rowsPerStrip = 3)
         case 5 => Raster.tiff(w, h, photometric = 2, spp = 3, rgb,
           bigEndian = true)
         case 6 => Raster.tiff(w, h, photometric = 3, spp = 1, gray,
-          palette = grayPal)
+          palette = Containers.GrayRamp)
         case _ => Raster.tiff(w, h, photometric = 0, spp = 1,
           k => 255 - gray(k), bigEndian = true, rowsPerStrip = 5)
       }
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** Lossy-WebP fixtures: 32x32 canvases of 4x4-px uniform cells on the
     * 8x8 block grid (per-doc quadratic coefficients from prime-modulus
@@ -4021,10 +3882,8 @@ object Multimodal {
     * ([[Vp8Enc.encodeCellGrayWebp]]), so the decoded DISPLAY — fancy
     * upsampling, fixed-point YUV→RGB and all — replays closed-form via
     * [[Vp8Enc.displayedGray]]. */
-  def syntheticLossyWebpMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticLossyWebpMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val cells = Array.tabulate(64) { k =>
         val cx = k % 8; val cy = k / 8
         (((cx * cx * (11 + id % 23) + cy * cy * (5 + id % 19) +
@@ -4033,7 +3892,6 @@ object Multimodal {
       MediaRow(id, "image", Vp8Enc.encodeCellGrayWebp(32, 32, cells),
         32, 32, 1)
     }
-  }
 
   /** WebP VP8L fixtures across the DECODER-PATH matrix — six variants by
     * doc_id mod 6, all real [[Webp.encodeLossless]] output:
@@ -4051,12 +3909,9 @@ object Multimodal {
     * replay is exact. Variant 5 additionally ships inside a VP8X
     * extended container (the layout real encoders emit), pinning the
     * chunk walk past the canvas header. */
-  def syntheticWebpMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
+  def syntheticWebpMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
       def f(x: Int, y: Int): Int =
         ((x.toLong * x * (5 + id % 31) + y.toLong * y * (7 + id % 23) +
           x.toLong * y * (3 + id % 13) + id * 29) % 241).toInt
@@ -4085,7 +3940,6 @@ object Multimodal {
       }
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** G.711 WAV fixtures — the telephony companding codecs (u-law on
     * even ids, A-law on odd): the code BYTES are planted directly
@@ -4093,17 +3947,14 @@ object Multimodal {
     * oracle replays the published segment/mantissa expansion in integer
     * SQL — the engine earns the same values through the fmt-tag walk
     * and the companded-byte decode. */
-  def syntheticWavG711Media(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWavG711Media(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (200 + (id * 7) % 200).toInt
       val body = Array.tabulate(n)(p => ((id * 29 + p * 13) % 256).toByte)
       MediaRow(id, "audio",
         Containers.wavTyped(1, 8000, body, 8,
           fmtTag = if (id % 2 == 0) 7 else 6), 0, 0, 1)
     }
-  }
 
   /** IMA ADPCM WAV fixtures — block-structured 4-bit telephony/game
     * audio: every block plants its PREDICTOR (the header sample) with
@@ -4113,10 +3964,8 @@ object Multimodal {
     * walk (header parse, nibble groups, clamps). The full nibble math
     * (all 16 codes, index adaptation, both clamps, stereo round-robin)
     * is pinned by hand-computed vectors in MultimodalSpec. */
-  def syntheticWavAdpcmMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWavAdpcmMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val nBlocks = (3 + id % 3).toInt
       val blockAlign = 12 // 4 header + 8 nibble bytes = 17 samples
       val body = new Array[Byte](nBlocks * blockAlign)
@@ -4131,7 +3980,6 @@ object Multimodal {
       MediaRow(id, "audio",
         Containers.wavIma(1, 8000, blockAlign, 17, body), 0, 0, 1)
     }
-  }
 
   /** Legacy audio-container fixtures — Sun AU and AIFF, the
     * pre-streaming-era formats old crawls still carry: AU u-law (its
@@ -4140,10 +3988,8 @@ object Multimodal {
     * id mod 4. The PCM profiles plant the q270 value family and the
     * u-law profile plants raw code bytes, so the oracle replays both
     * paths through the published expansions. */
-  def syntheticLegacyAudioMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticLegacyAudioMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (200 + (id * 7) % 200).toInt
       def k(pp: Int): Int = ((id * 23 + pp.toLong * 7) % 4096 - 2048).toInt
       def pcm16be(): Array[Byte] = {
@@ -4167,7 +4013,6 @@ object Multimodal {
       }
       MediaRow(id, "audio", payload, 0, 0, 1)
     }
-  }
 
   /** MS ADPCM WAV fixtures — the other legacy WAV block codec: every
     * block plants coefficient pair 0 (256, 0 — prediction = previous
@@ -4177,10 +4022,8 @@ object Multimodal {
     * form the oracle replays while the engine earns it through the real
     * header parse, coefficient lookup, and nibble walk. The full
     * prediction/adaptation math is hand-vector-pinned in spec. */
-  def syntheticWavMsAdpcmMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWavMsAdpcmMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val nBlocks = (3 + id % 3).toInt
       val blockAlign = 12 // 7 header + 5 nibble bytes = 12 samples
       val body = new Array[Byte](nBlocks * blockAlign)
@@ -4199,7 +4042,6 @@ object Multimodal {
       MediaRow(id, "audio",
         Containers.wavMsAdpcm(1, 8000, blockAlign, 12, body), 0, 0, 1)
     }
-  }
 
   /** COMPRESSED-TIFF fixtures — the strip codecs real scanner/archival
     * TIFFs actually use: LZW (with the spec's early code-size change),
@@ -4211,16 +4053,10 @@ object Multimodal {
     * earns each variant through a different codec x predictor path; the
     * census is the position-sensitive block-means table (a predictor
     * mis-accumulation corrupts trailing columns, which means catch). */
-  def syntheticTiffCompressedMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPal = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
-      def g(x: Int, y: Int): Int =
-        ((x.toLong * x * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
-          x.toLong * y * (5 + id % 11) + id * 23) % 251).toInt
+  def syntheticTiffCompressedMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
+      def g(x: Int, y: Int): Int = q271Value(id, x, y, 251)
       def rgb(k: Int): Int = g((k / 3) % w, (k / 3) / w)
       def gray(k: Int): Int = g(k % w, k / w)
       val payload: Array[Byte] = (id % 8) match {
@@ -4234,14 +4070,13 @@ object Multimodal {
         case 4 => Raster.tiff(w, h, 1, 1, gray, rowsPerStrip = 5,
           compression = 32773)
         case 5 => Raster.tiff(w, h, 2, 3, rgb, compression = 32773)
-        case 6 => Raster.tiff(w, h, 3, 1, gray, palette = grayPal,
+        case 6 => Raster.tiff(w, h, 3, 1, gray, palette = Containers.GrayRamp,
           compression = 5)
         case _ => Raster.tiff(w, h, 1, 1, gray, bigEndian = true,
           rowsPerStrip = 4, compression = 5, predictor = 2)
       }
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** BI_RLE8 BMP fixtures: run-length-compressed palette BMPs (the
     * icon/screenshot era's dominant compressed BMP). Even ids plant a
@@ -4249,22 +4084,14 @@ object Multimodal {
     * encoded runs), odd ids the q271 quadratic (mostly absolute mode),
     * so BOTH RLE modes land in the oracle row. Identity-ramp palette;
     * block-means census (an RLE cursor bug moves pixels). */
-  def syntheticBmpRleMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val grayPal = Array.tabulate(256 * 3)(b => (b / 3).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
-      def g(x: Int, y: Int): Int = {
-        val xx = if (id % 2 == 0) x / 3 else x
-        ((xx.toLong * xx * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
-          xx.toLong * y * (5 + id % 11) + id * 23) % 251).toInt
-      }
+  def syntheticBmpRleMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
+      def g(x: Int, y: Int): Int =
+        q271Value(id, if (id % 2 == 0) x / 3 else x, y, 251)
       MediaRow(id, "image",
-        Raster.bmp8Rle(w, h, k => g(k % w, k / w), grayPal), w, h, 1)
+        Raster.bmp8Rle(w, h, k => g(k % w, k / w), Containers.GrayRamp), w, h, 1)
     }
-  }
 
   /** BI_RLE4 BMP fixtures — the 4-bit icon-era sibling of q287: every
     * row alternates ABSOLUTE mode (packed nibbles, word-aligned) and
@@ -4277,11 +4104,8 @@ object Multimodal {
     import spark.implicits._
     val pal16 = Array.tabulate(16 * 3)(b => ((b / 3) * 17).toByte)
     docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
-      def g4(x: Int, y: Int): Int =
-        ((x.toLong * x * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
-          x.toLong * y * (5 + id % 11) + id * 23) % 16).toInt
+      val (w, h) = stillDims(id)
+      def g4(x: Int, y: Int): Int = q271Value(id, x, y, 16)
       MediaRow(id, "image",
         Raster.bmp4Rle(w, h, k => g4(k % w, k / w), pal16), w, h, 1)
     }
@@ -4294,15 +4118,10 @@ object Multimodal {
     * the tiled layout (tags 322-325, 16x16 tiles over 16-20-px canvases
     * → edge tiles carry zero padding the clip must drop) across the
     * strip codecs. One q271 closed form; block-means census. */
-  def syntheticTiffDeepMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
-      def g(x: Int, y: Int): Int =
-        ((x.toLong * x * (7 + id % 29) + y.toLong * y * (11 + id % 17) +
-          x.toLong * y * (5 + id % 11) + id * 23) % 251).toInt
+  def syntheticTiffDeepMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
+      def g(x: Int, y: Int): Int = q271Value(id, x, y, 251)
       def gray(k: Int): Int = g(k % w, k / w)
       def rgb(k: Int): Int = g((k / 3) % w, (k / 3) / w)
       def noise(k: Int): Int = ((id + k) * 31 + 5).toInt % 256
@@ -4327,7 +4146,6 @@ object Multimodal {
       }
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** PNG COLOR-TYPE matrix fixtures: every doc cycles through the five
     * 8-bit color types (gray / RGB / palette / gray+alpha / RGBA — real
@@ -4337,13 +4155,9 @@ object Multimodal {
     * covers the matrix (palette goes through an identity-ramp lookup —
     * its own CASE); the census is the position-sensitive block-means
     * table, which a mis-scattered ADAM7 pass cannot survive. */
-  def syntheticPngVariantMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val palette = Array.tabulate(64 * 3)(b => (((b / 3) * 4 + 1) % 256).toByte)
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
+  def syntheticPngVariantMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
       def g(i: Int): Int = ((id * 13 + (i % w) * 3 + (i / w) * 7) % 256).toInt
       val colorType = Array(0, 2, 3, 4, 6)((id % 5).toInt)
       val interlaced = id % 2 == 0
@@ -4354,7 +4168,7 @@ object Multimodal {
         case 2 => Containers.pngTyped(w, h, 2, k => g(k / 3),
           filterType = filterType, interlaced = interlaced)
         case 3 => Containers.pngTyped(w, h, 3, i => g(i) % 64,
-          palette = palette,
+          palette = Containers.Ramp64,
           trns = if (id % 10 == 2) Array.fill(64)(200.toByte) else null,
           filterType = filterType, interlaced = interlaced)
         case 4 => Containers.pngTyped(w, h, 4,
@@ -4366,17 +4180,14 @@ object Multimodal {
       }
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** WAV PCM-depth fixtures: 8-bit unsigned / 16-bit / 24-bit signed
     * clips rotating by id mod 3. The 24-bit samples plant a 16-bit value
     * in their top two bytes plus deterministic low-byte noise that the
     * conversion must DROP (so 16- and 24-bit clips replay one formula),
     * and the 8-bit clip replays through the (u − 128)·256 mapping. */
-  def syntheticWavDepthMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWavDepthMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (200 + (id * 7) % 200).toInt
       val bits = Array(8, 16, 24)((id % 3).toInt)
       val body = bits match {
@@ -4405,7 +4216,6 @@ object Multimodal {
       }
       MediaRow(id, "audio", Containers.wav(1, 16000, body, bits), 0, 0, 1)
     }
-  }
 
   /** WAV fmt-LAYOUT fixtures — the two crawl layouts beyond canonical
     * PCM: IEEE float32 (what DAWs export) and WAVE_FORMAT_EXTENSIBLE
@@ -4416,10 +4226,8 @@ object Multimodal {
     * round-half-even conversion returns exactly k) and int32 stores
     * k·2^16 (the top-16-bit shift returns k) — so ONE oracle formula
     * covers the whole fmt matrix. */
-  def syntheticWavFmtMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticWavFmtMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       val n = (200 + (id * 7) % 200).toInt
       def k(p: Int): Int = ((id * 23 + p.toLong * 7) % 4096 - 2048).toInt
       val profile = (id % 4).toInt
@@ -4443,7 +4251,6 @@ object Multimodal {
       }
       MediaRow(id, "audio", payload, 0, 0, 1)
     }
-  }
 
   /** PNG bit-DEPTH fixtures — icons/logos at sub-byte depths plus
     * 16-bit photo masters: depths rotate 1/2/4/8/16 with palette (even
@@ -4452,12 +4259,9 @@ object Multimodal {
     * Sub-byte gray scales by the spec factor 255/(2^d − 1) (the palette
     * is the matching ramp) and 16-bit reduces to its planted HIGH byte
     * over low-byte noise, so ONE closed form covers the matrix. */
-  def syntheticPngDepthMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
-      val w = (16 + id % 5).toInt
-      val h = (16 + (id * 3) % 5).toInt
+  def syntheticPngDepthMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
+      val (w, h) = stillDims(id)
       val d = Array(1, 2, 4, 8, 16)(((id / 2) % 5).toInt)
       def v(i: Int): Int =
         ((id * 13 + (i % w) * 3 + (i / w) * 7) %
@@ -4486,7 +4290,6 @@ object Multimodal {
             interlaced = interlaced, bitDepth = d)
       MediaRow(id, "image", payload, w, h, 1)
     }
-  }
 
   /** Deterministic PROGRESSIVE (SOF2) JPEG fixtures: every doc becomes a
     * DC-only progressive JPEG through the REAL spectral-selection
@@ -4559,10 +4362,8 @@ object Multimodal {
     * block grid equals the display grid and ONE closed form replays
     * every layout; every 3rd id plants restart markers (the MCU walk's
     * predictor resets must survive the wide MCUs). */
-  def syntheticJpegSampledMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { id =>
+  def syntheticJpegSampledMedia(docs: DataFrame): Dataset[MediaRow] =
+    perDocId(docs) { id =>
       // dims are exact MCU multiples AND multiples of 16 (quadrant
       // boundaries land on block edges, the q266 rule)
       val variants = Array(
@@ -4576,7 +4377,6 @@ object Multimodal {
         Jpeg.encodeGraySampled(w, h, grays, hv,
           restartInterval = if (id % 3 == 0) 1 else 0), w, h, 1)
     }
-  }
 
   /** Deterministic 4:2:0 (chroma-subsampled) baseline JPEG fixtures:
     * every doc becomes a DC-only YCbCr JPEG with luma sampled 2×2 and

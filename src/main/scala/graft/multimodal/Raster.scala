@@ -743,34 +743,7 @@ private[graft] object Raster {
       stream.write(0); stream.write(if (y == 0) 1 else 0) // EOL / EOB
       y -= 1
     }
-    val body = stream.toByteArray
-    val nPal = palette.length / 3
-    val offBits = 14 + 40 + 4 * nPal
-    val out = new Array[Byte](offBits + body.length)
-    def le16(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-    }
-    def le32(off: Int, v: Int): Unit = {
-      le16(off, v & 0xFFFF); le16(off + 2, (v >> 16) & 0xFFFF)
-    }
-    out(0) = 'B'.toByte; out(1) = 'M'.toByte
-    le32(2, out.length); le32(10, offBits)
-    le32(14, 40)
-    le32(18, width); le32(22, height)
-    le16(26, 1); le16(28, 8)
-    le32(30, 1) // BI_RLE8
-    le32(34, body.length)
-    le32(38, 2835); le32(42, 2835)
-    le32(46, nPal); le32(50, 0)
-    var pi = 0
-    while (pi < nPal) {
-      out(54 + 4 * pi) = palette(3 * pi + 2)
-      out(54 + 4 * pi + 1) = palette(3 * pi + 1)
-      out(54 + 4 * pi + 2) = palette(3 * pi)
-      pi += 1
-    }
-    System.arraycopy(body, 0, out, offBits, body.length)
-    out
+    bmpFile(width, height, 8, 1, palette, stream.toByteArray) // BI_RLE8
   }
 
   /** BI_RLE4 4-bit palette BMP: `idx(k)` (values 0..15) as [[bmp8Rle]];
@@ -810,8 +783,34 @@ private[graft] object Raster {
       stream.write(0); stream.write(if (y == 0) 1 else 0) // EOL / EOB
       y -= 1
     }
-    val body = stream.toByteArray
-    val nPal = palette.length / 3
+    bmpFile(width, height, 4, 2, palette, stream.toByteArray) // BI_RLE4
+  }
+
+  private def encodeBmp(width: Int, height: Int, bitCount: Int,
+                        rowSize: Int, topDown: Boolean,
+                        rgbPalette: Array[Byte])
+                       (fill: (Array[Byte], Int) => Unit): Array[Byte] = {
+    val body = new Array[Byte](rowSize * height)
+    val row = new Array[Byte](rowSize)
+    var y = 0
+    while (y < height) {
+      java.util.Arrays.fill(row, 0.toByte)
+      fill(row, y)
+      val dst = (if (topDown) y else height - 1 - y) * rowSize
+      System.arraycopy(row, 0, body, dst, rowSize)
+      y += 1
+    }
+    bmpFile(width, if (topDown) -height else height, bitCount, 0, // BI_RGB
+      rgbPalette, body)
+  }
+
+  /** BMP file: BITMAPFILEHEADER + BITMAPINFOHEADER (`heightField`
+    * negative = top-down rows, 72 dpi), the RGB `palette` (null = none)
+    * as BGRx quads, then the pixel `body`. */
+  private def bmpFile(width: Int, heightField: Int, bitCount: Int,
+                      compression: Int, palette: Array[Byte],
+                      body: Array[Byte]): Array[Byte] = {
+    val nPal = if (palette == null) 0 else palette.length / 3
     val offBits = 14 + 40 + 4 * nPal
     val out = new Array[Byte](offBits + body.length)
     def le16(off: Int, v: Int): Unit = {
@@ -822,63 +821,21 @@ private[graft] object Raster {
     }
     out(0) = 'B'.toByte; out(1) = 'M'.toByte
     le32(2, out.length); le32(10, offBits)
-    le32(14, 40)
-    le32(18, width); le32(22, height)
-    le16(26, 1); le16(28, 4)
-    le32(30, 2) // BI_RLE4
-    le32(34, body.length)
-    le32(38, 2835); le32(42, 2835)
-    le32(46, nPal); le32(50, 0)
-    var pi = 0
-    while (pi < nPal) {
-      out(54 + 4 * pi) = palette(3 * pi + 2)
-      out(54 + 4 * pi + 1) = palette(3 * pi + 1)
-      out(54 + 4 * pi + 2) = palette(3 * pi)
-      pi += 1
-    }
-    System.arraycopy(body, 0, out, offBits, body.length)
-    out
-  }
-
-  private def encodeBmp(width: Int, height: Int, bitCount: Int,
-                        rowSize: Int, topDown: Boolean,
-                        rgbPalette: Array[Byte])
-                       (fill: (Array[Byte], Int) => Unit): Array[Byte] = {
-    val nPal = if (rgbPalette == null) 0 else rgbPalette.length / 3
-    val offBits = 14 + 40 + 4 * nPal
-    val size = offBits + rowSize * height
-    val out = new Array[Byte](size)
-    def le16(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-    }
-    def le32(off: Int, v: Int): Unit = {
-      le16(off, v & 0xFFFF); le16(off + 2, (v >> 16) & 0xFFFF)
-    }
-    out(0) = 'B'.toByte; out(1) = 'M'.toByte
-    le32(2, size); le32(10, offBits)
     le32(14, 40) // BITMAPINFOHEADER
-    le32(18, width); le32(22, if (topDown) -height else height)
+    le32(18, width); le32(22, heightField)
     le16(26, 1); le16(28, bitCount)
-    le32(30, 0) // BI_RGB
-    le32(34, rowSize * height)
+    le32(30, compression)
+    le32(34, body.length)
     le32(38, 2835); le32(42, 2835) // 72 dpi
     le32(46, nPal); le32(50, 0)
     var pi = 0
     while (pi < nPal) {
-      out(54 + 4 * pi) = rgbPalette(3 * pi + 2) // B
-      out(54 + 4 * pi + 1) = rgbPalette(3 * pi + 1) // G
-      out(54 + 4 * pi + 2) = rgbPalette(3 * pi) // R
+      out(54 + 4 * pi) = palette(3 * pi + 2) // B
+      out(54 + 4 * pi + 1) = palette(3 * pi + 1) // G
+      out(54 + 4 * pi + 2) = palette(3 * pi) // R
       pi += 1
     }
-    val row = new Array[Byte](rowSize)
-    var y = 0
-    while (y < height) {
-      java.util.Arrays.fill(row, 0.toByte)
-      fill(row, y)
-      val dst = offBits + (if (topDown) y else height - 1 - y) * rowSize
-      System.arraycopy(row, 0, out, dst, rowSize)
-      y += 1
-    }
+    System.arraycopy(body, 0, out, offBits, body.length)
     out
   }
 
@@ -975,14 +932,7 @@ private[graft] object Raster {
         case 1 => raw
         case 5 => lzwEncode(raw)
         case 32773 => packBits(raw)
-        case _ =>
-          val deflater = new java.util.zip.Deflater()
-          deflater.setInput(raw); deflater.finish()
-          val outB = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!deflater.finished()) outB.write(buf, 0, deflater.deflate(buf))
-          deflater.end()
-          outB.toByteArray
+        case _ => Multimodal.Containers.deflate(raw)
       }
     }
     final case class Entry(tag: Int, typ: Int, count: Int, value: Long,

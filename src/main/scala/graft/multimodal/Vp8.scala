@@ -104,32 +104,10 @@ private[graft] object Vp8 {
   // trees + small tables (RFC 6386 §8.2, §11.2, §13.2)
   // ------------------------------------------------------------------
 
-  // intra y modes: DC=0 V=1 H=2 TM=3 B_PRED=4
-  private val KfYModeTree = Array(-4, 2, 4, 6, 0, -1, -2, -3)
-  private val KfYModeProb = Array(145, 156, 163, 128)
-  private val UvModeTree = Array(0, 2, -1, 4, -2, -3)
-  private val KfUvModeProb = Array(142, 114, 183)
-  // 4x4 b modes in the PROBABILITY TABLE's numbering (the kf_bmode
-  // context rows index by it): DC=0 TM=1 VE=2 HE=3 RD=4 VR=5 LD=6
-  // VL=7 HD=8 HU=9 — note RD/VR sit BEFORE LD, unlike the spec's
-  // declaration order; mixing the two misindexes the context rows for
-  // exactly those three modes (caught by the crafted-stream cross-pin)
-  private val BModeTree = Array(0, 2, -1, 4, -2, 6, 8, 12, -3, 10,
-    -4, -5, -6, 14, -7, 16, -8, -9)
+  import Vp8Tables.{Bands, BModeTree, CatBase, CatProbs, CoeffTree,
+    KfUvModeProb, KfYModeProb, KfYModeTree, UvModeTree, Zigzag}
+
   private val SegmentTree = Array(2, 4, 0, -1, -2, -3)
-  // dct tokens: 0..4 literal, cat1..cat6 = 5..10, EOB = 11
-  private val CoeffTree = Array(-11, 2, 0, 4, -1, 6, 8, 12, -2, 10,
-    -3, -4, 14, 16, -5, -6, 18, 20, -7, -8, -9, -10)
-  private val CatBase = Array(5, 7, 11, 19, 35, 67)
-  private val CatProbs: Array[Array[Int]] = Array(
-    Array(159),
-    Array(165, 145),
-    Array(173, 148, 140),
-    Array(176, 155, 140, 135),
-    Array(180, 157, 141, 134, 130),
-    Array(254, 254, 243, 230, 196, 177, 153, 140, 133, 130, 129))
-  private val Zigzag = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-  private val Bands = Array(0, 1, 2, 3, 6, 4, 5, 6, 6, 6, 6, 6, 6, 6, 6, 7)
 
   private def clip127(v: Int): Int = if (v < 0) 0 else if (v > 127) 127 else v
   private def clamp255(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v

@@ -2,6 +2,8 @@ package graft.multimodal
 
 import scala.collection.mutable.ArrayBuffer
 
+import Multimodal.Containers
+
 /** Minimal RFC 6386 VP8 keyframe ENCODER — the fixture half of the VP8
   * story (the [[Webp.encodeLossless]] pattern): emits spec-conformant
   * keyframe bitstreams with no segmentation, loop filter level 0, one
@@ -98,27 +100,8 @@ private[graft] object Vp8Enc {
     }
   }
 
-  // trees mirrored from the decoder (kept private there; redeclared for
-  // the encoder's use — same published constants)
-  private val KfYModeTree = Array(-4, 2, 4, 6, 0, -1, -2, -3)
-  private val KfYModeProb = Array(145, 156, 163, 128)
-  private val UvModeTree = Array(0, 2, -1, 4, -2, -3)
-  private val KfUvModeProb = Array(142, 114, 183)
-  // table-order numbering (see Vp8.BModeTree): RD=4 VR=5 LD=6
-  private val BModeTree = Array(0, 2, -1, 4, -2, 6, 8, 12, -3, 10,
-    -4, -5, -6, 14, -7, 16, -8, -9)
-  private val CoeffTree = Array(-11, 2, 0, 4, -1, 6, 8, 12, -2, 10,
-    -3, -4, 14, 16, -5, -6, 18, 20, -7, -8, -9, -10)
-  private val CatBase = Array(5, 7, 11, 19, 35, 67)
-  private val CatProbs: Array[Array[Int]] = Array(
-    Array(159),
-    Array(165, 145),
-    Array(173, 148, 140),
-    Array(176, 155, 140, 135),
-    Array(180, 157, 141, 134, 130),
-    Array(254, 254, 243, 230, 196, 177, 153, 140, 133, 130, 129))
-  private val Zigzag = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-  private val Bands = Array(0, 1, 2, 3, 6, 4, 5, 6, 6, 6, 6, 6, 6, 6, 6, 7)
+  import Vp8Tables.{Bands, BModeTree, CatBase, CatProbs, CoeffTree,
+    KfUvModeProb, KfYModeProb, KfYModeTree, UvModeTree, Zigzag}
 
   /** One macroblock's encode spec: 16x16 y mode (0..3) or B_PRED via
     * `bmodes` (16 entries, non-null), uv mode, and QUANTIZED (divided)
@@ -442,34 +425,12 @@ private[graft] object Vp8Enc {
   def wrapWebpAlpha(vp8: Array[Byte], w: Int, h: Int,
                     alpha: Array[Int] = null, filter: Int = 0,
                     compress: Boolean = false): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-    }
-    def le24(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF)
-    }
     val plane =
       if (alpha != null) alpha
       else Array.tabulate(w * h)(i => (i * 7 + 40) % 256)
-    val alph = Webp.encodeAlph(w, h, plane, filter, compress)
-    val vp8Padded = vp8.length + (vp8.length & 1)
-    val alphPadded = alph.length + (alph.length & 1)
-    out.write("RIFF".getBytes("US-ASCII"))
-    le32(4 + (8 + 10) + (8 + alphPadded) + (8 + vp8Padded))
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8X".getBytes("US-ASCII")); le32(10)
-    out.write(0x10); out.write(0); out.write(0); out.write(0) // alpha flag
-    le24(w - 1); le24(h - 1)
-    out.write("ALPH".getBytes("US-ASCII")); le32(alph.length)
-    out.write(alph, 0, alph.length)
-    if ((alph.length & 1) == 1) out.write(0)
-    out.write("VP8 ".getBytes("US-ASCII")); le32(vp8.length)
-    out.write(vp8, 0, vp8.length)
-    if ((vp8.length & 1) == 1) out.write(0)
-    out.toByteArray
+    Webp.webpFile(Webp.vp8xChunk(0x10, w, h), // alpha flag
+      Containers.riffChunk("ALPH", Webp.encodeAlph(w, h, plane, filter, compress)),
+      Containers.riffChunk("VP8 ", vp8))
   }
 
   /** The VP8 chunk payload inside a [[wrapWebp]] container (fixture
@@ -501,20 +462,6 @@ private[graft] object Vp8Enc {
   }
 
   /** RIFF-wrap a VP8 chunk payload into a complete WebP file. */
-  def wrapWebp(vp8: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-    }
-    out.write("RIFF".getBytes("US-ASCII"))
-    val padded = vp8.length + (vp8.length & 1)
-    le32(4 + 8 + padded)
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8 ".getBytes("US-ASCII"))
-    le32(vp8.length)
-    out.write(vp8, 0, vp8.length)
-    if ((vp8.length & 1) == 1) out.write(0)
-    out.toByteArray
-  }
+  def wrapWebp(vp8: Array[Byte]): Array[Byte] =
+    Webp.webpFile(Containers.riffChunk("VP8 ", vp8))
 }

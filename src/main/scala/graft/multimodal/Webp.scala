@@ -31,7 +31,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 private[graft] object Webp {
 
-  import Multimodal.MaxDecodePixels
+  import Multimodal.{Containers, MaxDecodePixels}
 
   private def fail(id: Long, msg: String): Nothing =
     throw new IllegalArgumentException(s"media $id: $msg")
@@ -1168,7 +1168,7 @@ private[graft] object Webp {
       bw.write(0, 1) // no meta prefix codes
       writeEntropyBody(bw, px, curW, opts.cacheBits, opts.lz77, 1, _ => 0)
     }
-    riffWrap("VP8L", bw.bytes)
+    webpFile(Containers.riffChunk("VP8L", bw.bytes))
   }
 
   /** The codes + token tail of an entropy stream (cache/meta bits already
@@ -1237,47 +1237,28 @@ private[graft] object Webp {
     }
   }
 
-  /** Wrap a chunk payload in a RIFF/WEBP container (even-size padding). */
-  private def riffWrap(fourcc: String, payload: Array[Byte]): Array[Byte] = {
-    val pad = payload.length & 1
-    val total = 4 + 8 + payload.length + pad
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("RIFF".getBytes("US-ASCII"))
-    writeLe32(out, total)
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write(fourcc.getBytes("US-ASCII"))
-    writeLe32(out, payload.length)
-    out.write(payload, 0, payload.length)
-    if (pad == 1) out.write(0)
-    out.toByteArray
-  }
+  /** A complete WebP file: the RIFF/WEBP header over its (already
+    * word-aligned) chunks. */
+  private[multimodal] def webpFile(chunks: Array[Byte]*): Array[Byte] =
+    Containers.riffList("RIFF", "WEBP", chunks: _*)
 
-  private def writeLe32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-    out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-  }
+  /** 24-bit little-endian fields, three bytes each. */
+  private def le24s(vs: Int*): Array[Byte] =
+    vs.flatMap(v => Seq(v.toByte, (v >> 8).toByte, (v >> 16).toByte)).toArray
+
+  /** The VP8X extended-format chunk: the feature flags byte (RFC 9649:
+    * Rsv(2) ICC Alpha Exif XMP Animation Rsv), three reserved bytes and
+    * the canvas dims as 24-bit minus-one fields. */
+  private[multimodal] def vp8xChunk(flags: Int, w: Int, h: Int): Array[Byte] =
+    Containers.riffChunk("VP8X",
+      Array[Byte](flags.toByte, 0, 0, 0) ++ le24s(w - 1, h - 1))
 
   /** Re-wrap an encoded lossless WebP inside a VP8X extended container
     * (canvas dims as 24-bit minus-one fields) — the layout real encoders
     * emit when any extended feature is present. */
-  def wrapVp8x(webp: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val inner = java.util.Arrays.copyOfRange(webp, 12, webp.length)
-    val vp8x = new java.io.ByteArrayOutputStream()
-    vp8x.write("VP8X".getBytes("US-ASCII"))
-    writeLe32(vp8x, 10)
-    vp8x.write(0) // feature flags
-    vp8x.write(0); vp8x.write(0); vp8x.write(0) // reserved
-    val wm = w - 1; val hm = h - 1
-    vp8x.write(wm & 0xFF); vp8x.write((wm >> 8) & 0xFF); vp8x.write((wm >> 16) & 0xFF)
-    vp8x.write(hm & 0xFF); vp8x.write((hm >> 8) & 0xFF); vp8x.write((hm >> 16) & 0xFF)
-    val body = vp8x.toByteArray ++ inner
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("RIFF".getBytes("US-ASCII"))
-    writeLe32(out, 4 + body.length)
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write(body, 0, body.length)
-    out.toByteArray
-  }
+  def wrapVp8x(webp: Array[Byte], w: Int, h: Int): Array[Byte] =
+    webpFile(vp8xChunk(0, w, h), // no feature flags
+      java.util.Arrays.copyOfRange(webp, 12, webp.length))
 
   /** A minimal LOSSY VP8 keyframe header (frame tag + start code + dims)
     * over an undecodable body — the fixture for the named lossy census
@@ -1291,7 +1272,7 @@ private[graft] object Webp {
     payload(8) = (h & 0xFF).toByte; payload(9) = ((h >> 8) & 0x3F).toByte
     var i = 0
     while (i < bodyLen) { payload(10 + i) = ((i * 37 + 11) & 0xFF).toByte; i += 1 }
-    riffWrap("VP8 ", payload)
+    webpFile(Containers.riffChunk("VP8 ", payload))
   }
 
   // ------------------------------------------------------------------
@@ -1330,62 +1311,17 @@ private[graft] object Webp {
     * source-coordinate table as [[Jpeg.decodeRgbOriented]], over 4
     * channels. */
   def orientRgba(w: Int, h: Int, rgba: Array[Byte],
-                 o: Int): (Int, Int, Array[Byte]) = {
-    if (o <= 1) return (w, h, rgba)
-    val swap = o >= 5
-    val dw = if (swap) h else w
-    val dh = if (swap) w else h
-    val out = new Array[Byte](4 * dw * dh)
-    var y = 0
-    while (y < dh) {
-      var x = 0
-      while (x < dw) {
-        val (sx, sy) = o match {
-          case 2 => (w - 1 - x, y)
-          case 3 => (w - 1 - x, h - 1 - y)
-          case 4 => (x, h - 1 - y)
-          case 5 => (y, x)
-          case 6 => (y, h - 1 - x)
-          case 7 => (w - 1 - y, h - 1 - x)
-          case _ => (w - 1 - y, x) // 8
-        }
-        val so = 4 * (sy * w + sx)
-        val dOff = 4 * (y * dw + x)
-        out(dOff) = rgba(so); out(dOff + 1) = rgba(so + 1)
-        out(dOff + 2) = rgba(so + 2); out(dOff + 3) = rgba(so + 3)
-        x += 1
-      }
-      y += 1
-    }
-    (dw, dh, out)
-  }
+                 o: Int): (Int, Int, Array[Byte]) =
+    if (o <= 1) (w, h, rgba) else Jpeg.orientPixels(w, h, rgba, 4, o)
 
   /** Fixture side: re-wrap a still WebP in a VP8X extended container
     * (EXIF flag) with an EXIF chunk declaring `orientation` after the
     * image chunk — the layout real camera-pipeline WebPs carry. */
   def withExif(webp: Array[Byte], w: Int, h: Int,
-               orientation: Int): Array[Byte] = {
-    val inner = java.util.Arrays.copyOfRange(webp, 12, webp.length)
-    val tiff = Jpeg.exifTiffBody(orientation)
-    val body = new java.io.ByteArrayOutputStream()
-    body.write("VP8X".getBytes("US-ASCII")); writeLe32(body, 10)
-    body.write(0x08) // EXIF flag
-    body.write(0); body.write(0); body.write(0)
-    val wm = w - 1; val hm = h - 1
-    body.write(wm & 0xFF); body.write((wm >> 8) & 0xFF); body.write((wm >> 16) & 0xFF)
-    body.write(hm & 0xFF); body.write((hm >> 8) & 0xFF); body.write((hm >> 16) & 0xFF)
-    body.write(inner, 0, inner.length)
-    body.write("EXIF".getBytes("US-ASCII")); writeLe32(body, tiff.length)
-    body.write(tiff, 0, tiff.length)
-    if ((tiff.length & 1) == 1) body.write(0)
-    val payload = body.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("RIFF".getBytes("US-ASCII"))
-    writeLe32(out, 4 + payload.length)
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write(payload, 0, payload.length)
-    out.toByteArray
-  }
+               orientation: Int): Array[Byte] =
+    webpFile(vp8xChunk(0x08, w, h), // EXIF flag
+      java.util.Arrays.copyOfRange(webp, 12, webp.length),
+      Containers.riffChunk("EXIF", Jpeg.exifTiffBody(orientation)))
 
   // ------------------------------------------------------------------
   // animated WebP — VP8X(ANIM) + ANIM + ANMF chunks, VP8L frame payloads
@@ -1564,43 +1500,25 @@ private[graft] object Webp {
                      frames: Seq[AnimFrameSpec], loops: Int = 0): Array[Byte] = {
     require(cw >= 1 && ch >= 1 && frames.nonEmpty, "encodeAnimated: bad args")
     val hasAlpha = frames.exists(_.argb.exists(px => (px >>> 24) != 0xFF))
-    val body = new java.io.ByteArrayOutputStream()
-    def le24(v: Int): Unit = {
-      body.write(v & 0xFF); body.write((v >> 8) & 0xFF)
-      body.write((v >> 16) & 0xFF)
-    }
-    body.write("VP8X".getBytes("US-ASCII")); writeLe32(body, 10)
-    body.write(0x02 | (if (hasAlpha) 0x10 else 0))
-    body.write(0); body.write(0); body.write(0)
-    le24(cw - 1); le24(ch - 1)
-    body.write("ANIM".getBytes("US-ASCII")); writeLe32(body, 6)
-    body.write(bgArgb & 0xFF) // B
-    body.write((bgArgb >> 8) & 0xFF) // G
-    body.write((bgArgb >> 16) & 0xFF) // R
-    body.write((bgArgb >>> 24) & 0xFF) // A
-    body.write(loops & 0xFF); body.write((loops >> 8) & 0xFF)
-    frames.foreach { f =>
+    val anim = Array(bgArgb & 0xFF, // B
+      (bgArgb >> 8) & 0xFF, // G
+      (bgArgb >> 16) & 0xFF, // R
+      (bgArgb >>> 24) & 0xFF, // A
+      loops & 0xFF, (loops >> 8) & 0xFF).map(_.toByte)
+    val anmfs = frames.map { f =>
       require(f.x % 2 == 0 && f.y % 2 == 0,
         "encodeAnimated: frame offsets must be even")
       require(f.x + f.w <= cw && f.y + f.h <= ch,
         "encodeAnimated: frame rect exceeds the canvas")
       val inner = encodeLossless(f.w, f.h, f.argb)
       val vp8l = java.util.Arrays.copyOfRange(inner, 12, inner.length)
-      val anmfLen = 16 + vp8l.length
-      body.write("ANMF".getBytes("US-ASCII")); writeLe32(body, anmfLen)
-      le24(f.x / 2); le24(f.y / 2); le24(f.w - 1); le24(f.h - 1)
-      le24(f.durationMs)
-      body.write((if (f.noBlend) 0x02 else 0) | (if (f.dispose) 1 else 0))
-      body.write(vp8l, 0, vp8l.length)
-      if ((anmfLen & 1) == 1) body.write(0)
+      Containers.riffChunk("ANMF",
+        le24s(f.x / 2, f.y / 2, f.w - 1, f.h - 1, f.durationMs) ++
+          Array(((if (f.noBlend) 0x02 else 0) | (if (f.dispose) 1 else 0)).toByte) ++
+          vp8l)
     }
-    val payload = body.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("RIFF".getBytes("US-ASCII"))
-    writeLe32(out, 4 + payload.length)
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write(payload, 0, payload.length)
-    out.toByteArray
+    webpFile(vp8xChunk(0x02 | (if (hasAlpha) 0x10 else 0), cw, ch) +:
+      Containers.riffChunk("ANIM", anim) +: anmfs: _*)
   }
 
   private def inversePredictor(id: Long, img: Array[Int], w: Int, h: Int,

@@ -5,32 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Text vectorization: TF-IDF document embeddings via the hashing trick —
   * turns the `documents` table into an `(doc_id, embedding)` corpus usable by
-  * every [[graft.sim.Similarity]] operator (brute force / LSH / IVF). All
-  * spark.ml transformers, so the pipeline is a pure map after one IDF
-  * aggregate over the corpus.
+  * every [[graft.sim.Similarity]] operator (brute force / LSH / IVF), built
+  * from portable SQL expressions only, so any engine can rebuild the
+  * vectors bit-for-bit.
   */
 object TextFeatures {
 
-  /** (doc_id, embedding: array<float>) TF-IDF vectors, L2-normalized so dot
-    * product == cosine. `numFeatures` is the hashing-trick width. */
-  def tfidfEmbeddings(docs: DataFrame, numFeatures: Int = 1 << 12): DataFrame = {
-    import org.apache.spark.ml.feature.{HashingTF, IDF, Normalizer}
-    import org.apache.spark.ml.functions.vector_to_array
-    val toks = docs.select(col("doc_id"),
-      TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
-    val tf = new HashingTF().setInputCol("toks").setOutputCol("tf")
-      .setNumFeatures(numFeatures).transform(toks)
-    val idf = new IDF().setInputCol("tf").setOutputCol("tfidf").fit(tf)
-    val normed = new Normalizer().setInputCol("tfidf").setOutputCol("norm").setP(2.0)
-      .transform(idf.transform(tf))
-    normed.select(col("doc_id").as("vec_id"),
-      vector_to_array(col("norm"), "float32").as("embedding"))
-  }
-
-  /** Engine-portable TF-IDF embeddings: the same hashing-trick pipeline as
-    * [[tfidfEmbeddings]], but every engine-specific ingredient replaced by a
-    * portable one — feature index is [[Dedup.portableTokenHash]] mod
-    * `numFeatures` (not spark.ml's murmur3), IDF = ln((m+1)/(df+1)) rounded
+  /** Engine-portable TF-IDF embeddings: a hashing-trick pipeline whose
+    * every ingredient is portable — feature index is
+    * [[Dedup.portableTokenHash]] mod `numFeatures` (not spark.ml's
+    * murmur3), IDF = ln((m+1)/(df+1)) rounded
     * by the floor trick at 6 dp (so a 1-ulp libm `ln` difference between
     * engines cannot change a weight), and vectors stay unnormalized doubles
     * (cosine normalizes anyway). Any SQL engine can rebuild these vectors
