@@ -104,7 +104,9 @@ object Graph {
     * round is unpersisted here as soon as its successor materializes, and
     * the ONLY surviving cache entry is the returned frame itself, so
     * `result.unpersist()` (or [[graft.ops.Caching.release]]) reclaims
-    * everything. No RDD-level blocks are created (the prior GraphX
+    * everything. An edge set with no edges (no pairs, or only self-loops
+    * and nulls) yields an empty (part, component) frame that holds no
+    * cache entry and costs no job beyond the edge count. No RDD-level blocks are created (the prior GraphX
     * implementation leaked Pregel's internally-persisted vertex/edge/message
     * RDDs, which `cacheManager.clearCache()` cannot reach).
     *
@@ -133,6 +135,11 @@ object Graph {
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = edges.count() // materialize once; every round re-reads it
+    if (nEdges == 0L) {
+      edges.unpersist(blocking = false)
+      return pairs.sparkSession
+        .createDataFrame(Seq.empty[(Long, Long)]).toDF("part", "component")
+    }
     // SMALL-GRAPH FAST PATH: below the cap (≈2 MB of long pairs at the
     // default), a driver-side union-find with min-root union returns the
     // IDENTICAL (vertex, min-reachable-id) labeling in ONE job instead of

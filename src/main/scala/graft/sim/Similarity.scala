@@ -66,18 +66,44 @@ object Similarity {
     df.repartition(width, pmod(xxhash64(idCol), lit(100L * width)))
   }
 
+  /** `vec_id` (named `id`) and the embedding as `array<double>` (named
+    * `vec`), then `extra` — the projection every path starts from: the
+    * corpus as (vec_id, vec), a probe side as (probe_id, pvec). `vec_id`
+    * is not aliased to itself, so the corpus projection keeps its plan. */
+  private def vectors(df: DataFrame, id: String = "vec_id", vec: String = "vec",
+                      extra: Seq[Column] = Nil): DataFrame =
+    df.select(((if (id == "vec_id") col(id) else col("vec_id").as(id)) +:
+      asDouble(col("embedding")).as(vec) +: extra): _*)
+
+  /** The probe side of the probe → candidates → score → top-k chain. */
+  private def probeVecs(probes: DataFrame): DataFrame =
+    vectors(probes, "probe_id", "pvec")
+
+  /** Keep the `k` first rows of each `key` group under `order`, numbered
+    * 1..k in `rn` — the one per-probe top-k window of every ranked path. */
+  private def topK(key: String, k: Int, order: Column*)(scored: DataFrame): DataFrame =
+    scored.withColumn("rn", row_number().over(Window.partitionBy(key).orderBy(order: _*)))
+      .filter(col("rn") <= k)
+
+  /** Top-k by cosine, ties to the lower neighbor id: (probe_id,
+    * neighbor_id, cos_sim, rn). */
+  private def cosineTopK(k: Int)(scored: DataFrame): DataFrame =
+    scored.transform(topK("probe_id", k, desc("cos_sim"), asc("neighbor_id")))
+      .select("probe_id", "neighbor_id", "cos_sim", "rn")
+
+  /** Top-k by ADC distance, ties to the lower neighbor id: (probe_id,
+    * neighbor_id, approx_dist, rn). */
+  private def adcTopK(k: Int)(scored: DataFrame): DataFrame =
+    scored.transform(topK("probe_id", k, asc("approx_dist"), asc("neighbor_id")))
+      .select("probe_id", "neighbor_id", "approx_dist", "rn")
+
   /** Exact top-k neighbors for each probe vector (probes broadcast). */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val c = spread(corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("cvec")), col("neighbor_id"))
-    val p = probes.select(col("vec_id").as("probe_id"),
-      asDouble(col("embedding")).as("pvec"))
-    val scored = c.join(broadcast(p), col("probe_id") =!= col("neighbor_id"))
+    val c = spread(vectors(corpus, "neighbor_id", "cvec"), col("neighbor_id"))
+    c.join(broadcast(probeVecs(probes)), col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
         cosine(col("pvec"), col("cvec")).as("cos_sim"))
-    val w = Window.partitionBy("probe_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "cos_sim", "rn")
+      .transform(cosineTopK(k))
   }
 
   /** Deterministic random hyperplanes (xorshift64* seeded PRNG — public
@@ -117,21 +143,17 @@ object Similarity {
   def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
               tables: Int = 8, planesPerTable: Int = 5,
               dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val c = spread(corpus.select(col("vec_id").as("neighbor_id"),
-        asDouble(col("embedding")).as("cvec")), col("neighbor_id"))
+    val c = spread(vectors(corpus, "neighbor_id", "cvec"), col("neighbor_id"))
       .withColumn("b", explode(lshBuckets(col("cvec"), tables, planesPerTable, dim, seed)))
-    val p = probes.select(col("vec_id").as("probe_id"),
-        asDouble(col("embedding")).as("pvec"))
+    val p = probeVecs(probes)
       .withColumn("b", explode(lshBuckets(col("pvec"), tables, planesPerTable, dim, seed)))
-    val cand = c.join(broadcast(p), Seq("b"))
+    c.join(broadcast(p), Seq("b"))
       .filter(col("probe_id") =!= col("neighbor_id"))
       .select("probe_id", "neighbor_id", "pvec", "cvec")
       .dropDuplicates("probe_id", "neighbor_id")
-    val scored = cand.select(col("probe_id"), col("neighbor_id"),
-      cosine(col("pvec"), col("cvec")).as("cos_sim"))
-    val w = Window.partitionBy("probe_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "cos_sim", "rn")
+      .select(col("probe_id"), col("neighbor_id"),
+        cosine(col("pvec"), col("cvec")).as("cos_sim"))
+      .transform(cosineTopK(k))
   }
 
   /** IVF (inverted-file) index: a k-means coarse quantizer partitions the
@@ -141,26 +163,31 @@ object Similarity {
     * corpus*nProbe/nLists vectors. */
   final case class IVFIndex(assigned: DataFrame, centroids: Array[Array[Double]])
 
+  /** Driver-side training cap: every quantizer, codebook and whitener
+    * trains on at most this many sampled vectors. */
+  private val MaxTrainVectors = 1 << 16
+
   /** Deterministic hash-sample of `src`'s vectors for codebook/quantizer
     * training: keep every stride-th vector by seeded hash (a pure filter, no
     * sort), collect, and order by the hash so initialization is stable. The
-    * cap makes driver-side training size-independent of the corpus.
+    * [[MaxTrainVectors]] cap makes driver-side training size-independent of
+    * the corpus.
     *
     * `portableOrder` swaps the xxhash64 ordering for `(md5(vec_id), vec_id)`
     * — an ordering ANY engine can reproduce (DuckDB has md5, not xxhash64),
     * so a 0-iteration trainer's seed selection becomes oracle-replayable
     * ([[semDedupIvf]]'s gate). Default stays xxhash64 (cheaper, and the
     * established init for the PQ/IVF recall gates). */
-  private def trainSample(src: DataFrame, maxVectors: Int, seed: Long,
+  private def trainSample(src: DataFrame, seed: Long,
                           portableOrder: Boolean = false): Array[Array[Double]] = {
     val n = src.count()
-    // ceil, not floor: a floor stride stays 1 for n just under 2*maxVectors
-    // and would collect up to ~2x the documented driver-memory cap
-    val mv = math.max(1L, maxVectors.toLong)
+    // ceil, not floor: a floor stride stays 1 for n just under 2*cap and
+    // would collect up to ~2x the documented driver-memory cap
+    val mv = MaxTrainVectors.toLong
     val stride = math.max(1L, (n + mv - 1L) / mv)
     // the stride pre-filter must honour portableOrder too: an xxhash64
     // stride would silently break the oracle-replayable guarantee the
-    // moment the corpus outgrows maxVectors (the replay ranks by md5, not
+    // moment the corpus outgrows the cap (the replay ranks by md5, not
     // xxhash64) — use the portable 60-bit md5 hash for the keep-set as well
     val sampled =
       if (stride <= 1L) src
@@ -218,6 +245,12 @@ object Similarity {
     cents
   }
 
+  /** The coarse quantizer's centroids: [[lloydFit]] over the
+    * [[trainSample]] of `base` (vec_id, vec). */
+  private def fitCells(base: DataFrame, nLists: Int, seed: Long, iters: Int,
+                       portableInit: Boolean): Array[Array[Double]] =
+    lloydFit(trainSample(base, seed, portableInit), nLists, iters)
+
   /** Nearest-centroid id under squared L2, with the centroids as PLAN
     * LITERALS and the native codegen'd dot product
     * (‖x‖²−2x·c+‖c‖² — ties break to the lower id via the struct min). */
@@ -241,17 +274,14 @@ object Similarity {
     * cell in ONE distributed codegen'd projection. Deterministic under
     * `seed`. */
   def ivfBuild(corpus: DataFrame, nLists: Int = 16, seed: Long = 42L,
-               iters: Int = 8, maxTrainVectors: Int = 1 << 16,
-               portableInit: Boolean = false,
+               iters: Int = 8, portableInit: Boolean = false,
                extraCols: Seq[String] = Nil): IVFIndex = {
     // extraCols ride the assignment projection itself (same map pass) so
     // consumers that need per-vector metadata (hardNegatives' label) never
     // re-join the corpus on vec_id to recover it
-    val base = corpus.select((col("vec_id") +:
-      asDouble(col("embedding")).as("vec") +: extraCols.map(col)): _*)
-    val cents = lloydFit(
-      trainSample(base.select(col("vec_id"), col("vec")), maxTrainVectors,
-        seed, portableInit), nLists, iters)
+    val base = vectors(corpus, extra = extraCols.map(col))
+    val cents = fitCells(base.select(col("vec_id"), col("vec")), nLists, seed,
+      iters, portableInit)
     val assigned = base.withColumn("cell", nearestCell(col("vec"), cents))
     IVFIndex(assigned, cents)
   }
@@ -263,28 +293,34 @@ object Similarity {
     * probe ranks differently — and the dot identity is the spelling the
     * DuckDB oracle replays exactly (q176's proven-portable form). */
   private def rankedCells(pvec: Column, cents: Array[Array[Double]]): Column =
-    array_sort(array(cents.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      struct((dot(pvec, pvec) - lit(2.0) * dot(pvec, lit(c)) +
-        lit(c.map(x => x * x).sum)).as("dist"), lit(i).as("cell"))
-    }: _*))
+    array_sort(cellDistArr(pvec, cents))
 
-  /** Probe the `nProbe` nearest cells per query, exact-cosine rerank within
-    * them. The candidate join is an equi-join on the cell id. */
-  def ivfTopK(index: IVFIndex, probes: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
-    val p = probes.select(col("vec_id").as("probe_id"),
-        asDouble(col("embedding")).as("pvec"))
-      .withColumn("cellr", rankedCells(col("pvec"), index.centroids))
-      .withColumn("cell", explode(slice(col("cellr"), 1, nProbe)("cell")))
+  /** One row per probed cell: the ids of the `nProbe` cells nearest to
+    * `pvec`, for `withColumn("cell", ...)`. */
+  private def probeCells(pvec: Column, cents: Array[Array[Double]],
+                         nProbe: Int): Column =
+    explode(slice(rankedCells(pvec, cents), 1, nProbe)("cell"))
+
+  /** Every (probe, vector) pair in the probe's `nProbe` nearest cells,
+    * probe itself excluded, scored by exact cosine: (probe_id,
+    * neighbor_id, cos_sim, cvec). The candidate join is an equi-join on
+    * the cell id against the broadcast probes. */
+  private def ivfScored(index: IVFIndex, probes: DataFrame,
+                        nProbe: Int): DataFrame = {
+    val p = probeVecs(probes)
+      .withColumn("cell", probeCells(col("pvec"), index.centroids, nProbe))
       .select("probe_id", "pvec", "cell")
-    val scored = spread(index.assigned, col("vec_id"))
+    spread(index.assigned, col("vec_id"))
       .join(broadcast(p), Seq("cell"))
       .filter(col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("pvec"), col("vec")).as("cos_sim"))
-    val w = Window.partitionBy("probe_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "cos_sim", "rn")
+        cosine(col("pvec"), col("vec")).as("cos_sim"), col("vec").as("cvec"))
   }
+
+  /** Probe the `nProbe` nearest cells per query, exact-cosine rerank within
+    * them. */
+  def ivfTopK(index: IVFIndex, probes: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
+    ivfScored(index, probes, nProbe).transform(cosineTopK(k))
 
   /** Persist a built ANN index (IVF coarse quantizer + PQ codebooks/codes)
     * into lake tables — the index LIFECYCLE a serving system needs: build
@@ -398,7 +434,6 @@ object Similarity {
                  nLists: Int = 8, nProbe: Int = 2, seed: Long = 42L,
                  iters: Int = 8, portableInit: Boolean = false,
                  mutual: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val directed = knnGraph(corpus, k, nLists, nProbe, seed, iters, portableInit)
       .filter(col("cos_sim") >= lit(minCosine))
       .select(col("vec_id").as("src_id"), col("neighbor_id").as("dst_id"))
@@ -447,18 +482,9 @@ object Similarity {
     * key — no global sort materializes, nothing collects. */
   def diverseSubset(corpus: DataFrame, n: Int, nLists: Int = 8,
                     seed: Long = 42L, iters: Int = 8,
-                    maxTrainVectors: Int = 1 << 16,
                     portableInit: Boolean = false): DataFrame = {
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-    val cents = lloydFit(
-      trainSample(base, maxTrainVectors, seed, portableInit), nLists, iters)
-    val best = array_min(cellDistArr(col("vec"), cents))
-    val assigned = base.select(col("vec_id"),
-      best.getField("cell").as("cell"),
-      floor(best.getField("dist") * lit(1000000.0) + lit(0.5)).cast("long")
-        .as("dist_micro"))
     val w = Window.partitionBy("cell").orderBy(col("dist_micro"), col("vec_id"))
-    assigned
+    nearestCellMicro(corpus, nLists, seed, iters, portableInit)
       .withColumn("rep_rank", row_number().over(w).cast("long"))
       .orderBy(col("rep_rank"), col("cell"), col("vec_id"))
       .limit(n)
@@ -478,18 +504,24 @@ object Similarity {
     * makes the chain oracle-replayable (the q204 contract). */
   def embeddingOutliers(corpus: DataFrame, k: Int = 20, nLists: Int = 8,
                         seed: Long = 42L, iters: Int = 8,
-                        maxTrainVectors: Int = 1 << 16,
-                        portableInit: Boolean = false): DataFrame = {
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-    val cents = lloydFit(
-      trainSample(base, maxTrainVectors, seed, portableInit), nLists, iters)
-    val best = array_min(cellDistArr(col("vec"), cents))
-    base.select(col("vec_id"),
-        best.getField("cell").as("cell"),
-        floor(best.getField("dist") * lit(1000000.0) + lit(0.5)).cast("long")
-          .as("dist_micro"))
+                        portableInit: Boolean = false): DataFrame =
+    nearestCellMicro(corpus, nLists, seed, iters, portableInit)
       .orderBy(desc("dist_micro"), asc("vec_id"))
       .limit(k)
+
+  /** The shared front of [[diverseSubset]] and [[embeddingOutliers]]: fit
+    * the quantizer on a sample, then give every vector its nearest cell
+    * and its squared distance there, quantized once to integer micro
+    * units: (vec_id, cell, dist_micro). */
+  private def nearestCellMicro(corpus: DataFrame, nLists: Int, seed: Long,
+                               iters: Int, portableInit: Boolean): DataFrame = {
+    val base = vectors(corpus)
+    val best = array_min(cellDistArr(col("vec"),
+      fitCells(base, nLists, seed, iters, portableInit)))
+    base.select(col("vec_id"),
+      best.getField("cell").as("cell"),
+      floor(best.getField("dist") * lit(1000000.0) + lit(0.5)).cast("long")
+        .as("dist_micro"))
   }
 
   /** The shared candidate-scoring chain of [[knnGraph]]/[[hardNegatives]]:
@@ -504,13 +536,10 @@ object Similarity {
                               iters: Int, portableInit: Boolean): DataFrame = {
     val idx = ivfBuild(corpus, nLists, seed, iters, portableInit = portableInit,
       extraCols = extra)
-    val assigned = idx.assigned
-    val probes = corpus.select((col("vec_id").as("anchor_id") +:
-        asDouble(col("embedding")).as("pvec") +:
-        extra.map(c => col(c).as(s"anchor_$c"))): _*)
-      .withColumn("cell",
-        explode(slice(rankedCells(col("pvec"), idx.centroids), 1, nProbe)("cell")))
-    spread(assigned, col("vec_id")).join(probes, Seq("cell"))
+    val probes = vectors(corpus, "anchor_id", "pvec",
+        extra.map(c => col(c).as(s"anchor_$c")))
+      .withColumn("cell", probeCells(col("pvec"), idx.centroids, nProbe))
+    spread(idx.assigned, col("vec_id")).join(probes, Seq("cell"))
       .filter(col("anchor_id") =!= col("vec_id"))
       .select((col("anchor_id") +: col("vec_id").as("neighbor_id") +:
         cosine(col("pvec"), col("vec")).as("cos_sim") +:
@@ -520,12 +549,10 @@ object Similarity {
   /** Per-anchor top-k window + 6-dp display rounding (the tie order is the
     * raw cosine, neighbor id ascending — shared by every cell-join
     * consumer so their oracles replay one rule). */
-  private def topKPerAnchor(k: Int)(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy("anchor_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+  private def topKPerAnchor(k: Int)(scored: DataFrame): DataFrame =
+    scored.transform(topK("anchor_id", k, desc("cos_sim"), asc("neighbor_id")))
       .select(col("anchor_id"), col("neighbor_id"),
         round(col("cos_sim"), 6).as("cos_sim"), col("rn"))
-  }
 
   /** SEMANTIC decontamination: training vectors whose embedding sits within
     * cosine `threshold` of ANY benchmark vector — the embedding-space
@@ -538,12 +565,16 @@ object Similarity {
     * Returns one row per CONTAMINATED train vector with its closest bench
     * match (deterministic: max cos, ties to the lower bench id). */
   def semanticContamination(train: DataFrame, bench: DataFrame,
-                            threshold: Double): DataFrame = {
-    val t = train.select(col("vec_id").as("train_id"),
-      asDouble(col("embedding")).as("tv"))
-    val b = bench.select(col("vec_id").as("bench_id"),
-      asDouble(col("embedding")).as("bv"))
-    t.join(broadcast(b), cosine(col("tv"), col("bv")) >= threshold)
+                            threshold: Double): DataFrame =
+    closestBench(vectors(train, "train_id", "tv")
+      .join(broadcast(vectors(bench, "bench_id", "bv"))), threshold)
+
+  /** The verify-and-keep tail of both decontamination forms: over
+    * candidate (train_id, tv, bench_id, bv) pairs, keep those at cosine
+    * `threshold` or above, and per train vector its closest bench match
+    * (max cos, ties to the lower bench id) with its hit count. */
+  private def closestBench(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.filter(cosine(col("tv"), col("bv")) >= threshold)
       .select(col("train_id"), col("bench_id"),
         cosine(col("tv"), col("bv")).as("cos_sim"))
       .groupBy("train_id")
@@ -552,7 +583,6 @@ object Similarity {
       .select(col("train_id"),
         (-col("m.nb")).cast("long").as("closest_bench_id"),
         round(col("m.cos_sim"), 6).as("max_cos"), col("n_bench_hits"))
-  }
 
   /** Scale form of [[semanticContamination]] for a benchmark registry too
     * big to broadcast (hundreds of benchmarks × paraphrase sets) — and,
@@ -588,31 +618,20 @@ object Similarity {
       train.select(col("vec_id"),
         normed(asDouble(col("embedding"))).as("embedding")),
       nLists, seed, iters, portableInit = portableInit).centroids
-    val asnT = train.select(col("vec_id").as("train_id"),
-        asDouble(col("embedding")).as("tv"))
+    val asnT = vectors(train, "train_id", "tv")
       .withColumn("m", array_min(cellDistArr(normed(col("tv")), cents)))
       .select(col("train_id"), col("tv"), col("m.cell").as("cell"),
         sqrt(greatest(col("m.dist"), lit(0.0))).as("dtr"))
       .persist()
     val radii = asnT.groupBy("cell").agg(max(col("dtr")).as("r"))
-    val cand = bench.select(col("vec_id").as("bench_id"),
-        asDouble(col("embedding")).as("bv"))
+    val cand = vectors(bench, "bench_id", "bv")
       .withColumn("c", explode(cellDistArr(normed(col("bv")), cents)))
       .select(col("bench_id"), col("bv"), col("c.cell").as("cell"),
         sqrt(greatest(col("c.dist"), lit(0.0))).as("dq"))
       .join(broadcast(radii), Seq("cell"))
       .filter(col("dq") <= eps + col("r"))
       .select("bench_id", "bv", "cell")
-    spread(asnT, col("train_id")).join(cand, Seq("cell"))
-      .filter(cosine(col("tv"), col("bv")) >= threshold)
-      .select(col("train_id"), col("bench_id"),
-        cosine(col("tv"), col("bv")).as("cos_sim"))
-      .groupBy("train_id")
-      .agg(max(struct(col("cos_sim"), (-col("bench_id")).as("nb")))
-        .as("m"), count(lit(1)).as("n_bench_hits"))
-      .select(col("train_id"),
-        (-col("m.nb")).cast("long").as("closest_bench_id"),
-        round(col("m.cos_sim"), 6).as("max_cos"), col("n_bench_hits"))
+    closestBench(spread(asnT, col("train_id")).join(cand, Seq("cell")), threshold)
   }
 
   /** Exact embedding near-duplicate pairs within equality blocks (e.g. a
@@ -675,9 +694,8 @@ object Similarity {
     * (useful downstream: stratified sampling, per-cluster caps). */
   def semDedupIvf(corpus: DataFrame, threshold: Double, nLists: Int = 16,
                   seed: Long = 42L, iters: Int = 8,
-                  maxTrainVectors: Int = 1 << 16,
                   portableInit: Boolean = false): DataFrame = {
-    val idx = ivfBuild(corpus, nLists, seed, iters, maxTrainVectors, portableInit)
+    val idx = ivfBuild(corpus, nLists, seed, iters, portableInit)
     val blocked = corpus.join(
       idx.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
     semDedup(blocked, "cell", threshold)
@@ -707,10 +725,8 @@ object Similarity {
     * selection. */
   def mmrRerank(corpus: DataFrame, probes: DataFrame, n: Int = 10, k: Int = 4,
                 lambda: Double = 0.5): DataFrame = {
-    val cv = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("cvec"))
     val cands = bruteForceTopK(corpus, probes, n)
-      .join(cv, Seq("neighbor_id"))
+      .join(vectors(corpus, "neighbor_id", "cvec"), Seq("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("cvec"))
     mmrGreedy(cands, k, lambda)
   }
@@ -776,19 +792,8 @@ object Similarity {
                    nProbe: Int = 4, seed: Long = 42L, iters: Int = 8,
                    portableInit: Boolean = false): DataFrame = {
     val idx = ivfBuild(corpus, nLists, seed, iters, portableInit = portableInit)
-    val p = probes.select(col("vec_id").as("probe_id"),
-        asDouble(col("embedding")).as("pvec"))
-      .withColumn("cell",
-        explode(slice(rankedCells(col("pvec"), idx.centroids), 1, nProbe)("cell")))
-      .select("probe_id", "pvec", "cell")
-    val scored = spread(idx.assigned, col("vec_id"))
-      .join(broadcast(p), Seq("cell"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("pvec"), col("vec")).as("cos_sim"), col("vec").as("cvec"))
-    val w = Window.partitionBy("probe_id").orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val cands = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= n)
+    val cands = ivfScored(idx, probes, nProbe)
+      .transform(topK("probe_id", n, desc("cos_sim"), asc("neighbor_id")))
       .select("probe_id", "neighbor_id", "cos_sim", "cvec")
     mmrGreedy(cands, k, lambda)
   }
@@ -803,13 +808,11 @@ object Similarity {
   def mmrRerankAnn(ivf: IVFIndex, pq: PQIndex, probes: DataFrame,
                    n: Int = 10, k: Int = 4, lambda: Double = 0.5,
                    nProbe: Int = 4): DataFrame = {
-    val p = probes.select(col("vec_id").as("probe_id"),
-      asDouble(col("embedding")).as("pvec"))
     val cands = ivfPqTopK(ivf, pq, probes, n, nProbe)
       .select("probe_id", "neighbor_id")
       .join(ivf.assigned.select(col("vec_id").as("neighbor_id"),
         col("vec").as("cvec")), Seq("neighbor_id"))
-      .join(broadcast(p), Seq("probe_id"))
+      .join(broadcast(probeVecs(probes)), Seq("probe_id"))
       .select(col("probe_id"), col("neighbor_id"),
         cosine(col("pvec"), col("cvec")).as("cos_sim"), col("cvec"))
     mmrGreedy(cands, k, lambda)
@@ -821,8 +824,7 @@ object Similarity {
   def cosineNearDups(corpus: DataFrame, threshold: Double,
                      numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(numPlanes, dim, seed)
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-      .withColumn("bucket", lshBucket(col("vec"), planes))
+    val c = vectors(corpus).withColumn("bucket", lshBucket(col("vec"), planes))
     c.as("x").join(c.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
@@ -892,7 +894,7 @@ object Similarity {
     * subspace of `dim/m` contiguous dimensions) and encode the corpus.
     *
     * Training runs Lloyd's ON THE DRIVER over a deterministic hash-sample of
-    * at most `maxTrainVectors` vectors — the standard codebook practice
+    * at most [[MaxTrainVectors]] vectors — the standard codebook practice
     * (FAISS-style): codebooks bound reconstruction error, they don't need
     * the corpus, and the sample size is CAPPED independent of corpus scale,
     * so this is not a driver-side loop over the data. A distributed Lloyd's
@@ -919,13 +921,12 @@ object Similarity {
     * reclaims it afterwards via [[graft.ops.Caching.releaseAll]] /
     * `spark.catalog.clearCache()` (the harnesses already do). */
   def pqBuild(corpus: DataFrame, m: Int = 8, codesPerSub: Int = 16,
-              seed: Long = 42L, iters: Int = 8,
-              maxTrainVectors: Int = 1 << 16): PQIndex = {
+              seed: Long = 42L, iters: Int = 8): PQIndex = {
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-    val sample = trainSample(base, maxTrainVectors, seed)
+    val base = vectors(corpus)
+    val sample = trainSample(base, seed)
     // per-subspace Lloyd's over the sample's subvector projections
     val codebooks = Array.tabulate(m) { j =>
       val off = j * subDim
@@ -969,15 +970,13 @@ object Similarity {
     * one codegen'd projection, same argmin (and float order) as
     * [[ivfBuild]] gave the original corpus. */
   def assignWithIndex(ivf: IVFIndex, vectors: DataFrame): DataFrame =
-    vectors.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-      .withColumn("cell", nearestCell(col("vec"), ivf.centroids))
+    Similarity.vectors(vectors).withColumn("cell", nearestCell(col("vec"), ivf.centroids))
 
   /** Encode new vectors with an EXISTING index's frozen codebooks — the PQ
     * half of incremental ingest (same encode pass as [[pqBuild]], nothing
     * retrained). */
   def encodeWithCodebooks(pq: PQIndex, vectors: DataFrame): DataFrame =
-    pqEncode(vectors.select(col("vec_id"), asDouble(col("embedding")).as("vec")),
-      pq.codebooks, pq.m, pq.subDim)
+    pqEncode(Similarity.vectors(vectors), pq.codebooks, pq.m, pq.subDim)
 
   /** Incrementally append a batch of new vectors to a [[saveIndex]]-
     * persisted index: assign with the frozen centroids, encode with the
@@ -998,25 +997,18 @@ object Similarity {
       s"${prefix}_pq_codes", "append"): Unit
   }
 
-  /** Approximate top-k neighbors by asymmetric distance computation (ADC):
-    * each probe precomputes its m×k distance table ONCE (probe subvector →
-    * every codebook centroid, plan literals), then every corpus vector
-    * scores with m table lookups — no original vectors are read, only the
-    * m-byte codes. The classic memory-bound ANN scale path (IVF bounds the
-    * candidates, PQ bounds the bytes; [[ivfTopK]] + this compose). */
-  /** Probe-side ADC distance tables: (probe_id, dtab) where dtab[j][c] is
-    * the squared distance from the probe's j-th subvector to centroid c of
-    * codebook j — the per-probe precomputation every ADC consumer shares. */
-  private def adcProbes(index: PQIndex, probes: DataFrame): DataFrame = {
-    val dtab = array((0 until index.m).map { j =>
+  /** The probe's ADC distance table: dtab[j][c] is the squared distance
+    * from its j-th subvector (of `pvec`) to centroid c of codebook j — the
+    * per-probe precomputation every ADC consumer shares. */
+  private def adcTable(index: PQIndex): Column =
+    array((0 until index.m).map { j =>
       array(index.codebooks(j).toIndexedSeq.map(c =>
         subSqDist(col("pvec"), j * index.subDim, index.subDim, c)): _*)
     }: _*)
-    probes
-      .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("pvec"))
-      .withColumn("dtab", dtab)
-      .select("probe_id", "dtab")
-  }
+
+  /** Probe-side ADC distance tables: (probe_id, dtab). */
+  private def adcProbes(index: PQIndex, probes: DataFrame): DataFrame =
+    probeVecs(probes).withColumn("dtab", adcTable(index)).select("probe_id", "dtab")
 
   /** ADC lookup-sum over a row holding `dtab` and `codes`. Unrolled over
     * the statically-known m: a plain element_at chain stays inside
@@ -1037,13 +1029,14 @@ object Similarity {
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         adcSum(index.m).as("approx_dist"))
 
-  def pqTopK(index: PQIndex, probes: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("probe_id")
-      .orderBy(asc("approx_dist"), asc("neighbor_id"))
-    adcScored(index, probes)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "approx_dist", "rn")
-  }
+  /** Approximate top-k neighbors by asymmetric distance computation (ADC):
+    * each probe precomputes its m×k distance table ONCE (probe subvector →
+    * every codebook centroid, plan literals), then every corpus vector
+    * scores with m table lookups — no original vectors are read, only the
+    * m-byte codes. The classic memory-bound ANN scale path (IVF bounds the
+    * candidates, PQ bounds the bytes; [[ivfPqTopK]] composes them). */
+  def pqTopK(index: PQIndex, probes: DataFrame, k: Int): DataFrame =
+    adcScored(index, probes).transform(adcTopK(k))
 
   /** Combined recall@k + rank-quality gate from ONE ADC pass and NO
     * ranking: each true neighbor's full-ranking position is
@@ -1097,8 +1090,8 @@ object Similarity {
     * rotation method — deterministic, no external linear algebra): returns
     * (eigenvalues, eigenvector columns). Dimensions here are embedding
     * widths (≤ a few hundred), so the O(d³) sweeps are driver-trivial. */
-  private def jacobiEigen(a0: Array[Array[Double]],
-                          sweeps: Int = 30): (Array[Double], Array[Array[Double]]) = {
+  private def jacobiEigen(a0: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
+    val sweeps = 30
     val d = a0.length
     val a = a0.map(_.clone())
     val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
@@ -1155,14 +1148,12 @@ object Similarity {
     * Whitening decorrelates embedding dimensions and equalizes their
     * variance — the standard preconditioner that makes L2/cosine ANN
     * partitions (IVF cells, LSH planes) carve the space evenly instead of
-    * along a few dominant directions. `eps` floors the eigenvalues: a
-    * (near-)singular direction carries no signal, and 1/√λ there would
-    * amplify pure float noise — raise eps (or drop the dimension) for
-    * degenerate embeddings. */
-  def whitenFit(corpus: DataFrame, maxTrainVectors: Int = 1 << 16,
-                seed: Long = 42L, eps: Double = 1e-9): Whitener = {
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-    val sample = trainSample(base, maxTrainVectors, seed)
+    * along a few dominant directions. An eps of 1e-9 floors the
+    * eigenvalues: a (near-)singular direction carries no signal, and 1/√λ
+    * there would amplify pure float noise. */
+  def whitenFit(corpus: DataFrame, seed: Long = 42L): Whitener = {
+    val eps = 1e-9
+    val sample = trainSample(vectors(corpus), seed)
     val n = sample.length
     require(n > 1, "whitening needs at least 2 vectors")
     val d = sample(0).length
@@ -1201,7 +1192,7 @@ object Similarity {
     * subexpression elimination), then each output dimension is one native
     * dot product against a literal W row. Zero shuffles. */
   def whitenTransform(corpus: DataFrame, wh: Whitener): DataFrame =
-    corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
+    vectors(corpus)
       .select(col("vec_id"),
         zip_with(col("vec"), lit(wh.mean), (x, m) => x - m).as("xc"))
       .select(col("vec_id"),
@@ -1336,28 +1327,16 @@ object Similarity {
     * indexing. */
   def ivfPqTopK(ivf: IVFIndex, pq: PQIndex, probes: DataFrame, k: Int,
                 nProbe: Int = 4): DataFrame = {
-    val dtab = array((0 until pq.m).map { j =>
-      array(pq.codebooks(j).toIndexedSeq.map(c =>
-        subSqDist(col("pvec"), j * pq.subDim, pq.subDim, c)): _*)
-    }: _*)
-    val p = probes
-      .select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("pvec"))
-      .withColumn("cellr", rankedCells(col("pvec"), ivf.centroids))
-      .withColumn("dtab", dtab)
-      .withColumn("cell", explode(slice(col("cellr"), 1, nProbe)("cell")))
+    val p = probeVecs(probes)
+      .withColumn("dtab", adcTable(pq))
+      .withColumn("cell", probeCells(col("pvec"), ivf.centroids, nProbe))
       .select("probe_id", "dtab", "cell")
-    val cand = ivf.assigned.select(col("vec_id"), col("cell"))
+    ivf.assigned.select(col("vec_id"), col("cell"))
       .join(broadcast(p), Seq("cell"))
       .filter(col("probe_id") =!= col("vec_id"))
-    val adc = (1 to pq.m).map(j =>
-      element_at(element_at(col("dtab"), j), element_at(col("codes"), j) + 1))
-      .reduce(_ + _)
-    val scored = cand.join(pq.codes, Seq("vec_id"))
+      .join(pq.codes, Seq("vec_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        adc.as("approx_dist"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(asc("approx_dist"), asc("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "approx_dist", "rn")
+        adcSum(pq.m).as("approx_dist"))
+      .transform(adcTopK(k))
   }
 }

@@ -183,10 +183,8 @@ object CorpusIngest {
           bands, shingleSize, threshold)
         else Dedup.minhashNearDups(exact, numPerms, bands,
           shingleSize, threshold))
-      val jaccardKept =
-        if (inPairs.isEmpty) exact
-        else Dedup.keepComponentMin(exact, scope.hold(
-          Dedup.clusterPairs(inPairs)), "doc_id")
+      val jaccardKept = Dedup.keepComponentMin(exact,
+        scope.hold(Dedup.clusterPairs(inPairs)), "doc_id")
       // in-batch containment (opt-in): drop docs embedded in other batch
       // survivors — the same stage order as the batch refinery. The
       // TRACKED form hands back the banded stage's internal persists so

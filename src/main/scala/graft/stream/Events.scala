@@ -127,19 +127,18 @@ object Events {
     spark.readStream.schema(fileSchema).parquet(dir).withColumn("ts", tsChecked)
   }
 
-  /** Streaming variant: file source over the events parquet, watermarked
-    * tumbling counts. Caller attaches the sink/trigger. */
+  /** The event file source under a `watermark` on `ts`: what each
+    * streaming twin applies its batch form to. */
+  private def watermarked(spark: SparkSession, dir: String,
+                          watermark: String): DataFrame =
+    readEventStream(spark, dir).withWatermark("ts", watermark)
+
+  /** Streaming variant: [[tumblingCounts]] over the watermarked file
+    * source. Caller attaches the sink/trigger. */
   def streamingTumblingCounts(spark: SparkSession, dir: String,
                               width: String = "10 minutes",
-                              watermark: String = "30 minutes"): DataFrame = {
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width))
-      .agg(count(lit(1)).as("n_events"), r2(sum("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("n_events"), col("sum_value"))
-  }
+                              watermark: String = "30 minutes"): DataFrame =
+    tumblingCounts(watermarked(spark, dir, watermark), width)
 
   /** Stream–static dimension enrichment: join the event stream to a STATIC
     * dimension (e.g. a curated user→segment table) and aggregate per
@@ -153,15 +152,9 @@ object Events {
                              userDim: DataFrame,
                              width: String = "10 minutes",
                              watermark: String = "30 minutes"): DataFrame =
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
-      .join(broadcast(userDim), Seq("user_id"))
-      .groupBy(col("segment"), window(col("ts"), width))
-      .agg(count(lit(1)).as("n_events"), r2(sum("value")).as("sum_value"))
-      .select(col("segment"), col("window.start").as("window_start"),
-        col("n_events"), col("sum_value"))
+    segmentCounts(watermarked(spark, dir, watermark), userDim, width)
 
-  /** Batch twin of [[streamingSegmentCounts]] (same expressions). */
+  /** Batch form of [[streamingSegmentCounts]]. */
   def segmentCounts(events: DataFrame, userDim: DataFrame,
                     width: String = "10 minutes"): DataFrame =
     events.join(broadcast(userDim), Seq("user_id"))
@@ -184,26 +177,18 @@ object Events {
       .select(col("window.start").as("window_start"),
         col("approx_users"), col("n_events"))
 
-  /** Streaming twin of [[distinctUsersPerWindow]]: same expressions under a
-    * watermark; HLL++ sketches live in the state store per open window. */
+  /** Streaming twin: [[distinctUsersPerWindow]] over the watermarked file
+    * source; HLL++ sketches live in the state store per open window. */
   def streamingDistinctUsers(spark: SparkSession, dir: String,
                              width: String = "15 minutes",
                              watermark: String = "30 minutes"): DataFrame =
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width))
-      .agg(approx_count_distinct(col("user_id")).as("approx_users"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"),
-        col("approx_users"), col("n_events"))
+    distinctUsersPerWindow(watermarked(spark, dir, watermark), width)
 
   /** Streaming dedup within the watermark (the streaming form of exact
     * dedup: drop retransmitted event_ids). */
   def streamingDedup(spark: SparkSession, dir: String,
                      watermark: String = "30 minutes"): DataFrame =
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
-      .dropDuplicates("event_id", "ts")
+    watermarked(spark, dir, watermark).dropDuplicates("event_id", "ts")
 
   /** Stream events into a [[graft.tables.LakeTable]] via foreachBatch —
     * the streaming ingestion path of the lakehouse: each micro-batch lands
@@ -422,7 +407,7 @@ object Events {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val src = readEventStream(spark, dir).withWatermark("ts", watermark)
+    val src = watermarked(spark, dir, watermark)
       .select(col("user_id"), col("ts"), col("value"))
       .as[(Long, java.sql.Timestamp, Double)]
     // keep MICROsecond precision end to end: Timestamp.getTime is ms-only,
@@ -520,8 +505,7 @@ object Events {
   def streamingSessionWindow(spark: SparkSession, dir: String,
                              gap: String = "30 minutes",
                              watermark: String = "1 hour"): DataFrame =
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
+    watermarked(spark, dir, watermark)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
@@ -540,7 +524,7 @@ object Events {
                       watermark: String = "1 hour"): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val src = readEventStream(spark, dir).withWatermark("ts", watermark)
+    val src = watermarked(spark, dir, watermark)
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("ts").cast("double").as("sec"))
       .as[(Long, Long, String, Double)]
@@ -574,8 +558,7 @@ object Events {
   def streamingSessionize(spark: SparkSession, dir: String,
                           gap: String = "30 minutes",
                           watermark: String = "1 hour"): DataFrame = {
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
+    watermarked(spark, dir, watermark)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"), r2(sum("value")).as("sum_value"))
       .select(col("user_id"), col("session_window.start").as("session_start"),

@@ -49,6 +49,12 @@ class Round6OpsSpec extends SparkSpec {
     graft.ops.Caching.release(out)
     assert(spark.sharedState.cacheManager.isEmpty,
       "releasing the result must reclaim every cache entry the call created")
+    // no pairs: an empty components frame that holds no cache entry
+    val none = graft.ops.Graph.connectedComponents(df(Seq.empty[R5Pair]),
+      "probe_id", "neighbor_id")
+    assert(none.count() === 0L)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an empty pair set must leave no cache entry")
   }
 
   test("reachableParts drops its view and releases all but its result") {

@@ -253,4 +253,48 @@ class SimilaritySpec extends SparkSpec {
     assert(out.getAs[Boolean]("whiten_ok"),
       "whitened recall fell more than tol below unwhitened recall")
   }
+
+  test("ranked ANN paths return the same rows at 1 and 7 shuffle partitions " +
+    "and on a repartitioned corpus") {
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(17)
+    val emb = df((0 until 200).map { i =>
+      Vec(i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat), i % 4)
+    })
+    def probes(c: DataFrame) = c.filter(col("vec_id") < 8)
+    val paths: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "bruteForceTopK" -> (c => Similarity.bruteForceTopK(c, probes(c), 3)),
+      "lshTopK" -> (c => Similarity.lshTopK(c, probes(c), 3, dim = 16)),
+      "ivfTopK" -> (c => Similarity.ivfTopK(
+        Similarity.ivfBuild(c, nLists = 4, iters = 2), probes(c), 3, nProbe = 2)),
+      "pqTopK" -> (c => Similarity.pqTopK(
+        Similarity.pqBuild(c, m = 4, codesPerSub = 8, iters = 2), probes(c), 3)),
+      "ivfPqTopK" -> (c => Similarity.ivfPqTopK(
+        Similarity.ivfBuild(c, nLists = 4, iters = 2),
+        Similarity.pqBuild(c, m = 4, codesPerSub = 8, iters = 2), probes(c), 3,
+        nProbe = 2)),
+      "knnGraph" -> (c => Similarity.knnGraph(c, k = 2, nLists = 4, nProbe = 2,
+        iters = 2)),
+      "hardNegatives" -> (c => Similarity.hardNegatives(c, k = 2, nLists = 4,
+        nProbe = 2, iters = 2)),
+      "mmrRerankIvf" -> (c => Similarity.mmrRerankIvf(c, probes(c), n = 6, k = 3,
+        nLists = 4, nProbe = 2, iters = 2)))
+    val key = "spark.sql.shuffle.partitions"
+    // the PQ code table is persisted: drop it after each run so no run
+    // reads another run's cached encode
+    def rows(width: Option[Int], out: => DataFrame): Set[Seq[Any]] = {
+      val prev = spark.conf.get(key)
+      width.foreach(w => spark.conf.set(key, w.toString))
+      try out.collect().map(_.toSeq).toSet
+      finally { spark.conf.set(key, prev); graft.ops.Caching.releaseAll(spark) }
+    }
+    paths.foreach { case (name, run) =>
+      val base = rows(Some(1), run(emb))
+      assert(base.nonEmpty, s"$name returned no rows")
+      assert(rows(Some(7), run(emb)) === base,
+        s"$name differs at 7 shuffle partitions")
+      assert(rows(None, run(emb.repartition(5))) === base,
+        s"$name differs on a corpus repartitioned to 5")
+    }
+  }
 }
