@@ -114,7 +114,7 @@ object Graph {
     * log-bounded, and `MEMORY_AND_DISK` persists make eviction-triggered
     * lineage recomputation (the usual iterative-DAG hazard) a disk read
     * instead of a cascade. This is the operator behind cluster-level dedup
-    * ([[graft.text.Dedup.dedupCorpus]] uses it on the near-dup pair graph). */
+    * ([[graft.text.Dedup.dedupCorpusShingle]] uses it on the near-dup pair graph). */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           smallGraphEdgeCap: Long = 1L << 17): DataFrame = {
     import org.apache.spark.storage.StorageLevel

@@ -429,7 +429,7 @@ private[queries] object TextQueries {
     QuerySpec("q69_posexplode_tokens", ((s, d) =>
       t(s, d, "documents")
         .select(col("doc_id"),
-          posexplode(slice(TextStats.tokensN(TextStats.normalize(col("text"))), 1, 3)))
+          posexplode(slice(TextStats.normTokens(), 1, 3)))
         .withColumnRenamed("col", "token")),
       (s"WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents), " +
         "e AS (SELECT doc_id, unnest(list_transform(generate_series(1, least(3, len(toks))), " +
@@ -582,7 +582,7 @@ private[queries] object TextQueries {
         "FROM r JOIN s ON r.source = s.source CROSS JOIN n")),
     // --- exists/forall/filter HOF predicates over token arrays ---
     QuerySpec("q137_hof_predicates", { (s, d) =>
-      val toks = TextStats.tokensN(TextStats.normalize(col("text")))
+      val toks = TextStats.normTokens()
       t(s, d, "documents").select(col("doc_id"),
         exists(toks, tk => tk === "the").as("has_the"),
         forall(toks, tk => length(tk) <= 15).as("all_short"),
@@ -770,7 +770,7 @@ private[queries] object TextQueries {
     // pipeline computes exactly what it claims ---
     QuerySpec("q169_refinery_e2e", ((s, d) =>
       graft.text.Refinery.refine(t(s, d, "documents"),
-        graft.text.Refinery.Config(shingleVerify = true))),
+        graft.text.Refinery.Config())),
       // the whole refinery replayed declaratively: gate (q21's predicate),
       // exact-dedup keepers (q19), brute-force shingle pairs + recursive
       // closure (q24/q43), md5-rank source cap, chunk expansion (q94)
@@ -932,7 +932,7 @@ private[queries] object TextQueries {
     QuerySpec("q186_refinery_containment", ((s, d) =>
       graft.text.Refinery.refine(
         t(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        graft.text.Refinery.Config(shingleVerify = true,
+        graft.text.Refinery.Config(
           nearDupThreshold = 0.98, containment = true,
           containmentThreshold = 0.8, containmentMaxDf = 1000))),
       // refinery + containment replay: q169's stage respell (near-dup edges
@@ -963,7 +963,7 @@ private[queries] object TextQueries {
     QuerySpec("q187_refinery_gopher", ((s, d) =>
       graft.text.Refinery.refine(
         t(s, d, "documents").filter(col("doc_id") % 2 === 1),
-        graft.text.Refinery.Config(shingleVerify = true, gate = "gopher",
+        graft.text.Refinery.Config(gate = "gopher",
           gopherMinStopWords = 1))),
       // Gopher-gated refinery replay: q179's integer-arithmetic rule
       // conjunction as the gate, then q169's unchanged dedup/cap/chunk respell
@@ -1013,7 +1013,7 @@ private[queries] object TextQueries {
       graft.stream.MicroBatch.sized(s) { _ =>
         val slice = t(s, d, "documents").filter(col("doc_id") % 8 === 1)
         val chunks = graft.text.Refinery.refine(slice,
-          graft.text.Refinery.Config(shingleVerify = true,
+          graft.text.Refinery.Config(
             lmFilter = Some(graft.text.Refinery.LmFilter("lang = 'en'",
               tailPermille = 300)),
             classifierFilter = Some(graft.text.Refinery.NbFilter(
@@ -1553,7 +1553,7 @@ private[queries] object TextQueries {
     QuerySpec("q208_refinery_lm", ((s, d) =>
       graft.text.Refinery.refine(
         t(s, d, "documents").filter(col("doc_id") % 2 === 0),
-        graft.text.Refinery.Config(shingleVerify = true,
+        graft.text.Refinery.Config(
           lmFilter = Some(graft.text.Refinery.LmFilter("lang = 'en'",
             tailPermille = 300))))),
       // refinery+LM replay: gate, the q200 LM chain over the gated slice

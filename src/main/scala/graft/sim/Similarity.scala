@@ -447,7 +447,7 @@ object Similarity {
       else directed
     // the component frame IS its cache entry (the connectedComponents
     // contract); harnesses reclaim it via Caching.releaseAll, the
-    // dedupCorpus discipline
+    // dedupCorpusShingle discipline
     val comps = graft.ops.Graph.connectedComponents(edges, "src_id", "dst_id")
       .toDF("vec_id", "cluster_id")
     corpus.select(col("vec_id"))

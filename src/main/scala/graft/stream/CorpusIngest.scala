@@ -145,7 +145,7 @@ object CorpusIngest {
       def setsOf(d: DataFrame): DataFrame =
         if (shingleVerify) Dedup.hashedShingleSets(d, shingleSize)
         else d.select(col("doc_id"),
-            TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
+            TextStats.normTokens().as("toks"))
           .select(col("doc_id"),
             graft.functions.HashSets.hashedTokenSetCol(col("toks")).as("s"))
       // per-batch persists: this pipeline's DAG is DEEP (gate -> exact ->
@@ -237,12 +237,12 @@ object CorpusIngest {
       // side is immutable, so the check is one-directional). The lake's
       // containment index is the `{table}_grams` side table (doc_id,
       // 64-bit gram hash); candidates come from the batch docs' bottom-k
-      // gram sketches probing that index with the SAME salted ordering
-      // and evidence-count prune as Dedup.containmentNearDupsBanded
-      // (doc-salted sample kills the hub-gram df blow-up; 4·s ≥
-      // t·min(k, sz) keeps a true containment except with ~2e-10
-      // Chernoff probability), and the exact shared-count verify reads
-      // index rows for candidate pairs only.
+      // gram sketches probing that index through the SAME
+      // Dedup.bottomKSketch and Dedup.sketchEvidence prune as
+      // Dedup.containmentNearDupsBanded (doc-salted sample kills the
+      // hub-gram df blow-up; 4·s ≥ t·min(k, sz) keeps a true containment
+      // except with ~2e-10 Chernoff probability), and the exact
+      // shared-count verify reads index rows for candidate pairs only.
       val gramsTable = s"${table}_grams"
       // index bootstrap/repair BEFORE the check: the corpus write and the
       // index write are two separate commits, so a crash between them —
@@ -268,21 +268,16 @@ object CorpusIngest {
       var batchGrams: Option[DataFrame] = None
       val landed0 = containmentThreshold match {
         case Some(t) if lake.exists(gramsTable) =>
-          import org.apache.spark.sql.expressions.Window
           val grams = scope.persist(Dedup.docGrams(novelF, shingleSize))
           batchGrams = Some(grams)
-          val sz = grams.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          val rk = Window.partitionBy("doc_id")
-            .orderBy(xxhash64(col("doc_id"), col("g")), col("g"))
-          val sketch = grams.withColumn("rk", row_number().over(rk))
-            .filter(col("rk") <= sketchK).select("doc_id", "g")
+          val sz = Dedup.gramSetSizes(grams)
+          val sketch = Dedup.bottomKSketch(grams, sketchK)
           val lakeGrams = lake.read(gramsTable)
             .select(col("doc_id").as("lake_doc_id"), col("g"))
           val cand = sketch.join(lakeGrams, Seq("g"))
             .groupBy("doc_id", "lake_doc_id").agg(count(lit(1)).as("s"))
             .join(sz, Seq("doc_id"))
-            .filter(col("s").cast("double") * 4.0 >= lit(t) *
-              least(lit(sketchK.toLong), col("sz")).cast("double"))
+            .filter(Dedup.sketchEvidence(col("s"), col("sz"), t, sketchK))
             .select("doc_id", "lake_doc_id", "sz")
           val contained = cand
             .join(grams, Seq("doc_id"))

@@ -91,7 +91,7 @@ object Bpe {
   def bpeCompressionStats(docs: DataFrame, vocabCap: Int = 2048,
                           numMerges: Int = 256): DataFrame = {
     val toks = docs.select(col("doc_id"),
-        explode(TextStats.tokensN(TextStats.normalize(col("text")))).as("tok"))
+        explode(TextStats.normTokens()).as("tok"))
     val topWords = toks.groupBy("tok").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("tok")).limit(vocabCap)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
@@ -119,7 +119,7 @@ object Bpe {
               numMerges: Int = 256): DataFrame =
     bpeCompressionStats(docs, vocabCap, numMerges)
       .join(docs.select(col("doc_id"),
-        aggregate(TextStats.tokensN(TextStats.normalize(col("text"))),
+        aggregate(TextStats.normTokens(),
           lit(0L), (acc, t) => acc + length(t)).as("n_tok_chars")), Seq("doc_id"))
       .agg(
         count(lit(1)).as("n_docs"),

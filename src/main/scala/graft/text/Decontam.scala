@@ -41,7 +41,7 @@ object Decontam {
     * same spelling the DuckDB oracles use). */
   private def ngramHashes(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"),
-        TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
+        TextStats.normTokens().as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(TextStats.shinglesOf(col("toks"), n))).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("g"))
@@ -84,7 +84,7 @@ object Decontam {
     * here so the oracle and the operator share one integer contract. */
   def boilerplateNgrams(docs: DataFrame, n: Int = 3, minDocs: Long = 25): DataFrame =
     docs.select(col("doc_id"),
-        TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
+        TextStats.normTokens().as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(TextStats.shinglesOf(col("toks"), n))).as("ngram"))
       .groupBy("ngram").agg(count(lit(1)).as("n_docs"))

@@ -120,11 +120,8 @@ object Dedup {
     // counts modulo the standing 2^-64 docGrams collision contract)
     val words = docs.select(col("doc_id"),
       graft.functions.HashSets.hashedTokenSetCol(
-        TextStats.tokensN(TextStats.normalize(col("text")))).as("w"))
-    val joined = pairs
-      .join(words.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("w", "wa"), "doc_a")
-      .join(words.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("w", "wb"), "doc_b")
-    scoreJaccardPairs(joined, col("wa"), col("wb"), threshold)
+        TextStats.normTokens()).as("w"))
+    verifyPairs(pairs, words, "w", threshold)
   }
 
   /** Distinct word-`shingleSize`-gram sets per document — the exact metric
@@ -138,7 +135,7 @@ object Dedup {
     * survives optimization. */
   def shingleSets(docs: DataFrame, shingleSize: Int = 3): DataFrame =
     docs.select(col("doc_id"),
-        TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
+        TextStats.normTokens().as("toks"))
       .select(col("doc_id"),
         array_distinct(TextStats.shinglesOf(col("toks"), shingleSize)).as("s"))
 
@@ -150,7 +147,7 @@ object Dedup {
     * (HashSetSpec pins gram-hash equality to the string spelling). */
   def hashedShingleSets(docs: DataFrame, shingleSize: Int = 3): DataFrame =
     docs.select(col("doc_id"),
-        TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
+        TextStats.normTokens().as("toks"))
       .select(col("doc_id"),
         graft.functions.HashSets.shingleHashSetCol(col("toks"), shingleSize).as("s"))
 
@@ -192,16 +189,31 @@ object Dedup {
     // and the prune; kept feeds sizes + both self-join sides — without the
     // persists the tokenize/shingle/hash corpus pass re-runs five times
     val grams = docGrams(docs, shingleSize).persist()
-    val kept = grams.join(
-      grams.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select("g"),
-      Seq("g"), "left_semi")
-      .persist()
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val kept = keptGrams(grams, maxDf).persist()
     val shared = kept.as("x").join(kept.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
+    containmentVerdict(shared, gramSetSizes(kept), threshold)
+  }
+
+  /** The df-pruned (doc_id, g) gram table: grams in at most `maxDf`
+    * documents (the containment hub control — see [[containmentNearDups]]). */
+  private def keptGrams(grams: DataFrame, maxDf: Long): DataFrame =
+    grams.join(
+      grams.groupBy("g").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf).select("g"),
+      Seq("g"), "left_semi")
+
+  /** Per-doc distinct gram-set size (doc_id, sz) of a (doc_id, g) table. */
+  private[graft] def gramSetSizes(grams: DataFrame): DataFrame =
+    grams.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+
+  /** The containment verdict over (doc_a, doc_b, n_shared) pair counts:
+    * both directions' set sizes joined in, kept when either direction's
+    * c = n_shared / sz clears `threshold`, ratios reported at 6 dp. */
+  private def containmentVerdict(shared: DataFrame, sizes: DataFrame,
+                                 threshold: Double): DataFrame =
     shared
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
@@ -214,7 +226,35 @@ object Dedup {
           .as("containment_a"),
         round(col("n_shared").cast("double") / col("sz_b").cast("double"), 6)
           .as("containment_b"))
+
+  /** Bottom-k sketch of a (doc_id, g) table: each document's `k` grams of
+    * smallest doc-salted rank xxhash64(doc_id, g) (one shuffle on doc_id;
+    * WindowGroupLimit prunes before the exchange). Salting with doc_id, NOT
+    * ranking by the raw gram hash: under the raw hash a corpus-frequent
+    * gram that happens to hash small lands in EVERY containing doc's
+    * bottom-k, and the candidate join pays that gram's full df² (the exact
+    * form's blow-up, resurrected through the sketch). The salt
+    * decorrelates the samples, so a df-d hub gram is sampled by ~d·k/sz̄
+    * docs instead of d — and the per-doc sample is still a uniform
+    * k-subset, so the recall bound is unchanged. */
+  private[graft] def bottomKSketch(grams: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
+      .orderBy(xxhash64(col("doc_id"), col("g")), col("g"))
+    grams.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k).select("doc_id", "g")
   }
+
+  /** The evidence-count prune on a sampler's `s` sketch hits against
+    * another doc: a pair with c(x→y) ≥ t shares ~c·min(k, sz_x) of x's
+    * sampled grams (hypergeometric), so requiring 4·s ≥ t·min(k, sz_x)
+    * keeps it except with Chernoff probability ~2e-10 at k = 64, t = 0.5
+    * (docs with sz ≤ k are sampled completely: s = n_shared, so the bound
+    * holds with equality — zero misses), while pairs sharing only a stray
+    * template gram (the vast majority of raw sketch hits on boilerplate-
+    * heavy corpora) never reach the verify join. */
+  private[graft] def sketchEvidence(s: Column, sz: Column, threshold: Double,
+                                    k: Int): Column =
+    s.cast("double") * 4.0 >= lit(threshold) * least(lit(k.toLong), sz).cast("double")
 
   /** [[containmentNearDups]] with a BANDED candidate stage — the true
     * 100 TB form: the exact version's kept-gram self-join is Σ df² pair
@@ -273,43 +313,19 @@ object Dedup {
   private[graft] def containmentNearDupsBandedTracked(
       docs: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5,
       maxDf: Long = 1000, sketchK: Int = 64): TrackedContainment = {
-    import org.apache.spark.sql.expressions.Window
     val grams = docGrams(docs, shingleSize).persist()
-    val kept = grams.join(
-      grams.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select("g"),
-      Seq("g"), "left_semi")
-      .persist()
-    // bottom-k sketch: k sampled kept grams per document (one shuffle on
-    // doc_id; WindowGroupLimit prunes before the exchange). The sample
-    // ranks by xxhash64(doc_id, gram) — NOT the raw gram hash: under the
-    // raw hash a corpus-frequent gram that happens to hash small lands in
-    // EVERY containing doc's bottom-k, and the candidate join pays that
-    // gram's full df² (the exact form's blow-up, resurrected through the
-    // sketch). Salting with doc_id decorrelates the samples, so a df-d hub
-    // gram is sampled by ~d·k/sz̄ docs instead of d — and the per-doc
-    // sample is still a uniform k-subset, so the recall bound is unchanged.
-    val w = Window.partitionBy("doc_id")
-      .orderBy(xxhash64(col("doc_id"), col("g")), col("g"))
-    val sketch = kept.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= sketchK).select("doc_id", "g")
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("sz")).persist()
+    val kept = keptGrams(grams, maxDf).persist()
+    val sketch = bottomKSketch(kept, sketchK)
+    val sizes = gramSetSizes(kept).persist()
     // candidates: sketched grams of one doc found in the other's kept set,
-    // with an EVIDENCE-COUNT prune before the expensive verify: a pair with
-    // c(x→y) ≥ t shares ~c·min(k, sz_x) of x's sampled grams
-    // (hypergeometric), so requiring 4·s ≥ t·min(k, sz_x) in SOME direction
-    // keeps it except with Chernoff probability ~2e-10 at k = 64, t = 0.5
-    // (docs with sz ≤ k are sampled completely: s = n_shared, so the bound
-    // holds with equality — zero misses), while pairs sharing only a stray
-    // template gram (the vast majority of raw sketch hits on boilerplate-
-    // heavy corpora) never reach the verify join
+    // with the EVIDENCE-COUNT prune (in SOME direction) before the
+    // expensive verify
     val hits = sketch.as("x").join(kept.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") =!= col("y.doc_id"))
       .groupBy(col("x.doc_id").as("sampler"), col("y.doc_id").as("other"))
       .agg(count(lit(1)).as("s"))
       .join(sizes.select(col("doc_id").as("sampler"), col("sz")), Seq("sampler"))
-      .filter(col("s").cast("double") * 4.0 >=
-        lit(threshold) * least(lit(sketchK.toLong), col("sz")).cast("double"))
+      .filter(sketchEvidence(col("s"), col("sz"), threshold, sketchK))
     val cand = hits
       .select(least(col("sampler"), col("other")).as("doc_a"),
         greatest(col("sampler"), col("other")).as("doc_b"))
@@ -322,19 +338,8 @@ object Dedup {
         col("y.doc_id") === col("doc_b") && col("x.g") === col("y.g"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-    val result = shared
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
-      .filter(greatest(
-        col("n_shared").cast("double") / col("sz_a").cast("double"),
-        col("n_shared").cast("double") / col("sz_b").cast("double")) >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("n_shared"),
-        col("sz_a"), col("sz_b"),
-        round(col("n_shared").cast("double") / col("sz_a").cast("double"), 6)
-          .as("containment_a"),
-        round(col("n_shared").cast("double") / col("sz_b").cast("double"), 6)
-          .as("containment_b"))
-    TrackedContainment(result, Seq(grams, kept, sizes), grams)
+    TrackedContainment(containmentVerdict(shared, sizes, threshold),
+      Seq(grams, kept, sizes), grams)
   }
 
   /** Cross-source duplication matrix — which domains copy from which: every
@@ -373,9 +378,7 @@ object Dedup {
                       numPerms: Int = 128, bands: Int = 32,
                       shingleSize: Int = 3): DataFrame = {
     def perSource(d: DataFrame, tokCol: String, docCol: String): DataFrame =
-      d.select(col("source"),
-          size(TextStats.tokensN(TextStats.normalize(col("text")))).cast("long")
-            .as("nt"))
+      d.select(col("source"), size(TextStats.normTokens()).cast("long").as("nt"))
         .groupBy("source")
         .agg(sum("nt").as(tokCol), count(lit(1)).as(docCol))
     val raw = perSource(docs, "raw_tokens", "raw_docs")
@@ -485,11 +488,7 @@ object Dedup {
                              bands: Int = 32, shingleSize: Int = 3,
                              threshold: Double = 0.8): DataFrame = {
     val pairs = lshCandidatePairs(docs, numPerms, bands, shingleSize)
-    val sh = hashedShingleSets(docs, shingleSize)
-    val joined = pairs
-      .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("s", "wa"), "doc_a")
-      .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("s", "wb"), "doc_b")
-    scoreJaccardPairs(joined, col("wa"), col("wb"), threshold)
+    verifyPairs(pairs, hashedShingleSets(docs, shingleSize), "s", threshold)
   }
 
   /** Exact Jaccard similarity of two (distinct-element) arrays.
@@ -497,7 +496,7 @@ object Dedup {
     * NOTE for hot paths: this Column references `array_intersect` twice
     * (numerator and union), and Catalyst re-evaluates it per reference.
     * Corpus-scale pair scoring should use the two-step projection in
-    * [[scoreJaccardPairs]] which computes the intersection once per pair. */
+    * [[verifyPairs]] which computes the intersection once per pair. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = (size(a) + size(b)).cast("double") - inter
@@ -514,19 +513,22 @@ object Dedup {
     when(union === 0, lit(1.0)).otherwise(inter / union)
   }
 
-  /** Score candidate pairs with exact set Jaccard over SORTED DISTINCT
-    * 64-bit hash arrays ([[hashedShingleSets]] / hashedTokenSet outputs):
-    * the intersection count is a native merge walk
+  /** Verify candidate pairs with exact set Jaccard: join each pair's two
+    * SORTED DISTINCT 64-bit hash sets (`sets`: doc_id + `setCol`,
+    * [[hashedShingleSets]] / hashedTokenSet outputs) and keep the pairs at
+    * `threshold`. The intersection count is a native merge walk
     * ([[graft.functions.SortedIntersectCount]] — no per-pair hash map or
     * result array), materialized once per pair before deriving the ratio
     * (a second projection over cheap int columns). */
-  private def scoreJaccardPairs(pairs: DataFrame, a: Column, b: Column,
-                                threshold: Double): DataFrame =
+  private def verifyPairs(pairs: DataFrame, sets: DataFrame, setCol: String,
+                          threshold: Double): DataFrame =
     pairs
+      .join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(setCol, "wa"), "doc_a")
+      .join(sets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(setCol, "wb"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        graft.functions.HashSets.sortedIntersectCountCol(a, b)
+        graft.functions.HashSets.sortedIntersectCountCol(col("wa"), col("wb"))
           .cast("double").as("i"),
-        (size(a) + size(b)).cast("double").as("ab"))
+        (size(col("wa")) + size(col("wb"))).cast("double").as("ab"))
       .select(col("doc_a"), col("doc_b"),
         when(col("ab") - col("i") === 0, lit(1.0))
           .otherwise(col("i") / (col("ab") - col("i"))).as("jaccard"))
@@ -548,7 +550,7 @@ object Dedup {
                           threshold: Double): DataFrame = {
     val words = docs.select(
       (col("doc_id") +: blockingKeys.map(col)) :+
-        array_distinct(TextStats.tokensN(TextStats.normalize(col("text")))).as("w"): _*)
+        array_distinct(TextStats.normTokens()).as("w"): _*)
       // equi-join semantics for NULL blocking keys: a null key matches
       // nothing, so such docs pair with nobody. groupBy would instead pool
       // all-null keys into one block — drop them up front to keep the
@@ -592,32 +594,36 @@ object Dedup {
       .filter(col("cluster_id").isNull || col(idCol) === col("cluster_id"))
       .drop("cluster_id")
 
-  /** End-to-end corpus dedup: exact dedup, MinHash near-dup candidate pairs,
-    * connected-component clustering, keep ONE canonical doc (min doc_id) per
-    * cluster. The standard pre-training dedup pipeline, all distributed. */
-  def dedupCorpus(docs: DataFrame, threshold: Double = 0.8,
-                  numPerms: Int = 32, bands: Int = 8, shingleSize: Int = 3): DataFrame = {
-    // exact survivors persist (Caching contract — harness releaseAll
-    // reclaims): the eager closure materializes the whole pair chain over
-    // them, and the canonical join reads them again
+  /** The front every end-to-end dedup shares: exact dedup, then the
+    * shingle-verified near-dup pairs ([[minhashNearDupsShingle]]) over the
+    * survivors, collapsed by [[clusterPairs]]. Returns (exact survivors,
+    * (doc_id, cluster_id) clusters). The survivors persist (Caching
+    * contract — harness releaseAll reclaims): the eager closure
+    * materializes the whole pair chain over them, and the caller's
+    * canonical join reads them again. */
+  private def exactThenClusters(docs: DataFrame, threshold: Double,
+                                numPerms: Int, bands: Int,
+                                shingleSize: Int): (DataFrame, DataFrame) = {
     val exact = dropExactDups(docs).persist()
-    val pairs = minhashNearDups(exact, numPerms, bands, shingleSize, threshold)
-    keepComponentMin(exact, clusterPairs(pairs), "doc_id")
+    (exact, clusterPairs(
+      minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)))
   }
 
-  /** [[dedupCorpus]] with the SHINGLE-verified near-dup stage
-    * ([[minhashNearDupsShingle]]) — end-to-end deterministic AND
-    * oracle-checkable: exact dedup is a norm-text group, the pair set
-    * equals brute-force shingle Jaccard (see minhashNearDupsShingle), and
-    * canonical-per-component is min doc_id, so a SQL oracle can replay the
-    * whole pipeline (recursive-CTE closure over the brute-force pairs —
-    * the q43 oracle does exactly that). */
+  /** End-to-end corpus dedup: exact dedup, shingle-verified MinHash
+    * near-dup pairs, connected-component clustering, keep ONE canonical doc
+    * (min doc_id) per cluster — the standard pre-training dedup pipeline,
+    * all distributed, and deterministic AND oracle-checkable: exact dedup
+    * is a norm-text group, the pair set equals brute-force shingle Jaccard
+    * (see minhashNearDupsShingle), and canonical-per-component is min
+    * doc_id, so a SQL oracle can replay the whole pipeline (recursive-CTE
+    * closure over the brute-force pairs — the q43 oracle does exactly
+    * that). */
   def dedupCorpusShingle(docs: DataFrame, threshold: Double = 0.8,
                          numPerms: Int = 128, bands: Int = 32,
                          shingleSize: Int = 3): DataFrame = {
-    val exact = dropExactDups(docs).persist() // see dedupCorpus's note
-    val pairs = minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)
-    keepComponentMin(exact, clusterPairs(pairs), "doc_id")
+    val (exact, clusters) =
+      exactThenClusters(docs, threshold, numPerms, bands, shingleSize)
+    keepComponentMin(exact, clusters, "doc_id")
   }
 
   /** SimHash fingerprint bit width — 60 bits from a 15-hex-char md5 prefix
@@ -648,7 +654,7 @@ object Dedup {
     * engine — the q25 oracle recomputes them in SQL. */
   def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val toks = docs.select(col(idCol),
-        explode(array_distinct(TextStats.tokensN(TextStats.normalize(col(textCol))))).as("tok"))
+        explode(array_distinct(TextStats.normTokens(col(textCol)))).as("tok"))
       .withColumn("h", portableTokenHash(col("tok")))
     val bitSums = (0 until SimhashBits).map { j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)).as(s"b$j")
@@ -736,17 +742,10 @@ object Dedup {
     require(evalNibbles.nonEmpty && evalNibbles.forall(_.length == 1),
       "evalNibbles must be single hex characters")
     val base = docs.select(col("doc_id"),
-      TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"),
+      TextStats.normTokens().as("toks"),
       substring(md5(col("doc_id").cast("string")), 1, 1)
         .isin(evalNibbles: _*).as("is_eval"))
-    // positional explode ([[TextStats.gramStream]]'s codegen rationale);
-    // <n-token docs contribute no shingle, as with the empty-array spelling
-    val sh = base.filter(size(col("toks")) >= n)
-      .select(col("doc_id"), col("is_eval"), col("toks"),
-        explode(sequence(lit(0), size(col("toks")) - n)).as("i"))
-      .select(col("doc_id"), col("is_eval"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("i") + 1, lit(n))))
-          .as("h"))
+    val sh = windowHashes(base, n, Seq("doc_id", "is_eval"), "i")
     val evalSh = sh.filter(col("is_eval")).select("doc_id", "h").distinct()
     val trainSh = sh.filter(!col("is_eval")).select("h").distinct()
       .withColumn("hit", lit(1))
@@ -754,6 +753,23 @@ object Dedup {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_shared"))
       .withColumn("contaminated", col("n_shared") > 0)
+  }
+
+  /** Every `n`-token window of a `toks` token-array column as a 64-bit
+    * xxhash64 of its space-joined tokens, one row per window:
+    * (keep..., pos, h) with `pos` named `posCol`, the 0-based start.
+    * Positional explode ([[TextStats.gramStream]]'s codegen rationale);
+    * docs shorter than `n` emit none (filter BEFORE sequence: Spark's
+    * sequence(0, -k) counts DOWN, it does not return empty). */
+  private def windowHashes(rows: DataFrame, n: Int, keep: Seq[String],
+                           posCol: String): DataFrame = {
+    val kept = keep.map(col)
+    rows.filter(size(col("toks")) >= n)
+      .select(kept ++ Seq(col("toks"),
+        explode(sequence(lit(0), size(col("toks")) - n)).as(posCol)): _*)
+      .select(kept ++ Seq(col(posCol),
+        xxhash64(concat_ws(" ", slice(col("toks"), col(posCol) + 1, lit(n))))
+          .as("h")): _*)
   }
 
   /** Boilerplate-prefix census: documents sharing their first `prefixTokens`
@@ -766,7 +782,7 @@ object Dedup {
     * count, documents covered by them, and the largest group. */
   def prefixDupStats(docs: DataFrame, prefixTokens: Int = 16): DataFrame = {
     val key = concat_ws(" ",
-      slice(TextStats.tokensN(TextStats.normalize(col("text"))), 1, prefixTokens))
+      slice(TextStats.normTokens(), 1, prefixTokens))
     docs.select(key.as("prefix_key"))
       .groupBy("prefix_key").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
@@ -812,15 +828,8 @@ object Dedup {
     require(window >= 2, "a duplicated span needs window >= 2 tokens")
     require(minDocs >= 2, "cross-document duplication needs minDocs >= 2")
     val t = docs.select(col("doc_id"),
-      TextStats.tokensN(TextStats.normalize(col("text"))).as("toks"))
-    // windows with their start position; docs shorter than `window` emit none
-    // (filter BEFORE sequence: Spark's sequence(0, -k) counts DOWN, it does
-    // not return empty)
-    val w = t.filter(size(col("toks")) >= window)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(0), size(col("toks")) - window)).as("pos"))
-      .select(col("doc_id"), col("pos"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("pos") + 1, lit(window)))).as("h"))
+      TextStats.normTokens().as("toks"))
+    val w = windowHashes(t, window, Seq("doc_id"), "pos")
     val census = w.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("df"), min(col("doc_id")).as("keeper"))
       .filter(col("df") >= minDocs)
@@ -867,10 +876,9 @@ object Dedup {
   def dedupCorpusKeepBest(docs: DataFrame, threshold: Double = 0.8,
                           numPerms: Int = 128, bands: Int = 32,
                           shingleSize: Int = 3): DataFrame = {
-    val exact = dropExactDups(docs).persist() // see dedupCorpus's note
-    val pairs = minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)
-    val clusters = clusterPairs(pairs)
-    val toks = TextStats.tokensN(TextStats.normalize(col("text")))
+    val (exact, clusters) =
+      exactThenClusters(docs, threshold, numPerms, bands, shingleSize)
+    val toks = TextStats.normTokens()
     val feats = exact.select(col("doc_id"),
       size(toks).cast("long").as("n_tokens"),
       when(size(toks) >= 20 &&
@@ -917,10 +925,9 @@ object Dedup {
     val nrm = docs.select(col("doc_id"), TextStats.normalize(col("text")).as("norm"))
     val keepers = nrm.groupBy("norm").agg(min(col("doc_id")).as("keeper"))
     val docmap = nrm.join(keepers, Seq("norm")).select(col("doc_id"), col("keeper"))
-    val exact = dropExactDups(docs).persist() // see dedupCorpus's note
-    val pairs = minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)
-    val clusters = clusterPairs(pairs)
-      .withColumnRenamed("doc_id", "keeper")
+    val clusters =
+      exactThenClusters(docs, threshold, numPerms, bands, shingleSize)._2
+        .withColumnRenamed("doc_id", "keeper")
     val nib = substring(md5(col("cluster_id").cast("string")), 1, 1)
     docmap.join(clusters, Seq("keeper"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("keeper")).as("cluster_id"))
@@ -977,10 +984,8 @@ object Dedup {
       .select(boundary: _*)
       .groupBy("split_a", "split_b").agg(count(lit(1)).as("n_dups"))
     val grams = docGrams(docs, shingleSize).persist()
-    val kept = grams.join(
-      grams.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select("g"), "g")
-    val sz = kept.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val kept = keptGrams(grams, maxDf)
+    val sz = gramSetSizes(kept)
     val withSplit = kept.join(split, "doc_id")
     val maxJ = withSplit
       .select(col("doc_id").as("doc_a"), col("g"), col("split").as("sa"))

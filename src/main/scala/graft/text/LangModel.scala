@@ -42,12 +42,11 @@ object LangModel {
   /** Stupid-Backoff discount (Brants et al. 2007 §5.1's alpha). */
   private val Alpha = 0.4
 
-  private def micronats(x: Column): Column =
-    floor(log(x) * lit(1000000.0) + lit(0.5)).cast("long")
-
   /** Per-doc adjacent (w1h, w2h) hashed bigram events via the positional
     * explode ([[TextStats.gramStream]]'s codegen rationale); docs with <2
-    * tokens emit none.
+    * tokens emit none. `carryCols` ride every projection between `doc_id`
+    * and the tokens (gramStream's carryCols) — lmScore carries its train
+    * flag so one persisted stream feeds both the fit and the serve.
     *
     * The token array is hashed ONCE (r16: was per EVENT SIDE — every
     * interior token paid md5 twice; BenchProbe `lmhash` measured −35%) and,
@@ -59,20 +58,21 @@ object LangModel {
     * `* Project` span (plans/r17) at the same single-hash count. Hash
     * VALUES are identical to the md5 spelling (TokenHashSpec pins it), so
     * model tables, scores, and every oracle replay are unchanged. */
-  private def pairedEvents(docs: DataFrame): DataFrame = {
-    val toks = TextStats.tokensN(TextStats.normalize(col("text")))
+  private def pairedEvents(docs: DataFrame,
+                           carryCols: Seq[String] = Nil): DataFrame = {
+    val id = col("doc_id") +: carryCols.map(col)
     // the <2-token filter runs on the UN-hashed token array: filtering on
     // size(hs) pushes the whole hashing transform into the Filter node and
     // every doc pays the md5 pass twice (plan-checked in plans/r16)
-    docs.select(col("doc_id"), toks.as("toks"))
+    docs.select(id :+ TextStats.normTokens().as("toks"): _*)
       .where(size(col("toks")) >= 2)
-      .select(col("doc_id"),
-        graft.functions.TokenHash.hashAllCol(col("toks")).as("hs"))
-      .select(col("doc_id"), col("hs"),
-        explode(sequence(lit(0), size(col("hs")) - 2)).as("i"))
-      .select(col("doc_id"),
+      .select(id :+
+        graft.functions.TokenHash.hashAllCol(col("toks")).as("hs"): _*)
+      .select(id ++ Seq(col("hs"),
+        explode(sequence(lit(0), size(col("hs")) - 2)).as("i")): _*)
+      .select(id ++ Seq(
         element_at(col("hs"), col("i") + 1).as("w1h"),
-        element_at(col("hs"), col("i") + 2).as("w2h"))
+        element_at(col("hs"), col("i") + 2).as("w2h")): _*)
   }
 
   /** A trained Stupid-Backoff bigram LM as DATA: the bigram and unigram
@@ -83,41 +83,40 @@ object LangModel {
   final case class LmModel(bigram: DataFrame, unigram: DataFrame,
                            unkMicronats: Long)
 
-  /** Train the model on the rows matching `isTrain` — the same count
-    * arithmetic as [[lmScore]]'s in-line model (one aggregation pass; the
-    * 1-row totals collapse to driver-side constants, so the unigram table
-    * carries literal totals and serving needs NO scalar join). */
-  def trainLm(docs: DataFrame, isTrain: Column): LmModel = {
-    val paired = pairedEvents(docs.filter(isTrain))
-    // fail fast with a diagnosable message: an empty slice (or one of only
-    // <2-token docs) has no bigram events, and the totals head() below
-    // would otherwise NPE on a null sum
-    require(!paired.isEmpty,
-      "trainLm: the isTrain slice produced no bigram events " +
-        "(empty slice, or every training doc has < 2 tokens)")
-    val c2 = paired.groupBy("w1h", "w2h").agg(count(lit(1)).as("c2"))
-    val c1 = paired.groupBy("w1h").agg(count(lit(1)).as("c1"))
+  /** The fit: both count tables from a bigram event stream. Bigram counts
+    * c(w1 w2) and LEFT-context counts c(w1) come from the same stream (so
+    * the conditional S(w2|w1) = c2/c1 is a true probability over observed
+    * contexts; the final token of each doc never opens a context, matching
+    * the event stream being scored). The unigram backoff runs over RIGHT
+    * tokens (the predicted position), Laplace-smoothed so unseen words keep
+    * a finite score. ONE bounded totals job serves both the degenerate-
+    * input fail-fast (an empty train slice must throw, not silently NULL
+    * every score) and the (N, V) scalar, which then rides the backoff
+    * expressions as a literal — serving needs no scalar join. */
+  private def fitLm(events: DataFrame, caller: String): LmModel = {
+    val c2 = events.groupBy("w1h", "w2h").agg(count(lit(1)).as("c2"))
+    val c1 = events.groupBy("w1h").agg(count(lit(1)).as("c1"))
     val bigram = c2.join(c1, "w1h")
-      .select(col("w1h"), col("w2h"),
-        micronats(col("c2").cast("double") / col("c1").cast("double")).as("lp2"))
-    val cu = paired.groupBy(col("w2h").as("wh")).agg(count(lit(1)).as("cu"))
-    val totRow = cu.agg(sum("cu").as("nn"), count(lit(1)).as("vv")).head()
-    val nv = totRow.getLong(0) + totRow.getLong(1)
-    // same double-formed ratios and Math.log as the Column spelling, so
-    // values are bit-identical to lmScore's in-line model
+      .select(col("w1h"), col("w2h"), TextStats.micronats(
+        col("c2").cast("double") / col("c1").cast("double")).as("lp2"))
+    val cu = events.groupBy(col("w2h").as("wh")).agg(count(lit(1)).as("cu"))
+    val totRow = cu
+      .agg(coalesce(sum("cu"), lit(0L)), count(lit(1))).head()
+    val (nn, vv) = (totRow.getLong(0), totRow.getLong(1))
+    require(nn > 0L,
+      s"$caller: the isTrain slice produced no bigram events " +
+        "(empty slice, or every training doc has < 2 tokens)")
+    val nv = (nn + vv).toDouble
     val unigram = cu.select(col("wh"),
-      micronats(lit(Alpha) * (col("cu") + lit(1L)).cast("double") /
-        lit(nv.toDouble)).as("lp_bo"))
-    val unk = math.floor(math.log(Alpha / nv.toDouble) * 1e6 + 0.5).toLong
-    LmModel(bigram, unigram, unk)
+      TextStats.micronats(lit(Alpha) * (col("cu") + lit(1L)).cast("double") /
+        lit(nv)).as("lp_bo"))
+    LmModel(bigram, unigram, TextStats.lnMicronats(Alpha / nv))
   }
 
-  /** Score documents against a (possibly lake-loaded) model: the serving
-    * path — bigram lookup, unigram backoff, unknown default, exact long
-    * sums; no training-side state beyond the two model tables. Returns the
-    * same schema as [[lmScore]]. */
-  def scoreWithLm(model: LmModel, docs: DataFrame): DataFrame =
-    pairedEvents(docs)
+  /** The serve: bigram lookup, unigram backoff, unknown default, exact
+    * long sums over a bigram event stream. */
+  private def serveLm(model: LmModel, events: DataFrame): DataFrame =
+    events
       .join(model.bigram, Seq("w1h", "w2h"), "left")
       .join(model.unigram.withColumnRenamed("wh", "w2h"), Seq("w2h"), "left")
       .select(col("doc_id"),
@@ -128,6 +127,17 @@ object LangModel {
         floor(col("nll_micronats").cast("double") /
           col("n_bigrams").cast("double") + lit(0.5)).cast("long")
           .as("avg_nll_micronats"))
+
+  /** Train the model on the rows matching `isTrain` — [[lmScore]]'s fit
+    * over the train slice alone. */
+  def trainLm(docs: DataFrame, isTrain: Column): LmModel =
+    fitLm(pairedEvents(docs.filter(isTrain)), "trainLm")
+
+  /** Score documents against a (possibly lake-loaded) model: the serving
+    * path — no training-side state beyond the two model tables. Returns the
+    * same schema as [[lmScore]]. */
+  def scoreWithLm(model: LmModel, docs: DataFrame): DataFrame =
+    serveLm(model, pairedEvents(docs))
 
   /** Persist a model into the lake as three versioned tables
     * (`{prefix}_lm_bigram`, `{prefix}_lm_unigram`, `{prefix}_lm_meta`) —
@@ -156,70 +166,18 @@ object LangModel {
     * nll_micronats = −Σ log-prob in integer micronats (exact long sum) and
     * avg_nll_micronats = round(nll/n) (one double division on exactly
     * representable longs — identical in any IEEE engine). Lower = more
-    * fluent under the trusted slice's language model. */
+    * fluent under the trusted slice's language model.
+    *
+    * One tokenize pass: the event stream carries the train flag and is
+    * persisted, then [[trainLm]]'s fit reads its train rows and
+    * [[scoreWithLm]]'s serve its other rows. */
   def lmScore(docs: DataFrame, isTrain: Column): DataFrame = {
-    val toks = TextStats.tokensN(TextStats.normalize(col("text")))
-    // one tokenize pass: per-doc adjacent (w1, w2) pairs via a POSITIONAL
-    // explode ([[TextStats.gramStream]]'s codegen rationale — exploding a
-    // computed array falls out of whole-stage codegen), no join, no UDF.
-    // Tokens are md5-hashed ONCE per position, not once per event side —
-    // see [[pairedEvents]]'s probe numbers (−35% on the event pass) — via
-    // the native codegen'd TokenHashes expression (bit-identical values).
-    val paired = docs
-      .select(col("doc_id"), isTrain.as("is_train"), toks.as("toks"))
-      .where(size(col("toks")) >= 2) // filter the UN-hashed array — see pairedEvents
-      .select(col("doc_id"), col("is_train"),
-        graft.functions.TokenHash.hashAllCol(col("toks")).as("hs"))
-      .select(col("doc_id"), col("is_train"), col("hs"),
-        explode(sequence(lit(0), size(col("hs")) - 2)).as("i"))
-      .select(col("doc_id"), col("is_train"),
-        element_at(col("hs"), col("i") + 1).as("w1h"),
-        element_at(col("hs"), col("i") + 2).as("w2h"))
+    val paired = pairedEvents(
+        docs.select(col("doc_id"), col("text"), isTrain.as("is_train")),
+        Seq("is_train"))
       .persist()
-
-    val train = paired.filter(col("is_train"))
-    // bigram counts c(w1 w2) and LEFT-context counts c(w1) from the same
-    // bigram stream (so the conditional S(w2|w1) = c2/c1 is a true
-    // probability over observed contexts; the final token of each doc never
-    // opens a context, matching the event stream being scored)
-    val c2 = train.groupBy("w1h", "w2h").agg(count(lit(1)).as("c2"))
-    val c1 = train.groupBy("w1h").agg(count(lit(1)).as("c1"))
-    val model2 = c2.join(c1, "w1h")
-      .select(col("w1h"), col("w2h"),
-        micronats(col("c2").cast("double") / col("c1").cast("double")).as("lp2"))
-    // unigram backoff over RIGHT tokens (the predicted position), Laplace-
-    // smoothed so unseen words keep a finite score. ONE bounded totals job
-    // over the persisted bigram stream serves both the degenerate-input
-    // fail-fast (trainLm's contract: an empty train slice must throw, not
-    // silently NULL every score) and the (N, V) scalar — which then rides
-    // the backoff expressions as LITERALS (the classifierScore spelling)
-    // instead of two broadcast cross joins plus an isEmpty probe job.
-    val cu = train.groupBy(col("w2h").as("wh")).agg(count(lit(1)).as("cu"))
-    val totRow = cu
-      .agg(coalesce(sum("cu"), lit(0L)), count(lit(1))).head()
-    val (nn, vv) = (totRow.getLong(0), totRow.getLong(1))
-    require(nn > 0L,
-      "lmScore: the isTrain slice produced no bigram events " +
-        "(empty slice, or every training doc has < 2 tokens)")
-    val denom = lit((nn + vv).toDouble)
-    val uni = cu.select(col("wh"),
-      micronats(lit(Alpha) * (col("cu") + lit(1L)).cast("double") / denom)
-        .as("lp1"))
-
-    val scored = paired.filter(!col("is_train"))
-      .join(model2, Seq("w1h", "w2h"), "left")
-      .join(uni.withColumnRenamed("wh", "w2h").withColumnRenamed("lp1", "lp_bo"),
-        Seq("w2h"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lp2"), col("lp_bo"),
-          micronats(lit(Alpha) / denom)).as("lp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), (-sum(col("lp"))).as("nll_micronats"))
-      .select(col("doc_id"), col("n_bigrams"), col("nll_micronats"),
-        floor(col("nll_micronats").cast("double") /
-          col("n_bigrams").cast("double") + lit(0.5)).cast("long")
-          .as("avg_nll_micronats"))
-    scored
+    serveLm(fitLm(paired.filter(col("is_train")), "lmScore"),
+      paired.filter(!col("is_train")))
   }
 
   /** CCNet's head/middle/tail split composed on [[lmScore]]: rank the

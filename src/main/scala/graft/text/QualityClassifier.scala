@@ -50,7 +50,7 @@ object QualityClassifier {
     * out of scoring — the lmScore contract). */
   private def gramStream(docs: DataFrame, isPositive: Column,
                          isNegative: Column, numBuckets: Int): DataFrame = {
-    val toks = TextStats.tokensN(TextStats.normalize(col("text")))
+    val toks = TextStats.normTokens()
     // bigrams via a guarded transform: sequence(0, -1) DESCENDS in Spark,
     // so the < 2-token case must short-circuit to the empty array
     val bigrams = when(size(col("toks")) >= 2,
@@ -67,61 +67,13 @@ object QualityClassifier {
           .as("bh"))
   }
 
-  private def micronats(x: Column): Column =
-    floor(log(x) * lit(1000000.0) + lit(0.5)).cast("long")
-
-  /** Per-bucket log-odds weight in micronats; `np`/`nn` are the total gram
-    * counts of each class as COLUMNS so the same spelling serves the lazy
-    * in-line scorer and the literal-total trained model. */
-  private def weightExpr(cp: Column, cn: Column, np: Column, nn: Column,
-                         b: Int): Column =
-    micronats((cp + lit(1L)).cast("double") * (nn + lit(b.toLong)).cast("double") /
-      ((cn + lit(1L)).cast("double") * (np + lit(b.toLong)).cast("double")))
-
-  /** In-line train + score: counts from the `isPositive`/`isNegative`
-    * slices, then EVERY document with at least one token scored (the
-    * training slices included — a score is just a projection through the
-    * count tables, and the pool being filtered usually IS the negative
-    * class). Returns (doc_id, n_grams, score_micronats, avg_micronats):
-    * the exact long gram-sum and its rounded per-gram average (the
-    * length-invariant form a threshold gate should use). */
-  def classifierScore(docs: DataFrame, isPositive: Column, isNegative: Column,
-                      numBuckets: Int = 1 << 18): DataFrame = {
-    val grams = gramStream(docs, isPositive, isNegative, numBuckets).persist()
-    val counts = grams.filter(col("is_p") || col("is_n"))
+  /** Per-bucket (cp, cn) class counts over the labeled rows of a gram
+    * stream — bounded by min(observed grams, numBuckets) rows. */
+  private def bucketCounts(grams: DataFrame): DataFrame =
+    grams.filter(col("is_p") || col("is_n"))
       .groupBy("bh")
       .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("cp"),
         sum(when(col("is_n"), 1L).otherwise(0L)).as("cn"))
-    // ONE totals job over the persisted gram stream serves both the
-    // degenerate-class fail-fast (the trainLm/lmScore contract: an empty
-    // class must throw, not silently NULL every score) and the (np, nn)
-    // scalar — which then rides the weight expressions as LITERALS, the
-    // trainQualityClassifier spelling, instead of two broadcast cross
-    // joins plus two isEmpty probe jobs.
-    val totRow = counts
-      .agg(coalesce(sum("cp"), lit(0L)), coalesce(sum("cn"), lit(0L))).head()
-    val (np, nn) = (totRow.getLong(0), totRow.getLong(1))
-    require(np > 0L,
-      "classifierScore: the isPositive slice produced no grams " +
-        "(empty slice, or every positive doc has zero tokens)")
-    require(nn > 0L,
-      "classifierScore: the isNegative slice produced no grams " +
-        "(empty slice, or every negative doc has zero tokens)")
-    val weights = counts.select(col("bh"),
-      weightExpr(col("cp"), col("cn"), lit(np), lit(nn), numBuckets).as("w"))
-    grams
-      .join(weights, Seq("bh"), "left")
-      .select(col("doc_id"),
-        coalesce(col("w"),
-          weightExpr(lit(0L), lit(0L), lit(np), lit(nn), numBuckets))
-          .as("w"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("score_micronats"))
-      .select(col("doc_id"), col("n_grams"), col("score_micronats"),
-        floor(col("score_micronats").cast("double") /
-          col("n_grams").cast("double") + lit(0.5)).cast("long")
-          .as("avg_micronats"))
-  }
 
   /** A trained classifier as DATA: the per-bucket weight table plus the
     * unseen-bucket default — persistable to a lake table and servable
@@ -130,36 +82,68 @@ object QualityClassifier {
   final case class NbModel(weights: DataFrame, defaultMicronats: Long,
                            numBuckets: Int)
 
-  /** Train on the labeled slices only; totals collapse to driver-side
-    * literals (1-row head, the trainLm pattern) so serving needs no scalar
-    * join. Weight doubles are formed exactly as [[classifierScore]]'s —
-    * the two paths score bit-identically (spec-pinned). */
-  def trainQualityClassifier(docs: DataFrame, isPositive: Column,
-                             isNegative: Column,
-                             numBuckets: Int = 1 << 18): NbModel = {
-    // persist the (<= numBuckets)-row count table: the totals head() below
-    // and the returned weights frame both read it — unpersisted, the full
-    // tokenize+gram corpus pass runs twice (shared-subtree Caching
-    // contract, harness releaseAll reclaims)
-    val counts = gramStream(docs, isPositive, isNegative, numBuckets)
-      .filter(col("is_p") || col("is_n"))
-      .groupBy("bh")
-      .agg(sum(when(col("is_p"), 1L).otherwise(0L)).as("cp"),
-        sum(when(col("is_n"), 1L).otherwise(0L)).as("cn"))
-      .persist()
+  /** The fit: ONE totals job over the count table serves both the
+    * degenerate-class fail-fast (an empty class must throw, not silently
+    * NULL every score) and the (np, nn) scalar, which then rides the
+    * weight expressions as literals — serving needs no scalar join. The
+    * unseen-bucket default is the same weight at zero counts, formed on
+    * the driver with the same doubles. */
+  private def fitClassifier(counts: DataFrame, numBuckets: Int,
+                            caller: String): NbModel = {
     val totRow = counts
       .agg(coalesce(sum("cp"), lit(0L)), coalesce(sum("cn"), lit(0L))).head()
     val (np, nn) = (totRow.getLong(0), totRow.getLong(1))
     require(np > 0L && nn > 0L,
-      s"trainQualityClassifier: both classes need at least one gram " +
+      s"$caller: both classes need at least one gram " +
         s"(positive grams = $np, negative grams = $nn)")
     val weights = counts.select(col("bh"),
-      weightExpr(col("cp"), col("cn"), lit(np), lit(nn), numBuckets).as("w"))
+      TextStats.laplaceLogOdds(col("cp"), col("cn"), lit(np), lit(nn),
+        numBuckets).as("w"))
     val b = numBuckets.toLong
-    val default = math.floor(math.log(
-      (nn + b).toDouble / (np + b).toDouble) * 1e6 + 0.5).toLong
-    NbModel(weights, default, numBuckets)
+    NbModel(weights,
+      TextStats.lnMicronats((nn + b).toDouble / (np + b).toDouble), numBuckets)
   }
+
+  /** The serve: weight equi-join, unseen default, exact long sums over a
+    * gram stream. Returns (doc_id, n_grams, score_micronats, avg_micronats):
+    * the exact long gram-sum and its rounded per-gram average (the
+    * length-invariant form a threshold gate should use). */
+  private def serveClassifier(model: NbModel, grams: DataFrame): DataFrame =
+    grams
+      .join(model.weights, Seq("bh"), "left")
+      .select(col("doc_id"),
+        coalesce(col("w"), lit(model.defaultMicronats)).as("w"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("score_micronats"))
+      .select(col("doc_id"), col("n_grams"), col("score_micronats"),
+        floor(col("score_micronats").cast("double") /
+          col("n_grams").cast("double") + lit(0.5)).cast("long")
+          .as("avg_micronats"))
+
+  /** In-line train + score: [[trainQualityClassifier]]'s fit over the
+    * `isPositive`/`isNegative` slices, then EVERY document with at least
+    * one token served (the training slices included — a score is just a
+    * projection through the count tables, and the pool being filtered
+    * usually IS the negative class). The persisted gram stream feeds both
+    * the fit and the serve. Same schema as [[scoreWithClassifier]]. */
+  def classifierScore(docs: DataFrame, isPositive: Column, isNegative: Column,
+                      numBuckets: Int = 1 << 18): DataFrame = {
+    val grams = gramStream(docs, isPositive, isNegative, numBuckets).persist()
+    serveClassifier(
+      fitClassifier(bucketCounts(grams), numBuckets, "classifierScore"), grams)
+  }
+
+  /** Train on the labeled slices only. The count table is persisted: the
+    * totals head() and the returned weights frame both read it —
+    * unpersisted, the full tokenize+gram corpus pass runs twice
+    * (shared-subtree Caching contract, harness releaseAll reclaims). */
+  def trainQualityClassifier(docs: DataFrame, isPositive: Column,
+                             isNegative: Column,
+                             numBuckets: Int = 1 << 18): NbModel =
+    fitClassifier(
+      bucketCounts(gramStream(docs, isPositive, isNegative, numBuckets))
+        .persist(),
+      numBuckets, "trainQualityClassifier")
 
   /** Persist a trained classifier into the lake as two versioned tables
     * (`{prefix}_nb_weights`, `{prefix}_nb_meta`) — the classifier sibling
@@ -183,18 +167,8 @@ object QualityClassifier {
       meta.getAs[Long]("default_micronats"), meta.getAs[Int]("num_buckets"))
   }
 
-  /** Serving path: score any documents against a trained model — gram
-    * stream, weight equi-join, unseen default, exact long sums. Same
+  /** Serving path: score any documents against a trained model. Same
     * schema as [[classifierScore]]. */
   def scoreWithClassifier(model: NbModel, docs: DataFrame): DataFrame =
-    gramStream(docs, lit(false), lit(false), model.numBuckets)
-      .join(model.weights, Seq("bh"), "left")
-      .select(col("doc_id"),
-        coalesce(col("w"), lit(model.defaultMicronats)).as("w"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("score_micronats"))
-      .select(col("doc_id"), col("n_grams"), col("score_micronats"),
-        floor(col("score_micronats").cast("double") /
-          col("n_grams").cast("double") + lit(0.5)).cast("long")
-          .as("avg_micronats"))
+    serveClassifier(model, gramStream(docs, lit(false), lit(false), model.numBuckets))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * out — wiring the library's pieces in their canonical order:
   *
   *   1. quality gate ([[TextStats.qualityScore]]'s filter predicate)
-  *   2. exact + near-duplicate removal ([[Dedup.dedupCorpus]])
+  *   2. exact + near-duplicate removal ([[Dedup.dedupCorpusShingle]])
   *   3. per-source cap ([[TextFeatures.perSourceCap]], reproducible sample)
   *   4. fixed-window chunking with stride ([[TextFeatures.chunkPlan]])
   *
@@ -28,16 +28,13 @@ object Refinery {
       maxDocsPerSource: Int = 1000000,
       chunk: Int = 128,
       stride: Int = 96,
-      // shingle-verified near-dup stage (Dedup.dedupCorpusShingle): the
-      // whole refinery becomes deterministic AND oracle-replayable — q169
-      // verifies the end-to-end pipeline against a declarative SQL respell
-      shingleVerify: Boolean = false,
-      // MinHash signature size for the near-dup stage (BOTH branches —
-      // shingle-verified and plain — honor these). 128/32 is the
-      // high-recall default; 32/16 (the q196 streaming-twin setting,
-      // per-pair candidate-miss ~8e-8 at s = 0.8) quarters the signature
-      // cost for budgeted composed configs — the exact-verify step means
-      // precision is unaffected either way
+      // MinHash signature size for the shingle-verified near-dup stage
+      // (Dedup.dedupCorpusShingle — deterministic AND oracle-replayable:
+      // q169 verifies the end-to-end pipeline against a declarative SQL
+      // respell). 128/32 is the high-recall default; 32/16 (the q196
+      // streaming-twin setting, per-pair candidate-miss ~8e-8 at s = 0.8)
+      // quarters the signature cost for budgeted composed configs — the
+      // exact-verify step means precision is unaffected either way
       dedupNumPerms: Int = 128,
       dedupBands: Int = 32,
       // which quality gate fronts the pipeline: "basic" = the length/
@@ -155,12 +152,8 @@ object Refinery {
         mat(lmKept.join(bad, Seq("doc_id"), "left_anti"))
       case None => lmKept
     }
-    val deduped0 =
-      if (cfg.shingleVerify) Dedup.dedupCorpusShingle(clfKept, cfg.nearDupThreshold,
-        cfg.dedupNumPerms, cfg.dedupBands)
-      else Dedup.dedupCorpus(clfKept, threshold = cfg.nearDupThreshold,
-        numPerms = cfg.dedupNumPerms, bands = cfg.dedupBands)
-    val deduped = mat(deduped0)
+    val deduped = mat(Dedup.dedupCorpusShingle(clfKept, cfg.nearDupThreshold,
+      cfg.dedupNumPerms, cfg.dedupBands))
     // containment AFTER near-dup: Jaccard clusters collapse the mutual
     // near-copies first, then the directional stage drops embedded quotes
     // the symmetric metric missed — each stage sees only prior survivors

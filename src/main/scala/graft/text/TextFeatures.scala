@@ -40,7 +40,7 @@ object TextFeatures {
     // library calls leak nothing; the returned frame is bound to its own
     // blocks and [[graft.ops.Caching.release]] reclaims it.
     val tok = docs.select(col("doc_id"),
-        explode(TextStats.tokensN(TextStats.normalize(col("text")))).as("tok"))
+        explode(TextStats.normTokens()).as("tok"))
       .select(col("doc_id"),
         pmod(Dedup.portableTokenHash(col("tok")), lit(numFeatures.toLong))
           .cast("int").as("feat"))
@@ -83,7 +83,7 @@ object TextFeatures {
   def chunkPlan(docs: DataFrame, chunk: Int = 128, stride: Int = 96): DataFrame = {
     require(chunk >= 1 && stride >= 1, "chunk and stride must be positive")
     val toks = docs.select(col("doc_id"),
-      size(TextStats.tokensN(TextStats.normalize(col("text")))).as("n_tokens"))
+      size(TextStats.normTokens()).as("n_tokens"))
     toks.filter(col("n_tokens") >= 1)
       .select(col("doc_id"), col("n_tokens"),
         explode(sequence(lit(0),
@@ -239,16 +239,10 @@ object TextFeatures {
       sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
       sum(when(!col("is_target"), 1L).otherwise(0L)).as("cr"))
     val totals = stats.agg(sum("ct").as("tt"), sum("cr").as("tr"))
-    // per-bucket micronat log-ratio: ln of one double-formed ratio, floor-
-    // quantized — int64 products of count × total would wrap at trillion-
-    // token scale (q165's rule), so every product is formed in doubles
+    // per-bucket micronat log-ratio: the NB classifier's Laplace log-odds
     val lr = stats.crossJoin(broadcast(totals)) // buckets-sized × 1 row
-      .select(col("b"), floor(log(
-          ((col("ct") + lit(1L)).cast("double") *
-            (col("tr") + lit(buckets.toLong)).cast("double")) /
-          ((col("cr") + lit(1L)).cast("double") *
-            (col("tt") + lit(buckets.toLong)).cast("double")))
-        * lit(1000000.0) + lit(0.5)).cast("long").as("lr"))
+      .select(col("b"), TextStats.laplaceLogOdds(col("ct"), col("cr"),
+        col("tt"), col("tr"), buckets).as("lr"))
     grams.filter(!col("is_target"))
       .groupBy("doc_id", "b").agg(count(lit(1)).as("cnt"))
       .join(broadcast(lr), Seq("b"))
@@ -316,8 +310,7 @@ object TextFeatures {
     import org.apache.spark.sql.expressions.Window
     val perSource = docs
       .select(col("source"),
-        size(TextStats.tokensN(TextStats.normalize(col("text")))).cast("long")
-          .as("n_tokens"))
+        size(TextStats.normTokens()).cast("long").as("n_tokens"))
       .groupBy("source").agg(sum("n_tokens").as("t_tokens"))
       .withColumn("cap_tokens",
         floor(col("t_tokens").cast("double") * lit(maxEpochs)).cast("long"))
@@ -380,8 +373,7 @@ object TextFeatures {
       .filter(col("t_tokens") > 0)
       .select(col("source"), col("t_tokens"), col("alloc_tokens"))
     val perDoc = docs.select(col("doc_id"), col("source"),
-      size(TextStats.tokensN(TextStats.normalize(col("text")))).cast("long")
-        .as("n_tokens"))
+      size(TextStats.normTokens()).cast("long").as("n_tokens"))
       .join(broadcast(alloc), Seq("source"))
       .withColumn("whole_epochs",
         graft.ops.Analytics.idiv(col("alloc_tokens"), col("t_tokens")))
@@ -418,7 +410,7 @@ object TextFeatures {
     * such docs carry the sentinel key 0 and rank last (the epochs_micro
     * guard in [[tokenBudgetAllocation]], applied to the quality key). */
   private def qualityFeatures(docs: DataFrame): DataFrame = {
-    val toks = TextStats.tokensN(TextStats.normalize(col("text")))
+    val toks = TextStats.normTokens()
     docs.select(col("doc_id"), col("source"),
       size(toks).cast("long").as("n_tokens"),
       when(size(toks) > 0,
@@ -484,8 +476,7 @@ object TextFeatures {
   def packingPlan(docs: DataFrame, capacity: Int = 4096): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"), col("source"),
-      size(TextStats.tokensN(TextStats.normalize(col("text")))).cast("long")
-        .as("n_tokens"))
+      size(TextStats.normTokens()).cast("long").as("n_tokens"))
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     toks.select(col("doc_id"), col("source"), col("n_tokens"),

@@ -42,6 +42,35 @@ object TextStats {
   def normalize(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
+  /** The canonical word tokenization every text operator works in:
+    * [[tokensN]] over [[normalize]]'s output — the one pairing under which
+    * tokensN's single-space split is exact. */
+  def normTokens(text: Column = col("text")): Column = tokensN(normalize(text))
+
+  /** ln(x) quantized ONCE to integer micronats — the exact-integer
+    * discipline of every log-probability score (the LM, the NB
+    * classifier, DSIR). Spark's `log` is `StrictMath.log`, so the value is
+    * fixed by the IEEE input on any JVM. */
+  private[graft] def micronats(x: Column): Column =
+    floor(log(x) * lit(1000000.0) + lit(0.5)).cast("long")
+
+  /** [[micronats]] on the driver, for scalars that ride a model as
+    * literals (unknown-token defaults): `StrictMath.log`, the function
+    * Spark's `log` calls — `math.log` may differ by one ulp. */
+  private[graft] def lnMicronats(x: Double): Long =
+    math.floor(StrictMath.log(x) * 1e6 + 0.5).toLong
+
+  /** Laplace-smoothed per-bucket log-odds in micronats,
+    * ln((ca+1)·(nb+B) / ((cb+1)·(na+B))) over `buckets` = B hashed
+    * features: class-a count `ca` and total `na` against class b's. Every
+    * product is formed in doubles (a long product of count × total would
+    * wrap at trillion-gram scale). */
+  private[graft] def laplaceLogOdds(ca: Column, cb: Column, na: Column,
+                                    nb: Column, buckets: Int): Column =
+    micronats((ca + lit(1L)).cast("double") *
+      (nb + lit(buckets.toLong)).cast("double") /
+      ((cb + lit(1L)).cast("double") * (na + lit(buckets.toLong)).cast("double")))
+
   /** Per-document token statistics: token count, character count without
     * spaces, mean token length (exact double division — engine-portable). */
   def tokenStats(docs: DataFrame): DataFrame = {
@@ -57,7 +86,7 @@ object TextStats {
   /** Quality-scoring heuristics (length / stopword-ratio / distinct-token
     * ratio), the classic pre-training filter features. */
   def qualityScore(docs: DataFrame, stopwords: Seq[String] = Seq("the", "a", "of", "and")): DataFrame = {
-    val toks = tokensN(normalize(col("text")))
+    val toks = normTokens()
     val nTok = size(toks).cast("double")
     val nStop = size(filter(toks, t => t.isin(stopwords.map(_.asInstanceOf[Any]): _*))).cast("double")
     val nDistinct = size(array_distinct(toks)).cast("double")
@@ -73,7 +102,7 @@ object TextStats {
   /** N-gram (word) shingles over an ALREADY-MATERIALIZED token array column.
     *
     * Callers must project the token array in a separate select first
-    * (`df.select(tokensN(normalize(col)).as("toks")).select(shinglesOf(col("toks"), n))`):
+    * (`df.select(normTokens(col).as("toks")).select(shinglesOf(col("toks"), n))`):
     * referencing an unmaterialized `split` from inside the lambda makes
     * Catalyst inline the tokenizer into every `slice` call — measured 7-20x
     * slower from re-tokenizing per shingle. */
@@ -86,7 +115,7 @@ object TextStats {
     * Convenience single-Column form; for corpus-scale work prefer
     * [[shinglesOf]] over a pre-materialized token column. */
   def shingles(text: Column, n: Int): Column =
-    shinglesOf(tokensN(normalize(text)), n)
+    shinglesOf(normTokens(text), n)
 
   /** (id, gram) ROWS — every word-n-gram occurrence of the normalized
     * text, via a POSITIONAL explode: generate the start indices, then
@@ -106,7 +135,7 @@ object TextStats {
                  textCol: String = "text",
                  carryCols: Seq[String] = Nil): DataFrame = {
     val carried = carryCols.map(col)
-    docs.select(col(idCol) +: tokensN(normalize(col(textCol))).as("toks") +:
+    docs.select(col(idCol) +: normTokens(col(textCol)).as("toks") +:
         carried: _*)
       .select(col(idCol) +: col("toks") +:
         explode(sequence(lit(0), greatest(size(col("toks")) - n, lit(0))))
@@ -123,7 +152,7 @@ object TextStats {
     */
   def languageId(docs: DataFrame,
                  profiles: Map[String, Seq[String]] = defaultProfiles): DataFrame = {
-    val toks = array_distinct(tokensN(normalize(col("text"))))
+    val toks = array_distinct(normTokens())
     // array_max on struct(score, negOrd) picks highest score; ties resolve to
     // the profile with the lowest ordinal for determinism.
     val scored = profiles.toSeq.sortBy(_._1).zipWithIndex.map {
@@ -183,7 +212,7 @@ object TextStats {
     * BEFORE the lambda uses it (multi-referenced non-cheap aliases are not
     * collapsed, so the tokenizer runs once per row, not per bigram). */
   def repetitionRatio(docs: DataFrame): DataFrame = {
-    val withToks = docs.select(col("doc_id"), tokensN(normalize(col("text"))).as("toks"))
+    val withToks = docs.select(col("doc_id"), normTokens().as("toks"))
     val grams = when(size(col("toks")) < 2, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
         i => concat_ws(" ", element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
@@ -287,7 +316,7 @@ object TextStats {
   def topNgramCharFraction(docs: DataFrame, n: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = docs.select(col("doc_id"),
-        tokensN(normalize(col("text"))).as("toks"),
+        normTokens().as("toks"),
         length(normalize(col("text"))).cast("long").as("n_chars"))
       .filter(size(col("toks")) >= n)
     // positional explode ([[gramStream]]'s codegen rationale); base already
@@ -316,7 +345,7 @@ object TextStats {
     * occurrence count — explode + hash-aggregate (map-side combined), the
     * vocabulary-building primitive. */
   def termFrequencies(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(tokensN(normalize(col(textCol)))).as("token"))
+    docs.select(explode(normTokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n_occurrences"))
 
   /** Collocation mining: pointwise mutual information of ADJACENT token
@@ -333,7 +362,7 @@ object TextStats {
     * pair), so the LIMIT is deterministic. */
   def bigramPmi(docs: DataFrame, minCount: Long = 5, topN: Int = 30,
                 textCol: String = "text"): DataFrame = {
-    val toks = docs.select(tokensN(normalize(col(textCol))).as("ts"))
+    val toks = docs.select(normTokens(col(textCol)).as("ts"))
     // positional explode ([[gramStream]]'s codegen rationale): one adjacent
     // pair per output row, everything codegen'd; <2-token rows contribute
     // no bigram, as with the zip_with spelling
@@ -428,7 +457,7 @@ object TextStats {
     * refinery, the streaming ingest, and this rollup can never drift. */
   def passesQualityGate(minTokens: Int = 20,
                         minDistinctRatio: Double = 0.2): Column = {
-    val toks = tokensN(normalize(col("text")))
+    val toks = normTokens()
     val nTok = size(toks).cast("double")
     val nDistinct = size(array_distinct(toks)).cast("double")
     size(toks) >= minTokens && nDistinct / nTok >= minDistinctRatio
@@ -453,7 +482,7 @@ object TextStats {
     * before adjusting source weights. One aggregate over the per-doc
     * quality expressions (map-side combined). */
   def sourceQualityProfile(docs: DataFrame): DataFrame = {
-    val nTok = size(tokensN(normalize(col("text")))).cast("double")
+    val nTok = size(normTokens()).cast("double")
     val passes = passesQualityGate().cast("long")
     docs.select(col("source"), nTok.as("n_tokens"), passes.as("passes"))
       .groupBy("source").agg(
@@ -580,7 +609,7 @@ object TextStats {
   def sourceLengthBands(docs: DataFrame, pLo: Double = 0.05,
                         pHi: Double = 0.95): DataFrame = {
     val lens = docs.select(col("source"),
-      size(tokensN(normalize(col("text")))).cast("long").as("n_tokens"))
+      size(normTokens()).cast("long").as("n_tokens"))
     val bands = lens.groupBy("source").agg(
       expr(s"percentile(n_tokens, $pLo)").as("lo"),
       expr(s"percentile(n_tokens, $pHi)").as("hi"))
@@ -611,7 +640,7 @@ object TextStats {
     jsDriftFlagged(docs.select(
         substring(md5(col("doc_id").cast("string")), 1, 1)
           .isin(evalNibbles: _*).as("is_eval"),
-        explode(tokensN(normalize(col("text")))).as("tok")),
+        explode(normTokens()).as("tok")),
       "n_eval_tokens", "n_train_tokens")
 
   /** JS token-distribution drift between two ARBITRARY document frames —
@@ -623,9 +652,9 @@ object TextStats {
   def tokenDriftBetween(a: DataFrame, b: DataFrame): DataFrame =
     jsDriftFlagged(
       a.select(lit(true).as("is_eval"),
-          explode(tokensN(normalize(col("text")))).as("tok"))
+          explode(normTokens()).as("tok"))
         .unionByName(b.select(lit(false).as("is_eval"),
-          explode(tokensN(normalize(col("text")))).as("tok"))),
+          explode(normTokens()).as("tok"))),
       "n_a_tokens", "n_b_tokens")
 
   private def jsDriftFlagged(flagged: DataFrame, aName: String,
@@ -710,7 +739,7 @@ object TextStats {
     * identical to an unnest-based oracle. */
   def lexicalDiversity(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        explode(tokensN(normalize(col("text")))).as("tok"))
+        explode(normTokens()).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_tokens"),
@@ -748,7 +777,7 @@ object TextStats {
     * RE2-portable. Token-free docs drop out. */
   def syllableComplexity(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        explode(tokensN(normalize(col("text")))).as("tok"))
+        explode(normTokens()).as("tok"))
       .select(col("doc_id"),
         size(regexp_extract_all(col("tok"), lit("[aeiouy]+"), lit(0))).as("syl"))
       .groupBy("doc_id")

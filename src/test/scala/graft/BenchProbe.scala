@@ -35,7 +35,7 @@ object BenchProbe {
         // separates the near-dup cost, the containment cost, and any
         // recompute the composition pays on top.
         val half = docs.filter(col("doc_id") % 2 === 0)
-        val cfgFull = Refinery.Config(shingleVerify = true,
+        val cfgFull = Refinery.Config(
           nearDupThreshold = 0.98, containment = true,
           containmentThreshold = 0.8, containmentMaxDf = 1000)
         val cfgNoCont = cfgFull.copy(containment = false)
@@ -295,7 +295,7 @@ object BenchProbe {
             var chunks: org.apache.spark.sql.DataFrame = null
             snap223(s"q223/refine#$it") {
               chunks = Refinery.refine(slice,
-                Refinery.Config(shingleVerify = true,
+                Refinery.Config(
                   lmFilter = Some(Refinery.LmFilter("lang = 'en'",
                     tailPermille = 300)),
                   classifierFilter = Some(Refinery.NbFilter(

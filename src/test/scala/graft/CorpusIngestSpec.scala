@@ -409,7 +409,7 @@ class CorpusIngestSpec extends SparkSpec {
     val corpus = df(train ++ pool)
     // batch side: the refinery with the CCNet LM stage drops the worst
     // half of the scored pool by global rank
-    val cfg = graft.text.Refinery.Config(shingleVerify = true,
+    val cfg = graft.text.Refinery.Config(
       lmFilter = Some(graft.text.Refinery.LmFilter("lang = 'en'",
         tailPermille = 500)))
     val batchSurvivors = graft.text.Refinery.refine(corpus, cfg)

@@ -314,6 +314,12 @@ class PlanAuditSpec extends SparkSpec {
       "grams must reduce to the portable 60-bit hash before any shuffle")
   }
 
+  test("LM perplexity reads the corpus exactly once (persisted event stream)") {
+    // the fit's count tables AND the serve's event stream both derive from
+    // the one persisted tokenize/hash/explode pass (the q212 shape)
+    assert(corpusScans("q200_lm_perplexity", "documents") === 1)
+  }
+
   test("hard negatives reads the vectors twice, never a third label re-join") {
     // the r9 regression guard: extraCols ride ivfBuild's assignment
     // projection, so the plan reads embeddings exactly twice (assignment

@@ -4,7 +4,11 @@ import graft.queries.{QueryRegistry, QuerySpec}
 
 /** Dev-loop plan dumper (not part of the driver contract): writes
   * `.explain("formatted")` for the named queries to a directory, so plan
-  * claims in OPTIMIZATION notes are checkable files, not prose.
+  * claims in OPTIMIZATION notes are checkable files, not prose. The first
+  * line of each dump is `# build jobs: N` — the Spark jobs the row's `run`
+  * started while BUILDING the frame (eager model totals, persisted-cut
+  * counts, isEmpty probes), counted by a listener around the call; the
+  * formatted plan cannot show them.
   *
   *   PLAN_QUERIES=q186,q208 PLAN_OUT=plans/r16 PLAN_SUFFIX=before \
   *     sbt "Test/runMain graft.PlanDump"
@@ -23,13 +27,23 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     QueryRegistry.all.select(sys.env.getOrElse("PLAN_QUERIES", ""))
       .foreach { case QuerySpec(name, fn, _) =>
+        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet(): Unit
+        }
         try {
-          val df = fn(spark, sfDir)
+          spark.sparkContext.addSparkListener(listener)
+          val df = try fn(spark, sfDir) finally {
+            org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+            spark.sparkContext.removeSparkListener(listener)
+          }
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.write(
             java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-            plan.getBytes("UTF-8"))
+            s"# build jobs: ${jobs.get}\n$plan".getBytes("UTF-8"))
           println(s"[plandump] wrote $name ($suffix)")
         } catch { case e: Throwable =>
           println(s"[plandump] $name failed: ${e.getMessage}")

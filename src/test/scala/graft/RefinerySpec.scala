@@ -48,7 +48,7 @@ class RefinerySpec extends SparkSpec {
     val dup = Seq(DocRow(31L, "the quick brown fox jumps over the lazy dog " +
       words("pad", 15), "fr", "web", 0)) // exact dup of the fluent text
     val docs = df(trusted ++ fluent ++ garbled ++ dup)
-    val cfg = Refinery.Config(shingleVerify = true,
+    val cfg = Refinery.Config(
       lmFilter = Some(Refinery.LmFilter("lang = 'en'", tailPermille = 300)),
       classifierFilter = Some(Refinery.NbFilter("lang = 'en'", "lang <> 'en'",
         minAvgMicronats = -2000000L)),
@@ -72,7 +72,7 @@ class RefinerySpec extends SparkSpec {
       DocRow(i.toLong, "dog lazy the over jumps fox brown quick the " +
         words("pad", 15).split(" ").reverse.mkString(" "), "fr", "web", 0))
     val docs = df(trusted ++ fluent ++ garbled)
-    val cfg = Refinery.Config(shingleVerify = true,
+    val cfg = Refinery.Config(
       lmFilter = Some(Refinery.LmFilter("lang = 'en'", tailPermille = 400)))
     val survivors = Refinery.refine(docs, cfg)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
@@ -84,7 +84,7 @@ class RefinerySpec extends SparkSpec {
       .filter(col("bucket") === "tail").collect().map(_.getLong(0)).toSet
     val expected = Refinery.refine(
         docs.filter(!col("doc_id").isin(tail.toSeq: _*)),
-        Refinery.Config(shingleVerify = true))
+        Refinery.Config())
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(survivors === expected)
     // the tail is the scrambled docs, never the trusted slice
@@ -111,7 +111,7 @@ class RefinerySpec extends SparkSpec {
         words("ppad", 8), "fr", "web", 0),
       DocRow(12L, junk + " " + words("jpad", 8), "fr", "web", 0))
     val docs = df(trusted ++ pool)
-    val cfg = Refinery.Config(shingleVerify = true,
+    val cfg = Refinery.Config(
       classifierFilter = Some(Refinery.NbFilter(
         "lang = 'en'", "lang <> 'en'", minAvgMicronats = 0L)))
     // anti-vacuity: without the classifier stage the junk doc SURVIVES the
@@ -141,7 +141,7 @@ class RefinerySpec extends SparkSpec {
       null.asInstanceOf[String], "web", 0L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val docs = df(trusted).unionByName(nullLang)
-    val cfg = Refinery.Config(shingleVerify = true,
+    val cfg = Refinery.Config(
       classifierFilter = Some(Refinery.NbFilter(
         "lang = 'en'", "lang <> 'en' OR lang IS NULL", minAvgMicronats = 0L)))
     val survivors = Refinery.refine(docs, cfg)

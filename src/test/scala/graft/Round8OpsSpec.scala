@@ -195,10 +195,10 @@ class Round8OpsSpec extends SparkSpec {
       Refinery.refine(docs, cfg).select("doc_id").collect()
         .map(_.getLong(0)).toSet
     // without containment the quote survives near-dup (Jaccard 0.625 < 0.8)
-    assert(survivors(Refinery.Config(shingleVerify = true))
+    assert(survivors(Refinery.Config())
       === Set(1L, 2L, 3L))
     // the containment stage catches it; page and unrelated doc survive
-    assert(survivors(Refinery.Config(shingleVerify = true,
+    assert(survivors(Refinery.Config(
       containment = true, containmentThreshold = 0.9)) === Set(1L, 3L))
     graft.ops.Caching.releaseAll(spark)
   }
@@ -232,13 +232,13 @@ class Round8OpsSpec extends SparkSpec {
     import graft.text.{Refinery, TextStats}
     val docs = graft.tables.Tables.load(spark, sf, "documents").limit(200)
     val viaCfg = Refinery.refine(docs,
-        Refinery.Config(shingleVerify = true, gate = "gopher",
+        Refinery.Config(gate = "gopher",
           gopherMinStopWords = 1))
       .collect().map(r => (r.getLong(0), r.getInt(2))).toSet
     val preFiltered = docs.filter(TextStats.passesGopherGate(50, 100000, 1))
     val viaSlice = Refinery.refine(preFiltered,
         // basic gate with thresholds the gopher survivors trivially clear
-        Refinery.Config(shingleVerify = true, minTokens = 1,
+        Refinery.Config(minTokens = 1,
           minDistinctRatio = 0.0))
       .collect().map(r => (r.getLong(0), r.getInt(2))).toSet
     assert(viaCfg === viaSlice)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.{Dedup, TextStats}
+import graft.text.{Dedup, LangModel, TextFeatures, TextStats}
 
 case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
 
@@ -64,21 +64,6 @@ class TextSpec extends SparkSpec {
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 4L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-  }
-
-  test("dedupCorpus collapses exact and near-dup clusters to one canonical doc") {
-    val base = "spark is a unified analytics engine for large scale data processing " +
-      "with high level apis in scala java python and r plus an optimized engine"
-    val corpus = Seq(
-      doc(1, base),
-      doc(2, base),                                  // exact dup of 1
-      doc(3, base + " extra"),                       // near-dup of 1
-      doc(4, base.replace("python", "sql")),         // near-dup of 1 (chains with 3)
-      doc(5, "totally unrelated text about cooking recipes and kitchen equipment"),
-      doc(6, "another disjoint document mentioning gardening and tomato greenhouses"))
-    val kept = Dedup.dedupCorpus(df(corpus), threshold = 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(kept === Array(1L, 5L, 6L))
   }
 
   test("jaccard: exact word-set similarity") {
@@ -181,5 +166,36 @@ class TextSpec extends SparkSpec {
     assert(tf("dog") === 2L)
     assert(tf("cat") === 1L)
     assert(tf("runs") === 1L)
+  }
+
+  test("text operators return the same rows at 1 or 7 shuffle partitions " +
+      "and on a repartitioned corpus") {
+    val corpus = graft.tables.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "lmScore" -> (d => LangModel.lmScore(d, col("lang") === "en")),
+      "containmentNearDupsBanded" -> (d => Dedup.containmentNearDupsBanded(d)),
+      "dedupCorpusShingle" -> (d => Dedup.dedupCorpusShingle(d)),
+      "dedupCorpusKeepBest" -> (d => Dedup.dedupCorpusKeepBest(d)),
+      "clusterSplit" -> (d => Dedup.clusterSplit(d)),
+      "spanDedup" -> (d => Dedup.spanDedup(d)),
+      "dsirWeights" -> (d => TextFeatures.dsirWeights(d, col("lang") === "en")))
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    // each run starts and ends with an empty cache: a persisted frame from
+    // one partitioning would otherwise serve the next run's identical plan
+    def rows(op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+             d: org.apache.spark.sql.DataFrame, partitions: Int): Seq[String] = {
+      graft.ops.Caching.releaseAll(spark)
+      spark.conf.set(key, partitions.toString)
+      try op(d).collect().map(_.toString).sorted.toSeq
+      finally { spark.conf.set(key, saved); graft.ops.Caching.releaseAll(spark) }
+    }
+    ops.foreach { case (name, op) =>
+      val base = rows(op, corpus, 1)
+      assert(base.nonEmpty, s"$name returned no rows")
+      assert(rows(op, corpus, 7) === base, s"$name at 7 shuffle partitions")
+      assert(rows(op, corpus.repartition(5), saved.toInt) === base,
+        s"$name on a corpus repartitioned to 5")
+    }
   }
 }

@@ -13,6 +13,11 @@ stage ids (a `*QueryStage` node's `Arguments: 9`), RDD ids
 (`MapPartitionsRDD[12]`), lambda class names and object hashes
 (`$Lambda$5458/0x...@6514666f`), and temp paths (`/tmp/...`).
 
+The first line of each dump, `# build jobs: N`, is the number of Spark
+jobs the row's `run` started while building its frame (PlanDump counts
+them with a listener). It is not masked: a change in that count is
+reported like any other differing line.
+
 Prints one line per row, `identical` or `differs`, and under each
 differing row the masked lines that differ (unified diff, no context).
 Rows present on one side only are listed as `only-before`/`only-after`.
