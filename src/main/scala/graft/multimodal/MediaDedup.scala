@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.multimodal.Multimodal.{Containers, MediaRow, perDocId}
+import graft.multimodal.Multimodal.{Containers, MediaRow, perDocId, perMedia}
 import graft.text.Dedup
 
 /** Perceptual near-duplicate detection for decoded media — the image/audio
@@ -64,44 +64,47 @@ object MediaDedup {
   private def foreachDecodedPixel(id: Long, p: Array[Byte])
                                  (onDims: (Int, Int) => Unit)
                                  (f: (Int, Int, Int, Int, Int) => Unit): Unit = {
-    val isGif = p.length >= 6 && p(0) == 'G'.toByte && p(1) == 'I'.toByte &&
-      p(2) == 'F'.toByte
-    val isJpeg = p.length >= 3 && (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8
-    if (isJpeg) {
-      val (w, h, _, rgb) = Jpeg.decodeRgbOriented(id, p)
-      onDims(w, h)
-      var k = 0
-      val n = w * h
-      while (k < n) {
-        f(k % w, k / w, rgb(3 * k) & 0xFF, rgb(3 * k + 1) & 0xFF,
-          rgb(3 * k + 2) & 0xFF)
-        k += 1
-      }
-    } else if (isGif) {
-      val (w, h, indices, palette, _) = Multimodal.decodeGifIdx(id, p)
-      onDims(w, h)
-      var k = 0
-      while (k < indices.length) {
-        val idx = indices(k)
-        f(k % w, k / w, palette(3 * idx) & 0xFF, palette(3 * idx + 1) & 0xFF,
-          palette(3 * idx + 2) & 0xFF)
-        k += 1
-      }
-    } else {
-      val (w, h, px) = Multimodal.decodeStillRgba(id, p)
-      onDims(w, h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val k = 4 * (y * w + x)
-          f(x, y, px(k) & 0xFF, px(k + 1) & 0xFF, px(k + 2) & 0xFF)
-          x += 1
+    Containers.sniff(p) match {
+      case "jpeg" =>
+        val (w, h, _, rgb) = Jpeg.decodeRgbOriented(id, p)
+        onDims(w, h)
+        var k = 0
+        val n = w * h
+        while (k < n) {
+          f(k % w, k / w, rgb(3 * k) & 0xFF, rgb(3 * k + 1) & 0xFF,
+            rgb(3 * k + 2) & 0xFF)
+          k += 1
         }
-        y += 1
-      }
+      case "gif" =>
+        val (w, h, indices, palette, _) = Multimodal.decodeGifIdx(id, p)
+        onDims(w, h)
+        var k = 0
+        while (k < indices.length) {
+          val idx = indices(k)
+          f(k % w, k / w, palette(3 * idx) & 0xFF, palette(3 * idx + 1) & 0xFF,
+            palette(3 * idx + 2) & 0xFF)
+          k += 1
+        }
+      case _ =>
+        val (w, h, px) = Multimodal.decodeStillRgba(id, p)
+        onDims(w, h)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val k = 4 * (y * w + x)
+            f(x, y, px(k) & 0xFF, px(k + 1) & 0xFF, px(k + 2) & 0xFF)
+            x += 1
+          }
+          y += 1
+        }
     }
   }
+
+  /** The dHash grid cell of pixel (x, y) in a w×h image: block
+    * (x·8/w, y·8/h), floor arithmetic, exactly replayable in SQL. */
+  private def gridCell(x: Int, y: Int, w: Int, h: Int): Int =
+    (y * GridH / h) * GridW + x * GridW / w
 
   /** 56-bit difference hash of one decoded raster image — FORMAT-BLIND:
     * the payload decodes by magic (PNG via inflate+unfilter, GIF via LZW
@@ -141,7 +144,7 @@ object MediaDedup {
         s"media $id: dHash needs at least ${GridW}x$GridH pixels, got ${pw}x$ph")
       w = pw; h = ph
     } { (x, y, r, g, b) =>
-      val bk = (y * GridH / h) * GridW + x * GridW / w
+      val bk = gridCell(x, y, w, h)
       sums(bk) += (r + g + b) / 3; cnts(bk) += 1L
     }
     val m = new Array[Long](GridW * GridH)
@@ -199,13 +202,10 @@ object MediaDedup {
   }
 
   /** Orientation-canonical fingerprints: (media_id, chash). */
-  def imageCanonicalHash(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m =>
+  def imageCanonicalHash(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m =>
         (m.media_id, canonicalHashOneImage(m.media_id, m.payload))))
       .toDF("media_id", "chash")
-  }
 
   /** Orientation-invariant perceptual near-dups: [[imageNearDups]] over
     * the canonical hash — a rotated/mirrored re-post collides at
@@ -243,6 +243,14 @@ object MediaDedup {
                                    rgb: Array[Byte]): Long = {
     require(w >= GridW && h >= GridH,
       s"media $id: frame dHash needs at least ${GridW}x$GridH pixels, got ${w}x$h")
+    val (sums, cnts) = frameGrid(w, h, rgb)
+    dhashOfGrid(sums, cnts)
+  }
+
+  /** Gray block sums and pixel counts of one row-major RGB frame over the
+    * dHash grid — the frame-side accumulation behind [[dhashOneFrame]]
+    * and [[descriptorOneVideo]]. */
+  private def frameGrid(w: Int, h: Int, rgb: Array[Byte]): (Array[Long], Array[Long]) = {
     val sums = new Array[Long](GridW * GridH)
     val cnts = new Array[Long](GridW * GridH)
     var y = 0
@@ -250,14 +258,14 @@ object MediaDedup {
       var x = 0
       while (x < w) {
         val k = 3 * (y * w + x)
-        val bk = (y * GridH / h) * GridW + x * GridW / w
+        val bk = gridCell(x, y, w, h)
         sums(bk) += ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) + (rgb(k + 2) & 0xFF)) / 3
         cnts(bk) += 1L
         x += 1
       }
       y += 1
     }
-    dhashOfGrid(sums, cnts)
+    (sums, cnts)
   }
 
   /** Descriptor layout: 3 channels × 8 histogram bins, then the 8×8 gray
@@ -287,7 +295,7 @@ object MediaDedup {
       w = pw; h = ph
     } { (x, y, r, g, b) =>
       hist(r / 32) += 1L; hist(8 + g / 32) += 1L; hist(16 + b / 32) += 1L
-      val bk = (y * GridH / h) * GridW + x * GridW / w
+      val bk = gridCell(x, y, w, h)
       sums(bk) += (r + g + b) / 3; cnts(bk) += 1L
     }
     val desc = new Array[Double](DescriptorDims)
@@ -303,22 +311,16 @@ object MediaDedup {
 
   /** Per-image content descriptors in the Similarity column contract:
     * (vec_id, embedding). */
-  def imageDescriptors(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m =>
+  def imageDescriptors(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m =>
         (m.media_id, descriptorOneImage(m.media_id, m.payload))))
       .toDF("vec_id", "embedding")
-  }
 
   /** Per-image perceptual hash: (media_id, dhash). Partition-local map —
     * no shuffle; scales with input splits like any decode pass. */
-  def imageDHash(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m => (m.media_id, dhashOneImage(m.media_id, m.payload))))
+  def imageDHash(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m => (m.media_id, dhashOneImage(m.media_id, m.payload))))
       .toDF("media_id", "dhash")
-  }
 
   /** Image near-duplicate pairs within `maxHamming` flipped gradient bits,
     * via [[Dedup.hammingBandPairs]] banding (candidates from a 14-bit-chunk
@@ -397,22 +399,16 @@ object MediaDedup {
     * volume-scaled copy of a clip scores 1 against the original) —
     * similarity search over what clips SOUND like, the audio twin of
     * [[imageDescriptors]]. Exact longs → bit-replayable cosine. */
-  def audioDescriptors(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m =>
+  def audioDescriptors(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m =>
         (m.media_id, audioEnergies(m.media_id, m.payload).map(_.toDouble))))
       .toDF("vec_id", "embedding")
-  }
 
   /** Per-clip audio fingerprint: (media_id, afp). Partition-local map. */
-  def audioFingerprint(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m =>
+  def audioFingerprint(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m =>
         (m.media_id, audioFingerprintOne(m.media_id, m.payload))))
       .toDF("media_id", "afp")
-  }
 
   /** Audio near-duplicate pairs within `maxHamming` contour flips — the
     * WAV-side twin of [[imageNearDups]], same banding machinery. */
@@ -459,10 +455,8 @@ object MediaDedup {
     * of any span-based search — size `windowSamples` to the shortest
     * clip you need findable. */
   def audioSpanFingerprints(media: Dataset[MediaRow],
-                            windowSamples: Int = 10): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+                            windowSamples: Int = 10): DataFrame =
+    perMedia(media)(_.flatMap { m =>
       val e = absWindowEnergies(m.media_id, m.payload, windowSamples)
       // the clip search packs offsets into 20 bits — a longer track
       // (~11 min at 16 kHz with 10-sample windows) would SILENTLY
@@ -482,7 +476,6 @@ object MediaDedup {
         (m.media_id, o, fp)
       }
     }).toDF("media_id", "offset", "sfp")
-  }
 
   /** Shared-intro detection — the audio twin of [[imageBoilerplateBlocks]]:
     * a leading span print ([[audioSpanFingerprints]] at offset 0)
@@ -739,10 +732,8 @@ object MediaDedup {
     * beyond), `n_dark` (gray < 16) and `n_bright` (gray > 239) for the
     * clipped-exposure fractions. One decode pass per image; output is
     * |images|-grain. */
-  def imageQualityStats(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
+  def imageQualityStats(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map { m =>
       var n = 0L; var s = 0L; var s2 = 0L; var dark = 0L; var bright = 0L
       foreachDecodedPixel(m.media_id, m.payload) { (_, _) => () } {
         (_, _, r, g, b) =>
@@ -760,7 +751,6 @@ object MediaDedup {
           "-pixel exact-variance bound (use sampled stats beyond)")
       (m.media_id, n, s, n * s2 - s * s, dark, bright)
     }).toDF("media_id", "n_px", "sum_gray", "var_num", "n_dark", "n_bright")
-  }
 
   /** Per-video exposure/flatness gates over DECODED frames — the video
     * twin of [[imageQualityStats]]: black-frame and flat-frame detection
@@ -774,9 +764,7 @@ object MediaDedup {
   def videoQualityStats(media: Dataset[MediaRow],
                         everyN: Int = 1): DataFrame = {
     require(everyN > 0, "everyN must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
+    perMedia(media)(_.map { m =>
       val (w, h, frames) = Multimodal.decodeVideoRgb(m.media_id, m.payload)
       val npx = w.toLong * h
       // same int64 exactness bound as imageQualityStats: the per-frame
@@ -817,9 +805,7 @@ object MediaDedup {
   def audioQualityStats(media: Dataset[MediaRow],
                         windowSamples: Int = 10): DataFrame = {
     require(windowSamples > 0, "windowSamples must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
+    perMedia(media)(_.map { m =>
       val (_, _, samples) = Multimodal.pcm16Samples(m.media_id, m.payload)
       val n = samples.length
       var sumAbs = 0L; var peak = 0L; var clipped = 0L
@@ -924,16 +910,13 @@ object MediaDedup {
   /** Exploded fixed-grid block means, one row per (image, block) — the
     * shared substrate of [[imagePatchHashes]] and
     * [[imageBoilerplateBlocks]]. Output (media_id, bx, by, mean). */
-  def imageBlockMeans(media: Dataset[MediaRow], blockPx: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+  def imageBlockMeans(media: Dataset[MediaRow], blockPx: Int = 2): DataFrame =
+    perMedia(media)(_.flatMap { m =>
       val (gw, _, bm) = blockMeans(m.media_id, m.payload, blockPx)
       bm.iterator.zipWithIndex.map { case (mean, i) =>
         (m.media_id, i % gw, i / gw, mean)
       }
     }).toDF("media_id", "bx", "by", "mean")
-  }
 
   /** Template/watermark region detection — the image twin of the text
     * boilerplate detector: a block mean recurring VERBATIM across many
@@ -1008,10 +991,8 @@ object MediaDedup {
     * [[audioSpanFingerprints]]; windows per image are linear in pixels /
     * blockPx², shuffled as four integers, never pixels. */
   def imagePatchHashes(media: Dataset[MediaRow],
-                       blockPx: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+                       blockPx: Int = 2): DataFrame =
+    perMedia(media)(_.flatMap { m =>
       val (gw, gh, bm) = blockMeans(m.media_id, m.payload, blockPx)
       // the crop search packs (ox, oy) into 10 bits each — a wider grid
       // would SILENTLY corrupt candidate ids, so fail by name here (at
@@ -1037,7 +1018,6 @@ object MediaDedup {
         (m.media_id, ox, oy, fp)
       }
     }).toDF("media_id", "ox", "oy", "phash")
-  }
 
   /** Image crop containment search — the 2D twin of [[audioClipMatches]]
     * (and the cropped-meme case whole-image dHash structurally misses:
@@ -1497,9 +1477,7 @@ object MediaDedup {
     * Partition-local map, no shuffle. */
   def videoFrameHashes(media: Dataset[MediaRow], everyN: Int = 2): DataFrame = {
     require(everyN >= 1, "everyN must be >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+    perMedia(media)(_.flatMap { m =>
       val (w, h, frames) = Multimodal.decodeVideoRgb(m.media_id, m.payload)
       require(frames.length < (1 << FrameBits),
         s"media ${m.media_id}: ${frames.length} frames overflow the frame-id pack")
@@ -1612,8 +1590,6 @@ object MediaDedup {
   def videoClusters(media: Dataset[MediaRow], everyN: Int = 2,
                     maxHamming: Int = 3, bands: Int = 4,
                     minSharedFrac: Double = 0.5): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
     val pairs = videoNearDups(media, everyN, maxHamming, bands, minSharedFrac)
       .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
     val clusters = Dedup.clusterPairs(pairs)
@@ -1740,13 +1716,10 @@ object MediaDedup {
     * bit-for-bit in SQL. Cosine's scale invariance makes a video and its
     * doubled-length self-concatenation score 1 — the video analogue of
     * the audio volume-scaling invariance. */
-  def videoDescriptors(media: Dataset[MediaRow], everyN: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m =>
+  def videoDescriptors(media: Dataset[MediaRow], everyN: Int = 2): DataFrame =
+    perMedia(media)(_.map(m =>
         (m.media_id, descriptorOneVideo(m.media_id, m.payload, everyN))))
       .toDF("vec_id", "embedding")
-  }
 
   /** The per-item body of [[videoDescriptors]] — shared with
     * [[Multimodal.extractFeatures]]'s format dispatch. */
@@ -1759,22 +1732,7 @@ object MediaDedup {
     var f = 0
     while (f < frames.length) {
       if (f % everyN == 0) {
-        val rgb = frames(f)
-        val sums = new Array[Long](GridW * GridH)
-        val cnts = new Array[Long](GridW * GridH)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val k = 3 * (y * w + x)
-            val bk = (y * GridH / h) * GridW + x * GridW / w
-            sums(bk) +=
-              ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) + (rgb(k + 2) & 0xFF)) / 3
-            cnts(bk) += 1L
-            x += 1
-          }
-          y += 1
-        }
+        val (sums, cnts) = frameGrid(w, h, frames(f))
         var bk = 0
         while (bk < acc.length) { acc(bk) += sums(bk) / cnts(bk); bk += 1 }
       }

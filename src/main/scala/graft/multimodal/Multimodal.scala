@@ -2,7 +2,9 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
@@ -18,11 +20,15 @@ import org.apache.spark.sql.functions._
   *  - [[decode]]/[[extractFeatures]] — typed `mapPartitions` (the Scala
   *    analogue of arrow-batched pandas UDFs: an iterator of rows per
   *    partition, never a driver collect) for the work that genuinely needs
-  *    a codec body. Header parsing in [[decode]] is real ([[Containers]]).
-  *    PIXEL and SAMPLE decoding are REAL for the formats the JDK alone can
-  *    carry: [[pngPixelStats]] inflates and unfilters genuine PNG IDAT
-  *    streams (PNG's zlib IS `java.util.zip`; all five scanline filters),
-  *    and [[wavSampleStats]] reads PCM16 WAV samples (PCM needs no codec).
+  *    a codec body; every such operator is one [[perMedia]] pass. Header
+  *    parsing in [[decode]] is real ([[Containers]]). Every decoder
+  *    dispatch routes on ONE magic-byte decision, [[Containers.sniff]],
+  *    and the per-frame reductions are one kernel each ([[channelSums]],
+  *    [[quadrantGray]], [[rgbaToRgb]]). PIXEL and SAMPLE decoding are REAL
+  *    for the image, audio and video formats [[mediaDecodeHealth]] counts
+  *    as decodable: PNG's zlib IS `java.util.zip`, PCM needs no codec, and
+  *    the rest are from-scratch codec bodies ([[Jpeg]], [[Webp]],
+  *    [[Raster]], [[Flac]]); MP4, MP3, Ogg and HEIF stay metadata-only.
   *    [[extractFeatures]] serves REAL classical content descriptors per
   *    modality; only a LEARNED embedding model remains out of scope (no
   *    model weights exist in this environment) — a real model body-swaps
@@ -1033,6 +1039,32 @@ object Multimodal {
       } else ("unknown", 0, 0, 1, 0)
     }
 
+    /** The one format-by-magic decision every decoder dispatch routes on:
+      * the format name [[mediaDecodeHealth]] reports, or "unknown". Each
+      * test reads only the bytes its magic needs (PNG 4, GIF 3, JPEG 2,
+      * RIFF 12), so a truncated payload still names its format and that
+      * format's decoder fails it by name. WebP is tested before the RIFF
+      * audio/video pair, which splits on byte 8. */
+    def sniff(p: Array[Byte]): String = {
+      def at(off: Int, magic: String): Boolean =
+        p.length >= off + magic.length &&
+          magic.indices.forall(i => p(off + i) == magic.charAt(i).toByte)
+      if (p.length >= 4 && (p(0) & 0xFF) == 0x89 && at(1, "PNG")) "png"
+      else if (at(0, "GIF")) "gif"
+      else if (p.length >= 2 && (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8) "jpeg"
+      else if (Webp.isWebp(p)) "webp"
+      else if (p.length >= 12 && at(0, "RIFF")) (if (p(8) == 'W'.toByte) "wav" else "avi")
+      else if (at(0, "fLaC")) "flac"
+      else if (at(0, ".snd")) "au"
+      else if (at(0, "FORM") && at(8, "AIFF")) "aiff"
+      else if (Raster.isBmp(p)) "bmp"
+      else if (Raster.isTiff(p)) "tiff"
+      else ContainerMeta.heifFormat(p).getOrElse(
+        if (ContainerMeta.isMp4(p)) "mp4"
+        else if (ContainerMeta.isOgg(p)) "ogg"
+        else if (ContainerMeta.isMp3(p)) "mp3"
+        else "unknown")
+    }
   }
 
   /** One fixture row per document: `row(doc_id)` over the documents
@@ -1043,6 +1075,13 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long].map(row)
   }
+
+  /** One partition-local pass over media rows: `f` maps each partition's
+    * row iterator, one item decoded at a time per task — the shape every
+    * per-item decode, census and fingerprint operator shares. */
+  private[multimodal] def perMedia[T <: Product : TypeTag](media: Dataset[MediaRow])
+      (f: Iterator[MediaRow] => Iterator[T]): Dataset[T] =
+    media.mapPartitions(f)(Encoders.product[T])
 
   /** Deterministic media fixtures derived from the documents table — REAL
     * container bytes (image / WAV audio / AVI video by doc_id mod 3; the
@@ -1084,8 +1123,8 @@ object Multimodal {
 
   /** The JPEG SOF walk of [[Containers.jpegDims]] as a BOUNDED pure
     * expression: a `(pos, w, h, done)` accumulator folded over
-    * `sequence(1, maxSegments)` — ONE small lambda tree evaluated up to
-    * `maxSegments` times per row (a syntactic unroll would nest the
+    * `sequence(1, JpegSofSegments)` — ONE small lambda tree evaluated up to
+    * 12 times per row (a syntactic unroll would nest the
     * position expression into every byte read of the next level:
     * exponential tree growth, measured as an analyzer OOM at depth 12).
     * Each step consumes a fill byte (+1), a standalone marker (+2) or a
@@ -1097,12 +1136,14 @@ object Multimodal {
     * headroom. This is the one deliberate HOF lambda on a query path: it
     * runs only on jpeg-magic rows and replaces an exponential codegen
     * tree, the documented exception to the codegen-first rule. */
-  private def jpegSof(p: Column, maxSegments: Int = 12): Column = {
+  private val JpegSofSegments = 12
+
+  private def jpegSof(p: Column): Column = {
     val nullLong = lit(null).cast("long")
     val init = struct(lit(3L).as("pos"), nullLong.as("w"), nullLong.as("h"),
       lit(false).as("done")) // 1-based: first marker follows the 2-byte SOI
     val folded = aggregate(
-      sequence(lit(1), lit(maxSegments)), init,
+      sequence(lit(1), lit(JpegSofSegments)), init,
       (acc, _) => {
         val pos = acc.getField("pos")
         val ff = hex(p.substr(pos, lit(1))) === "FF"
@@ -1129,10 +1170,12 @@ object Multimodal {
 
   /** TIFF ImageWidth/ImageLength (tags 256/257) as a BOUNDED pure
     * expression: the IFD-0 entry walk for BOTH byte orders (II and MM),
-    * SHORT or LONG value cells, up to `maxEntries` entries folded the
+    * SHORT or LONG value cells, up to `TiffIfdEntries` (32) entries folded the
     * [[jpegSof]] way (real TIFFs carry ~10–20 IFD-0 entries; beyond the
     * bound the dims stay null and the typed path still decodes). */
-  private def tiffDimsExpr(p: Column, maxEntries: Int = 32): Column = {
+  private val TiffIfdEntries = 32
+
+  private def tiffDimsExpr(p: Column): Column = {
     val isBe = hex(p.substr(lit(1), lit(2))) === "4D4D"
     def u16(pos: Column): Column =
       when(isBe, conv(hex(p.substr(pos, lit(2))), 16, 10))
@@ -1144,11 +1187,11 @@ object Multimodal {
           hex(p.substr(pos + 2, lit(1))), hex(p.substr(pos + 1, lit(1))),
           hex(p.substr(pos, lit(1)))), 16, 10)).cast("long")
     val ifd = u32(lit(5)) + 1 // 0-based header offset -> 1-based substr pos
-    val n = least(u16(ifd), lit(maxEntries.toLong))
+    val n = least(u16(ifd), lit(TiffIfdEntries.toLong))
     val init = struct(lit(null).cast("long").as("w"),
       lit(null).cast("long").as("h"))
     aggregate(
-      sequence(lit(0L), lit(maxEntries - 1L)), init,
+      sequence(lit(0L), lit(TiffIfdEntries - 1L)), init,
       (acc, k) => {
         val e = ifd + 2 + lit(12L) * k
         val tag = u16(e)
@@ -1296,27 +1339,22 @@ object Multimodal {
   /** Decode pass: batch-iterate each partition, parse REAL container
     * headers, emit one row per frame (AVI) or one row (PNG/WAV). Pure
     * partition-local map — no shuffle, scales with input splits. */
-  def decode(media: Dataset[MediaRow]): Dataset[DecodedFrame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap { m =>
-        val (fmt, w, h, frames, headerLen) = Containers.decodeHeader(m.payload)
-        val n = m.payload.length
-        // JPEG bodies end at the EOI trailer, not the payload end — without
-        // this the typed path and mediaStats' expression path disagree by
-        // exactly the 2 trailer bytes on jpeg rows only
-        val trailer = if (fmt == "jpeg" && n >= 2 &&
-          (m.payload(n - 2) & 0xFF) == 0xFF && (m.payload(n - 1) & 0xFF) == 0xD9) 2 else 0
-        // clamp: a payload that ends exactly at (or inside) its header has
-        // an empty body, never a negative one
-        val body = math.max(0, n - headerLen - trailer)
-        (0 until frames).iterator.map { f =>
-          DecodedFrame(m.media_id, f, w, h, body.toLong)
-        }
+  def decode(media: Dataset[MediaRow]): Dataset[DecodedFrame] =
+    perMedia(media)(_.flatMap { m =>
+      val (fmt, w, h, frames, headerLen) = Containers.decodeHeader(m.payload)
+      val n = m.payload.length
+      // JPEG bodies end at the EOI trailer, not the payload end — without
+      // this the typed path and mediaStats' expression path disagree by
+      // exactly the 2 trailer bytes on jpeg rows only
+      val trailer = if (fmt == "jpeg" && n >= 2 &&
+        (m.payload(n - 2) & 0xFF) == 0xFF && (m.payload(n - 1) & 0xFF) == 0xD9) 2 else 0
+      // clamp: a payload that ends exactly at (or inside) its header has
+      // an empty body, never a negative one
+      val body = math.max(0, n - headerLen - trailer)
+      (0 until frames).iterator.map { f =>
+        DecodedFrame(m.media_id, f, w, h, body.toLong)
       }
-    }
-  }
+    })
 
   /** REAL PNG pixel decode — no media library: PNG's compression is zlib,
     * which IS `java.util.zip`. Walks the chunk chain (IHDR geometry,
@@ -1329,11 +1367,8 @@ object Multimodal {
     * pass filtered independently, pixels scattered to the pass grid);
     * other bit depths fail fast by name. Pure partition-local map;
     * decompression memory is one image at a time per task. */
-  def pngPixelStats(media: Dataset[MediaRow]): Dataset[PixelStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m => decodeOnePng(m.media_id, m.payload)))
-  }
+  def pngPixelStats(media: Dataset[MediaRow]): Dataset[PixelStats] =
+    perMedia(media)(_.map(m => decodeOnePng(m.media_id, m.payload)))
 
   /** Full PNG decode to reconstructed RGBA bytes (row-major, 4 bytes per
     * pixel) — the chunk walk, IDAT inflate, and filter reversal shared by
@@ -1555,27 +1590,69 @@ object Multimodal {
     * quality gates, descriptors, and the boilerplate census with zero
     * operator changes. */
   private[graft] def decodeStillRgba(id: Long, p: Array[Byte]): (Int, Int, Array[Byte]) =
-    if (Raster.isBmp(p)) Raster.decodeBmpRgba(id, p)
-    else if (Raster.isTiff(p)) Raster.decodeTiffRgba(id, p)
-    else if (Webp.isWebp(p)) {
-      // decode AS DISPLAYED (the q263 JPEG lesson): WebP carries EXIF in
-      // its own chunk, and position-sensitive consumers must see the
-      // pixels a viewer does; identity for untagged payloads, so every
-      // existing WebP row is byte-identical
-      val (w, h, rgba) = Webp.decodeWebpRgba(id, p)
-      Webp.orientRgba(w, h, rgba, Webp.exifOrientation(p))
-    } else decodePngRgba(id, p)
+    Containers.sniff(p) match {
+      case "bmp" => Raster.decodeBmpRgba(id, p)
+      case "tiff" => Raster.decodeTiffRgba(id, p)
+      case "webp" =>
+        // decode AS DISPLAYED (the q263 JPEG lesson): WebP carries EXIF in
+        // its own chunk, and position-sensitive consumers must see the
+        // pixels a viewer does; identity for untagged payloads, so every
+        // existing WebP row is byte-identical
+        val (w, h, rgba) = Webp.decodeWebpRgba(id, p)
+        Webp.orientRgba(w, h, rgba, Webp.exifOrientation(p))
+      case _ => decodePngRgba(id, p)
+    }
 
-  private[graft] def decodeOnePng(id: Long, p: Array[Byte]): PixelStats = {
-    val (w, h, px) = decodePngRgba(id, p)
+  /** Per-channel sums over interleaved 8-bit pixels, `stride` bytes per
+    * pixel: RGB (3) sums r, g and b; RGBA (4) also sums alpha. Returns
+    * (r, g, b, a) in longs, so every census replays exactly. */
+  private[graft] def channelSums(px: Array[Byte], stride: Int): Array[Long] = {
+    val alpha = stride == 4
     var sr = 0L; var sg = 0L; var sb = 0L; var sa = 0L
     var i = 0
     while (i < px.length) {
-      sr += px(i) & 0xFF; sg += px(i + 1) & 0xFF
-      sb += px(i + 2) & 0xFF; sa += px(i + 3) & 0xFF
-      i += 4
+      sr += px(i) & 0xFF; sg += px(i + 1) & 0xFF; sb += px(i + 2) & 0xFF
+      if (alpha) sa += px(i + 3) & 0xFF
+      i += stride
     }
-    PixelStats(id, w, h, w.toLong * h, sr, sg, sb, sa)
+    Array(sr, sg, sb, sa)
+  }
+
+  /** Quadrant gray sums of one row-major RGB image — gray = (r+g+b)/3,
+    * quadrants split at (w/2, h/2). Returns (tl, tr, bl, br). */
+  private[graft] def quadrantGray(w: Int, h: Int, rgb: Array[Byte]): Array[Long] = {
+    val q = new Array[Long](4)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val k = 3 * (y * w + x)
+        val g = ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) + (rgb(k + 2) & 0xFF)) / 3
+        q((if (y < h / 2) 0 else 2) + (if (x < w / 2) 0 else 1)) += g
+        x += 1
+      }
+      y += 1
+    }
+    q
+  }
+
+  /** Straight RGB from row-major RGBA: the alpha byte is dropped. */
+  private[graft] def rgbaToRgb(rgba: Array[Byte]): Array[Byte] = {
+    val n = rgba.length / 4
+    val rgb = new Array[Byte](3 * n)
+    var k = 0
+    while (k < n) {
+      rgb(3 * k) = rgba(4 * k); rgb(3 * k + 1) = rgba(4 * k + 1)
+      rgb(3 * k + 2) = rgba(4 * k + 2)
+      k += 1
+    }
+    rgb
+  }
+
+  private[graft] def decodeOnePng(id: Long, p: Array[Byte]): PixelStats = {
+    val (w, h, px) = decodePngRgba(id, p)
+    val s = channelSums(px, 4)
+    PixelStats(id, w, h, w.toLong * h, s(0), s(1), s(2), s(3))
   }
 
   /** REAL WAV sample decode — PCM needs no codec at all: walk the RIFF
@@ -1602,11 +1679,8 @@ object Multimodal {
     230, 230, 230, 230, 307, 409, 512, 614,
     768, 614, 512, 409, 307, 230, 230, 230)
 
-  def wavSampleStats(media: Dataset[MediaRow]): Dataset[SampleStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m => decodeOneWav(m.media_id, m.payload)))
-  }
+  def wavSampleStats(media: Dataset[MediaRow]): Dataset[SampleStats] =
+    perMedia(media)(_.map(m => decodeOneWav(m.media_id, m.payload)))
 
   /** Shared PCM16 RIFF core: walk the chunk chain and return (channels,
     * sample_rate, every data-chunk int16 sample concatenated in stream
@@ -1623,23 +1697,20 @@ object Multimodal {
     // downstream operator — contour dedup, quality, containment,
     // descriptors — is cross-format for free); anything else takes the
     // RIFF/WAVE chunk walk below.
-    if (p.length >= 4 && p(0) == 'f' && p(1) == 'L' && p(2) == 'a' && p(3) == 'C') {
-      val (channels, rate, samples) = Flac.decode(id, p)
-      val sh = new Array[Short](samples.length)
-      var i = 0
-      while (i < samples.length) { sh(i) = samples(i).toShort; i += 1 }
-      return (channels, rate, sh)
+    Containers.sniff(p) match {
+      case "flac" =>
+        val (channels, rate, samples) = Flac.decode(id, p)
+        val sh = new Array[Short](samples.length)
+        var i = 0
+        while (i < samples.length) { sh(i) = samples(i).toShort; i += 1 }
+        return (channels, rate, sh)
+      case "au" => return decodeAu(id, p)
+      case "aiff" => return decodeAiff(id, p)
+      // an AVI on the AUDIO surface means its soundtrack: extract the
+      // 'auds' stream's PCM through the RIFF walk
+      case "avi" => return decodeAviAudio(id, p)
+      case _ =>
     }
-    if (p.length >= 4 && p(0) == '.' && p(1) == 's' && p(2) == 'n' &&
-      p(3) == 'd') return decodeAu(id, p)
-    if (p.length >= 12 && p(0) == 'F' && p(1) == 'O' && p(2) == 'R' &&
-      p(3) == 'M' && p(8) == 'A' && p(9) == 'I' && p(10) == 'F' &&
-      p(11) == 'F') return decodeAiff(id, p)
-    // an AVI on the AUDIO surface means its soundtrack: extract the
-    // 'auds' stream's PCM through the RIFF walk
-    if (p.length >= 12 && p(0) == 'R' && p(1) == 'I' && p(2) == 'F' &&
-      p(3) == 'F' && p(8) == 'A' && p(9) == 'V' && p(10) == 'I')
-      return decodeAviAudio(id, p)
     def le16(off: Int): Int = (p(off) & 0xFF) | ((p(off + 1) & 0xFF) << 8)
     def le32(off: Int): Int = le16(off) | (le16(off + 2) << 16)
     def tag(off: Int): String = new String(p, off, 4, "US-ASCII")
@@ -2487,13 +2558,16 @@ object Multimodal {
     (sw, sh, out)
   }
 
+  /** PNG magic with room for the whole 8-byte signature. */
   private[graft] def isPng(p: Array[Byte]): Boolean =
-    p.length >= 8 && (p(0) & 0xFF) == 0x89 && p(1) == 'P'.toByte &&
-      p(2) == 'N'.toByte && p(3) == 'G'.toByte
+    p.length >= 8 && Containers.sniff(p) == "png"
 
   /** True iff the PNG is animated: an acTL chunk BEFORE the first IDAT,
     * per the APNG spec (an acTL after IDAT must be ignored). Bounded
-    * header walk — every iteration advances at least 12 bytes. */
+    * header walk — every iteration advances at least 12 bytes — that
+    * starts behind the 8-byte signature [[isPng]] guards, so a payload
+    * [[Containers.sniff]] names "png" on 4 bytes reads nothing past its
+    * end. */
   private[graft] def hasApng(p: Array[Byte]): Boolean = {
     if (!isPng(p)) return false
     def be(off: Int): Int =
@@ -2699,14 +2773,7 @@ object Multimodal {
         y += 1
       }
       // presented frame: straight RGB snapshot
-      val rgb = new Array[Byte](3 * w * h)
-      var k = 0
-      while (k < w * h) {
-        rgb(3 * k) = canvas(4 * k); rgb(3 * k + 1) = canvas(4 * k + 1)
-        rgb(3 * k + 2) = canvas(4 * k + 2)
-        k += 1
-      }
-      frames(fi) = rgb
+      frames(fi) = rgbaToRgb(canvas)
       dispose match {
         case 1 => // clear the rect to fully transparent
           var yy = 0
@@ -2745,22 +2812,15 @@ object Multimodal {
     * real-crawl partial-frame animations. */
   private[graft] def decodeVideoRgb(id: Long, p: Array[Byte])
       : (Int, Int, Array[Array[Byte]]) =
-    if (p.length >= 3 && p(0) == 'G'.toByte && p(1) == 'I'.toByte &&
-        p(2) == 'F'.toByte)
-      decodeGifComposited(id, p)
-    else if (hasApng(p)) decodeApngFrames(id, p)
-    else if (Webp.hasAnim(p)) Webp.decodeAnimFrames(id, p)
-    else if (Webp.isWebp(p)) {
-      val (w, h, rgba) = Webp.decodeWebpRgba(id, p)
-      val rgb = new Array[Byte](3 * w * h)
-      var k = 0
-      while (k < w * h) {
-        rgb(3 * k) = rgba(4 * k); rgb(3 * k + 1) = rgba(4 * k + 1)
-        rgb(3 * k + 2) = rgba(4 * k + 2)
-        k += 1
-      }
-      (w, h, Array(rgb))
-    } else decodeAviRgb(id, p)
+    Containers.sniff(p) match {
+      case "gif" => decodeGifComposited(id, p)
+      case "png" if hasApng(p) => decodeApngFrames(id, p)
+      case "webp" if Webp.hasAnim(p) => Webp.decodeAnimFrames(id, p)
+      case "webp" =>
+        val (w, h, rgba) = Webp.decodeWebpRgba(id, p)
+        (w, h, Array(rgbaToRgb(rgba)))
+      case _ => decodeAviRgb(id, p)
+    }
 
   /** Per-frame census over REAL AVI frame decode, with REAL frame
     * sampling: only every `everyN`-th frame (frame_idx % everyN == 0) is
@@ -2769,19 +2829,12 @@ object Multimodal {
     * partition-local map, no shuffle. */
   def aviFrameStats(media: Dataset[MediaRow], everyN: Int = 1): Dataset[VideoFrameStats] = {
     require(everyN >= 1, "everyN must be >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+    perMedia(media)(_.flatMap { m =>
       val (w, h, frames) = decodeAviRgb(m.media_id, m.payload)
       frames.iterator.zipWithIndex.collect {
         case (rgb, f) if f % everyN == 0 =>
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var i = 0
-          while (i < rgb.length) {
-            sr += rgb(i) & 0xFF; sg += rgb(i + 1) & 0xFF; sb += rgb(i + 2) & 0xFF
-            i += 3
-          }
-          VideoFrameStats(m.media_id, f, w, h, w.toLong * h, sr, sg, sb)
+          val s = channelSums(rgb, 3)
+          VideoFrameStats(m.media_id, f, w, h, w.toLong * h, s(0), s(1), s(2))
       }
     })
   }
@@ -2794,35 +2847,17 @@ object Multimodal {
                                        q_tl: Long, q_tr: Long,
                                        q_bl: Long, q_br: Long)
 
-  /** Format-blind per-frame quadrant census over [[decodeVideoRgb]]
-    * (AVI, MJPEG, animated GIF incl. partial-frame compositing), with
-    * the everyN sampling knob. Partition-local map. */
-  def videoFrameQuadrants(media: Dataset[MediaRow],
-                          everyN: Int = 1): Dataset[VideoFrameQuadrants] = {
-    require(everyN >= 1, "everyN must be >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+  /** Format-blind quadrant census of every frame of [[decodeVideoRgb]]
+    * (AVI, MJPEG, animated GIF incl. partial-frame compositing).
+    * Partition-local map. */
+  def videoFrameQuadrants(media: Dataset[MediaRow]): Dataset[VideoFrameQuadrants] =
+    perMedia(media)(_.flatMap { m =>
       val (w, h, frames) = decodeVideoRgb(m.media_id, m.payload)
-      frames.iterator.zipWithIndex.collect {
-        case (rgb, f) if f % everyN == 0 =>
-          val q = new Array[Long](4)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val k = 3 * (y * w + x)
-              val g = ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) +
-                (rgb(k + 2) & 0xFF)) / 3
-              q((if (y < h / 2) 0 else 2) + (if (x < w / 2) 0 else 1)) += g
-              x += 1
-            }
-            y += 1
-          }
-          VideoFrameQuadrants(m.media_id, f, q(0), q(1), q(2), q(3))
+      frames.iterator.zipWithIndex.map { case (rgb, f) =>
+        val q = quadrantGray(w, h, rgb)
+        VideoFrameQuadrants(m.media_id, f, q(0), q(1), q(2), q(3))
       }
     })
-  }
 
   /** COMPOSITED animated-GIF fixtures — the real-crawl animation shape:
     * a full base frame, then a centered partial rect whose every third
@@ -2913,11 +2948,8 @@ object Multimodal {
     * a frame with no table anywhere fails by name. JPEG pixels decode
     * through [[Jpeg.decodeRgb]] (baseline sequential Huffman + IDCT);
     * see [[jpegPixelStats]]. */
-  def gifPixelStats(media: Dataset[MediaRow]): Dataset[GifStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m => decodeOneGif(m.media_id, m.payload)))
-  }
+  def gifPixelStats(media: Dataset[MediaRow]): Dataset[GifStats] =
+    perMedia(media)(_.map(m => decodeOneGif(m.media_id, m.payload)))
 
   /** Full GIF decode to LZW-expanded palette indices plus the global color
     * table: (width, height, indices, palette bytes at 3·index, nColors) —
@@ -3134,21 +3166,13 @@ object Multimodal {
     * [[Jpeg.decodeRgb]] — reduced to the exact per-channel sums (longs,
     * no float accumulation in the census). Pure partition-local map: one
     * image's pixels live at a time per task. */
-  def jpegPixelStats(media: Dataset[MediaRow]): Dataset[JpegStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(m => decodeOneJpeg(m.media_id, m.payload)))
-  }
+  def jpegPixelStats(media: Dataset[MediaRow]): Dataset[JpegStats] =
+    perMedia(media)(_.map(m => decodeOneJpeg(m.media_id, m.payload)))
 
   private[graft] def decodeOneJpeg(id: Long, p: Array[Byte]): JpegStats = {
     val (w, h, rgb) = Jpeg.decodeRgb(id, p)
-    var sr = 0L; var sg = 0L; var sb = 0L
-    var k = 0
-    while (k < rgb.length) {
-      sr += rgb(k) & 0xFF; sg += rgb(k + 1) & 0xFF; sb += rgb(k + 2) & 0xFF
-      k += 3
-    }
-    JpegStats(id, w, h, w.toLong * h, sr, sg, sb)
+    val s = channelSums(rgb, 3)
+    JpegStats(id, w, h, w.toLong * h, s(0), s(1), s(2))
   }
 
   /** Orientation-sensitive census of one EXIF-oriented JPEG: quadrant
@@ -3161,26 +3185,12 @@ object Multimodal {
 
   /** Decode JPEGs, parse the EXIF orientation tag (APP1/TIFF walk), APPLY
     * it, and reduce to displayed-quadrant gray sums. */
-  def jpegOrientedQuadrants(media: Dataset[MediaRow]): Dataset[OrientedQuadrants] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
+  def jpegOrientedQuadrants(media: Dataset[MediaRow]): Dataset[OrientedQuadrants] =
+    perMedia(media)(_.map { m =>
       val (w, h, o, rgb) = Jpeg.decodeRgbOriented(m.media_id, m.payload)
-      val q = new Array[Long](4)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val k = 3 * (y * w + x)
-          val g = ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) + (rgb(k + 2) & 0xFF)) / 3
-          q((if (y < h / 2) 0 else 2) + (if (x < w / 2) 0 else 1)) += g
-          x += 1
-        }
-        y += 1
-      }
+      val q = quadrantGray(w, h, rgb)
       OrientedQuadrants(m.media_id, w, h, o, q(0), q(1), q(2), q(3))
     })
-  }
 
   /** EXIF-oriented JPEG fixtures: 64×48 DC-only grayscale (8×6 block
     * grid, per-item quadratic cell values) with a REAL APP1 Exif segment
@@ -3273,95 +3283,69 @@ object Multimodal {
     * index-census contract ([[decodeGifFrames]]) is an opt-in profile,
     * not a corpus blind spot. The aggregate is |formats × causes|-bounded
     * — never corpus-shaped. */
-  def mediaDecodeHealth(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
-      val p = m.payload
-      val fmt =
-        if (p.length >= 4 && (p(0) & 0xFF) == 0x89 && p(1) == 'P'.toByte &&
-          p(2) == 'N'.toByte && p(3) == 'G'.toByte) "png"
-        else if (p.length >= 3 && p(0) == 'G'.toByte && p(1) == 'I'.toByte &&
-          p(2) == 'F'.toByte) "gif"
-        else if (p.length >= 2 && (p(0) & 0xFF) == 0xFF &&
-          (p(1) & 0xFF) == 0xD8) "jpeg"
-        else if (Webp.isWebp(p)) "webp"
-        else if (p.length >= 12 && p(0) == 'R'.toByte && p(1) == 'I'.toByte &&
-          p(2) == 'F'.toByte && p(3) == 'F'.toByte)
-          (if (p(8) == 'W'.toByte) "wav" else "avi")
-        else if (p.length >= 4 && p(0) == 'f'.toByte && p(1) == 'L'.toByte &&
-          p(2) == 'a'.toByte && p(3) == 'C'.toByte) "flac"
-        else if (p.length >= 4 && p(0) == '.'.toByte && p(1) == 's'.toByte &&
-          p(2) == 'n'.toByte && p(3) == 'd'.toByte) "au"
-        else if (p.length >= 12 && p(0) == 'F'.toByte && p(1) == 'O'.toByte &&
-          p(2) == 'R'.toByte && p(3) == 'M'.toByte && p(8) == 'A'.toByte &&
-          p(9) == 'I'.toByte && p(10) == 'F'.toByte && p(11) == 'F'.toByte)
-          "aiff"
-        else if (Raster.isBmp(p)) "bmp"
-        else if (Raster.isTiff(p)) "tiff"
-        else if (ContainerMeta.heifFormat(p).isDefined)
-          ContainerMeta.heifFormat(p).get
-        else if (ContainerMeta.isMp4(p)) "mp4"
-        else if (ContainerMeta.isOgg(p)) "ogg"
-        else if (ContainerMeta.isMp3(p)) "mp3"
-        else "unknown"
-      if (fmt == "unknown") (fmt, "skipped", "unknown_magic")
-      else
-        try {
-          fmt match {
-            // animated WebP takes the frame-compositing decode the VIDEO
-            // surface consumes (the partial-frame-GIF lesson: the census
-            // measures the operator-surface truth, and stills reject
-            // animations by name either way)
-            case "webp" if Webp.hasAnim(p) => Webp.decodeAnimFrames(m.media_id, p)
-            // animated PNG likewise takes the compositing walk the video
-            // surface consumes
-            case "png" if hasApng(p) => decodeApngFrames(m.media_id, p)
-            case "png" | "bmp" | "tiff" | "webp" => decodeStillRgba(m.media_id, p)
-            case "gif" => decodeGifComposited(m.media_id, p)
-            case "jpeg" => Jpeg.decodeRgb(m.media_id, p)
-            case "wav" | "flac" | "au" | "aiff" => pcm16Samples(m.media_id, p)
-            // the crawl-majority containers have no sample decoder here;
-            // run the REAL metadata walk (hostile payloads land their own
-            // named causes) and report the codec as evidence
-            case "heic" | "avif" =>
-              // HEIF stills: the REAL meta/iprp/ipco walk runs (hostile
-              // payloads land their own named causes), then the named
-              // image-container bucket with the brand as evidence
-              val dims = ContainerMeta.heifDims(m.media_id, p)
-              throw new IllegalArgumentException(s"media ${m.media_id}: " +
-                s"HEIF still image is metadata-only " +
-                s"(brand ${ContainerMeta.ftypBrand(p)}, dims " +
-                dims.map { case (w, h) => s"${w}x$h" }.getOrElse("unknown") +
-                ")")
-            case "mp4" =>
-              val meta = ContainerMeta.mp4Meta(m.media_id, p)
-              val codec = meta.tracks.map(_.codec).filter(_.nonEmpty)
-                .headOption.getOrElse("none")
-              throw new IllegalArgumentException(s"media ${m.media_id}: " +
-                s"MP4 is metadata-only (codec $codec)")
-            case "mp3" =>
-              val meta = ContainerMeta.mp3Meta(m.media_id, p)
-              throw new IllegalArgumentException(s"media ${m.media_id}: " +
-                s"MPEG audio is metadata-only (codec ${meta.version}-L${meta.layer})")
-            case "ogg" =>
-              val meta = ContainerMeta.oggMeta(m.media_id, p)
-              throw new IllegalArgumentException(s"media ${m.media_id}: " +
-                s"Ogg is metadata-only (codec ${meta.codec})")
-            case _ => decodeAviRgb(m.media_id, p)
-          }
-          (fmt, "decoded", "none")
-        } catch {
-          case e: IllegalArgumentException =>
-            val msg = if (e.getMessage == null) "" else e.getMessage
-            val cause = HealthCauses.collectFirst {
-              case (marker, key) if msg.contains(marker) => key
-            }.getOrElse("other")
-            (fmt, "skipped", cause)
-        }
-    }).toDF("format", "outcome", "cause")
+  def mediaDecodeHealth(media: Dataset[MediaRow]): DataFrame =
+    perMedia(media)(_.map(m => healthOne(m.media_id, m.payload)))
+      .toDF("format", "outcome", "cause")
       .groupBy(col("format"), col("outcome"), col("cause"))
       .agg(count(lit(1)).as("n_items"))
+
+  /** One item's (format, outcome, cause) row of [[mediaDecodeHealth]]. */
+  private[graft] def healthOne(id: Long, p: Array[Byte]): (String, String, String) = {
+    val fmt = Containers.sniff(p)
+    if (fmt == "unknown") (fmt, "skipped", "unknown_magic")
+    else
+      try {
+        fmt match {
+          // animated WebP takes the frame-compositing decode the VIDEO
+          // surface consumes (the partial-frame-GIF lesson: the census
+          // measures the operator-surface truth, and stills reject
+          // animations by name either way)
+          case "webp" if Webp.hasAnim(p) => Webp.decodeAnimFrames(id, p)
+          // animated PNG likewise takes the compositing walk the video
+          // surface consumes
+          case "png" if hasApng(p) => decodeApngFrames(id, p)
+          case "png" | "bmp" | "tiff" | "webp" => decodeStillRgba(id, p)
+          case "gif" => decodeGifComposited(id, p)
+          case "jpeg" => Jpeg.decodeRgb(id, p)
+          case "wav" | "flac" | "au" | "aiff" => pcm16Samples(id, p)
+          // the crawl-majority containers have no sample decoder here;
+          // run the REAL metadata walk (hostile payloads land their own
+          // named causes) and report the codec as evidence
+          case "heic" | "avif" =>
+            // HEIF stills: the REAL meta/iprp/ipco walk runs (hostile
+            // payloads land their own named causes), then the named
+            // image-container bucket with the brand as evidence
+            val dims = ContainerMeta.heifDims(id, p)
+            throw new IllegalArgumentException(s"media $id: " +
+              s"HEIF still image is metadata-only " +
+              s"(brand ${ContainerMeta.ftypBrand(p)}, dims " +
+              dims.map { case (w, h) => s"${w}x$h" }.getOrElse("unknown") +
+              ")")
+          case "mp4" =>
+            val meta = ContainerMeta.mp4Meta(id, p)
+            val codec = meta.tracks.map(_.codec).filter(_.nonEmpty)
+              .headOption.getOrElse("none")
+            throw new IllegalArgumentException(s"media $id: " +
+              s"MP4 is metadata-only (codec $codec)")
+          case "mp3" =>
+            val meta = ContainerMeta.mp3Meta(id, p)
+            throw new IllegalArgumentException(s"media $id: " +
+              s"MPEG audio is metadata-only (codec ${meta.version}-L${meta.layer})")
+          case "ogg" =>
+            val meta = ContainerMeta.oggMeta(id, p)
+            throw new IllegalArgumentException(s"media $id: " +
+              s"Ogg is metadata-only (codec ${meta.codec})")
+          case _ => decodeAviRgb(id, p)
+        }
+        (fmt, "decoded", "none")
+      } catch {
+        case e: IllegalArgumentException =>
+          val msg = if (e.getMessage == null) "" else e.getMessage
+          val cause = HealthCauses.collectFirst {
+            case (marker, key) if msg.contains(marker) => key
+          }.getOrElse("other")
+          (fmt, "skipped", cause)
+      }
   }
 
   /** Mixed-health fixtures: thirty deterministic corpus cases
@@ -3581,45 +3565,40 @@ object Multimodal {
     * reports the video track's dims + the audio track's channels/rate
     * when both exist; MP3 reports the first frame header; Ogg reports
     * the identification header. */
-  def containerMediaMeta(media: Dataset[MediaRow]): Dataset[ContainerMetaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val id = m.media_id; val p = m.payload
-        val heif = ContainerMeta.heifFormat(p)
-        if (heif.isDefined) {
-          // HEIF stills ride ISO BMFF but live under meta, not moov: an
-          // IMAGE row (brand as codec evidence, ispe dims) — not a
-          // "video container" misroute
-          val dims = ContainerMeta.heifDims(id, p)
-          ContainerMetaRow(id, heif.get, ContainerMeta.ftypBrand(p),
-            dims.map(_._1), dims.map(_._2), None, None, None, None, None)
-        } else if (ContainerMeta.isMp4(p)) {
-          val meta = ContainerMeta.mp4Meta(id, p)
-          val video = meta.tracks.find(_.handler == "vide")
-          val audio = meta.tracks.find(_.handler == "soun")
-          val codec = video.orElse(meta.tracks.headOption).map(_.codec)
-            .filter(_.nonEmpty).getOrElse("none")
-          ContainerMetaRow(id, "mp4", codec,
-            video.map(_.width), video.map(_.height), Some(meta.durationMs),
-            audio.map(_.sampleRate), audio.map(_.channels), None,
-            Some(meta.tracks.size))
-        } else if (ContainerMeta.isOgg(p)) {
-          val meta = ContainerMeta.oggMeta(id, p)
-          ContainerMetaRow(id, "ogg", meta.codec, None, None, None,
-            Some(meta.sampleRate), Some(meta.channels), None, None)
-        } else if (ContainerMeta.isMp3(p)) {
-          val meta = ContainerMeta.mp3Meta(id, p)
-          ContainerMetaRow(id, "mp3", s"${meta.version}-L${meta.layer}",
-            None, None, None, Some(meta.sampleRate), Some(meta.channels),
-            Some(meta.bitrateKbps), None)
-        } else
-          ContainerMetaRow(id, "unknown", "none", None, None, None, None,
-            None, None, None)
-      }
-    }
-  }
+  def containerMediaMeta(media: Dataset[MediaRow]): Dataset[ContainerMetaRow] =
+    perMedia(media)(_.map { m =>
+      val id = m.media_id; val p = m.payload
+      val heif = ContainerMeta.heifFormat(p)
+      if (heif.isDefined) {
+        // HEIF stills ride ISO BMFF but live under meta, not moov: an
+        // IMAGE row (brand as codec evidence, ispe dims) — not a
+        // "video container" misroute
+        val dims = ContainerMeta.heifDims(id, p)
+        ContainerMetaRow(id, heif.get, ContainerMeta.ftypBrand(p),
+          dims.map(_._1), dims.map(_._2), None, None, None, None, None)
+      } else if (ContainerMeta.isMp4(p)) {
+        val meta = ContainerMeta.mp4Meta(id, p)
+        val video = meta.tracks.find(_.handler == "vide")
+        val audio = meta.tracks.find(_.handler == "soun")
+        val codec = video.orElse(meta.tracks.headOption).map(_.codec)
+          .filter(_.nonEmpty).getOrElse("none")
+        ContainerMetaRow(id, "mp4", codec,
+          video.map(_.width), video.map(_.height), Some(meta.durationMs),
+          audio.map(_.sampleRate), audio.map(_.channels), None,
+          Some(meta.tracks.size))
+      } else if (ContainerMeta.isOgg(p)) {
+        val meta = ContainerMeta.oggMeta(id, p)
+        ContainerMetaRow(id, "ogg", meta.codec, None, None, None,
+          Some(meta.sampleRate), Some(meta.channels), None, None)
+      } else if (ContainerMeta.isMp3(p)) {
+        val meta = ContainerMeta.mp3Meta(id, p)
+        ContainerMetaRow(id, "mp3", s"${meta.version}-L${meta.layer}",
+          None, None, None, Some(meta.sampleRate), Some(meta.channels),
+          Some(meta.bitrateKbps), None)
+      } else
+        ContainerMetaRow(id, "unknown", "none", None, None, None, None,
+          None, None, None)
+    })
 
   final case class AudioTagRow(media_id: Long, frame_id: String,
                                value: String)
@@ -3642,10 +3621,8 @@ object Multimodal {
     * per tag in container order; untagged payloads contribute nothing
     * (absence is data). Partition-local flatMap over header bytes only
     * — scan speed, no shuffle. */
-  def containerTextTags(media: Dataset[MediaRow]): Dataset[ContainerTagRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+  def containerTextTags(media: Dataset[MediaRow]): Dataset[ContainerTagRow] =
+    perMedia(media)(_.flatMap { m =>
       val id = m.media_id; val p = m.payload
       if (ContainerMeta.isMp4(p))
         ContainerMeta.mp4TextTags(id, p).map { case (f, v) =>
@@ -3663,7 +3640,6 @@ object Multimodal {
         }
       else Seq.empty
     })
-  }
 
   /** Tagged-container fixtures cycling the four labeled shapes by
     * doc_id mod 4 — an ilst-tagged MP4, a Vorbis stream whose comment
@@ -3715,15 +3691,12 @@ object Multimodal {
     * album, …). One row per text frame in frame order; payloads without
     * a tag contribute nothing (absence is data). Partition-local
     * flatMap over header bytes only — scan speed, no shuffle. */
-  def audioTagMeta(media: Dataset[MediaRow]): Dataset[AudioTagRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.flatMap { m =>
+  def audioTagMeta(media: Dataset[MediaRow]): Dataset[AudioTagRow] =
+    perMedia(media)(_.flatMap { m =>
       ContainerMeta.id3TextFrames(m.media_id, m.payload).map {
         case (fid, v) => AudioTagRow(m.media_id, fid, v)
       }
     })
-  }
 
   /** ID3-tagged MP3 fixtures: every doc carries TIT2 + TPE1 (and TALB
     * on every 3rd), planted as closed forms of doc_id, inside a real
@@ -4334,26 +4307,12 @@ object Multimodal {
 
   /** Decode JPEGs (any in-scope sampling, incl. 4:2:0) and reduce to
     * quadrant gray sums of the decoded image. */
-  def jpegQuadrantStats(media: Dataset[MediaRow]): Dataset[JpegQuadrants] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
+  def jpegQuadrantStats(media: Dataset[MediaRow]): Dataset[JpegQuadrants] =
+    perMedia(media)(_.map { m =>
       val (w, h, rgb) = Jpeg.decodeRgb(m.media_id, m.payload)
-      val q = new Array[Long](4)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val k = 3 * (y * w + x)
-          val g = ((rgb(k) & 0xFF) + (rgb(k + 1) & 0xFF) + (rgb(k + 2) & 0xFF)) / 3
-          q((if (y < h / 2) 0 else 2) + (if (x < w / 2) 0 else 1)) += g
-          x += 1
-        }
-        y += 1
-      }
+      val q = quadrantGray(w, h, rgb)
       JpegQuadrants(m.media_id, w, h, q(0), q(1), q(2), q(3))
     })
-  }
 
   /** WIDE-sampling JPEG fixtures — the factor-3/4 layouts (DV-lineage
     * 4:1:1, its vertical transpose, 3:1:1 both ways, and the
@@ -4522,32 +4481,22 @@ object Multimodal {
     * dispatch — the `mapPartitions` iterator shape is exactly where
     * per-partition model load belongs). */
   def extractFeatures(media: Dataset[MediaRow],
-                      everyN: Int = 2): Dataset[MediaFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
-      val p = m.payload
-      val emb: Array[Double] =
-        if (p.length >= 3 && ((p(0) & 0xFF) == 0x89 && p(1) == 'P'.toByte ||
-          p(0) == 'G'.toByte && p(1) == 'I'.toByte && p(2) == 'F'.toByte ||
-          (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8) ||
-          Raster.isBmp(p) || Raster.isTiff(p))
-          MediaDedup.descriptorOneImage(m.media_id, p)
-        else if (p.length >= 12 && p(0) == 'R'.toByte && p(8) == 'W'.toByte &&
-          p(9) == 'A'.toByte)
-          MediaDedup.audioEnergies(m.media_id, p).map(_.toDouble)
-        else if (p.length >= 4 && p(0) == 'f'.toByte && p(1) == 'L'.toByte &&
-          p(2) == 'a'.toByte && p(3) == 'C'.toByte)
-          MediaDedup.audioEnergies(m.media_id, p).map(_.toDouble)
-        else if (p.length >= 12 && p(0) == 'R'.toByte && p(8) == 'A'.toByte &&
-          p(9) == 'V'.toByte)
-          MediaDedup.descriptorOneVideo(m.media_id, p, everyN)
-        else throw new IllegalArgumentException(
-          s"media ${m.media_id}: no classical descriptor for this payload " +
-            "(unknown magic) — the learned-extractor slot is weights-blocked")
-      MediaFeature(m.media_id, emb.map(_.toFloat))
-    })
-  }
+                      everyN: Int = 2): Dataset[MediaFeature] =
+    perMedia(media)(_.map(m => MediaFeature(m.media_id,
+      featuresOne(m.media_id, m.payload, everyN).map(_.toFloat))))
+
+  /** One item's descriptor for [[extractFeatures]]. */
+  private[graft] def featuresOne(id: Long, p: Array[Byte],
+                                 everyN: Int): Array[Double] =
+    Containers.sniff(p) match {
+      case "png" | "gif" | "jpeg" | "bmp" | "tiff" =>
+        MediaDedup.descriptorOneImage(id, p)
+      case "wav" | "flac" => MediaDedup.audioEnergies(id, p).map(_.toDouble)
+      case "avi" => MediaDedup.descriptorOneVideo(id, p, everyN)
+      case _ => throw new IllegalArgumentException(
+        s"media $id: no classical descriptor for this payload " +
+          "(unknown magic) — the learned-extractor slot is weights-blocked")
+    }
 
   /** REAL resize: PNG payloads are decoded ([[decodePngRgba]]),
     * box-filter downsampled by the smallest integer factor s =
@@ -4565,57 +4514,54 @@ object Multimodal {
     * [[Containers.pngFull]] when a resampled GIF is needed. */
   def resize(media: Dataset[MediaRow], maxSide: Int): Dataset[MediaRow] = {
     require(maxSide >= 1, "resize needs maxSide >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map { m =>
-      val isPng = m.payload.length >= 8 &&
-        (m.payload(0) & 0xFF) == 0x89 && m.payload(1) == 'P'.toByte &&
-        m.payload(2) == 'N'.toByte && m.payload(3) == 'G'.toByte
-      if (isPng) {
-        val (w, h, px) = decodePngRgba(m.media_id, m.payload)
-        val scale = math.max(1, (math.max(w, h) + maxSide - 1) / maxSide)
-        if (scale == 1) m
-        else {
-          val w2 = (w + scale - 1) / scale
-          val h2 = (h + scale - 1) / scale
-          val sums = new Array[Long](w2 * h2 * 4)
-          val cnts = new Array[Long](w2 * h2)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val b = (y / scale) * w2 + (x / scale)
-              val k = 4 * (y * w + x)
-              cnts(b) += 1L
-              sums(4 * b) += px(k) & 0xFF
-              sums(4 * b + 1) += px(k + 1) & 0xFF
-              sums(4 * b + 2) += px(k + 2) & 0xFF
-              sums(4 * b + 3) += px(k + 3) & 0xFF
-              x += 1
-            }
-            y += 1
-          }
-          val out = new Array[Byte](w2 * h2 * 4)
-          var b = 0
-          while (b < w2 * h2) {
-            var c = 0
-            while (c < 4) {
-              out(4 * b + c) = (sums(4 * b + c) / cnts(b)).toByte
-              c += 1
-            }
-            b += 1
-          }
-          m.copy(payload = Containers.pngFull(w2, h2, i => out(i) & 0xFF),
-            width = w2, height = h2)
-        }
-      } else {
-        val scale = math.max(1, (math.max(m.width, m.height) + maxSide - 1) / maxSide)
-        if (scale == 1) m
-        else m.copy(width = (m.width + scale - 1) / scale,
-          height = (m.height + scale - 1) / scale)
-      }
-    }
+    media.map(resizeOne(_, maxSide))(Encoders.product[MediaRow])
   }
+
+  /** One row of [[resize]]. */
+  private[graft] def resizeOne(m: MediaRow, maxSide: Int): MediaRow =
+    if (Containers.sniff(m.payload) == "png") {
+      val (w, h, px) = decodePngRgba(m.media_id, m.payload)
+      val scale = math.max(1, (math.max(w, h) + maxSide - 1) / maxSide)
+      if (scale == 1) m
+      else {
+        val w2 = (w + scale - 1) / scale
+        val h2 = (h + scale - 1) / scale
+        val sums = new Array[Long](w2 * h2 * 4)
+        val cnts = new Array[Long](w2 * h2)
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val b = (y / scale) * w2 + (x / scale)
+            val k = 4 * (y * w + x)
+            cnts(b) += 1L
+            sums(4 * b) += px(k) & 0xFF
+            sums(4 * b + 1) += px(k + 1) & 0xFF
+            sums(4 * b + 2) += px(k + 2) & 0xFF
+            sums(4 * b + 3) += px(k + 3) & 0xFF
+            x += 1
+          }
+          y += 1
+        }
+        val out = new Array[Byte](w2 * h2 * 4)
+        var b = 0
+        while (b < w2 * h2) {
+          var c = 0
+          while (c < 4) {
+            out(4 * b + c) = (sums(4 * b + c) / cnts(b)).toByte
+            c += 1
+          }
+          b += 1
+        }
+        m.copy(payload = Containers.pngFull(w2, h2, i => out(i) & 0xFF),
+          width = w2, height = h2)
+      }
+    } else {
+      val scale = math.max(1, (math.max(m.width, m.height) + maxSide - 1) / maxSide)
+      if (scale == 1) m
+      else m.copy(width = (m.width + scale - 1) / scale,
+        height = (m.height + scale - 1) / scale)
+    }
 
   /** Per-media header census over the fixtures, entirely through the
     * pure-expression parser ([[binaryMediaMeta]]) — every value is parsed

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{Multimodal, Raster}
+import graft.multimodal.{MediaDedup, Multimodal, Raster}
 import graft.multimodal.Multimodal.Containers
 
 /** Adversarial-bytes fuzz over every media decoder: the streaming ingest
@@ -327,6 +327,23 @@ class FuzzSpec extends AnyFunSuite {
   test("fuzz: the format-blind video dispatch inherits the contract") {
     fuzz("vid-avi", aviPayload, 12, p => Multimodal.decodeVideoRgb(6L, p))
     fuzz("vid-gif", gifPayload, 6, p => Multimodal.decodeVideoRgb(7L, p))
+  }
+
+  test("fuzz: the sniff-routed pixel, feature, resize and audio dispatches " +
+    "take short and hostile payloads by name") {
+    // Containers.sniff names GIF on 3 bytes, JPEG on 2 and PNG on 4, so
+    // payloads shorter than the old caller guards now reach decodeGifIdx
+    // and Jpeg.decodeRgbOriented through the shared pixel walk, and
+    // decodePngRgba through resize; a RIFF that is neither WAVE nor WebP
+    // now reaches the AVI soundtrack walk
+    fuzz("gif-pixels", gifPayload, 3, p => MediaDedup.dhashOneImage(70L, p))
+    fuzz("jpeg-pixels", jpegPayload, 2, p => MediaDedup.dhashOneImage(71L, p))
+    fuzz("png-resize", pngPayload, 4, p =>
+      Multimodal.resizeOne(Multimodal.MediaRow(72L, "image", p, 12, 9, 1), 4))
+    fuzz("png-features", pngPayload, 4, p => Multimodal.featuresOne(73L, p, 2))
+    val riffOther = wavPayload.clone()
+    riffOther(8) = 'X'.toByte
+    fuzz("riff-audio", riffOther, 12, p => Multimodal.pcm16Samples(74L, p))
   }
 
   private val apngPayload = Containers.pngAnimated(10, 8, Seq(

@@ -846,4 +846,61 @@ class MultimodalSpec extends SparkSpec {
     }
     media.unpersist()
   }
+
+  test("sniff names every decode-health format, and each 0-16 byte prefix " +
+    "is that format or unknown and decodes or fails by name through every " +
+    "dispatcher that routes on it") {
+    import graft.multimodal.{ContainerMeta, Flac, MediaDedup, Raster, Webp}
+    import Multimodal.Containers
+    val ramp = Array.tabulate(400)(i => ((i * 37) % 251 - 125).toByte)
+    val payloads: Seq[(String, Array[Byte])] = Seq(
+      "png" -> Containers.pngFull(12, 9, i => (i * 31) % 256),
+      "gif" -> Containers.gifFull(8, 8, i => i % 64, Containers.GrayRamp.take(192)),
+      "jpeg" -> Containers.jpegGray(16, 16, Array.tabulate(4)(b => b * 40 + 20)),
+      "webp" -> Webp.encodeLossless(9, 9,
+        Array.tabulate(81)(k => 0xFF000000 | ((k * 3 % 256) * 0x010101))),
+      "wav" -> Containers.wav(1, 16000, ramp),
+      "avi" -> Containers.aviFull(8, 8, 2, (f, x, y, c) => (f * 31 + x * 7 + y * 13 + c) % 256),
+      "flac" -> Flac.encode(Array.tabulate(300)(p => (p * 29 % 4096) - 2048)),
+      "au" -> Containers.au(1, 8000, 3, ramp),
+      "aiff" -> Containers.aiff(1, 8000, 16, ramp),
+      "bmp" -> Raster.bmp24(9, 9, k => (k * 7) % 251),
+      "tiff" -> Raster.tiff(9, 9, 1, 1, k => (k * 5) % 251),
+      "heic" -> ContainerMeta.heifStub("heic", 64, 48),
+      "avif" -> ContainerMeta.heifStub("avif", 64, 48),
+      "mp4" -> ContainerMeta.mp4Stub("isom", 1000, 4000, Seq(
+        ContainerMeta.TrackMeta("vide", "avc1", 320, 240, 0, 0))),
+      "ogg" -> ContainerMeta.oggVorbisStub(2, 44100),
+      "mp3" -> ContainerMeta.mp3Stub(3, 1, 9, 0, mono = false, id3Size = 0),
+      "unknown" -> "plain text, no magic".getBytes("US-ASCII"))
+    // the format set is exactly the one the health census reports
+    assert(payloads.map(_._1).toSet === payloads.map { case (_, p) =>
+      Multimodal.healthOne(0L, p)._1 }.toSet)
+    def named(label: String)(decode: => Any): Unit =
+      try { decode; () }
+      catch {
+        case e: IllegalArgumentException =>
+          assert(e.getMessage != null && e.getMessage.contains("media "),
+            s"$label: unnamed IllegalArgumentException: ${e.getMessage}")
+      }
+    for ((fmt, full) <- payloads) {
+      assert(Containers.sniff(full) === fmt, fmt)
+      for (n <- 0 to 16) {
+        val p = full.take(n)
+        val label = s"$fmt[0, $n)"
+        assert(Set("unknown", fmt).contains(Containers.sniff(p)),
+          s"$label sniffs as ${Containers.sniff(p)}")
+        named(label)(Multimodal.decodeStillRgba(1L, p))
+        named(label)(Multimodal.pcm16Samples(1L, p))
+        named(label)(Multimodal.decodeVideoRgb(1L, p))
+        named(label)(Multimodal.featuresOne(1L, p, 2))
+        named(label)(Multimodal.resizeOne(
+          Multimodal.MediaRow(1L, "image", p, 64, 48, 1), 16))
+        named(label)(MediaDedup.dhashOneImage(1L, p))
+        assert(!Multimodal.hasApng(p), label)
+        // the health census never throws: every failure is a named bucket
+        assert(Multimodal.healthOne(1L, p)._1 === Containers.sniff(p), label)
+      }
+    }
+  }
 }

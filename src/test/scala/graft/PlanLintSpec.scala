@@ -7,8 +7,22 @@ package graft
   * accidentally plans a cartesian fails here before it ever runs.
   */
 class PlanLintSpec extends SparkSpec {
+  import PlanLintSpec.PlanFacts
 
   private val d = "/root/testdata/sf0.001"
+
+  /** Every row built and planned ONCE, shared by both tests: building the
+    * frames is nearly all of this suite's time. */
+  private lazy val facts: Seq[PlanFacts] = {
+    import org.apache.spark.sql.execution.window.WindowExec
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val plan = fn(spark, d).queryExecution.sparkPlan
+      val text = plan.toString
+      PlanFacts(name, text.contains("CartesianProduct"),
+        text.contains("BroadcastNestedLoopJoin"),
+        plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }.size)
+    }
+  }
 
   /** Queries that intentionally cross-join 1-row aggregates (scalar gates
     * and multi-metric single-row reports), plus the BRUTE-FORCE similarity
@@ -91,13 +105,9 @@ class PlanLintSpec extends SparkSpec {
     "q254_audio_ann_ivf")
 
   test("no query plans a cartesian product; nested loops only on 1-row sides") {
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val plan = fn(spark, d).queryExecution.sparkPlan.toString
-      val cartesian = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
-        !scalarCrossJoins(name)
-      if (cartesian && !scalarCrossJoins(name)) Some(s"$name: CartesianProduct")
-      else if (bnlj) Some(s"$name: BroadcastNestedLoopJoin")
+    val offenders = facts.flatMap { f =>
+      if (f.cartesian && !scalarCrossJoins(f.name)) Some(s"${f.name}: CartesianProduct")
+      else if (f.bnlj && !scalarCrossJoins(f.name)) Some(s"${f.name}: BroadcastNestedLoopJoin")
       else None
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
@@ -139,17 +149,19 @@ class PlanLintSpec extends SparkSpec {
     "q215_budgeted_quality")
 
   test("no query plans an unpartitioned window over data-sized input") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val global = fn(spark, d).queryExecution.sparkPlan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-      }
-      if (global.nonEmpty && !boundedGlobalWindows(name))
-        Some(s"$name: ${global.size} unpartitioned WindowExec")
+    val offenders = facts.flatMap { f =>
+      if (f.globalWindows > 0 && !boundedGlobalWindows(f.name))
+        Some(s"${f.name}: ${f.globalWindows} unpartitioned WindowExec")
       else None
     }
     assert(offenders.isEmpty,
       "data-sized global sort (add to boundedGlobalWindows ONLY with a " +
         "bounded-input justification): " + offenders.mkString("; "))
   }
+}
+
+object PlanLintSpec {
+  /** The plan facts both tests read, one entry per row. */
+  private final case class PlanFacts(name: String, cartesian: Boolean,
+                                     bnlj: Boolean, globalWindows: Int)
 }

@@ -11,12 +11,34 @@ node is added or dropped), codegen stage ids (`*(3)`, `[codegen id : 3]`),
 exchange/subquery argument ids (`[plan_id=7]`, `Subquery:1`), AQE query
 stage ids (a `*QueryStage` node's `Arguments: 9`), RDD ids
 (`MapPartitionsRDD[12]`), lambda class names and object hashes
-(`$Lambda$5458/0x...@6514666f`), and temp paths (`/tmp/...`).
+(`$Lambda$5458/0x...@6514666f`), temp paths (`/tmp/...`), and the
+source line of an RDD's call site (`localCheckpoint at MediaDedup.scala:352`
+keeps the file name, not the line, which moves with any edit above it).
 
 The first line of each dump, `# build jobs: N`, is the number of Spark
 jobs the row's `run` started while building its frame (PlanDump counts
 them with a listener). It is not masked: a change in that count is
-reported like any other differing line.
+reported like any other differing line. The count depends on the rows
+dumped before it in the same JVM: `Tables.load` infers a table's schema
+with one Spark job the first time the JVM reads that table, so only the
+first row to read it pays that job. Compare dumps made over the same row
+list (PLAN_QUERIES), or that line differs with no change to the row.
+
+A query with two or more DISTINCT aggregates over different columns (the
+`countDistinct(frame_a)`, `countDistinct(frame_b)` pair in
+`MediaDedup.videoContainment`, behind q231, q248 and q276) is rewritten by
+Spark's RewriteDistinctAggregates into an Expand with one projection per
+distinct group and a `gid` column. Spark numbers the groups, and orders
+the distinct columns in every list downstream of the Expand, in the
+iteration order of a hash map keyed by expression ids. So the same
+commit can dump `[.., frame_a, null, 1], [.., null, frame_b, 2]` in one
+run and `[.., frame_b, null, 1], [.., null, frame_a, 2]` in another,
+depending on how many expression ids earlier rows used. Before comparing,
+a dump with exactly one such Expand is put in one canonical order: the
+distinct columns sorted by name, the groups renumbered to match, on the
+Expand line and on every line that carries `gid`. Only that permutation
+is undone; any other change to those lines still shows. A dump with two
+or more such Expands is left as it is.
 
 Prints one line per row, `identical` or `differs`, and under each
 differing row the masked lines that differ (unified diff, no context).
@@ -41,6 +63,7 @@ MASKS = [
     (re.compile(r"\$Lambda[$\d]*/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{5,16}\b"), "@H"),
     (re.compile(r"/tmp/[^\s,\]]+"), "/tmp/T"),
+    (re.compile(r"(\.scala):\d+"), r"\1:N"),
 ]
 
 
@@ -64,7 +87,81 @@ def masked(path):
             for pat, rep in MASKS:
                 line = pat.sub(rep, line)
             out.append(line)
+    return canonical_distinct_groups(out)
+
+
+def split_top(s):
+    """Split `s` on the ", " separators outside any brackets."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    out.append(s[start:].strip())
     return out
+
+
+def unbracket(s):
+    return split_top(s[1:-1]) if s.startswith("[") and s.endswith("]") else None
+
+
+def distinct_expand(line):
+    """(projections, output) of a RewriteDistinctAggregates Expand line."""
+    if not line.startswith("Arguments: ["):
+        return None
+    parts = split_top(line[len("Arguments: "):])
+    if len(parts) != 2:
+        return None
+    projs, out = unbracket(parts[0]), unbracket(parts[1])
+    if not projs or not out or not out[-1].startswith("gid#"):
+        return None
+    projs = [unbracket(p) for p in projs]
+    if any(p is None or len(p) != len(out) or not p[-1].isdigit() for p in projs):
+        return None
+    return projs, out
+
+
+GID_EQ = re.compile(r"(gid#N = )(\d+)")
+
+
+def canonical_distinct_groups(lines):
+    hits = [(i, e) for i, e in ((i, distinct_expand(l)) for i, l in enumerate(lines)) if e]
+    if len(hits) != 1:
+        return lines
+    at, (projs, out) = hits[0]
+    slots = [j for j in range(len(out) - 1) if any(p[j] == "null" for p in projs)]
+    order = sorted(slots, key=lambda j: out[j])
+    if len({out[j] for j in slots}) != len(slots):
+        return lines
+
+    def reslot(row):
+        row = list(row)
+        vals = [row[j] for j in order]
+        for j, v in zip(slots, vals):
+            row[j] = v
+        return row
+
+    groups = sorted((p for p in projs if p[-1] != "0"), key=lambda p: reslot(p)[:-1])
+    renum = {p[-1]: str(k + 1) for k, p in enumerate(groups)}
+    new_projs = sorted((reslot(p)[:-1] + [renum.get(p[-1], p[-1])] for p in projs),
+                       key=lambda p: int(p[-1]))
+    old_seq = ", ".join(out[j] for j in slots)
+    new_seq = ", ".join(out[j] for j in order)
+    result = []
+    for i, line in enumerate(lines):
+        if i == at:
+            line = "Arguments: [%s], [%s]" % (
+                ", ".join("[%s]" % ", ".join(p) for p in new_projs),
+                ", ".join(reslot(out)))
+        elif "gid#N" in line:
+            line = line.replace(old_seq, new_seq)
+            line = GID_EQ.sub(lambda m: m.group(1) + renum.get(m.group(2), m.group(2)), line)
+        result.append(line)
+    return result
 
 
 def rows(d):
