@@ -1,9 +1,10 @@
 package graft.tables
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, expr, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed managed tables with a versioned JSON transaction log —
@@ -16,14 +17,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   <warehouse>/<table>/_graft_log/vNNNNNNNN.json   — one commit per version
   *   <warehouse>/<table>/data/vNNNNNNNN.<uuid>/      — parquet written by executors
   *                                                     (uuid = per-writer staging,
-  *                                                     see [[commitStaged]])
+  *                                                     see [[stageDataDir]])
   *
-  * Commit protocol: executors write the new data dir first, then the driver
-  * writes the log entry to a temp file and atomically renames it into place —
-  * readers resolve the latest *committed* log entry, so a crashed write never
-  * corrupts the table (write-temp-then-rename; single-writer assumption is
-  * documented, there is no multi-driver coordination — the non-ACID boundary
-  * called out in SURVEY §7).
+  * Commit protocol, written once: a data-writing op goes through
+  * [[commitData]] (executors write a staged data dir, observed checks gate
+  * it, then the log entry commits it); a log-only op goes through
+  * [[commitLog]]. Either way the log entry is published create-only
+  * ([[LakeTable.publish]]) — readers resolve the latest *committed* log
+  * entry, so a crashed write never corrupts the table (single-writer
+  * assumption is documented, there is no multi-driver coordination — the
+  * non-ACID boundary called out in SURVEY §7).
   *
   * Scale: data layout is plain partitioned parquet, so reads get partition
   * pruning + predicate pushdown; `partitionBy` columns are recorded in the
@@ -37,6 +40,10 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
 
   private def tableDir(name: String): Path = Paths.get(warehouseDir, name)
   private def logDir(name: String): Path = tableDir(name).resolve("_graft_log")
+  private def statsPath(name: String, v: Long): Path =
+    tableDir(name).resolve("stats").resolve(f"v$v%08d.json")
+  private def bloomPath(name: String, v: Long, column: String): Path =
+    tableDir(name).resolve("bloom").resolve(f"v$v%08d.$column.bf")
   // Per-writer UNIQUE staging dir: data is written BEFORE the log-link commit
   // race is decided, so a deterministic data/vNNNNNNNN path would let a losing
   // writer overwrite the winning writer's already-committed v data files. The
@@ -101,6 +108,11 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
       deletes, constraints)
   }
 
+  /** The table's latest commit; a missing table is the one named error. */
+  private[tables] def head(name: String): Commit =
+    readCommit(name, latestVersion(name).getOrElse(
+      throw new IllegalArgumentException(s"no such table: $name")))
+
   private def writeCommit(name: String, c: Commit): Unit = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
@@ -112,27 +124,27 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
           ("pred" -> p) ~ ("dirs" -> ds) }) ~
         ("constraints" -> c.constraints.map { case (n, s) =>
           ("name" -> n) ~ ("sql" -> s) })))
-    Files.createDirectories(logDir(name))
-    // tmp name must be unique PER WRITER: a shared tmp path would let a
-    // racing writer truncate this one's staged bytes pre-link (and the
-    // loser's cleanup would delete the winner's in-flight file)
-    val tmp = logDir(name).resolve(
-      f".v${c.version}%08d.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    val dest = logDir(name).resolve(f"v${c.version}%08d.json")
-    // optimistic concurrency: rename(2) REPLACES an existing destination, so
-    // a Files.move here would let two racing writers both "win" version v
-    // and silently lose one commit. A hard link is the POSIX atomic
-    // create-if-absent — the second writer gets FileAlreadyExistsException
-    // and must re-read the log and retry at the next version.
-    try Files.createLink(dest, tmp)
+    // optimistic concurrency: the entry is published create-only, so two
+    // racing writers cannot both "win" version v — the second gets
+    // FileAlreadyExistsException and must re-read the log and retry at the
+    // next version
+    try LakeTable.publish(logDir(name).resolve(f"v${c.version}%08d.json"),
+      json.getBytes("UTF-8"), createOnly = true)
     catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
+      case _: FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
           s"commit conflict: $name version ${c.version} was committed by another writer")
     }
-    Files.deleteIfExists(tmp): Unit
+  }
+
+  private def nextVersion(prev: Option[Commit]): Long = prev.fold(0L)(_.version + 1)
+
+  /** The log-commit path: publish `build(next version)` as the table's next
+    * log entry. */
+  private def commitLog(name: String, prev: Option[Commit])(build: Long => Commit): Commit = {
+    val c = build(nextVersion(prev))
+    writeCommit(name, c)
+    c
   }
 
   /** Commit `c` whose data was staged into the unique `staged` dir; on a
@@ -147,43 +159,56 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     }
   }
 
-  /** Wrap `df` with single-pass CHECK-constraint observation PLUS the
-    * written-row count: violation counts and the commit's `rowCount` both
-    * ride the caller's write action (`df.observe`), costing zero extra
-    * scans AND zero extra jobs — the previous spelling re-opened the staged
-    * parquet for a footer-metadata count() after every write, which paid a
-    * fresh schema inference + one job per commit (~100–150 ms each; the
-    * streaming-ingest rows commit 4+ times per run). SQL tri-state: a
-    * constraint evaluating NULL passes (the SQL-standard CHECK rule); only
-    * FALSE rows violate. */
-  private val RowCountMetric = "__row_count"
-
-  private def observedWithChecks(df: DataFrame, cs: Seq[(String, String)])
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    import org.apache.spark.sql.functions.{coalesce, count, expr, lit, not, sum, when}
+  /** The data-commit path every data-writing op shares: write `df`
+    * (partitioned by `partitionBy`) into a fresh staged dir at the next
+    * version, then commit `build(version, staged dir, written rows)`.
+    *
+    * `checks` are named CHECK predicates observed on the write job itself
+    * (`df.observe`) together with the written-row count: zero extra scans
+    * AND zero extra jobs — re-opening the staged parquet for a count() paid
+    * a fresh schema inference + one job per commit (~100–150 ms each; the
+    * streaming-ingest rows commit 4+ times per run). SQL tri-state: a check
+    * evaluating NULL passes (the SQL-standard CHECK rule); only FALSE rows
+    * violate. Any violation deletes the staged dir and throws before the
+    * commit, which is what makes data visible — the table never sees the
+    * bad data. */
+  private def commitData(name: String, prev: Option[Commit], df: DataFrame,
+                         partitionBy: Seq[String], checks: Seq[(String, String)],
+                         compression: Option[String] = None)
+                        (build: (Long, String, Long) => Commit): Commit = {
+    import org.apache.spark.sql.functions.{count, not, sum, when}
+    val rowCount = "__row_count"
     val obs = org.apache.spark.sql.Observation()
-    val aggs = count(lit(1)).as(RowCountMetric) +: cs.map { case (n, sql) =>
+    val aggs = count(lit(1)).as(rowCount) +: checks.map { case (n, sql) =>
       sum(when(not(coalesce(expr(sql), lit(true))), 1L).otherwise(0L)).as(n)
     }
-    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
-  }
-
-  /** Abort-before-commit: if any observed constraint counted violations,
-    * delete the staged dir and throw — the table never sees the bad data
-    * (the commit is what makes data visible, so this is transactional).
-    * Returns the observed written-row count. */
-  private def requireChecksPass(name: String, staged: Path,
-                                obs: org.apache.spark.sql.Observation): Long = {
+    val v = nextVersion(prev)
+    val dest = stageDataDir(name, v)
+    val w = df.observe(obs, aggs.head, aggs.tail: _*).write.mode("overwrite")
+    val writer = compression.fold(w)(w.option("compression", _))
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      .parquet(dest.toString)
     val metrics = obs.get
     val bad = metrics.toSeq.collect {
-      case (k, v: Long) if k != RowCountMetric && v > 0 => s"$k ($v rows)"
+      case (k, n: Long) if k != rowCount && n > 0 => s"$k ($n rows)"
     }.sorted
     if (bad.nonEmpty) {
-      deleteRecursively(staged)
+      deleteRecursively(dest)
       throw new IllegalArgumentException(
         s"CHECK constraint violation on $name: ${bad.mkString(", ")} — write aborted")
     }
-    metrics(RowCountMetric).asInstanceOf[Long]
+    commitStaged(name, build(v, dest.toString, metrics(rowCount).asInstanceOf[Long]), dest)
+  }
+
+  private def columnTypes(s: StructType): Map[String, DataType] =
+    s.map(f => f.name -> f.dataType).toMap
+
+  /** Same column names and types as the table, in any order. */
+  private def requireSameSchema(op: String, name: String, table: StructType,
+                                incoming: StructType): Unit = {
+    val (expected, actual) = (columnTypes(table), columnTypes(incoming))
+    require(expected == actual,
+      s"$op schema mismatch for $name: table=$expected incoming=$actual")
   }
 
   /** Persist `df` as table `name`. Append mode enforces schema compatibility
@@ -191,6 +216,10 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * `allowEvolution` — then NEW columns are admitted (existing columns must
     * keep their types) and the committed schema widens; readers see nulls
     * for the new columns on old files.
+    *
+    * `compression` is this version's parquet codec: snappy for hot tables
+    * (cheap CPU), zstd for cold/archive versions (~30-40% smaller); parquet
+    * is self-describing so readers never need to know the codec.
     *
     * `constraints` are named CHECK predicates (Delta-style table
     * constraints): they persist in the commit and every later write into
@@ -206,20 +235,18 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
             constraints: Seq[(String, String)] = Seq.empty): Commit = {
     require(mode == "overwrite" || mode == "append", s"unsupported mode $mode")
     val prev = latestVersion(name).map(readCommit(name, _))
-    val v = prev.map(_.version + 1).getOrElse(0L)
-    val parts = if (mode == "append" && prev.nonEmpty) prev.get.partitionBy else partitionBy
-    prev.filter(_ => mode == "append").foreach { p =>
-      val expected = p.schema.map(f => f.name -> f.dataType).toMap
-      val actual = df.schema.map(f => f.name -> f.dataType).toMap
+    // an append onto a live table keeps its dirs, rows, delete stack (old
+    // dirs keep their filters) and partitioning; overwrite starts fresh
+    val kept = prev.filter(_ => mode == "append")
+    kept.foreach { p =>
       if (allowEvolution) {
+        val (expected, actual) = (columnTypes(p.schema), columnTypes(df.schema))
         val changed = expected.keySet.intersect(actual.keySet)
           .filter(c => expected(c) != actual(c))
         require(changed.isEmpty, s"append type change for $name on: $changed")
-      } else {
-        require(expected == actual,
-          s"append schema mismatch for $name: table=$expected incoming=$actual")
-      }
+      } else requireSameSchema("append", name, p.schema, df.schema)
     }
+    val parts = kept.fold(partitionBy)(_.partitionBy)
     val tableConstraints = prev.map(_.constraints).getOrElse(Seq.empty)
     val effectiveConstraints =
       if (mode == "append")
@@ -227,35 +254,18 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
           tableConstraints.exists(_._1 == c._1))
       else if (constraints.nonEmpty) constraints
       else tableConstraints
-    val (checked, obs) = observedWithChecks(df, effectiveConstraints)
-    val dest = stageDataDir(name, v)
-    // snappy for hot tables (cheap CPU), zstd for cold/archive versions
-    // (~30-40% smaller — at 100 TB that is tens of TB of scan I/O saved);
-    // parquet is self-describing so readers never need to know the codec
-    val writer = checked.write.mode("overwrite").option("compression", compression)
-    (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
-      .parquet(dest.toString)
-    // written-row count observed ON the write job itself — no post-write
-    // footer re-read (schema inference + one extra job per commit)
-    val written = requireChecksPass(name, dest, obs)
-    val dirs = (if (mode == "append") prev.map(_.dirs).getOrElse(Seq.empty)
-                else Seq.empty) :+ dest.toString
-    val total = written +
-      (if (mode == "append") prev.map(_.rowCount).getOrElse(0L) else 0L)
     // evolved append: commit the WIDENED schema (old columns + new ones)
-    val schemaJson =
-      if (mode == "append" && prev.nonEmpty) {
-        val known = prev.get.schema.fieldNames.toSet
-        StructType(prev.get.schema.fields ++
-          df.schema.fields.filterNot(f => known.contains(f.name))).json
-      } else df.schema.json
-    // append keeps the delete stack (old dirs keep their filters);
-    // overwrite starts from fresh data with nothing deleted
-    val deletes = if (mode == "append") prev.map(_.deletes).getOrElse(Seq.empty)
-                  else Seq.empty
-    val commit = Commit(v, mode, dirs, schemaJson, parts, total,
-      deletes, effectiveConstraints)
-    commitStaged(name, commit, dest)
+    val schemaJson = kept.fold(df.schema.json) { p =>
+      val known = p.schema.fieldNames.toSet
+      StructType(p.schema.fields ++
+        df.schema.fields.filterNot(f => known.contains(f.name))).json
+    }
+    commitData(name, prev, df, parts, effectiveConstraints, Some(compression)) {
+      (v, dir, written) =>
+        Commit(v, mode, kept.toSeq.flatMap(_.dirs) :+ dir, schemaJson, parts,
+          written + kept.fold(0L)(_.rowCount), kept.toSeq.flatMap(_.deletes),
+          effectiveConstraints)
+    }
   }
 
   /** Read the latest committed version (or `asOfVersion` for time travel).
@@ -274,16 +284,17 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * evolved-append dir missing the widened columns (read as nulls) both
     * land on the one commit schema — which also makes the cross-dir union
     * positionally exact by construction. */
-  def read(name: String, asOfVersion: Option[Long] = None): DataFrame = {
-    val v = asOfVersion.orElse(latestVersion(name))
-      .getOrElse(throw new IllegalArgumentException(s"no such table: $name"))
-    val c = readCommit(name, v)
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    // one read per committed dir, unioned: the version dirs are not
-    // partition directories, so a single multi-path read would trip Spark's
-    // partition-structure inference when partitionBy is in play. Partition
-    // columns (recorded in the commit) resolve from dir names and are CAST
-    // to their committed type by the explicit schema.
+  def read(name: String, asOfVersion: Option[Long] = None): DataFrame =
+    scan(asOfVersion.fold(head(name))(readCommit(name, _)))
+
+  /** The rows of commit `c`: one read per committed dir, unioned. The
+    * version dirs are not partition directories, so a single multi-path
+    * read would trip Spark's partition-structure inference when partitionBy
+    * is in play. Partition columns (recorded in the commit) resolve from
+    * dir names and are CAST to their committed type by the explicit
+    * schema. */
+  private def scan(c: Commit): DataFrame = {
+    import org.apache.spark.sql.functions.not
     val sch = c.schema
     c.dirs.map { d =>
       val base = spark.read.schema(sch).parquet(d)
@@ -293,6 +304,11 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     }.reduce(_.union(_))
   }
 
+  /** Live rows of `c` that `predSql` removes (tri-state: NULL keeps the
+    * row) — one count job, for an exact committed rowCount. */
+  private def removedRows(c: Commit, predSql: String): Long =
+    scan(c).filter(coalesce(expr(predSql), lit(false))).count()
+
   /** DELETE WHERE with ZERO data rewrites (merge-on-read, the deletion-
     * vector idea at dir granularity): the new commit re-references the same
     * data dirs and pushes `cond` onto the delete stack, scoped to the dirs
@@ -301,16 +317,11 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * back to zero. The one scan here only counts the removed rows to keep
     * the committed rowCount exact. */
   def deleteWhere(name: String, predSql: String): Commit = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val prev = readCommit(name, latestVersion(name).get)
-    // count currently-live rows the predicate removes (tri-state: NULL keeps)
-    val removed = read(name)
-      .filter(coalesce(expr(predSql), lit(false))).count()
-    val commit = prev.copy(version = prev.version + 1, mode = "delete",
+    val prev = head(name)
+    val removed = removedRows(prev, predSql)
+    commitLog(name, Some(prev))(v => prev.copy(version = v, mode = "delete",
       deletes = prev.deletes :+ ((predSql, prev.dirs)),
-      rowCount = prev.rowCount - removed)
-    writeCommit(name, commit)
-    commit
+      rowCount = prev.rowCount - removed))
   }
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere`): atomically replace
@@ -327,27 +338,16 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * aborts before commit and cleans its staging. Schema must match the
     * table exactly (as strict append). */
   def replaceWhere(name: String, df: DataFrame, predSql: String): Commit = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val prev = readCommit(name, latestVersion(name).get)
-    val expected = prev.schema.map(f => f.name -> f.dataType).toMap
-    val actual = df.schema.map(f => f.name -> f.dataType).toMap
-    require(expected == actual,
-      s"replaceWhere schema mismatch for $name: table=$expected incoming=$actual")
-    val v = prev.version + 1
-    val (checked, obs) = observedWithChecks(df,
-      prev.constraints :+ (("__replace_where_scope", s"coalesce(($predSql), false)")))
-    // rows the predicate removes from the live table, for the exact rowCount
-    val removed = read(name).filter(coalesce(expr(predSql), lit(false))).count()
-    val dest = stageDataDir(name, v)
-    val writer = checked.write.mode("overwrite")
-    (if (prev.partitionBy.nonEmpty) writer.partitionBy(prev.partitionBy: _*)
-     else writer).parquet(dest.toString)
-    val written = requireChecksPass(name, dest, obs)
-    val commit = prev.copy(version = v, mode = "replaceWhere",
-      dirs = prev.dirs :+ dest.toString,
-      rowCount = prev.rowCount - removed + written,
-      deletes = prev.deletes :+ ((predSql, prev.dirs)))
-    commitStaged(name, commit, dest)
+    val prev = head(name)
+    requireSameSchema("replaceWhere", name, prev.schema, df.schema)
+    val removed = removedRows(prev, predSql)
+    commitData(name, Some(prev), df, prev.partitionBy,
+      prev.constraints :+ (("__replace_where_scope", s"coalesce(($predSql), false)"))) {
+      (v, dir, written) =>
+        prev.copy(version = v, mode = "replaceWhere", dirs = prev.dirs :+ dir,
+          rowCount = prev.rowCount - removed + written,
+          deletes = prev.deletes :+ ((predSql, prev.dirs)))
+    }
   }
 
   /** Zero-copy shallow clone (Delta SHALLOW CLONE): `dst`'s v0 commit
@@ -359,76 +359,59 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * materialize it before vacuuming the source. */
   def cloneTable(src: String, dst: String): Commit = {
     require(!exists(dst), s"clone target $dst already exists")
-    val c = readCommit(src, latestVersion(src).get)
-    val commit = Commit(0L, "clone", c.dirs, c.schemaJson, c.partitionBy,
-      c.rowCount, c.deletes, c.constraints)
-    writeCommit(dst, commit)
-    commit
+    val c = head(src)
+    commitLog(dst, None)(v => c.copy(version = v, mode = "clone"))
   }
 
   /** Commit history, oldest first. */
   def history(name: String): Seq[Commit] =
     committedVersions(name).map(readCommit(name, _))
 
+  private val CompactFiles = 1 // files compact rewrites a table into
+  private val ZOrderFiles = 8  // files zorder cuts the z-curve into
+
   /** Small-file compaction: rewrite the current table contents into
-    * `targetFiles` parquet files as a new overwrite commit. At cluster scale
-    * the small-files problem (one file per task per append) dominates scan
+    * `CompactFiles` parquet files as a new commit. At cluster scale the
+    * small-files problem (one file per task per append) dominates scan
     * setup cost; compaction is the standard maintenance op. Data is
     * unchanged — only layout. */
-  def compact(name: String, targetFiles: Int = 1): Commit = {
-    val current = read(name)
-    val prev = readCommit(name, latestVersion(name).get)
-    val v = prev.version + 1
-    val dest = stageDataDir(name, v)
-    val writer = current.coalesce(targetFiles).write.mode("overwrite")
-    (if (prev.partitionBy.nonEmpty) writer.partitionBy(prev.partitionBy: _*) else writer)
-      .parquet(dest.toString)
-    // rewriting from read() folds the delete stack into the data itself
-    val commit = Commit(v, "compact", Seq(dest.toString), prev.schemaJson,
-      prev.partitionBy, prev.rowCount, Seq.empty, prev.constraints)
-    commitStaged(name, commit, dest)
+  def compact(name: String): Commit = {
+    val prev = head(name)
+    // rewriting from the live rows folds the delete stack into the data itself
+    commitData(name, Some(prev), scan(prev).coalesce(CompactFiles), prev.partitionBy,
+      Seq.empty)((v, dir, _) =>
+      prev.copy(version = v, mode = "compact", dirs = Seq(dir), deletes = Seq.empty))
   }
 
   /** MERGE INTO this table: upsert `updates` keyed by `keys` — matched rows
     * replaced, unmatched inserted (delete-marked or not — Delta parity),
     * matches satisfying `deleteWhen` dropped
     * (semantics in [[graft.ops.Merge.upsertPlan]]) — committed as a new
-    * version, so time travel still sees the pre-merge table. The incremental
-    * lakehouse write path Delta MERGE provides; rewrite granularity is the
-    * whole table here (our log tracks dirs, not files — documented trade). */
+    * version, so time travel still sees the pre-merge table. The merged
+    * rows re-enforce the table's CHECK constraints like any other write. The
+    * incremental lakehouse write path Delta MERGE provides; rewrite
+    * granularity is the whole table here (our log tracks dirs, not files —
+    * documented trade). */
   def merge(name: String, updates: DataFrame, keys: Seq[String],
             deleteWhen: Option[org.apache.spark.sql.Column] = None): Commit = {
-    val prev = readCommit(name, latestVersion(name).get)
-    val v = prev.version + 1
-    val dest = stageDataDir(name, v)
-    val merged = graft.ops.Merge.upsertPlan(read(name), updates, keys, deleteWhen)
-    // row count observed ON the write job (no constraints newly enforced
-    // here — merge never checked them; the commit carries them forward
-    // unchanged) instead of a post-write footer re-read + count job
-    val (checked, obs) = observedWithChecks(merged, Seq.empty)
-    val writer = checked.write.mode("overwrite")
-    (if (prev.partitionBy.nonEmpty) writer.partitionBy(prev.partitionBy: _*) else writer)
-      .parquet(dest.toString)
-    val written = requireChecksPass(name, dest, obs)
-    val commit = Commit(v, "merge", Seq(dest.toString), prev.schemaJson,
-      prev.partitionBy, written, Seq.empty, prev.constraints)
-    commitStaged(name, commit, dest)
+    val prev = head(name)
+    val merged = graft.ops.Merge.upsertPlan(scan(prev), updates, keys, deleteWhen)
+    commitData(name, Some(prev), merged, prev.partitionBy, prev.constraints)(
+      (v, dir, written) => prev.copy(version = v, mode = "merge", dirs = Seq(dir),
+        rowCount = written, deletes = Seq.empty))
   }
 
   /** Z-order maintenance: rewrite the table along the Morton curve over
-    * `zCols` (see [[ZOrder]]) as a new commit. Like [[compact]] this changes
-    * layout only; unlike compact, every output file covers a tight range in
-    * ALL `zCols`, so multi-dimensional predicates prune most files via
-    * parquet min/max footers. */
-  def zorder(name: String, zCols: Seq[String], targetFiles: Int = 8): Commit = {
-    val prev = readCommit(name, latestVersion(name).get)
-    val v = prev.version + 1
-    val dest = stageDataDir(name, v)
-    ZOrder.layout(read(name), zCols, targetFiles)
-      .write.mode("overwrite").parquet(dest.toString)
-    val commit = Commit(v, "zorder", Seq(dest.toString), prev.schemaJson,
-      prev.partitionBy, prev.rowCount, Seq.empty, prev.constraints)
-    commitStaged(name, commit, dest)
+    * `zCols` (see [[ZOrder]]) into `ZOrderFiles` files as a new commit. Like
+    * [[compact]] this changes layout only; unlike compact, every output
+    * file covers a tight range in ALL `zCols`, so multi-dimensional
+    * predicates prune most files via parquet min/max footers. The layout
+    * is written unpartitioned; the commit keeps the table's partitionBy. */
+  def zorder(name: String, zCols: Seq[String]): Commit = {
+    val prev = head(name)
+    commitData(name, Some(prev), ZOrder.layout(scan(prev), zCols, ZOrderFiles),
+      Seq.empty, Seq.empty)((v, dir, _) =>
+      prev.copy(version = v, mode = "zorder", dirs = Seq(dir), deletes = Seq.empty))
   }
 
   /** Roll the table back to `version`'s contents as a NEW commit (Delta
@@ -437,17 +420,13 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * bad versions visible for forensics. Restored dirs must still exist
     * (not vacuumed). */
   def restore(name: String, version: Long): Commit = {
+    val prev = head(name)
     require(committedVersions(name).contains(version),
       s"no committed version v$version for $name (vacuumed or never existed)")
     val target = readCommit(name, version)
-    val prev = readCommit(name, latestVersion(name).get)
     require(target.dirs.forall(d => Files.isDirectory(Paths.get(d))),
       s"cannot restore $name to v$version: data dirs were vacuumed")
-    val commit = Commit(prev.version + 1, "restore", target.dirs,
-      target.schemaJson, target.partitionBy, target.rowCount,
-      target.deletes, target.constraints)
-    writeCommit(name, commit)
-    commit
+    commitLog(name, Some(prev))(v => target.copy(version = v, mode = "restore"))
   }
 
   /** Partition-layout evolution: rewrite the current contents under a NEW
@@ -459,16 +438,10 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * commit's partitionBy. Data is unchanged — only directory layout, and
     * with it which predicates prune at the scan. */
   def repartitionTable(name: String, newPartitionBy: Seq[String]): Commit = {
-    val current = read(name)
-    val prev = readCommit(name, latestVersion(name).get)
-    val v = prev.version + 1
-    val dest = stageDataDir(name, v)
-    val writer = current.write.mode("overwrite")
-    (if (newPartitionBy.nonEmpty) writer.partitionBy(newPartitionBy: _*) else writer)
-      .parquet(dest.toString)
-    val commit = Commit(v, "repartition", Seq(dest.toString), prev.schemaJson,
-      newPartitionBy, prev.rowCount, Seq.empty, prev.constraints)
-    commitStaged(name, commit, dest)
+    val prev = head(name)
+    commitData(name, Some(prev), scan(prev), newPartitionBy, Seq.empty)((v, dir, _) =>
+      prev.copy(version = v, mode = "repartition", dirs = Seq(dir),
+        partitionBy = newPartitionBy, deletes = Seq.empty))
   }
 
   /** Delete data directories no committed version <= the latest references
@@ -538,13 +511,12 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * sidecar next to the commit log (`stats/v%08d.json`) — the file-skipping
     * and join-planning input a lakehouse keeps per snapshot. min/max are
     * stringified (schema-agnostic); ndv is HLL-approximate (exact ndv would
-    * be a full shuffle per column). Re-running overwrites the sidecar for
+    * be a full shuffle per column). Re-running replaces the sidecar for
     * that version. */
   def analyze(name: String): Map[String, (Long, Long, String, String)] = {
-    val v = latestVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"no such table: $name"))
-    val df = read(name)
-    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, max, min, sum}
+    val latest = head(name)
+    val df = scan(latest)
+    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, max, min, sum}
     val cols = df.schema.fields.filter(_.dataType match {
       case _: StructType | _: org.apache.spark.sql.types.ArrayType |
            _: org.apache.spark.sql.types.MapType => false
@@ -566,14 +538,13 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
     val json = JsonMethods.compact(JsonMethods.render(
-      ("version" -> v) ~ ("rows" -> row.getAs[Long]("__rows")) ~
+      ("version" -> latest.version) ~ ("rows" -> row.getAs[Long]("__rows")) ~
         ("columns" -> stats.map { case (c, (nulls, ndv, mn, mx)) =>
           c -> (("nulls" -> nulls) ~ ("ndv" -> ndv) ~
             ("min" -> mn) ~ ("max" -> mx))
         })))
-    val sd = tableDir(name).resolve("stats")
-    Files.createDirectories(sd)
-    Files.write(sd.resolve(f"v$v%08d.json"), json.getBytes("UTF-8"))
+    LakeTable.publish(statsPath(name, latest.version), json.getBytes("UTF-8"),
+      createOnly = false)
     stats
   }
 
@@ -582,7 +553,7 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
   def readStats(name: String, asOfVersion: Option[Long] = None)
       : Map[String, (Long, Long, String, String)] = {
     val v = asOfVersion.orElse(latestVersion(name)).getOrElse(return Map.empty)
-    val p = tableDir(name).resolve("stats").resolve(f"v$v%08d.json")
+    val p = statsPath(name, v)
     if (!Files.exists(p)) return Map.empty
     import org.json4s._
     import org.json4s.jackson.JsonMethods
@@ -602,24 +573,25 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
   def buildBloomIndex(name: String, column: String,
                       expectedItems: Long = 1000000L,
                       fpp: Double = 0.01): Unit = {
-    val v = latestVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"no such table: $name"))
-    val bf = read(name).stat.bloomFilter(column, expectedItems, fpp)
-    val bd = tableDir(name).resolve("bloom")
-    Files.createDirectories(bd)
-    val out = Files.newOutputStream(bd.resolve(f"v$v%08d.$column.bf"))
-    try bf.writeTo(out) finally out.close()
+    val c = head(name)
+    val bytes = new java.io.ByteArrayOutputStream()
+    scan(c).stat.bloomFilter(column, expectedItems, fpp).writeTo(bytes)
+    LakeTable.publish(bloomPath(name, c.version, column), bytes.toByteArray,
+      createOnly = false)
   }
+
+  /** A frame with `df`'s schema and no rows — answered without a scan. */
+  private def emptyOf(df: DataFrame): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
 
   /** Point read through the bloom index: a definite miss returns an empty
     * frame with ZERO file scans (the index answers from its sidecar); a
     * maybe-hit falls through to the pushed-down filter scan. False
     * positives only cost the scan, never correctness. */
   def readPoint(name: String, column: String, value: Any): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val v = latestVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"no such table: $name"))
-    val p = tableDir(name).resolve("bloom").resolve(f"v$v%08d.$column.bf")
+    import org.apache.spark.sql.functions.col
+    val c = head(name)
+    val p = bloomPath(name, c.version, column)
     val mightContain =
       if (!Files.exists(p)) true
       else {
@@ -628,11 +600,8 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
           .mightContain(value)
         finally in.close()
       }
-    if (!mightContain)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read(name).schema)
-    else read(name).filter(col(column) === lit(value))
+    val table = scan(c)
+    if (!mightContain) emptyOf(table) else table.filter(col(column) === lit(value))
   }
 
   /** Range-filtered read that consults the [[analyze]] sidecar FIRST: when
@@ -644,23 +613,17 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
     * when stats are missing or the ranges overlap. */
   def readRange(name: String, column: String, lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val field = read(name).schema.find(_.name == column).getOrElse(
+    val table = read(name)
+    val field = table.schema.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"no column $column in $name"))
     require(field.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"range read needs a numeric column, $column is ${field.dataType}")
-    val pred = col(column) >= lo && col(column) <= hi
     readStats(name).get(column) match {
-      case Some((_, _, mn, mx)) =>
-        // an all-null column stringifies min/max as "null" — no bounds to
-        // prove disjointness with, fall through to the filter scan
-        val disjoint = mn != "null" && mx != "null" &&
-          (hi < mn.toDouble || lo > mx.toDouble)
-        if (disjoint)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            read(name).schema)
-        else read(name).filter(pred)
-      case None => read(name).filter(pred)
+      // an all-null column stringifies min/max as "null" — no bounds to
+      // prove disjointness with, so it falls through to the filter scan
+      case Some((_, _, mn, mx)) if mn != "null" && mx != "null" &&
+          (hi < mn.toDouble || lo > mx.toDouble) => emptyOf(table)
+      case _ => table.filter(col(column) >= lo && col(column) <= hi)
     }
   }
 
@@ -670,9 +633,33 @@ final class LakeTable(spark: SparkSession, warehouseDir: String) {
   def validate(name: String): (Boolean, String) = {
     if (!Files.isDirectory(tableDir(name))) return (false, s"missing dir: ${tableDir(name)}")
     if (!exists(name)) return (false, s"missing/empty log: ${logDir(name)}")
-    val c = readCommit(name, latestVersion(name).get)
-    val n = read(name).count()
+    val c = head(name)
+    val n = scan(c).count()
     if (n == c.rowCount) (true, s"ok: v${c.version}, $n rows")
     else (false, s"readback count $n != committed ${c.rowCount}")
+  }
+}
+
+object LakeTable {
+
+  /** The one way a lake file is published, so no reader ever sees a torn
+    * one: the bytes go to a per-writer tmp sibling, which is then either
+    * hard-linked into place (`createOnly` — the POSIX atomic
+    * create-if-absent: FileAlreadyExistsException when `dest` exists; the
+    * log entry, where rename(2) would let two racing writers both "win" a
+    * version) or atomically moved over `dest` (replace — the stats, bloom
+    * and materialized-view sidecars). */
+  private[tables] def publish(dest: Path, bytes: Array[Byte], createOnly: Boolean): Unit = {
+    Files.createDirectories(dest.getParent)
+    // tmp name must be unique PER WRITER: a shared tmp path would let a
+    // racing writer truncate this one's bytes before they are published
+    // (and the loser's cleanup would delete the winner's in-flight file)
+    val tmp = dest.resolveSibling(s".${dest.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, bytes)
+    try {
+      if (createOnly) Files.createLink(dest, tmp)
+      else Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp): Unit
   }
 }

@@ -46,19 +46,14 @@ object Materialize {
         (jv \ "viewVersion").extract[Long])
     }.toOption
 
+  // published atomically: a torn sidecar would parse-fail forever; REPLACE
+  // is safe here (single refresher per view is the documented model, and
+  // even a racing replace only ever triggers a spurious full rebuild)
   private def writeApplied(lake: LakeTable, view: String, v: Long,
-                           viewVersion: Long): Unit = {
-    // write-temp-then-atomic-rename: a torn sidecar would parse-fail forever;
-    // REPLACE is safe here (single refresher per view is the documented model,
-    // and even a racing replace only ever triggers a spurious full rebuild)
-    val tmp = metaPath(lake, view).resolveSibling(
-      s"$view.mat.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp,
-      s"""{"appliedVersion":$v,"viewVersion":$viewVersion}""".getBytes("UTF-8"))
-    Files.move(tmp, metaPath(lake, view),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+                           viewVersion: Long): Unit =
+    LakeTable.publish(metaPath(lake, view),
+      s"""{"appliedVersion":$v,"viewVersion":$viewVersion}""".getBytes("UTF-8"),
+      createOnly = false)
 
   private def aggregate(rows: DataFrame, keys: Seq[String],
                         valueCol: String): DataFrame =
@@ -73,8 +68,7 @@ object Materialize {
   private def refreshWith(lake: LakeTable, base: String, view: String)
                          (agg: DataFrame => DataFrame)
                          (fold: (DataFrame, DataFrame) => DataFrame): Long = {
-    val latest = lake.latestVersion(base).getOrElse(
-      throw new IllegalArgumentException(s"no such table: $base"))
+    val latest = lake.head(base).version
     def fullRebuild(): Unit = {
       val c = lake.write(agg(lake.read(base)), view, "overwrite")
       writeApplied(lake, view, latest, c.version)

@@ -293,7 +293,7 @@ class LakeTableSpec extends SparkSpec {
     val filesBefore = before.inputFiles.length
     val sumBefore = before.agg(org.apache.spark.sql.functions.sum("amount"))
       .collect()(0).getDouble(0)
-    lake.compact("sales", targetFiles = 1)
+    lake.compact("sales")
     val after = lake.read("sales")
     assert(after.inputFiles.length === 1)
     assert(after.inputFiles.length < filesBefore)
@@ -397,20 +397,79 @@ class LakeTableSpec extends SparkSpec {
     val lake = freshLake()
     lake.write(df(rows), "sales",
       constraints = Seq(("positive_amount", "amount > 0")))
-    // violating append aborts BEFORE commit: version and contents unchanged
-    val e = intercept[IllegalArgumentException] {
-      lake.write(df(Seq(Sale(7, "west", -5.0))), "sales", mode = "append")
-    }
-    assert(e.getMessage.contains("positive_amount"))
-    assert(lake.latestVersion("sales") === Some(0L))
-    assert(lake.read("sales").count() === 3)
-    // the aborted write's staged dir was cleaned up (no orphan data)
     val dataRoot = new java.io.File(
       lake.warehouse + java.io.File.separator + "sales", "data")
-    assert(dataRoot.listFiles().length === 1)
+    // a violating append or merge aborts BEFORE commit: version and contents
+    // unchanged
+    Seq[(String, () => Any)](
+      "append" -> (() =>
+        lake.write(df(Seq(Sale(7, "west", -5.0))), "sales", mode = "append")),
+      "merge" -> (() =>
+        lake.merge("sales", df(Seq(Sale(2, "south", -5.0))), Seq("id")))
+    ).foreach { case (op, violate) =>
+      val e = intercept[IllegalArgumentException](violate())
+      assert(e.getMessage.contains("positive_amount"), op)
+      assert(lake.latestVersion("sales") === Some(0L), op)
+      assert(lake.read("sales").count() === 3, op)
+      // the aborted write's staged dir was cleaned up (no orphan data)
+      assert(dataRoot.listFiles().length === 1, op)
+    }
     // a passing append commits; NULL-valued constraint passes (SQL tri-state)
     lake.write(df(Seq(Sale(8, "west", 5.0))), "sales", mode = "append")
     assert(lake.read("sales").count() === 4)
+  }
+
+  test("every committing op names a missing table") {
+    val lake = freshLake()
+    val batch = df(rows)
+    Seq[(String, () => Any)](
+      "deleteWhere" -> (() => lake.deleteWhere("nope", "id = 1")),
+      "replaceWhere" -> (() => lake.replaceWhere("nope", batch, "id = 1")),
+      "compact" -> (() => lake.compact("nope")),
+      "merge" -> (() => lake.merge("nope", batch, Seq("id"))),
+      "zorder" -> (() => lake.zorder("nope", Seq("id"))),
+      "repartitionTable" -> (() => lake.repartitionTable("nope", Seq("region"))),
+      "restore" -> (() => lake.restore("nope", 0L)),
+      "cloneTable" -> (() => lake.cloneTable("nope", "nope_branch"))
+    ).foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage === "no such table: nope", op)
+    }
+    assert(!lake.exists("nope_branch"))
+  }
+
+  test("commit log entries keep their JSON format") {
+    val lake = freshLake()
+    lake.write(df(rows), "sales",
+      constraints = Seq(("positive_amount", "amount > 0")))
+    lake.write(df(Seq(Sale(4, "west", 40.0))), "sales", mode = "append")
+    lake.deleteWhere("sales", "region = 'north'")
+    lake.merge("sales", df(Seq(Sale(2, "south", 25.0), Sale(5, "east", 5.0))),
+      Seq("id"))
+    // the temp root and each staged dir's uuid suffix vary run to run
+    val logDir = java.nio.file.Paths.get(lake.warehouse, "sales", "_graft_log")
+    val entries = (0 to 3).map(v =>
+      new String(Files.readAllBytes(logDir.resolve(f"v$v%08d.json")), "UTF-8")
+        .replace(lake.warehouse, "<root>")
+        .replaceAll("""v(\d{8})\.[0-9a-f]{8}""", "v$1.<uuid>"))
+    val sch = """{\"type\":\"struct\",\"fields\":[""" +
+      """{\"name\":\"id\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},""" +
+      """{\"name\":\"region\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},""" +
+      """{\"name\":\"amount\",\"type\":\"double\",\"nullable\":false,\"metadata\":{}}]}"""
+    val (d0, d1, d3) = ("<root>/sales/data/v00000000.<uuid>",
+      "<root>/sales/data/v00000001.<uuid>", "<root>/sales/data/v00000003.<uuid>")
+    val checks = """[{"name":"positive_amount","sql":"amount > 0"}]"""
+    assert(entries === Seq(
+      raw"""{"version":0,"mode":"overwrite","dirs":["$d0"],"schemaJson":"$sch",""" +
+        raw""""partitionBy":[],"rowCount":3,"deletes":[],"constraints":$checks}""",
+      raw"""{"version":1,"mode":"append","dirs":["$d0","$d1"],"schemaJson":"$sch",""" +
+        raw""""partitionBy":[],"rowCount":4,"deletes":[],"constraints":$checks}""",
+      raw"""{"version":2,"mode":"delete","dirs":["$d0","$d1"],"schemaJson":"$sch",""" +
+        raw""""partitionBy":[],"rowCount":2,""" +
+        raw""""deletes":[{"pred":"region = 'north'","dirs":["$d0","$d1"]}],""" +
+        raw""""constraints":$checks}""",
+      raw"""{"version":3,"mode":"merge","dirs":["$d3"],"schemaJson":"$sch",""" +
+        raw""""partitionBy":[],"rowCount":3,"deletes":[],"constraints":$checks}"""))
   }
 
   test("cloneTable is zero-copy and diverges independently") {

@@ -8,7 +8,10 @@ import graft.queries.{QueryRegistry, QuerySpec}
   * line of each dump is `# build jobs: N` — the Spark jobs the row's `run`
   * started while BUILDING the frame (eager model totals, persisted-cut
   * counts, isEmpty probes), counted by a listener around the call; the
-  * formatted plan cannot show them.
+  * formatted plan cannot show them. Every testdata table's schema is
+  * inferred once before the first row (`Tables.load` caches it per JVM at
+  * the cost of one job), so the count is the row's own whatever rows were
+  * dumped before it.
   *
   *   PLAN_QUERIES=q186,q208 PLAN_OUT=plans/r16 PLAN_SUFFIX=before \
   *     sbt "Test/runMain graft.PlanDump"
@@ -25,6 +28,10 @@ object PlanDump {
     val spark = LocalSession.start()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    // events through its own loader: it sets the conf a nanosecond `ts` needs
+    graft.tables.Tables.names.foreach(n =>
+      if (n == "events") graft.tables.Tables.events(spark, sfDir)
+      else graft.tables.Tables.load(spark, sfDir, n))
     QueryRegistry.all.select(sys.env.getOrElse("PLAN_QUERIES", ""))
       .foreach { case QuerySpec(name, fn, _) =>
         val jobs = new java.util.concurrent.atomic.AtomicInteger

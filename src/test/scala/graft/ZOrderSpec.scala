@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -11,17 +11,13 @@ class ZOrderSpec extends SparkSpec {
   private lazy val events = graft.tables.Tables.events(spark, "/root/testdata/sf0.01")
     .select("event_id", "user_id", "value")
 
-  /** Per-file (min,max) bounding boxes over the two layout columns. */
-  private def boxes(dir: String): Seq[((Long, Long), (Double, Double))] = {
-    import scala.jdk.CollectionConverters._
-    Files.list(Paths.get(dir)).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
-      .map { f =>
-        val r = spark.read.parquet(f)
-          .agg(min("user_id"), max("user_id"), min("value"), max("value")).head()
-        ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getDouble(3)))
-      }
-  }
+  /** Per-file (min,max) bounding boxes over the two layout columns, from
+    * one aggregate over the dir. */
+  private def boxes(dir: String): Seq[((Long, Long), (Double, Double))] =
+    spark.read.parquet(dir).groupBy(input_file_name())
+      .agg(min("user_id"), max("user_id"), min("value"), max("value"))
+      .collect().toSeq
+      .map(r => ((r.getLong(1), r.getLong(2)), (r.getDouble(3), r.getDouble(4))))
 
   test("z-order layout prunes multi-dimensional boxes better than linear sort") {
     val base = Files.createTempDirectory("graft-zorder").toString
@@ -44,18 +40,21 @@ class ZOrderSpec extends SparkSpec {
       (0L, 50L, 80.0, 150.0), (50L, 100L, 150.0, 250.0),
       (100L, 149L, 70.0, 130.0), (20L, 120L, 250.0, 490.0),
       (0L, 149L, 130.0, 200.0), (30L, 90L, 40.0, 60.0))
-    def hits(dir: String, uLo: Long, uHi: Long, vLo: Double, vHi: Double): Int =
-      boxes(dir).count { case ((ulo, uhi), (vlo, vhi)) =>
+    val zBoxes = boxes(zDir)
+    val linBoxes = boxes(linDir)
+    def hits(files: Seq[((Long, Long), (Double, Double))],
+             uLo: Long, uHi: Long, vLo: Double, vHi: Double): Int =
+      files.count { case ((ulo, uhi), (vlo, vhi)) =>
         ulo <= uHi && uhi >= uLo && vlo <= vHi && vhi >= vLo
       }
-    val zHits = boxesToProbe.map { case (a, b, c, d) => hits(zDir, a, b, c, d) }.sum
-    val linHits = boxesToProbe.map { case (a, b, c, d) => hits(linDir, a, b, c, d) }.sum
+    val zHits = boxesToProbe.map { case (a, b, c, d) => hits(zBoxes, a, b, c, d) }.sum
+    val linHits = boxesToProbe.map { case (a, b, c, d) => hits(linBoxes, a, b, c, d) }.sum
     // linear sort clusters user_id only -> value spans the full range in
     // every file, so all user-matching files intersect the box; z-order
     // confines both dimensions
     assert(zHits < linHits,
-      s"z=$zHits lin=$linHits zFiles=${boxes(zDir).mkString(";")} " +
-        s"linFiles=${boxes(linDir).mkString(";")}")
+      s"z=$zHits lin=$linHits zFiles=${zBoxes.mkString(";")} " +
+        s"linFiles=${linBoxes.mkString(";")}")
 
     // layout change must not change query results
     val (uLo, uHi, vLo, vHi) = boxesToProbe.head
@@ -69,7 +68,7 @@ class ZOrderSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-zlake").toString
     val lake = new LakeTable(spark, wh)
     lake.write(events, "ev")
-    val c = lake.zorder("ev", Seq("user_id", "value"), targetFiles = 8)
+    val c = lake.zorder("ev", Seq("user_id", "value"))
     assert(c.mode === "zorder")
     assert(lake.read("ev").count() === events.count())
     val (ok, detail) = lake.validate("ev")

@@ -18,11 +18,11 @@ keeps the file name, not the line, which moves with any edit above it).
 The first line of each dump, `# build jobs: N`, is the number of Spark
 jobs the row's `run` started while building its frame (PlanDump counts
 them with a listener). It is not masked: a change in that count is
-reported like any other differing line. The count depends on the rows
-dumped before it in the same JVM: `Tables.load` infers a table's schema
-with one Spark job the first time the JVM reads that table, so only the
-first row to read it pays that job. Compare dumps made over the same row
-list (PLAN_QUERIES), or that line differs with no change to the row.
+reported like any other differing line. It is the row's own count
+whatever rows were dumped before it: `Tables.load` infers a table's
+schema with one Spark job the first time the JVM reads that table, and
+PlanDump loads every testdata table once before the first row, so no row
+pays that job. Dumps of different row lists compare line for line.
 
 A query with two or more DISTINCT aggregates over different columns (the
 `countDistinct(frame_a)`, `countDistinct(frame_b)` pair in
