@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 
 /** Explicit cache lifecycle for graft operators.
   *
@@ -35,8 +35,24 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *     fingerprint table — the pair stage and the label join-back both
   *     read it; unpersisted, every decode runs twice).
   *     PlanAuditSpec pins the text operators' corpus-scan counts.
+  *   - STAGE-LEAF persists ([[stage]]): each stage of a chain hands its
+  *     persisted result on as a flat leaf, since an `InMemoryRelation`
+  *     prints its whole cached plan and a chain of them nests (q186 printed
+  *     3.27 MB executed). Sites: the [[graft.text.Refinery.refine]] stages,
+  *     [[graft.text.Dedup]]'s exact survivors and containment gram tables.
+  *     Release the PERSISTED frame (`stage`'s `owner`), never the leaf.
   */
 object Caching {
+
+  /** Persist `df` and return a flat leaf over the entry. Under AQE,
+    * planning the leaf runs the stage and fills the cache at the call
+    * (q182: 0 → 5 build jobs); with AQE off it stays lazy. `owner` gets
+    * the persisted frame, the handle to [[release]]. */
+  def stage(df: DataFrame, owner: Dataset[_] => Unit = _ => ()): DataFrame = {
+    val persisted = df.persist()
+    owner(persisted)
+    GraftSqlBridge.flattenLineage(persisted)
+  }
 
   /** Release the cache entry backing an operator result. The operators
     * documented above return Datasets that ARE their cache entry, so this
@@ -50,7 +66,7 @@ object Caching {
     * queries — not for use inside operators.
     *
     * Locally-checkpointed results (the eager-materialization lifecycle of
-    * `bandedNearDups` / `tfidfEmbeddingsPortable` / `Refinery`) are
+    * `bandedNearDups` / `tfidfEmbeddingsPortable`) are
     * RDD-level blocks too and are released here. That is safe by
     * construction: the harness calls this only BETWEEN queries, after the
     * query's result was fully consumed (parquet written / counted), and a

@@ -1018,8 +1018,7 @@ private[queries] object TextQueries {
               tailPermille = 300)),
             classifierFilter = Some(graft.text.Refinery.NbFilter(
               "lang = 'en'", "lang <> 'en'", minAvgMicronats = 0L)),
-            containment = true, checkpointStages = true,
-            dedupNumPerms = 32, dedupBands = 16))
+            containment = true, dedupNumPerms = 32, dedupBands = 16))
         lake.write(slice.join(chunks.select("doc_id").distinct(),
           Seq("doc_id"), "left_semi"), "survivors", "overwrite"): Unit
         val sv = lake.read("survivors")
@@ -1049,7 +1048,7 @@ private[queries] object TextQueries {
       // with six composed stages each referencing its predecessor several
       // times the inlined scan tree grows exponentially (measured as fd
       // exhaustion on the parquet view) — the exact twin of the engine-side
-      // checkpointStages rationale
+      // stage leaves in Refinery.refine
       ("WITH RECURSIVE gt AS MATERIALIZED (SELECT doc_id, source, lang, text FROM " +
         s"(SELECT doc_id, source, lang, text, $toksSql AS toks FROM documents " +
         "WHERE doc_id % 8 = 1) " +

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Caching
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -185,11 +186,11 @@ object Dedup {
   def containmentNearDups(docs: DataFrame, shingleSize: Int = 3,
                           threshold: Double = 0.5,
                           maxDf: Long = 1000): DataFrame = {
-    // shared-subtree persists (Caching contract): grams feeds the DF census
-    // and the prune; kept feeds sizes + both self-join sides — without the
-    // persists the tokenize/shingle/hash corpus pass re-runs five times
-    val grams = docGrams(docs, shingleSize).persist()
-    val kept = keptGrams(grams, maxDf).persist()
+    // stage leaves (Caching contract): grams feeds the DF census and the
+    // prune; kept feeds sizes + both self-join sides — without the persists
+    // the tokenize/shingle/hash corpus pass re-runs five times
+    val grams = Caching.stage(docGrams(docs, shingleSize))
+    val kept = Caching.stage(keptGrams(grams, maxDf))
     val shared = kept.as("x").join(kept.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -294,12 +295,12 @@ object Dedup {
       sketchK).result
 
   /** [[containmentNearDupsBandedTracked]]'s result triple: the pair table,
-    * the shared-subtree cache handles to release after consumption, and the
-    * RAW persisted (doc_id, g) gram stream — exposed so a caller that needs
-    * grams of a SUBSET of `docs` downstream (the streaming ingest's index
-    * maintenance) can semi-join this frame instead of re-tokenizing the
-    * corpus (same rows by construction: doc text is immutable within a
-    * batch, so grams(subset) == grams(docs) ⋉ subset ids). */
+    * the persisted frames behind its stage leaves (the handles to release
+    * after consumption), and the RAW (doc_id, g) gram leaf — exposed so a
+    * caller that needs grams of a SUBSET of `docs` downstream (the
+    * streaming ingest's index maintenance) can semi-join this frame instead
+    * of re-tokenizing the corpus (same rows by construction: doc text is
+    * immutable within a batch, so grams(subset) == grams(docs) ⋉ ids). */
   private[graft] final case class TrackedContainment(
       result: DataFrame, caches: Seq[Dataset[_]], rawGrams: DataFrame)
 
@@ -313,10 +314,11 @@ object Dedup {
   private[graft] def containmentNearDupsBandedTracked(
       docs: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5,
       maxDf: Long = 1000, sketchK: Int = 64): TrackedContainment = {
-    val grams = docGrams(docs, shingleSize).persist()
-    val kept = keptGrams(grams, maxDf).persist()
+    val held = Seq.newBuilder[Dataset[_]]
+    val grams = Caching.stage(docGrams(docs, shingleSize), held += _)
+    val kept = Caching.stage(keptGrams(grams, maxDf), held += _)
     val sketch = bottomKSketch(kept, sketchK)
-    val sizes = gramSetSizes(kept).persist()
+    val sizes = Caching.stage(gramSetSizes(kept), held += _)
     // candidates: sketched grams of one doc found in the other's kept set,
     // with the EVIDENCE-COUNT prune (in SOME direction) before the
     // expensive verify
@@ -339,7 +341,7 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
     TrackedContainment(containmentVerdict(shared, sizes, threshold),
-      Seq(grams, kept, sizes), grams)
+      held.result(), grams)
   }
 
   /** Cross-source duplication matrix — which domains copy from which: every
@@ -597,14 +599,14 @@ object Dedup {
   /** The front every end-to-end dedup shares: exact dedup, then the
     * shingle-verified near-dup pairs ([[minhashNearDupsShingle]]) over the
     * survivors, collapsed by [[clusterPairs]]. Returns (exact survivors,
-    * (doc_id, cluster_id) clusters). The survivors persist (Caching
-    * contract — harness releaseAll reclaims): the eager closure
+    * (doc_id, cluster_id) clusters). The survivors are a stage leaf
+    * (Caching contract — harness releaseAll reclaims): the eager closure
     * materializes the whole pair chain over them, and the caller's
     * canonical join reads them again. */
   private def exactThenClusters(docs: DataFrame, threshold: Double,
                                 numPerms: Int, bands: Int,
                                 shingleSize: Int): (DataFrame, DataFrame) = {
-    val exact = dropExactDups(docs).persist()
+    val exact = Caching.stage(dropExactDups(docs))
     (exact, clusterPairs(
       minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)))
   }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Caching.stage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   *   3. per-source cap ([[TextFeatures.perSourceCap]], reproducible sample)
   *   4. fixed-window chunking with stride ([[TextFeatures.chunkPlan]])
   *
-  * Each stage is a lazy DataFrame transform, so Catalyst plans the whole
-  * refinery as one DAG: the gate's predicate runs inside the scan
+  * Each stage hands its persisted survivors to the next as a flat leaf
+  * ([[graft.ops.Caching.stage]]), so every plan covers one stage. Within a
+  * stage Catalyst plans freely: the gate's predicate runs inside the scan
   * projection, dedup shuffles 64-bit keys only, the cap moves at most
   * `maxDocsPerSource` rows per source through its exchange, and chunking
   * adds no shuffle at all. Order matters at scale: gate before dedup
@@ -66,18 +68,7 @@ object Refinery {
       // docs, drop non-trusted docs whose per-gram log-odds average falls
       // below the threshold. Trusted docs and unscored (zero-token) docs
       // pass — the same never-second-guess-in-domain contract as lmFilter
-      classifierFilter: Option[NbFilter] = None,
-      // materialize each macro-stage's survivor set eagerly
-      // (localCheckpoint) instead of lazily (persist). The DEEPLY composed
-      // configs need this: every stage's anti/semi join embeds the prior
-      // stage's logical subtree several times, so with gate + LM +
-      // classifier + dedup + containment stacked the un-truncated plan
-      // grows EXPONENTIALLY and measurably OOMs the driver's analyzer —
-      // a checkpoint resets each stage's lineage to its materialized
-      // blocks, exactly as a cluster pipeline checkpoints between
-      // curation phases. Lazy persist stays the default: single-extra-
-      // stage configs (q169/q186/q208) don't pay the eager write
-      checkpointStages: Boolean = false)
+      classifierFilter: Option[NbFilter] = None)
 
   /** CCNet LM-stage parameters: `trainPredicateSql` selects the trusted
     * in-domain slice (e.g. "lang = 'en'"), `tailPermille` the scored-pool
@@ -112,16 +103,11 @@ object Refinery {
     * start_tok, chunk_len) over the gated, deduped (exact + near-dup +
     * optional containment), capped corpus. */
   def refine(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    // shared-subtree persists (the graft.ops.Caching contract — harnesses
-    // reclaim via releaseAll): the gate projection feeds every corpus pass
-    // of the dedup stage (tokenize-heavy under the gopher rules), and the
-    // near-dup survivor set feeds the containment stage (grams + anti-join)
-    // and the cap/chunk tail — without these the whole LSH/closure pipeline
-    // re-runs once per downstream branch (measured 48 s → ~15 s for the
-    // containment refinery at sf0.1)
-    val mat: DataFrame => DataFrame =
-      if (cfg.checkpointStages) _.localCheckpoint(true) else _.persist()
-    val gated = mat(gate(docs, cfg))
+    // stage leaves (Caching contract, harnesses releaseAll): the gated docs
+    // feed every dedup corpus pass, the near-dup survivors feed containment
+    // and the cap/chunk tail — unpersisted, the LSH/closure pipeline re-runs
+    // per branch (48 s → ~15 s for the containment refinery at sf0.1)
+    val gated = stage(gate(docs, cfg))
     // CCNet LM stage between gate and dedup (arXiv:1911.00359's order —
     // perplexity is a per-doc fluency signal, so it runs before the
     // corpus-level stages): drop the scored pool's tail tier, pass the
@@ -132,7 +118,7 @@ object Refinery {
             expr(f.trainPredicateSql), headPermille = 0,
             tailPermille = f.tailPermille)
           .filter(col("bucket") === "tail").select("doc_id")
-        mat(gated.join(tail, Seq("doc_id"), "left_anti"))
+        stage(gated.join(tail, Seq("doc_id"), "left_anti"))
       case None => gated
     }
     // learned-classifier stage beside the LM filter (same slot, same
@@ -149,10 +135,10 @@ object Refinery {
         // NULL-lang doc from the floor the stream NbGate applies to it
         val bad = lmKept.filter(!coalesce(expr(f.posPredicateSql), lit(false)))
           .join(low, Seq("doc_id"), "left_semi").select("doc_id")
-        mat(lmKept.join(bad, Seq("doc_id"), "left_anti"))
+        stage(lmKept.join(bad, Seq("doc_id"), "left_anti"))
       case None => lmKept
     }
-    val deduped = mat(Dedup.dedupCorpusShingle(clfKept, cfg.nearDupThreshold,
+    val deduped = stage(Dedup.dedupCorpusShingle(clfKept, cfg.nearDupThreshold,
       cfg.dedupNumPerms, cfg.dedupBands))
     // containment AFTER near-dup: Jaccard clusters collapse the mutual
     // near-copies first, then the directional stage drops embedded quotes

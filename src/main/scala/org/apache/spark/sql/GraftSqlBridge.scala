@@ -10,17 +10,14 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Truncate a DataFrame's LOGICAL lineage to a flat `LogicalRDD` node.
-    *
-    * Iterative DataFrame loops (e.g. connected components) otherwise build a
-    * logical tree that references the previous round's tree several times, so
-    * Catalyst re-analyzes an exponentially growing plan every round even
-    * though execution reads the previous round from cache. This is the same
-    * internal move `Dataset.checkpoint` makes — but WITHOUT writing data or
-    * persisting anything: the returned frame's physical scan is the source
-    * frame's executed plan (cache-substituted, since a fresh QueryExecution
-    * is created here after any `persist` call), exposed as a single leaf.
-    * Laziness is preserved; no job is triggered. */
+  /** Truncate a DataFrame's LOGICAL lineage to a flat `LogicalRDD` node —
+    * the internal move of `Dataset.checkpoint`, without writing data. A
+    * plan that references a persisted frame several times (a connected-
+    * components round, a refinery stage) would otherwise re-analyze that
+    * frame's whole tree at every reference. The leaf's physical scan is the
+    * source's executed plan, cache-substituted (a fresh QueryExecution is
+    * made here after any `persist`). Under AQE building it runs the
+    * source's shuffle stages and cache fill here; with AQE off it is lazy. */
   def flattenLineage(df: DataFrame): DataFrame = {
     val c = df.asInstanceOf[classic.Dataset[Row]]
     // fresh QueryExecution so a persist() issued after `df` was constructed

@@ -300,8 +300,7 @@ object BenchProbe {
                     tailPermille = 300)),
                   classifierFilter = Some(Refinery.NbFilter(
                     "lang = 'en'", "lang <> 'en'", minAvgMicronats = 0L)),
-                  containment = true, checkpointStages = true,
-                  dedupNumPerms = 32, dedupBands = 16))
+                  containment = true, dedupNumPerms = 32, dedupBands = 16))
               chunks.count(): Unit
             }
             snap223(s"q223/survivors-write#$it") {

@@ -234,20 +234,35 @@ class PlanAuditSpec extends SparkSpec {
     * parquet source. Recurses into AQE wrappers and into each DISTINCT
     * cached relation exactly once (a persisted subtree's scan runs once at
     * cache fill no matter how many InMemoryTableScans read it), and into
-    * subquery plans. This is the audit the Caching contract's shared-subtree
-    * mode points at: an operator whose scaladoc claims "one corpus pass"
-    * gets its claim pinned here, so the claim can't silently drift (q163's
-    * ReuseExchange claim survived two rounds false before this existed). */
+    * subquery plans. A stage leaf ([[graft.ops.Caching.stage]]) is an RDD
+    * scan whose plan is gone, so behind it the walk follows the RDD
+    * lineage (shuffle dependencies included) and counts each distinct file
+    * scan RDD over `table` once. This is the audit the Caching contract's
+    * shared-subtree mode points at: an operator whose scaladoc claims "one
+    * corpus pass" gets its claim pinned here, so the claim can't silently
+    * drift (q163's ReuseExchange claim survived two rounds false before
+    * this existed). */
   private def corpusScans(q: String, table: String): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
     // start from a clean cache: a stale (already-materialized) entry from an
     // earlier test would alias the operator's persist with a plan of opaque
     // query stages and hide the scan from the walk
     graft.ops.Caching.releaseAll(spark)
     val df = SparkEntry.queries(q)(spark, d)
     val seenCaches = scala.collection.mutable.Set[AnyRef]()
+    val seenRdds = scala.collection.mutable.Set[Int]()
+    def lineage(r: RDD[_]): Int =
+      if (!seenRdds.add(r.id)) 0
+      else (r match {
+        case f: FileScanRDD =>
+          if (f.filePartitions.exists(_.files.exists(
+            _.urlEncodedPath.contains(table)))) 1 else 0
+        case _ => 0
+      }) + r.dependencies.map(dep => lineage(dep.rdd)).sum
     def walk(p: SparkPlan): Int = {
       val self = p match {
         case f: FileSourceScanExec =>
@@ -258,6 +273,7 @@ class PlanAuditSpec extends SparkSpec {
         case im: InMemoryTableScanExec =>
           if (seenCaches.add(im.relation.cachedPlan)) walk(im.relation.cachedPlan)
           else 0
+        case leaf: RDDScanExec => lineage(leaf.rdd)
         case _ => 0
       }
       self + p.children.map(walk).sum + p.subqueries.map(walk).sum
@@ -327,6 +343,37 @@ class PlanAuditSpec extends SparkSpec {
     // by a corpus re-join again
     assert(corpusScans("q192_hard_negatives", "embeddings") === 2)
     assert(corpusScans("q194_knn_graph", "embeddings") === 2)
+  }
+
+  test("refinery plans stay under 64 kB, no cached relation inside another") {
+    // every refinery stage hands on a flat leaf (Caching.stage); as
+    // persisted plans the stages nested, and q186 printed 0.49 MB. Built at
+    // sf0.01, the scale Verify gates on
+    import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    def cacheScans(p: SparkPlan): Int = (p match {
+      case a: AdaptiveSparkPlanExec => cacheScans(a.executedPlan)
+      case st: QueryStageExec => cacheScans(st.plan)
+      case _: InMemoryTableScanExec => 1
+      case _ => 0
+    }) + p.children.map(cacheScans).sum + p.subqueries.map(cacheScans).sum
+    val rows = graft.queries.QueryRegistry.all.select("q169,q186,q187,q208")
+    assert(rows.size === 4)
+    val faults = rows.flatMap { row =>
+      graft.ops.Caching.releaseAll(spark)
+      try {
+        val df = row.run(spark, d.replace("sf0.001", "sf0.01"))
+        val bytes = df.queryExecution.explainString(FormattedMode)
+          .getBytes("UTF-8").length
+        val nested = df.queryExecution.withCachedData.collectWithSubqueries {
+          case im: InMemoryRelation if cacheScans(im.cachedPlan) > 0 => im
+        }.size
+        Option.when(bytes > 64 * 1024)(s"${row.name}: plan is $bytes bytes") ++
+          Option.when(nested > 0)(s"${row.name}: $nested cached plans read a cache")
+      } finally graft.ops.Caching.releaseAll(spark)
+    }
+    assert(faults.isEmpty)
   }
 
   test("boilerplate score joins hashes, broadcasts the frequent set") {

@@ -30,12 +30,13 @@ class RefinerySpec extends SparkSpec {
     }
   }
 
-  test("checkpointStages: the fully composed refinery equals the lazy-persist one") {
-    import org.apache.spark.sql.functions._
+  test("the fully composed refinery gives the pinned chunk rows") {
     // all five stages firing at once (gate + LM + classifier + near-dup +
     // containment) — the config whose un-truncated composed plan measurably
-    // OOMs the analyzer at corpus scale; eager stage checkpoints must be a
-    // pure execution-strategy change, never a semantic one
+    // OOMs the analyzer at corpus scale. The rows are the ones the lazy-
+    // persist and the eager-checkpoint refinery both gave before every
+    // stage became a flat leaf: how stages hand off changes execution,
+    // never rows
     val trusted = (1 to 6).map(i =>
       DocRow(i.toLong, "the quick brown fox jumps over the lazy dog " +
         words("pad", 15), "en", "wiki", 0))
@@ -53,9 +54,9 @@ class RefinerySpec extends SparkSpec {
       classifierFilter = Some(Refinery.NbFilter("lang = 'en'", "lang <> 'en'",
         minAvgMicronats = -2000000L)),
       containment = true)
-    def rows(c: Refinery.Config) = Refinery.refine(docs, c).collect()
+    val rows = Refinery.refine(docs, cfg).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(identity).toSeq
-    assert(rows(cfg.copy(checkpointStages = true)) === rows(cfg))
+    assert(rows === Seq((1L, 24, 0), (21L, 24, 0)))
   }
 
   test("lmFilter drops exactly the standalone tail tier; the trusted slice always passes") {

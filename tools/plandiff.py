@@ -26,19 +26,24 @@ pays that job. Dumps of different row lists compare line for line.
 
 A query with two or more DISTINCT aggregates over different columns (the
 `countDistinct(frame_a)`, `countDistinct(frame_b)` pair in
-`MediaDedup.videoContainment`, behind q231, q248 and q276) is rewritten by
+`MediaDedup.videoContainment`, behind q231, q248 and q276; q64's
+`countDistinct(l_partkey)` and `sum(DISTINCT l_quantity)`) is rewritten by
 Spark's RewriteDistinctAggregates into an Expand with one projection per
-distinct group and a `gid` column. Spark numbers the groups, and orders
-the distinct columns in every list downstream of the Expand, in the
-iteration order of a hash map keyed by expression ids. So the same
+distinct group and a `gid` column; regular aggregates beside them (q64's)
+ride in group 0 as columns after `gid`. Spark numbers the groups, and
+orders the distinct columns in every list downstream of the Expand, in
+the iteration order of a hash map keyed by expression ids. So the same
 commit can dump `[.., frame_a, null, 1], [.., null, frame_b, 2]` in one
 run and `[.., frame_b, null, 1], [.., null, frame_a, 2]` in another,
 depending on how many expression ids earlier rows used. Before comparing,
 a dump with exactly one such Expand is put in one canonical order: the
-distinct columns sorted by name, the groups renumbered to match, on the
-Expand line and on every line that carries `gid`. Only that permutation
-is undone; any other change to those lines still shows. A dump with two
-or more such Expands is left as it is.
+distinct columns sorted by name and the groups renumbered to match, on
+the Expand line; on every line that carries `gid`, the groups renumbered
+and, in each bracketed or parenthesized list, the items that name one
+distinct column each (`l_quantity#N`, or a key wrapped around it) put in
+that column order. Only that permutation is undone; any other change to
+those lines still shows. A dump with two or more such Expands is left as
+it is.
 
 Prints one line per row, `identical` or `differs`, and under each
 differing row the masked lines that differ (unified diff, no context).
@@ -110,30 +115,81 @@ def unbracket(s):
 
 
 def distinct_expand(line):
-    """(projections, output) of a RewriteDistinctAggregates Expand line."""
+    """(projections, output, gid index) of a RewriteDistinctAggregates
+    Expand line. The output holds the group-by columns, the distinct
+    columns, `gid`, then any regular-aggregate columns."""
     if not line.startswith("Arguments: ["):
         return None
     parts = split_top(line[len("Arguments: "):])
     if len(parts) != 2:
         return None
     projs, out = unbracket(parts[0]), unbracket(parts[1])
-    if not projs or not out or not out[-1].startswith("gid#"):
+    if not projs or not out:
+        return None
+    gid = next((j for j, c in enumerate(out) if c.startswith("gid#")), None)
+    if gid is None:
         return None
     projs = [unbracket(p) for p in projs]
-    if any(p is None or len(p) != len(out) or not p[-1].isdigit() for p in projs):
+    if any(p is None or len(p) != len(out) or not p[gid].isdigit() for p in projs):
         return None
-    return projs, out
+    return projs, out, gid
 
 
 GID_EQ = re.compile(r"(gid#N = )(\d+)")
+
+
+def names(item, cols):
+    """The columns of `cols` that `item` refers to."""
+    return {c for c in cols if re.search(r"(?<![\w#])%s(?![\w#])" % re.escape(c), item)}
+
+
+def sorted_lists(line, cols):
+    """`line` with the items of every bracketed or parenthesized list that
+    refer to one column of `cols` each, one item per column, put in the
+    columns' name order. Every other item keeps its place."""
+    def group(i):
+        close = {"(": ")", "[": "]"}[line[i]]
+        items, cur, j = [], [], i + 1
+        while j < len(line) and line[j] != close:
+            if line[j] in "([":
+                text, j = group(j)
+                cur.append(text)
+            else:
+                if line[j] == ",":
+                    items.append("".join(cur))
+                    cur = []
+                else:
+                    cur.append(line[j])
+                j += 1
+        if j == len(line):  # unclosed: leave the rest as it is
+            return line[i:], j
+        items.append("".join(cur))
+        refs = [names(it, cols) for it in items]
+        at = [k for k, r in enumerate(refs) if len(r) == 1]
+        if sorted(next(iter(refs[k])) for k in at) == sorted(cols):
+            moved = sorted((items[k].strip() for k in at),
+                           key=lambda it: next(iter(names(it, cols))))
+            for k, it in zip(at, moved):
+                items[k] = items[k][:len(items[k]) - len(items[k].lstrip())] + it
+        return line[i] + ",".join(items) + close, j + 1
+
+    out, i = [], 0
+    while i < len(line):
+        if line[i] in "([":
+            text, i = group(i)
+            out.append(text)
+        else:
+            out.append(line[i])
+            i += 1
+    return "".join(out)
 
 
 def canonical_distinct_groups(lines):
     hits = [(i, e) for i, e in ((i, distinct_expand(l)) for i, l in enumerate(lines)) if e]
     if len(hits) != 1:
         return lines
-    at, (projs, out) = hits[0]
-    slots = [j for j in range(len(out) - 1) if any(p[j] == "null" for p in projs)]
+    at, (projs, out, gid) = hits[0]
+    slots = [j for j in range(gid) if any(p[j] == "null" for p in projs)]
     order = sorted(slots, key=lambda j: out[j])
     if len({out[j] for j in slots}) != len(slots):
         return lines
@@ -145,12 +201,19 @@ def canonical_distinct_groups(lines):
             row[j] = v
         return row
 
-    groups = sorted((p for p in projs if p[-1] != "0"), key=lambda p: reslot(p)[:-1])
-    renum = {p[-1]: str(k + 1) for k, p in enumerate(groups)}
-    new_projs = sorted((reslot(p)[:-1] + [renum.get(p[-1], p[-1])] for p in projs),
-                       key=lambda p: int(p[-1]))
-    old_seq = ", ".join(out[j] for j in slots)
-    new_seq = ", ".join(out[j] for j in order)
+    def key(p):
+        return [v for j, v in enumerate(reslot(p)) if j != gid]
+
+    groups = sorted((p for p in projs if p[gid] != "0"), key=key)
+    renum = {p[gid]: str(k + 1) for k, p in enumerate(groups)}
+
+    def renumbered(p):
+        p = reslot(p)
+        p[gid] = renum.get(p[gid], p[gid])
+        return p
+
+    new_projs = sorted((renumbered(p) for p in projs), key=lambda p: int(p[gid]))
+    cols = [out[j] for j in slots]
     result = []
     for i, line in enumerate(lines):
         if i == at:
@@ -158,7 +221,7 @@ def canonical_distinct_groups(lines):
                 ", ".join("[%s]" % ", ".join(p) for p in new_projs),
                 ", ".join(reslot(out)))
         elif "gid#N" in line:
-            line = line.replace(old_seq, new_seq)
+            line = sorted_lists(line, cols)
             line = GID_EQ.sub(lambda m: m.group(1) + renum.get(m.group(2), m.group(2)), line)
         result.append(line)
     return result
