@@ -21,16 +21,6 @@ object LocalSession {
     // offset windows — by design, not data-sized) can push the final JSON
     // line out of it. Silence that one logger; everything else stays at WARN.
     Configurator.setLevel("org.apache.spark.sql.execution.window", Level.ERROR)
-    // Same hygiene for the localCheckpoint-release lifecycle: the callers'
-    // Caching.releaseAll unpersists each query's eagerly-materialized
-    // localCheckpoint results AFTER their only consumer finished, so Spark's
-    // "locally checkpointed ... cannot be recomputed after unpersisting"
-    // warning is pure noise here, and at suite scale it floods the tail by
-    // the hundreds. It cannot hide a real bug: a released checkpoint that
-    // WERE re-evaluated fails loudly (lineage is truncated), it does not go
-    // quietly wrong. The logger is the concrete RDD class; localCheckpoint
-    // binds to MapPartitionsRDD.
-    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 }

@@ -177,22 +177,17 @@ object DataGen {
     * customer), payment/status categorical draws, item count with the
     * reference's [0.50,.25,.15,.07,.02,.01] mix, Zipf-popular DISTINCT
     * products per order, quantity/discount mixes, line totals rounded at
-    * 2 dp and total_amount their sum. Returns (orders, order_items).
-    * `persistShared` caches the scored item rows BOTH outputs derive from,
-    * so consuming orders and items together (e.g. [[writeCsvDataset]]) pays
-    * the generation cost once — the caller owns the cache lifetime. */
-  def ordersAndItems(spark: SparkSession, cfg: Config = Config(),
-                     persistShared: Boolean = false): (DataFrame, DataFrame) = {
-    val (orders, items, _) = ordersItemsShared(spark, cfg, persistShared)
+    * 2 dp and total_amount their sum. Returns (orders, order_items). */
+  def ordersAndItems(spark: SparkSession, cfg: Config = Config()): (DataFrame, DataFrame) = {
+    val (orders, items, _) = ordersItemsShared(spark, cfg)
     (orders, items)
   }
 
   /** [[ordersAndItems]] plus the shared scored-item frame BOTH outputs
     * derive from, so a caller consuming both (e.g. [[writeCsvDataset]]) can
-    * persist-once and release exactly that frame afterwards instead of
-    * clearing the whole session cache. */
-  def ordersItemsShared(spark: SparkSession, cfg: Config = Config(),
-                        persistShared: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+    * persist exactly that frame and pay the generation cost once. */
+  def ordersItemsShared(spark: SparkSession,
+                        cfg: Config = Config()): (DataFrame, DataFrame, DataFrame) = {
     // the item-count mix covers 6 basket sizes (generate_data.py:262); a
     // wider configured range would silently zip away the extra sizes
     require(cfg.maxItems - cfg.minItems + 1 <= 6,
@@ -243,20 +238,19 @@ object DataGen {
       .select(col("order_id"), col("pos"), col("product_id"), col("quantity"),
         round(col("price") * (lit(1.0) - col("discount")), 2).as("unit_price"))
       .withColumn("line_total", round(col("quantity") * col("unit_price"), 2))
-    val shared = if (persistShared) items.persist() else items
     // stable global item id: (order_id, pos) is unique; the dense
     // sequential id of the reference is an artifact of its row loop — a
     // deterministic composite key is the distributed equivalent
-    val orderItems = shared.select(
+    val orderItems = items.select(
       (col("order_id") * cfg.maxItems + col("pos")).as("order_item_id"),
       col("order_id"), col("product_id"), col("quantity"),
       col("unit_price"), col("line_total"))
-    val totals = shared.groupBy("order_id")
+    val totals = items.groupBy("order_id")
       .agg(round(sum(col("line_total")), 2).as("total_amount"))
     val orders = base.join(totals, Seq("order_id"))
       .select(col("order_id"), col("customer_id"), col("order_date"),
         col("total_amount"), col("payment_type"), col("status"))
-    (orders, orderItems, shared)
+    (orders, orderItems, items)
   }
 
   /** Write the full raw dataset as headered CSV directories + the metadata
@@ -275,14 +269,14 @@ object DataGen {
         .csv(s"$dir/$name.csv")
     csv(customers(spark, cfg), "customers")
     csv(products(spark, cfg), "products")
-    val (orders, items, shared) = ordersItemsShared(spark, cfg, persistShared = true)
-    try {
+    val (orders, items, shared) = ordersItemsShared(spark, cfg)
+    // persisting the shared frame after both outputs were built is enough:
+    // each write's plan picks up the cache entry when it runs. The scope
+    // releases exactly that entry — the caller's own caches stay untouched
+    graft.ops.Caching.scoped { scope =>
+      scope.persist(shared)
       csv(items, "order_items")
       csv(orders, "orders")
-    } finally {
-      // release exactly the cache this call created — unrelated caches the
-      // caller holds stay untouched
-      shared.unpersist(blocking = false)
     }
     Ingest.writeManifest(spark, s"$dir/metadata.json",
       Map("customers" -> cfg.nCustomers, "products" -> cfg.nProducts,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal.{Containers, MediaRow, perDocId, perMedia}
+import graft.ops.Caching
 import graft.text.Dedup
 
 /** Perceptual near-duplicate detection for decoded media — the image/audio
@@ -213,7 +214,7 @@ object MediaDedup {
   def imageNearDupsOrientationInvariant(media: Dataset[MediaRow],
                                         maxHamming: Int = 3,
                                         bands: Int = 4): DataFrame =
-    // cache lifecycle: see imageNearDups
+    // materialized result, release with Caching.release: see imageNearDups
     bandedNearDups(imageCanonicalHash(media), "chash", maxHamming, bands)
 
   /** Derive the 56-bit difference hash from filled 8×8 grid accumulators:
@@ -329,31 +330,27 @@ object MediaDedup {
     *
     * Cache lifecycle (shared by [[audioNearDups]] and
     * [[imageNearDupsOrientationInvariant]]): the banded self-join reads
-    * the fingerprint frame twice, and an unpersisted frame re-runs the
+    * the fingerprint frame twice, and an uncached frame re-runs the
     * WHOLE decode chain once per join side (measured 2× on the 64×64
-    * tri-format corpus — decode dominates there), so the frame is
-    * persisted, the pair result MATERIALIZES eagerly inside the operator
-    * (pairs are candidate-grain, far smaller than decoded fingerprints),
-    * and the persist is released before returning — repeated library
-    * calls leak nothing. The returned frame is bound to its own
-    * materialized blocks; [[graft.ops.Caching.release]] reclaims it. */
+    * tri-format corpus — decode dominates there), so the fingerprints are
+    * a scoped interim and the pair result (candidate-grain, far smaller
+    * than decoded fingerprints) is materialized before the scope releases
+    * them — repeated library calls leak nothing, and
+    * [[graft.ops.Caching.release]] reclaims the result. */
   def imageNearDups(media: Dataset[MediaRow], maxHamming: Int = 3,
                     bands: Int = 4): DataFrame =
     bandedNearDups(imageDHash(media), "dhash", maxHamming, bands)
 
   /** Shared banding + cache lifecycle of the three near-dup operators:
-    * persist fingerprints → banded pairs → eager materialize → release. */
+    * scoped fingerprints → banded pairs → materialized result. */
   private def bandedNearDups(fingerprints: DataFrame, fpCol: String,
-                             maxHamming: Int, bands: Int): DataFrame = {
-    val fp = fingerprints.persist()
-    try {
-      Dedup.hammingBandPairs(fp, fpCol, FingerprintBits, maxHamming, bands,
-          idCol = "media_id")
+                             maxHamming: Int, bands: Int): DataFrame =
+    Caching.scoped { scope =>
+      Caching.materialize(Dedup.hammingBandPairs(scope.persist(fingerprints),
+          fpCol, FingerprintBits, maxHamming, bands, idCol = "media_id")
         .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
-          col("hamming"))
-        .localCheckpoint(true)
-    } finally graft.ops.Caching.release(fp)
-  }
+          col("hamming")))
+    }
 
   /** 56-bit energy-contour fingerprint of one PCM16 WAV clip: split the
     * interleaved int16 sample stream into [[AudioWindows]] windows (sample
@@ -414,7 +411,7 @@ object MediaDedup {
     * WAV-side twin of [[imageNearDups]], same banding machinery. */
   def audioNearDups(media: Dataset[MediaRow], maxHamming: Int = 3,
                     bands: Int = 4): DataFrame =
-    // cache lifecycle: see imageNearDups
+    // materialized result, release with Caching.release: see imageNearDups
     bandedNearDups(audioFingerprint(media), "afp", maxHamming, bands)
 
   /** ABSOLUTE-window energies (window w = the `windowSamples` samples

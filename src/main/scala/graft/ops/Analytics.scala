@@ -644,40 +644,35 @@ object Analytics {
     *
     * CACHE LIFETIME ([[graft.ops.Caching]] contract): the UnionLoop
     * re-reads the edge table every iteration (plus the seed subquery), so
-    * `pairs` is persisted here, the view is registered over a flattened
+    * `pairs` is a scoped interim, the view is registered over a flattened
     * lineage leaf (so dropping it cannot cascade-evict the persist), and
-    * the RESULT is materialized eagerly — after which the view is dropped
-    * and the pairs persist released inside this call. The only surviving
-    * cache entry is the returned frame itself; release it with
+    * the RESULT is materialized — after which the view is dropped and the
+    * pairs persist released inside this call. The only surviving cache
+    * entry is the returned frame itself; release it with
     * [[graft.ops.Caching.release]] when done. */
   def reachableParts(spark: org.apache.spark.sql.SparkSession,
-                     pairs: DataFrame, maxHops: Int = 3): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val view = s"graft_reach_pairs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    // the view's plan is a LogicalRDD leaf reading p's cache — its catalog
-    // identity is disjoint from p's cache entry, so dropTempView's
-    // cascading uncache can't reach (and evict) the persist we still need
-    org.apache.spark.sql.GraftSqlBridge.flattenLineage(p)
-      .createOrReplaceTempView(view)
-    val res = spark.sql(
-      s"""WITH RECURSIVE e AS (
-         |  SELECT part_a AS src, part_b AS dst FROM $view
-         |  UNION ALL
-         |  SELECT part_b AS src, part_a AS dst FROM $view
-         |), r(part, dist) AS (
-         |  SELECT (SELECT min(part_a) FROM $view), 0
-         |  UNION ALL
-         |  SELECT e.dst, r.dist + 1 FROM r JOIN e ON e.src = r.part
-         |  WHERE r.dist < $maxHops
-         |)
-         |SELECT part, min(dist) AS hops FROM r GROUP BY part""".stripMargin)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    res.count() // materialize while the pairs cache is alive
-    spark.catalog.dropTempView(view)
-    p.unpersist(blocking = false)
-    res
-  }
+                     pairs: DataFrame, maxHops: Int = 3): DataFrame =
+    Caching.scoped { scope =>
+      val view = s"graft_reach_pairs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      // the view's plan is a LogicalRDD leaf reading the persist — its
+      // catalog identity is disjoint from the persist's cache entry, so
+      // dropTempView's cascading uncache can't reach (and evict) it
+      org.apache.spark.sql.GraftSqlBridge.flattenLineage(scope.persist(pairs))
+        .createOrReplaceTempView(view)
+      try Caching.materialize(spark.sql(
+        s"""WITH RECURSIVE e AS (
+           |  SELECT part_a AS src, part_b AS dst FROM $view
+           |  UNION ALL
+           |  SELECT part_b AS src, part_a AS dst FROM $view
+           |), r(part, dist) AS (
+           |  SELECT (SELECT min(part_a) FROM $view), 0
+           |  UNION ALL
+           |  SELECT e.dst, r.dist + 1 FROM r JOIN e ON e.src = r.part
+           |  WHERE r.dist < $maxHops
+           |)
+           |SELECT part, min(dist) AS hops FROM r GROUP BY part""".stripMargin))
+      finally spark.catalog.dropTempView(view)
+    }
 
   /** Lag-`lagDays` autocorrelation of the daily revenue series — the
     * weekly-seasonality detector (lag 7 near 1 = strong weekly cycle).

@@ -1,22 +1,33 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 
-/** Explicit cache lifecycle for graft operators.
+/** Explicit cache lifecycle for graft operators. Every persist lives in
+  * the SQL cache manager (`Dataset.persist`) — never in raw RDD storage —
+  * so session-level tooling (`spark.catalog.clearCache()`) can always
+  * reclaim it. Three kinds of entry exist:
   *
-  * A few operators are iterative or multi-consumer and must materialize
-  * intermediate state ([[Graph.connectedComponents]], [[Graph.triangleCount]],
-  * [[Analytics.reachableParts]]). Their contract is uniform:
-  *
-  *   - every persist they create lives in the SQL cache manager
-  *     (`Dataset.persist`) — never in raw RDD storage — so session-level
-  *     tooling (`spark.catalog.clearCache()`) can always reclaim it;
-  *   - all INTERMEDIATE persists are released inside the operator as soon as
-  *     their successor materializes;
-  *   - when the RESULT itself must stay cached (iterative lineage would
-  *     otherwise recompute the whole loop per action), the returned Dataset
-  *     is bound directly to that cache entry, and the caller releases it
-  *     with [[release]] when done — no hidden state, no footnotes;
+  *   - SCOPED INTERIMS ([[Scope]], opened by [[scoped]]): state an
+  *     operator or a micro-batch reads several times while it runs. The
+  *     scope releases each one, newest first, when its body exits —
+  *     normally or by a throw.
+  *   - MATERIALIZED RESULTS ([[materialize]]): an eager result that must
+  *     stay cached (iterative lineage would otherwise recompute a whole
+  *     loop per action, or a chain stage its whole prefix). The returned
+  *     frame is a flat leaf that is its own cache entry, so releasing the
+  *     interims it was built from never re-plans it, its plan never nests
+  *     a cached plan (a chain of nested `InMemoryRelation`s printed 3.27 MB
+  *     on q186), and two equal results never share an entry. The caller
+  *     releases it with [[release]]. Operators in this mode:
+  *     [[Graph.connectedComponents]], [[Graph.pageRankInt]],
+  *     [[Graph.triangleCount]], [[Graph.triangleCountIdOrdered]],
+  *     [[Analytics.reachableParts]],
+  *     [[graft.text.TextFeatures.tfidfEmbeddingsPortable]], the
+  *     [[graft.multimodal.MediaDedup]] near-dup pair operators, and the
+  *     stages of [[graft.text.Refinery.refine]] and [[graft.text.Dedup]]'s
+  *     exact survivors and containment gram tables.
   *   - SHARED-SUBTREE persists: a lazily-returned result whose plan reads
   *     one aggregate from several branches persists that aggregate inside
   *     the operator (ReuseExchange does NOT merge the re-planned subtrees —
@@ -35,44 +46,59 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
   *     fingerprint table — the pair stage and the label join-back both
   *     read it; unpersisted, every decode runs twice).
   *     PlanAuditSpec pins the text operators' corpus-scan counts.
-  *   - STAGE-LEAF persists ([[stage]]): each stage of a chain hands its
-  *     persisted result on as a flat leaf, since an `InMemoryRelation`
-  *     prints its whole cached plan and a chain of them nests (q186 printed
-  *     3.27 MB executed). Sites: the [[graft.text.Refinery.refine]] stages,
-  *     [[graft.text.Dedup]]'s exact survivors and containment gram tables.
-  *     Release the PERSISTED frame (`stage`'s `owner`), never the leaf.
+  *     [[stage]] hands such a persist on as a flat leaf
+  *     ([[graft.text.Refinery.refine]]'s quality gate).
   */
 object Caching {
 
-  /** Persist `df` and return a flat leaf over the entry. Under AQE,
-    * planning the leaf runs the stage and fills the cache at the call
-    * (q182: 0 → 5 build jobs); with AQE off it stays lazy. `owner` gets
-    * the persisted frame, the handle to [[release]]. */
-  def stage(df: DataFrame, owner: Dataset[_] => Unit = _ => ()): DataFrame = {
-    val persisted = df.persist()
-    owner(persisted)
-    GraftSqlBridge.flattenLineage(persisted)
+  /** The frames one span persists, all released when the span exits, so
+    * nothing the span made outlives it. A long-running stream opens one
+    * per micro-batch (there is no harness [[releaseAll]] between them). */
+  final class Scope private[Caching] {
+    private val held = ArrayBuffer.empty[Dataset[_]]
+
+    /** Persist `ds` until the span exits. */
+    def persist[T](ds: Dataset[T]): Dataset[T] = hold(ds.persist())
+
+    /** Release `ds` when the span exits: a result that is already cached
+      * (e.g. [[graft.text.Dedup.clusterPairs]]). */
+    def hold[T](ds: Dataset[T]): Dataset[T] = { held += ds; ds }
+
+    // newest first: uncaching a frame re-plans the still-cached frames
+    // built on it, so those go before their inputs
+    private[Caching] def release(): Unit = held.reverseIterator.foreach(Caching.release)
   }
 
-  /** Release the cache entry backing an operator result. The operators
-    * documented above return Datasets that ARE their cache entry, so this
-    * reclaims everything the call created. Safe on never-persisted frames
+  /** Run `body` with a fresh [[Scope]], released in `finally`. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.release()
+  }
+
+  /** Compute `df` now into a cache entry of its own and return that entry
+    * as a flat leaf: the handle [[release]] takes. Each call makes a
+    * distinct entry, also for equal plans. */
+  def materialize(df: DataFrame): DataFrame = {
+    val leaf = GraftSqlBridge.flattenLineage(df).persist()
+    GraftSqlBridge.fillCache(leaf)
+    leaf
+  }
+
+  /** Persist `df` and return a flat leaf over the entry, filled by the
+    * leaf's first consumer: a narrow stage that [[materialize]] would fill
+    * in a job of its own (the refinery gate: one more build job on q169,
+    * q186, q187 and q208). The leaf is not the entry's handle; the
+    * harnesses' [[releaseAll]] reclaims it. */
+  def stage(df: DataFrame): DataFrame = GraftSqlBridge.flattenLineage(df.persist())
+
+  /** Release the cache entry backing `df`. Safe on never-persisted frames
     * (no-op). */
   def release(df: Dataset[_]): Unit = df.unpersist(blocking = false)
 
   /** Session-wide reclaim: every SQL-cache entry AND every RDD-level
     * persistent block (e.g. from caller-managed GraphX interop via
     * [[Graph.toGraphX]]). Harness/bench hygiene between independent
-    * queries — not for use inside operators.
-    *
-    * Locally-checkpointed results (the eager-materialization lifecycle of
-    * `bandedNearDups` / `tfidfEmbeddingsPortable`) are
-    * RDD-level blocks too and are released here. That is safe by
-    * construction: the harness calls this only BETWEEN queries, after the
-    * query's result was fully consumed (parquet written / counted), and a
-    * released local checkpoint cannot be silently re-evaluated — its
-    * lineage is truncated, so any late consumer fails loudly. The
-    * harnesses suppress Spark's per-RDD release WARN on that basis. */
+    * queries — not for use inside operators. */
   def releaseAll(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

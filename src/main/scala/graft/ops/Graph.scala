@@ -101,135 +101,121 @@ object Graph {
     * O(diameter) (the small-star contraction idea of Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14). All state is
     * Dataset-level persists in the SQL cache manager: every intermediate
-    * round is unpersisted here as soon as its successor materializes, and
-    * the ONLY surviving cache entry is the returned frame itself, so
-    * `result.unpersist()` (or [[graft.ops.Caching.release]]) reclaims
+    * round is released here as soon as its successor materializes, and
+    * the ONLY surviving cache entry is the materialized result
+    * ([[Caching.materialize]]), so [[Caching.release]] on it reclaims
     * everything. An edge set with no edges (no pairs, or only self-loops
     * and nulls) yields an empty (part, component) frame that holds no
-    * cache entry and costs no job beyond the edge count. No RDD-level blocks are created (the prior GraphX
-    * implementation leaked Pregel's internally-persisted vertex/edge/message
-    * RDDs, which `cacheManager.clearCache()` cannot reach).
+    * cache entry and costs no job beyond the edge count. No RDD-level
+    * blocks are created (the prior GraphX implementation leaked Pregel's
+    * internally-persisted vertex/edge/message RDDs, which
+    * `cacheManager.clearCache()` cannot reach).
     *
     * Scale: edges shuffle-partition on the join key each round; rounds are
-    * log-bounded, and `MEMORY_AND_DISK` persists make eviction-triggered
-    * lineage recomputation (the usual iterative-DAG hazard) a disk read
-    * instead of a cascade. This is the operator behind cluster-level dedup
+    * log-bounded, and `MEMORY_AND_DISK` persists (the `persist()` default)
+    * make eviction-triggered lineage recomputation (the usual iterative-DAG
+    * hazard) a disk read instead of a cascade. This is the operator behind cluster-level dedup
     * ([[graft.text.Dedup.dedupCorpusShingle]] uses it on the near-dup pair graph). */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
-                          smallGraphEdgeCap: Long = 1L << 17): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e0 = pairs.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    // undirected closure: each edge in both orientations, self-loops and
-    // null endpoints dropped, deduped so multigraph inputs don't multiply
-    // the per-round join. Partitioned on `src` BEFORE caching so the cached
-    // partitioning satisfies every round's join requirement — the (large)
-    // edge side never re-shuffles; only the (small) label side moves.
-    // both orientations from ONE pass over the (possibly expensive) pair
-    // plan — a union of e0 with its swap would execute that plan twice
-    val edges = e0
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .na.drop().filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count() // materialize once; every round re-reads it
-    if (nEdges == 0L) {
-      edges.unpersist(blocking = false)
-      return pairs.sparkSession
-        .createDataFrame(Seq.empty[(Long, Long)]).toDF("part", "component")
-    }
-    // SMALL-GRAPH FAST PATH: below the cap (≈2 MB of long pairs at the
-    // default), a driver-side union-find with min-root union returns the
-    // IDENTICAL (vertex, min-reachable-id) labeling in ONE job instead of
-    // the loop's ~8 (each round = 2 joins + persist + 2 counts over
-    // 32-partition frames whose per-task scheduling dwarfs the data —
-    // measured ~2.5 s for a 50-edge near-dup graph). The cap is on the
-    // MATERIALIZED edge count, so the decision costs nothing extra and a
-    // billion-edge graph at corpus scale always takes the distributed
-    // loop. The same bounded-driver-state rule as the k-means trainer
-    // (Similarity.trainSample): collect only what a constant bounds.
-    if (nEdges <= smallGraphEdgeCap) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
+                          smallGraphEdgeCap: Long = 1L << 17): DataFrame =
+    Caching.scoped { scope =>
+      val e0 = pairs.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      // undirected closure: each edge in both orientations, self-loops and
+      // null endpoints dropped, deduped so multigraph inputs don't multiply
+      // the per-round join. Partitioned on `src` BEFORE caching so the cached
+      // partitioning satisfies every round's join requirement — the (large)
+      // edge side never re-shuffles; only the (small) label side moves.
+      // both orientations from ONE pass over the (possibly expensive) pair
+      // plan — a union of e0 with its swap would execute that plan twice
+      val edges = scope.persist(e0
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .na.drop().filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")))
+      val nEdges = edges.count() // materialize once; every round re-reads it
+      if (nEdges == 0L)
+        pairs.sparkSession.createDataFrame(Seq.empty[(Long, Long)]).toDF("part", "component")
+      // SMALL-GRAPH FAST PATH: below the cap (≈2 MB of long pairs at the
+      // default), a driver-side union-find with min-root union returns the
+      // IDENTICAL (vertex, min-reachable-id) labeling in ONE job instead of
+      // the loop's ~8 (each round = 2 joins + persist + 2 counts over
+      // 32-partition frames whose per-task scheduling dwarfs the data —
+      // measured ~2.5 s for a 50-edge near-dup graph). The cap is on the
+      // MATERIALIZED edge count, so the decision costs nothing extra and a
+      // billion-edge graph at corpus scale always takes the distributed
+      // loop. The same bounded-driver-state rule as the k-means trainer
+      // (Similarity.trainSample): collect only what a constant bounds.
+      else if (nEdges <= smallGraphEdgeCap) {
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        val rows = edges.collect()
+        rows.foreach { r =>
+          val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+          // min-root union: every tree's root stays its component's min id,
+          // so find(v) IS the loop's min-reachable label
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        // edges carry both orientations, so src alone covers every vertex
+        val verts = rows.map(_.getLong(0)).distinct
+        Caching.materialize(pairs.sparkSession
+          .createDataFrame(verts.map(v => (v, find(v))).toIndexedSeq)
+          .toDF("part", "component"))
+      } else {
+        // round 0 fused into init: label(v) = min(v, min neighbor). Near-dup
+        // components are mostly cliques (all pairs above threshold), which this
+        // single pass already converges — the loop then just confirms.
+        var assign = scope.persist(edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+          .select(col("src").as("v"), least(col("src"), col("mn")).as("component")))
+        var cached: DataFrame = assign // the persisted frame backing `assign`
+        // one propagation round over a (v, prev_c, component) frame: (1)
+        // neighbor-min message pass, then (2) pointer jumping — follow my
+        // label's own label (labels are always vertex ids within the same
+        // component, so the lookup is closed). `prev_c` rides through untouched
+        // so a multi-round chain can count changes against the chain's start.
+        def step(a: DataFrame): DataFrame = {
+          val lbl = a.select(col("v"), col("component"))
+          val nbrMin = edges
+            .join(lbl.select(col("v").as("src"), col("component").as("c")), Seq("src"))
+            .groupBy(col("dst").as("v")).agg(min(col("c")).as("nbr"))
+          val stepped = a.select(col("v"), col("prev_c"), col("component"))
+            .join(nbrMin, Seq("v"), "left")
+            .select(col("v"), col("prev_c"),
+              least(col("component"), coalesce(col("nbr"), col("component"))).as("mid"))
+          stepped.as("s")
+            .join(lbl.select(col("v").as("lv"), col("component").as("lc")).as("l"),
+              col("s.mid") === col("lv"), "left")
+            .select(col("s.v").as("v"), col("s.prev_c").as("prev_c"),
+              least(col("s.mid"), coalesce(col("lc"), col("s.mid"))).as("component"))
+        }
+        var changed = 1L
+        while (changed > 0) {
+          // exactly ONE round per materialization: chaining un-materialized
+          // rounds re-executes the earlier round's joins once per reference
+          // (Spark reuses only identical Exchanges, not arbitrary subplans —
+          // measured ~1.5x slower with two chained rounds per check)
+          val doubled = scope.persist(step(
+              assign.select(col("v"), col("component").as("prev_c"), col("component"))))
+          changed = doubled.filter(col("component") < col("prev_c")).count()
+          Caching.release(cached) // successor is materialized
+          cached = doubled
+          // lineage reset: each round's logical plan references the previous
+          // round's plan three times, so WITHOUT this Catalyst re-analyzes an
+          // exponentially growing tree every round (measured: dominates the
+          // loop's wall clock). Execution still reads the round's cache.
+          assign = org.apache.spark.sql.GraftSqlBridge.flattenLineage(
+            doubled.select(col("v"), col("component")))
+        }
+        Caching.materialize(assign.toDF("part", "component"))
       }
-      val rows = edges.collect()
-      rows.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        // min-root union: every tree's root stays its component's min id,
-        // so find(v) IS the loop's min-reachable label
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
-      // edges carry both orientations, so src alone covers every vertex
-      val verts = rows.map(_.getLong(0)).distinct
-      val out = pairs.sparkSession
-        .createDataFrame(verts.map(v => (v, find(v))).toIndexedSeq)
-        .toDF("part", "component")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      edges.unpersist(blocking = false)
-      return out
     }
-    // round 0 fused into init: label(v) = min(v, min neighbor). Near-dup
-    // components are mostly cliques (all pairs above threshold), which this
-    // single pass already converges — the loop then just confirms.
-    var assign = edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("v"), least(col("src"), col("mn")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cached: DataFrame = assign // the persisted frame backing `assign`
-    // one propagation round over a (v, prev_c, component) frame: (1)
-    // neighbor-min message pass, then (2) pointer jumping — follow my
-    // label's own label (labels are always vertex ids within the same
-    // component, so the lookup is closed). `prev_c` rides through untouched
-    // so a multi-round chain can count changes against the chain's start.
-    def step(a: DataFrame): DataFrame = {
-      val lbl = a.select(col("v"), col("component"))
-      val nbrMin = edges
-        .join(lbl.select(col("v").as("src"), col("component").as("c")), Seq("src"))
-        .groupBy(col("dst").as("v")).agg(min(col("c")).as("nbr"))
-      val stepped = a.select(col("v"), col("prev_c"), col("component"))
-        .join(nbrMin, Seq("v"), "left")
-        .select(col("v"), col("prev_c"),
-          least(col("component"), coalesce(col("nbr"), col("component"))).as("mid"))
-      stepped.as("s")
-        .join(lbl.select(col("v").as("lv"), col("component").as("lc")).as("l"),
-          col("s.mid") === col("lv"), "left")
-        .select(col("s.v").as("v"), col("s.prev_c").as("prev_c"),
-          least(col("s.mid"), coalesce(col("lc"), col("s.mid"))).as("component"))
-    }
-    var changed = 1L
-    while (changed > 0) {
-      // exactly ONE round per materialization: chaining un-materialized
-      // rounds re-executes the earlier round's joins once per reference
-      // (Spark reuses only identical Exchanges, not arbitrary subplans —
-      // measured ~1.5x slower with two chained rounds per check)
-      val doubled = step(
-          assign.select(col("v"), col("component").as("prev_c"), col("component")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      changed = doubled.filter(col("component") < col("prev_c")).count()
-      cached.unpersist(blocking = false) // successor is materialized
-      cached = doubled
-      // lineage reset: each round's logical plan references the previous
-      // round's plan three times, so WITHOUT this Catalyst re-analyzes an
-      // exponentially growing tree every round (measured: dominates the
-      // loop's wall clock). Execution still reads the round's cache.
-      assign = org.apache.spark.sql.GraftSqlBridge.flattenLineage(
-        doubled.select(col("v"), col("component")))
-    }
-    // rebind to a self-contained cache entry: the returned Dataset IS the
-    // persisted plan, so releasing it reclaims all storage this call created
-    val out = assign.toDF("part", "component").persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    cached.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    out
-  }
 
   /** Integer PageRank over an undirected pair/edge table — power iteration
     * in EXACT long arithmetic so the result is deterministic and
@@ -256,40 +242,35 @@ object Graph {
     * [[connectedComponents]]: the returned frame is the only surviving
     * entry; releasing it reclaims everything. */
   def pageRankInt(pairs: DataFrame, srcCol: String, dstCol: String,
-                  iters: Int = 4, scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e0 = pairs.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val edges = e0
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .na.drop().filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    val base = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    base.count() // iters+1 lazy references; fill the cache once, not racily
-    var r = base.select(col("v"), col("outdeg"), lit(scale).as("rank"))
-    for (_ <- 1 to iters) {
-      val inSum = edges
-        .join(r.select(col("v").as("src"),
-          expr("rank div outdeg").as("share")), Seq("src"))
-        .groupBy(col("dst").as("v")).agg(sum(col("share")).as("in_sum"))
-      r = base.join(inSum, Seq("v"), "left")
-        .select(col("v"), col("outdeg"),
-          (lit(15L * scale / 100L) +
-            expr(s"(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
+                  iters: Int = 4, scale: Long = 1000000L): DataFrame =
+    Caching.scoped { scope =>
+      val e0 = pairs.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      val edges = scope.persist(e0
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .na.drop().filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")))
+      edges.count()
+      val base = scope.persist(
+        edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg")))
+      base.count() // iters+1 lazy references; fill the cache once, not racily
+      var r = base.select(col("v"), col("outdeg"), lit(scale).as("rank"))
+      for (_ <- 1 to iters) {
+        val inSum = edges
+          .join(r.select(col("v").as("src"),
+            expr("rank div outdeg").as("share")), Seq("src"))
+          .groupBy(col("dst").as("v")).agg(sum(col("share")).as("in_sum"))
+        r = base.join(inSum, Seq("v"), "left")
+          .select(col("v"), col("outdeg"),
+            (lit(15L * scale / 100L) +
+              expr(s"(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
+      }
+      Caching.materialize(
+        r.select(col("v").as("part"), col("rank").as("rank_micro")))
     }
-    val out = r.select(col("v").as("part"), col("rank").as("rank_micro"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    base.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    out
-  }
 
   /** Frequent co-purchase TRIPLES (3-itemsets): the classic APRIORI prune,
     * then baskets expand to their C(k,3) increasing part triples inside one
@@ -344,24 +325,23 @@ object Graph {
     * [[triangleCountIdOrdered]] (GraphSpec pins it, including on a hub
     * graph). Returns one row: (n_vertices, n_edges, n_triangles). */
   def triangleCount(edges: DataFrame, aCol: String = "part_a",
-                    bCol: String = "part_b"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val und = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // degree agg + orient + counts
+                    bCol: String = "part_b"): DataFrame = Caching.scoped { scope =>
+    // degree agg + orient + counts
+    val und = scope.persist(edges.select(col(aCol).as("a"), col(bCol).as("b")))
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     // orient toward the higher (deg, id) endpoint; carry the dst rank so the
     // wedge join can order a pivot's out-neighbors without re-joining degrees
     val lowFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val oriented = und
+    // wedge sides + closing side
+    val oriented = scope.persist(und
       .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
       .select(
         when(lowFirst, col("a")).otherwise(col("b")).as("src"),
         when(lowFirst, struct(col("db").as("d"), col("b").as("v")))
           .otherwise(struct(col("da").as("d"), col("a").as("v"))).as("dr"))
-      .select(col("src"), col("dr").getField("v").as("dst"), col("dr"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // wedge sides + closing side
+      .select(col("src"), col("dr").getField("v").as("dst"), col("dr")))
     // wedges = ordered pairs of out-neighbors of one pivot; the higher-
     // ranked pair is a triangle iff it is itself an oriented edge
     val tris = oriented.as("e1").join(oriented.as("e2"),
@@ -370,15 +350,10 @@ object Graph {
       .join(oriented.as("e3"),
         col("wa") === col("e3.src") && col("wc") === col("e3.dst"), "left_semi")
     val verts = und.select(explode(array(col("a"), col("b"))).as("v"))
-    val out = tris.agg(count(lit(1)).as("n_triangles"))
+    Caching.materialize(tris.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(und.agg(count(lit(1)).as("n_edges")))
       .crossJoin(verts.agg(countDistinct(col("v")).as("n_vertices")))
-      .select(col("n_vertices"), col("n_edges"), col("n_triangles"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while the interim caches are alive
-    oriented.unpersist(blocking = false)
-    und.unpersist(blocking = false)
-    out
+      .select(col("n_vertices"), col("n_edges"), col("n_triangles")))
   }
 
   /** The id-ordered compact-forward census, kept as the readable reference
@@ -387,28 +362,21 @@ object Graph {
     * Σ deg(v)² (hub-sensitive), which is why the degree-oriented form is
     * the production default. */
   def triangleCountIdOrdered(edges: DataFrame, aCol: String = "part_a",
-                             bCol: String = "part_b"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                             bCol: String = "part_b"): DataFrame = Caching.scoped { scope =>
     // three consumers (wedge join, edge count, vertex count) — persist so an
     // expensive upstream edge derivation (e.g. basket pair generation)
     // materializes once, not three times. [[Caching]] contract: the persist
-    // is released HERE after the 1-row census materializes; the returned
-    // frame is its own (single-row) cache entry.
-    val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // is a scoped interim; the returned 1-row census is materialized.
+    val e = scope.persist(edges.select(col(aCol).as("a"), col(bCol).as("b")))
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
     val tris = wedges.join(e.as("e3"),
       col("wa") === col("e3.a") && col("wc") === col("e3.b"), "left_semi")
     val verts = e.select(explode(array(col("a"), col("b"))).as("v"))
-    val out = tris.agg(count(lit(1)).as("n_triangles"))
+    Caching.materialize(tris.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(e.agg(count(lit(1)).as("n_edges")))
       .crossJoin(verts.agg(countDistinct(col("v")).as("n_vertices")))
-      .select(col("n_vertices"), col("n_edges"), col("n_triangles"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while the edge cache is alive
-    e.unpersist(blocking = false)
-    out
+      .select(col("n_vertices"), col("n_edges"), col("n_triangles")))
   }
 
   /** GraphX interop: the purchase graph as Graph[VD, ED] for iterative

@@ -370,9 +370,9 @@ private[queries] object TextQueries {
     // feature hash, floor-rounded IDF, unnormalized double vectors) makes
     // the whole embedding + cosine top-k bit-reproducible in SQL, so the
     // oracle rebuilds it end to end — no gate needed.
-    // corpus and probes share the TF-IDF lineage — the operator returns an
-    // eagerly materialized frame (localCheckpoint), so both branches read
-    // the same blocks without a second persist here ---
+    // corpus and probes share the TF-IDF lineage — the operator returns a
+    // materialized frame (Caching.materialize), so both branches read the
+    // same cache entry without a second persist here ---
     QuerySpec("q44_tfidf_doc_similarity", { (s, d) =>
       val emb = graft.text.TextFeatures.tfidfEmbeddingsPortable(
         t(s, d, "documents"), numFeatures = 256)

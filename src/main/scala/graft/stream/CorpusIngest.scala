@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ops.Caching
 import graft.tables.{LakeTable, Tables}
 import graft.text.{Dedup, TextStats}
 
@@ -187,9 +188,9 @@ object CorpusIngest {
         scope.hold(Dedup.clusterPairs(inPairs)), "doc_id")
       // in-batch containment (opt-in): drop docs embedded in other batch
       // survivors — the same stage order as the batch refinery. The
-      // TRACKED form hands back the banded stage's internal persists so
+      // TRACKED form hands back the banded stage's materialized leaves so
       // the scope releases them with the rest of the batch.
-      // raw persisted (doc_id, g) grams of the in-batch containment pass:
+      // raw materialized (doc_id, g) grams of the in-batch containment pass:
       // every later gram consumer in this batch (the vs-lake containment
       // probe, the index-maintenance write) works on a SUBSET of these
       // docs, so a semi-join on ids replaces a whole re-tokenize + gram
@@ -205,18 +206,13 @@ object CorpusIngest {
           tracked.result
         case None => jaccardKept
       }
-      // persist + materialize + FLATTEN at the two deep cut points: by
-      // here the logical tree is gate -> exact -> LSH+verify -> closure
-      // -> containment -> re-sign, and the vs-lake stage below issues
-      // ~8 more actions on derivatives of it — each would re-analyze the
-      // whole tree (Catalyst planning, not execution, measured ~46 s of
-      // the 53 s batch-2 wall clock; the data itself is ~100k rows).
-      // flattenLineage rebinds to the materialized cache as a leaf, the
-      // same move connectedComponents makes per round.
-      def cutFlat(df: DataFrame): DataFrame = {
-        val p = scope.persist(df); p.count(): Unit
-        org.apache.spark.sql.GraftSqlBridge.flattenLineage(p)
-      }
+      // materialized flat leaves at the two deep cut points: by here the
+      // logical tree is gate -> exact -> LSH+verify -> closure ->
+      // containment -> re-sign, and the vs-lake stage below issues ~8 more
+      // actions on derivatives of it — each would re-analyze the whole
+      // tree (Catalyst planning, not execution, measured ~46 s of the
+      // 53 s batch-2 wall clock; the data itself is ~100k rows)
+      def cutFlat(df: DataFrame): DataFrame = scope.hold(Caching.materialize(df))
       val indexed = cutFlat(withLshBands(
         batchKept.withColumn("dup_key", Dedup.exactKey(col("text"))),
         batchKept, "doc_id", numPerms, bands, shingleSize))
@@ -262,8 +258,8 @@ object CorpusIngest {
           MicroBatch.land(lake, Dedup.docGrams(missing, shingleSize), gramsTable)
       }
       // novel IS indexed when the lake is empty (first batch) — already
-      // persisted, counted and flattened above; a second cutFlat would
-      // pay one more count job for the identical frame
+      // materialized above; a second cutFlat would pay one more fill job
+      // for the identical frame
       val novelF = if (novel eq indexed) indexed else cutFlat(novel)
       var batchGrams: Option[DataFrame] = None
       val landed0 = containmentThreshold match {

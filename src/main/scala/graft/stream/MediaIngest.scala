@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructType}
 
 import graft.multimodal.{MediaDedup, Multimodal}
+import graft.ops.Caching
 import graft.tables.LakeTable
 import graft.text.Dedup
 
@@ -72,7 +73,7 @@ object MediaIngest {
   /** Generalized whole-item fingerprint ingest batch: any (media_id,
     * dhash) fingerprinter (image dHash, audio contour) gets the same
     * in-batch dedup + lake check + admit pipeline. */
-  private def fingerprintBatch(scope: MicroBatch.Scope, batchDf: DataFrame,
+  private def fingerprintBatch(scope: Caching.Scope, batchDf: DataFrame,
                                lake: LakeTable, table: String,
                                maxHamming: Int, bands: Int,
                                fingerprint: org.apache.spark.sql.Dataset[Multimodal.MediaRow] => DataFrame): Unit = {

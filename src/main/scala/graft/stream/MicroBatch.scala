@@ -1,7 +1,5 @@
 package graft.stream
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -31,38 +29,18 @@ object MicroBatch {
     * the width. */
   val ShuffleWidth = 8
 
-  /** The frames one span persists, all released when the span exits —
-    * normally or by a throw — so a long-running stream holds no cache
-    * entry across micro-batches (there is no harness
-    * [[Caching.releaseAll]] between them). */
-  final class Scope private[MicroBatch] {
-    private val held = ArrayBuffer.empty[Dataset[_]]
-
-    /** Persist `ds` until the span exits. */
-    def persist[T](ds: Dataset[T]): Dataset[T] = hold(ds.persist())
-
-    /** Release `ds` when the span exits: an operator result that is
-      * already cached (e.g. [[graft.text.Dedup.clusterPairs]]). */
-    def hold[T](ds: Dataset[T]): Dataset[T] = { held += ds; ds }
-
-    // newest first: uncaching a frame re-plans the still-cached frames
-    // built on it, so those go before their inputs
-    private[MicroBatch] def release(): Unit =
-      held.reverseIterator.foreach(Caching.release)
-  }
-
   /** Run `body` with [[ShuffleWidth]] shuffles, AQE off and a fresh
-    * [[Scope]]; the session conf is restored and the scope released in
-    * `finally`. The conf flip is session-global, which is safe because a
-    * query's foreachBatch bodies run one at a time. */
-  def sized[T](spark: SparkSession)(body: Scope => T): T = {
+    * [[Caching.Scope]], so a long-running stream holds no cache entry
+    * across micro-batches; the scope is released, then the session conf
+    * restored, in `finally`. The conf flip is session-global, which is
+    * safe because a query's foreachBatch bodies run one at a time. */
+  def sized[T](spark: SparkSession)(body: Caching.Scope => T): T = {
     val conf = Seq("spark.sql.shuffle.partitions" -> ShuffleWidth.toString,
       "spark.sql.adaptive.enabled" -> "false")
     val prev = conf.map { case (k, _) => k -> spark.conf.get(k) }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    val scope = new Scope
-    try body(scope)
-    finally try scope.release() finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Caching.scoped(body)
+    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** Start a stream over `source` that hands each micro-batch to `body`. */

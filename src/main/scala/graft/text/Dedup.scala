@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.ops.Caching
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -186,11 +186,11 @@ object Dedup {
   def containmentNearDups(docs: DataFrame, shingleSize: Int = 3,
                           threshold: Double = 0.5,
                           maxDf: Long = 1000): DataFrame = {
-    // stage leaves (Caching contract): grams feeds the DF census and the
-    // prune; kept feeds sizes + both self-join sides — without the persists
-    // the tokenize/shingle/hash corpus pass re-runs five times
-    val grams = Caching.stage(docGrams(docs, shingleSize))
-    val kept = Caching.stage(keptGrams(grams, maxDf))
+    // materialized leaves (Caching contract): grams feeds the DF census
+    // and the prune; kept feeds sizes + both self-join sides — without
+    // them the tokenize/shingle/hash corpus pass re-runs five times
+    val grams = Caching.materialize(docGrams(docs, shingleSize))
+    val kept = Caching.materialize(keptGrams(grams, maxDf))
     val shared = kept.as("x").join(kept.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -295,30 +295,29 @@ object Dedup {
       sketchK).result
 
   /** [[containmentNearDupsBandedTracked]]'s result triple: the pair table,
-    * the persisted frames behind its stage leaves (the handles to release
-    * after consumption), and the RAW (doc_id, g) gram leaf — exposed so a
+    * its materialized leaves (the handles to release after consumption),
+    * and the RAW (doc_id, g) gram leaf — exposed so a
     * caller that needs grams of a SUBSET of `docs` downstream (the
     * streaming ingest's index maintenance) can semi-join this frame instead
     * of re-tokenizing the corpus (same rows by construction: doc text is
     * immutable within a batch, so grams(subset) == grams(docs) ⋉ ids). */
   private[graft] final case class TrackedContainment(
-      result: DataFrame, caches: Seq[Dataset[_]], rawGrams: DataFrame)
+      result: DataFrame, caches: Seq[DataFrame], rawGrams: DataFrame)
 
-  /** [[containmentNearDupsBanded]] plus its shared-subtree cache entries,
-    * for callers that must release them deterministically once the result
+  /** [[containmentNearDupsBanded]] plus its materialized leaves, for
+    * callers that must release them deterministically once the result
     * is consumed (a long-running streaming query has no harness
     * [[graft.ops.Caching.releaseAll]] hook between micro-batches —
-    * without the handles the per-batch persists accumulate without bound
+    * without the handles the per-batch entries accumulate without bound
     * in executor storage memory). Batch callers keep using the public
     * form; the harness reclaims via releaseAll. */
   private[graft] def containmentNearDupsBandedTracked(
       docs: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5,
       maxDf: Long = 1000, sketchK: Int = 64): TrackedContainment = {
-    val held = Seq.newBuilder[Dataset[_]]
-    val grams = Caching.stage(docGrams(docs, shingleSize), held += _)
-    val kept = Caching.stage(keptGrams(grams, maxDf), held += _)
+    val grams = Caching.materialize(docGrams(docs, shingleSize))
+    val kept = Caching.materialize(keptGrams(grams, maxDf))
     val sketch = bottomKSketch(kept, sketchK)
-    val sizes = Caching.stage(gramSetSizes(kept), held += _)
+    val sizes = Caching.materialize(gramSetSizes(kept))
     // candidates: sketched grams of one doc found in the other's kept set,
     // with the EVIDENCE-COUNT prune (in SOME direction) before the
     // expensive verify
@@ -341,7 +340,7 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
     TrackedContainment(containmentVerdict(shared, sizes, threshold),
-      held.result(), grams)
+      Seq(grams, kept, sizes), grams)
   }
 
   /** Cross-source duplication matrix — which domains copy from which: every
@@ -599,14 +598,14 @@ object Dedup {
   /** The front every end-to-end dedup shares: exact dedup, then the
     * shingle-verified near-dup pairs ([[minhashNearDupsShingle]]) over the
     * survivors, collapsed by [[clusterPairs]]. Returns (exact survivors,
-    * (doc_id, cluster_id) clusters). The survivors are a stage leaf
-    * (Caching contract — harness releaseAll reclaims): the eager closure
+    * (doc_id, cluster_id) clusters). The survivors are a materialized
+    * leaf (Caching contract — harness releaseAll reclaims): the eager closure
     * materializes the whole pair chain over them, and the caller's
     * canonical join reads them again. */
   private def exactThenClusters(docs: DataFrame, threshold: Double,
                                 numPerms: Int, bands: Int,
                                 shingleSize: Int): (DataFrame, DataFrame) = {
-    val exact = Caching.stage(dropExactDups(docs))
+    val exact = Caching.materialize(dropExactDups(docs))
     (exact, clusterPairs(
       minhashNearDupsShingle(exact, numPerms, bands, shingleSize, threshold)))
   }

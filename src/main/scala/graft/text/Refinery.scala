@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.ops.Caching.stage
+import graft.ops.Caching.{materialize, stage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   *   3. per-source cap ([[TextFeatures.perSourceCap]], reproducible sample)
   *   4. fixed-window chunking with stride ([[TextFeatures.chunkPlan]])
   *
-  * Each stage hands its persisted survivors to the next as a flat leaf
-  * ([[graft.ops.Caching.stage]]), so every plan covers one stage. Within a
-  * stage Catalyst plans freely: the gate's predicate runs inside the scan
-  * projection, dedup shuffles 64-bit keys only, the cap moves at most
-  * `maxDocsPerSource` rows per source through its exchange, and chunking
-  * adds no shuffle at all. Order matters at scale: gate before dedup
+  * Each stage hands its survivors to the next as a flat cached leaf
+  * ([[graft.ops.Caching.materialize]]; [[graft.ops.Caching.stage]] for the
+  * gate), so every plan covers one stage.
+  * Within a stage Catalyst plans freely: the gate's predicate runs inside
+  * the scan projection, dedup shuffles 64-bit keys only, the cap moves at
+  * most `maxDocsPerSource` rows per source through its exchange, and
+  * chunking adds no shuffle at all. Order matters at scale: gate before dedup
   * (cheap map first shrinks the shuffle), dedup before the cap (so kept
   * slots aren't wasted on duplicates), chunking last.
   */
@@ -103,10 +104,12 @@ object Refinery {
     * start_tok, chunk_len) over the gated, deduped (exact + near-dup +
     * optional containment), capped corpus. */
   def refine(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    // stage leaves (Caching contract, harnesses releaseAll): the gated docs
-    // feed every dedup corpus pass, the near-dup survivors feed containment
-    // and the cap/chunk tail — unpersisted, the LSH/closure pipeline re-runs
-    // per branch (48 s → ~15 s for the containment refinery at sf0.1)
+    // flat cached leaves (Caching contract, harnesses releaseAll): the
+    // gated docs feed every dedup corpus pass, the near-dup survivors feed
+    // containment and the cap/chunk tail — uncached, the LSH/closure
+    // pipeline re-runs per branch (48 s → ~15 s for the containment
+    // refinery at sf0.1). The gate is a narrow filter, so its leaf fills
+    // in its first consumer's job; every later stage is materialized
     val gated = stage(gate(docs, cfg))
     // CCNet LM stage between gate and dedup (arXiv:1911.00359's order —
     // perplexity is a per-doc fluency signal, so it runs before the
@@ -118,7 +121,7 @@ object Refinery {
             expr(f.trainPredicateSql), headPermille = 0,
             tailPermille = f.tailPermille)
           .filter(col("bucket") === "tail").select("doc_id")
-        stage(gated.join(tail, Seq("doc_id"), "left_anti"))
+        materialize(gated.join(tail, Seq("doc_id"), "left_anti"))
       case None => gated
     }
     // learned-classifier stage beside the LM filter (same slot, same
@@ -135,11 +138,11 @@ object Refinery {
         // NULL-lang doc from the floor the stream NbGate applies to it
         val bad = lmKept.filter(!coalesce(expr(f.posPredicateSql), lit(false)))
           .join(low, Seq("doc_id"), "left_semi").select("doc_id")
-        stage(lmKept.join(bad, Seq("doc_id"), "left_anti"))
+        materialize(lmKept.join(bad, Seq("doc_id"), "left_anti"))
       case None => lmKept
     }
-    val deduped = stage(Dedup.dedupCorpusShingle(clfKept, cfg.nearDupThreshold,
-      cfg.dedupNumPerms, cfg.dedupBands))
+    val deduped = materialize(Dedup.dedupCorpusShingle(clfKept,
+      cfg.nearDupThreshold, cfg.dedupNumPerms, cfg.dedupBands))
     // containment AFTER near-dup: Jaccard clusters collapse the mutual
     // near-copies first, then the directional stage drops embedded quotes
     // the symmetric metric missed — each stage sees only prior survivors

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Caching
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,31 +22,28 @@ object TextFeatures {
     * bit-for-bit — the q44 oracle does. Plan shape: one token explode, two
     * map-combined aggregates (tf, df), a broadcast of the |features|-sized
     * df table, dense assembly per doc. Zero UDFs. */
-  def tfidfEmbeddingsPortable(docs: DataFrame, numFeatures: Int = 256): DataFrame = {
-    // The tokenize + md5-hash explode feeds BOTH the tf branch (shuffle on
-    // (doc_id, feat)) and the df branch (shuffle on feat) — different keys,
-    // so unpersisted the corpus tokenizes twice. r12 (suite of 259)
-    // measured recompute 3.58 s vs persist 3.92 s and shipped the double
-    // tokenize; RE-MEASURED at the r14 suite size (sf0.1 isolation, warm
-    // q43-family predecessor, CPUS=32, three iterations each): recompute
-    // min 2.82 / worst-warm 3.45 / cold 6.27 s vs PERSISTED 2.70 / 3.04 /
-    // 3.04 s — the persist now wins on every axis, and more importantly
-    // removes the contention sensitivity behind q44's bouncing driver
-    // readings (3.37 → 5.07 s across rounds on unchanged code: the second
-    // normalize+tokenize pass doubles the CPU-heavy span that slows under
-    // machine load, where the cached (doc_id, feat) rows do not). The
-    // persist is INTERMEDIATE and released in-function (the bandedNearDups
-    // lifecycle): the result materializes eagerly via localCheckpoint —
-    // doc-grain, far smaller than the (doc × token) explode — so repeated
-    // library calls leak nothing; the returned frame is bound to its own
-    // blocks and [[graft.ops.Caching.release]] reclaims it.
-    val tok = docs.select(col("doc_id"),
-        explode(TextStats.normTokens()).as("tok"))
-      .select(col("doc_id"),
-        pmod(Dedup.portableTokenHash(col("tok")), lit(numFeatures.toLong))
-          .cast("int").as("feat"))
-      .persist()
-    try {
+  def tfidfEmbeddingsPortable(docs: DataFrame, numFeatures: Int = 256): DataFrame =
+    Caching.scoped { scope =>
+      // The tokenize + md5-hash explode feeds BOTH the tf branch (shuffle on
+      // (doc_id, feat)) and the df branch (shuffle on feat) — different keys,
+      // so uncached the corpus tokenizes twice. r12 (suite of 259)
+      // measured recompute 3.58 s vs persist 3.92 s and shipped the double
+      // tokenize; RE-MEASURED at the r14 suite size (sf0.1 isolation, warm
+      // q43-family predecessor, CPUS=32, three iterations each): recompute
+      // min 2.82 / worst-warm 3.45 / cold 6.27 s vs PERSISTED 2.70 / 3.04 /
+      // 3.04 s — the persist now wins on every axis, and more importantly
+      // removes the contention sensitivity behind q44's bouncing driver
+      // readings (3.37 → 5.07 s across rounds on unchanged code: the second
+      // normalize+tokenize pass doubles the CPU-heavy span that slows under
+      // machine load, where the cached (doc_id, feat) rows do not). The
+      // persist is a scoped interim; the doc-grain result, far smaller than
+      // the (doc × token) explode, is materialized, so repeated library calls
+      // leak nothing and [[Caching.release]] reclaims the result.
+      val tok = scope.persist(docs.select(col("doc_id"),
+          explode(TextStats.normTokens()).as("tok"))
+        .select(col("doc_id"),
+          pmod(Dedup.portableTokenHash(col("tok")), lit(numFeatures.toLong))
+            .cast("int").as("feat")))
       val tf = tok.groupBy("doc_id", "feat").agg(count(lit(1)).as("tf"))
       val dft = tok.distinct().groupBy("feat").agg(count(lit(1)).as("df"))
       val m = docs.agg(count(lit(1)).as("m"))
@@ -54,14 +52,12 @@ object TextFeatures {
       val w = tf.join(broadcast(dft), "feat").crossJoin(broadcast(m))
         .select(col("doc_id"), col("feat"),
           (col("tf").cast("double") * idf).as("w"))
-      w.groupBy("doc_id")
+      Caching.materialize(w.groupBy("doc_id")
         .agg(map_from_entries(collect_list(struct(col("feat"), col("w")))).as("mp"))
         .select(col("doc_id").as("vec_id"),
           transform(sequence(lit(0), lit(numFeatures - 1)),
-            i => coalesce(element_at(col("mp"), i), lit(0.0))).as("embedding"))
-        .localCheckpoint(true)
-    } finally graft.ops.Caching.release(tok)
-  }
+            i => coalesce(element_at(col("mp"), i), lit(0.0))).as("embedding")))
+    }
 
   /** Deterministic stratified sample: per-stratum fractions, seeded. */
   def stratifiedSample(df: DataFrame, stratumCol: String,

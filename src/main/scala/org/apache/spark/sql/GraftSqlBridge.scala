@@ -27,4 +27,15 @@ object GraftSqlBridge {
       .fromDataset(fresh.queryExecution.toRdd, fresh, isStreaming = false)
     classic.Dataset.ofRows(c.sparkSession, leaf)
   }
+
+  /** Compute the cache entry of a persisted frame in one job: its cached
+    * RDD, counted. `Dataset.count()` plans a partial and a final aggregate
+    * over the cache, which under AQE runs as three jobs (the cache stage,
+    * the partial-count shuffle, the final count). No-op on a frame that
+    * holds no entry. */
+  def fillCache(df: Dataset[_]): Unit = {
+    val c = df.asInstanceOf[classic.Dataset[_]]
+    c.sparkSession.sharedState.cacheManager.lookupCachedData(c)
+      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+  }
 }

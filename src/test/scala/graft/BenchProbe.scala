@@ -53,7 +53,7 @@ object BenchProbe {
         // containment stage alone, survivors pre-materialized
         val surv = time("materialize survivors") {
           val gated = Refinery.gate(half, cfgFull)
-          Dedup.dedupCorpusShingle(gated, 0.98, 128, 32).localCheckpoint(true)
+          graft.ops.Caching.materialize(Dedup.dedupCorpusShingle(gated, 0.98, 128, 32))
         }
         for (it <- 1 to 3) {
           time(s"dropContained-alone#$it") { println("n=" +

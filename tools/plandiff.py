@@ -12,7 +12,7 @@ exchange/subquery argument ids (`[plan_id=7]`, `Subquery:1`), AQE query
 stage ids (a `*QueryStage` node's `Arguments: 9`), RDD ids
 (`MapPartitionsRDD[12]`), lambda class names and object hashes
 (`$Lambda$5458/0x...@6514666f`), temp paths (`/tmp/...`), and the
-source line of an RDD's call site (`localCheckpoint at MediaDedup.scala:352`
+source line of an RDD's call site (`flattenLineage at Caching.scala:80`
 keeps the file name, not the line, which moves with any edit above it).
 
 The first line of each dump, `# build jobs: N`, is the number of Spark
