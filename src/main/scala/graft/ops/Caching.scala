@@ -26,8 +26,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
   *     [[Analytics.reachableParts]],
   *     [[graft.text.TextFeatures.tfidfEmbeddingsPortable]], the
   *     [[graft.multimodal.MediaDedup]] near-dup pair operators, and the
-  *     stages of [[graft.text.Refinery.refine]] and [[graft.text.Dedup]]'s
-  *     exact survivors and containment gram tables.
+  *     [[graft.text.Refinery.refine]] stages after the gate and
+  *     [[graft.text.Dedup]]'s exact survivors.
   *   - SHARED-SUBTREE persists: a lazily-returned result whose plan reads
   *     one aggregate from several branches persists that aggregate inside
   *     the operator (ReuseExchange does NOT merge the re-planned subtrees —
@@ -46,8 +46,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
   *     fingerprint table — the pair stage and the label join-back both
   *     read it; unpersisted, every decode runs twice).
   *     PlanAuditSpec pins the text operators' corpus-scan counts.
-  *     [[stage]] hands such a persist on as a flat leaf
-  *     ([[graft.text.Refinery.refine]]'s quality gate).
+  *     [[stage]] hands such a persist on as a flat leaf: the
+  *     [[graft.text.Refinery.refine]] quality gate and [[graft.text.Dedup]]'s
+  *     containment gram tables.
   */
 object Caching {
 
@@ -84,12 +85,20 @@ object Caching {
     leaf
   }
 
-  /** Persist `df` and return a flat leaf over the entry, filled by the
-    * leaf's first consumer: a narrow stage that [[materialize]] would fill
-    * in a job of its own (the refinery gate: one more build job on q169,
-    * q186, q187 and q208). The leaf is not the entry's handle; the
-    * harnesses' [[releaseAll]] reclaims it. */
-  def stage(df: DataFrame): DataFrame = GraftSqlBridge.flattenLineage(df.persist())
+  /** Persist `df` and return a flat leaf over the entry. Under AQE,
+    * planning the leaf runs the stage and fills the cache at the call
+    * (q182: 0 → 5 build jobs); with AQE off it stays lazy. `owner` gets
+    * the persisted frame, the handle to [[release]]; the leaf is not.
+    * Kept beside [[materialize]] where that measured worse: the refinery
+    * gate, a narrow filter whose leaf fills in its first consumer's job
+    * (materialized: one more build job on q169, q186, q187 and q208), and
+    * the containment gram tables (materialized: the curation pass's
+    * retained heap after q186 rose ~70 MB). */
+  def stage(df: DataFrame, owner: Dataset[_] => Unit = _ => ()): DataFrame = {
+    val persisted = df.persist()
+    owner(persisted)
+    GraftSqlBridge.flattenLineage(persisted)
+  }
 
   /** Release the cache entry backing `df`. Safe on never-persisted frames
     * (no-op). */

@@ -188,9 +188,9 @@ object CorpusIngest {
         scope.hold(Dedup.clusterPairs(inPairs)), "doc_id")
       // in-batch containment (opt-in): drop docs embedded in other batch
       // survivors — the same stage order as the batch refinery. The
-      // TRACKED form hands back the banded stage's materialized leaves so
+      // TRACKED form hands back the banded stage's internal persists so
       // the scope releases them with the rest of the batch.
-      // raw materialized (doc_id, g) grams of the in-batch containment pass:
+      // raw persisted (doc_id, g) grams of the in-batch containment pass:
       // every later gram consumer in this batch (the vs-lake containment
       // probe, the index-maintenance write) works on a SUBSET of these
       // docs, so a semi-join on ids replaces a whole re-tokenize + gram

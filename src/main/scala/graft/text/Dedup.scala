@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.ops.Caching
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -186,11 +186,11 @@ object Dedup {
   def containmentNearDups(docs: DataFrame, shingleSize: Int = 3,
                           threshold: Double = 0.5,
                           maxDf: Long = 1000): DataFrame = {
-    // materialized leaves (Caching contract): grams feeds the DF census
-    // and the prune; kept feeds sizes + both self-join sides — without
-    // them the tokenize/shingle/hash corpus pass re-runs five times
-    val grams = Caching.materialize(docGrams(docs, shingleSize))
-    val kept = Caching.materialize(keptGrams(grams, maxDf))
+    // stage leaves (Caching contract): grams feeds the DF census and the
+    // prune; kept feeds sizes + both self-join sides — without the persists
+    // the tokenize/shingle/hash corpus pass re-runs five times
+    val grams = Caching.stage(docGrams(docs, shingleSize))
+    val kept = Caching.stage(keptGrams(grams, maxDf))
     val shared = kept.as("x").join(kept.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -295,29 +295,30 @@ object Dedup {
       sketchK).result
 
   /** [[containmentNearDupsBandedTracked]]'s result triple: the pair table,
-    * its materialized leaves (the handles to release after consumption),
-    * and the RAW (doc_id, g) gram leaf — exposed so a
+    * the persisted frames behind its stage leaves (the handles to release
+    * after consumption), and the RAW (doc_id, g) gram leaf — exposed so a
     * caller that needs grams of a SUBSET of `docs` downstream (the
     * streaming ingest's index maintenance) can semi-join this frame instead
     * of re-tokenizing the corpus (same rows by construction: doc text is
     * immutable within a batch, so grams(subset) == grams(docs) ⋉ ids). */
   private[graft] final case class TrackedContainment(
-      result: DataFrame, caches: Seq[DataFrame], rawGrams: DataFrame)
+      result: DataFrame, caches: Seq[Dataset[_]], rawGrams: DataFrame)
 
-  /** [[containmentNearDupsBanded]] plus its materialized leaves, for
-    * callers that must release them deterministically once the result
+  /** [[containmentNearDupsBanded]] plus its shared-subtree cache entries,
+    * for callers that must release them deterministically once the result
     * is consumed (a long-running streaming query has no harness
     * [[graft.ops.Caching.releaseAll]] hook between micro-batches —
-    * without the handles the per-batch entries accumulate without bound
+    * without the handles the per-batch persists accumulate without bound
     * in executor storage memory). Batch callers keep using the public
     * form; the harness reclaims via releaseAll. */
   private[graft] def containmentNearDupsBandedTracked(
       docs: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5,
       maxDf: Long = 1000, sketchK: Int = 64): TrackedContainment = {
-    val grams = Caching.materialize(docGrams(docs, shingleSize))
-    val kept = Caching.materialize(keptGrams(grams, maxDf))
+    val held = Seq.newBuilder[Dataset[_]]
+    val grams = Caching.stage(docGrams(docs, shingleSize), held += _)
+    val kept = Caching.stage(keptGrams(grams, maxDf), held += _)
     val sketch = bottomKSketch(kept, sketchK)
-    val sizes = Caching.materialize(gramSetSizes(kept))
+    val sizes = Caching.stage(gramSetSizes(kept), held += _)
     // candidates: sketched grams of one doc found in the other's kept set,
     // with the EVIDENCE-COUNT prune (in SOME direction) before the
     // expensive verify
@@ -340,7 +341,7 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
     TrackedContainment(containmentVerdict(shared, sizes, threshold),
-      Seq(grams, kept, sizes), grams)
+      held.result(), grams)
   }
 
   /** Cross-source duplication matrix — which domains copy from which: every
