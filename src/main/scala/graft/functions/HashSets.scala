@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -26,6 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    it) — the SAME hash domain as [[graft.text.Dedup.docGrams]]. Grams
   *    are assembled into one reusable per-thread byte buffer — zero
   *    per-gram string allocation.
+  *  - [[MinhashSignature]]: the near-dup CANDIDATE stage's signature over
+  *    the same gram hashes, one long per seed (see its eval body).
   *  - [[HashedTokenSet]]: string array → sorted distinct xxhash64 values
   *    of its elements (the word-set verify's domain).
   *  - [[SortedIntersectCount]]: |a ∩ b| of two sorted distinct long arrays
@@ -40,6 +42,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object HashSets {
 
   private val Seed = 42L // spark.sql.functions.xxhash64's default seed
+
+  private[functions] val LongSet = ArrayType(LongType, containsNull = false)
 
   private val buf = new ThreadLocal[Array[Byte]] {
     override def initialValue(): Array[Byte] = new Array[Byte](1 << 12)
@@ -87,21 +91,41 @@ object HashSets {
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(h, m))
   }
 
+  /** The hash of every word n-gram position; shinglesOf contract: a doc
+    * shorter than `n` (also an empty one) yields ONE gram of all tokens. */
+  private def gramHashes(toks: ArrayData, n: Int): Array[Long] = {
+    val len = toks.numElements()
+    if (len < n) Array(hashGram(toks, 0, len))
+    else {
+      val h = new Array[Long](len - n + 1)
+      var i = 0
+      while (i < h.length) { h(i) = hashGram(toks, i, i + n); i += 1 }
+      h
+    }
+  }
+
   /** Eval body of [[ShingleHashSet]]. */
   def shingleHashSet(toks: ArrayData, n: Int): ArrayData = {
-    val len = toks.numElements()
-    if (len < n) {
-      // shinglesOf contract: short docs yield ONE gram of all tokens joined
-      val h = new Array[Long](1)
-      h(0) = hashGram(toks, 0, len)
-      UnsafeArrayData.fromPrimitiveArray(h)
-    } else {
-      val cnt = len - n + 1
-      val h = new Array[Long](cnt)
+    val h = gramHashes(toks, n)
+    sortedDistinct(h, h.length)
+  }
+
+  /** Eval body of [[MinhashSignature]]: for each seed p, the min over the
+    * gram hashes g of `XXH64.hashLong(g, XXH64.hashInt(p, 42))` — bit-equal
+    * to `min(xxhash64(lit(p), xxhash64(gram)))` over the doc's grams. */
+  def minhashSignature(toks: ArrayData, n: Int, numPerms: Int): ArrayData = {
+    val h = gramHashes(toks, n)
+    val sig = new Array[Long](numPerms)
+    var p = 0
+    while (p < numPerms) {
+      val seed = XXH64.hashInt(p, Seed)
+      var m = Long.MaxValue
       var i = 0
-      while (i < cnt) { h(i) = hashGram(toks, i, i + n); i += 1 }
-      sortedDistinct(h, cnt)
+      while (i < h.length) { m = math.min(m, XXH64.hashLong(h(i), seed)); i += 1 }
+      sig(p) = m
+      p += 1
     }
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   /** Eval body of [[HashedTokenSet]] (null elements skipped — token arrays
@@ -137,6 +161,9 @@ object HashSets {
   def shingleHashSetCol(toks: Column, n: Int): Column =
     GraftSqlBridge.column(ShingleHashSet(GraftSqlBridge.expression(toks), n))
 
+  def minhashSignatureCol(toks: Column, n: Int, numPerms: Int): Column =
+    GraftSqlBridge.column(MinhashSignature(GraftSqlBridge.expression(toks), n, numPerms))
+
   def hashedTokenSetCol(toks: Column): Column =
     GraftSqlBridge.column(HashedTokenSet(GraftSqlBridge.expression(toks)))
 
@@ -146,49 +173,30 @@ object HashSets {
 }
 
 /** Sorted distinct xxhash64 values of a token array's word n-grams. */
-case class ShingleHashSet(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hash_set expects array<string> and n >= 1, got $t / n=$n")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "shingle_hash_set"
-
+case class ShingleHashSet(child: Expression, n: Int) extends UnaryKernel("shingle_hash_set",
+    ArrayType(StringType), HashSets.LongSet, "HashSets.shingleHashSet", n) {
+  require(n >= 1, s"shingle_hash_set needs n >= 1, got $n")
   override protected def nullSafeEval(a: Any): Any =
     HashSets.shingleHashSet(a.asInstanceOf[ArrayData], n)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashSets.shingleHashSet($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+/** MinHash signature of a token array's word n-grams: `numPerms` longs. */
+case class MinhashSignature(child: Expression, n: Int, numPerms: Int)
+  extends UnaryKernel("minhash_signature", ArrayType(StringType), HashSets.LongSet,
+    "HashSets.minhashSignature", n, numPerms) {
+  require(n >= 1 && numPerms >= 1, s"minhash_signature needs n, numPerms >= 1, got $n, $numPerms")
+  override protected def nullSafeEval(a: Any): Any =
+    HashSets.minhashSignature(a.asInstanceOf[ArrayData], n, numPerms)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Sorted distinct xxhash64 values of a string array's elements. */
-case class HashedTokenSet(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_token_set expects array<string>, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "hashed_token_set"
-
+case class HashedTokenSet(child: Expression) extends UnaryKernel("hashed_token_set",
+    ArrayType(StringType), HashSets.LongSet, "HashSets.hashedTokenSet") {
   override protected def nullSafeEval(a: Any): Any =
     HashSets.hashedTokenSet(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashSets.hashedTokenSet($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** |a ∩ b| for two SORTED DISTINCT long arrays (the [[ShingleHashSet]] /

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -86,48 +84,16 @@ object TokenHash {
 }
 
 /** Scalar form: string → long. */
-case class TokenHash60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_hash60 expects a string input, got $t")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "token_hash60"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TokenHash.hash60(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TokenHash.hash60($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class TokenHash60(child: Expression)
+  extends UnaryKernel("token_hash60", StringType, LongType, "TokenHash.hash60") {
+  override protected def nullSafeEval(s: Any): Any = TokenHash.hash60(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Array form: array<string> → array<long> (null elements → null, matching
   * the higher-order `transform` spelling's lambda semantics). */
-case class TokenHashes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_hashes expects array<string> input, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def prettyName: String = "token_hashes"
-
-  override protected def nullSafeEval(a: Any): Any =
-    TokenHash.hashAll(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TokenHash.hashAll($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class TokenHashes(child: Expression) extends UnaryKernel("token_hashes",
+    ArrayType(StringType), ArrayType(LongType, containsNull = true), "TokenHash.hashAll") {
+  override protected def nullSafeEval(a: Any): Any = TokenHash.hashAll(a.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

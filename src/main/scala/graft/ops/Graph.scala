@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.money.r2
@@ -253,10 +253,12 @@ object Graph {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .na.drop().filter(col("src") =!= col("dst")).distinct()
         .repartition(col("src")))
-      edges.count()
+      // iters+1 lazy references each; fill the caches once, not racily,
+      // with one job each (count() plans three under AQE)
+      GraftSqlBridge.fillCache(edges)
       val base = scope.persist(
         edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg")))
-      base.count() // iters+1 lazy references; fill the cache once, not racily
+      GraftSqlBridge.fillCache(base)
       var r = base.select(col("v"), col("outdeg"), lit(scale).as("rank"))
       for (_ <- 1 to iters) {
         val inSum = edges

@@ -221,7 +221,10 @@ object CorpusIngest {
         else {
           val committed = lake.read(table)
           // (1) exact: anti-join on the 128-bit key
-          val notExact = scope.persist(indexed.join(
+          // filled now: `novel` reads it three times, and its lazy fill
+          // inside that job ran its lineage twice in one task and failed
+          // (NPE in UnsafeExternalSorter.insertRecord, q196)
+          val notExact = cutFlat(indexed.join(
             committed.select(col("dup_key")), Seq("dup_key"), "left_anti"))
           // (2) band-key candidates, (3) exact Jaccard (word sets, or
           // shingle sets under shingleVerify)
@@ -309,8 +312,9 @@ object CorpusIngest {
     }
 
   /** `rows` plus the `lsh_bands` index column: the MinHash band hashes of
-    * `docs` (doc_id, text), joined on `idCol`; a doc too short to shingle
-    * gets an empty array, so it forms no band candidate. */
+    * `docs` (doc_id, text), joined on `idCol`; a row with no doc gets an
+    * empty array, so it forms no band candidate (an empty text still
+    * signs the empty gram). */
   private[stream] def withLshBands(rows: DataFrame, docs: DataFrame,
                                    idCol: String, numPerms: Int, bands: Int,
                                    shingleSize: Int): DataFrame = {

@@ -39,32 +39,21 @@ object Dedup {
     docs.join(keepers, Seq("doc_id"), "left_semi")
   }
 
-  /** MinHash signatures for a whole corpus: explode shingles once, hash each
-    * (seed, shingle) pair exactly once, and reduce with `numPerms` parallel
-    * `min` aggregates in ONE hash aggregate (map-side combined — the shuffle
-    * carries only numPerms longs per doc).
-    *
-    * Deliberately a DataFrame transform, not a per-row Column: a Column
-    * spelling (`array_min(transform(shingles, ...))` per permutation)
-    * duplicates the shingling expression into every permutation — Catalyst
-    * does not share higher-order subtrees — and measured 30x slower. */
+  /** MinHash signatures, one row (`idCol`, `sig`) per input row: the
+    * native [[graft.functions.MinhashSignature]] over the doc's normalized
+    * tokens hashes each word `shingleSize`-gram once (the docGrams hash
+    * domain) and keeps, per seed p, the min of `xxhash64(p, gram hash)`:
+    * a narrow projection, no gram rows and no shuffle. A null or empty
+    * text signs the one empty gram "", as the gram stream did. Per row,
+    * not per id: every caller passes a frame keyed on `idCol` (the
+    * exact-dedup survivors or the unique-id `documents` table into
+    * [[lshCandidatePairs]], one ingest batch into
+    * `CorpusIngest.withLshBands`). */
   def minhashSignatures(docs: DataFrame, numPerms: Int, shingleSize: Int,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // hash the shingle STRING once to a long, then derive the numPerms
-    // permutation values by rehashing the long with a seed — integer-width
-    // hashing per permutation instead of numPerms string hashes (and no
-    // wrapping arithmetic, which ANSI mode rejects)
-    // positional gram stream (TextStats.gramStream's codegen rationale);
-    // no distinct needed — duplicate grams cannot change a MIN aggregate
-    val sh = TextStats.gramStream(docs, shingleSize, idCol, textCol)
-      .select(col(idCol), xxhash64(col("gram")).as("h"))
-    val mins = (0 until numPerms).map { seed =>
-      min(xxhash64(lit(seed), col("h"))).as(s"m$seed")
-    }
-    sh.groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until numPerms).map(i => col(s"m$i")): _*).as("sig"))
-  }
+                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    docs.select(col(idCol), graft.functions.HashSets.minhashSignatureCol(
+      coalesce(TextStats.normTokens(col(textCol)), array().cast("array<string>")),
+      shingleSize, numPerms).as("sig"))
 
   /** LSH banding: (bandId, bandHash) pairs from a MinHash signature; docs
     * sharing any band bucket are near-dup candidates.
@@ -90,7 +79,7 @@ object Dedup {
   /** MinHash+LSH candidate pairs: banded signatures, equi-join on
     * (band, bandHash), i<j dedup. Shared by the word- and shingle-verified
     * near-dup operators — the only shuffle keys are small int pairs. */
-  private def lshCandidatePairs(docs: DataFrame, numPerms: Int, bands: Int,
+  private[graft] def lshCandidatePairs(docs: DataFrame, numPerms: Int, bands: Int,
                                 shingleSize: Int): DataFrame = {
     val rowsPerBand = numPerms / bands
     val sig = minhashSignatures(docs, numPerms, shingleSize)

@@ -1,6 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.NormalizeText
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines
@@ -38,9 +39,14 @@ object TextStats {
   }
 
   /** Lowercased, whitespace-collapsed canonical form used as the exact-dedup
-    * key and the shingling input. */
+    * key and the shingling input: the native [[graft.functions.NormalizeText]],
+    * byte-equal to `regexp_replace(lower(trim(text)), "\\s+", " ")`. ASCII
+    * text takes a one-pass byte loop, any other text Spark's own `Lower`
+    * and the same regex. The first `lower()` in a JVM initializes Spark's
+    * `CollationAwareUTF8String`, which title-cases every code point (1.4–1.7 s
+    * in a bare JVM); the ASCII path never pays that. */
   def normalize(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+    GraftSqlBridge.column(NormalizeText(GraftSqlBridge.expression(text)))
 
   /** The canonical word tokenization every text operator works in:
     * [[tokensN]] over [[normalize]]'s output — the one pairing under which

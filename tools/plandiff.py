@@ -11,7 +11,8 @@ node is added or dropped), codegen stage ids (`*(3)`, `[codegen id : 3]`),
 exchange/subquery argument ids (`[plan_id=7]`, `Subquery:1`), AQE query
 stage ids (a `*QueryStage` node's `Arguments: 9`), RDD ids
 (`MapPartitionsRDD[12]`), lambda class names and object hashes
-(`$Lambda$5458/0x...@6514666f`), temp paths (`/tmp/...`), and the
+(`$Lambda$5458/0x...@6514666f`, and a short hash such as the
+`@d9e1` of `MediaDedup$$$Lambda@d9e1`), temp paths (`/tmp/...`), and the
 source line of an RDD's call site (`flattenLineage at Caching.scala:80`
 keeps the file name, not the line, which moves with any edit above it).
 
@@ -66,7 +67,7 @@ MASKS = [
     (re.compile(r"Subquery:\d+"), "Subquery:N"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"\$Lambda[$\d]*/0x[0-9a-f]+"), "$Lambda"),
-    (re.compile(r"@[0-9a-f]{5,16}\b"), "@H"),
+    (re.compile(r"(?<=[\w$])@[0-9a-f]{1,16}\b"), "@H"),
     (re.compile(r"/tmp/[^\s,\]]+"), "/tmp/T"),
     (re.compile(r"(\.scala):\d+"), r"\1:N"),
 ]
