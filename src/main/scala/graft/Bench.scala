@@ -1,6 +1,62 @@
 package graft
+import org.apache.spark.sql.SparkSession
 import graft.queries.{QueryRegistry, QuerySpec}
 object Bench {
+  /** Each timed row's fastest run in seconds and the collector ms inside
+    * that run; a row that threw is in `failed` (row -> exception class)
+    * instead, with no time. */
+  final case class Report(seconds: Map[String, Double], gcMs: Map[String, Long],
+                          failed: Map[String, String]) {
+    def total: Double = seconds.values.sum
+  }
+
+  // GC attribution: total collector time across all MXBeans, sampled
+  // around each timed region, so the artifact can say how much of a slow
+  // row was collector pause rather than plan work (diagnosis only — the
+  // reported seconds stay pure wall-clock, same methodology as always).
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+
+  /** Time `fn(spark, sfDir).count()` of each row `iters` times (min-of-N
+    * steady-state timing: a single pass conflates one-off JIT / page-cache
+    * / machine-contention noise with the plan's real cost). A row is not
+    * run again once it throws. */
+  def timeRows(spark: SparkSession, sfDir: String, rows: Seq[QuerySpec],
+               iters: Int): Report = {
+    val timed = rows.map { case QuerySpec(name, fn, _) =>
+      def once(): Either[String, (Double, Long)] = {
+        val g0 = gcMillis()
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          Right((dt, gcMillis() - g0))
+        } catch { case e: Throwable => Left(e.getClass.getName) }
+        finally {
+          // queries that persist() intermediates must not carry cached
+          // blocks (or cache-hit timings) into the next iteration; untimed.
+          // Reclaims BOTH the SQL cache and any RDD-level blocks.
+          graft.ops.Caching.releaseAll(spark)
+          // heap settle between iterations: freed cache blocks from the
+          // previous query otherwise surface as GC pauses INSIDE the next
+          // timed region, inflating suite numbers 4-6x over isolated runs
+          // (r7: q13, q170)
+          System.gc()
+        }
+      }
+      name -> (2 to iters).foldLeft(once()) {
+        case (Right(best), _) => once().map(r => if (r._1 < best._1) r else best)
+        case (failed, _) => failed
+      }
+    }
+    Report(timed.collect { case (k, Right((sec, _))) => k -> sec }.toMap,
+      timed.collect { case (k, Right((_, gc))) => k -> gc }.toMap,
+      timed.collect { case (k, Left(cls)) => k -> cls }.toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession.start()
@@ -12,49 +68,17 @@ object Bench {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("l_returnflag").count().count()
     } catch { case _: Throwable => () }
-    // min-of-N steady-state timing: a single pass conflates one-off JIT /
-    // page-cache / machine-contention noise with the plan's real cost
     // clamp: a non-numeric env value falls back to the default, and 0/negative
-    // would make times.min throw on an empty collection
+    // would time nothing
     val iters = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt).getOrElse(3))
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
-    // GC attribution: total collector time across all MXBeans, sampled
-    // around each timed region, so the artifact can say how much of a slow
-    // row was collector pause rather than plan work (diagnosis only — the
-    // reported seconds stay pure wall-clock, same methodology as always).
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    val gcByQuery = scala.collection.mutable.Map.empty[String, Long]
     // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q10,q33 times just those
     // rows (see QueryRegistry.select); unset = the full suite
     val rows = QueryRegistry.all
       .select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
-    val results = rows.map { case QuerySpec(name, fn, _) =>
-      val times = (1 to iters).map { _ =>
-        val g0 = gcMillis()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val gc = gcMillis() - g0
-        // queries that persist() intermediates must not carry cached blocks
-        // (or cache-hit timings) into the next iteration; untimed. Reclaims
-        // BOTH the SQL cache and any RDD-level blocks.
-        graft.ops.Caching.releaseAll(spark)
-        // heap settle between iterations: freed cache blocks from the previous
-        // query otherwise surface as GC pauses INSIDE the next timed region,
-        // inflating suite numbers 4-6x over isolated runs (r7: q13, q170)
-        System.gc()
-        (dt, gc)
-      }
-      val best = times.minBy(_._1)
-      gcByQuery(name) = best._2
-      name -> best._1
-    }.toMap
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val report = timeRows(spark, sfDir, rows, iters)
+    val results = report.seconds
     // Full per-query map goes ONLY to a file: the driver keeps a bounded
     // stdout tail, and a long line printed before the final one can leave a
     // truncated JSON fragment in the tail that defeats its parser (r03 lost
@@ -63,8 +87,11 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     // gc_ms: collector milliseconds INSIDE each row's min iteration —
     // artifact-file only (the stdout contract line is unchanged)
-    val gcFull = gcByQuery.toSeq.sortBy(_._1)
+    val gcFull = report.gcMs.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // rows that threw: exception class, no time, not in the total
+    val failedFull = report.failed.toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     // scaling refutation (artifact only — the stdout contract line is
     // unchanged): the EFFECTIVE master, core count, and shuffle width the
     // session actually ran with, so a low-core rerun can verify the bench
@@ -74,7 +101,7 @@ object Bench {
     val effPar = spark.sparkContext.defaultParallelism
     val effShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$full,"gc_ms":$gcFull,"master":"$effMaster","default_parallelism":$effPar,"shuffle_partitions":$effShuffle,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(report.total)},"unit":"sec","queries":$full,"gc_ms":$gcFull,"failed":$failedFull,"master":"$effMaster","default_parallelism":$effPar,"shuffle_partitions":$effShuffle,"sf":"$sfDir"}"""
     try {
       val outDir = java.nio.file.Paths.get("out")
       java.nio.file.Files.createDirectories(outDir)
@@ -89,7 +116,7 @@ object Bench {
     val topSlow = results.toSeq.sortBy { case (k, v) => (-v, k) }.take(20)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r2(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$topSlow,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(report.total)},"unit":"sec","n_queries":${results.size},"queries":$topSlow,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -177,17 +177,12 @@ object DataGen {
     * customer), payment/status categorical draws, item count with the
     * reference's [0.50,.25,.15,.07,.02,.01] mix, Zipf-popular DISTINCT
     * products per order, quantity/discount mixes, line totals rounded at
-    * 2 dp and total_amount their sum. Returns (orders, order_items). */
-  def ordersAndItems(spark: SparkSession, cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val (orders, items, _) = ordersItemsShared(spark, cfg)
-    (orders, items)
-  }
-
-  /** [[ordersAndItems]] plus the shared scored-item frame BOTH outputs
-    * derive from, so a caller consuming both (e.g. [[writeCsvDataset]]) can
-    * persist exactly that frame and pay the generation cost once. */
-  def ordersItemsShared(spark: SparkSession,
-                        cfg: Config = Config()): (DataFrame, DataFrame, DataFrame) = {
+    * 2 dp and total_amount their sum. Returns (orders, order_items).
+    * `shared` maps the scored-item frame BOTH outputs derive from, so a
+    * caller consuming both (e.g. [[writeCsvDataset]]) can cache exactly
+    * that frame and pay the generation cost once. */
+  def ordersAndItems(spark: SparkSession, cfg: Config = Config(),
+                     shared: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     // the item-count mix covers 6 basket sizes (generate_data.py:262); a
     // wider configured range would silently zip away the extra sizes
     require(cfg.maxItems - cfg.minItems + 1 <= 6,
@@ -219,7 +214,7 @@ object DataGen {
     // the reference's replace=False choice)
     val draws = (0 until cfg.maxItems * 3).map(j =>
       zipfRank(cfg.seed, s"prod$j", col("order_id"), cfg.nProducts))
-    val items = base.select(col("order_id"),
+    val items = shared(base.select(col("order_id"),
         slice(array_distinct(array(draws: _*)), lit(1), col("n_items")).as("pids"))
       .select(col("order_id"), posexplode(col("pids")).as(Seq("pos", "product_id")))
       .join(prods, Seq("product_id"))
@@ -237,7 +232,7 @@ object DataGen {
         col("price"))
       .select(col("order_id"), col("pos"), col("product_id"), col("quantity"),
         round(col("price") * (lit(1.0) - col("discount")), 2).as("unit_price"))
-      .withColumn("line_total", round(col("quantity") * col("unit_price"), 2))
+      .withColumn("line_total", round(col("quantity") * col("unit_price"), 2)))
     // stable global item id: (order_id, pos) is unique; the dense
     // sequential id of the reference is an artifact of its row loop — a
     // deterministic composite key is the distributed equivalent
@@ -250,7 +245,7 @@ object DataGen {
     val orders = base.join(totals, Seq("order_id"))
       .select(col("order_id"), col("customer_id"), col("order_date"),
         col("total_amount"), col("payment_type"), col("status"))
-    (orders, orderItems, items)
+    (orders, orderItems)
   }
 
   /** Write the full raw dataset as headered CSV directories + the metadata
@@ -269,12 +264,10 @@ object DataGen {
         .csv(s"$dir/$name.csv")
     csv(customers(spark, cfg), "customers")
     csv(products(spark, cfg), "products")
-    val (orders, items, shared) = ordersItemsShared(spark, cfg)
-    // persisting the shared frame after both outputs were built is enough:
-    // each write's plan picks up the cache entry when it runs. The scope
-    // releases exactly that entry — the caller's own caches stay untouched
+    // the scope releases exactly the shared entry — the caller's own
+    // caches stay untouched
     graft.ops.Caching.scoped { scope =>
-      scope.persist(shared)
+      val (orders, items) = ordersAndItems(spark, cfg, scope.materialize(_))
       csv(items, "order_items")
       csv(orders, "orders")
     }

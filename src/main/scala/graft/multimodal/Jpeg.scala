@@ -185,6 +185,52 @@ private[graft] object Jpeg {
   private def extend(v: Int, s: Int): Int =
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
+  /** Parse the DQT (`m` = 0xDB) or DHT (0xC4) segment whose length field
+    * is at `i` into `quant` (natural order) or `huffDc`/`huffAc`; either
+    * segment may carry several tables. Returns the segment length. */
+  private def tableSegment(id: Long, p: Array[Byte], m: Int, i: Int,
+                           quant: Array[Array[Int]], huffDc: Array[HuffTable],
+                           huffAc: Array[HuffTable]): Int = {
+    def u8(off: Int): Int = { require(off < p.length,
+      s"media $id: truncated JPEG at offset $off"); p(off) & 0xFF }
+    val len = (u8(i) << 8) | u8(i + 1)
+    require(i.toLong + len <= p.length,
+      s"media $id: truncated ${if (m == 0xDB) "DQT" else "DHT"}")
+    var q = i + 2
+    val endQ = i + len
+    while (q < endQ) {
+      if (m == 0xDB) {
+        val pq = u8(q) >> 4
+        val tq = u8(q) & 0x0F
+        require(pq == 0,
+          s"media $id: only 8-bit quantization tables supported (Pq=$pq)")
+        require(tq < 4, s"media $id: bad DQT table id $tq")
+        require(q.toLong + 1 + 64 <= endQ, s"media $id: truncated DQT table")
+        val tbl = new Array[Int](64)
+        var k = 0
+        while (k < 64) { tbl(Zigzag(k)) = u8(q + 1 + k); k += 1 }
+        quant(tq) = tbl
+        q += 65
+      } else {
+        val tc = u8(q) >> 4
+        val th = u8(q) & 0x0F
+        require(tc <= 1, s"media $id: bad DHT class $tc")
+        require(th < 4, s"media $id: bad DHT table id $th")
+        require(q.toLong + 17 <= endQ, s"media $id: truncated DHT counts")
+        val bits = Array.tabulate(16)(l => u8(q + 1 + l))
+        val n = bits.sum
+        require(n <= 256 && q.toLong + 17 + n <= endQ,
+          s"media $id: truncated DHT symbols")
+        val vals = new Array[Byte](n)
+        System.arraycopy(p, q + 17, vals, 0, n)
+        val tab = new HuffTable(id, bits, vals)
+        if (tc == 0) huffDc(th) = tab else huffAc(th) = tab
+        q += 17 + n
+      }
+    }
+    len
+  }
+
   /** Decode one baseline JPEG to row-major RGB triples (the
     * [[Multimodal.decodeAviRgb]] frame layout): (width, height, rgb).
     * Grayscale replicates Y into all three channels; color applies the
@@ -222,47 +268,8 @@ private[graft] object Jpeg {
       m match {
         case 0xD9 =>
           throw new IllegalArgumentException(s"media $id: EOI before SOS")
-        case 0xDB => // DQT — may carry several tables
-          val len = u16(i)
-          require(i.toLong + len <= p.length, s"media $id: truncated DQT")
-          var q = i + 2
-          val endQ = i + len
-          while (q < endQ) {
-            val pq = u8(q) >> 4
-            val tq = u8(q) & 0x0F
-            require(pq == 0,
-              s"media $id: only 8-bit quantization tables supported (Pq=$pq)")
-            require(tq < 4, s"media $id: bad DQT table id $tq")
-            require(q.toLong + 1 + 64 <= endQ, s"media $id: truncated DQT table")
-            val tbl = new Array[Int](64)
-            var k = 0
-            while (k < 64) { tbl(Zigzag(k)) = u8(q + 1 + k); k += 1 }
-            quant(tq) = tbl
-            q += 65
-          }
-          i += len
-        case 0xC4 => // DHT — may carry several tables
-          val len = u16(i)
-          require(i.toLong + len <= p.length, s"media $id: truncated DHT")
-          var q = i + 2
-          val endQ = i + len
-          while (q < endQ) {
-            val tc = u8(q) >> 4
-            val th = u8(q) & 0x0F
-            require(tc <= 1, s"media $id: bad DHT class $tc")
-            require(th < 4, s"media $id: bad DHT table id $th")
-            require(q.toLong + 17 <= endQ, s"media $id: truncated DHT counts")
-            val bits = Array.tabulate(16)(l => u8(q + 1 + l))
-            val n = bits.sum
-            require(n <= 256 && q.toLong + 17 + n <= endQ,
-              s"media $id: truncated DHT symbols")
-            val vals = new Array[Byte](n)
-            System.arraycopy(p, q + 17, vals, 0, n)
-            val tab = new HuffTable(id, bits, vals)
-            if (tc == 0) huffDc(th) = tab else huffAc(th) = tab
-            q += 17 + n
-          }
-          i += len
+        case 0xDB | 0xC4 => // DQT / DHT — either may carry several tables
+          i += tableSegment(id, p, m, i, quant, huffDc, huffAc)
         case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive (same layout)
           progressive = m == 0xC2
           val len = u16(i)
@@ -599,47 +606,8 @@ private[graft] object Jpeg {
       i += 2
       m match {
         case 0xD9 => sawEoi = true
-        case 0xDB => // DQT between scans
-          val len = u16(i)
-          require(i.toLong + len <= p.length, s"media $id: truncated DQT")
-          var q = i + 2
-          val endQ = i + len
-          while (q < endQ) {
-            val pq = u8(q) >> 4
-            val tq = u8(q) & 0x0F
-            require(pq == 0,
-              s"media $id: only 8-bit quantization tables supported (Pq=$pq)")
-            require(tq < 4, s"media $id: bad DQT table id $tq")
-            require(q.toLong + 1 + 64 <= endQ, s"media $id: truncated DQT table")
-            val tbl = new Array[Int](64)
-            var k = 0
-            while (k < 64) { tbl(Zigzag(k)) = u8(q + 1 + k); k += 1 }
-            quant(tq) = tbl
-            q += 65
-          }
-          i += len
-        case 0xC4 => // DHT between scans
-          val len = u16(i)
-          require(i.toLong + len <= p.length, s"media $id: truncated DHT")
-          var q = i + 2
-          val endQ = i + len
-          while (q < endQ) {
-            val tc = u8(q) >> 4
-            val th = u8(q) & 0x0F
-            require(tc <= 1, s"media $id: bad DHT class $tc")
-            require(th < 4, s"media $id: bad DHT table id $th")
-            require(q.toLong + 17 <= endQ, s"media $id: truncated DHT counts")
-            val bits = Array.tabulate(16)(l => u8(q + 1 + l))
-            val n = bits.sum
-            require(n <= 256 && q.toLong + 17 + n <= endQ,
-              s"media $id: truncated DHT symbols")
-            val vals = new Array[Byte](n)
-            System.arraycopy(p, q + 17, vals, 0, n)
-            val tab = new HuffTable(id, bits, vals)
-            if (tc == 0) huffDc(th) = tab else huffAc(th) = tab
-            q += 17 + n
-          }
-          i += len
+        case 0xDB | 0xC4 => // DQT / DHT between scans
+          i += tableSegment(id, p, m, i, quant, huffDc, huffAc)
         case 0xDD =>
           val len = u16(i)
           require(len == 4 && i.toLong + len <= p.length, s"media $id: bad DRI")

@@ -346,7 +346,7 @@ object MediaDedup {
   private def bandedNearDups(fingerprints: DataFrame, fpCol: String,
                              maxHamming: Int, bands: Int): DataFrame =
     Caching.scoped { scope =>
-      Caching.materialize(Dedup.hammingBandPairs(scope.persist(fingerprints),
+      Caching.materialize(Dedup.hammingBandPairs(scope.materialize(fingerprints),
           fpCol, FingerprintBits, maxHamming, bands, idCol = "media_id")
         .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
           col("hamming")))
@@ -684,21 +684,21 @@ object MediaDedup {
     clustersOf(audioFingerprint(media), "afp", maxHamming, bands)
 
   private def clustersOf(fps0: DataFrame, fpCol: String, maxHamming: Int,
-                         bands: Int): DataFrame = {
-    // fingerprints feed the pair stage AND the label join-back (shared-
-    // subtree persist, the Caching contract — releaseAll reclaims); the
+                         bands: Int): DataFrame = Caching.scoped { scope =>
+    // fingerprints feed the pair stage AND the label join-back (scoped
+    // interims, the Caching contract; the labels are materialized); the
     // closure is edge-bounded by the band-collision count, never all-pairs
-    val fps = fps0.persist()
+    val fps = scope.materialize(fps0)
     val pairs = Dedup.hammingBandPairs(fps, fpCol, FingerprintBits,
       maxHamming, bands, idCol = "media_id")
-    val clusters = Dedup.clusterPairs(pairs)
+    val clusters = scope.hold(Dedup.clusterPairs(pairs))
       .withColumnRenamed("doc_id", "media_id")
-    fps.join(clusters, Seq("media_id"), "left")
+    Caching.materialize(fps.join(clusters, Seq("media_id"), "left")
       .select(col("media_id"),
         coalesce(col("cluster_id"), col("media_id")).as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id")))
+          .partitionBy("cluster_id"))))
   }
 
   /** Cross-format re-encode fixtures: doc_ids come in planted PAIRS
@@ -1421,13 +1421,14 @@ object MediaDedup {
     * (clip_id, video_id, matched_frames, n_clip_frames, clip_frac). */
   def videoClipMatches(clips: Dataset[MediaRow], videos: Dataset[MediaRow],
                        everyN: Int = 2, maxHamming: Int = 3, bands: Int = 4,
-                       minClipFrac: Double = 0.5): DataFrame = {
-    // clip hashes feed the pair stage AND the per-clip frame counts
-    // (shared-subtree persist, the Caching contract — releaseAll reclaims)
-    val cf = videoFrameHashes(clips, everyN = 1).persist()
+                       minClipFrac: Double = 0.5): DataFrame = Caching.scoped { scope =>
+    // clip hashes feed the pair stage AND the per-clip frame counts (a
+    // scoped interim, the Caching contract; the matches are materialized)
+    val cf = scope.materialize(videoFrameHashes(clips, everyN = 1))
     val counts = cf.groupBy(col("media_id"))
       .agg(count(lit(1)).as("n_clip_frames"))
-    crossFramePairs(cf, videoFrameHashes(videos, everyN), maxHamming, bands)
+    Caching.materialize(crossFramePairs(cf, videoFrameHashes(videos, everyN),
+        maxHamming, bands)
       .select(col("media_a").as("clip_id"), col("media_b").as("video_id"),
         col("frame_a"))
       .groupBy("clip_id", "video_id")
@@ -1438,7 +1439,7 @@ object MediaDedup {
         col("matched_frames") / col("n_clip_frames"))
       .filter(col("clip_frac") >= minClipFrac)
       .select(col("clip_id"), col("video_id"), col("matched_frames"),
-        col("n_clip_frames"), col("clip_frac"))
+        col("n_clip_frames"), col("clip_frac")))
   }
 
   /** Clip-in-video fixtures (even doc_ids): role doc_id mod 4 == 0 is a
@@ -1500,16 +1501,16 @@ object MediaDedup {
     * (media_a, media_b, matched_a, matched_b, match_frac). */
   def videoNearDups(media: Dataset[MediaRow], everyN: Int = 2,
                     maxHamming: Int = 3, bands: Int = 4,
-                    minSharedFrac: Double = 0.5): DataFrame = {
-    // frame hashes feed the pair stage AND the per-video frame counts —
-    // shared-subtree persist (Caching contract; releaseAll reclaims)
-    val fh = videoFrameHashes(media, everyN).persist()
+                    minSharedFrac: Double = 0.5): DataFrame = Caching.scoped { scope =>
+    // frame hashes feed the pair stage AND the per-video frame counts (a
+    // scoped interim, the Caching contract; the pairs are materialized)
+    val fh = scope.materialize(videoFrameHashes(media, everyN))
     val counts = fh.groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
     val framePairs = videoFramePairs(fh, maxHamming, bands)
-    videoContainment(framePairs, counts, counts)
+    Caching.materialize(videoContainment(framePairs, counts, counts)
       .filter(col("match_frac") >= minSharedFrac)
       .select(col("media_a"), col("media_b"), col("matched_a"),
-        col("matched_b"), col("match_frac"))
+        col("matched_b"), col("match_frac")))
   }
 
   /** Pack (media_id, frame_idx, dhash) rows into the fid space so the

@@ -644,21 +644,16 @@ object Analytics {
     *
     * CACHE LIFETIME ([[graft.ops.Caching]] contract): the UnionLoop
     * re-reads the edge table every iteration (plus the seed subquery), so
-    * `pairs` is a scoped interim, the view is registered over a flattened
-    * lineage leaf (so dropping it cannot cascade-evict the persist), and
-    * the RESULT is materialized — after which the view is dropped and the
-    * pairs persist released inside this call. The only surviving cache
+    * `pairs` is a scoped interim the view is registered over, and the
+    * RESULT is materialized — after which the view is dropped and the
+    * pairs entry released inside this call. The only surviving cache
     * entry is the returned frame itself; release it with
     * [[graft.ops.Caching.release]] when done. */
   def reachableParts(spark: org.apache.spark.sql.SparkSession,
                      pairs: DataFrame, maxHops: Int = 3): DataFrame =
     Caching.scoped { scope =>
       val view = s"graft_reach_pairs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // the view's plan is a LogicalRDD leaf reading the persist — its
-      // catalog identity is disjoint from the persist's cache entry, so
-      // dropTempView's cascading uncache can't reach (and evict) it
-      org.apache.spark.sql.GraftSqlBridge.flattenLineage(scope.persist(pairs))
-        .createOrReplaceTempView(view)
+      scope.materialize(pairs).createOrReplaceTempView(view)
       try Caching.materialize(spark.sql(
         s"""WITH RECURSIVE e AS (
            |  SELECT part_a AS src, part_b AS dst FROM $view

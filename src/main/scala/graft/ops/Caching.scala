@@ -7,48 +7,41 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 /** Explicit cache lifecycle for graft operators. Every persist lives in
   * the SQL cache manager (`Dataset.persist`) — never in raw RDD storage —
   * so session-level tooling (`spark.catalog.clearCache()`) can always
-  * reclaim it. Three kinds of entry exist:
+  * reclaim it, and this file is the only place that spells one. Every
+  * entry is made by [[materialize]]: filled by one job at the call, and
+  * handed on as a flat leaf that is its own entry (its plan never nests a
+  * cached plan — a chain of nested `InMemoryRelation`s printed 3.27 MB on
+  * q186), so releasing one entry never re-plans or drops another, also
+  * for equal plans. Two kinds exist:
   *
-  *   - SCOPED INTERIMS ([[Scope]], opened by [[scoped]]): state an
-  *     operator or a micro-batch reads several times while it runs. The
-  *     scope releases each one, newest first, when its body exits —
-  *     normally or by a throw.
+  *   - SCOPED INTERIMS ([[Scope.materialize]], in a [[scoped]] body): state
+  *     an operator or a micro-batch reads several times while it runs. The
+  *     scope releases each one when its body exits, normally or by a
+  *     throw. An operator that returns a frame built on its interims
+  *     materializes that result before the scope exits.
   *   - MATERIALIZED RESULTS ([[materialize]]): an eager result that must
   *     stay cached (iterative lineage would otherwise recompute a whole
-  *     loop per action, or a chain stage its whole prefix). The returned
-  *     frame is a flat leaf that is its own cache entry, so releasing the
-  *     interims it was built from never re-plans it, its plan never nests
-  *     a cached plan (a chain of nested `InMemoryRelation`s printed 3.27 MB
-  *     on q186), and two equal results never share an entry. The caller
-  *     releases it with [[release]]. Operators in this mode:
-  *     [[Graph.connectedComponents]], [[Graph.pageRankInt]],
-  *     [[Graph.triangleCount]], [[Graph.triangleCountIdOrdered]],
-  *     [[Analytics.reachableParts]],
-  *     [[graft.text.TextFeatures.tfidfEmbeddingsPortable]], the
-  *     [[graft.multimodal.MediaDedup]] near-dup pair operators, and the
-  *     [[graft.text.Refinery.refine]] stages after the gate and
-  *     [[graft.text.Dedup]]'s exact survivors.
-  *   - SHARED-SUBTREE persists: a lazily-returned result whose plan reads
-  *     one aggregate from several branches persists that aggregate inside
-  *     the operator (ReuseExchange does NOT merge the re-planned subtrees —
-  *     measured on charBigramLogScore: 3 corpus scans without the persist).
-  *     The entry fills on the result's first action and is reclaimed by the
-  *     caller afterwards ([[releaseAll]] in the harnesses, or
-  *     `spark.catalog.clearCache()`). Operators in this mode:
-  *     [[graft.text.TextStats.charBigramLogScore]] (doc×bigram counts),
-  *     [[graft.text.TextStats.splitTokenDrift]] (vocabulary counts),
-  *     [[graft.text.TextStats.sourceJsDivergence]] (source×lang cells),
-  *     [[graft.sim.Similarity.pqBuild]] (the PQ code table — FAISS's
-  *     memory-resident layout; every ADC consumer re-reads it),
-  *     [[graft.text.LangModel.lmScore]] (the bigram event stream — the
-  *     model tables and the scoring stream both read it),
-  *     [[graft.multimodal.MediaDedup.imageClusters]]/`audioClusters` (the
-  *     fingerprint table — the pair stage and the label join-back both
-  *     read it; unpersisted, every decode runs twice).
-  *     PlanAuditSpec pins the text operators' corpus-scan counts.
-  *     [[stage]] hands such a persist on as a flat leaf: the
-  *     [[graft.text.Refinery.refine]] quality gate and [[graft.text.Dedup]]'s
-  *     containment gram tables.
+  *     loop per action, or a chain stage its whole prefix). The caller
+  *     releases it with [[release]]; a query row's caller is the harness,
+  *     whose [[releaseAll]] runs between rows. Operators in this mode: the
+  *     [[Graph]] operators, [[Analytics.reachableParts]], the
+  *     [[graft.text.TextStats]], [[graft.text.LangModel]],
+  *     [[graft.text.QualityClassifier]] and [[graft.text.Dedup]] scorers
+  *     and audits whose plans read one aggregate from several branches,
+  *     [[graft.text.TextFeatures]]' `tfidfEmbeddingsPortable` and
+  *     `dsirWeights`, [[graft.sim.Similarity.pqBuild]]'s code table, the
+  *     [[graft.multimodal.MediaDedup]] near-dup and cluster operators, and
+  *     the [[graft.text.Refinery.refine]] stages. Two scorers whose
+  *     returned plan PlanAuditSpec reads,
+  *     [[graft.text.TextStats.charBigramLogScore]] and
+  *     [[graft.text.QualityClassifier.classifierScore]], return a lazy
+  *     frame over the materialized corpus projection they read twice; the
+  *     harness reclaims that entry. PlanAuditSpec pins the text operators'
+  *     corpus-scan counts.
+  *
+  * The one exception is [[stage]], kept at its two measured sites: the
+  * [[graft.text.Refinery.refine]] quality gate and [[graft.text.Dedup]]'s
+  * containment gram tables.
   */
 object Caching {
 
@@ -58,16 +51,15 @@ object Caching {
   final class Scope private[Caching] {
     private val held = ArrayBuffer.empty[Dataset[_]]
 
-    /** Persist `ds` until the span exits. */
-    def persist[T](ds: Dataset[T]): Dataset[T] = hold(ds.persist())
+    /** [[Caching.materialize]] `ds` into an entry released when the span
+      * exits. */
+    def materialize[T](ds: Dataset[T]): Dataset[T] = hold(Caching.materialize(ds))
 
     /** Release `ds` when the span exits: a result that is already cached
       * (e.g. [[graft.text.Dedup.clusterPairs]]). */
     def hold[T](ds: Dataset[T]): Dataset[T] = { held += ds; ds }
 
-    // newest first: uncaching a frame re-plans the still-cached frames
-    // built on it, so those go before their inputs
-    private[Caching] def release(): Unit = held.reverseIterator.foreach(Caching.release)
+    private[Caching] def release(): Unit = held.foreach(Caching.release)
   }
 
   /** Run `body` with a fresh [[Scope]], released in `finally`. */
@@ -76,13 +68,13 @@ object Caching {
     try body(scope) finally scope.release()
   }
 
-  /** Compute `df` now into a cache entry of its own and return that entry
-    * as a flat leaf: the handle [[release]] takes. Each call makes a
-    * distinct entry, also for equal plans. */
-  def materialize(df: DataFrame): DataFrame = {
-    val leaf = GraftSqlBridge.flattenLineage(df).persist()
-    GraftSqlBridge.fillCache(leaf)
-    leaf
+  /** Compute `ds` now, in one job, into a cache entry of its own and return
+    * that entry as a flat leaf: the handle [[release]] takes. Each call
+    * makes a distinct entry, also for equal plans. */
+  def materialize[T](ds: Dataset[T]): Dataset[T] = {
+    val leaf = GraftSqlBridge.flattenLineage(ds.toDF()).persist()
+    GraftSqlBridge.fillCache(leaf): Unit
+    leaf.as(ds.encoder)
   }
 
   /** Persist `df` and return a flat leaf over the entry. Under AQE,

@@ -122,19 +122,19 @@ object Graph {
       val e0 = pairs.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       // undirected closure: each edge in both orientations, self-loops and
       // null endpoints dropped, deduped so multigraph inputs don't multiply
-      // the per-round join. Partitioned on `src` BEFORE caching so the cached
-      // partitioning satisfies every round's join requirement — the (large)
-      // edge side never re-shuffles; only the (small) label side moves.
+      // the per-round join. Partitioned on `src` before caching, but the
+      // flat cached leaf does not report that partitioning, so each round's
+      // join shuffles the edge side again.
       // both orientations from ONE pass over the (possibly expensive) pair
       // plan — a union of e0 with its swap would execute that plan twice
-      val edges = scope.persist(e0
+      val edges = scope.materialize(e0
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .na.drop().filter(col("src") =!= col("dst")).distinct()
         .repartition(col("src")))
-      val nEdges = edges.count() // materialize once; every round re-reads it
+      val nEdges = GraftSqlBridge.fillCache(edges) // read off the filled entry
       if (nEdges == 0L)
         pairs.sparkSession.createDataFrame(Seq.empty[(Long, Long)]).toDF("part", "component")
       // SMALL-GRAPH FAST PATH: below the cap (≈2 MB of long pairs at the
@@ -143,7 +143,7 @@ object Graph {
       // the loop's ~8 (each round = 2 joins + persist + 2 counts over
       // 32-partition frames whose per-task scheduling dwarfs the data —
       // measured ~2.5 s for a 50-edge near-dup graph). The cap is on the
-      // MATERIALIZED edge count, so the decision costs nothing extra and a
+      // MATERIALIZED edge count, so the decision costs one cache read and a
       // billion-edge graph at corpus scale always takes the distributed
       // loop. The same bounded-driver-state rule as the k-means trainer
       // (Similarity.trainSample): collect only what a constant bounds.
@@ -172,9 +172,9 @@ object Graph {
         // round 0 fused into init: label(v) = min(v, min neighbor). Near-dup
         // components are mostly cliques (all pairs above threshold), which this
         // single pass already converges — the loop then just confirms.
-        var assign = scope.persist(edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+        var assign = scope.materialize(edges.groupBy(col("src"))
+          .agg(min(col("dst")).as("mn"))
           .select(col("src").as("v"), least(col("src"), col("mn")).as("component")))
-        var cached: DataFrame = assign // the persisted frame backing `assign`
         // one propagation round over a (v, prev_c, component) frame: (1)
         // neighbor-min message pass, then (2) pointer jumping — follow my
         // label's own label (labels are always vertex ids within the same
@@ -200,20 +200,15 @@ object Graph {
           // exactly ONE round per materialization: chaining un-materialized
           // rounds re-executes the earlier round's joins once per reference
           // (Spark reuses only identical Exchanges, not arbitrary subplans —
-          // measured ~1.5x slower with two chained rounds per check)
-          val doubled = scope.persist(step(
+          // measured ~1.5x slower with two chained rounds per check). Each
+          // round is a flat leaf, so no round's plan nests its predecessor's
+          val doubled = scope.materialize(step(
               assign.select(col("v"), col("component").as("prev_c"), col("component"))))
           changed = doubled.filter(col("component") < col("prev_c")).count()
-          Caching.release(cached) // successor is materialized
-          cached = doubled
-          // lineage reset: each round's logical plan references the previous
-          // round's plan three times, so WITHOUT this Catalyst re-analyzes an
-          // exponentially growing tree every round (measured: dominates the
-          // loop's wall clock). Execution still reads the round's cache.
-          assign = org.apache.spark.sql.GraftSqlBridge.flattenLineage(
-            doubled.select(col("v"), col("component")))
+          Caching.release(assign) // successor is materialized
+          assign = doubled
         }
-        Caching.materialize(assign.toDF("part", "component"))
+        Caching.materialize(assign.select(col("v").as("part"), col("component")))
       }
     }
 
@@ -231,10 +226,11 @@ object Graph {
     * vertex's relative mass per round — at the default micro-unit scale,
     * noise ~1e-6, far below any ranking use.
     *
-    * Scale shape: the edge set is materialized once, partitioned on `src`,
-    * and every round re-reads that cache; one round = one vertex-sized
-    * shuffle of (dst, share) with map-side combine + one vertex-sized
-    * left join. The `iters` rounds chain LAZILY into a single action —
+    * Scale shape: the edge set is materialized once and every round
+    * re-reads that cache; one round = one vertex-sized shuffle of
+    * (dst, share) with map-side combine, one shuffle of the cached edges
+    * (the flat leaf does not report its `src` partitioning) + one
+    * vertex-sized left join. The `iters` rounds chain LAZILY into a single action —
     * each round references its predecessor exactly once, so the plan is
     * linear in `iters` and nothing intermediate is persisted. Overflow
     * headroom: total mass ≈ scale·|V|, so 85·Σ stays under Long.Max up to
@@ -246,19 +242,15 @@ object Graph {
     Caching.scoped { scope =>
       val e0 = pairs.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      val edges = scope.persist(e0
+      val edges = scope.materialize(e0
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .na.drop().filter(col("src") =!= col("dst")).distinct()
         .repartition(col("src")))
-      // iters+1 lazy references each; fill the caches once, not racily,
-      // with one job each (count() plans three under AQE)
-      GraftSqlBridge.fillCache(edges)
-      val base = scope.persist(
+      val base = scope.materialize(
         edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg")))
-      GraftSqlBridge.fillCache(base)
       var r = base.select(col("v"), col("outdeg"), lit(scale).as("rank"))
       for (_ <- 1 to iters) {
         val inSum = edges
@@ -329,14 +321,14 @@ object Graph {
   def triangleCount(edges: DataFrame, aCol: String = "part_a",
                     bCol: String = "part_b"): DataFrame = Caching.scoped { scope =>
     // degree agg + orient + counts
-    val und = scope.persist(edges.select(col(aCol).as("a"), col(bCol).as("b")))
+    val und = scope.materialize(edges.select(col(aCol).as("a"), col(bCol).as("b")))
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     // orient toward the higher (deg, id) endpoint; carry the dst rank so the
     // wedge join can order a pivot's out-neighbors without re-joining degrees
     val lowFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
     // wedge sides + closing side
-    val oriented = scope.persist(und
+    val oriented = scope.materialize(und
       .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
       .select(
@@ -369,7 +361,7 @@ object Graph {
     // expensive upstream edge derivation (e.g. basket pair generation)
     // materializes once, not three times. [[Caching]] contract: the persist
     // is a scoped interim; the returned 1-row census is materialized.
-    val e = scope.persist(edges.select(col(aCol).as("a"), col(bCol).as("b")))
+    val e = scope.materialize(edges.select(col(aCol).as("a"), col(bCol).as("b")))
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
     val tris = wedges.join(e.as("e3"),

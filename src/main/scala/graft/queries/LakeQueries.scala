@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.money
-import graft.ops.{Merge, Warehouse}
+import graft.ops.{Caching, Merge, Warehouse}
 import graft.tables.Tables
 import Common._
 
@@ -83,16 +83,16 @@ private[queries] object LakeQueries {
     // reference's validator checks (FK closure, total reconciliation) ---
     QuerySpec("q162_datagen_gate", { (s, d) =>
       val cfg = graft.ingest.DataGen.Config()
-      // shared-subtree persists (Caching contract, harness releaseAll
-      // reclaims): the six 1-row aggregate branches below reference the
-      // generated frames 2-3x each, and ReuseExchange does not merge the
-      // re-planned generator subtrees — unpersisted, the whole generation
-      // pipeline re-runs per branch (measured 5.1 -> ~2 s at sf0.1)
-      val custs = graft.ingest.DataGen.customers(s, cfg).persist()
-      val prods = graft.ingest.DataGen.products(s, cfg).persist()
+      // materialized (Caching contract, the harness releases them): the
+      // six 1-row aggregate branches below reference the generated frames
+      // 2-3x each, and ReuseExchange does not merge the re-planned
+      // generator subtrees — uncached, the whole generation pipeline
+      // re-runs per branch (measured 5.1 -> ~2 s at sf0.1)
+      val custs = Caching.materialize(graft.ingest.DataGen.customers(s, cfg))
+      val prods = Caching.materialize(graft.ingest.DataGen.products(s, cfg))
       val (orders0, items0) = graft.ingest.DataGen.ordersAndItems(s, cfg)
-      val orders = orders0.persist()
-      val items = items0.persist()
+      val orders = Caching.materialize(orders0)
+      val items = Caching.materialize(items0)
       val nc = custs.agg(count(lit(1)).as("n_customers"))
       val np = prods.agg(count(lit(1)).as("n_products"))
       val no = orders.agg(count(lit(1)).as("n_orders"))
@@ -116,7 +116,7 @@ private[queries] object LakeQueries {
         "CAST(100000 AS BIGINT) AS n_orders, TRUE AS fk_customers_ok, " +
         "TRUE AS fk_products_ok, TRUE AS totals_ok")),
     QuerySpec("q211_version_drift", { (s, d) =>
-      val docs = t(s, d, "documents").select("doc_id", "text").persist()
+      val docs = t(s, d, "documents").select("doc_id", "text")
       val lake = graft.tables.TempLakes.lake(s, "graft_drift_lake")
       lake.write(docs.filter(col("doc_id") % 2 === 0), "docs", "overwrite"): Unit
       lake.write(docs.filter(col("doc_id") % 2 === 1), "docs", "append"): Unit
@@ -141,11 +141,10 @@ private[queries] object LakeQueries {
         "CAST(sum(st) AS DOUBLE) / CAST(max(tnt) AS DOUBLE)) / 2000000.0, 6) AS js_nats " +
         "FROM terms")),
     QuerySpec("q189_novelty_view", { (s, d) =>
-      // shared-subtree persist (Caching contract): the slice feeds two base
-      // writes, the rebuild aggregation, and the final join-back — four
-      // scans of the same projection without it
+      // uncached: the slice's readers (two base writes, the final
+      // join-back) each re-read a column-pruned parquet scan
       val docs = t(s, d, "documents").filter(col("doc_id") % 2 === 0)
-        .select("doc_id", "text").persist()
+        .select("doc_id", "text")
       val lake = graft.tables.TempLakes.lake(s, "graft_novelty_view_lake")
       lake.write(docs.filter(col("doc_id") % 3 =!= 0), "docs", "overwrite"): Unit
       graft.tables.Materialize.refreshNovelty(lake, "docs", "docs_novelty"): Unit

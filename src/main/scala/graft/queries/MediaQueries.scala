@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caching
 import graft.sim.Similarity
 import Common._
 
@@ -624,11 +625,11 @@ private[queries] object MediaQueries {
     // embedding extractor remains stubbed (no weights in this sandbox);
     // these are honest content features, not a model (budget <= 3 s) ---
     QuerySpec("q226_image_similarity", { (s, d) =>
-      // descriptors feed the corpus side AND the probe filter — persist
-      // (Caching contract) so the decode pass runs once
-      val desc = graft.multimodal.MediaDedup.imageDescriptors(
+      // descriptors feed the corpus side AND the probe filter —
+      // materialized so the decode pass runs once
+      val desc = Caching.materialize(graft.multimodal.MediaDedup.imageDescriptors(
         graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents"))).persist()
+          t(s, d, "documents"))))
       Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
     },
       // descriptor replay: dense 88-dim vectors from the planted formula
@@ -647,9 +648,9 @@ private[queries] object MediaQueries {
     // identical vector, so it always shares the probe's own cell
     // (budget <= 3 s) ---
     QuerySpec("q227_image_ann_ivf", { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.imageDescriptors(
+      val desc = Caching.materialize(graft.multimodal.MediaDedup.imageDescriptors(
         graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-          t(s, d, "documents"))).persist()
+          t(s, d, "documents"))))
       val probes = desc.filter(col("vec_id") < 10)
       Similarity.recallGate(
         Similarity.bruteForceTopK(desc, probes, 3),
@@ -666,9 +667,9 @@ private[queries] object MediaQueries {
     // over the planted clip triples, bit-replayable cosine
     // (budget <= 3 s) ---
     QuerySpec("q228_audio_similarity", { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.audioDescriptors(
+      val desc = Caching.materialize(graft.multimodal.MediaDedup.audioDescriptors(
         graft.multimodal.MediaDedup.syntheticNearDupAudio(
-          t(s, d, "documents"))).persist()
+          t(s, d, "documents"))))
       Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
     },
       // audio descriptor replay: q220's planted window energies as a dense
@@ -800,9 +801,9 @@ private[queries] object MediaQueries {
     // surface runs over what videos CONTAIN; integer dims keep cosine
     // bit-replayable (budget <= 3 s) ---
     QuerySpec("q233_video_similarity", { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.videoDescriptors(
+      val desc = Caching.materialize(graft.multimodal.MediaDedup.videoDescriptors(
         graft.multimodal.MediaDedup.syntheticNearDupVideos(
-          t(s, d, "documents")), everyN = 2).persist()
+          t(s, d, "documents")), everyN = 2))
       Similarity.bruteForceTopK(desc, desc.filter(col("vec_id") < 10), 3)
     },
       // video descriptor replay: per sampled frame the 64 gray block means
@@ -896,12 +897,10 @@ private[queries] object MediaQueries {
     // and two closure materializations in the timed region — fixed per-job
     // scheduling, not data (a half→quarter slice moved it 0.12 s) ---
     QuerySpec("q236_video_ingest_twin", { (s, d) =>
-      // fixture persists: both batches and every write action re-read the
-      // payload rows; without it each action re-encodes the AVI bytes
-      // (Caching contract — harness releaseAll reclaims)
-      val media = graft.multimodal.MediaDedup.syntheticNearDupVideos(
-        t(s, d, "documents").filter(expr("(doc_id div 3) % 2 = 0")))
-        .toDF().persist()
+      // fixture materialized: both batches and every write action re-read
+      // the payload rows; uncached, each action re-encodes the AVI bytes
+      val media = Caching.materialize(graft.multimodal.MediaDedup.syntheticNearDupVideos(
+        t(s, d, "documents").filter(expr("(doc_id div 3) % 2 = 0"))).toDF())
       graft.stream.MediaIngest.videoIngestTwin(s,
         media.filter(col("media_id") % 2 === 0),
         media.filter(col("media_id") % 2 === 1))
@@ -1220,9 +1219,9 @@ private[queries] object MediaQueries {
     // ANN-served similarity matrix (text/image/audio/video). Pure
     // registration over existing operators (budget <= 2 s) ---
     QuerySpec("q254_audio_ann_ivf", { (s, d) =>
-      val desc = graft.multimodal.MediaDedup.audioDescriptors(
+      val desc = Caching.materialize(graft.multimodal.MediaDedup.audioDescriptors(
         graft.multimodal.MediaDedup.syntheticNearDupAudio(
-          t(s, d, "documents"))).persist()
+          t(s, d, "documents"))))
       val probes = desc.filter(col("vec_id") < 10)
       Similarity.recallGate(
         Similarity.bruteForceTopK(desc, probes, 3),
@@ -1251,10 +1250,11 @@ private[queries] object MediaQueries {
     // scheduling that amortizes at scale (the q223 pattern) ---
     QuerySpec("q253_joint_ingest_twin", { (s, d) =>
       val docs = t(s, d, "documents").filter(col("doc_id") < 1998)
-      // single-pass fixture assembly, persisted: each batch body reads its
-      // batchDf twice (fingerprints + admit join) — unpersisted, every
-      // read re-synthesizes all payloads (releaseAll reclaims per-query)
-      val items = graft.multimodal.MediaDedup.syntheticJointItems(docs).persist()
+      // single-pass fixture assembly, materialized: each batch body reads
+      // its batchDf twice (fingerprints + admit join) — uncached, every
+      // read re-synthesizes all payloads
+      val items = Caching.materialize(
+        graft.multimodal.MediaDedup.syntheticJointItems(docs))
       graft.stream.MediaIngest.jointIngestTwin(s,
         items.filter(col("item_id") % 2 === 0),
         items.filter(col("item_id") % 2 === 1))
@@ -2689,9 +2689,9 @@ private[queries] object MediaQueries {
     // oracle-checked (q238, q242, q161); this row proves the joint chain
     // (budget <= 5 s — it contains the full q238 closure) ---
     QuerySpec("q247_multimodal_curation_artifact", { (s, d) =>
-      val docs = t(s, d, "documents").filter(col("doc_id") < 1998).persist()
-      val images = graft.multimodal.MediaDedup
-        .syntheticCrossFormatImages(docs).persist()
+      val docs = t(s, d, "documents").filter(col("doc_id") < 1998)
+      val images = Caching.materialize(graft.multimodal.MediaDedup
+        .syntheticCrossFormatImages(docs))
       val canon = graft.multimodal.MediaDedup.multimodalClusters(docs,
           images, graft.multimodal.MediaDedup.syntheticNearDupAudio(docs))
         .filter(col("item_id") === col("cluster_id")).select("item_id")
@@ -2799,8 +2799,8 @@ private[queries] object MediaQueries {
     // rejected and replays are idempotent. Oracle = the q229 recursive
     // template over the q220 afp replay (budget <= 3 s) ---
     QuerySpec("q244_audio_ingest_twin", { (s, d) =>
-      val media = graft.multimodal.MediaDedup.syntheticNearDupAudio(
-        t(s, d, "documents")).toDF().persist()
+      val media = Caching.materialize(graft.multimodal.MediaDedup
+        .syntheticNearDupAudio(t(s, d, "documents")).toDF())
       graft.stream.MediaIngest.audioIngestTwin(s,
         media.filter(col("media_id") % 2 === 0),
         media.filter(col("media_id") % 2 === 1))
@@ -2829,8 +2829,8 @@ private[queries] object MediaQueries {
     // oracle-checked (q225, q242, q161); this row proves the chain.
     // Fixture persists (every stage re-reads payloads) ---
     QuerySpec("q243_media_curation_artifact", { (s, d) =>
-      val media = graft.multimodal.MediaDedup.syntheticCrossFormatImages(
-        t(s, d, "documents")).persist()
+      val media = Caching.materialize(graft.multimodal.MediaDedup
+        .syntheticCrossFormatImages(t(s, d, "documents")))
       val canon = graft.multimodal.MediaDedup.imageClusters(media)
         .filter(col("media_id") === col("cluster_id")).select("media_id")
       val survivors = graft.multimodal.MediaDedup.imageQualityStats(media)

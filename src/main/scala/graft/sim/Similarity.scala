@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.ops.Caching
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -446,8 +447,8 @@ object Similarity {
         directed.select(col("dst_id").as("src_id"), col("src_id").as("dst_id")))
       else directed
     // the component frame IS its cache entry (the connectedComponents
-    // contract); harnesses reclaim it via Caching.releaseAll, the
-    // dedupCorpusShingle discipline
+    // contract); the caller's release, or the harnesses' releaseAll,
+    // reclaims it
     val comps = graft.ops.Graph.connectedComponents(edges, "src_id", "dst_id")
       .toDF("vec_id", "cluster_id")
     corpus.select(col("vec_id"))
@@ -606,33 +607,35 @@ object Similarity {
     * thresholds prune hard; loose ones approach the full join) — the right
     * trade for a DECONTAMINATION gate, where a missed hit means benchmark
     * leakage into training data and recall must be 1. The train-side
-    * projection is persisted (it feeds the radius aggregate and the
-    * candidate join — Caching contract, caller releases). */
+    * projection is a scoped interim (it feeds the radius aggregate and the
+    * candidate join — Caching contract); the per-train-row result is
+    * materialized and the caller releases it. */
   def semanticContaminationIvf(train: DataFrame, bench: DataFrame,
                                threshold: Double, nLists: Int = 8,
                                seed: Long = 42L, iters: Int = 8,
-                               portableInit: Boolean = false): DataFrame = {
-    val eps = lit(math.sqrt(2.0 - 2.0 * threshold))
-    def normed(v: Column): Column = transform(v, x => x / sqrt(dot(v, v)))
-    val cents = ivfBuild(
-      train.select(col("vec_id"),
-        normed(asDouble(col("embedding"))).as("embedding")),
-      nLists, seed, iters, portableInit = portableInit).centroids
-    val asnT = vectors(train, "train_id", "tv")
-      .withColumn("m", array_min(cellDistArr(normed(col("tv")), cents)))
-      .select(col("train_id"), col("tv"), col("m.cell").as("cell"),
-        sqrt(greatest(col("m.dist"), lit(0.0))).as("dtr"))
-      .persist()
-    val radii = asnT.groupBy("cell").agg(max(col("dtr")).as("r"))
-    val cand = vectors(bench, "bench_id", "bv")
-      .withColumn("c", explode(cellDistArr(normed(col("bv")), cents)))
-      .select(col("bench_id"), col("bv"), col("c.cell").as("cell"),
-        sqrt(greatest(col("c.dist"), lit(0.0))).as("dq"))
-      .join(broadcast(radii), Seq("cell"))
-      .filter(col("dq") <= eps + col("r"))
-      .select("bench_id", "bv", "cell")
-    closestBench(spread(asnT, col("train_id")).join(cand, Seq("cell")), threshold)
-  }
+                               portableInit: Boolean = false): DataFrame =
+    Caching.scoped { scope =>
+      val eps = lit(math.sqrt(2.0 - 2.0 * threshold))
+      def normed(v: Column): Column = transform(v, x => x / sqrt(dot(v, v)))
+      val cents = ivfBuild(
+        train.select(col("vec_id"),
+          normed(asDouble(col("embedding"))).as("embedding")),
+        nLists, seed, iters, portableInit = portableInit).centroids
+      val asnT = scope.materialize(vectors(train, "train_id", "tv")
+        .withColumn("m", array_min(cellDistArr(normed(col("tv")), cents)))
+        .select(col("train_id"), col("tv"), col("m.cell").as("cell"),
+          sqrt(greatest(col("m.dist"), lit(0.0))).as("dtr")))
+      val radii = asnT.groupBy("cell").agg(max(col("dtr")).as("r"))
+      val cand = vectors(bench, "bench_id", "bv")
+        .withColumn("c", explode(cellDistArr(normed(col("bv")), cents)))
+        .select(col("bench_id"), col("bv"), col("c.cell").as("cell"),
+          sqrt(greatest(col("c.dist"), lit(0.0))).as("dq"))
+        .join(broadcast(radii), Seq("cell"))
+        .filter(col("dq") <= eps + col("r"))
+        .select("bench_id", "bv", "cell")
+      Caching.materialize(closestBench(
+        spread(asnT, col("train_id")).join(cand, Seq("cell")), threshold))
+    }
 
   /** Exact embedding near-duplicate pairs within equality blocks (e.g. a
     * label/shard/partition column): equi-join on the block key bounds the
@@ -911,15 +914,14 @@ object Similarity {
     * (dist, code) argmin + subspace-ordered reassembly yields the m-byte
     * code arrays.
     *
-    * The returned code table is PERSISTED (shared-subtree mode of the
-    * [[graft.ops.Caching]] contract): it is exactly the structure ADC keeps
+    * The returned code table is MATERIALIZED (the [[graft.ops.Caching]]
+    * contract): it is exactly the structure ADC keeps
     * memory-resident in FAISS — (vec_id, m codes), bytes-per-vector tiny —
     * and every consumer reads it repeatedly ([[pqGate]] alone derives the
     * truth distances, the scored stream, and the rank join from it; without
     * the persist each branch re-runs the full distributed encode — measured
-    * 3 encodes per q143 gate). Fills on the first action; the caller
-    * reclaims it afterwards via [[graft.ops.Caching.releaseAll]] /
-    * `spark.catalog.clearCache()` (the harnesses already do). */
+    * 3 encodes per q143 gate). The caller releases `codes` with
+    * [[graft.ops.Caching.release]] (the harnesses' releaseAll does). */
   def pqBuild(corpus: DataFrame, m: Int = 8, codesPerSub: Int = 16,
               seed: Long = 42L, iters: Int = 8): PQIndex = {
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
@@ -933,7 +935,8 @@ object Similarity {
       lloydFit(sample.map(v => java.util.Arrays.copyOfRange(v, off, off + subDim)),
         codesPerSub, iters)
     }
-    PQIndex(pqEncode(base, codebooks, m, subDim).persist(), codebooks, m, subDim)
+    PQIndex(Caching.materialize(pqEncode(base, codebooks, m, subDim)),
+      codebooks, m, subDim)
   }
 
   /** The distributed PQ encode pass: subvectors explode to (vec_id, j,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.Caching
 import graft.tables.{LakeTable, Tables}
 import graft.text.{Dedup, TextStats}
 
@@ -178,12 +177,13 @@ object CorpusIngest {
         case None => gated
       }
       // in-batch: exact dedup, then near-dup clusters keep min doc_id
-      val exact = scope.persist(Dedup.dropExactDups(gatedNb))
-      val inPairs = scope.persist(
+      val exact = scope.materialize(Dedup.dropExactDups(gatedNb))
+      // read once, by the closure: not cached
+      val inPairs =
         if (shingleVerify) Dedup.minhashNearDupsShingle(exact, numPerms,
           bands, shingleSize, threshold)
         else Dedup.minhashNearDups(exact, numPerms, bands,
-          shingleSize, threshold))
+          shingleSize, threshold)
       val jaccardKept = Dedup.keepComponentMin(exact,
         scope.hold(Dedup.clusterPairs(inPairs)), "doc_id")
       // in-batch containment (opt-in): drop docs embedded in other batch
@@ -206,25 +206,23 @@ object CorpusIngest {
           tracked.result
         case None => jaccardKept
       }
-      // materialized flat leaves at the two deep cut points: by here the
-      // logical tree is gate -> exact -> LSH+verify -> closure ->
-      // containment -> re-sign, and the vs-lake stage below issues ~8 more
-      // actions on derivatives of it — each would re-analyze the whole
-      // tree (Catalyst planning, not execution, measured ~46 s of the
-      // 53 s batch-2 wall clock; the data itself is ~100k rows)
-      def cutFlat(df: DataFrame): DataFrame = scope.hold(Caching.materialize(df))
-      val indexed = cutFlat(withLshBands(
+      // flat leaves at the two deep cut points: by here the logical tree
+      // is gate -> exact -> LSH+verify -> closure -> containment -> re-sign,
+      // and the vs-lake stage below issues ~8 more actions on derivatives
+      // of it — each would re-analyze the whole tree (Catalyst planning,
+      // not execution, measured ~46 s of the 53 s batch-2 wall clock; the
+      // data itself is ~100k rows)
+      val indexed = scope.materialize(withLshBands(
         batchKept.withColumn("dup_key", Dedup.exactKey(col("text"))),
         batchKept, "doc_id", numPerms, bands, shingleSize))
       val novel =
         if (!lake.exists(table)) indexed
         else {
           val committed = lake.read(table)
-          // (1) exact: anti-join on the 128-bit key
-          // filled now: `novel` reads it three times, and its lazy fill
-          // inside that job ran its lineage twice in one task and failed
-          // (NPE in UnsafeExternalSorter.insertRecord, q196)
-          val notExact = cutFlat(indexed.join(
+          // (1) exact: anti-join on the 128-bit key; filled before
+          // `novel` reads it three times (a lazy fill inside that job ran
+          // its lineage twice in one task and failed, q196)
+          val notExact = scope.materialize(indexed.join(
             committed.select(col("dup_key")), Seq("dup_key"), "left_anti"))
           // (2) band-key candidates, (3) exact Jaccard (word sets, or
           // shingle sets under shingleVerify)
@@ -261,13 +259,13 @@ object CorpusIngest {
           MicroBatch.land(lake, Dedup.docGrams(missing, shingleSize), gramsTable)
       }
       // novel IS indexed when the lake is empty (first batch) — already
-      // materialized above; a second cutFlat would pay one more fill job
-      // for the identical frame
-      val novelF = if (novel eq indexed) indexed else cutFlat(novel)
+      // filled above; a second persist would pay one more fill job for
+      // the identical frame
+      val novelF = if (novel eq indexed) indexed else scope.materialize(novel)
       var batchGrams: Option[DataFrame] = None
       val landed0 = containmentThreshold match {
         case Some(t) if lake.exists(gramsTable) =>
-          val grams = scope.persist(Dedup.docGrams(novelF, shingleSize))
+          val grams = scope.materialize(Dedup.docGrams(novelF, shingleSize))
           batchGrams = Some(grams)
           val sz = Dedup.gramSetSizes(grams)
           val sketch = Dedup.bottomKSketch(grams, sketchK)
@@ -291,7 +289,7 @@ object CorpusIngest {
       }
       // one evaluation of the whole per-batch pipeline: the corpus write
       // AND the grams-index write below both read `landed`
-      val landed = scope.persist(landed0)
+      val landed = scope.materialize(landed0)
       MicroBatch.land(lake, landed, table)
       // maintain the containment index for the NEXT batches (landed rows
       // only, so the index mirrors the table; a crash before this write

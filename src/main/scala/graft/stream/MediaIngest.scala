@@ -81,8 +81,8 @@ object MediaIngest {
     import spark.implicits._
     val media = batchDf.as[Multimodal.MediaRow]
     // fingerprints feed the in-batch pair stage, the cross-batch check,
-    // and the admit join (shared-subtree persist)
-    val fps = scope.persist(fingerprint(media))
+    // and the admit join (a scoped interim)
+    val fps = scope.materialize(fingerprint(media))
     // in-batch perceptual dedup: min media_id per Hamming component
     val pairs = Dedup.hammingBandPairs(fps, "dhash", MediaDedup.FingerprintBits,
       maxHamming, bands, idCol = "media_id")
@@ -191,8 +191,8 @@ object MediaIngest {
       val frameTable = s"${table}_frames"
       val media = batchDf.as[Multimodal.MediaRow]
       // frame hashes feed the in-batch pair stage, the counts, the lake
-      // check, and the admitted-frames append (shared-subtree persist)
-      val fh = scope.persist(MediaDedup.videoFrameHashes(media, everyN))
+      // check, and the admitted-frames append (a scoped interim)
+      val fh = scope.materialize(MediaDedup.videoFrameHashes(media, everyN))
       val counts = fh.groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
       // in-batch shared-frame dedup: min media_id per containment component
       val pairs = MediaDedup.videoContainment(
@@ -205,7 +205,7 @@ object MediaIngest {
       // against the lake: the committed FRAME index is the dedup state.
       // novel is |batch-videos|-grain and feeds BOTH table writes — persist
       // so the banded cross-check chain runs once, not once per write
-      val novel = scope.persist(
+      val novel = scope.materialize(
         if (lake.exists(frameTable)) {
           val committed = lake.read(frameTable)
             .select("media_id", "frame_idx", "dhash")
@@ -292,8 +292,7 @@ object MediaIngest {
       // partition-local pass over both payload columns (two separate
       // fingerprint datasets would shuffle-join at batch grain — measured
       // scheduling tax) + caption MinHash band hashes. Feeds the pair
-      // stages, the lake checks, and the admit join — shared-subtree
-      // persist
+      // stages, the lake checks, and the admit join — a scoped interim
       val mediaFp = batchDf
         .select(col("item_id"), col("image"), col("audio"))
         .as[(Long, Array[Byte], Array[Byte])]
@@ -302,13 +301,13 @@ object MediaIngest {
             MediaDedup.audioFingerprintOne(id, aud))
         })
         .toDF("item_id", "dhash", "afp")
-      val fps = scope.persist(CorpusIngest.withLshBands(mediaFp, docs,
+      val fps = scope.materialize(CorpusIngest.withLshBands(mediaFp, docs,
         "item_id", numPerms, textBands, shingleSize))
       // in-batch: the ANY-modality union pair graph, min-id keep. Text
       // candidates come from the PERSISTED band hashes (one signature
       // pass per batch, not two) + exact shingle-Jaccard verify — the
       // same banded==brute contract as Dedup.minhashNearDupsShingle
-      val shAll = scope.persist(Dedup.hashedShingleSets(docs, shingleSize))
+      val shAll = scope.materialize(Dedup.hashedShingleSets(docs, shingleSize))
       val bandsEx = fps.select(col("item_id"), explode(col("lsh_bands")).as("b"))
       val candT = bandsEx.as("x").join(bandsEx.as("y"),
           col("x.b") === col("y.b") && col("x.item_id") < col("y.item_id"))
@@ -329,7 +328,7 @@ object MediaIngest {
         scope.hold(Dedup.clusterPairs(tp.union(ip).union(ap).distinct()))
       // kept feeds the three lake checks AND the admit join — persist, or
       // the pair+closure subtree re-evaluates once per consumer
-      val kept = scope.persist(Dedup.keepComponentMin(fps, clusters, "item_id"))
+      val kept = scope.materialize(Dedup.keepComponentMin(fps, clusters, "item_id"))
       // against the lake: rejected on ANY modality match vs committed rows
       val novel =
         if (lake.exists(table)) {

@@ -293,9 +293,9 @@ object Dedup {
   private[graft] final case class TrackedContainment(
       result: DataFrame, caches: Seq[Dataset[_]], rawGrams: DataFrame)
 
-  /** [[containmentNearDupsBanded]] plus its shared-subtree cache entries,
-    * for callers that must release them deterministically once the result
-    * is consumed (a long-running streaming query has no harness
+  /** [[containmentNearDupsBanded]] plus its [[graft.ops.Caching.stage]]
+    * entries, for callers that must release them deterministically once
+    * the result is consumed (a long-running streaming query has no harness
     * [[graft.ops.Caching.releaseAll]] hook between micro-batches —
     * without the handles the per-batch persists accumulate without bound
     * in executor storage memory). Batch callers keep using the public
@@ -439,12 +439,15 @@ object Dedup {
     * min-per-gram aggregate (vocabulary-sized), one hash join back —
     * nothing document-sized shuffles twice. Deterministic: ties inside one
     * document count as novel exactly once (min doc_id == the doc). */
-  def gramNovelty(docs: DataFrame, shingleSize: Int = 3): DataFrame = {
-    // shared-subtree persist (Caching contract): the min-per-gram branch
-    // and the join-back both read the hashed gram stream
-    val grams = docGrams(docs, shingleSize).persist()
-    noveltyAgainst(grams, grams.groupBy("g").agg(min("doc_id").as("first_doc")))
-  }
+  def gramNovelty(docs: DataFrame, shingleSize: Int = 3): DataFrame =
+    Caching.scoped { scope =>
+      // scoped interim (Caching contract): the min-per-gram branch and the
+      // join-back both read the hashed gram stream; the result is
+      // materialized and the caller releases it
+      val grams = scope.materialize(docGrams(docs, shingleSize))
+      Caching.materialize(noveltyAgainst(grams,
+        grams.groupBy("g").agg(min("doc_id").as("first_doc"))))
+    }
 
   /** Per-doc novelty of a hashed-gram stream against a (g, first_doc)
     * first-occurrence table — the join-back + ratio stage shared by the
@@ -959,11 +962,13 @@ object Dedup {
     * the boundary scaffold is a |splits|² cross join (≤ 9 rows). */
   def splitLeakageAudit(docs: DataFrame, threshold: Double = 0.8,
                         numPerms: Int = 128, bands: Int = 32,
-                        shingleSize: Int = 3, maxDf: Long = 1000): DataFrame = {
+                        shingleSize: Int = 3,
+                        maxDf: Long = 1000): DataFrame = Caching.scoped { scope =>
     // split assignments feed the straddle join, the gram join, and the
-    // scaffold (shared-subtree persist, Caching contract — releaseAll)
-    val split = clusterSplit(docs, threshold, numPerms, bands, shingleSize)
-      .select(col("doc_id"), col("split")).persist()
+    // scaffold; grams feed the DF prune and both gram-join sides (scoped
+    // interims, Caching contract); the split-pair result is materialized
+    val split = scope.materialize(clusterSplit(docs, threshold, numPerms, bands,
+      shingleSize).select(col("doc_id"), col("split")))
     val boundary = Seq(
       least(col("sa"), col("sb")).as("split_a"),
       greatest(col("sa"), col("sb")).as("split_b"))
@@ -974,8 +979,7 @@ object Dedup {
       .filter(col("sa") =!= col("sb"))
       .select(boundary: _*)
       .groupBy("split_a", "split_b").agg(count(lit(1)).as("n_dups"))
-    val grams = docGrams(docs, shingleSize).persist()
-    val kept = keptGrams(grams, maxDf)
+    val kept = keptGrams(scope.materialize(docGrams(docs, shingleSize)), maxDf)
     val sz = gramSetSizes(kept)
     val withSplit = kept.join(split, "doc_id")
     val maxJ = withSplit
@@ -992,7 +996,7 @@ object Dedup {
       .groupBy("split_a", "split_b")
       .agg(round(max(col("j")), 6).as("max_cross_jaccard"))
     val names = split.select("split").distinct()
-    names.select(col("split").as("sa"))
+    Caching.materialize(names.select(col("split").as("sa"))
       .crossJoin(names.select(col("split").as("sb")))
       .filter(col("sa") < col("sb"))
       .select(col("sa").as("split_a"), col("sb").as("split_b"))
@@ -1000,7 +1004,7 @@ object Dedup {
       .join(maxJ, Seq("split_a", "split_b"), "left")
       .select(col("split_a"), col("split_b"),
         coalesce(col("n_dups"), lit(0L)).as("n_straddling_dups"),
-        coalesce(col("max_cross_jaccard"), lit(0.0)).as("max_cross_jaccard"))
+        coalesce(col("max_cross_jaccard"), lit(0.0)).as("max_cross_jaccard")))
   }
 
   /** WHY was this pair flagged — audit-trail evidence for near-dup
@@ -1016,14 +1020,15 @@ object Dedup {
     * pair-grain × per-doc grams — bounded by the (already banded) pair
     * set, never corpus². */
   def explainNearDups(docs: DataFrame, pairs: DataFrame,
-                      shingleSize: Int = 3, topK: Int = 5): DataFrame = {
-    // the distinct gram stream feeds the df aggregate AND both pair
-    // sides (shared-subtree persist, the Caching contract)
-    val e = graft.text.TextStats.gramStream(docs, shingleSize)
-      .distinct().persist()
+                      shingleSize: Int = 3,
+                      topK: Int = 5): DataFrame = Caching.scoped { scope =>
+    // the distinct gram stream feeds the df aggregate AND both pair sides
+    // (a scoped interim, the Caching contract); the evidence is materialized
+    val e = scope.materialize(
+      graft.text.TextStats.gramStream(docs, shingleSize).distinct())
     val dfreq = e.groupBy("gram")
       .agg(countDistinct(col("doc_id")).as("gram_df"))
-    pairs.select("doc_a", "doc_b")
+    Caching.materialize(pairs.select("doc_a", "doc_b")
       .join(e.select(col("doc_id").as("doc_a"), col("gram")), Seq("doc_a"))
       .join(e.select(col("doc_id").as("doc_b"), col("gram")),
         Seq("doc_b", "gram"))
@@ -1034,6 +1039,6 @@ object Dedup {
           .orderBy(col("gram_df"), col("gram"))))
       .filter(col("rn") <= topK)
       .select(col("doc_a"), col("doc_b"), col("gram"), col("gram_df"),
-        col("rn"))
+        col("rn")))
   }
 }

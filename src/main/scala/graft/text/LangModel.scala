@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Caching
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,11 +27,10 @@ import org.apache.spark.sql.functions._
   * SQL. Tokens are keyed by the md5-based [[Dedup.portableTokenHash]] so
   * the count tables join on 64-bit longs, not strings, on any engine.
   *
-  * Scale shape: ONE tokenize pass over the corpus (persisted in the
-  * SHARED-SUBTREE mode of the [[graft.ops.Caching]] contract: the returned
-  * frame is NOT the cache entry, so callers reclaim it with
-  * [[graft.ops.Caching.releaseAll]] / `spark.catalog.clearCache()` after
-  * the result's actions, as the harnesses do); the bigram/unigram model
+  * Scale shape: ONE tokenize pass over the corpus (a scoped interim of
+  * the [[graft.ops.Caching]] contract; the returned score table is
+  * materialized and the caller releases it with
+  * [[graft.ops.Caching.release]]); the bigram/unigram model
   * tables are bounded by the TRAIN slice's
   * vocabulary and join the scoring stream as ordinary shuffled equi-joins
   * on 64-bit keys (nothing document-sized is broadcast); the (N, V) totals
@@ -168,16 +168,16 @@ object LangModel {
     * representable longs — identical in any IEEE engine). Lower = more
     * fluent under the trusted slice's language model.
     *
-    * One tokenize pass: the event stream carries the train flag and is
-    * persisted, then [[trainLm]]'s fit reads its train rows and
-    * [[scoreWithLm]]'s serve its other rows. */
-  def lmScore(docs: DataFrame, isTrain: Column): DataFrame = {
-    val paired = pairedEvents(
-        docs.select(col("doc_id"), col("text"), isTrain.as("is_train")),
-        Seq("is_train"))
-      .persist()
-    serveLm(fitLm(paired.filter(col("is_train")), "lmScore"),
-      paired.filter(!col("is_train")))
+    * One tokenize pass: the event stream carries the train flag and is a
+    * scoped interim, then [[trainLm]]'s fit reads its train rows and
+    * [[scoreWithLm]]'s serve its other rows. The score table is
+    * materialized; the caller releases it. */
+  def lmScore(docs: DataFrame, isTrain: Column): DataFrame = Caching.scoped { scope =>
+    val paired = scope.materialize(pairedEvents(
+      docs.select(col("doc_id"), col("text"), isTrain.as("is_train")),
+      Seq("is_train")))
+    Caching.materialize(serveLm(fitLm(paired.filter(col("is_train")), "lmScore"),
+      paired.filter(!col("is_train"))))
   }
 
   /** CCNet's head/middle/tail split composed on [[lmScore]]: rank the

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.Caching
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,10 +34,9 @@ import org.apache.spark.sql.functions._
   * hash-replayable in SQL. Predicates `isPositive`/`isNegative` should be
   * disjoint; a doc matching both counts toward both classes.
   *
-  * Scale shape: ONE tokenize+gram pass over the corpus (persisted in the
-  * SHARED-SUBTREE mode of the [[graft.ops.Caching]] contract — the count
-  * tables and the scoring stream both read it; callers reclaim via
-  * [[graft.ops.Caching.releaseAll]]); the weight table is bounded by
+  * Scale shape: ONE corpus scan (a materialized projection or gram
+  * stream of the [[graft.ops.Caching]] contract — the count tables and
+  * the scoring stream both read it); the weight table is bounded by
   * min(observed grams, numBuckets) rows and joins the gram stream as an
   * ordinary shuffled equi-join on a long key; the (N_pos, N_neg) totals
   * collapse to driver-side literals via ONE bounded aggregate head — the
@@ -124,26 +124,34 @@ object QualityClassifier {
     * `isPositive`/`isNegative` slices, then EVERY document with at least
     * one token served (the training slices included — a score is just a
     * projection through the count tables, and the pool being filtered
-    * usually IS the negative class). The persisted gram stream feeds both
-    * the fit and the serve. Same schema as [[scoreWithClassifier]]. */
+    * usually IS the negative class). The labelled corpus projection and
+    * the bucket counts are materialized, so the corpus is scanned once and
+    * tokenized twice (the fit, the serve); the returned score table stays
+    * lazy and both entries are the caller's to release (the harnesses'
+    * [[graft.ops.Caching.releaseAll]]). Same schema as
+    * [[scoreWithClassifier]]. */
   def classifierScore(docs: DataFrame, isPositive: Column, isNegative: Column,
                       numBuckets: Int = 1 << 18): DataFrame = {
-    val grams = gramStream(docs, isPositive, isNegative, numBuckets).persist()
-    serveClassifier(
-      fitClassifier(bucketCounts(grams), numBuckets, "classifierScore"), grams)
+    val grams = gramStream(Caching.materialize(docs.select(col("doc_id"),
+        col("text"), isPositive.as("is_p"), isNegative.as("is_n"))),
+      col("is_p"), col("is_n"), numBuckets)
+    serveClassifier(fitClassifier(Caching.materialize(bucketCounts(grams)),
+      numBuckets, "classifierScore"), grams)
   }
 
-  /** Train on the labeled slices only. The count table is persisted: the
-    * totals head() and the returned weights frame both read it —
-    * unpersisted, the full tokenize+gram corpus pass runs twice
-    * (shared-subtree Caching contract, harness releaseAll reclaims). */
+  /** Train on the labeled slices only. The count table is a scoped
+    * interim: the totals head() and the weights both read it — uncached,
+    * the full tokenize+gram corpus pass runs twice. The returned weights
+    * are materialized; the caller releases them. */
   def trainQualityClassifier(docs: DataFrame, isPositive: Column,
                              isNegative: Column,
                              numBuckets: Int = 1 << 18): NbModel =
-    fitClassifier(
-      bucketCounts(gramStream(docs, isPositive, isNegative, numBuckets))
-        .persist(),
-      numBuckets, "trainQualityClassifier")
+    Caching.scoped { scope =>
+      val m = fitClassifier(scope.materialize(bucketCounts(
+        gramStream(docs, isPositive, isNegative, numBuckets))),
+        numBuckets, "trainQualityClassifier")
+      m.copy(weights = Caching.materialize(m.weights))
+    }
 
   /** Persist a trained classifier into the lake as two versioned tables
     * (`{prefix}_nb_weights`, `{prefix}_nb_meta`) — the classifier sibling

@@ -39,7 +39,7 @@ object TextFeatures {
       // persist is a scoped interim; the doc-grain result, far smaller than
       // the (doc × token) explode, is materialized, so repeated library calls
       // leak nothing and [[Caching.release]] reclaims the result.
-      val tok = scope.persist(docs.select(col("doc_id"),
+      val tok = scope.materialize(docs.select(col("doc_id"),
           explode(TextStats.normTokens()).as("tok"))
         .select(col("doc_id"),
           pmod(Dedup.portableTokenHash(col("tok")), lit(numFeatures.toLong))
@@ -215,22 +215,22 @@ object TextFeatures {
     * and every per-doc weight is then an exact long sum of
     * count × micronat — order-independent, hash-replayable in SQL.
     *
-    * Scale shape: ONE corpus tokenize pass (persisted, Caching contract),
+    * Scale shape: ONE corpus tokenize pass (a scoped interim, Caching
+    * contract; the doc-grain result is materialized),
     * a `buckets`-sized model table broadcast back, and a map-side-combined
     * (doc, bucket) count aggregate — nothing document-sized is shuffled
     * twice, and the model table is bounded by `buckets` regardless of
     * corpus size. Returns (doc_id, n_grams, w_micronats) for every
     * NON-target document (the selection pool). */
   def dsirWeights(docs: DataFrame, isTarget: org.apache.spark.sql.Column,
-                  n: Int = 2, buckets: Int = 1024): DataFrame = {
+                  n: Int = 2, buckets: Int = 1024): DataFrame = Caching.scoped { scope =>
     // positional gram stream (TextStats.gramStream's codegen rationale);
     // multiplicity preserved — DSIR counts gram occurrences, not sets
-    val grams = TextStats.gramStream(
+    val grams = scope.materialize(TextStats.gramStream(
         docs.select(col("doc_id"), col("text"), isTarget.as("is_target")),
         n, carryCols = Seq("is_target"))
       .select(col("doc_id"), col("is_target"),
-        pmod(Dedup.portableTokenHash(col("gram")), lit(buckets.toLong)).as("b"))
-      .persist()
+        pmod(Dedup.portableTokenHash(col("gram")), lit(buckets.toLong)).as("b")))
     val stats = grams.groupBy("b").agg(
       sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
       sum(when(!col("is_target"), 1L).otherwise(0L)).as("cr"))
@@ -239,12 +239,12 @@ object TextFeatures {
     val lr = stats.crossJoin(broadcast(totals)) // buckets-sized × 1 row
       .select(col("b"), TextStats.laplaceLogOdds(col("ct"), col("cr"),
         col("tt"), col("tr"), buckets).as("lr"))
-    grams.filter(!col("is_target"))
+    Caching.materialize(grams.filter(!col("is_target"))
       .groupBy("doc_id", "b").agg(count(lit(1)).as("cnt"))
       .join(broadcast(lr), Seq("b"))
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_grams"),
-        sum(col("cnt") * col("lr")).as("w_micronats"))
+        sum(col("cnt") * col("lr")).as("w_micronats")))
   }
 
   /** DSIR RESAMPLING — the paper's actual data-selection step

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.functions.NormalizeText
+import graft.ops.Caching
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
@@ -571,25 +572,23 @@ object TextStats {
     *    documents;
     *  - the exploded stream collapses to per-(doc, bigram) COUNTS first,
     *    and both the model branch and the scoring branch read that SAME
-    *    aggregate: the counts frame is PERSISTED (the shared-subtree mode
-    *    of the [[graft.ops.Caching]] contract), so the explode+substring
-    *    corpus pass runs exactly once — the broadcast model fill populates
-    *    the cache, the scoring probe reads it back. ReuseExchange does NOT
-    *    deliver this (the three consumers re-plan the subtree separately;
+    *    aggregate over the normalized text, which is materialized
+    *    ([[graft.ops.Caching.materialize]]), so the corpus is scanned and
+    *    normalized once. Without a cache ReuseExchange does NOT deliver
+    *    this (the three consumers re-plan the subtree separately;
     *    measured: 3 parquet scans without the persist, 1 with —
-    *    PlanAuditSpec pins the count). Cache entry is doc×distinct-bigram
-    *    sized; the caller reclaims it after the result materializes
-    *    ([[graft.ops.Caching.releaseAll]] / `spark.catalog.clearCache()`).
+    *    PlanAuditSpec pins the count). The returned frame stays lazy, so
+    *    its plan shows the bigram explode; the text entry is the caller's
+    *    to release (the harnesses' [[graft.ops.Caching.releaseAll]]).
     * Documents shorter than 2 characters have no bigrams and drop out. */
   def charBigramLogScore(docs: DataFrame): DataFrame = {
-    val counts = docs
-      .select(col("doc_id"), normalize(col("text")).as("t"))
-      .filter(length(col("t")) >= 2) // sequence(1, n) REVERSES when n < 1
+    val counts = Caching.materialize(docs
+        .select(col("doc_id"), normalize(col("text")).as("t"))
+        .filter(length(col("t")) >= 2)) // sequence(1, n) REVERSES when n < 1
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(1), length(col("t")) - 1)).as("i"))
       .select(col("doc_id"), expr("substring(t, i, 2)").as("bg"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("n"))
-      .persist()
     val model = counts.groupBy("bg").agg(sum("n").as("n_bg"))
     val total = model.agg(sum("n_bg").as("n_total"))
     val costed = model.crossJoin(broadcast(total)) // 1-row scalar gate
@@ -636,11 +635,11 @@ object TextStats {
     * (order-independent; the only floats are the final two divisions).
     * High drift = the eval split no longer looks like training data —
     * the distribution-shift alarm of a data pipeline.
-    * The vocabulary-sized (token, ne, nt) aggregate is PERSISTED (shared-
-    * subtree mode of the [[graft.ops.Caching]] contract): the totals branch
-    * and the per-term branch both read it, so without the persist the
+    * The vocabulary-sized (token, ne, nt) aggregate is a scoped interim
+    * (the [[graft.ops.Caching]] contract): the totals branch and the
+    * per-term branch both read it, so without the persist the
     * tokenize+explode corpus pass runs twice. PlanAuditSpec pins one scan;
-    * the caller reclaims the (small) entry after the result materializes. */
+    * the one-row result is materialized and the caller releases it. */
   def splitTokenDrift(docs: DataFrame,
                       evalNibbles: Seq[String] = Seq("0", "1")): DataFrame =
     jsDriftFlagged(docs.select(
@@ -664,12 +663,11 @@ object TextStats {
       "n_a_tokens", "n_b_tokens")
 
   private def jsDriftFlagged(flagged: DataFrame, aName: String,
-                             bName: String): DataFrame = {
-    val tok = flagged
+                             bName: String): DataFrame = Caching.scoped { scope =>
+    val tok = scope.materialize(flagged
       .groupBy("tok")
       .agg(sum(when(col("is_eval"), 1L).otherwise(0L)).as("ne"),
-        sum(when(!col("is_eval"), 1L).otherwise(0L)).as("nt"))
-      .persist()
+        sum(when(!col("is_eval"), 1L).otherwise(0L)).as("nt")))
     val totals = tok.agg(sum("ne").as("tne"), sum("nt").as("tnt"))
     val terms = tok.crossJoin(broadcast(totals)) // 1-row scalar gate
       .select(col("ne"), col("nt"), col("tne"), col("tnt"),
@@ -690,14 +688,14 @@ object TextStats {
             (col("ne").cast("double") * col("tnt").cast("double")
               + col("nt").cast("double") * col("tne").cast("double")))
             * lit(1000000.0) + lit(0.5)).cast("long")).otherwise(0L).as("st"))
-    terms.groupBy("tne", "tnt")
+    Caching.materialize(terms.groupBy("tne", "tnt")
       .agg(sum("se").as("sume"), sum("st").as("sumt"),
         count(lit(1)).as("n_vocab"))
       .select(col("tne").as(aName), col("tnt").as(bName),
         col("n_vocab"),
         round((col("sume").cast("double") / col("tne").cast("double") +
           col("sumt").cast("double") / col("tnt").cast("double")) /
-          lit(2000000.0), 6).as("js_nats"))
+          lit(2000000.0), 6).as("js_nats")))
   }
 
   /** Jensen–Shannon divergence of each source's language mix from the
@@ -708,15 +706,15 @@ object TextStats {
     * (those contribute only the global-side term, the standard JS
     * convention p·ln(p/m) → 0 as p → 0). Everything after the count
     * aggregate is dimension-sized. 6 dp rounding absorbs float sum order.
-    * The (source, lang, cnt) cell aggregate is PERSISTED (shared-subtree
-    * mode of the [[graft.ops.Caching]] contract): four branches read it
-    * (per-source totals, per-lang totals, grand total, the grid join), so
-    * without the persist the corpus scan runs four times. The entry is
-    * dimension-sized (sources × langs); PlanAuditSpec pins one scan and
-    * the caller reclaims it after the result materializes. */
-  def sourceJsDivergence(docs: DataFrame): DataFrame = {
-    val cell = docs.groupBy("source", "lang").agg(count(lit(1)).as("cnt"))
-      .persist()
+    * The (source, lang, cnt) cell aggregate is a scoped interim (the
+    * [[graft.ops.Caching]] contract): four branches read it (per-source
+    * totals, per-lang totals, grand total, the grid join), so without the
+    * persist the corpus scan runs four times. The entry is dimension-sized
+    * (sources × langs); PlanAuditSpec pins one scan. The per-source result
+    * is materialized and the caller releases it. */
+  def sourceJsDivergence(docs: DataFrame): DataFrame = Caching.scoped { scope =>
+    val cell = scope.materialize(
+      docs.groupBy("source", "lang").agg(count(lit(1)).as("cnt")))
     val bySource = cell.groupBy("source").agg(sum("cnt").as("n_source"))
     val byLang = cell.groupBy("lang").agg(sum("cnt").as("n_lang"))
     val total = cell.agg(sum("cnt").as("n_total"))
@@ -731,9 +729,9 @@ object TextStats {
     val term =
       when(p > 0, p * log(p / m)).otherwise(0.0) * 0.5 +
         when(q > 0, q * log(q / m)).otherwise(0.0) * 0.5
-    grid.groupBy("source")
+    Caching.materialize(grid.groupBy("source")
       .agg(max("n_source").as("n_docs"),
-        round(sum(term), 6).as("js_divergence"))
+        round(sum(term), 6).as("js_divergence")))
   }
 
   /** Per-document lexical diversity: token count, distinct types,

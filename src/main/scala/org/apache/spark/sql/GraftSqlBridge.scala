@@ -28,14 +28,16 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(c.sparkSession, leaf)
   }
 
-  /** Compute the cache entry of a persisted frame in one job: its cached
-    * RDD, counted. `Dataset.count()` plans a partial and a final aggregate
-    * over the cache, which under AQE runs as three jobs (the cache stage,
-    * the partial-count shuffle, the final count). No-op on a frame that
-    * holds no entry. */
-  def fillCache(df: Dataset[_]): Unit = {
+  /** Compute the cache entry of a persisted frame in one job and return
+    * its row count, summed from the cached batches: its cached RDD,
+    * counted. `Dataset.count()` plans a partial and a final aggregate over
+    * the cache, which under AQE runs as three jobs (the cache stage, the
+    * partial-count shuffle, the final count). On a filled entry the job
+    * reads the cached batches only. 0 on a frame that holds no entry. */
+  def fillCache(df: Dataset[_]): Long = {
     val c = df.asInstanceOf[classic.Dataset[_]]
     c.sparkSession.sharedState.cacheManager.lookupCachedData(c)
-      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+      .fold(0L)(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers
+        .map(_.numRows.toLong).fold(0L)(_ + _))
   }
 }

@@ -9,10 +9,10 @@ import graft.multimodal.MediaDedup
 import graft.ops.{Analytics, Caching, Graph}
 import graft.text.TextFeatures
 
-/** The cache lifecycle of the operators that return a materialized result
-  * ([[Caching.materialize]]): the result is its own cache entry, so
-  * [[Caching.release]] reclaims everything the call made and nothing
-  * another result still holds. */
+/** The cache lifecycle: every entry is made by [[Caching.materialize]],
+  * filled at the call and its own entry, so [[Caching.release]] (or a
+  * scope's exit) reclaims everything the call made and nothing another
+  * result or scope still holds. */
 class CachingSpec extends SparkSpec {
 
   private lazy val docs =
@@ -36,11 +36,52 @@ class CachingSpec extends SparkSpec {
     val want = Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
     assert(a.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet === want)
     Caching.release(a)
-    assert(cacheManager.lookupCachedData(b.asInstanceOf[classic.Dataset[_]]).isDefined,
-      "releasing one result dropped the other's cache entry")
+    assert(entry(b).isDefined, "releasing one result dropped the other's cache entry")
     assert(b.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet === want)
     Caching.release(b)
     assert(cacheManager.isEmpty)
+  }
+
+  private def entry(ds: org.apache.spark.sql.Dataset[_]) =
+    cacheManager.lookupCachedData(ds.asInstanceOf[classic.Dataset[_]])
+
+  test("two live scopes that materialize equal plans each keep their own " +
+    "entry") {
+    Caching.releaseAll(spark)
+    def plan = pairs.filter(col("probe_id") > 1)
+    val want = Set(2L -> 3L, 10L -> 11L)
+    def rows(ds: DataFrame) = ds.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    Caching.scoped { outer =>
+      val kept = outer.materialize(plan)
+      Caching.scoped(inner => assert(rows(inner.materialize(plan)) === want))
+      assert(entry(kept).isDefined,
+        "the inner scope's exit dropped the outer scope's entry")
+      assert(rows(kept) === want)
+    }
+    assert(cacheManager.isEmpty)
+  }
+
+  test("Scope.materialize returns with its entry already filled") {
+    Caching.releaseAll(spark)
+    Caching.scoped { scope =>
+      val ds = scope.materialize(pairs.filter(col("probe_id") > 1))
+      assert(entry(ds).exists(_.cachedRepresentation.cacheBuilder
+        .isCachedColumnBuffersLoaded), "the entry was not filled at the call")
+    }
+    assert(cacheManager.isEmpty)
+  }
+
+  test("q196, whose against-the-lake stage reads one interim three times " +
+    "in one job, runs") {
+    // left lazily persisted, that interim (`notExact`) had its lineage run
+    // twice in one task of that job, which failed (NPE "inMemSorter is
+    // null" in UnsafeExternalSorter). Smaller frames read three times under
+    // AQE with a sort did not fail, so the row itself is pinned at the
+    // scale that failed
+    Caching.releaseAll(spark)
+    try assert(SparkEntry.queries("q196_stream_ingest_twin")(
+      spark, "/root/testdata/sf0.01").collect().nonEmpty)
+    finally Caching.releaseAll(spark)
   }
 
   private val ops: Seq[(String, () => DataFrame)] = Seq(
@@ -85,7 +126,8 @@ class CachingSpec extends SparkSpec {
     val hits = for {
       f <- files(root) if f.getName.endsWith(".scala") && f.getCanonicalFile != allowed
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
-      token <- Seq("localCheckpoint(", "StorageLevel", ".unpersist(")
+      token <- Seq("localCheckpoint(", "StorageLevel", ".unpersist(", ".persist(",
+        ".cache()")
       if line.contains(token)
     } yield s"${f.getPath}:${i + 1}: $token"
     assert(hits.isEmpty, hits.mkString("\n"))

@@ -11,7 +11,8 @@ import graft.queries.{QueryRegistry, QuerySpec}
   * formatted plan cannot show them. Every testdata table's schema is
   * inferred once before the first row (`Tables.load` caches it per JVM at
   * the cost of one job), so the count is the row's own whatever rows were
-  * dumped before it.
+  * dumped before it. The run ends with `# build jobs total: N` over the
+  * rows it dumped, so two runs compare with one line.
   *
   *   PLAN_QUERIES=q186,q208 PLAN_OUT=plans/r16 PLAN_SUFFIX=before \
   *     sbt "Test/runMain graft.PlanDump"
@@ -32,6 +33,7 @@ object PlanDump {
     graft.tables.Tables.names.foreach(n =>
       if (n == "events") graft.tables.Tables.events(spark, sfDir)
       else graft.tables.Tables.load(spark, sfDir, n))
+    var total = 0
     QueryRegistry.all.select(sys.env.getOrElse("PLAN_QUERIES", ""))
       .foreach { case QuerySpec(name, fn, _) =>
         val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -51,11 +53,13 @@ object PlanDump {
           java.nio.file.Files.write(
             java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
             s"# build jobs: ${jobs.get}\n$plan".getBytes("UTF-8"))
+          total += jobs.get
           println(s"[plandump] wrote $name ($suffix)")
         } catch { case e: Throwable =>
           println(s"[plandump] $name failed: ${e.getMessage}")
         } finally graft.ops.Caching.releaseAll(spark)
       }
+    println(s"# build jobs total: $total")
     spark.stop()
   }
 }
