@@ -1,12 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import graft.queries.{QueryRegistry, QuerySpec}
 object Bench {
   /** Each timed row's fastest run in seconds and the collector ms inside
     * that run; a row that threw is in `failed` (row -> exception class)
-    * instead, with no time. */
+    * instead, with no time; `broadcast`: the driver's broadcast-block bytes
+    * (total, largest) after the row's first action. */
   final case class Report(seconds: Map[String, Double], gcMs: Map[String, Long],
-                          failed: Map[String, String]) {
+                          failed: Map[String, String], broadcast: Map[String, (Long, Long)]) {
     def total: Double = seconds.values.sum
   }
 
@@ -26,6 +27,7 @@ object Bench {
     * run again once it throws. */
   def timeRows(spark: SparkSession, sfDir: String, rows: Seq[QuerySpec],
                iters: Int): Report = {
+    val broadcast = scala.collection.mutable.Map.empty[String, (Long, Long)]
     val timed = rows.map { case QuerySpec(name, fn, _) =>
       def once(): Either[String, (Double, Long)] = {
         val g0 = gcMillis()
@@ -33,7 +35,10 @@ object Bench {
         try {
           fn(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
-          Right((dt, gcMillis() - g0))
+          val gc = gcMillis() - g0
+          // untimed, before releaseAll: what the first action left behind
+          if (!broadcast.contains(name)) broadcast(name) = GraftSqlBridge.broadcastBytes(spark)
+          Right((dt, gc))
         } catch { case e: Throwable => Left(e.getClass.getName) }
         finally {
           // queries that persist() intermediates must not carry cached
@@ -54,7 +59,7 @@ object Bench {
     }
     Report(timed.collect { case (k, Right((sec, _))) => k -> sec }.toMap,
       timed.collect { case (k, Right((_, gc))) => k -> gc }.toMap,
-      timed.collect { case (k, Left(cls)) => k -> cls }.toMap)
+      timed.collect { case (k, Left(cls)) => k -> cls }.toMap, broadcast.toMap)
   }
 
   def main(args: Array[String]): Unit = {
@@ -75,33 +80,31 @@ object Bench {
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
     // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q10,q33 times just those
     // rows (see QueryRegistry.select); unset = the full suite
-    val rows = QueryRegistry.all
-      .select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
+    val rows = QueryRegistry.all.select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
     val report = timeRows(spark, sfDir, rows, iters)
     val results = report.seconds
     // Full per-query map goes ONLY to a file: the driver keeps a bounded
     // stdout tail, and a long line printed before the final one can leave a
     // truncated JSON fragment in the tail that defeats its parser (r03 lost
     // its bench number exactly this way).
-    val full = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    // gc_ms: collector milliseconds INSIDE each row's min iteration —
-    // artifact-file only (the stdout contract line is unchanged)
-    val gcFull = report.gcMs.toSeq.sortBy(_._1)
+    def byRow(m: Map[String, Any]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val full = byRow(results.map { case (k, v) => k -> r3(v) })
+    // artifact-file only (the stdout contract line is unchanged): gc_ms,
+    // collector ms INSIDE each row's min iteration; broadcast_bytes, the
+    // driver's broadcast blocks [total, largest] after its first action
+    val gcFull = byRow(report.gcMs)
+    val bcFull = byRow(report.broadcast.map { case (k, (all, max)) => k -> s"[$all,$max]" })
     // rows that threw: exception class, no time, not in the total
-    val failedFull = report.failed.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
+    val failedFull = byRow(report.failed.map { case (k, v) => k -> ("\"" + v + "\"") })
     // scaling refutation (artifact only — the stdout contract line is
     // unchanged): the EFFECTIVE master, core count, and shuffle width the
     // session actually ran with, so a low-core rerun can verify the bench
     // honors $SPARK_GRAFT_CPUS from the artifact itself rather than
     // inferring it from per-row ratios (which are floor-bound at small SF)
-    val effMaster = spark.sparkContext.master
-    val effPar = spark.sparkContext.defaultParallelism
-    val effShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val sc = spark.sparkContext
     val fullLine =
-      s"""{"metric":"total","value":${r3(report.total)},"unit":"sec","queries":$full,"gc_ms":$gcFull,"failed":$failedFull,"master":"$effMaster","default_parallelism":$effPar,"shuffle_partitions":$effShuffle,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(report.total)},"unit":"sec","queries":$full,"gc_ms":$gcFull,"broadcast_bytes":$bcFull,"failed":$failedFull,"master":"${sc.master}","default_parallelism":${sc.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},"sf":"$sfDir"}"""
     try {
       val outDir = java.nio.file.Paths.get("out")
       java.nio.file.Files.createDirectories(outDir)

@@ -84,8 +84,9 @@ object Caching {
     * Kept beside [[materialize]] where that measured worse: the refinery
     * gate, a narrow filter whose leaf fills in its first consumer's job
     * (materialized: one more build job on q169, q186, q187 and q208), and
-    * the containment gram tables (materialized: the curation pass's
-    * retained heap after q186 rose ~70 MB). */
+    * the containment gram tables (materialized: one more build job on
+    * q182, q185 and q186, curation heap peak 91 → 103 MB; the ~70 MB once
+    * measured was a 64 MiB Tungsten page, 1 MiB since build.sbt pins it). */
   def stage(df: DataFrame, owner: Dataset[_] => Unit = _ => ()): DataFrame = {
     val persisted = df.persist()
     owner(persisted)

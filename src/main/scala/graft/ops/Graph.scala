@@ -87,6 +87,18 @@ object Graph {
           (col("n_a").cast("double") * col("n_b").cast("double")), 6).as("lift"))
   }
 
+  /** The undirected (src, dst) long edges of a pair table: both
+    * orientations from ONE pass over the pair plan (a union with its swap
+    * would run it twice), self-loops and nulls dropped, deduped. Not
+    * partitioned on `src`: the flat cached leaf would not report it. */
+  private def undirectedEdges(pairs: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    pairs.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .na.drop().filter(col("src") =!= col("dst")).distinct()
+
   /** Connected components of a pair/edge table — DataFrame-native iterative
     * min-label propagation with pointer jumping. Every vertex converges to
     * the MINIMUM vertex id in its component (a deterministic canonical
@@ -119,21 +131,7 @@ object Graph {
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           smallGraphEdgeCap: Long = 1L << 17): DataFrame =
     Caching.scoped { scope =>
-      val e0 = pairs.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      // undirected closure: each edge in both orientations, self-loops and
-      // null endpoints dropped, deduped so multigraph inputs don't multiply
-      // the per-round join. Partitioned on `src` before caching, but the
-      // flat cached leaf does not report that partitioning, so each round's
-      // join shuffles the edge side again.
-      // both orientations from ONE pass over the (possibly expensive) pair
-      // plan — a union of e0 with its swap would execute that plan twice
-      val edges = scope.materialize(e0
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .na.drop().filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("src")))
+      val edges = scope.materialize(undirectedEdges(pairs, srcCol, dstCol))
       val nEdges = GraftSqlBridge.fillCache(edges) // read off the filled entry
       if (nEdges == 0L)
         pairs.sparkSession.createDataFrame(Seq.empty[(Long, Long)]).toDF("part", "component")
@@ -229,10 +227,10 @@ object Graph {
     * Scale shape: the edge set is materialized once and every round
     * re-reads that cache; one round = one vertex-sized shuffle of
     * (dst, share) with map-side combine, one shuffle of the cached edges
-    * (the flat leaf does not report its `src` partitioning) + one
-    * vertex-sized left join. The `iters` rounds chain LAZILY into a single action —
-    * each round references its predecessor exactly once, so the plan is
-    * linear in `iters` and nothing intermediate is persisted. Overflow
+    * on `src` ([[undirectedEdges]]) + one vertex-sized left join. The
+    * `iters` rounds chain LAZILY into a single action — each round
+    * references its predecessor once, so the plan is linear in `iters`
+    * and nothing intermediate is persisted. Overflow
     * headroom: total mass ≈ scale·|V|, so 85·Σ stays under Long.Max up to
     * ~10^11 vertices at the default scale. Cache contract as
     * [[connectedComponents]]: the returned frame is the only surviving
@@ -240,15 +238,7 @@ object Graph {
   def pageRankInt(pairs: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 4, scale: Long = 1000000L): DataFrame =
     Caching.scoped { scope =>
-      val e0 = pairs.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      val edges = scope.materialize(e0
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .na.drop().filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("src")))
+      val edges = scope.materialize(undirectedEdges(pairs, srcCol, dstCol))
       val base = scope.materialize(
         edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg")))
       var r = base.select(col("v"), col("outdeg"), lit(scale).as("rank"))

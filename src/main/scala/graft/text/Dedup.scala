@@ -137,22 +137,19 @@ object Dedup {
     * (HashSetSpec pins gram-hash equality to the string spelling). */
   def hashedShingleSets(docs: DataFrame, shingleSize: Int = 3): DataFrame =
     docs.select(col("doc_id"),
-        TextStats.normTokens().as("toks"))
-      .select(col("doc_id"),
-        graft.functions.HashSets.shingleHashSetCol(col("toks"), shingleSize).as("s"))
+      graft.functions.HashSets.shingleHashSetCol(TextStats.normTokens(), shingleSize).as("s"))
 
-  /** Distinct (doc_id, 64-bit gram hash) rows — the hashed-gram stream every
-    * containment/novelty operator counts over (only 8-byte longs shuffle,
-    * never gram strings). */
+  /** Distinct (doc_id, 64-bit gram hash) rows, the hashed-gram stream every
+    * containment/novelty operator counts over: the explode of each doc's
+    * [[graft.functions.ShingleHashSet]], whose hashes equal `xxhash64(gram)`
+    * of [[TextStats.gramStream]] (HashSetSpec), so no gram string is built
+    * and no `distinct()` shuffles. A null or empty text yields the one gram
+    * "", as in [[minhashSignatures]]. Distinct per row, not per id: every
+    * caller passes a frame keyed on `doc_id`. */
   def docGrams(docs: DataFrame, shingleSize: Int = 3): DataFrame =
-    // positional gram stream (TextStats.gramStream's codegen rationale),
-    // then distinct in the hash domain. Each document's rows are generated
-    // inside one input partition, so the partial aggregate removes ALL
-    // intra-doc duplicates map-side — the exchange carries exactly the
-    // distinct (doc_id, g) rows the array_distinct spelling produced.
-    TextStats.gramStream(docs, shingleSize)
-      .select(col("doc_id"), xxhash64(col("gram")).as("g"))
-      .distinct()
+    docs.select(col("doc_id"), explode(graft.functions.HashSets.shingleHashSetCol(
+      coalesce(TextStats.normTokens(col("text")), array().cast("array<string>")),
+      shingleSize)).as("g"))
 
   /** Directional CONTAINMENT near-duplicates — the "document A is embedded
     * in document B" detector symmetric Jaccard structurally misses (a short

@@ -40,4 +40,13 @@ object GraftSqlBridge {
       .fold(0L)(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers
         .map(_.numRows.toLong).fold(0L)(_ + _))
   }
+
+  /** (total, largest) bytes, memory plus disk, of the broadcast values and
+    * pieces the driver's block manager holds until the ContextCleaner. */
+  def broadcastBytes(spark: SparkSession): (Long, Long) = {
+    val bm = spark.sparkContext.env.blockManager
+    val sizes = bm.getMatchingBlockIds(_.isBroadcast).distinct
+      .map(bm.getStatus(_).fold(0L)(s => s.memSize + s.diskSize))
+    (sizes.sum, sizes.maxOption.getOrElse(0L))
+  }
 }

@@ -69,4 +69,19 @@ class HashSetSpec extends SparkSpec {
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 9).as("j"))
     assert(pairs.exceptAll(ref).count() + ref.exceptAll(pairs).count() === 0)
   }
+
+  test("docGrams rows == distinct xxhash64 of the gram-string stream") {
+    import spark.implicits._
+    // null, empty, blank, shorter-than-n and repeated-gram texts
+    val edge = Seq[(Long, String)]((-1L, null), (-2L, ""), (-3L, "  "),
+      (-4L, "one two"), (-5L, "a b c a b c a b c")).toDF("doc_id", "text")
+    val all = docs.select("doc_id", "text").unionByName(edge)
+    // the gram-string spelling docGrams replaced
+    val ref = TextStats.gramStream(all, 3)
+      .select(col("doc_id"), xxhash64(col("gram")).as("g")).distinct()
+    val grams = Dedup.docGrams(all, 3)
+    assert(grams.count() === ref.count())
+    assert(grams.exceptAll(ref).count() + ref.exceptAll(grams).count() === 0)
+    assert(grams.filter(col("doc_id") < 0).count() === 1 + 1 + 1 + 1 + 3)
+  }
 }
